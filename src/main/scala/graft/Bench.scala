@@ -213,6 +213,20 @@ object Bench {
     } catch { case scala.util.control.NonFatal(_) =>
       Map.empty[String, Double] }
 
+  /** The top-K-by-cost `"name":secs` entries (K ≤ 40) of the compact
+    * summary map under a `budget`-character cap (one separator per
+    * entry). Stops at the FIRST entry that misses the budget, so the map
+    * is a true cost-ordered prefix: a cheaper query never stands in for
+    * a dearer one whose longer name did not fit. */
+  private[graft] def topByCost(results: Map[String, Double],
+                               budget: Int = 1100): Seq[String] = {
+    val entries = results.toSeq.sortBy(-_._2).take(40)
+      .map { case (k, v) => s"\"$k\":${math.rint(v * 1000) / 1000}" }
+    val fits = entries.scanLeft(0)(_ + _.length + 1).tail
+      .takeWhile(_ <= budget).size
+    entries.take(fits)
+  }
+
   /** Compact headline JSON (VERDICT r14 #1) — printed as the very LAST
     * stdout line so a short tail capture always carries the sweep total,
     * the 2×-gate verdict and the cache/calibration context even though
@@ -240,15 +254,7 @@ object Bench {
         (a, wq, wr)
       }
     def r3(x: Double) = math.rint(x * 1000) / 1000
-    // top-K-by-cost compact map under a fixed character budget
-    val topEntries = scala.collection.mutable.ListBuffer.empty[String]
-    var budget = 1100
-    for ((k, v) <- results.toSeq.sortBy(-_._2).take(40)) {
-      val e = s"\"$k\":${r3(v)}"
-      if (budget - (e.length + 1) >= 0) {
-        topEntries += e; budget -= e.length + 1
-      }
-    }
+    val topEntries = topByCost(results)
     s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
       s""""queries":${topEntries.mkString("{", ",", "}")},""" +
       s""""queries_top_k":${topEntries.size},""" +

@@ -56,18 +56,25 @@ object BenchCache {
 
   private val FormatVersion = "v2" // v2: scoped code hash + content-sampled data fingerprint
 
-  def openOrBuild(spark: SparkSession, sfDir: String): Cache = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+  /** (cache root, generation key, sf name) for `sfDir`, honouring the
+    * SPARK_GRAFT_CACHE_DIR / SPARK_GRAFT_CACHE_KEY overrides. The key
+    * carries BOTH halves of "pure function of (sfDir, code)": the
+    * artifact-relevant engine class hash AND a content fingerprint of the
+    * source data — regenerated testdata (same path, new content) rotates
+    * the key instead of serving stale artifacts whose seal would
+    * vacuously agree with itself (review r14 finding). */
+  private def location(sfDir: String): (String, String, String) = {
     val root = sys.env.getOrElse("SPARK_GRAFT_CACHE_DIR",
       sys.props("user.dir") + "/target/bench_cache")
     val sfName = new java.io.File(sfDir).getName
-    // the key carries BOTH halves of "pure function of (sfDir, code)":
-    // the artifact-relevant engine class hash AND a content fingerprint
-    // of the source data — regenerated testdata (same path, new content)
-    // rotates the key instead of serving stale artifacts whose seal
-    // would vacuously agree with itself (review r14 finding)
     val key = sys.env.getOrElse("SPARK_GRAFT_CACHE_KEY",
       s"$FormatVersion-${codeHash()}-${dataFingerprint(sfDir)}-$sfName")
+    (root, key, sfName)
+  }
+
+  def openOrBuild(spark: SparkSession, sfDir: String): Cache = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val (root, key, sfName) = location(sfDir)
     Files.createDirectories(Paths.get(root))
     val dir = Paths.get(root, key)
     val opened = if (Files.exists(dir.resolve("MANIFEST"))) {
@@ -106,11 +113,7 @@ object BenchCache {
     * [[openOrBuild]] so a pinned dev key reads its own state. */
   def sealedAtCurrentKey(sfDir: String): Boolean = {
     import java.nio.file.{Files, Paths}
-    val root = sys.env.getOrElse("SPARK_GRAFT_CACHE_DIR",
-      sys.props("user.dir") + "/target/bench_cache")
-    val sfName = new java.io.File(sfDir).getName
-    val key = sys.env.getOrElse("SPARK_GRAFT_CACHE_KEY",
-      s"$FormatVersion-${codeHash()}-${dataFingerprint(sfDir)}-$sfName")
+    val (root, key, _) = location(sfDir)
     val dir = Paths.get(root, key)
     Files.exists(dir.resolve("MANIFEST")) && Files.exists(dir.resolve("SEAL"))
   }

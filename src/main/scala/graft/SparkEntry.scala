@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, when}
-import graft.core.{OracleCte => O, Tables => T}
+import graft.core.{OracleCte => O, Tables => T, TempDirs}
 import graft.operators._
 
 /**
@@ -23,34 +23,16 @@ object SparkEntry {
   // MinHash bands feed BOTH the LSH-pair query and the Jaccard verifier —
   // materialize them once per source as parquet and re-read per session
   // (the at-scale pattern: candidate signatures are a materialized
-  // artifact, not recomputed per consumer — and a path cache never hands a
-  // new session a DataFrame bound to a stopped one).
-  // One shared memoizer: artifact kind + source dir → temp parquet path.
-  // The cache stores PATHS so a recreated session never sees a DataFrame
-  // bound to a stopped one.
-  private val artifactPaths =
-    scala.collection.mutable.Map.empty[(String, String), String]
-  private def cachedParquet(s: SparkSession, kind: String, d: String)
-                           (build: => DataFrame): DataFrame = {
-    val p = synchronized {
-      artifactPaths.getOrElseUpdate((kind, d), {
-        val out =
-          graft.core.TempDirs.create(s"graft_${kind}_")
-        build.write.mode("overwrite").parquet(out)
-        out
-      })
-    }
-    s.read.parquet(p)
-  }
-
+  // artifact, not recomputed per consumer). Every `*Cached` artifact here
+  // goes through the one artifact memo, keyed by kind + source dir.
   private def minhashBandsCached(s: SparkSession, d: String): DataFrame =
-    cachedParquet(s, "bands", d)(Dedup.minhashBands(T.documents(s, d)))
+    TempDirs.parquet(s, "bands", d)(Dedup.minhashBands(T.documents(s, d)))
 
   // Recon's /pendingDeletion rollup store: the reference maintains these
   // in its own DB (GlobalStats/NSSummary/per-DN metric tables) and the
   // endpoint only reads them — materialize once per (JVM, dir).
   private def pendingRollupsCached(s: SparkSession, d: String): DataFrame =
-    cachedParquet(s, "pdroll", d)(
+    TempDirs.parquet(s, "pdroll", d)(
       ReconJobs.pendingDeletionRollups(T.objects(s, d),
         T.objectsMixed(s, d), T.deletedDirs(s, d), T.replicas(s, d),
         T.containersScm(s, d)))
@@ -59,7 +41,7 @@ object SparkEntry {
   // container dim — derived once per (JVM, dir), consumed by both the
   // chain query and the report's increment projections.
   private def healthChainCached(s: SparkSession, d: String): DataFrame =
-    cachedParquet(s, "healthchain", d)(
+    TempDirs.parquet(s, "healthchain", d)(
       ClusterHealth.containerHealthChain(T.datanodes(s, d),
         T.containersScm(s, d), T.containersOm(s, d),
         T.pipelineMembers(s, d)))
@@ -70,21 +52,21 @@ object SparkEntry {
   // deriving it once is the honest cost shape (each re-read was a full
   // corpus scan + agg inside every reuse of the subtree).
   private def tagRequestsCached(s: SparkSession, d: String): DataFrame =
-    cachedParquet(s, "tagreq", d)(T.tagRequests(s, d))
+    TempDirs.parquet(s, "tagreq", d)(T.tagRequests(s, d))
   private def tagEntriesCached(s: SparkSession, d: String): DataFrame =
-    cachedParquet(s, "tagent", d)(T.tagEntries(s, d))
+    TempDirs.parquet(s, "tagent", d)(T.tagEntries(s, d))
   private def keysDeleteRequestsCached(s: SparkSession,
                                        d: String): DataFrame =
-    cachedParquet(s, "kdreq", d)(T.keysDeleteRequests(s, d))
+    TempDirs.parquet(s, "kdreq", d)(T.keysDeleteRequests(s, d))
   private def mpuInitiateRequestsCached(s: SparkSession,
                                         d: String): DataFrame =
-    cachedParquet(s, "mireq", d)(T.mpuInitiateRequests(s, d))
+    TempDirs.parquet(s, "mireq", d)(T.mpuInitiateRequests(s, d))
 
   // The stored object-tag state = the put ladder's APPLIED outcomes —
   // a derived table exactly like the snapshot warehouse; the delete
   // ladder probes it rather than re-running the whole put plan inline.
   private def taggedKeysCached(s: SparkSession, d: String): DataFrame =
-    cachedParquet(s, "tagged", d)(
+    TempDirs.parquet(s, "tagged", d)(
       S3Ops.putObjectTagging(tagRequestsCached(s, d),
         tagEntriesCached(s, d), T.buckets(s, d), T.objects(s, d))
         .filter(col("decision") === "APPLIED")
@@ -93,10 +75,10 @@ object SparkEntry {
   // Lloyd-refined IVF centroids and PQ codebooks are index artifacts
   // exactly like the bands (built once at ingest, reused by every probe)
   private def ivfCentroidsCached(s: SparkSession, d: String): DataFrame =
-    cachedParquet(s, "cents", d)(
+    TempDirs.parquet(s, "cents", d)(
       Similarity.ivfCentroids(Similarity.quantized(T.embeddings(s, d))))
   private def pqCodebooksCached(s: SparkSession, d: String): DataFrame =
-    cachedParquet(s, "pqcb", d)(
+    TempDirs.parquet(s, "pqcb", d)(
       Similarity.pqCodebooks(Similarity.quantized(T.embeddings(s, d))))
 
   // Verified near-dup pairs (document jaccard + embedding cosine) are
@@ -104,17 +86,18 @@ object SparkEntry {
   // once at ingest; clustering and canonical-doc pruning consume the
   // persisted pairs rather than re-verifying.
   private def verifiedPairsCached(s: SparkSession, d: String): DataFrame =
-    cachedParquet(s, "pairs", d)(
+    TempDirs.parquet(s, "pairs", d)(
       Dedup.ngramJaccardPairs(T.documents(s, d),
         candidates = Some(Dedup.lshPairsFromBands(minhashBandsCached(s, d)))))
   private def embedPairsCached(s: SparkSession, d: String): DataFrame =
-    cachedParquet(s, "epairs", d)(Similarity.nearDupPairs(s, T.embeddings(s, d)))
+    TempDirs.parquet(s, "epairs", d)(
+      Similarity.nearDupPairs(s, T.embeddings(s, d)))
   // The cluster assignment (label-propagation fixpoint over the verified
   // pairs) is itself a materialized artifact: keep-one, canonical and the
   // funnel all consume the SAME assignment — re-running the iterative
   // closure per consumer re-paid its jobs each time.
   private def docClustersCached(s: SparkSession, d: String): DataFrame =
-    cachedParquet(s, "clusters", d)(
+    TempDirs.parquet(s, "clusters", d)(
       Dedup.dupClusters(T.documents(s, d).select("doc_id"),
         verifiedPairsCached(s, d)))
 
@@ -128,9 +111,9 @@ object SparkEntry {
   private def corpusDocs(s: SparkSession, d: String): DataFrame =
     T.documents(s, d).filter(col("doc_id") % 7 =!= 0)
   private def ngramDictCached(s: SparkSession, d: String): DataFrame =
-    cachedParquet(s, "ngdict", d)(Dedup.ngramDictionary(corpusDocs(s, d)))
+    TempDirs.parquet(s, "ngdict", d)(Dedup.ngramDictionary(corpusDocs(s, d)))
   private def ngramSetsCached(s: SparkSession, d: String): DataFrame =
-    cachedParquet(s, "ngsets", d)(
+    TempDirs.parquet(s, "ngsets", d)(
       Dedup.ngramSets(corpusDocs(s, d), ngramDictCached(s, d)))
 
   /** Build every once-per-source index/verification artifact — the
@@ -183,7 +166,7 @@ object SparkEntry {
   // RECEIVES it); materialized once so consumers pay a scan, not the
   // synthesis.
   private def changeLogCached(s: SparkSession, d: String): DataFrame =
-    cachedParquet(s, "chlog", d)(
+    TempDirs.parquet(s, "chlog", d)(
       graft.streaming.ChangeLog.events(T.objects(s, d)))
 
   // DuckDB CTE chain for the verified-pair derivation, shared by the

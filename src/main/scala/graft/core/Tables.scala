@@ -90,8 +90,6 @@ object Tables {
 
   // ---- persisted key-sorted namespace (the "RocksDB" of the engine) ----
 
-  private val warehouses = scala.collection.mutable.Map.empty[String, String]
-
   /**
    * The namespace as a PERSISTED key-sorted table: `objects` written once
    * per (JVM, source dir) as parquet partitioned by (volume, bucket) and
@@ -106,22 +104,20 @@ object Tables {
    * skip all ranges not overlapping the prefix/startKey range — together
    * the O(page) "seek" the reference gets from RocksDB.
    */
-  def objectsSorted(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val w = warehouses.getOrElseUpdate(dir, {
-      val out = graft.core.TempDirs.create("graft_wh_")
-      objectsView(spark, dir)
-        .repartition(col("volume"), col("bucket"))
-        // sort includes the partition columns: the partitioned write's
-        // required ordering is then already satisfied, so FileFormatWriter
-        // inserts NO extra sort — an added partition-cols-only sort is not
-        // key-stable and would silently break in-file key order (the
-        // contract nsSummarySorted's fold depends on)
-        .sortWithinPartitions(col("volume"), col("bucket"), col("key"))
-        .write.partitionBy("volume", "bucket").mode("overwrite").parquet(out)
-      out
-    })
-    spark.read.parquet(w)
-  }
+  def objectsSorted(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(TempDirs.artifact("wh", dir)(
+      writeKeySorted(objectsView(spark, dir), _)))
+
+  private def writeKeySorted(namespace: DataFrame, out: String): Unit =
+    namespace
+      .repartition(col("volume"), col("bucket"))
+      // sort includes the partition columns: the partitioned write's
+      // required ordering is then already satisfied, so FileFormatWriter
+      // inserts NO extra sort — an added partition-cols-only sort is not
+      // key-stable and would silently break in-file key order (the
+      // contract nsSummarySorted's fold depends on)
+      .sortWithinPartitions(col("volume"), col("bucket"), col("key"))
+      .write.partitionBy("volume", "bucket").mode("overwrite").parquet(out)
 
   /** buckets (ref OmBucketInfo.java:52-114): usage rollup + deterministic quotas. */
   // The bucket catalog is a 40-row dim derived by aggregating the whole
@@ -130,7 +126,7 @@ object Tables {
   // tables so a ladder pays a 40-row parquet read, not a corpus shuffle
   // per reference.
   def buckets(spark: SparkSession, dir: String): DataFrame =
-    memoPersist(spark, "buckets", dir) { bucketsUncached(spark, dir) }
+    TempDirs.parquet(spark, "buckets", dir) { bucketsUncached(spark, dir) }
 
   private def bucketsUncached(spark: SparkSession, dir: String): DataFrame = {
     objects(spark, dir)
@@ -271,7 +267,7 @@ object Tables {
     * cloned `mult`× with a per-clone token suffix, so clones are
     * NEAR-dups of the original (high shingle overlap — the realistic
     * LSH load), not byte-identical copies. ONE definition shared by
-    * Bench's 10×/100× blocks and the standalone JaccProbe so the
+    * Bench's 10×/100× blocks and any standalone scale probe, so the
     * probes can never quietly measure different corpora. */
   def docsScaled(docs: DataFrame, mult: Int): DataFrame =
     docs.crossJoin(docs.sparkSession.range(mult).toDF("rep"))
@@ -751,16 +747,16 @@ object Tables {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  // Memoized (memoPersist): three declared queries (diff / page / summary)
-  // consume both snapshots in one sweep, and each dedup is a full
+  // Memoized (TempDirs.parquet): three declared queries (diff / page /
+  // summary) consume both snapshots in one sweep, and each dedup is a full
   // row_number window over the namespace — checkpoint cost, paid once per
   // JVM, exactly like the reference's persisted snapshot checkpoints.
   def snapshotV1(spark: SparkSession, dir: String): DataFrame =
-    memoPersist(spark, "snapv1", dir)(
+    TempDirs.parquet(spark, "snapv1", dir)(
       dedupByObjectId(objects(spark, dir).filter(col("creation_time") <= SnapCut1Ms)))
 
   def snapshotV2(spark: SparkSession, dir: String): DataFrame =
-    memoPersist(spark, "snapv2", dir) {
+    TempDirs.parquet(spark, "snapv2", dir) {
       val o = objects(spark, dir).filter(col("creation_time") > SnapCut0Ms)
       dedupByObjectId(
         o.withColumn("key",
@@ -790,7 +786,7 @@ object Tables {
   // five consumers (tag expiry, acl probes, locations, merkle) pay a
   // parquet scan, not a per-row array/struct re-synthesis each.
   def objectsNested(spark: SparkSession, dir: String): DataFrame =
-    memoPersist(spark, "nested", dir)(nestedFrom(objects(spark, dir)))
+    TempDirs.parquet(spark, "nested", dir)(nestedFrom(objects(spark, dir)))
 
   /** The nested-column synthesis over ANY objects-shaped input (shared by
     * the catalog table and the 10× scale probe). */
@@ -826,25 +822,11 @@ object Tables {
     element_at(split(c, "/"), -1)
 
   // The FSO tables are PERSISTED entities in the reference (directoryTable/
-  // fileTable); derive them once per (JVM, source) into a parquet dir and
-  // RE-READ per session (like objectsSorted) — the cache stores only paths,
-  // so a stopped-and-recreated SparkSession never sees a DataFrame bound to
-  // a dead session, and nothing stays pinned in the block cache.
-  private val fsoPaths = scala.collection.mutable.Map.empty[(String, String), String]
-  private def memoPersist(spark: SparkSession, kind: String, dir: String)
-                         (build: => DataFrame): DataFrame = {
-    val p = synchronized {
-      fsoPaths.getOrElseUpdate((kind, dir), {
-        val out = graft.core.TempDirs.create(s"graft_${kind}_")
-        build.write.mode("overwrite").parquet(out)
-        out
-      })
-    }
-    spark.read.parquet(p)
-  }
-
+  // fileTable); derive them once per (JVM, source) through the artifact
+  // memo ([[TempDirs.parquet]]) and RE-READ per session, like
+  // objectsSorted.
   def directoriesFso(spark: SparkSession, dir: String): DataFrame =
-    memoPersist(spark, "dirs", dir)(directoriesFsoBuild(objects(spark, dir)))
+    TempDirs.parquet(spark, "dirs", dir)(directoriesFsoBuild(objects(spark, dir)))
 
   /** The distinct (volume, bucket, path) ancestor set of the namespace —
     * the FULL-PATH view of the dir warehouse that the mkdir/create-file/
@@ -852,7 +834,7 @@ object Tables {
     * distinct over the whole namespace is ingest cost, not per-query
     * cost (it IS the directoryTable a real OM maintains incrementally). */
   def dirPaths(spark: SparkSession, dir: String): DataFrame =
-    memoPersist(spark, "dirpaths", dir)(
+    TempDirs.parquet(spark, "dirpaths", dir)(
       objects(spark, dir)
         .withColumn("pdir", graft.operators.Aggregates.parentDirOf("key"))
         .filter(col("pdir") =!= "")
@@ -862,7 +844,7 @@ object Tables {
         .distinct())
 
   def filesFso(spark: SparkSession, dir: String): DataFrame =
-    memoPersist(spark, "files", dir)(filesFsoBuild(objects(spark, dir)))
+    TempDirs.parquet(spark, "files", dir)(filesFsoBuild(objects(spark, dir)))
 
   /**
    * Deepened namespace (5-segment keys: the 4-segment key's basename
@@ -893,28 +875,17 @@ object Tables {
     * [[objectsSorted]]) — the input shape [[graft.operators.Aggregates
     * .nsSummarySorted]]'s shuffle-free fold requires. Written once per
     * (JVM, source dir); ingest cost, not query cost. */
-  def objectsMixedSorted(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val w = warehouses.getOrElseUpdate(dir + "#mixed", {
-      val out = graft.core.TempDirs.create("graft_whmx_")
-      objectsMixed(spark, dir)
-        .repartition(col("volume"), col("bucket"))
-        // sort includes the partition columns: the partitioned write's
-        // required ordering is then already satisfied, so FileFormatWriter
-        // inserts NO extra sort — an added partition-cols-only sort is not
-        // key-stable and would silently break in-file key order (the
-        // contract nsSummarySorted's fold depends on)
-        .sortWithinPartitions(col("volume"), col("bucket"), col("key"))
-        .write.partitionBy("volume", "bucket").mode("overwrite").parquet(out)
-      out
-    })
-    spark.read.parquet(w)
-  }
+  def objectsMixedSorted(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(TempDirs.artifact("whmx", dir)(
+      writeKeySorted(objectsMixed(spark, dir), _)))
 
   def directoriesFsoDeep(spark: SparkSession, dir: String): DataFrame =
-    memoPersist(spark, "dirsDeep", dir)(directoriesFsoBuild(objectsDeep(spark, dir)))
+    TempDirs.parquet(spark, "dirsDeep", dir)(
+      directoriesFsoBuild(objectsDeep(spark, dir)))
 
   def filesFsoDeep(spark: SparkSession, dir: String): DataFrame =
-    memoPersist(spark, "filesDeep", dir)(filesFsoBuild(objectsDeep(spark, dir)))
+    TempDirs.parquet(spark, "filesDeep", dir)(
+      filesFsoBuild(objectsDeep(spark, dir)))
 
   /** directories(volume, bucket, dir_id, parent_id, name): every ancestor
     * prefix of every key, one row per distinct dir. Ids are md5-derived
@@ -977,7 +948,7 @@ object Tables {
     * the tenant's volume — accessId = "<tenant>$<principal>", the
     * reference's accessId convention. */
   def tenantAccessIds(spark: SparkSession, dir: String): DataFrame =
-    memoPersist(spark, "tenantids", dir) {
+    TempDirs.parquet(spark, "tenantids", dir) {
       objects(spark, dir)
         .select("volume", "owner").distinct()
         .withColumn("tenant_id",
@@ -3688,7 +3659,7 @@ object Tables {
   def deletedDirs(spark: SparkSession, dir: String): DataFrame =
     // a real deletedDirectoryTable is a stored table, not a derived view —
     // memoize it like the FSO tables so consumers pay a parquet read
-    memoPersist(spark, "deldirs", dir) {
+    TempDirs.parquet(spark, "deldirs", dir) {
       objectsMixed(spark, dir)
         .select(col("volume"), col("bucket"),
           graft.operators.Aggregates.parentDirOf("key").as("dir"))
@@ -3793,7 +3764,7 @@ object Tables {
     * client_id = order_key*100 + part_number. Distinct because lineitem
     * carries duplicate (orderkey, linenumber) pairs. */
   def mpuOpenParts(spark: SparkSession, dir: String): DataFrame =
-    memoPersist(spark, "mpuopen", dir) {
+    TempDirs.parquet(spark, "mpuopen", dir) {
       raw(spark, dir, "lineitem")
         .filter(col("l_orderkey") % 50 === 0)
         .select(
@@ -4166,7 +4137,7 @@ object Tables {
    * writes its SSTs sorted to begin with.
    */
   def sstNamespaceFiles(spark: SparkSession, dir: String): DataFrame =
-    memoPersist(spark, "sstns", dir) {
+    TempDirs.parquet(spark, "sstns", dir) {
       val w = org.apache.spark.sql.expressions.Window.orderBy("db_key")
       objects(spark, dir)
         .select(concat(lit("/"), col("volume"), lit("/"), col("bucket"),

@@ -36,9 +36,9 @@ object CommitLog {
    * same key tie-break deterministically inside the fold (size desc).
    */
   def synthesizeLog(objects: DataFrame): DataFrame = {
-    // Four pushdown-filtered scans, NOT a per-row generator: tools/
-    // LogSynthProbe A/B'd generator forms (all-rows and churn-only) at the
-    // 10× probe scale — warm parity at best, and the generator's per-row
+    // Four pushdown-filtered scans, NOT a per-row generator: an A/B of
+    // the generator forms (all-rows and churn-only) at the 10× probe scale
+    // found warm parity at best, and the generator's per-row
     // array/struct allocation degrades badly under JVM memory pressure
     // (55-65 s first-run outliers vs a stable 13-20 s here). The branch
     // scans 2-4 push `version`+churn predicates into the source, so their
@@ -773,8 +773,6 @@ object CommitLog {
 
   // ---- materialized checkpoints + log-slice delta diff ---------------------
 
-  private val snapWarehouses = scala.collection.mutable.Map.empty[String, String]
-
   /**
    * Materialize the commit log (seq-range-sorted parquet, so a delta slice
    * is a row-group-pruned scan) and each live snapshot's folded checkpoint
@@ -783,9 +781,8 @@ object CommitLog {
    * disk. Returns the warehouse dir.
    */
   def snapshotWarehouse(spark: SparkSession, objects: DataFrame,
-                        dir: String): String = synchronized {
-    snapWarehouses.getOrElseUpdate(dir, {
-      val out = graft.core.TempDirs.create("graft_snap_")
+                        dir: String): String =
+    graft.core.TempDirs.artifact("snap", dir) { out =>
       synthesizeLog(objects)
         .repartitionByRange(8, col("seq"))
         .sortWithinPartitions("seq", "volume", "bucket", "key")
@@ -794,9 +791,7 @@ object CommitLog {
       snapshotChain.foreach { case (name, seq) =>
         applyAt(logDf, seq).write.mode("overwrite").parquet(s"$out/state_$name")
       }
-      out
-    })
-  }
+    }
 
   /**
    * Log-slice snapshot diff: fold ONLY the records with

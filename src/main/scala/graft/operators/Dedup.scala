@@ -600,8 +600,10 @@ object Dedup {
     // ONE normalize+shingle pass over the batch text: the dictionary
     // probe and the set encode both consume the pinned frame (each ran
     // its own explode before — r15 measured the two passes as a
-    // material share of the 100× probe); blocks are batch-shingle-sized
-    // and freed by the ContextCleaner like every other pin here
+    // material share of the 100× probe); blocks are batch-shingle-sized.
+    // The pin is NOT freed by the ContextCleaner: CacheManager holds a
+    // persisted Dataset strongly until someone unpersists it, and nothing
+    // does, so each call keeps its batch shingles for the session's life
     val batchShingles = shingleFrame(newDocs).persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val batchSets = ngramSetsFromShingles(batchShingles,
@@ -810,7 +812,7 @@ object Dedup {
     * form pays two of each; the trade is that a hot boilerplate gram's
     * occurrences materialize as ONE in-memory array on a single task
     * (the shipped form keeps them as flat skew-splittable rows) — see
-    * SubstrProbe for the measured comparison. */
+    * OPTIMIZATION_r16.md §3 for the measured comparison and the plans. */
   def duplicateSpansOnePass(docs: DataFrame, k: Int = 8): DataFrame = {
     val dupOcc = wordGramOccurrences(docs, k)
       .groupBy("gram")

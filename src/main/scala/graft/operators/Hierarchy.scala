@@ -82,8 +82,10 @@ object Hierarchy {
       // own evaluation re-ran the ladder a SECOND time (r15 measured the
       // fso listing family at ~2× its join cost for exactly this reason).
       // The pinned blocks are dir-table-sized (orders of magnitude below
-      // the file table) and freed by the ContextCleaner once unreachable —
-      // the same lifecycle the deeper-than-hint extension path already had.
+      // the file table). They are NOT freed by the ContextCleaner:
+      // CacheManager holds a persisted Dataset strongly until someone
+      // unpersists it, and nothing here does, so every resolve pass keeps
+      // its pins for the session's life.
       cur = cur.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       cur.count() // full fill: isEmpty alone short-circuits the cache

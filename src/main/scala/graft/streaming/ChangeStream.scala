@@ -319,9 +319,8 @@ object ChangeStream {
   // ~max(view merge cost) instead of the sum; each view's merge is itself a
   // touched-partitions-only rewrite.
   // EAGER val, not lazy: a lazy val initializes under the enclosing
-  // object's monitor, which [[replayedWorkDir]] (synchronized) holds while
-  // blocked in awaitTermination — the stream thread's first merge would
-  // deadlock against it.
+  // object's monitor, so any caller holding that monitor while blocked in
+  // awaitTermination would deadlock the stream thread's first merge.
   private val mergePool: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutorService(
       java.util.concurrent.Executors.newFixedThreadPool(3,
@@ -523,34 +522,24 @@ object ChangeStream {
     ()
   }
 
-  private val replayed = scala.collection.mutable.Map.empty[String, String]
-
-  private val cdcLogs = scala.collection.mutable.Map.empty[String, String]
-
   /** The synthesized CDC log for a source dir, written ONCE per JVM — in
     * a real deployment the log is the system's durable INPUT (the OM's
     * DB-update stream); synthesizing it here is fixture creation, not
     * part of any bootstrap or recovery cost. */
   def cdcLogDir(spark: SparkSession, objects: DataFrame,
-                sfDir: String): String = synchronized {
-    cdcLogs.getOrElseUpdate(sfDir, {
-      val d = graft.core.TempDirs.create("graft_cdclog_")
+                sfDir: String): String =
+    graft.core.TempDirs.artifact("cdclog", sfDir) { d =>
       ChangeLog.write(objects, s"$d/log", numFiles = 6)
-      s"$d/log"
-    })
-  }
+    } + "/log"
 
   /** Synthesize the CDC log from `objects`, drain it through the stream once
     * per JVM per sfDir, and return the work dir holding the state tables. */
   def replayedWorkDir(spark: SparkSession, objects: DataFrame,
-                      sfDir: String): String = synchronized {
-    replayed.getOrElseUpdate(sfDir, {
-      val work = graft.core.TempDirs.create("graft_stream_")
+                      sfDir: String): String =
+    graft.core.TempDirs.artifact("stream", sfDir) { work =>
       // batch backfill, not a replay() drain: same state (spec-gated
       // parity), one aggregation per view instead of per-batch merges ×
       // the whole history — the checkpoint-loss recovery shape
       bootstrapViews(spark, cdcLogDir(spark, objects, sfDir), work)
-      work
-    })
-  }
+    }
 }

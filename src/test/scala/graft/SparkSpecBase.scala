@@ -6,9 +6,16 @@ import org.scalatest.BeforeAndAfterAll
 
 /** Shared local session for all specs (one JVM-wide session — specs run in
   * the forked test JVM; creating a session per suite would dominate test
-  * time). */
+  * time). A spec that stops it (TempDirsSpec checks the artifact memo
+  * across a stopped and recreated session) leaves the next caller a fresh
+  * one. */
 object SparkSpecBase {
-  lazy val spark: SparkSession = graft.core.GraftSession.local(4)
+  private var session: SparkSession = _
+  def spark: SparkSession = synchronized {
+    if (session == null || session.sparkContext.isStopped)
+      session = graft.core.GraftSession.local(4)
+    session
+  }
 }
 
 abstract class SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
