@@ -18,15 +18,8 @@ object Api {
   def infoVolume(s: SparkSession, d: String, volume: String): DataFrame =
     T.volumes(s, d).filter(col("volume") === volume)
 
-  def listVolumes(s: SparkSession, d: String): DataFrame =
-    Listing.listVolumes(T.volumes(s, d))
-
   def infoBucket(s: SparkSession, d: String, volume: String, bucket: String): DataFrame =
     T.buckets(s, d).filter(col("volume") === volume && col("bucket") === bucket)
-
-  def listBuckets(s: SparkSession, d: String, volume: String,
-                  startBucket: String, maxBuckets: Int): DataFrame =
-    Listing.listBuckets(T.buckets(s, d), volume, startBucket, maxBuckets)
 
   // -- key lookups + listings ----------------------------------------------
   // Every key op first chases bucket links to the terminal real bucket
@@ -108,54 +101,18 @@ object Api {
           volume, bucket, dir).limit(0)
     }
 
-  def getFileStatus(s: SparkSession, d: String, volume: String, bucket: String,
-                    key: String): DataFrame =
-    lookupKey(s, d, volume, bucket, key)
-
   def getAcl(s: SparkSession, d: String, volume: String, bucket: String,
              key: String): DataFrame =
     getKeyInfo(s, d, volume, bucket, key)
       .select(col("key"), explode(col("acls")).as("acl"))
       .select("key", "acl.name", "acl.type", "acl.rights")
 
-  // -- open keys / MPU ------------------------------------------------------
-  def listOpenFiles(s: SparkSession, d: String): DataFrame =
-    T.openKeys(s, d)
-
-  def listMultipartUploadParts(s: SparkSession, d: String,
-                               uploadId: String): DataFrame =
-    T.multipartParts(s, d).filter(col("upload_id") === uploadId)
-      .orderBy("part_number")
-
-  def listExpiredMultipartUploads(s: SparkSession, d: String,
-                                  beforeMs: Long): DataFrame =
-    Lifecycle.mpuExpiry(T.multipartParts(s, d), beforeMs)
-
+  // -- multipart uploads ---------------------------------------------------
   /** ListMultipartUploads: a bucket's in-flight uploads under a prefix —
     * ref OzoneManagerRequestHandler.java:253 over multipartInfoTable. */
   def listMultipartUploads(s: SparkSession, d: String, volume: String,
                            bucket: String, prefix: String): DataFrame =
     Lifecycle.listMultipartUploads(T.multipartInfo(s, d), volume, bucket, prefix)
-
-  /** S3 ListParts for one upload — MultipartKeyHandler.java:126-175. */
-  def listParts(s: SparkSession, d: String, uploadId: String,
-                partNumberMarker: Int, maxParts: Int): DataFrame =
-    Lifecycle.listParts(T.multipartParts(s, d), partNumberMarker, maxParts)
-      .filter(col("upload_id") === uploadId)
-
-  /** RecoverLease decisions for the batch — OMRecoverLeaseRequest. */
-  def recoverLease(s: SparkSession, d: String): DataFrame =
-    Lifecycle.recoverLeases(T.objects(s, d))
-
-  /** Decommission/maintenance workflow status per leaving node —
-    * DatanodeAdminMonitorImpl's progress report. */
-  def decommissionStatus(s: SparkSession, d: String): DataFrame =
-    graft.operators.ClusterHealth.decommissionReadiness(
-      T.replicas(s, d), T.datanodes(s, d), T.containersScm(s, d))
-
-  /** SetAcl/AddAcl/RemoveAcl applied state — the OMKey*AclRequest fold. */
-  def applyAcls(s: SparkSession, d: String): DataFrame =
-    graft.operators.Nested.applyAclOps(T.aclOps(s, d))
 
   // -- snapshots + change stream -------------------------------------------
   def listSnapshots(s: SparkSession, d: String): DataFrame =
@@ -164,9 +121,6 @@ object Api {
   /** GetSnapshotInfo: one catalog row by name (checkpoint-served). */
   def getSnapshotInfo(s: SparkSession, d: String, name: String): DataFrame =
     listSnapshots(s, d).filter(col("name") === name)
-
-  def snapshotDiff(s: SparkSession, d: String): DataFrame =
-    CommitLog.snapshotDiffFromCatalog(s, T.objects(s, d), d)
 
   /** Reclaimable deleted keys (the KeyDeletingService / SnapshotDeleting
     * Service candidate set): buffered deletes whose blocks may be purged
@@ -232,158 +186,8 @@ object Api {
       .filter(col("tenant_id") === tenantId)
       .orderBy("access_id")
 
-  /** GetS3VolumeContext: per-request S3 volume + principal resolution. */
-  def getS3VolumeContext(s: SparkSession, d: String): DataFrame =
-    Tenants.s3VolumeContext(T.s3ContextRequests(s, d),
-      T.tenantAccessCatalog(s, d), T.tenantStateExt(s, d))
-
   /** DBUpdates(seq): the typed change stream since a sequence number. */
   def dbUpdates(s: SparkSession, d: String, sinceSeq: Long): DataFrame =
     graft.streaming.ChangeLog.events(T.objects(s, d))
       .filter(col("seq") > sinceSeq)
-
-  /** CreateBucket admission: the full validation-ladder verdict per
-    * request in a batch. */
-  def createBuckets(s: SparkSession, d: String,
-                    requests: DataFrame): DataFrame =
-    BucketOps.bucketCreateDecisions(requests, T.volumesNs(s, d),
-      T.buckets(s, d))
-
-  /** DeleteKey(s): the FSO delete-ladder verdict per request. */
-  def deleteKeys(s: SparkSession, d: String, requests: DataFrame): DataFrame =
-    CommitLog.keyDeleteDecisions(requests, T.objects(s, d), T.buckets(s, d),
-      T.objects(s, d)
-        .withColumn("pdir", Aggregates.parentDirOf("key"))
-        .filter(col("pdir") =!= "")
-        .select(col("volume"), col("bucket"),
-          explode(Aggregates.dirAndAncestors("pdir")).as("path"))
-        .distinct())
-
-  /** ReplicationManager placement picks for under-replicated containers. */
-  def replicaPlacement(s: SparkSession, d: String): DataFrame =
-    ClusterHealth.replicaPlacement(T.replicas(s, d), T.datanodes(s, d),
-      T.containersScm(s, d))
-
-  /** CreateVolume admission verdicts for a request batch. */
-  def createVolumes(s: SparkSession, d: String, requests: DataFrame,
-                    maxUserVolumes: Long = 1024L): DataFrame =
-    BucketOps.volumeCreateDecisions(requests, T.volumes(s, d),
-      maxUserVolumes)
-
-  /** SetBucketProperty quota-update verdicts. */
-  def setBucketQuotas(s: SparkSession, d: String,
-                      requests: DataFrame): DataFrame =
-    BucketOps.setBucketQuotaDecisions(requests, T.volumes(s, d),
-      T.buckets(s, d), T.bucketLinks(s, d))
-
-  /** Balancer iteration plan (paired moves under the budget caps). */
-  def balancerMoves(s: SparkSession, d: String): DataFrame =
-    ClusterHealth.balancerMoves(T.datanodes(s, d), T.replicas(s, d),
-      T.containersScm(s, d))
-
-  /** SigV4 auth verdicts for a signed-request batch. */
-  def validateSigV4(s: SparkSession, d: String,
-                    requests: DataFrame): DataFrame =
-    S3Ops.sigv4Verify(requests, T.s3Secrets(s, d))
-
-  /** PutObjectTagging: gateway tag-set validation then the OM apply. */
-  def putObjectTagging(s: SparkSession, d: String, requests: DataFrame,
-                       entries: DataFrame): DataFrame =
-    S3Ops.putObjectTagging(requests, entries, T.buckets(s, d),
-      T.objects(s, d))
-
-  /** GetObjectTagging: the stored tag map of one key. */
-  def getObjectTagging(s: SparkSession, d: String, volume: String,
-                       bucket: String, key: String): DataFrame =
-    Nested.tagsOf(T.objectsNested(s, d), volume, bucket, key)
-
-  /** PutBucketLifecycleConfiguration validation verdicts. */
-  def setLifecycleConfiguration(s: SparkSession, d: String,
-                                requests: DataFrame,
-                                rules: DataFrame): DataFrame =
-    Lifecycle.lifecycleSetDecisions(requests, rules, T.buckets(s, d))
-
-  /** MPU CommitPart / AbortMultipartUpload decisions. */
-  def commitMultipartParts(s: SparkSession, d: String,
-                           requests: DataFrame): DataFrame =
-    Lifecycle.mpuCommitPart(requests, T.mpuOpenParts(s, d),
-      T.multipartInfo(s, d), T.multipartParts(s, d), T.buckets(s, d))
-
-  def abortMultipartUploads(s: SparkSession, d: String,
-                            requests: DataFrame): DataFrame =
-    Lifecycle.mpuAbort(requests, T.multipartInfo(s, d),
-      T.multipartParts(s, d), T.buckets(s, d))
-
-  /** Tenant admin: create / delete / revoke-access-id decisions. */
-  def createTenants(s: SparkSession, d: String,
-                    requests: DataFrame): DataFrame =
-    Tenants.tenantCreateDecisions(requests, T.tenantState(s, d),
-      T.volumes(s, d))
-
-  def deleteTenants(s: SparkSession, d: String,
-                    requests: DataFrame): DataFrame =
-    Tenants.tenantDeleteDecisions(requests, T.tenantStateExt(s, d),
-      T.tenantAccessCatalog(s, d))
-
-  def revokeTenantAccessIds(s: SparkSession, d: String,
-                            requests: DataFrame): DataFrame =
-    Tenants.tenantRevokeDecisions(requests, T.tenantAccessCatalog(s, d))
-
-  /** FSO RenameKey decisions (subtree/hsync/parent guards). */
-  def renameKeysFso(s: SparkSession, d: String,
-                    requests: DataFrame): DataFrame =
-    CommitLog.fsoRenameDecisions(requests, T.objects(s, d),
-      T.buckets(s, d),
-      T.objects(s, d)
-        .withColumn("pdir", Aggregates.parentDirOf("key"))
-        .filter(col("pdir") =!= "")
-        .select(col("volume"), col("bucket"),
-          explode(Aggregates.dirAndAncestors("pdir")).as("path"))
-        .distinct())
-
-  /** ListOpenFiles page (db-key order, strictly-greater token). */
-  def listOpenFiles(s: SparkSession, d: String, pathPrefix: String,
-                    maxKeys: Int, contToken: String = ""): DataFrame =
-    Lifecycle.listOpenFiles(T.openKeys(s, d), pathPrefix, maxKeys,
-      contToken)
-
-  /** TenantRevokeAdmin decisions (assign's mirror; idempotent). */
-  def revokeTenantAdmins(s: SparkSession, d: String,
-                         requests: DataFrame): DataFrame =
-    Tenants.revokeAdminDecisions(requests, T.tenantState(s, d),
-      T.tenantAccessCatalog(s, d))
-
-  /** RevokeSecret decisions (permission gate before the store probe). */
-  def revokeS3Secrets(s: SparkSession, d: String,
-                      requests: DataFrame): DataFrame =
-    graft.operators.Security.revokeSecretDecisions(requests,
-      T.s3Secrets(s, d), T.tenantAccessCatalog(s, d))
-
-  /** DeleteSnapshot decisions (name gate, links, non-active refusals). */
-  def deleteSnapshots(s: SparkSession, d: String,
-                      requests: DataFrame): DataFrame =
-    CommitLog.snapshotDeleteDecisions(requests, T.buckets(s, d),
-      T.bucketLinks(s, d), T.volumes(s, d), T.snapshotCatalogLive(s, d))
-
-  /** Node heartbeat-health replay (NodeStateManager tick log). */
-  def nodeHealthLog(s: SparkSession, d: String): DataFrame =
-    graft.operators.ClusterHealth.nodeHealthFold(
-      T.nodeHealthEvents(s, d), T.nodeHealthChecks(s, d))
-
-  /** `ozone admin container report` — the ReplicationManager rollup. */
-  def containerReport(s: SparkSession, d: String): DataFrame =
-    graft.operators.ClusterHealth.replicationReport(T.datanodes(s, d),
-      T.containersScm(s, d), T.containersOm(s, d),
-      T.pipelineMembers(s, d))
-
-  /** Per-container health-check chain verdicts (the RM processAll). */
-  def containerHealthChecks(s: SparkSession, d: String): DataFrame =
-    graft.operators.ClusterHealth.containerHealthChain(T.datanodes(s, d),
-      T.containersScm(s, d), T.containersOm(s, d),
-      T.pipelineMembers(s, d))
-
-  /** `ozone admin datanode decommission|maintenance|recommission`. */
-  def datanodeAdmin(s: SparkSession, d: String): DataFrame =
-    graft.operators.ClusterHealth.decommissionAdmin(T.datanodes(s, d),
-      T.containersScm(s, d), T.replicas(s, d), T.ecShards(s, d))
 }

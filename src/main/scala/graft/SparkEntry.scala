@@ -555,13 +555,8 @@ object SparkEntry {
     // ---- nested types: MAP tags / ARRAY<STRUCT> acls + locations ----
     "q_tags_expiry" -> ((s, d) =>
       Nested.tagRuleExpiry(T.objectsNested(s, d), "R", 883612800000L)),
-    "q_acl_probe" -> ((s, d) => {
-      import s.implicits._
-      // auditor2 is a NON-owner principal — only the name+type+rights match
-      // through the acls array can grant it (owner shortcut would miss it)
-      Nested.aclProbe(T.objectsNested(s, d),
-        Seq("clerk1", "clerk3", "auditor2").toDF("principal"))
-    }),
+    "q_acl_probe" -> ((s, d) =>
+      Nested.aclProbe(T.objectsNested(s, d), T.aclProbePrincipalRows.df(s))),
     // ---- auth catalog: user/s3-secret/d-token tables + prefix ACLs ----
     "q_user_volumes" -> ((s, d) =>
       T.userTable(s, d).orderBy("user_name")),
@@ -956,15 +951,13 @@ object SparkEntry {
     "q_volume_delete" -> ((s, d) =>
       BucketOps.volumeDeleteDecisions(T.volumeDeleteRequests(s, d),
         T.volumesRef(s, d))),
-    "q_bucket_delete" -> ((s, d) => {
-      import s.implicits._
+    "q_bucket_delete" -> ((s, d) =>
       BucketOps.bucketDeleteDecisions(T.bucketDeleteRequests(s, d),
         T.bucketCatalogExt(s, d), T.objects(s, d),
         T.multipartInfo(s, d).select("volume", "bucket")
-          .unionByName(Seq(("vol0", "empty-mpu")).toDF("volume", "bucket")),
+          .unionByName(T.mpuBlockedBucketRows.df(s)),
         T.snapshotCatalog(s, d).select("volume", "bucket")
-          .unionByName(Seq(("vol0", "empty-snap")).toDF("volume", "bucket")))
-    }),
+          .unionByName(T.snapshotBlockedBucketRows.df(s)))),
     // Recon ClusterStateEndpoint: one-row cluster summary (global counts,
     // container states + MISSING, pipelines, datanodes, capacity).
     "q_cluster_state" -> ((s, d) =>
@@ -1558,25 +1551,6 @@ object SparkEntry {
       |      ELSE 'HEALTHY' END
       |    END AS detail)""".stripMargin
 
-  /** Shared-literal mirrors of the capacity-policy fixtures. */
-  private lazy val capVolsCte: String = {
-    val vals = T.capacityVolumeRows.map { case (i, c, r, m, h, s) =>
-      s"(CAST($i AS BIGINT), CAST($c AS BIGINT), CAST($r AS BIGINT), " +
-        s"CAST($m AS BIGINT), CAST($h AS BIGINT), CAST($s AS BIGINT))"
-    }.mkString(",\n  ")
-    s"""cap_vols(vol_id, capacity, remaining, committed, hard_spare,
-       |  reported_spare) AS (VALUES
-       |  $vals)""".stripMargin
-  }
-
-  private lazy val pipeNodesCte: String = {
-    val vals = T.capacityPipeNodeRows.map { case (p, n, u, c) =>
-      s"('$p', '$n', CAST($u AS BIGINT), CAST($c AS BIGINT))"
-    }.mkString(",\n  ")
-    s"""pipe_nodes(pipeline_id, node, used, capacity) AS (VALUES
-       |  $vals)""".stripMargin
-  }
-
   def oracleSql: Map[String, String] =
     oracleBase + ("q_replication_report" -> replicationReportOracle) +
       ("q_dedup_funnel" -> dedupFunnelOracle) +
@@ -1704,12 +1678,7 @@ object SparkEntry {
         |  (SELECT CAST(count(*) AS BIGINT) FROM omm_base) AS n_calls
         |FROM omm_base b ORDER BY b.req_id""".stripMargin,
       O.objects,
-      """omm_reqs(req_id, volume, bucket, prefix, max_keys) AS (VALUES
-        |  (1, 'vol0', 'bucket0', 'warehouse/A/', 5),
-        |  (2, 'vol0', 'bucket0', 'warehouse/', 100000),
-        |  (3, 'vol1', 'bucket3', 'warehouse/N/', 50),
-        |  (4, 'vol2', 'bucket5', 'warehouse/R', 10),
-        |  (5, 'vol0', 'bucket0', 'nonexistent/', 10))""".stripMargin,
+      O.values("omm_reqs", T.omListRequestRows),
       """omm_m AS (
         |  SELECT r.req_id, count(*) AS matching
         |  FROM omm_reqs r JOIN objects o
@@ -1965,14 +1934,7 @@ object SparkEntry {
         |  FROM (
         |    SELECT volume, bucket, key, (object_id // 113) % 4 AS cls
         |    FROM objects WHERE object_id % 113 = 0))""".stripMargin,
-      """fso_dirs AS (
-        |  SELECT DISTINCT volume, bucket,
-        |    array_to_string(ws[1:d], '/') AS path
-        |  FROM (
-        |    SELECT volume, bucket, string_split(key, '/') AS ws,
-        |      unnest(generate_series(1,
-        |        len(string_split(key, '/')) - 1)) AS d
-        |    FROM objects))""".stripMargin),
+      O.fsoDirs),
 
     "q_ofs_resolve" -> O.withCtes(
       """SELECT path, username,
@@ -3077,10 +3039,7 @@ object SparkEntry {
         |    ((order_key // 50) % 7) <> 6 AS present_at_apply
         |  FROM multipart_parts
         |  GROUP BY upload_id, order_key)""".stripMargin,
-      """mpu_live_buckets(volume, bucket) AS (
-        |  SELECT 'vol' || v.v, 'bucket' || b.b
-        |  FROM (VALUES (0), (1), (2), (3)) v(v),
-        |    (VALUES (0), (1), (2), (4)) b(b))""".stripMargin),
+      O.values("mpu_live_buckets", T.mpuLiveBucketRows)),
 
     "q_replica_history" -> O.withCtes(
       """SELECT container_id, datanode, count(*) AS n_reports,
@@ -3152,10 +3111,11 @@ object SparkEntry {
     // (mirrors the Tables.objectsNested acl synthesis).
     "q_acl_probe" -> O.withCtes(
       """SELECT volume, bucket, key, principal FROM objects
-        |CROSS JOIN (VALUES ('clerk1'), ('clerk3'), ('auditor2')) p(principal)
+        |CROSS JOIN acl_principals p
         |WHERE owner = principal
         |   OR ('auditor' || (object_id % 3) = principal AND version % 2 = 0)
-        |ORDER BY volume, bucket, key, principal""".stripMargin, O.objects),
+        |ORDER BY volume, bucket, key, principal""".stripMargin, O.objects,
+      O.values("acl_principals", T.aclProbePrincipalRows)),
 
     "q_user_volumes" -> O.withCtes(
       """SELECT owner AS user_name, count(*) AS volume_count,
@@ -3312,17 +3272,10 @@ object SparkEntry {
       """dstore AS (
         |  SELECT DISTINCT md5('token' || owner) AS token_id
         |  FROM objects)""".stripMargin,
+      O.values("rt_rows", T.renewTokenRequestRows),
       """rt_reqs AS (
-        |  SELECT req_id, token_owner, renewer, max_expiry_ms, caller,
-        |    md5('token' || token_owner) AS token_id
-        |  FROM (VALUES
-        |    (1, 'clerk1', 'om', 799286400000 + 7776000000, 'om'),
-        |    (2, 'clerk1', 'om', 799286400000 - 1, 'om'),
-        |    (3, 'ghost', 'om', 799286400000 + 7776000000, 'om'),
-        |    (4, 'clerk2', '', 799286400000 + 7776000000, 'om'),
-        |    (5, 'clerk3', 'om', 799286400000 + 7776000000, 'hive'),
-        |    (6, 'ghost2', 'om', 799286400000 - 1, 'om'))
-        |    v(req_id, token_owner, renewer, max_expiry_ms, caller))""".stripMargin),
+        |  SELECT *, md5('token' || token_owner) AS token_id
+        |  FROM rt_rows)""".stripMargin),
 
     // CancelToken ladder mirror: access gate before the store probe.
     "q_token_cancel" -> O.withCtes(
@@ -3345,16 +3298,10 @@ object SparkEntry {
       """dstore AS (
         |  SELECT DISTINCT md5('token' || owner) AS token_id
         |  FROM objects)""".stripMargin,
+      O.values("ct_rows", T.cancelTokenRequestRows),
       """ct_reqs AS (
-        |  SELECT req_id, token_owner, presented_owner, renewer, caller,
-        |    md5('token' || token_owner) AS token_id
-        |  FROM (VALUES
-        |    (1, 'clerk1', 'clerk1', 'om', 'clerk1'),
-        |    (2, 'clerk2', 'clerk2', 'om', 'om'),
-        |    (3, 'clerk3', 'clerk3', 'om', 'hive'),
-        |    (4, 'ghost', 'ghost', 'om', 'ghost'),
-        |    (5, 'clerk5', '', 'om', 'om'))
-        |    v(req_id, token_owner, presented_owner, renewer, caller))""".stripMargin),
+        |  SELECT *, md5('token' || token_owner) AS token_id
+        |  FROM ct_rows)""".stripMargin),
 
     // GetDelegationToken mint mirror: auth gate → manager probe → mint.
     "q_token_mint" -> O.withCtes(
@@ -3375,16 +3322,7 @@ object SparkEntry {
         |      ELSE 'MINTED' END AS decision
         |  FROM gt_reqs)
         |ORDER BY req_id""".stripMargin,
-      """gt_reqs(req_id, caller, auth_method, renewer, real_user,
-        |    security_on, mgr_running) AS (VALUES
-        |  (1, 'clerk1', 'KERBEROS', 'om', '', true, true),
-        |  (2, 'clerk2', 'TOKEN', 'om', '', true, true),
-        |  (3, 'clerk3', 'SIMPLE', 'om', '', true, true),
-        |  (4, 'clerk4', 'KERBEROS', 'om', '', true, false),
-        |  (5, 'clerk5', 'SIMPLE', 'om', '', false, true),
-        |  (6, 'svc-hive', 'CERTIFICATE', 'om', 'oozie', true, true),
-        |  (7, 'clerk7', 'KERBEROS_SSL', '', '', true, true),
-        |  (8, 'clerk8', 'TOKEN', 'om', '', true, false))""".stripMargin),
+      O.values("gt_reqs", T.getTokenRequestRows)),
 
     // Iceberg rewrite mirror: version/snapshot/manifest scope in
     // (start, end], data files via the delta snapshot set.
@@ -3474,29 +3412,13 @@ object SparkEntry {
         |FROM fg_ops o
         |LEFT JOIN fg_features f ON o.feature = f.feature
         |ORDER BY o.seq""".stripMargin,
-      """fg_features(feature, version) AS (VALUES
-        |  ('INITIAL_VERSION', 0), ('ERASURE_CODED_STORAGE_SUPPORT', 1),
-        |  ('BUCKET_LAYOUT_SUPPORT', 2), ('MULTITENANCY_SCHEMA', 3),
-        |  ('HSYNC', 4), ('FILESYSTEM_SNAPSHOT', 5), ('QUOTA', 6),
-        |  ('HBASE_SUPPORT', 7), ('DELEGATION_TOKEN_SYMMETRIC_SIGN', 8),
-        |  ('SNAPSHOT_DEFRAG', 9), ('S3_LIFECYCLE_SUPPORT', 10),
-        |  ('MPU_PARTS_TABLE_SPLIT', 11))""".stripMargin,
+      O.values("fg_features", T.omLayoutFeatureRows),
+      O.values("fg_rows", T.upgradeOpRows),
       """fg_ops AS (
-        |  SELECT seq, op_type, feature, caller,
+        |  SELECT *,
         |    CASE WHEN op_type = 'FINALIZE' AND caller = 'om-admin'
         |      THEN 1 END AS sc
-        |  FROM (VALUES
-        |    (1, 'REQUEST', 'HSYNC', 'clerk1'),
-        |    (2, 'REQUEST', 'FILESYSTEM_SNAPSHOT', 'clerk1'),
-        |    (3, 'REQUEST', 'S3_LIFECYCLE_SUPPORT', 'clerk1'),
-        |    (4, 'FINALIZE', '', 'clerk1'),
-        |    (5, 'REQUEST', 'FILESYSTEM_SNAPSHOT', 'clerk1'),
-        |    (6, 'FINALIZE', '', 'om-admin'),
-        |    (7, 'REQUEST', 'FILESYSTEM_SNAPSHOT', 'clerk1'),
-        |    (8, 'REQUEST', 'MPU_PARTS_TABLE_SPLIT', 'clerk1'),
-        |    (9, 'FINALIZE', '', 'om-admin'),
-        |    (10, 'REQUEST', 'ERASURE_CODED_STORAGE_SUPPORT', 'clerk1'))
-        |    v(seq, op_type, feature, caller))""".stripMargin),
+        |  FROM fg_rows)""".stripMargin),
 
     // Prepare-gate mirror: last-non-null state fold via a correlated
     // most-recent-state-change probe (the op log is control-plane tiny).
@@ -3520,24 +3442,13 @@ object SparkEntry {
         |    THEN o.seq ELSE -1 END AS prepare_index
         |FROM pg_ops o
         |ORDER BY o.seq""".stripMargin,
+      O.values("pg_rows", T.prepareOpRows),
       """pg_ops AS (
-        |  SELECT seq, op_type, caller,
+        |  SELECT *,
         |    CASE WHEN op_type = 'PREPARE' AND caller = 'om-admin' THEN 1
         |      WHEN op_type = 'CANCEL_PREPARE' AND caller = 'om-admin'
         |      THEN 0 END AS sc
-        |  FROM (VALUES
-        |    (1, 'WRITE', 'clerk1'),
-        |    (2, 'PREPARE', 'clerk1'),
-        |    (3, 'WRITE', 'clerk1'),
-        |    (4, 'PREPARE', 'om-admin'),
-        |    (5, 'WRITE', 'clerk1'),
-        |    (6, 'PREPARE', 'om-admin'),
-        |    (7, 'CANCEL_PREPARE', 'clerk1'),
-        |    (8, 'WRITE', 'om-admin'),
-        |    (9, 'CANCEL_PREPARE', 'om-admin'),
-        |    (10, 'WRITE', 'clerk1'),
-        |    (11, 'CANCEL_PREPARE', 'om-admin'))
-        |    v(seq, op_type, caller))""".stripMargin),
+        |  FROM pg_rows)""".stripMargin),
 
     // auditor2 = 'auditor' || (object_id % 3) with object-read iff version
     // even (objectsNested synthesis); prefix grant iff under warehouse/A/
@@ -3578,18 +3489,7 @@ object SparkEntry {
         |  AND o.prefix = p.prefix AND o.seq = p.k
         |ORDER BY o.volume, o.bucket, o.prefix, o.seq""".stripMargin,
       O.objects, O.buckets,
-      """pao_ops(seq, volume, bucket, prefix, op, pname, bits) AS (VALUES
-        |  (1, 'vol0', 'bucket0', 'warehouse/', 'REMOVE', 'auditor2', 2),
-        |  (2, 'vol0', 'bucket0', 'warehouse/', 'REMOVE', 'auditor2', 1),
-        |  (3, 'vol0', 'bucket0', 'warehouse/', 'ADD', 'alice', 3),
-        |  (4, 'vol0', 'bucket0', 'warehouse/', 'REMOVE', 'alice', 1),
-        |  (5, 'vol0', 'bucket0', 'staging/', 'REMOVE', 'bob', 1),
-        |  (6, 'vol0', 'bucket0', 'staging/', 'ADD', 'bob', 7),
-        |  (7, 'vol0', 'bucket0', 'staging/', 'SET', 'carol', 1),
-        |  (8, 'vol0', 'bucket0', 'staging/', 'REMOVE', 'bob', 4),
-        |  (9, 'vol0', 'bucket1', 'no-slash', 'ADD', 'dave', 1),
-        |  (10, 'vol0', 'bucket1', 'warehouse/A/', 'REMOVE', 'auditor2',
-        |    1))""".stripMargin,
+      O.values("pao_ops", T.prefixAclWriteOpRows),
       """stored_bits AS (
         |  SELECT volume, bucket, 'warehouse/' AS prefix,
         |    'auditor2' AS name, 2 AS bits FROM buckets
@@ -3651,18 +3551,7 @@ object SparkEntry {
         |GROUP BY 1, 2, 3, 4
         |ORDER BY 1, 2, 3, 4""".stripMargin,
       O.objects, O.buckets,
-      """pao_ops(seq, volume, bucket, prefix, op, pname, bits) AS (VALUES
-        |  (1, 'vol0', 'bucket0', 'warehouse/', 'REMOVE', 'auditor2', 2),
-        |  (2, 'vol0', 'bucket0', 'warehouse/', 'REMOVE', 'auditor2', 1),
-        |  (3, 'vol0', 'bucket0', 'warehouse/', 'ADD', 'alice', 3),
-        |  (4, 'vol0', 'bucket0', 'warehouse/', 'REMOVE', 'alice', 1),
-        |  (5, 'vol0', 'bucket0', 'staging/', 'REMOVE', 'bob', 1),
-        |  (6, 'vol0', 'bucket0', 'staging/', 'ADD', 'bob', 7),
-        |  (7, 'vol0', 'bucket0', 'staging/', 'SET', 'carol', 1),
-        |  (8, 'vol0', 'bucket0', 'staging/', 'REMOVE', 'bob', 4),
-        |  (9, 'vol0', 'bucket1', 'no-slash', 'ADD', 'dave', 1),
-        |  (10, 'vol0', 'bucket1', 'warehouse/A/', 'REMOVE', 'auditor2',
-        |    1))""".stripMargin,
+      O.values("pao_ops", T.prefixAclWriteOpRows),
       """pf_events AS (
         |  SELECT seq, volume, bucket, prefix, op, pname, bits
         |  FROM pao_ops WHERE prefix LIKE '%/'
@@ -3706,10 +3595,11 @@ object SparkEntry {
         |  FULL OUTER JOIN rs_rroles g ON o.role_name = g.role_name)
         |ORDER BY kind, name""".stripMargin,
       O.objects,
+      O.values("empty_tenant", T.emptyTenantRows),
       """rs_tenants AS (
         |  SELECT DISTINCT 'tenant' || substr(volume, 4, 10) AS tenant_id
         |  FROM objects
-        |  UNION ALL SELECT 'tenant-empty')""".stripMargin,
+        |  UNION ALL SELECT tenant_id FROM empty_tenant)""".stripMargin,
       """rs_members AS (
         |  SELECT DISTINCT 'tenant' || substr(volume, 4, 10) AS tenant_id,
         |    owner AS user_principal, owner = 'clerk0' AS is_admin
@@ -3718,13 +3608,7 @@ object SparkEntry {
         |  SELECT tenant_id || s AS name
         |  FROM rs_tenants, (VALUES ('-VolumeAccess'), ('-BucketAccess'))
         |    v(s))""".stripMargin,
-      """rs_rpolicies(policy_name) AS (VALUES
-        |  ('tenant0-VolumeAccess'), ('tenant0-BucketAccess'),
-        |  ('tenant1-VolumeAccess'), ('tenant1-BucketAccess'),
-        |  ('tenant2-VolumeAccess'),
-        |  ('tenant3-VolumeAccess'), ('tenant3-BucketAccess'),
-        |  ('tenant-empty-VolumeAccess'),
-        |  ('tenant-gone-VolumeAccess'))""".stripMargin,
+      O.values("rs_rpolicies", T.rangerPolicyRows),
       """rs_om_roles AS (
         |  SELECT s.role_name,
         |    coalesce(m.om_set, CAST([] AS VARCHAR[])) AS om_set
@@ -3742,23 +3626,11 @@ object SparkEntry {
         |      SELECT tenant_id || '-AdminRole', user_principal
         |      FROM rs_members WHERE is_admin)
         |    GROUP BY 1) m ON s.role_name = m.role_name)""".stripMargin,
+      O.values("rs_rrole_rows", T.rangerRoleRows),
       """rs_rroles AS (
         |  SELECT role_name,
         |    list_sort(list(DISTINCT user_principal)) AS ranger_set
-        |  FROM (
-        |    SELECT 'tenant0-UserRole' AS role_name,
-        |      'clerk' || i AS user_principal FROM range(7) t(i)
-        |    UNION ALL SELECT 'tenant1-UserRole', 'clerk' || i
-        |    FROM range(7) t(i) WHERE i <> 3
-        |    UNION ALL SELECT 'tenant3-UserRole', 'clerk' || i
-        |    FROM range(7) t(i)
-        |    UNION ALL SELECT * FROM (VALUES
-        |      ('tenant0-AdminRole', 'clerk0'),
-        |      ('tenant1-AdminRole', 'clerk0'),
-        |      ('tenant1-AdminRole', 'intruder'),
-        |      ('tenant3-AdminRole', 'clerk0'),
-        |      ('tenant-gone-UserRole', 'ghost')) w(role_name,
-        |      user_principal))
+        |  FROM rs_rrole_rows
         |  GROUP BY 1)""".stripMargin),
 
     "q_list_tenants" -> O.withCtes(
@@ -3775,8 +3647,7 @@ object SparkEntry {
         |FROM objects WHERE owner = 'clerk1'
         |ORDER BY access_id""".stripMargin, O.objects),
 
-    // AssignUserAccessId ladder in the reference's branch order; the
-    // request VALUES mirror Tables.assignRequests exactly.
+    // AssignUserAccessId ladder in the reference's branch order.
     "q_tenant_assign" -> O.withCtes(
       """SELECT r.tenant_id, r.user_principal, r.access_id,
         |  CASE WHEN length(r.access_id) >= 100 THEN 'INVALID_ACCESS_ID'
@@ -3786,17 +3657,7 @@ object SparkEntry {
         |       WHEN i.access_id IS NOT NULL OR u.user_principal IS NOT NULL
         |         THEN 'TENANT_USER_ACCESS_ID_ALREADY_EXISTS'
         |       ELSE 'ASSIGNED' END AS decision
-        |FROM (VALUES
-        |  ('tenant1', 'newuser', repeat('a', 100)),
-        |  ('tenant1', 'bad$user', 'tenant1$badu'),
-        |  ('ten$ant1', 'user1', 'x1'),
-        |  ('tenant9', 'user2', 'tenant9$user2'),
-        |  ('tenant9', 'bad$u', 'y1'),
-        |  ('tenant9', 'clerk1', 'tenant1$clerk1'),
-        |  ('tenant1', 'freshuser', 'tenant1$clerk1'),
-        |  ('tenant2', 'clerk3', 'tenant2$clerk3x'),
-        |  ('tenant3', 'alice', 'tenant3$alice'))
-        |  r(tenant_id, user_principal, access_id)
+        |FROM assign_reqs r
         |LEFT JOIN (
         |  SELECT DISTINCT 'tenant' || substr(volume, 4, 10) AS tenant_id
         |  FROM objects) t ON r.tenant_id = t.tenant_id
@@ -3810,7 +3671,7 @@ object SparkEntry {
         |  FROM objects) u ON r.tenant_id = u.tenant_id
         |  AND r.user_principal = u.user_principal
         |ORDER BY r.tenant_id, r.user_principal, r.access_id""".stripMargin,
-      O.objects),
+      O.objects, O.values("assign_reqs", T.assignRequestRows)),
 
     "q_locations_explode" -> O.withCtes(
       s"""SELECT key, data_size, container_id,
@@ -3896,11 +3757,7 @@ object SparkEntry {
         |  AND a.old_key = b.new_key AND a.old_size = b.new_size)
         |ORDER BY object_id""".stripMargin,
       O.objects,
-      """wgrp AS (
-        |  SELECT volume, bucket, key, object_id, version,
-        |    (object_id // 10) % 10 = 0 AS churn, max(data_size) AS mx
-        |  FROM objects GROUP BY 1, 2, 3, 4, 5, 6
-        |)""".stripMargin,
+      O.writeGroups,
       """s1d AS (
         |  SELECT key, object_id, mx AS data_size FROM wgrp
         |  QUALIFY row_number() OVER (
@@ -3928,11 +3785,7 @@ object SparkEntry {
         |  FROM wgrp WHERE NOT (version = 4 AND churn)
         |) ORDER BY name""".stripMargin,
       O.objects,
-      """wgrp AS (
-        |  SELECT volume, bucket, key, object_id, version,
-        |    (object_id // 10) % 10 = 0 AS churn, max(data_size) AS mx
-        |  FROM objects GROUP BY 1, 2, 3, 4, 5, 6
-        |)""".stripMargin),
+      O.writeGroups),
 
     // Reclaim closed forms over the commit-log chain (s1 @1, s2 @4, AOS):
     // s2's deletedTable = the row-granular seq-3 deletes — present in s1
@@ -3960,11 +3813,7 @@ object SparkEntry {
         |  FROM wgrp WHERE churn AND version IN (1, 3, 4))
         |ORDER BY owner, volume, bucket, key, data_size""".stripMargin,
       O.objects,
-      """wgrp AS (
-        |  SELECT volume, bucket, key, object_id, version,
-        |    (object_id // 10) % 10 = 0 AS churn, max(data_size) AS mx
-        |  FROM objects GROUP BY 1, 2, 3, 4, 5, 6
-        |)""".stripMargin),
+      O.writeGroups),
 
     // Purge pass: reclaimable rows only (band-1 non-max duplicate rows +
     // the AOS v=4 band), key-ordered ('AOS' sorts before 's2'), capped at
@@ -3990,11 +3839,7 @@ object SparkEntry {
          |  LIMIT 500)
          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
       O.objects,
-      """wgrp AS (
-        |  SELECT volume, bucket, key, object_id, version,
-        |    (object_id // 10) % 10 = 0 AS churn, max(data_size) AS mx
-        |  FROM objects GROUP BY 1, 2, 3, 4, 5, 6
-        |)""".stripMargin),
+      O.writeGroups),
 
     "q_snapshot_exclusive" -> O.withCtes(
       """SELECT exclusive_to AS snapshot, count(*) AS n_exclusive,
@@ -4013,11 +3858,7 @@ object SparkEntry {
         |WHERE exclusive_to IS NOT NULL
         |GROUP BY 1 ORDER BY 1""".stripMargin,
       O.objects,
-      """wgrp AS (
-        |  SELECT volume, bucket, key, object_id, version,
-        |    (object_id // 10) % 10 = 0 AS churn, max(data_size) AS mx
-        |  FROM objects GROUP BY 1, 2, 3, 4, 5, 6
-        |)""".stripMargin),
+      O.writeGroups),
 
     // Deleted-dir reclaim: a dir is referenced by the previous snapshot iff
     // some key alive at the cut has it as a strict ancestor prefix.
@@ -4078,11 +3919,7 @@ object SparkEntry {
         |    AND e.bucket = s2k.bucket AND e.orig_key = s2k.key)
         |ORDER BY owner, volume, bucket, orig_key, object_id""".stripMargin,
       O.objects,
-      """wgrp AS (
-        |  SELECT volume, bucket, key, object_id, version,
-        |    (object_id // 10) % 10 = 0 AS churn, max(data_size) AS mx
-        |  FROM objects GROUP BY 1, 2, 3, 4, 5, 6
-        |)""".stripMargin,
+      O.writeGroups,
       """entries AS (
         |  SELECT DISTINCT volume, bucket, object_id, key AS orig_key
         |  FROM objects
@@ -4134,50 +3971,9 @@ object SparkEntry {
         |    AND p.upload_id = u.upload_id)
         |ORDER BY req_id""".stripMargin,
       O.objects, O.buckets,
-      """cp_src(bucket, key, size, mtime_ms, etag) AS (VALUES
-        |  ('srcb', 'data/one.dat', 1000, 1700000000000, 's-e1'),
-        |  ('srcb', 'sp ace.dat', 500, 1690000000000, 's-e2'),
-        |  ('srcb', 'big.dat', 10000, 1699999999999, 's-e3'))"""
-        .stripMargin,
-      """cp_store(volume, bucket, key, upload_id) AS (VALUES
-        |  ('vol0', 'bucket0', 'mpu/a.bin', 'up-A'),
-        |  ('vol0', 'bucket0', 'mpu/b.bin', 'up-B'),
-        |  ('vol0', 'bucket0', 'mpu/c.bin', 'up-C'),
-        |  ('vol0', 'bucket0', 'dircol/d.bin', 'up-D'))""".stripMargin,
-      """cp_reqs(req_id, volume, bucket, key, upload_id, part_number,
-        |    copy_header, range_header, ifmod_ms, ifunmod_ms) AS (VALUES
-        |  (1, 'vol0', 'bucket0', 'mpu/a.bin', 'up-A', 1,
-        |    'srcb/data/one.dat', '', -1, -1),
-        |  (2, 'vol0', 'bucket0', 'mpu/a.bin', 'up-A', 2,
-        |    'srcb/data/one.dat', 'bytes=0-99', -1, -1),
-        |  (3, 'vol0', 'bucket0', 'mpu/a.bin', 'up-A', 3,
-        |    'nobucketnoslash', '', -1, -1),
-        |  (4, 'vol0', 'bucket0', 'mpu/a.bin', 'up-A', 4,
-        |    '/srcb/data/one.dat', '', -1, -1),
-        |  (5, 'vol0', 'bucket0', 'mpu/a.bin', 'up-A', 5,
-        |    '/srcb/sp%20ace.dat', '', -1, -1),
-        |  (6, 'vol0', 'bucket0', 'mpu/a.bin', 'up-A', 6,
-        |    'ghostb/data/one.dat', '', -1, -1),
-        |  (7, 'vol0', 'bucket0', 'mpu/a.bin', 'up-A', 7,
-        |    'srcb/ghost.dat', '', -1, -1),
-        |  (8, 'vol0', 'bucket0', 'mpu/a.bin', 'up-A', 8,
-        |    'srcb/data/one.dat', 'bytes=5-', -1, -1),
-        |  (9, 'vol0', 'bucket0', 'mpu/a.bin', 'up-A', 9,
-        |    'srcb/data/one.dat', 'bytes=50-40', -1, -1),
-        |  (10, 'vol0', 'bucket0', 'mpu/a.bin', 'up-A', 10,
-        |    'srcb/data/one.dat', 'bytes=0-1000', -1, -1),
-        |  (11, 'vol0', 'bucket0', 'mpu/a.bin', 'up-A', 11,
-        |    'srcb/sp%20ace.dat', '', 1695000000000, -1),
-        |  (12, 'vol0', 'bucket0', 'mpu/a.bin', 'up-A', 12,
-        |    'srcb/sp%20ace.dat', '', -1, 1680000000000),
-        |  (13, 'vol0', 'bucket0', 'mpu/a.bin', 'up-A', 13,
-        |    'srcb/data/one.dat', '', 1800000000000, -1),
-        |  (14, 'vol0', 'bucket0', 'mpu/a.bin', 'up-ghost', 14,
-        |    'srcb/data/one.dat', '', -1, -1),
-        |  (15, 'vol0', 'no-such', 'mpu/a.bin', 'up-A', 15,
-        |    'noslash', '', -1, -1),
-        |  (16, 'vol0', 'bucket0', 'mpu/a.bin', 'up-A', 16,
-        |    'srcb/big.dat', 'bytes=9000-9999', -1, -1))""".stripMargin,
+      O.values("cp_src", T.copyPartSourceRows),
+      O.values("cp_store", T.mpuCompleteStoreRows),
+      O.values("cp_reqs", T.copyPartRequestRows),
       """cp_parsed AS (
         |  SELECT req_id, volume, bucket, key, upload_id, part_number,
         |    hdr, instr(hdr, '/') AS slash_pos,
@@ -4338,32 +4134,8 @@ object SparkEntry {
         |  FROM pba_decided WHERE decision <> 'APPLIED')
         |ORDER BY req_id, pos, grantee, target, scope""".stripMargin,
       O.objects, O.buckets, O.volumes,
-      """pba_reqs(req_id, volume, bucket, expected_owner) AS (VALUES
-        |  (1, 'vol0', 'bucket0', ''),
-        |  (2, 'vol0', 'bucket1', ''),
-        |  (3, 'vol0', 'no-such', ''),
-        |  (4, 'vol1', 'bucket3', 'admin0'),
-        |  (5, 'vol1', 'bucket3', 'admin1'),
-        |  (6, 'vol2', 'bucket5', ''),
-        |  (7, 'vol2', 'bucket4', ''),
-        |  (8, 'vol3', 'bucket7', ''),
-        |  (9, 'vol0', 'no-such', ''))""".stripMargin,
-      """pba_grants(req_id, pos, grantee_type, grantee, s3_perm,
-        |    malformed) AS (VALUES
-        |  (1, 1, 'id', 'clerk1', 'FULL_CONTROL', FALSE),
-        |  (1, 2, 'id', 'clerk2', 'READ', FALSE),
-        |  (2, 1, 'id', 'u1', 'READ', FALSE),
-        |  (2, 2, 'id', 'u2', 'WRITE', FALSE),
-        |  (2, 3, 'id', 'u1', 'WRITE_ACP', FALSE),
-        |  (2, 4, 'id', 'u3', 'READ_ACP', FALSE),
-        |  (4, 1, 'id', 'aud1', 'WRITE', FALSE),
-        |  (5, 1, 'id', 'aud1', 'WRITE', FALSE),
-        |  (6, 1, 'id', 'x', 'READ', TRUE),
-        |  (7, 1, 'emailAddress', 'y', 'READ', FALSE),
-        |  (8, 1, 'id', 'ok', 'READ', FALSE),
-        |  (8, 2, 'id', 'bad', 'READ', TRUE),
-        |  (8, 3, 'emailAddress', 'z', 'READ', FALSE),
-        |  (9, 1, 'id', 'w', 'READ', TRUE))""".stripMargin,
+      O.values("pba_reqs", T.putBucketAclRequestRows),
+      O.values("pba_grants", T.putBucketAclGrantRows),
       """pba_decided AS (
         |  SELECT r.req_id, r.volume, r.bucket,
         |    CASE WHEN b.bucket IS NULL THEN 'NO_SUCH_BUCKET'
@@ -4467,23 +4239,15 @@ object SparkEntry {
         |  CASE WHEN b.bucket IS NULL THEN 'NO_SUCH_BUCKET'
         |       ELSE 'DELETED' END AS decision,
         |  (b.bucket IS NOT NULL AND t.bucket IS NOT NULL) AS had_tags
-        |FROM dbt_reqs r
+        |FROM bt_reqs r
         |LEFT JOIN (SELECT DISTINCT volume, bucket FROM objects) b
         |  ON r.volume = b.volume AND r.bucket = b.bucket
-        |LEFT JOIN (SELECT volume, bucket FROM dbt_reqs
+        |LEFT JOIN (SELECT volume, bucket FROM bt_reqs
         |           WHERE cls IN (0, 4) AND req_id < 9000) t
         |  ON r.volume = t.volume AND r.bucket = t.bucket
         |ORDER BY r.req_id""".stripMargin,
       O.objects, O.buckets,
-      """dbt_reqs AS (
-        |  SELECT CAST(substr(volume, 4, 10) AS BIGINT) * 100 +
-        |      CAST(substr(bucket, 7, 10) AS BIGINT) AS req_id,
-        |    (CAST(substr(volume, 4, 10) AS BIGINT) +
-        |      CAST(substr(bucket, 7, 10) AS BIGINT)) % 6 AS cls,
-        |    volume, bucket
-        |  FROM buckets
-        |  UNION ALL SELECT 9001, 0, 'vol0', 'no-such-bucket'
-        |  UNION ALL SELECT 9002, 1, 'vol9', 'bucket0')""".stripMargin),
+      O.bucketTagRequests),
 
     // PutBucketTagging: same per-tag ladder, 50-tag bucket cap, bucket
     // existence only.
@@ -4503,15 +4267,7 @@ object SparkEntry {
         |LEFT JOIN buckets b ON r.volume = b.volume AND r.bucket = b.bucket
         |ORDER BY r.req_id""".stripMargin,
       O.objects, O.buckets,
-      """bt_reqs AS (
-        |  SELECT CAST(substr(volume, 4, 10) AS BIGINT) * 100 +
-        |      CAST(substr(bucket, 7, 10) AS BIGINT) AS req_id,
-        |    (CAST(substr(volume, 4, 10) AS BIGINT) +
-        |      CAST(substr(bucket, 7, 10) AS BIGINT)) % 6 AS cls,
-        |    volume, bucket
-        |  FROM buckets
-        |  UNION ALL SELECT 9001, 0, 'vol0', 'no-such-bucket'
-        |  UNION ALL SELECT 9002, 1, 'vol9', 'bucket0')""".stripMargin,
+      O.bucketTagRequests,
       """bt_entries AS (
         |  SELECT req_id, pos,
         |    CASE WHEN cls = 2 AND pos = 1 THEN 'aws:team'
@@ -4539,9 +4295,8 @@ object SparkEntry {
         |        THEN 'DUPLICATE_KEY' END) AS eff_err
         |  FROM bt_entries)""".stripMargin),
 
-    // Lifecycle-configuration set ladder; request/rule VALUES mirror
-    // Tables.lcSetRequests/lcRuleEntries exactly (req 19's 1001 rules
-    // come from range()).
+    // Lifecycle-configuration set ladder over the request/rule fixtures
+    // (req 19 carries 1001 rules).
     "q_lifecycle_set" -> O.withCtes(
       """SELECT q.req_id, q.volume, q.bucket,
         |  coalesce(
@@ -4578,94 +4333,8 @@ object SparkEntry {
         |  USING (req_id)
         |ORDER BY q.req_id""".stripMargin,
       O.objects, O.buckets,
-      """lc_reqs(req_id, volume, bucket) AS (VALUES
-        |  (1, 'vol0', 'bucket0'), (2, 'vol0', 'bucket0'),
-        |  (3, 'vol0', 'bucket0'), (4, 'vol0', 'bucket0'),
-        |  (5, 'vol0', 'bucket1'), (6, 'vol0', 'bucket0'),
-        |  (7, 'vol0', 'bucket0'), (8, 'vol0', 'bucket0'),
-        |  (9, 'vol0', 'bucket0'), (10, 'vol0', 'bucket1'),
-        |  (11, 'vol0', 'bucket0'), (12, 'vol0', 'bucket0'),
-        |  (13, 'vol0', 'bucket0'), (14, 'vol0', 'bucket0'),
-        |  (15, 'vol0', 'bucket0'), (16, 'vol0', 'bucket0'),
-        |  (17, 'vol0', 'bucket0'), (18, 'vol0', 'bucket0'),
-        |  (19, 'vol0', 'bucket0'), (20, 'vol0', 'bucket0'),
-        |  (21, 'vol0', 'no-such-bucket'), (22, 'vol0', 'BAD..Name'),
-        |  (23, 'bad_vol!', 'bucket0'), (24, 'vol0', 'bucket1'),
-        |  (25, 'vol0', 'no-such-bucket'), (26, 'vol0', 'bucket0'),
-        |  (27, 'bad_vol!', 'BAD..Name'), (28, 'vol0', 'bucket0'),
-        |  (29, 'vol0', 'bucket0'), (30, 'vol0', 'bucket0'),
-        |  (31, 'vol0', 'bucket1'), (32, 'vol0', 'bucket1'))""".stripMargin,
-      """lc_rules(req_id, rule_pos, rule_id, prefix, filter_prefix,
-        |  filter_tag_key, filter_tag_value, filter_has_and, n_actions,
-        |  n_expirations, exp_days, exp_date_ms) AS (
-        |  SELECT * FROM (VALUES
-        |  (1, 1, 'ok-1', 'warehouse/', NULL, NULL, NULL, FALSE, 1, 1,
-        |    30, NULL),
-        |  (2, 1, 'ok-1', 'warehouse/', NULL, NULL, NULL, FALSE, 1, 1,
-        |    30, NULL),
-        |  (2, 2, repeat('x', 256), 'warehouse/', NULL, NULL, NULL, FALSE,
-        |    1, 1, 30, NULL),
-        |  (3, 1, 'r3', 'warehouse/', NULL, NULL, NULL, FALSE, 0, 0,
-        |    NULL, NULL),
-        |  (4, 1, 'r4', 'warehouse/', NULL, NULL, NULL, FALSE, 2, 2,
-        |    30, NULL),
-        |  (5, 1, 'r5', 'warehouse/A', NULL, NULL, NULL, FALSE, 1, 1,
-        |    30, NULL),
-        |  (6, 1, 'r6', 'warehouse/', 'warehouse/A/', NULL, NULL, FALSE,
-        |    1, 1, 30, NULL),
-        |  (7, 1, 'r7', NULL, NULL, NULL, NULL, FALSE, 1, 1, 30, NULL),
-        |  (8, 1, 'r8', repeat('p', 1025), NULL, NULL, NULL, FALSE, 1, 1,
-        |    30, NULL),
-        |  (9, 1, 'r9', '.Trash/u1/', NULL, NULL, NULL, FALSE, 1, 1,
-        |    30, NULL),
-        |  (10, 1, 'r10', 'a//b/', NULL, NULL, NULL, FALSE, 1, 1,
-        |    30, NULL),
-        |  (11, 1, 'r11', NULL, 'warehouse/A/', 'env', 'prod', FALSE, 1, 1,
-        |    30, NULL),
-        |  (12, 1, 'r12', NULL, NULL, repeat('k', 129), 'v', FALSE, 1, 1,
-        |    30, NULL),
-        |  (13, 1, 'r13', 'warehouse/', NULL, NULL, NULL, FALSE, 1, 1,
-        |    0, NULL),
-        |  (14, 1, 'r14', 'warehouse/', NULL, NULL, NULL, FALSE, 1, 1,
-        |    30, 798681600000),
-        |  (15, 1, 'r15', 'warehouse/', NULL, NULL, NULL, FALSE, 1, 1,
-        |    NULL, NULL),
-        |  (16, 1, 'r16', 'warehouse/', NULL, NULL, NULL, FALSE, 1, 1,
-        |    NULL, 790045200000),
-        |  (17, 1, 'r17', 'warehouse/', NULL, NULL, NULL, FALSE, 1, 1,
-        |    NULL, 789177600000),
-        |  (18, 1, 'dup', 'warehouse/', NULL, NULL, NULL, FALSE, 1, 1,
-        |    30, NULL),
-        |  (18, 2, 'dup', 'warehouse/B/', NULL, NULL, NULL, FALSE, 1, 1,
-        |    30, NULL),
-        |  (21, 1, 'r21', 'warehouse/', NULL, NULL, NULL, FALSE, 1, 1,
-        |    30, NULL),
-        |  (22, 1, 'r22', 'warehouse/', NULL, NULL, NULL, FALSE, 1, 1,
-        |    30, NULL),
-        |  (23, 1, 'r23', 'warehouse/', NULL, NULL, NULL, FALSE, 1, 1,
-        |    30, NULL),
-        |  (24, 1, 'r24', 'warehouse/A/', NULL, NULL, NULL, FALSE, 1, 1,
-        |    NULL, 798681600000),
-        |  (25, 1, 'r25', 'warehouse/', NULL, NULL, NULL, FALSE, 0, 0,
-        |    NULL, NULL),
-        |  (26, 1, repeat('y', 256), 'warehouse/', NULL, NULL, NULL, FALSE,
-        |    0, 0, NULL, NULL),
-        |  (27, 1, 'r27', 'warehouse/', NULL, NULL, NULL, FALSE, 1, 1,
-        |    30, NULL),
-        |  (28, 1, 'dup', 'warehouse/', NULL, NULL, NULL, FALSE, 1, 1,
-        |    30, NULL),
-        |  (28, 2, 'dup', 'warehouse/', NULL, NULL, NULL, FALSE, 0, 0,
-        |    NULL, NULL),
-        |  (29, 1, 'r29', NULL, NULL, 'env', 'prod', TRUE, 1, 1, 30, NULL),
-        |  (30, 1, 'r30', NULL, NULL, 'env', 'prod', FALSE, 1, 1, 30, NULL),
-        |  (31, 1, 'r31', NULL, 'warehouse/B/', NULL, NULL, FALSE, 1, 1,
-        |    30, NULL),
-        |  (32, 1, 'r32', NULL, 'warehouse/B', NULL, NULL, FALSE, 1, 1,
-        |    30, NULL))
-        |  UNION ALL
-        |  SELECT 19, CAST(pos AS INTEGER), 'r' || pos, 'warehouse/', NULL,
-        |    NULL, NULL, FALSE, 1, 1, 30, NULL
-        |  FROM range(1, 1002) t(pos))""".stripMargin,
+      O.values("lc_reqs", T.lcSetRequestRows),
+      O.values("lc_rules", T.lcRuleEntryRows),
       """lcerr AS (
         |  SELECT r.req_id, r.rule_pos, r.rule_id,
         |    CASE WHEN length(r.rule_id) > 255 THEN 'ID_TOO_LONG'
@@ -4758,12 +4427,7 @@ object SparkEntry {
         |    CASE WHEN cls = 1 THEN 'EC/rs-3-2-1024k' ELSE '' END
         |      AS requested_repl
         |  FROM mi_base)""".stripMargin,
-      """linkres(volume, bucket, rv0, rb0, status) AS (VALUES
-        |  ('vol1', 'link-a', 'vol0', 'bucket0', 'OK'),
-        |  ('vol2', 'link-b', 'vol0', 'bucket0', 'OK'),
-        |  ('vol3', 'link-broken', 'vol0', 'no-such-bucket', 'DANGLING'),
-        |  ('vol0', 'link-cycle1', 'vol0', 'link-cycle1', 'CYCLE'),
-        |  ('vol0', 'link-cycle2', 'vol0', 'link-cycle2', 'CYCLE'))""".stripMargin,
+      O.linkres,
       """staged AS (
         |  SELECT r.req_id, r.key, r.requested_repl,
         |    coalesce(l.rv0, r.volume) AS rv,
@@ -4918,49 +4582,11 @@ object SparkEntry {
         |  LEFT JOIN mc_agg a ON r.req_id = a.req_id)
         |ORDER BY req_id""".stripMargin,
       O.objects, O.buckets,
-      """mc_store(volume, bucket, key, upload_id) AS (VALUES
-        |  ('vol0', 'bucket0', 'mpu/a.bin', 'up-A'),
-        |  ('vol0', 'bucket0', 'mpu/b.bin', 'up-B'),
-        |  ('vol0', 'bucket0', 'mpu/c.bin', 'up-C'),
-        |  ('vol0', 'bucket0', 'dircol/d.bin', 'up-D'))""".stripMargin,
-      """mc_store_parts(upload_id, part_number, etag, size) AS (VALUES
-        |  ('up-A', 1, 'eA1', 5242880),
-        |  ('up-A', 2, 'eA2', 6291456),
-        |  ('up-A', 3, 'eA3', 1024),
-        |  ('up-C', 1, 'eC1', 1024),
-        |  ('up-C', 2, 'eC2', 6291456),
-        |  ('up-D', 1, 'eD1', 6291456))""".stripMargin,
-      """mc_reqs(req_id, volume, bucket, key, upload_id) AS (VALUES
-        |  (1, 'vol0', 'bucket0', 'mpu/a.bin', 'up-A'),
-        |  (2, 'vol0', 'bucket0', 'mpu/x.bin', 'up-X'),
-        |  (3, 'vol0', 'bucket0', 'mpu/a.bin', 'up-A'),
-        |  (4, 'vol0', 'bucket0', 'mpu/b.bin', 'up-B'),
-        |  (5, 'vol0', 'bucket0', 'mpu/a.bin', 'up-A'),
-        |  (6, 'vol0', 'bucket0', 'mpu/a.bin', 'up-A'),
-        |  (7, 'vol0', 'bucket0', 'mpu/a.bin', 'up-A'),
-        |  (8, 'vol0', 'bucket0', 'mpu/c.bin', 'up-C'),
-        |  (9, 'vol0', 'bucket0', 'dircol/d.bin', 'up-ghost'),
-        |  (10, 'vol0', 'no-such', 'mpu/a.bin', 'up-A'),
-        |  (11, 'vol0', 'bucket0', 'mpu/a.bin', 'up-A'),
-        |  (12, 'vol0', 'bucket0', 'mpu/c.bin', 'up-C'),
-        |  (13, 'vol0', 'bucket0', 'mpu/a.bin', 'up-A'),
-        |  (14, 'vol0', 'bucket0', 'mpu/c.bin', 'up-C'))""".stripMargin,
-      """mc_req_parts(req_id, pos, part_number, etag) AS (VALUES
-        |  (1, 1, 1, 'eA1'), (1, 2, 2, 'eA2'), (1, 3, 3, 'eA3'),
-        |  (2, 1, 1, 'eX1'),
-        |  (4, 1, 1, 'eB1'),
-        |  (5, 1, 1, 'eA1'), (5, 2, 3, 'eA3'), (5, 3, 2, 'eA2'),
-        |  (6, 1, 1, 'eA1'), (6, 2, 2, 'WRONG'), (6, 3, 3, 'eA3'),
-        |  (7, 1, 1, 'eA1'), (7, 2, 4, 'eA4'),
-        |  (8, 1, 1, 'eC1'), (8, 2, 2, 'eC2'),
-        |  (9, 1, 1, 'eD1'),
-        |  (10, 1, 1, 'eA1'),
-        |  (11, 1, 2, 'WRONG'), (11, 2, 1, 'eA1'),
-        |  (12, 1, 1, 'WRONG'), (12, 2, 2, 'eC2'),
-        |  (13, 1, 2, 'eA2'), (13, 2, 3, 'eA3'),
-        |  (14, 1, 2, 'eC2'))""".stripMargin,
-      """mc_dirs(volume, bucket, dir) AS (VALUES
-        |  ('vol0', 'bucket0', 'dircol/d.bin'))""".stripMargin,
+      O.values("mc_store", T.mpuCompleteStoreRows),
+      O.values("mc_store_parts", T.mpuCompleteStorePartRows),
+      O.values("mc_reqs", T.mpuCompleteRequestsCRows),
+      O.values("mc_req_parts", T.mpuCompleteReqPartRows),
+      O.values("mc_dirs", T.mpuCompleteDirRows),
       """mc_walk AS (
         |  SELECT p.req_id, p.pos, p.part_number, p.etag,
         |    lag(p.part_number) OVER (PARTITION BY p.req_id ORDER BY p.pos)
@@ -5005,7 +4631,7 @@ object SparkEntry {
         |      AND substr(r.volume, 1, 1) NOT IN ('.', '-')
         |      AND substr(r.volume, length(r.volume), 1) NOT IN ('.', '-'))
         |      THEN 'INVALID_VOLUME_NAME'
-        |    WHEN v.volume IS NOT NULL AND NOT r.force_f
+        |    WHEN v.volume IS NOT NULL AND NOT r.force_when_volume_exists
         |      THEN 'VOLUME_ALREADY_EXISTS'
         |    ELSE 'CREATED' END AS decision
         |FROM t_create_reqs r
@@ -5014,15 +4640,7 @@ object SparkEntry {
         |LEFT JOIN (SELECT DISTINCT volume FROM volumes) v USING (volume)
         |ORDER BY r.req_id""".stripMargin,
       O.objects, O.buckets, O.volumes,
-      """t_create_reqs(req_id, tenant_id, volume, force_f) AS (VALUES
-        |  (1, 'tenant-new', 'tenant-new', FALSE),
-        |  (2, 'bad$tenant', 'bad$tenant', FALSE),
-        |  (3, 'tenant0', 'tenant0', FALSE),
-        |  (4, 'tenant-v', 'vol1', FALSE),
-        |  (5, 'tenant-bad-vol', 'BAD..Vol', FALSE),
-        |  (6, 'tenant0', 'BAD..Vol', FALSE),
-        |  (7, 'bad$x', 'vol1', FALSE),
-        |  (8, 'tenant-f', 'vol1', TRUE))""".stripMargin),
+      O.values("t_create_reqs", T.tenantCreateRequestRows)),
 
     // DeleteTenant ladder — not-empty precedes existence (preExecute
     // order), so a missing tenant with live access ids is NOT_EMPTY.
@@ -5034,16 +4652,14 @@ object SparkEntry {
         |FROM t_delete_reqs r
         |LEFT JOIN (SELECT DISTINCT 'tenant' || substr(volume, 4, 10)
         |             AS tenant_id FROM volumes
-        |           UNION ALL SELECT 'tenant-empty') t USING (tenant_id)
-        |LEFT JOIN (SELECT DISTINCT 'tenant' || substr(volume, 4, 10)
-        |             AS tenant_id FROM objects
-        |           UNION ALL SELECT 'no-such-but-hasids') h
+        |           UNION ALL SELECT tenant_id FROM empty_tenant) t
+        |  USING (tenant_id)
+        |LEFT JOIN (SELECT DISTINCT tenant_id FROM t_access_cat) h
         |  USING (tenant_id)
         |ORDER BY r.req_id""".stripMargin,
-      O.objects, O.buckets, O.volumes,
-      """t_delete_reqs(req_id, tenant_id) AS (VALUES
-        |  (1, 'tenant0'), (2, 'no-such-tenant'),
-        |  (3, 'tenant-empty'), (4, 'no-such-but-hasids'))""".stripMargin),
+      O.objects, O.buckets, O.volumes, O.tenantAccessCat,
+      O.values("empty_tenant", T.emptyTenantRows),
+      O.values("t_delete_reqs", T.tenantDeleteRequestRows)),
 
     // RevokeUserAccessId ladder: id-exists → assigned-to-tenant → admin
     // guard → REVOKED.
@@ -5057,18 +4673,8 @@ object SparkEntry {
         |LEFT JOIN t_access_cat c USING (access_id)
         |ORDER BY r.req_id""".stripMargin,
       O.objects,
-      """t_access_cat AS (
-        |  SELECT 'tenant' || substr(volume, 4, 10) || '$' || owner
-        |      AS access_id,
-        |    'tenant' || substr(volume, 4, 10) AS tenant_id,
-        |    owner = 'clerk0' AS is_admin
-        |  FROM (SELECT DISTINCT volume, owner FROM objects)
-        |  UNION ALL
-        |  SELECT 'no-such-but-hasids$ghost', 'no-such-but-hasids', FALSE
-        |  UNION ALL SELECT 'orphan$ghost2', NULL, FALSE)""".stripMargin,
-      """t_revoke_reqs(req_id, access_id) AS (VALUES
-        |  (1, 'tenant0$clerk1'), (2, 'tenant0$clerk0'),
-        |  (3, 'nope$user'), (4, 'orphan$ghost2'))""".stripMargin),
+      O.tenantAccessCat,
+      O.values("t_revoke_reqs", T.tenantRevokeRequestRows)),
 
     // TenantAssignAdmin ladder mirror: inference via the access catalog,
     // then tenant existence, then membership.
@@ -5093,22 +4699,8 @@ object SparkEntry {
         |    ELSE r.tenant_id END
         |ORDER BY r.req_id""".stripMargin,
       O.objects,
-      """t_access_cat AS (
-        |  SELECT 'tenant' || substr(volume, 4, 10) || '$' || owner
-        |      AS access_id,
-        |    'tenant' || substr(volume, 4, 10) AS tenant_id,
-        |    owner = 'clerk0' AS is_admin
-        |  FROM (SELECT DISTINCT volume, owner FROM objects)
-        |  UNION ALL
-        |  SELECT 'no-such-but-hasids$ghost', 'no-such-but-hasids', FALSE
-        |  UNION ALL SELECT 'orphan$ghost2', NULL, FALSE)""".stripMargin,
-      """ta_reqs(req_id, tenant_id, access_id, delegated) AS (VALUES
-        |  (1, 'tenant1', 'tenant1$clerk1', TRUE),
-        |  (2, '', 'tenant2$clerk2', FALSE),
-        |  (3, '', 'ghost$nobody', FALSE),
-        |  (4, 'tenant1', 'tenant1$missing', TRUE),
-        |  (5, 'tenant2', 'tenant1$clerk1', FALSE),
-        |  (6, 'tenant3', 'tenant3$clerk3', FALSE))""".stripMargin),
+      O.tenantAccessCat,
+      O.values("ta_reqs", T.assignAdminRequestRows)),
 
     // TenantRevokeAdmin ladder mirror: assign's rungs, REVOKED is
     // idempotent, was_admin reports the pre-existing grant.
@@ -5136,23 +4728,8 @@ object SparkEntry {
         |      ELSE r.tenant_id END)
         |ORDER BY req_id""".stripMargin,
       O.objects,
-      """t_access_cat AS (
-        |  SELECT 'tenant' || substr(volume, 4, 10) || '$' || owner
-        |      AS access_id,
-        |    'tenant' || substr(volume, 4, 10) AS tenant_id,
-        |    owner = 'clerk0' AS is_admin
-        |  FROM (SELECT DISTINCT volume, owner FROM objects)
-        |  UNION ALL
-        |  SELECT 'no-such-but-hasids$ghost', 'no-such-but-hasids', FALSE
-        |  UNION ALL SELECT 'orphan$ghost2', NULL, FALSE)""".stripMargin,
-      """ra_reqs(req_id, tenant_id, access_id) AS (VALUES
-        |  (1, 'tenant0', 'tenant0$clerk0'),
-        |  (2, 'tenant1', 'tenant1$clerk1'),
-        |  (3, '', 'tenant2$clerk2'),
-        |  (4, '', 'ghost$nobody'),
-        |  (5, 'tenant1', 'tenant1$missing'),
-        |  (6, 'tenant2', 'tenant1$clerk1'),
-        |  (7, 'tenant9', 'tenant9$clerk9'))""".stripMargin),
+      O.tenantAccessCat,
+      O.values("ra_reqs", T.revokeAdminRequestRows)),
 
     // RevokeSecret ladder mirror: preExecute permission gate before the
     // store probe; remove-if-exists.
@@ -5163,27 +4740,16 @@ object SparkEntry {
         |    WHEN s.access_id IS NULL THEN 'S3_SECRET_NOT_FOUND'
         |    ELSE 'REVOKED' END AS decision
         |FROM rs_reqs r
-        |LEFT JOIN owner_cat c USING (access_id)
+        |LEFT JOIN t_access_cat c USING (access_id)
         |LEFT JOIN secret_store s ON r.access_id = s.access_id
         |ORDER BY r.req_id""".stripMargin,
       O.objects,
-      """owner_cat AS (
-        |  SELECT 'tenant' || substr(volume, 4, 10) || '$' || owner
-        |      AS access_id, owner AS user_principal
-        |  FROM (SELECT DISTINCT volume, owner FROM objects)
-        |  UNION ALL SELECT 'no-such-but-hasids$ghost', 'ghost'
-        |  UNION ALL SELECT 'orphan$ghost2', 'ghost2')""".stripMargin,
+      O.tenantAccessCat,
       """secret_store AS (
         |  SELECT 'tenant' || substr(volume, 4, 10) || '$' || owner
         |      AS access_id
         |  FROM (SELECT DISTINCT volume, owner FROM objects))""".stripMargin,
-      """rs_reqs(req_id, access_id, caller) AS (VALUES
-        |  (1, 'tenant1$clerk1', 'clerk1'),
-        |  (2, 'tenant1$clerk1', 'clerk2'),
-        |  (3, 'tenant2$clerk2', 'om-admin'),
-        |  (4, 'hdfs', 'hdfs'),
-        |  (5, 'hdfs', 'yarn'),
-        |  (6, 'ghost$nobody', 'om-admin'))""".stripMargin),
+      O.values("rs_reqs", T.revokeSecretRequestRows)),
 
     // SetSecret ladder mirror: accessId probe first, then secret rules.
     "q_set_secret" -> O.withCtes(
@@ -5201,19 +4767,8 @@ object SparkEntry {
         |  USING (access_id)
         |ORDER BY r.req_id""".stripMargin,
       O.objects,
-      """t_access_cat AS (
-        |  SELECT 'tenant' || substr(volume, 4, 10) || '$' || owner
-        |      AS access_id
-        |  FROM (SELECT DISTINCT volume, owner FROM objects)
-        |  UNION ALL SELECT 'no-such-but-hasids$ghost'
-        |  UNION ALL SELECT 'orphan$ghost2')""".stripMargin,
-      """ss_reqs(req_id, access_id, secret) AS (VALUES
-        |  (1, 'tenant1$clerk1', 'a-perfectly-long-secret'),
-        |  (2, 'ghost$nobody', 'another-long-secret'),
-        |  (3, 'tenant2$clerk2', ''),
-        |  (4, 'tenant3$clerk3', 'short'),
-        |  (5, 'ghost$nobody', 'short'),
-        |  (6, 'tenant2$clerk2', 'exactly8'))""".stripMargin),
+      O.tenantAccessCat,
+      O.values("ss_reqs", T.setSecretRequestRows)),
 
     // SetTimes ladder mirror.
     "q_set_times" -> O.withCtes(
@@ -5368,16 +4923,15 @@ object SparkEntry {
         |       WHEN v.owner = r.new_owner THEN 'OK_NOOP'
         |       WHEN coalesce(oc.owned, 0) >= 1 THEN 'TOO_MANY_VOLUMES'
         |       ELSE 'OWNER_CHANGED' END AS decision
-        |FROM (VALUES (1, 'vol0', 'admin0'), (2, 'vol0', 'fresh-user'),
-        |      (3, 'no-such-vol', 'fresh-user'), (4, 'vol1', 'admin2'),
-        |      (5, 'no-such-vol', 'admin0')) r(req_id, volume, new_owner)
+        |FROM vso_reqs r
         |LEFT JOIN (SELECT volume, 'admin' || substr(volume, 4, 10)
         |             AS owner FROM volumes) v USING (volume)
         |LEFT JOIN (SELECT 'admin' || substr(volume, 4, 10) AS new_owner,
         |             count(*) AS owned
         |           FROM volumes GROUP BY 1) oc USING (new_owner)
         |ORDER BY r.req_id""".stripMargin,
-      O.objects, O.buckets, O.volumes),
+      O.objects, O.buckets, O.volumes,
+      O.values("vso_reqs", T.volumeSetOwnerRequestRows)),
 
     // SetVolumeQuota ladder mirror.
     "q_volume_set_quota" -> O.withCtes(
@@ -5411,27 +4965,15 @@ object SparkEntry {
         |LEFT JOIN vq_probe p USING (volume)
         |ORDER BY r.req_id""".stripMargin,
       O.objects, O.buckets,
+      O.values("vq_synthetic", T.syntheticQuotaProbeRows),
       """vq_probe AS (
         |  SELECT volume, count(*) AS bucket_count,
         |    CAST(sum(CASE WHEN quota_bytes > -1 THEN quota_bytes
         |      ELSE 0 END) AS BIGINT) AS bucket_quota_sum,
         |    bool_or(quota_bytes = -1) AS has_unset_bucket
         |  FROM buckets GROUP BY 1
-        |  UNION ALL SELECT 'vol-bare', 0, 0, FALSE
-        |  UNION ALL SELECT 'vol-capped', 2, 800000000000, FALSE)""".stripMargin,
-      """vsq_reqs(req_id, volume, new_quota_bytes, new_quota_ns) AS (VALUES
-        |  (1, 'vol0', 500000000000, -2),
-        |  (2, 'vol0', -2, 5),
-        |  (3, 'vol0', -2, 100),
-        |  (4, 'vol0', -1, -2),
-        |  (5, 'vol0', 0, -2),
-        |  (6, 'no-such-vol', 10, 10),
-        |  (7, 'vol-bare', 500, -2),
-        |  (8, 'vol-bare', -2, 0),
-        |  (9, 'vol0', -5, -2),
-        |  (10, 'vol-capped', 500000000000, -2),
-        |  (11, 'vol-capped', 900000000000, -2),
-        |  (12, 'vol-capped', -2, 1))""".stripMargin),
+        |  UNION ALL SELECT * FROM vq_synthetic)""".stripMargin,
+      O.values("vsq_reqs", T.volumeSetQuotaRequestRows)),
 
     // DeleteVolume ladder: lookup → ref-count → emptiness → DELETED.
     "q_volume_delete" -> O.withCtes(
@@ -5440,15 +4982,16 @@ object SparkEntry {
         |       WHEN v.ref_count <> 0 THEN 'VOLUME_IS_REFERENCED'
         |       WHEN v.bucket_count > 0 THEN 'VOLUME_NOT_EMPTY'
         |       ELSE 'DELETED' END AS decision
-        |FROM (VALUES (1, 'vol0'), (2, 'vol3'), (3, 'no-such-vol'),
-        |      (4, 'vol-bare')) r(req_id, volume)
+        |FROM vd_reqs r
         |LEFT JOIN (
         |  SELECT volume, bucket_count,
         |    CASE WHEN volume = 'vol3' THEN 1 ELSE 0 END AS ref_count
         |  FROM volumes
-        |  UNION ALL SELECT 'vol-bare', 0, 0) v USING (volume)
+        |  UNION ALL SELECT * FROM bare_volume) v USING (volume)
         |ORDER BY r.req_id""".stripMargin,
-      O.objects, O.buckets, O.volumes),
+      O.objects, O.buckets, O.volumes,
+      O.values("vd_reqs", T.volumeDeleteRequestRows),
+      O.values("bare_volume", T.bareVolumeRefRows)),
 
     // DeleteBucket ladder: keys beat MPUs beat snapshots; link buckets
     // delete on their own (empty) key space.
@@ -5465,18 +5008,11 @@ object SparkEntry {
         |         WHEN m.volume IS NOT NULL THEN 'BUCKET_NOT_EMPTY'
         |         WHEN s.volume IS NOT NULL THEN 'CONTAINS_SNAPSHOT'
         |         ELSE 'DELETED' END AS decision
-        |  FROM (VALUES (1, 'vol0', 'bucket0'), (2, 'vol2', 'bucket5'),
-        |        (3, 'vol0', 'no-such'), (4, 'vol0', 'empty-b'),
-        |        (5, 'vol0', 'empty-mpu'), (6, 'vol0', 'empty-snap'),
-        |        (7, 'vol1', 'link-a'), (8, 'vol2', 'link-b'))
-        |    r(req_id, volume, bucket)
+        |  FROM bd_reqs r
         |  LEFT JOIN (
         |    SELECT volume, bucket FROM buckets
-        |    UNION ALL SELECT * FROM (VALUES ('vol1', 'link-a'),
-        |      ('vol2', 'link-b'), ('vol3', 'link-broken'),
-        |      ('vol0', 'link-cycle1'), ('vol0', 'link-cycle2'),
-        |      ('vol0', 'empty-b'), ('vol0', 'empty-mpu'),
-        |      ('vol0', 'empty-snap')) t(volume, bucket)) c
+        |    UNION ALL SELECT volume, bucket FROM bucket_links
+        |    UNION ALL SELECT * FROM empty_buckets) c
         |    ON r.volume = c.volume AND r.bucket = c.bucket
         |  LEFT JOIN (SELECT DISTINCT volume, bucket FROM objects) k
         |    ON r.volume = k.volume AND r.bucket = k.bucket
@@ -5484,14 +5020,19 @@ object SparkEntry {
         |    SELECT DISTINCT 'vol' || (order_key % 4) AS volume,
         |      'bucket' || (order_key % 10) AS bucket
         |    FROM multipart_parts
-        |    UNION ALL SELECT 'vol0', 'empty-mpu') m
+        |    UNION ALL SELECT * FROM mpu_blocked) m
         |    ON r.volume = m.volume AND r.bucket = m.bucket
-        |  LEFT JOIN (SELECT * FROM (VALUES ('vol0', 'bucket0'),
-        |      ('vol2', 'bucket5'), ('vol0', 'empty-snap'))
-        |      t(volume, bucket)) s
+        |  LEFT JOIN (SELECT DISTINCT volume, bucket FROM snap_cat
+        |    UNION ALL SELECT * FROM snap_blocked) s
         |    ON r.volume = s.volume AND r.bucket = s.bucket)
         |ORDER BY req_id""".stripMargin,
-      O.objects, O.buckets, O.multipartParts),
+      O.objects, O.buckets, O.multipartParts,
+      O.values("bd_reqs", T.bucketDeleteRequestRows),
+      O.values("bucket_links", T.bucketLinkRows),
+      O.values("empty_buckets", T.emptyBucketRows),
+      O.values("mpu_blocked", T.mpuBlockedBucketRows),
+      O.values("snap_cat", T.snapshotCatalogRows),
+      O.values("snap_blocked", T.snapshotBlockedBucketRows)),
 
     // ClusterStateEndpoint one-row summary via scalar subqueries.
     "q_cluster_state" -> O.withCtes(
@@ -5600,14 +5141,7 @@ object SparkEntry {
         |LEFT JOIN mk_flags f USING (req_id)
         |ORDER BY r.req_id""".stripMargin,
       O.objects, O.buckets,
-      """fso_dirs AS (
-        |  SELECT DISTINCT volume, bucket,
-        |    array_to_string(ws[1:d], '/') AS path
-        |  FROM (
-        |    SELECT volume, bucket, string_split(key, '/') AS ws,
-        |      unnest(generate_series(1,
-        |        len(string_split(key, '/')) - 1)) AS d
-        |    FROM objects))""".stripMargin,
+      O.fsoDirs,
       """mkdir_reqs AS (
         |  SELECT req_id, volume,
         |    CASE WHEN probe % 13 = 3 THEN 'no-such-bucket'
@@ -5684,14 +5218,7 @@ object SparkEntry {
         |  LEFT JOIN cf_flags f USING (req_id))
         |ORDER BY req_id""".stripMargin,
       O.objects, O.buckets,
-      """fso_dirs AS (
-        |  SELECT DISTINCT volume, bucket,
-        |    array_to_string(ws[1:d], '/') AS path
-        |  FROM (
-        |    SELECT volume, bucket, string_split(key, '/') AS ws,
-        |      unnest(generate_series(1,
-        |        len(string_split(key, '/')) - 1)) AS d
-        |    FROM objects))""".stripMargin,
+      O.fsoDirs,
       """cf_reqs AS (
         |  SELECT req_id, volume,
         |    CASE WHEN probe % 13 = 3 THEN 'no-such-bucket'
@@ -5788,14 +5315,7 @@ object SparkEntry {
       """rn_files AS (
         |  SELECT volume, bucket, key, max(version) AS maxv
         |  FROM objects GROUP BY 1, 2, 3)""".stripMargin,
-      """fso_dirs AS (
-        |  SELECT DISTINCT volume, bucket,
-        |    array_to_string(ws[1:d], '/') AS path
-        |  FROM (
-        |    SELECT volume, bucket, string_split(key, '/') AS ws,
-        |      unnest(generate_series(1,
-        |        len(string_split(key, '/')) - 1)) AS d
-        |    FROM objects))""".stripMargin,
+      O.fsoDirs,
       """rename_fso_reqs AS (
         |  SELECT req_id, volume,
         |    CASE WHEN probe % 13 = 3 THEN 'no-such-bucket'
@@ -5926,14 +5446,7 @@ object SparkEntry {
         |        ELSE n_reclaimable_files END AS base_demand
         |    FROM pdd))
         |ORDER BY dir_id""".stripMargin,
-      """pdd(dir_id, n_subdirs, n_subfiles, n_reclaimable_files,
-        |  purge_dir) AS (VALUES
-        |  (1, 2, 3, 2, true),
-        |  (2, 0, 0, 0, false),
-        |  (3, 1, 5, 2, false),
-        |  (4, 3, 4, 4, true),
-        |  (5, 0, 1, 1, true),
-        |  (6, 2, 0, 0, false))""".stripMargin),
+      O.values("pdd", T.pendingDeletedDirRows)),
 
     // Cleanup mirror: purged-table phase UNION the capped running-sum
     // job walk.
@@ -5953,18 +5466,7 @@ object SparkEntry {
         |  CAST(report_entries AS BIGINT)
         |FROM sdc_jobs WHERE in_purged_table
         |ORDER BY job_key""".stripMargin,
-      """sdc_jobs(job_key, status, age_ms, in_purged_table,
-        |  report_entries) AS (VALUES
-        |  ('j01', 'DONE', 800000000, false, 120),
-        |  ('j02', 'FAILED', 1000, false, 30),
-        |  ('j03', 'DONE', 5000, false, 500),
-        |  ('j04', 'IN_PROGRESS', 700000000, false, 0),
-        |  ('j05', 'REJECTED', 2000, false, 0),
-        |  ('j06', 'CANCELLED', 1000, false, 10),
-        |  ('j07', 'QUEUED', 3000, false, 0),
-        |  ('j08', 'DONE', 900000000, false, 60),
-        |  ('j20', 'DONE', 950000000, true, 200),
-        |  ('j21', 'FAILED', 10000, true, 40))""".stripMargin,
+      O.values("sdc_jobs", T.snapdiffCleanupJobRows),
       """sdc_act AS (
         |  SELECT *,
         |    (age_ms > 604800000
@@ -5982,14 +5484,17 @@ object SparkEntry {
     "q_snapshot_delete_walk" -> O.withCtes(
       """SELECT global_seq, snap, action,
         |  CAST(CASE WHEN action = 'MOVED'
-        |    THEN least(nk, budget_before) ELSE 0 END AS BIGINT)
+        |    THEN least(n_deleted_keys, budget_before) ELSE 0 END AS BIGINT)
         |    AS keys_moved,
         |  CAST(CASE WHEN action = 'MOVED'
-        |    THEN least(nd, budget_before - least(nk, budget_before))
+        |    THEN least(n_deleted_dirs,
+        |      budget_before - least(n_deleted_keys, budget_before))
         |    ELSE 0 END AS BIGINT) AS dirs_moved,
         |  CAST(CASE WHEN action = 'MOVED'
-        |    THEN least(nr, budget_before - least(nk, budget_before)
-        |      - least(nd, budget_before - least(nk, budget_before)))
+        |    THEN least(n_renames,
+        |      budget_before - least(n_deleted_keys, budget_before)
+        |      - least(n_deleted_dirs,
+        |        budget_before - least(n_deleted_keys, budget_before)))
         |    ELSE 0 END AS BIGINT) AS renames_moved,
         |  CASE WHEN action = 'MOVED' THEN coalesce(next_snap, 'AOS')
         |    ELSE '' END AS dest,
@@ -6028,21 +5533,11 @@ object SparkEntry {
         |            ORDER BY path_seq) AS next_snap,
         |          lead(status) OVER (PARTITION BY path_id
         |            ORDER BY path_seq) AS next_status,
-        |          nk + nd + nr AS total_entries
+        |          n_deleted_keys + n_deleted_dirs + n_renames
+        |            AS total_entries
         |        FROM sdel_chain))))
         |ORDER BY global_seq""".stripMargin,
-      """sdel_chain(global_seq, snap, path_id, path_seq, status,
-        |  flushed, nk, nd, nr) AS (VALUES
-        |  (10, 's10', 'p2', 4, 'SNAPSHOT_ACTIVE', true, 0, 0, 0),
-        |  (9, 's9', 'p1', 4, 'SNAPSHOT_ACTIVE', true, 0, 0, 0),
-        |  (8, 's8', 'p1', 3, 'SNAPSHOT_DELETED', false, 2, 0, 0),
-        |  (7, 's7', 'p2', 3, 'SNAPSHOT_DELETED', true, 3, 2, 1),
-        |  (6, 's6', 'p4', 1, 'SNAPSHOT_DELETED', true, 0, 0, 0),
-        |  (5, 's5', 'p1', 2, 'SNAPSHOT_DELETED', true, 4, 0, 0),
-        |  (4, 's4', 'p2', 2, 'SNAPSHOT_DELETED', true, 2, 0, 0),
-        |  (3, 's3', 'p3', 1, 'SNAPSHOT_DELETED', true, 10, 5, 3),
-        |  (2, 's2', 'p2', 1, 'SNAPSHOT_DELETED', true, 1, 0, 0),
-        |  (1, 's1', 'p1', 1, 'SNAPSHOT_DELETED', true, 1, 0, 0))""".stripMargin),
+      O.values("sdel_chain", T.snapDeleteChainRows)),
 
     // Defrag-service mirror: path-lag + running-budget windows over the
     // literal chain, crossed into the two-run (native on/off) dim.
@@ -6061,14 +5556,7 @@ object SparkEntry {
         |      THEN version - 1
         |    ELSE -1 END AS BIGINT) AS cleanup_below
         |FROM dfg_act ORDER BY run_id, global_idx""".stripMargin,
-      """dfg_chain(global_idx, name, volume, bucket, needs_defrag,
-        |  version) AS (VALUES
-        |  (1, 'd1', 'vol0', 'bucket0', true, 0),
-        |  (2, 'd2', 'vol0', 'bucket0', false, 2),
-        |  (3, 'd3', 'vol2', 'bucket5', false, 0),
-        |  (4, 'd4', 'vol0', 'bucket0', true, 1),
-        |  (5, 'd5', 'vol2', 'bucket5', true, 0),
-        |  (6, 'd6', 'vol1', 'bucket3', false, 0))""".stripMargin,
+      O.values("dfg_chain", T.defragChainRows),
       """dfg_base AS (
         |  SELECT *,
         |    lag(name) OVER (PARTITION BY volume, bucket
@@ -6161,17 +5649,7 @@ object SparkEntry {
       """from_n AS (
         |  SELECT CAST(count(*) AS BIGINT) AS from_n FROM dest_live
         |)""".stripMargin,
-      """sds_jobs(job_id, req_force_full, req_disable_native,
-        |  cfg_force_full, cfg_disable_native, native_loaded, dag_ok)
-        |AS (VALUES
-        |  (1, false, false, false, false, true, true),
-        |  (2, true, false, false, false, true, true),
-        |  (3, false, false, true, false, true, true),
-        |  (4, false, false, false, false, false, true),
-        |  (5, false, true, false, false, true, true),
-        |  (6, false, false, false, false, true, false),
-        |  (7, false, false, false, true, true, false),
-        |  (8, true, false, false, false, false, true))""".stripMargin),
+      O.values("sds_jobs", T.snapdiffSourceJobRows)),
 
     // FSO resolve must round-trip to the original flat keys — the oracle is
     // simply the objects table re-read as (volume, bucket, path, size).
@@ -6197,13 +5675,7 @@ object SparkEntry {
         |WHERE e.path IS NULL
         |ORDER BY c.volume, c.bucket, c.path""".stripMargin,
       O.objects,
-      """reqs(volume, bucket, key) AS (VALUES
-        |  ('vol0', 'bucket0', 'warehouse/A/newdir/sub/file.dat'),
-        |  ('vol0', 'bucket0', 'warehouse/NEWTOP/x/y/file.dat'),
-        |  ('vol0', 'bucket0', 'warehouse/NEWTOP/x/z/file.dat'),
-        |  ('vol0', 'bucket0', 'warehouse/A/file2.dat'),
-        |  ('vol0', 'bucket0', 'rootfile.dat'),
-        |  ('vol1', 'bucket3', 'warehouse/N/fresh/leaf.dat'))""".stripMargin,
+      O.values("reqs", T.mkdirRequestRows),
       """cand AS (
         |  SELECT DISTINCT volume, bucket,
         |    array_to_string(list_slice(string_split(key, '/'), 1, d), '/') AS path
@@ -6234,28 +5706,7 @@ object SparkEntry {
         |    CASE WHEN volume = 'vol3' THEN bucket_count + 2
         |         ELSE -1 END AS quota_namespace
         |  FROM volumes)""".stripMargin,
-      """reqs(req_id, volume, bucket, has_source_volume, has_source_bucket,
-        |     has_encryption, quota_bytes) AS (VALUES
-        |  (1, 'vol0', 'newb-a', FALSE, FALSE, FALSE, 5000000),
-        |  (2, 'vol0', 'newb-a', FALSE, FALSE, FALSE, 5000000),
-        |  (3, 'vol0', 'bucket3', FALSE, FALSE, FALSE, 5000000),
-        |  (4, 'vol9', 'newb-b', FALSE, FALSE, FALSE, 5000000),
-        |  (5, 'vol1', 'newb-c', TRUE, FALSE, FALSE, 0),
-        |  (6, 'vol1', 'newb-d', TRUE, TRUE, TRUE, 0),
-        |  (7, 'vol1', 'newb-e', TRUE, TRUE, FALSE, 0),
-        |  (8, 'vol1', 'newb-f', FALSE, FALSE, FALSE, 0),
-        |  (9, 'vol2', 'newb-g', FALSE, FALSE, FALSE, 999000000000),
-        |  (10, 'vol2', 'newb-h', FALSE, FALSE, FALSE, 990000000000),
-        |  (11, 'vol3', 'newb-i', FALSE, FALSE, FALSE, 1000000),
-        |  (12, 'vol3', 'newb-j', FALSE, FALSE, FALSE, 1000000),
-        |  (13, 'vol3', 'newb-k', FALSE, FALSE, FALSE, 1000000),
-        |  (14, 'vol9', 'bucket3', FALSE, FALSE, FALSE, 5000000),
-        |  (15, 'vol9', 'newb-l', FALSE, TRUE, FALSE, 0),
-        |  (16, 'vol0', 'Newb-Bad', FALSE, FALSE, FALSE, 5000000),
-        |  (17, 'vol0', 'ab', FALSE, FALSE, FALSE, 5000000),
-        |  (18, 'vol0', 'bad..name', FALSE, FALSE, FALSE, 5000000),
-        |  (19, 'vol0', '192.168.1.1', FALSE, FALSE, FALSE, 5000000),
-        |  (20, 'vol9', '-badstart', FALSE, FALSE, FALSE, 5000000))""".stripMargin,
+      O.values("reqs", T.bucketCreateRequestRows),
       """tot AS (SELECT count(*) AS total_buckets FROM buckets)""",
       """qsum AS (
         |  SELECT volume, CAST(sum(CASE WHEN quota_bytes > -1
@@ -6557,34 +6008,20 @@ object SparkEntry {
         |          THEN 'INVALID_VOLUME_NAME'
         |        WHEN v.volume IS NOT NULL THEN 'VOLUME_ALREADY_EXISTS'
         |        END AS e1
-        |      FROM (VALUES
-        |        (1, 'newvol-a', 'admin0'), (2, 'newvol-a', 'admin5'),
-        |        (3, 'vol2', 'admin0'), (4, 'Bad_Vol', 'admin1'),
-        |        (5, 'newvol_b', 'admin1'), (6, 'newvol-c', 'admin1'),
-        |        (7, 'ab', 'admin2'), (8, '10.0.0.1', 'admin2'),
-        |        (9, 'newvol-d', 'ghostuser'), (10, 'newvol-e', 'admin3'),
-        |        (11, 'newvol-f', 'admin3'))
-        |        r(req_id, volume, owner)
+        |      FROM vc_reqs r
         |      LEFT JOIN volumes v ON r.volume = v.volume
         |      LEFT JOIN (SELECT owner, count(*) AS owned FROM volumes
         |                 GROUP BY 1) c ON r.owner = c.owner)))
         |ORDER BY req_id""".stripMargin,
-      O.objects, O.buckets, O.volumes),
+      O.objects, O.buckets, O.volumes,
+      O.values("vc_reqs", T.volumeCreateRequestRows)),
 
     // CreateSnapshot ladder: hardcoded link-resolution table (the static
     // link fixture), snapshot chain s1/s2 on the commit-log bucket
     "q_snapshot_create" -> O.withCtes(
-      """SELECT s.req_id, s.snapshot_name, s.rv AS resolved_volume,
+      s"""SELECT s.req_id, s.snapshot_name, s.rv AS resolved_volume,
         |  s.rb AS resolved_bucket,
-        |  CASE WHEN NOT (length(s.snapshot_name) BETWEEN 3 AND 63
-        |      AND regexp_matches(s.snapshot_name, '^[a-z0-9.-]+$')
-        |      AND instr(s.snapshot_name, '..') = 0
-        |      AND instr(s.snapshot_name, '-.') = 0
-        |      AND instr(s.snapshot_name, '.-') = 0
-        |      AND NOT regexp_matches(s.snapshot_name, '^[0-9.]+$')
-        |      AND substr(s.snapshot_name, 1, 1) NOT IN ('.', '-')
-        |      AND substr(s.snapshot_name, length(s.snapshot_name), 1)
-        |        NOT IN ('.', '-'))
+        |  CASE WHEN ${O.invalidSnapshotName("s.snapshot_name")}
         |      THEN 'INVALID_SNAPSHOT_NAME'
         |    WHEN s.status = 'CYCLE' THEN 'LINK_LOOP'
         |    WHEN s.status = 'DANGLING' OR b.volume IS NULL
@@ -6600,28 +6037,9 @@ object SparkEntry {
         |  AND s.snapshot_name = sn.name
         |ORDER BY s.req_id""".stripMargin,
       O.objects, O.buckets, O.volumes,
-      """linkres(volume, bucket, rv0, rb0, status) AS (VALUES
-        |  ('vol1', 'link-a', 'vol0', 'bucket0', 'OK'),
-        |  ('vol2', 'link-b', 'vol0', 'bucket0', 'OK'),
-        |  ('vol3', 'link-broken', 'vol0', 'no-such-bucket', 'DANGLING'),
-        |  ('vol0', 'link-cycle1', 'vol0', 'link-cycle1', 'CYCLE'),
-        |  ('vol0', 'link-cycle2', 'vol0', 'link-cycle2', 'CYCLE'))""".stripMargin,
-      """snaps(volume, bucket, name) AS (VALUES
-        |  ('vol0', 'bucket0', 's1'), ('vol0', 'bucket0', 's2'),
-        |  ('vol2', 'bucket5', 'snap-golden'))""".stripMargin,
-      """reqs(req_id, volume, bucket, snapshot_name, principal) AS (VALUES
-        |  (1, 'vol0', 'bucket0', 'snap-new', 'admin0'),
-        |  (2, 'vol0', 'bucket0', 's1', 'admin0'),
-        |  (3, 'vol1', 'link-a', 'snap-via-link', 'admin0'),
-        |  (4, 'vol1', 'link-a', 's2', 'admin0'),
-        |  (5, 'vol3', 'link-broken', 'x-snap', 'admin0'),
-        |  (6, 'vol0', 'link-cycle1', 'y-snap', 'admin0'),
-        |  (7, 'vol0', 'bucket0', 'Bad..Name', 'admin0'),
-        |  (8, 'vol0', 'bucket0', 'snap-two', 'clerk1'),
-        |  (9, 'vol2', 'bucket5', 'snap-three', 'admin2'),
-        |  (10, 'vol2', 'nobucket', 'snap-four', 'admin2'),
-        |  (11, 'vol0', 'bucket0', 'snap-five', 'om-admin'),
-        |  (12, 'vol2', 'bucket5', 'snap-golden', 'admin2'))""".stripMargin,
+      O.linkres,
+      O.values("snaps", T.snapshotCatalogRows),
+      O.values("reqs", T.snapshotCreateRequestRows),
       """staged AS (
         |  SELECT r.req_id, r.snapshot_name, r.principal,
         |    coalesce(l.rv0, r.volume) AS rv,
@@ -6648,23 +6066,10 @@ object SparkEntry {
         |LEFT JOIN lc_cfgs c ON s.rv = c.volume AND s.rb = c.bucket
         |ORDER BY s.req_id""".stripMargin,
       O.objects, O.buckets, O.volumes,
-      """linkres(volume, bucket, rv0, rb0, status) AS (VALUES
-        |  ('vol1', 'link-a', 'vol0', 'bucket0', 'OK'),
-        |  ('vol2', 'link-b', 'vol0', 'bucket0', 'OK'),
-        |  ('vol3', 'link-broken', 'vol0', 'no-such-bucket', 'DANGLING'),
-        |  ('vol0', 'link-cycle1', 'vol0', 'link-cycle1', 'CYCLE'),
-        |  ('vol0', 'link-cycle2', 'vol0', 'link-cycle2', 'CYCLE'))""".stripMargin,
+      O.linkres,
       """lc_cfgs(volume, bucket) AS (VALUES
         |  ('vol0', 'bucket0'), ('vol0', 'bucket1'))""".stripMargin,
-      """reqs(req_id, volume, bucket, principal) AS (VALUES
-        |  (1, 'vol0', 'bucket0', 'admin0'),
-        |  (2, 'vol0', 'bucket2', 'admin0'),
-        |  (3, 'vol1', 'link-a', 'admin0'),
-        |  (4, 'vol0', 'bucket1', 'clerk1'),
-        |  (5, 'vol0', 'no-such', 'admin0'),
-        |  (6, 'vol0', 'link-cycle1', 'admin0'),
-        |  (7, 'vol3', 'link-broken', 'admin0'),
-        |  (8, 'vol0', 'bucket1', 'om-admin'))""".stripMargin,
+      O.values("reqs", T.lcDeleteRequestRows),
       """staged AS (
         |  SELECT r.req_id, r.principal,
         |    coalesce(l.rv0, r.volume) AS rv,
@@ -6675,17 +6080,9 @@ object SparkEntry {
     // RenameSnapshot ladder: NEW-name-only validation, link resolution,
     // collision-before-old-lookup (deleted entries occupy names)
     "q_snapshot_rename" -> O.withCtes(
-      """SELECT s.req_id, s.old_name, s.new_name,
+      s"""SELECT s.req_id, s.old_name, s.new_name,
         |  s.rv AS resolved_volume, s.rb AS resolved_bucket,
-        |  CASE WHEN NOT (length(s.new_name) BETWEEN 3 AND 63
-        |      AND regexp_matches(s.new_name, '^[a-z0-9.-]+$')
-        |      AND instr(s.new_name, '..') = 0
-        |      AND instr(s.new_name, '-.') = 0
-        |      AND instr(s.new_name, '.-') = 0
-        |      AND NOT regexp_matches(s.new_name, '^[0-9.]+$')
-        |      AND substr(s.new_name, 1, 1) NOT IN ('.', '-')
-        |      AND substr(s.new_name, length(s.new_name), 1)
-        |        NOT IN ('.', '-'))
+        |  CASE WHEN ${O.invalidSnapshotName("s.new_name")}
         |      THEN 'INVALID_SNAPSHOT_NAME'
         |    WHEN s.status = 'CYCLE' THEN 'LINK_LOOP'
         |    WHEN s.status = 'DANGLING' OR b.volume IS NULL
@@ -6705,32 +6102,9 @@ object SparkEntry {
         |  AND s.old_name = so.name
         |ORDER BY s.req_id""".stripMargin,
       O.objects, O.buckets, O.volumes,
-      """linkres(volume, bucket, rv0, rb0, status) AS (VALUES
-        |  ('vol1', 'link-a', 'vol0', 'bucket0', 'OK'),
-        |  ('vol2', 'link-b', 'vol0', 'bucket0', 'OK'),
-        |  ('vol3', 'link-broken', 'vol0', 'no-such-bucket', 'DANGLING'),
-        |  ('vol0', 'link-cycle1', 'vol0', 'link-cycle1', 'CYCLE'),
-        |  ('vol0', 'link-cycle2', 'vol0', 'link-cycle2', 'CYCLE'))""".stripMargin,
-      """snapsext(volume, bucket, name, status) AS (VALUES
-        |  ('vol0', 'bucket0', 's1', 'SNAPSHOT_ACTIVE'),
-        |  ('vol0', 'bucket0', 's2', 'SNAPSHOT_ACTIVE'),
-        |  ('vol2', 'bucket5', 'snap-golden', 'SNAPSHOT_ACTIVE'),
-        |  ('vol0', 'bucket0', 'snap-gone', 'SNAPSHOT_DELETED'))""".stripMargin,
-      """reqs(req_id, volume, bucket, old_name, new_name, principal) AS
-        |  (VALUES
-        |  (1, 'vol0', 'bucket0', 's1', 's1-renamed', 'admin0'),
-        |  (2, 'vol0', 'bucket0', 's1', 'Bad..Name', 'admin0'),
-        |  (3, 'vol1', 'link-a', 's2', 's2-new', 'admin0'),
-        |  (4, 'vol0', 'bucket0', 's1', 'snap-gone', 'admin0'),
-        |  (5, 'vol0', 'bucket0', 'nope', 'fresh-name', 'admin0'),
-        |  (6, 'vol0', 'bucket0', 'snap-gone', 'revived', 'admin0'),
-        |  (7, 'vol0', 'bucket0', 's1', 's1-x', 'clerk1'),
-        |  (8, 'vol2', 'bucket5', 'snap-golden', 'snap-aurum', 'om-admin'),
-        |  (9, 'vol3', 'link-broken', 's1', 's1-y', 'admin0'),
-        |  (10, 'vol0', 'link-cycle1', 's1', 's1-z', 'admin0'),
-        |  (11, 'vol2', 'nobucket', 's1', 's1-w', 'admin2'),
-        |  (12, 'vol2', 'bucket5', 'snap-golden', 'snap-golden', 'admin2'),
-        |  (13, 'vol2', 'bucket5', 'ghost', 'snap-golden', 'admin2'))""".stripMargin,
+      O.linkres,
+      O.snapshotCatalog("snapsext", live = false),
+      O.values("reqs", T.snapshotRenameRequestRows),
       """staged AS (
         |  SELECT r.req_id, r.old_name, r.new_name, r.principal,
         |    coalesce(l.rv0, r.volume) AS rv,
@@ -6742,17 +6116,9 @@ object SparkEntry {
     // chain names refuse), link resolution, owner/admin gate, non-active
     // refused FILE_NOT_FOUND with a split reason.
     "q_snapshot_delete" -> O.withCtes(
-      """SELECT s.req_id, s.snapshot_name,
+      s"""SELECT s.req_id, s.snapshot_name,
         |  s.rv AS resolved_volume, s.rb AS resolved_bucket,
-        |  CASE WHEN NOT (length(s.snapshot_name) BETWEEN 3 AND 63
-        |      AND regexp_matches(s.snapshot_name, '^[a-z0-9.-]+$')
-        |      AND instr(s.snapshot_name, '..') = 0
-        |      AND instr(s.snapshot_name, '-.') = 0
-        |      AND instr(s.snapshot_name, '.-') = 0
-        |      AND NOT regexp_matches(s.snapshot_name, '^[0-9.]+$')
-        |      AND substr(s.snapshot_name, 1, 1) NOT IN ('.', '-')
-        |      AND substr(s.snapshot_name, length(s.snapshot_name), 1)
-        |        NOT IN ('.', '-'))
+        |  CASE WHEN ${O.invalidSnapshotName("s.snapshot_name")}
         |      THEN 'INVALID_SNAPSHOT_NAME'
         |    WHEN s.status = 'CYCLE' THEN 'LINK_LOOP'
         |    WHEN s.status = 'DANGLING' OR b.volume IS NULL
@@ -6762,15 +6128,7 @@ object SparkEntry {
         |    WHEN sn.name IS NULL THEN 'FILE_NOT_FOUND'
         |    WHEN sn.status <> 'SNAPSHOT_ACTIVE' THEN 'FILE_NOT_FOUND'
         |    ELSE 'DELETED' END AS decision,
-        |  CASE WHEN NOT (length(s.snapshot_name) BETWEEN 3 AND 63
-        |      AND regexp_matches(s.snapshot_name, '^[a-z0-9.-]+$')
-        |      AND instr(s.snapshot_name, '..') = 0
-        |      AND instr(s.snapshot_name, '-.') = 0
-        |      AND instr(s.snapshot_name, '.-') = 0
-        |      AND NOT regexp_matches(s.snapshot_name, '^[0-9.]+$')
-        |      AND substr(s.snapshot_name, 1, 1) NOT IN ('.', '-')
-        |      AND substr(s.snapshot_name, length(s.snapshot_name), 1)
-        |        NOT IN ('.', '-'))
+        |  CASE WHEN ${O.invalidSnapshotName("s.snapshot_name")}
         |      THEN ''
         |    WHEN s.status = 'CYCLE' OR s.status = 'DANGLING'
         |      OR b.volume IS NULL THEN ''
@@ -6787,31 +6145,9 @@ object SparkEntry {
         |  AND s.snapshot_name = sn.name
         |ORDER BY s.req_id""".stripMargin,
       O.objects, O.buckets, O.volumes,
-      """linkres(volume, bucket, rv0, rb0, status) AS (VALUES
-        |  ('vol1', 'link-a', 'vol0', 'bucket0', 'OK'),
-        |  ('vol2', 'link-b', 'vol0', 'bucket0', 'OK'),
-        |  ('vol3', 'link-broken', 'vol0', 'no-such-bucket', 'DANGLING'),
-        |  ('vol0', 'link-cycle1', 'vol0', 'link-cycle1', 'CYCLE'),
-        |  ('vol0', 'link-cycle2', 'vol0', 'link-cycle2', 'CYCLE'))""".stripMargin,
-      """snapsliv(volume, bucket, name, status) AS (VALUES
-        |  ('vol0', 'bucket0', 's1', 'SNAPSHOT_ACTIVE'),
-        |  ('vol0', 'bucket0', 's2', 'SNAPSHOT_ACTIVE'),
-        |  ('vol2', 'bucket5', 'snap-golden', 'SNAPSHOT_ACTIVE'),
-        |  ('vol0', 'bucket0', 'snap-gone', 'SNAPSHOT_DELETED'),
-        |  ('vol0', 'bucket0', 'snap-live', 'SNAPSHOT_ACTIVE'))""".stripMargin,
-      """sd_reqs(req_id, volume, bucket, snapshot_name, principal) AS
-        |  (VALUES
-        |  (1, 'vol2', 'bucket5', 'snap-golden', 'admin2'),
-        |  (2, 'vol0', 'bucket0', 's1', 'admin0'),
-        |  (3, 'vol0', 'bucket0', 'snap-gone', 'admin0'),
-        |  (4, 'vol0', 'bucket0', 'snap-nope', 'admin0'),
-        |  (5, 'vol1', 'link-a', 'snap-live', 'admin0'),
-        |  (6, 'vol3', 'link-broken', 'snap-live', 'admin0'),
-        |  (7, 'vol0', 'link-cycle1', 'snap-live', 'admin0'),
-        |  (8, 'vol0', 'bucket0', 'snap-live', 'clerk1'),
-        |  (9, 'vol2', 'nobucket', 'snap-live', 'admin2'),
-        |  (10, 'vol0', 'bucket0', 'Bad..Name', 'admin0'),
-        |  (11, 'vol0', 'bucket0', 'snap-live', 'om-admin'))""".stripMargin,
+      O.linkres,
+      O.snapshotCatalog("snapsliv", live = true),
+      O.values("sd_reqs", T.snapshotDeleteRequestRows),
       """staged AS (
         |  SELECT r.req_id, r.snapshot_name, r.principal,
         |    coalesce(l.rv0, r.volume) AS rv,
@@ -6830,12 +6166,7 @@ object SparkEntry {
         |LEFT JOIN volumes v ON r.volume = v.volume
         |ORDER BY r.req_id""".stripMargin,
       O.objects, O.buckets, O.volumes,
-      """bso_reqs(req_id, volume, bucket, new_owner) AS (VALUES
-        |  (1, 'vol0', 'bucket0', 'clerk9'),
-        |  (2, 'vol0', 'bucket0', 'admin0'),
-        |  (3, 'vol0', 'no-such', 'clerk1'),
-        |  (4, 'vol2', 'bucket5', 'admin2'),
-        |  (5, 'vol1', 'bucket3', 'bob'))""".stripMargin),
+      O.values("bso_reqs", T.bucketSetOwnerRequestRows)),
 
     // SnapshotPurge relink mirror: survivor windows over both chains.
     "q_snapshot_purge" -> O.withCtes(
@@ -6853,12 +6184,7 @@ object SparkEntry {
         |  SELECT name, volume, bucket, global_idx, 'PURGED', '', ''
         |  FROM sp_chain WHERE name IN ('s2', 'snap-gone', 'ghost'))
         |ORDER BY global_idx""".stripMargin,
-      """sp_chain(global_idx, name, volume, bucket) AS (VALUES
-        |  (1, 's1', 'vol0', 'bucket0'),
-        |  (2, 's2', 'vol0', 'bucket0'),
-        |  (3, 'snap-gone', 'vol0', 'bucket0'),
-        |  (4, 'snap-golden', 'vol2', 'bucket5'),
-        |  (5, 'snap-live', 'vol0', 'bucket0'))""".stripMargin),
+      O.values("sp_chain", T.snapshotChainGlobalRows)),
 
     // Trash-rotation mirror: strptime parse + the same cutoffs.
     "q_trash_rotation" -> O.withCtes(
@@ -6875,14 +6201,7 @@ object SparkEntry {
         |    AS new_name
         |FROM tr_entries
         |ORDER BY trash_root, name""".stripMargin,
-      """tr_entries(trash_root, name) AS (VALUES
-        |  ('/vol0/bucket0/.Trash/clerk1', 'Current'),
-        |  ('/vol0/bucket0/.Trash/clerk1', '240101120000'),
-        |  ('/vol0/bucket0/.Trash/clerk1', '250801120000'),
-        |  ('/vol0/bucket0/.Trash/clerk1', '240615063000-1'),
-        |  ('/vol0/bucket0/.Trash/clerk1', 'stray-dir'),
-        |  ('/vol1/bucket3/.Trash/clerk2', '250601000000'),
-        |  ('/vol2/bucket5/.Trash/clerk3', 'Current'))""".stripMargin),
+      O.values("tr_entries", T.trashEntryRows)),
 
     // Conditional-write mirror: list-normalized ETag candidates.
     "q_conditional_write" -> O.withCtes(
@@ -6918,26 +6237,7 @@ object SparkEntry {
       """cwr_target AS (
         |  SELECT min(key) AS t_key FROM objects
         |  WHERE volume = 'vol0' AND bucket = 'bucket0')""".stripMargin,
-      """cwr_rows(req_id, op, has_inm, inm_value, has_im, im_kind,
-        |  ghost) AS (VALUES
-        |  (1, 'PUT', true, '', false, '', false),
-        |  (2, 'PUT', false, '', true, ' ', false),
-        |  (3, 'PUT', true, '*', true, 'ETAG', false),
-        |  (4, 'PUT', true, 'abc', false, '', false),
-        |  (5, 'PUT', true, '*', false, '', false),
-        |  (6, 'PUT', true, '*', false, '', true),
-        |  (7, 'PUT', false, '', true, 'QETAG', false),
-        |  (8, 'PUT', false, '', true, 'LIST', false),
-        |  (9, 'PUT', false, '', true, '*', false),
-        |  (10, 'PUT', false, '', true, 'zzz', false),
-        |  (11, 'PUT', false, '', true, 'ETAG', true),
-        |  (12, 'PUT', false, '', false, '', false),
-        |  (13, 'DELETE', false, '', true, 'ETAG', false),
-        |  (14, 'DELETE', false, '', true, 'zzz', false),
-        |  (15, 'DELETE', false, '', true, ' ', false),
-        |  (16, 'DELETE', false, '', false, '', false),
-        |  (17, 'DELETE', true, '*', false, '', false),
-        |  (18, 'DELETE', true, ' ', false, '', false))""".stripMargin,
+      O.values("cwr_rows", T.conditionalWriteRequestRows),
       """cwr_reqs AS (
         |  SELECT r.req_id, r.op,
         |    CASE WHEN r.ghost THEN 'no/such/key' ELSE t.t_key END AS key,
@@ -6982,26 +6282,18 @@ object SparkEntry {
         |LEFT JOIN svc_state s ON s.tenant_id = c.cat_tenant
         |ORDER BY req_id""".stripMargin,
       O.objects,
-      """svc_reqs(req_id, has_auth, access_id, remote_user) AS (VALUES
-        |  (1, false, '', 'alice'),
-        |  (2, true, 'hdfs', ''),
-        |  (3, true, 'tenant1$clerk1', ''),
-        |  (4, true, 'no-such-but-hasids$ghost', ''),
-        |  (5, true, 'tenant0$clerk3', ''),
-        |  (6, true, 'orphan$ghost2', ''))""".stripMargin,
+      O.values("svc_reqs", T.s3ContextRequestRows),
+      O.tenantAccessCat,
       """svc_catalog AS (
-        |  SELECT DISTINCT
-        |    'tenant' || substr(volume, 4, 10) || '$' || owner AS access_id,
-        |    'tenant' || substr(volume, 4, 10) AS cat_tenant
-        |  FROM objects
-        |  UNION ALL SELECT 'no-such-but-hasids$ghost',
-        |    'no-such-but-hasids'
-        |  UNION ALL SELECT 'orphan$ghost2', NULL)""".stripMargin,
+        |  SELECT DISTINCT access_id, tenant_id AS cat_tenant
+        |  FROM t_access_cat)""".stripMargin,
+      O.values("empty_tenant", T.emptyTenantRows),
       """svc_state AS (
         |  SELECT DISTINCT 'tenant' || substr(volume, 4, 10) AS tenant_id,
         |    volume AS tenant_volume
         |  FROM objects
-        |  UNION ALL SELECT 'tenant-empty', 'vol-empty')""".stripMargin),
+        |  UNION ALL SELECT tenant_id, volume FROM empty_tenant)"""
+        .stripMargin),
 
     // Ranger version-fence mirror: the same closed form.
     "q_ranger_version" -> O.withCtes(
@@ -7015,11 +6307,7 @@ object SparkEntry {
         |       WHEN v2 = v1 THEN 'SYNCED'
         |       ELSE 'ABORTED_MAX_ATTEMPT' END AS outcome
         |FROM rsv_runs ORDER BY run_id""".stripMargin,
-      """rsv_runs(run_id, db_version, v0, v1, v2) AS (VALUES
-        |  (1, 5, 5, 5, 5),
-        |  (2, 4, 5, 5, 5),
-        |  (3, 4, 5, 6, 6),
-        |  (4, 4, 5, 6, 7))""".stripMargin),
+      O.values("rsv_runs", T.rangerSyncRunRows)),
 
     // Lifecycle-service mirror: running last-applied toggle + prior-save
     // count per bucket cursor.
@@ -7045,17 +6333,7 @@ object SparkEntry {
         |      ELSE 'RESUMED' END AS decision
         |  FROM ls_ops)
         |ORDER BY seq""".stripMargin,
-      """ls_ops(seq, op_type, caller, bucket_key, suspend) AS (VALUES
-        |  (1, 'STATUS', 'om-admin', '', true),
-        |  (2, 'SAVE', 'clerk1', '/vol0/bucket0', false),
-        |  (3, 'SAVE', 'om-admin', '/vol0/bucket0', false),
-        |  (4, 'STATUS', 'clerk2', '', true),
-        |  (6, 'STATUS', 'clerk2', '', true),
-        |  (7, 'STATUS', 'om-admin', '', true),
-        |  (8, 'SAVE', 'om-admin', '/vol0/bucket0', false),
-        |  (9, 'SAVE', 'om-admin', '/vol1/bucket3', false),
-        |  (10, 'STATUS', 'om-admin', '', false),
-        |  (11, 'STATUS', 'om-admin', '', false))""".stripMargin),
+      O.values("ls_ops", T.lifecycleServiceOpRows)),
 
     // KeyPurge mirror: chain-prev window + latest-global scalar, bucket
     // refunds through the live catalog's minted oids.
@@ -7086,34 +6364,9 @@ object SparkEntry {
         |  LEFT JOIN chain_prev cp ON cp.name = r.from_snapshot
         |  LEFT JOIN kp_upd u ON u.req_id = r.req_id)
         |ORDER BY req_id""".stripMargin,
-      """kp_reqs(req_id, from_snapshot, has_expected, expected_prev,
-        |  n_deleted, n_renamed) AS (VALUES
-        |  (1, '', true, 'snap-live', 3, 1),
-        |  (2, '', true, 's2', 2, 0),
-        |  (3, 'snap-live', true, 'snap-gone', 1, 0),
-        |  (4, 'snap-live', true, 's2', 4, 0),
-        |  (5, 'ghost', true, '', 1, 0),
-        |  (6, '', true, 'snap-live', 0, 0),
-        |  (7, 'snap-golden', true, '', 2, 1),
-        |  (8, 's1', true, 'snap-live', 1, 0),
-        |  (9, '', false, '', 2, 0),
-        |  (10, 'ghost', false, '', 1, 0))""".stripMargin,
-      """kp_chain(global_idx, name, volume, bucket) AS (VALUES
-        |  (1, 's1', 'vol0', 'bucket0'),
-        |  (2, 's2', 'vol0', 'bucket0'),
-        |  (3, 'snap-gone', 'vol0', 'bucket0'),
-        |  (4, 'snap-golden', 'vol2', 'bucket5'),
-        |  (5, 'snap-live', 'vol0', 'bucket0'))""".stripMargin,
-      """kp_sizes(req_id, volume, bucket, bucket_id, purged_bytes,
-        |  purged_namespace) AS (VALUES
-        |  (1, 'vol0', 'bucket0', 10, 1000, 3),
-        |  (1, 'vol0', 'no-such', 77, 500, 1),
-        |  (1, 'vol0', 'bucket1', 99, 200, 1),
-        |  (2, 'vol0', 'bucket0', 10, 900, 2),
-        |  (3, 'vol0', 'bucket0', 10, 400, 1),
-        |  (7, 'vol2', 'bucket5', 215, 300, 2),
-        |  (7, 'vol2', 'bucket5', 215, 250, 1),
-        |  (9, 'vol1', 'bucket3', 113, 700, 2))""".stripMargin,
+      O.values("kp_reqs", T.keyPurgeRequestRows),
+      O.values("kp_chain", T.snapshotChainGlobalRows),
+      O.values("kp_sizes", T.keyPurgeBucketSizeRows),
       """chain_prev AS (
         |  SELECT name, coalesce(lag(name) OVER (PARTITION BY volume, bucket
         |    ORDER BY global_idx), '') AS path_prev
@@ -7178,51 +6431,9 @@ object SparkEntry {
         |  LEFT JOIN dp_roll roll ON roll.req_id = r.req_id
         |  LEFT JOIN dp_sm sm ON sm.req_id = r.req_id)
         |ORDER BY req_id""".stripMargin,
-      """dp_reqs(req_id, from_snapshot, has_expected, expected_prev) AS
-        |  (VALUES
-        |  (1, '', true, 'snap-live'),
-        |  (2, '', true, 's2'),
-        |  (3, 'snap-live', true, 'snap-gone'),
-        |  (4, 'snap-live', true, 's1'),
-        |  (5, 'ghost', true, ''),
-        |  (6, 's1', false, 'stale-ignored'),
-        |  (7, 'ghost', false, ''),
-        |  (8, 's2', true, 's1'))""".stripMargin,
-      """dp_entries(req_id, path_id, kind, volume, bucket, bucket_id,
-        |  object_id, size_bytes, hsync, open_exists) AS (VALUES
-        |  (1, 1, 'SUB_DIR', 'vol0', 'bucket0', 10, 501, 0, false, false),
-        |  (1, 1, 'SUB_DIR', 'vol0', 'bucket0', 10, 502, 0, false, false),
-        |  (1, 1, 'SUB_FILE', 'vol0', 'bucket0', 10, 601, 1000, false,
-        |    false),
-        |  (1, 1, 'SUB_FILE', 'vol0', 'bucket0', 10, 602, 500, true, true),
-        |  (1, 2, 'SUB_FILE', 'vol0', 'bucket0', 10, 602, 500, true, true),
-        |  (1, 2, 'SUB_FILE', 'vol0', 'no-such', 77, 603, 800, true,
-        |    false),
-        |  (1, 2, 'SUB_FILE', 'vol0', 'bucket1', 99, 604, 900, false,
-        |    false),
-        |  (1, 2, 'DELETED_DIR', 'vol0', 'bucket0', 10, 502, 0, false,
-        |    false),
-        |  (1, 2, 'DELETED_DIR', 'vol0', 'bucket1', 99, 510, 0, false,
-        |    false),
-        |  (2, 1, 'SUB_FILE', 'vol0', 'bucket0', 10, 611, 700, false,
-        |    false),
-        |  (2, 1, 'DELETED_DIR', 'vol0', 'bucket0', 10, 520, 0, false,
-        |    false),
-        |  (3, 1, 'SUB_DIR', 'vol0', 'bucket0', 10, 530, 0, false, false),
-        |  (3, 1, 'SUB_FILE', 'vol1', 'bucket3', 113, 620, 400, false,
-        |    false),
-        |  (4, 1, 'SUB_DIR', 'vol0', 'bucket0', 10, 540, 0, false, false),
-        |  (5, 1, 'DELETED_DIR', 'vol0', 'bucket0', 10, 550, 0, false,
-        |    false),
-        |  (6, 1, 'SUB_FILE', 'vol0', 'no-such', 77, 630, 900, true, true),
-        |  (6, 1, 'DELETED_DIR', 'vol2', 'bucket5', 215, 560, 0, false,
-        |    false))""".stripMargin,
-      """kp_chain(global_idx, name, volume, bucket) AS (VALUES
-        |  (1, 's1', 'vol0', 'bucket0'),
-        |  (2, 's2', 'vol0', 'bucket0'),
-        |  (3, 'snap-gone', 'vol0', 'bucket0'),
-        |  (4, 'snap-golden', 'vol2', 'bucket5'),
-        |  (5, 'snap-live', 'vol0', 'bucket0'))""".stripMargin,
+      O.values("dp_reqs", T.dirPurgeRequestRows),
+      O.values("dp_entries", T.dirPurgeEntryRows),
+      O.values("kp_chain", T.snapshotChainGlobalRows),
       """chain_prev AS (
         |  SELECT name, coalesce(lag(name) OVER (PARTITION BY volume, bucket
         |    ORDER BY global_idx), '') AS path_prev
@@ -7300,38 +6511,10 @@ object SparkEntry {
         |    AND r.bucket = cn.bucket AND r.from_name = cn.from_name
         |  LEFT JOIN smd_counts co ON r.req_id = co.req_id)
         |ORDER BY req_id""".stripMargin,
-      """smd_chain(global_idx, name, volume, bucket) AS (VALUES
-        |  (1, 's1', 'vol0', 'bucket0'),
-        |  (2, 's2', 'vol0', 'bucket0'),
-        |  (3, 'snap-gone', 'vol0', 'bucket0'),
-        |  (4, 'snap-golden', 'vol2', 'bucket5'),
-        |  (5, 'snap-live', 'vol0', 'bucket0'))""".stripMargin,
-      """smd_cat(volume, bucket, name, status) AS (VALUES
-        |  ('vol0', 'bucket0', 's1', 'SNAPSHOT_ACTIVE'),
-        |  ('vol0', 'bucket0', 's2', 'SNAPSHOT_ACTIVE'),
-        |  ('vol2', 'bucket5', 'snap-golden', 'SNAPSHOT_ACTIVE'),
-        |  ('vol0', 'bucket0', 'snap-gone', 'SNAPSHOT_DELETED'),
-        |  ('vol0', 'bucket0', 'snap-live', 'SNAPSHOT_ACTIVE'))"""
-        .stripMargin,
-      """smd_reqs(req_id, volume, bucket, from_name) AS (VALUES
-        |  (1, 'vol0', 'bucket0', 's1'),
-        |  (2, 'vol0', 'bucket0', 's2'),
-        |  (3, 'vol0', 'bucket0', 'snap-live'),
-        |  (4, 'vol0', 'bucket0', 'ghost'),
-        |  (5, 'vol2', 'bucket5', 'snap-golden'),
-        |  (6, 'vol0', 'bucket0', 'snap-gone'))""".stripMargin,
-      """smd_entries(req_id, tbl, pos, db_key) AS (VALUES
-        |  (1, 'NEXT_DB', 1, '/vol0/bucket0/a'),
-        |  (1, 'NEXT_DB', 2, '/vol0/bucket0/a'),
-        |  (1, 'NEXT_DB', 3, '/wrong/prefix/zzz'),
-        |  (1, 'RECLAIM', 1, '/vol0/bucket0/rc1'),
-        |  (1, 'RENAMED', 1, '/vol9/bucketX/r0'),
-        |  (1, 'MOVED_DIR', 1, '/999/999/djunk'),
-        |  (2, 'NEXT_DB', 1, '/vol0/bucket0/b'),
-        |  (3, 'RECLAIM', 1, '/vol0/bucket0/rc2'),
-        |  (3, 'MOVED_DIR', 1, '/101/201/d9'),
-        |  (4, 'NEXT_DB', 1, '/vol0/bucket0/never'),
-        |  (6, 'RENAMED', 1, '/vol0/bucket0/r7'))""".stripMargin,
+      O.values("smd_chain", T.snapshotChainGlobalRows),
+      O.snapshotCatalog("smd_cat", live = true),
+      O.values("smd_reqs", T.moveDeletedKeysRequestRows),
+      O.values("smd_entries", T.moveDeletedKeysEntryRows),
       """smd_chain_next AS (
         |  SELECT volume, bucket, name AS from_name,
         |    lead(name) OVER (PARTITION BY volume, bucket
@@ -7374,70 +6557,11 @@ object SparkEntry {
         |  LEFT JOIN mtk_first_err fe ON r.req_id = fe.req_id
         |  LEFT JOIN mtk_counts co ON r.req_id = co.req_id)
         |ORDER BY req_id""".stripMargin,
-      """mtk_ids(volume, bucket, vol_id, bucket_id) AS (VALUES
-        |  ('vol0', 'bucket0', 101, 201),
-        |  ('vol2', 'bucket5', 102, 205))""".stripMargin,
-      """mtk_chain(global_idx, name, volume, bucket) AS (VALUES
-        |  (1, 's1', 'vol0', 'bucket0'),
-        |  (2, 's2', 'vol0', 'bucket0'),
-        |  (3, 'snap-gone', 'vol0', 'bucket0'),
-        |  (4, 'snap-golden', 'vol2', 'bucket5'),
-        |  (5, 'snap-live', 'vol0', 'bucket0'))""".stripMargin,
-      """mtk_cat(volume, bucket, name, status) AS (VALUES
-        |  ('vol0', 'bucket0', 's1', 'SNAPSHOT_ACTIVE'),
-        |  ('vol0', 'bucket0', 's2', 'SNAPSHOT_ACTIVE'),
-        |  ('vol2', 'bucket5', 'snap-golden', 'SNAPSHOT_ACTIVE'),
-        |  ('vol0', 'bucket0', 'snap-gone', 'SNAPSHOT_DELETED'),
-        |  ('vol0', 'bucket0', 'snap-live', 'SNAPSHOT_ACTIVE'))"""
-        .stripMargin,
-      """mtk_reqs(req_id, volume, bucket, from_name) AS (VALUES
-        |  (1, 'vol0', 'bucket0', 's1'),
-        |  (2, 'vol0', 'bucket0', 's2'),
-        |  (3, 'vol0', 'bucket0', 'snap-gone'),
-        |  (4, 'vol0', 'bucket0', 'snap-live'),
-        |  (5, 'vol2', 'bucket5', 'snap-golden'),
-        |  (6, 'vol0', 'bucket0', 'ghost'),
-        |  (7, 'vol0', 'bucket0', 's1'),
-        |  (8, 'vol0', 'bucket0', 's1'),
-        |  (9, 'vol0', 'bucket0', 's1'),
-        |  (10, 'vol0', 'bucket0', 's1'),
-        |  (11, 'vol0', 'bucket0', 's1'),
-        |  (12, 'vol0', 'bucket0', 's2'),
-        |  (13, 'vol0', 'bucket0', 's1'))""".stripMargin,
-      """mtk_entries(req_id, tbl, pos, db_key, n_infos, has_value) AS
-        |(VALUES
-        |  (1, 'DELETED', 1, '/vol0/bucket0/a', 2, false),
-        |  (1, 'DELETED', 2, '/vol0/bucket0/b', 1, false),
-        |  (1, 'RENAMED', 1, '/vol0/bucket0/r1', 0, true),
-        |  (1, 'DELETED_DIR', 1, '/101/201/d1', 1, false),
-        |  (2, 'DELETED', 1, '/vol0/bucket0/c', 1, false),
-        |  (3, 'DELETED', 1, '/vol0/bucket0/x', 0, false),
-        |  (3, 'DELETED', 2, '/vol0/bucket0/y', 3, false),
-        |  (3, 'RENAMED', 1, '/vol0/bucket0/r2', 0, false),
-        |  (3, 'RENAMED', 2, '/vol0/bucket0/r3', 0, true),
-        |  (3, 'DELETED_DIR', 1, '/101/201/d2', 2, false),
-        |  (3, 'DELETED_DIR', 2, '/101/201/d3', 1, false),
-        |  (4, 'DELETED', 1, '/vol0/bucket0/z', 1, false),
-        |  (6, 'DELETED', 1, '/wrong/prefix/k', 1, false),
-        |  (7, 'DELETED', 1, '/vol0/bucket0/ok', 1, false),
-        |  (7, 'DELETED', 2, '/vol9/bucketX/bad', 1, false),
-        |  (8, 'DELETED', 1, '/vol0/bucket0/k1', 1, false),
-        |  (8, 'DELETED', 2, '/vol0/bucket0/k2', 1, false),
-        |  (8, 'DELETED', 3, '/vol0/bucket0/k1', 1, false),
-        |  (9, 'DELETED', 1, '/vol0/bucket0/k3', 1, false),
-        |  (9, 'RENAMED', 1, '/volX/bucket0/r4', 0, true),
-        |  (9, 'DELETED_DIR', 1, '/101/201/d4', 1, false),
-        |  (9, 'DELETED_DIR', 2, '/101/201/d4', 1, false),
-        |  (10, 'RENAMED', 1, '/bad/prefix/r5', 0, false),
-        |  (10, 'DELETED_DIR', 1, '/999/999/dd', 2, false),
-        |  (10, 'DELETED_DIR', 2, '/101/201/d5', 1, false),
-        |  (10, 'DELETED_DIR', 3, '/101/201/d5', 1, false),
-        |  (11, 'DELETED', 1, '/vol0/bucket0/k1', 1, false),
-        |  (11, 'DELETED', 2, '/vol0/bucket0/k1', 0, false),
-        |  (11, 'DELETED', 3, '/vol0/bucket0/k2', 1, false),
-        |  (12, 'DELETED', 1, '/oops/bucket0/q', 1, false),
-        |  (13, 'RENAMED', 1, '/vol0/bucket0/r6', 0, true),
-        |  (13, 'RENAMED', 2, '/vol0/bucket0/r6', 0, true))""".stripMargin,
+      O.values("mtk_ids", T.fsoBucketIdRows),
+      O.values("mtk_chain", T.snapshotChainGlobalRows),
+      O.snapshotCatalog("mtk_cat", live = true),
+      O.values("mtk_reqs", T.moveTableKeysRequestRows),
+      O.values("mtk_entries", T.moveTableKeysEntryRows),
       """mtk_graded AS (
         |  SELECT c.req_id, c.tbl, c.tbl_order, c.pos,
         |    CASE WHEN NOT starts_with(c.db_key,
@@ -7499,19 +6623,8 @@ object SparkEntry {
         |  LEFT JOIN snapsext sn ON r.volume = sn.volume
         |    AND r.bucket = sn.bucket AND r.name = sn.name)
         |ORDER BY req_id""".stripMargin,
-      """snapsext(volume, bucket, name, status) AS (VALUES
-        |  ('vol0', 'bucket0', 's1', 'SNAPSHOT_ACTIVE'),
-        |  ('vol0', 'bucket0', 's2', 'SNAPSHOT_ACTIVE'),
-        |  ('vol2', 'bucket5', 'snap-golden', 'SNAPSHOT_ACTIVE'),
-        |  ('vol0', 'bucket0', 'snap-gone', 'SNAPSHOT_DELETED'))""".stripMargin,
-      """ssp_reqs(req_id, volume, bucket, name, property) AS (VALUES
-        |  (1, 'vol0', 'bucket0', 's1', 'deep_cleaned_deleted_dir'),
-        |  (2, 'vol0', 'bucket0', 'ghost', 'exclusive_size'),
-        |  (3, 'vol0', 'bucket0', 's2', 'exclusive_size'),
-        |  (4, 'vol0', 'bucket0', 's1', 'exclusive_size'),
-        |  (5, 'vol2', 'bucket5', 'snap-golden', 'deep_cleaned_deleted_dir'),
-        |  (6, 'vol0', 'bucket0', 'snap-gone', 'exclusive_size'),
-        |  (7, 'vol0', 'bucket0', 'ghost', 'deep_cleaned_deleted_dir'))""".stripMargin),
+      O.snapshotCatalog("snapsext", live = false),
+      O.values("ssp_reqs", T.snapshotSetPropertyRequestRows)),
 
     // QuotaRepair recount mirror: replicated-size recount + FSO dir
     // namespace, diffed against the stored catalog.
@@ -7587,9 +6700,8 @@ object SparkEntry {
         |ORDER BY r.volume, r.bucket, r.new_quota_bytes,
         |  r.new_quota_ns""".stripMargin,
       O.objects, O.buckets, O.volumes,
-      """links(volume, bucket) AS (VALUES
-        |  ('vol1', 'link-a'), ('vol2', 'link-b'), ('vol3', 'link-broken'),
-        |  ('vol0', 'link-cycle1'), ('vol0', 'link-cycle2'))""".stripMargin,
+      O.values("links", T.bucketLinkRows),
+      O.values("sq_probes", T.setQuotaProbeRows),
       """reqs AS (
         |  SELECT volume, bucket,
         |    CASE WHEN bucket_idx % 5 = 0 THEN used_bytes + 1000000000
@@ -7603,8 +6715,7 @@ object SparkEntry {
         |      ELSE -2 END AS new_quota_ns
         |  FROM (SELECT *, CAST(substr(bucket, 7, 10) AS BIGINT)
         |          AS bucket_idx FROM buckets)
-        |  UNION ALL VALUES ('vol1', 'link-a', 5000000, -2),
-        |    ('vol0', 'no-such-bucket', 5000000, -2))""".stripMargin),
+        |  UNION ALL SELECT * FROM sq_probes)""".stripMargin),
 
     // Rack-aware placement: same staged picks — candidates exclude
     // holders and short-space nodes, rank by (new rack, free space, id);
@@ -8017,16 +7128,7 @@ object SparkEntry {
         |    FROM cl_events GROUP BY container_id),
         |    UNNEST(generate_series(1, len(evs))) AS u(i))
         |ORDER BY container_id, seq""".stripMargin,
-      """cl_events(container_id, seq, event) AS (VALUES
-        |  (1, 1, 'FINALIZE'), (1, 2, 'CLOSE'), (1, 3, 'DELETE'),
-        |  (1, 4, 'CLEANUP'), (1, 5, 'CLEANUP'),
-        |  (2, 1, 'FINALIZE'), (2, 2, 'QUASI_CLOSE'), (2, 3, 'CLOSE'),
-        |  (2, 4, 'FORCE_CLOSE'), (2, 5, 'DELETE'), (2, 6, 'CLEANUP'),
-        |  (3, 1, 'CLOSE'), (3, 2, 'FINALIZE'), (3, 3, 'FINALIZE'),
-        |  (3, 4, 'QUASI_CLOSE'), (3, 5, 'DELETE'), (3, 6, 'CLEANUP'),
-        |  (4, 1, 'DELETE'), (4, 2, 'CLEANUP'), (4, 3, 'FINALIZE'),
-        |  (5, 1, 'FINALIZE'), (5, 2, 'CLOSE'), (5, 3, 'QUASI_CLOSE'),
-        |  (5, 4, 'FORCE_CLOSE'))""".stripMargin),
+      O.values("cl_events", T.containerLifecycleEventRows)),
 
     // Node-health mirror: the same fold as a recursive per-node walk.
     "q_node_health" -> O.withCtesRecursive(
@@ -8064,40 +7166,18 @@ object SparkEntry {
         |JOIN nh_walk c ON c.uuid = e.uuid AND c.i = e.i
         |WHERE e.kind = 'CHECK' AND p.state <> ''
         |ORDER BY e.uuid, check_ms""".stripMargin,
-      """nh_reg(uuid, ts, mlv) AS (VALUES
-        |  ('dn1', 0, 3), ('dn2', 0, 3), ('dn3', 0, 3), ('dn4', 0, 3),
-        |  ('dn5', 0, 2), ('dn6', 0, 3), ('dn7', 0, 3), ('dn8', 0, 2),
-        |  ('dn9', 500000, 3))""".stripMargin,
-      """nh_hb(uuid, ts, mlv) AS (VALUES
-        |  ('dn1', 150000, 3), ('dn1', 350000, 3), ('dn1', 550000, 3),
-        |  ('dn1', 750000, 3), ('dn1', 950000, 3), ('dn1', 1150000, 3),
-        |  ('dn1', 1350000, 3), ('dn1', 1550000, 3), ('dn1', 1750000, 3),
-        |  ('dn1', 1850000, 3),
-        |  ('dn2', 150000, 3), ('dn2', 300000, 3),
-        |  ('dn3', 150000, 3), ('dn3', 700000, 3), ('dn3', 760000, 3),
-        |  ('dn3', 940000, 3), ('dn3', 1400000, 3), ('dn3', 1700000, 3),
-        |  ('dn3', 1900000, 3),
-        |  ('dn4', 100000, 3), ('dn4', 1600000, 3), ('dn4', 1730000, 3),
-        |  ('dn4', 1900000, 3),
-        |  ('dn5', 150000, 2), ('dn5', 350000, 2), ('dn5', 560000, 2),
-        |  ('dn5', 750000, 2), ('dn5', 950000, 3), ('dn5', 1150000, 3),
-        |  ('dn5', 1450000, 3), ('dn5', 1650000, 3), ('dn5', 1850000, 3),
-        |  ('dn6', 200000, 3), ('dn6', 400000, 3), ('dn6', 500000, 2),
-        |  ('dn7', 200000, 3), ('dn7', 400000, 3), ('dn7', 620000, 3),
-        |  ('dn7', 800000, 3), ('dn7', 900000, 3), ('dn7', 1000000, 2),
-        |  ('dn8', 200000, 2), ('dn8', 410000, 2), ('dn8', 610000, 2),
-        |  ('dn8', 810000, 2), ('dn8', 955000, 2), ('dn8', 1005000, 3),
-        |  ('dn9', 650000, 3), ('dn9', 800000, 3), ('dn9', 945000, 3),
-        |  ('dn9', 1100000, 3), ('dn9', 1250000, 3), ('dn9', 1405000, 3),
-        |  ('dn9', 1555000, 3), ('dn9', 1705000, 3),
-        |  ('dn9', 1905000, 3))""".stripMargin,
-      """nh_chk(ts) AS (VALUES (60000), (240000), (420000), (600000),
-        |  (780000), (960000), (1500000), (1560000), (1740000),
-        |  (1920000))""".stripMargin,
+      O.values("nh_events", T.nodeHealthEventRows),
+      """nh_reg AS (
+        |  SELECT uuid, ts_ms AS ts, mlv FROM nh_events
+        |  WHERE kind = 'REGISTER')""".stripMargin,
+      """nh_hb AS (
+        |  SELECT uuid, ts_ms AS ts, mlv FROM nh_events
+        |  WHERE kind = 'HB')""".stripMargin,
+      O.values("nh_chk", T.nodeHealthCheckRows),
       """nh_ev AS (
         |  SELECT uuid, ts, 'REGISTER' AS kind, mlv FROM nh_reg
         |  UNION ALL SELECT uuid, ts, 'HB', mlv FROM nh_hb
-        |  UNION ALL SELECT r.uuid, c.ts, 'CHECK', -1
+        |  UNION ALL SELECT r.uuid, c.check_ms, 'CHECK', -1
         |    FROM nh_reg r, nh_chk c)""".stripMargin,
       """nh_sev AS (
         |  SELECT uuid, ts, kind, mlv,
@@ -8154,12 +7234,7 @@ object SparkEntry {
         |    WHEN NOT "exists" THEN 'SKIP_MISSING'
         |    ELSE 'MARK_UNHEALTHY' END AS action
         |FROM rcv ORDER BY container_id""".stripMargin,
-      """rcv(container_id, deadline_ms, exec_deadline_ms, "exists")
-        |AS (VALUES
-        |  (1, 2000000, -1, true),
-        |  (2, 500000, -1, true),
-        |  (3, 400000, 3000000, true),
-        |  (4, 300000, -1, false))""".stripMargin),
+      O.values("rcv", T.recoveringContainerRows)),
 
     // Disk-balancer volume mirror: integer basis-point arithmetic over
     // the literal volume dim.
@@ -8188,12 +7263,7 @@ object SparkEntry {
         |   FROM dbv_usable u2 CROSS JOIN dbv_tot t2)
         |FROM dbv_vols WHERE capacity <= 0
         |ORDER BY volume_id""".stripMargin,
-      """dbv_vols(volume_id, capacity, available, committed, spared)
-        |AS (VALUES
-        |  ('v1', 1000000, 150000, 50000, 10000),
-        |  ('v2', 1000000, 700000, 0, 10000),
-        |  ('v3', 1000000, 500000, 20000, 10000),
-        |  ('v9', 0, 0, 0, 0))""".stripMargin,
+      O.values("dbv_vols", T.dnVolumeRows),
       """dbv_usable AS (
         |  SELECT volume_id, CAST(capacity AS BIGINT) AS capacity,
         |    CAST(capacity - available + committed AS BIGINT)
@@ -8222,23 +7292,8 @@ object SparkEntry {
         |GROUP BY c.container_id, s.src_volume, d.dst_volume,
         |  c.verdict_raw, c.bytes_used
         |ORDER BY c.container_id""".stripMargin,
-      """dbm_vols(volume_id, capacity, available, committed, spared)
-        |AS (VALUES
-        |  ('v1', 1000000, 150000, 50000, 10000),
-        |  ('v2', 1000000, 700000, 0, 10000),
-        |  ('v3', 1000000, 500000, 20000, 10000),
-        |  ('v9', 0, 0, 0, 0))""".stripMargin,
-      """dbm_conts(container_id, volume_id, bytes_used, state, in_set,
-        |  in_progress) AS (VALUES
-        |  (1, 'v1', 100000, 'CLOSED', false, false),
-        |  (2, 'v1', 100000, 'CLOSED', true, true),
-        |  (3, 'v1', 0, 'CLOSED', true, false),
-        |  (4, 'v1', 100000, 'OPEN', true, false),
-        |  (5, 'v1', 800000, 'CLOSED', true, false),
-        |  (6, 'v1', 400000, 'QUASI_CLOSED', true, false),
-        |  (7, 'v1', 120000, 'CLOSED', true, false),
-        |  (8, 'v1', 50000, 'CLOSED', true, false),
-        |  (9, 'v2', 60000, 'CLOSED', true, false))""".stripMargin,
+      O.values("dbm_vols", T.dnVolumeRows),
+      O.values("dbm_conts", T.dnBalancerContainerRows),
       """dbm_usable AS (
         |  SELECT volume_id, CAST(capacity AS BIGINT) AS capacity,
         |    CAST(available AS BIGINT) AS available,
@@ -8294,23 +7349,7 @@ object SparkEntry {
         |    AS volume_scan_triggered,
         |  (action = 'SCANNED') AS scanned_inc
         |FROM msc_act ORDER BY container_id""".stripMargin,
-      """msc(container_id, volume_failed, last_scan_ago_ms, dir_exists,
-        |  meta_dir_exists, file_status, file_check_errors,
-        |  chunks_dir_exists, deleted_during_scan, transient_fd_errors,
-        |  already_unhealthy) AS (VALUES
-        |  (1, false, -1, true, true, 'OK', 0, true, false, false, false),
-        |  (2, true, -1, true, true, 'OK', 0, true, false, false, false),
-        |  (3, false, 60000, true, true, 'OK', 0, true, false, false, false),
-        |  (4, false, 3600000, true, true, 'OK', 0, true, false, false, false),
-        |  (5, false, -1, false, true, 'OK', 0, true, false, false, false),
-        |  (6, false, -1, true, false, 'OK', 0, true, false, false, false),
-        |  (7, false, -1, true, true, 'MISSING', 0, true, false, false, false),
-        |  (8, false, -1, true, true, 'CORRUPT', 0, true, false, false, false),
-        |  (9, false, -1, true, true, 'OK', 2, true, false, false, false),
-        |  (10, false, -1, true, true, 'OK', 0, false, false, false, false),
-        |  (11, false, -1, false, true, 'OK', 0, true, true, false, false),
-        |  (12, false, -1, true, true, 'OK', 1, false, false, true, false),
-        |  (13, false, -1, true, true, 'CORRUPT', 0, true, false, false, true))""".stripMargin,
+      O.values("msc", T.metaScanContainerRows),
       """msc_base AS (
         |  SELECT *,
         |    CASE WHEN NOT dir_exists THEN 'MISSING_CONTAINER_DIR'
@@ -8379,29 +7418,8 @@ object SparkEntry {
         |  FROM dn_ops o JOIN dn_containers c
         |    ON c.container_id = o.container_id)
         |ORDER BY seq""".stripMargin,
-      """dn_containers(container_id, cstate, initial_bcsid) AS (VALUES
-        |  (1, 'OPEN', 10), (2, 'CLOSED', 50), (3, 'UNHEALTHY', 5),
-        |  (4, 'INVALID', 0), (5, 'CLOSING', 7), (6, 'RECOVERING', 0),
-        |  (7, 'QUASI_CLOSED', 20), (8, 'OPEN', 0))""".stripMargin,
-      """dn_ops(seq, container_id, op, bcsid, block_exists,
-        |  stored_bcsid) AS (VALUES
-        |  (1, 1, 'PUT_BLOCK', 11, true, 0),
-        |  (2, 1, 'PUT_BLOCK', 11, true, 0),
-        |  (3, 1, 'PUT_BLOCK', 9, true, 0),
-        |  (4, 1, 'GET_BLOCK', 11, true, 11),
-        |  (5, 1, 'GET_BLOCK', 12, true, 11),
-        |  (6, 1, 'GET_BLOCK', 5, false, 0),
-        |  (7, 1, 'GET_BLOCK', 8, true, 6),
-        |  (8, 2, 'WRITE_CHUNK', 0, true, 0),
-        |  (9, 2, 'GET_BLOCK', 30, true, 30),
-        |  (10, 3, 'PUT_BLOCK', 6, true, 0),
-        |  (11, 4, 'WRITE_CHUNK', 0, true, 0),
-        |  (12, 5, 'WRITE_CHUNK', 0, true, 0),
-        |  (13, 6, 'PUT_BLOCK', 1, true, 0),
-        |  (14, 7, 'PUT_BLOCK', 21, true, 0),
-        |  (15, 1, 'DELETE_BLOCK', 0, true, 0),
-        |  (16, 8, 'PUT_BLOCK', 0, true, 0),
-        |  (17, 2, 'GET_BLOCK', 60, true, 60))""".stripMargin),
+      O.values("dn_containers", T.dnContainerRows),
+      O.values("dn_ops", T.dnOpRows)),
 
     // Mis-replication mirror: rack aggregates joined back + source ranks.
     "q_mis_replication" -> O.withCtes(
@@ -9069,7 +8087,7 @@ object SparkEntry {
         |    max(seq) AS max_replica_seq
         |  FROM urp_rep2 GROUP BY 1)""".stripMargin),
 
-    // Decommission-admin mirror: the VALUES request batch, host
+    // Decommission-admin mirror: the request batch, host
     // resolution, capacity walks, per-node rung CASE.
     "q_decommission_admin" -> O.withCtes(
       """SELECT CAST(r.batch_id AS BIGINT) AS batch_id, r.op, r.force,
@@ -9099,37 +8117,7 @@ object SparkEntry {
         |LEFT JOIN decadm_fail f USING (batch_id)
         |ORDER BY r.batch_id, r.host""".stripMargin,
       O.containersScm, O.replicas, O.datanodes, O.ecShards,
-      """decadm_reqs AS (
-        |  SELECT * FROM (VALUES
-        |    (1, 'DECOMMISSION', false, 'host1.rack1'),
-        |    (1, 'DECOMMISSION', false, 'host2.rack2'),
-        |    (1, 'DECOMMISSION', false, 'host5.rack0'),
-        |    (1, 'DECOMMISSION', false, 'ghost.example'),
-        |    (1, 'DECOMMISSION', false, 'host3.rack3'),
-        |    (2, 'DECOMMISSION', false, 'host0.rack0'),
-        |    (2, 'DECOMMISSION', false, 'host1.rack1'),
-        |    (2, 'DECOMMISSION', false, 'host4.rack4'),
-        |    (2, 'DECOMMISSION', false, 'host7.rack2'),
-        |    (2, 'DECOMMISSION', false, 'host9.rack4'),
-        |    (2, 'DECOMMISSION', false, 'host12.rack2'),
-        |    (2, 'DECOMMISSION', false, 'host15.rack0'),
-        |    (3, 'MAINTENANCE', false, 'host4.rack4'),
-        |    (3, 'MAINTENANCE', false, 'host11.rack1'),
-        |    (3, 'MAINTENANCE', false, 'host6.rack1'),
-        |    (4, 'MAINTENANCE', false, 'host0.rack0'),
-        |    (4, 'MAINTENANCE', false, 'host1.rack1'),
-        |    (4, 'MAINTENANCE', false, 'host4.rack4'),
-        |    (4, 'MAINTENANCE', false, 'host7.rack2'),
-        |    (4, 'MAINTENANCE', false, 'host9.rack4'),
-        |    (4, 'MAINTENANCE', false, 'host12.rack2'),
-        |    (4, 'MAINTENANCE', false, 'host15.rack0'),
-        |    (5, 'MAINTENANCE', true, 'host16.rack1'),
-        |    (5, 'MAINTENANCE', true, 'host2.rack2'),
-        |    (5, 'MAINTENANCE', true, 'host18.rack3'),
-        |    (6, 'RECOMMISSION', false, 'host2.rack2'),
-        |    (6, 'RECOMMISSION', false, 'host0.rack0'),
-        |    (6, 'RECOMMISSION', false, 'nosuch.host'))
-        |    t(batch_id, op, force, host))""".stripMargin,
+      O.values("decadm_reqs", T.decommissionRequestRows),
       """decadm_resolved AS (
         |  SELECT q.*, d.uuid AS datanode, d.op_state, d.state
         |  FROM decadm_reqs q
@@ -9562,480 +8550,387 @@ object SparkEntry {
         |  WHERE r < (container_id // 3) % 6)""".stripMargin),
 
     // AvailableSpaceFilter ladder over the shared volume literals.
-    "q_volume_space_filter" -> {
-      O.withCtes(
-        """SELECT vol_id, available, usable_reported,
-          |  CASE WHEN available <= 100000 THEN 'REJECTED_HARD'
-          |    WHEN usable_reported <= 100000 THEN 'SOFT_BAND'
-          |    ELSE 'OK' END AS verdict,
-          |  max(available) OVER () AS most_available
-          |FROM (
-          |  SELECT vol_id,
-          |    remaining - committed - hard_spare AS available,
-          |    remaining - committed - reported_spare AS usable_reported
-          |  FROM cap_vols)
-          |ORDER BY vol_id""".stripMargin,
-        capVolsCte)
-    },
+    "q_volume_space_filter" -> O.withCtes(
+      """SELECT vol_id, available, usable_reported,
+        |  CASE WHEN available <= 100000 THEN 'REJECTED_HARD'
+        |    WHEN usable_reported <= 100000 THEN 'SOFT_BAND'
+        |    ELSE 'OK' END AS verdict,
+        |  max(available) OVER () AS most_available
+        |FROM (
+        |  SELECT vol_id,
+        |    remaining - committed - hard_spare AS available,
+        |    remaining - committed - reported_spare AS usable_reported
+        |  FROM cap_vols)
+        |ORDER BY vol_id""".stripMargin,
+      O.values("cap_vols", T.capacityVolumeRows)),
 
     // Two-choices winner table: exact cross-multiplied freeSpaceRatio.
-    "q_capacity_pairs" -> {
-      O.withCtes(
-        """SELECT f.vol_id AS first_id, s.vol_id AS second_id,
-          |  CASE WHEN f.free_eff * s.cap_eff < s.free_eff * f.cap_eff
-          |    THEN s.vol_id ELSE f.vol_id END AS winner_id
-          |FROM elig f, elig s
-          |ORDER BY 1, 2""".stripMargin,
-        capVolsCte,
-        """elig AS (
-          |  SELECT vol_id,
-          |    CASE WHEN capacity <= 0 THEN 0
-          |      ELSE greatest(remaining - committed, 0) END AS free_eff,
-          |    greatest(capacity, 1) AS cap_eff
-          |  FROM cap_vols
-          |  WHERE remaining - committed - hard_spare > 100000)""".stripMargin)
-    },
+    "q_capacity_pairs" -> O.withCtes(
+      """SELECT f.vol_id AS first_id, s.vol_id AS second_id,
+        |  CASE WHEN f.free_eff * s.cap_eff < s.free_eff * f.cap_eff
+        |    THEN s.vol_id ELSE f.vol_id END AS winner_id
+        |FROM elig f, elig s
+        |ORDER BY 1, 2""".stripMargin,
+      O.values("cap_vols", T.capacityVolumeRows),
+      """elig AS (
+        |  SELECT vol_id,
+        |    CASE WHEN capacity <= 0 THEN 0
+        |      ELSE greatest(remaining - committed, 0) END AS free_eff,
+        |    greatest(capacity, 1) AS cap_eff
+        |  FROM cap_vols
+        |  WHERE remaining - committed - hard_spare > 100000)""".stripMargin),
 
     // Capacity-pipeline comparator: ranked-stack pop walk, integer
     // epsilon band, raw-used tiebreak, exhaustion/same-id → FIRST.
-    "q_pipeline_capacity_compare" -> {
-      O.withCtes(
-        """SELECT p.first_id, p.second_id,
-          |  CASE WHEN p.first_id = p.second_id THEN 'FIRST'
-          |    WHEN d.cmp IS NULL OR d.cmp <= 0 THEN 'FIRST'
-          |    ELSE 'SECOND' END AS winner,
-          |  CASE WHEN p.first_id = p.second_id OR d.cmp IS NULL
-          |      OR d.cmp <= 0 THEN p.first_id
-          |    ELSE p.second_id END AS winner_id,
-          |  CAST(CASE WHEN p.first_id = p.second_id THEN 0
-          |    ELSE coalesce(d.decided_round, 0) END AS BIGINT)
-          |    AS decided_round,
-          |  CASE WHEN p.first_id = p.second_id THEN 'SAME_ID'
-          |    ELSE coalesce(d.mode, 'EXHAUSTED') END AS mode
-          |FROM (SELECT a.pipeline_id AS first_id,
-          |        b.pipeline_id AS second_id
-          |      FROM (SELECT DISTINCT pipeline_id FROM pipe_nodes) a,
-          |        (SELECT DISTINCT pipeline_id FROM pipe_nodes) b) p
-          |LEFT JOIN (
-          |  SELECT first_id, second_id, min(rnk) AS decided_round,
-          |    min_by(cmp, rnk) AS cmp, min_by(mode, rnk) AS mode
-          |  FROM (
-          |    SELECT first_id, second_id, rnk,
-          |      CASE WHEN abs(crossv) * 1000000 > c1 * c2 THEN
-          |          CASE WHEN crossv > 0 THEN 1 ELSE -1 END
-          |        WHEN u1 <> u2 THEN
-          |          CASE WHEN u1 > u2 THEN 1 ELSE -1 END
-          |        ELSE 0 END AS cmp,
-          |      CASE WHEN abs(crossv) * 1000000 > c1 * c2 THEN 'WEIGHT'
-          |        WHEN u1 <> u2 THEN 'RAW_USED'
-          |        ELSE 'EQUAL' END AS mode
-          |    FROM (
-          |      SELECT a.pipeline_id AS first_id,
-          |        b.pipeline_id AS second_id, a.rnk,
-          |        a.used * b.cap_eff - b.used * a.cap_eff AS crossv,
-          |        a.used AS u1, b.used AS u2,
-          |        a.cap_eff AS c1, b.cap_eff AS c2
-          |      FROM ranked a JOIN ranked b ON a.rnk = b.rnk))
-          |  WHERE cmp <> 0
-          |  GROUP BY 1, 2) d
-          |  ON d.first_id = p.first_id AND d.second_id = p.second_id
-          |ORDER BY p.first_id, p.second_id""".stripMargin,
-        pipeNodesCte,
-        """ranked AS (
-          |  SELECT pipeline_id,
-          |    CAST(row_number() OVER (PARTITION BY pipeline_id
-          |      ORDER BY used * 1000000 //
-          |        (CASE WHEN capacity = 0 THEN 1 ELSE capacity END) DESC,
-          |        used DESC, node) AS BIGINT) AS rnk,
-          |    used,
-          |    CASE WHEN capacity = 0 THEN 1 ELSE capacity END AS cap_eff
-          |  FROM pipe_nodes)""".stripMargin)
-    },
+    "q_pipeline_capacity_compare" -> O.withCtes(
+      """SELECT p.first_id, p.second_id,
+        |  CASE WHEN p.first_id = p.second_id THEN 'FIRST'
+        |    WHEN d.cmp IS NULL OR d.cmp <= 0 THEN 'FIRST'
+        |    ELSE 'SECOND' END AS winner,
+        |  CASE WHEN p.first_id = p.second_id OR d.cmp IS NULL
+        |      OR d.cmp <= 0 THEN p.first_id
+        |    ELSE p.second_id END AS winner_id,
+        |  CAST(CASE WHEN p.first_id = p.second_id THEN 0
+        |    ELSE coalesce(d.decided_round, 0) END AS BIGINT)
+        |    AS decided_round,
+        |  CASE WHEN p.first_id = p.second_id THEN 'SAME_ID'
+        |    ELSE coalesce(d.mode, 'EXHAUSTED') END AS mode
+        |FROM (SELECT a.pipeline_id AS first_id,
+        |        b.pipeline_id AS second_id
+        |      FROM (SELECT DISTINCT pipeline_id FROM pipe_nodes) a,
+        |        (SELECT DISTINCT pipeline_id FROM pipe_nodes) b) p
+        |LEFT JOIN (
+        |  SELECT first_id, second_id, min(rnk) AS decided_round,
+        |    min_by(cmp, rnk) AS cmp, min_by(mode, rnk) AS mode
+        |  FROM (
+        |    SELECT first_id, second_id, rnk,
+        |      CASE WHEN abs(crossv) * 1000000 > c1 * c2 THEN
+        |          CASE WHEN crossv > 0 THEN 1 ELSE -1 END
+        |        WHEN u1 <> u2 THEN
+        |          CASE WHEN u1 > u2 THEN 1 ELSE -1 END
+        |        ELSE 0 END AS cmp,
+        |      CASE WHEN abs(crossv) * 1000000 > c1 * c2 THEN 'WEIGHT'
+        |        WHEN u1 <> u2 THEN 'RAW_USED'
+        |        ELSE 'EQUAL' END AS mode
+        |    FROM (
+        |      SELECT a.pipeline_id AS first_id,
+        |        b.pipeline_id AS second_id, a.rnk,
+        |        a.used * b.cap_eff - b.used * a.cap_eff AS crossv,
+        |        a.used AS u1, b.used AS u2,
+        |        a.cap_eff AS c1, b.cap_eff AS c2
+        |      FROM ranked a JOIN ranked b ON a.rnk = b.rnk))
+        |  WHERE cmp <> 0
+        |  GROUP BY 1, 2) d
+        |  ON d.first_id = p.first_id AND d.second_id = p.second_id
+        |ORDER BY p.first_id, p.second_id""".stripMargin,
+      O.values("pipe_nodes", T.capacityPipeNodeRows),
+      """ranked AS (
+        |  SELECT pipeline_id,
+        |    CAST(row_number() OVER (PARTITION BY pipeline_id
+        |      ORDER BY used * 1000000 //
+        |        (CASE WHEN capacity = 0 THEN 1 ELSE capacity END) DESC,
+        |        used DESC, node) AS BIGINT) AS rnk,
+        |    used,
+        |    CASE WHEN capacity = 0 THEN 1 ELSE capacity END AS cap_eff
+        |  FROM pipe_nodes)""".stripMargin),
 
     // Finalization checkpoints + initFinalize ladder + pending-feature
     // walk over the shared component/feature literals.
-    "q_finalization_walk" -> {
-      val comps = T.finalizationComponentRows.map {
-        case (i, k, m, s, mk, st) =>
-          s"(CAST($i AS BIGINT), '$k', CAST($m AS BIGINT), " +
-            s"CAST($s AS BIGINT), $mk, '$st')"
-      }.mkString(",\n  ")
-      val feats = T.layoutFeatureRows.map { case (f, v) =>
-        s"('$f', CAST($v AS BIGINT))" }.mkString(",\n  ")
-      O.withCtes(
-        """SELECT c.comp_id, c.kind,
-          |  CASE WHEN mlv > slv THEN 'INVALID_MLV_AHEAD'
-          |    WHEN NOT has_mark AND mlv < slv THEN 'FINALIZATION_REQUIRED'
-          |    WHEN has_mark AND mlv < slv THEN 'FINALIZATION_STARTED'
-          |    WHEN has_mark THEN 'MLV_EQUALS_SLV'
-          |    ELSE 'FINALIZATION_COMPLETE' END AS checkpoint,
-          |  CASE WHEN mlv > slv THEN 'ERROR'
-          |    WHEN NOT has_mark AND mlv < slv THEN 'FINALIZATION_REQUIRED'
-          |    WHEN has_mark THEN 'FINALIZATION_IN_PROGRESS'
-          |    ELSE 'FINALIZATION_DONE' END AS client_status,
-          |  iv AS init_verdict,
-          |  coalesce(p.n_features, 0) AS n_features,
-          |  coalesce(p.first_feature, '') AS first_feature,
-          |  CASE WHEN iv = 'PROCEED' THEN slv ELSE mlv END AS target_mlv
-          |FROM (
-          |  SELECT *,
-          |    CASE WHEN mlv > slv THEN 'ERR_MLV_AHEAD'
-          |      WHEN upgrade_state = 'STARTING_FINALIZATION'
-          |        THEN 'STARTING'
-          |      WHEN upgrade_state = 'FINALIZATION_IN_PROGRESS'
-          |        THEN 'IN_PROGRESS'
-          |      WHEN upgrade_state IN ('FINALIZATION_DONE',
-          |          'ALREADY_FINALIZED') THEN
-          |        CASE WHEN mlv < slv THEN 'ERR_INCONSISTENT_DONE'
-          |          ELSE 'FINALIZED' END
-          |      ELSE CASE WHEN mlv >= slv
-          |        THEN 'ERR_INCONSISTENT_REQUIRED'
-          |        ELSE 'PROCEED' END END AS iv
-          |  FROM fin_comps) c
-          |LEFT JOIN (
-          |  SELECT comp_id, count(*) AS n_features,
-          |    min_by(feature, version) AS first_feature
-          |  FROM fin_comps JOIN layout_features
-          |    ON version > mlv AND version <= slv
-          |  GROUP BY 1) p ON p.comp_id = c.comp_id
-          |ORDER BY c.comp_id""".stripMargin,
-        s"""fin_comps(comp_id, kind, mlv, slv, has_mark, upgrade_state)
-           |  AS (VALUES
-           |  $comps)""".stripMargin,
-        s"""layout_features(feature, version) AS (VALUES
-           |  $feats)""".stripMargin)
-    },
+    "q_finalization_walk" -> O.withCtes(
+      """SELECT c.comp_id, c.kind,
+        |  CASE WHEN mlv > slv THEN 'INVALID_MLV_AHEAD'
+        |    WHEN NOT has_mark AND mlv < slv THEN 'FINALIZATION_REQUIRED'
+        |    WHEN has_mark AND mlv < slv THEN 'FINALIZATION_STARTED'
+        |    WHEN has_mark THEN 'MLV_EQUALS_SLV'
+        |    ELSE 'FINALIZATION_COMPLETE' END AS checkpoint,
+        |  CASE WHEN mlv > slv THEN 'ERROR'
+        |    WHEN NOT has_mark AND mlv < slv THEN 'FINALIZATION_REQUIRED'
+        |    WHEN has_mark THEN 'FINALIZATION_IN_PROGRESS'
+        |    ELSE 'FINALIZATION_DONE' END AS client_status,
+        |  iv AS init_verdict,
+        |  coalesce(p.n_features, 0) AS n_features,
+        |  coalesce(p.first_feature, '') AS first_feature,
+        |  CASE WHEN iv = 'PROCEED' THEN slv ELSE mlv END AS target_mlv
+        |FROM (
+        |  SELECT *,
+        |    CASE WHEN mlv > slv THEN 'ERR_MLV_AHEAD'
+        |      WHEN upgrade_state = 'STARTING_FINALIZATION'
+        |        THEN 'STARTING'
+        |      WHEN upgrade_state = 'FINALIZATION_IN_PROGRESS'
+        |        THEN 'IN_PROGRESS'
+        |      WHEN upgrade_state IN ('FINALIZATION_DONE',
+        |          'ALREADY_FINALIZED') THEN
+        |        CASE WHEN mlv < slv THEN 'ERR_INCONSISTENT_DONE'
+        |          ELSE 'FINALIZED' END
+        |      ELSE CASE WHEN mlv >= slv
+        |        THEN 'ERR_INCONSISTENT_REQUIRED'
+        |        ELSE 'PROCEED' END END AS iv
+        |  FROM fin_comps) c
+        |LEFT JOIN (
+        |  SELECT comp_id, count(*) AS n_features,
+        |    min_by(feature, version) AS first_feature
+        |  FROM fin_comps JOIN layout_features
+        |    ON version > mlv AND version <= slv
+        |  GROUP BY 1) p ON p.comp_id = c.comp_id
+        |ORDER BY c.comp_id""".stripMargin,
+      O.values("fin_comps", T.finalizationComponentRows),
+      O.values("layout_features", T.layoutFeatureRows)),
 
     // GDPR scrub mirror from the flat shared literals (the Spark side
     // does the real map_filter; kept keys sort alphabetically:
     // algorithm < custom < gdprEnabled < secret).
-    "q_gdpr_scrub" -> {
-      def qs(v: String) = if (v == null) "NULL" else s"'$v'"
-      val vals = T.gdprKeyRows.map { case (k, f, sec, alg, x, enc) =>
-        s"('$k', ${qs(f)}, $sec, $alg, '$x', $enc)" }.mkString(",\n  ")
-      O.withCtes(
-        """SELECT key_id, was_gdpr,
-          |  rtrim(
-          |    (CASE WHEN has_algorithm AND NOT was_gdpr
-          |       THEN 'algorithm,' ELSE '' END) ||
-          |    (CASE WHEN extra_meta <> '' THEN 'custom,' ELSE '' END) ||
-          |    (CASE WHEN gdpr_flag_raw IS NOT NULL AND NOT was_gdpr
-          |       THEN 'gdprEnabled,' ELSE '' END) ||
-          |    (CASE WHEN has_secret AND NOT was_gdpr
-          |       THEN 'secret,' ELSE '' END), ',') AS kept_meta,
-          |  has_enc_info AND NOT was_gdpr AS enc_kept,
-          |  CAST(7777 AS BIGINT) AS new_update_id
-          |FROM (
-          |  SELECT *,
-          |    lower(coalesce(gdpr_flag_raw, '')) = 'true' AS was_gdpr
-          |  FROM gdpr_keys)
-          |ORDER BY key_id""".stripMargin,
-        s"""gdpr_keys(key_id, gdpr_flag_raw, has_secret, has_algorithm,
-           |  extra_meta, has_enc_info) AS (VALUES
-           |  $vals)""".stripMargin)
-    },
+    "q_gdpr_scrub" -> O.withCtes(
+      """SELECT key_id, was_gdpr,
+        |  rtrim(
+        |    (CASE WHEN has_algorithm AND NOT was_gdpr
+        |       THEN 'algorithm,' ELSE '' END) ||
+        |    (CASE WHEN extra_meta <> '' THEN 'custom,' ELSE '' END) ||
+        |    (CASE WHEN gdpr_flag_raw IS NOT NULL AND NOT was_gdpr
+        |       THEN 'gdprEnabled,' ELSE '' END) ||
+        |    (CASE WHEN has_secret AND NOT was_gdpr
+        |       THEN 'secret,' ELSE '' END), ',') AS kept_meta,
+        |  has_enc_info AND NOT was_gdpr AS enc_kept,
+        |  CAST(7777 AS BIGINT) AS new_update_id
+        |FROM (
+        |  SELECT *,
+        |    lower(coalesce(gdpr_flag_raw, '')) = 'true' AS was_gdpr
+        |  FROM gdpr_keys)
+        |ORDER BY key_id""".stripMargin,
+      O.values("gdpr_keys", T.gdprKeyRows)),
 
     // Chatbot guard mirror: allowlist probe, bucket-scope rungs, the
     // limit-parse ladder (TRY_CAST + regex == Integer.parseInt incl. the
     // parseable-but-≤0 throw), over the SHARED call/allowlist literals.
-    "q_chatbot_guard" -> {
-      def qs(v: String) = if (v == null) "NULL" else s"'$v'"
-      val calls = T.chatbotCallRows.map { case (i, tool, p, l, pk) =>
-        s"(CAST($i AS BIGINT), ${qs(tool)}, ${qs(p)}, ${qs(l)}, $pk)"
-      }.mkString(",\n  ")
-      val tools = T.chatbotAllowlistRows.map(t => s"('$t')")
-        .mkString(",\n  ")
-      O.withCtes(
-        """SELECT call_id, verdict,
-          |  CAST(CASE WHEN verdict = 'ALLOWED'
-          |    THEN least(coalesce(parsed, 1000), 1000)
-          |    ELSE 0 END AS BIGINT) AS effective_limit,
-          |  (verdict = 'ALLOWED' AND has_prev_key) AS prev_key_stripped
-          |FROM (
-          |  SELECT c.*,
-          |    CASE WHEN tool_name = '' THEN 'FALLBACK'
-          |      WHEN tool_name NOT IN (SELECT tool FROM chatbot_tools)
-          |        THEN 'BLOCKED_UNKNOWN_TOOL'
-          |      WHEN tool_name = 'api_v1_keys_listKeys' AND NOT (
-          |          start_prefix IS NOT NULL
-          |          AND trim(start_prefix) <> ''
-          |          AND trim(start_prefix) <> '/'
-          |          AND trim(start_prefix) LIKE '/%'
-          |          AND trim(start_prefix) NOT LIKE '%..%'
-          |          AND len(list_filter(
-          |            string_split(trim(start_prefix), '/'),
-          |            x -> x <> '')) >= 2)
-          |        THEN 'BLOCKED_UNSCOPED'
-          |      WHEN parseable AND parsed <= 0 THEN 'ERROR_BAD_LIMIT'
-          |      ELSE 'ALLOWED' END AS verdict
-          |  FROM (
-          |    SELECT *,
-          |      limit_raw IS NOT NULL AND trim(limit_raw) <> ''
-          |        AND regexp_matches(trim(limit_raw), '^[+-]?[0-9]+$')
-          |        AND TRY_CAST(trim(limit_raw) AS DECIMAL(38,0))
-          |          BETWEEN -2147483648 AND 2147483647 AS parseable,
-          |      CASE WHEN limit_raw IS NOT NULL
-          |          AND trim(limit_raw) <> ''
-          |          AND regexp_matches(trim(limit_raw), '^[+-]?[0-9]+$')
-          |          AND TRY_CAST(trim(limit_raw) AS DECIMAL(38,0))
-          |            BETWEEN -2147483648 AND 2147483647
-          |        THEN CAST(trim(limit_raw) AS BIGINT) END AS parsed
-          |    FROM chatbot_calls) c)
-          |ORDER BY call_id""".stripMargin,
-        s"""chatbot_calls(call_id, tool_name, start_prefix, limit_raw,
-           |  has_prev_key) AS (VALUES
-           |  $calls)""".stripMargin,
-        s"""chatbot_tools(tool) AS (VALUES
-           |  $tools)""".stripMargin)
-    },
+    "q_chatbot_guard" -> O.withCtes(
+      """SELECT call_id, verdict,
+        |  CAST(CASE WHEN verdict = 'ALLOWED'
+        |    THEN least(coalesce(parsed, 1000), 1000)
+        |    ELSE 0 END AS BIGINT) AS effective_limit,
+        |  (verdict = 'ALLOWED' AND has_prev_key) AS prev_key_stripped
+        |FROM (
+        |  SELECT c.*,
+        |    CASE WHEN tool_name = '' THEN 'FALLBACK'
+        |      WHEN tool_name NOT IN (SELECT tool FROM chatbot_tools)
+        |        THEN 'BLOCKED_UNKNOWN_TOOL'
+        |      WHEN tool_name = 'api_v1_keys_listKeys' AND NOT (
+        |          start_prefix IS NOT NULL
+        |          AND trim(start_prefix) <> ''
+        |          AND trim(start_prefix) <> '/'
+        |          AND trim(start_prefix) LIKE '/%'
+        |          AND trim(start_prefix) NOT LIKE '%..%'
+        |          AND len(list_filter(
+        |            string_split(trim(start_prefix), '/'),
+        |            x -> x <> '')) >= 2)
+        |        THEN 'BLOCKED_UNSCOPED'
+        |      WHEN parseable AND parsed <= 0 THEN 'ERROR_BAD_LIMIT'
+        |      ELSE 'ALLOWED' END AS verdict
+        |  FROM (
+        |    SELECT *,
+        |      limit_raw IS NOT NULL AND trim(limit_raw) <> ''
+        |        AND regexp_matches(trim(limit_raw), '^[+-]?[0-9]+$')
+        |        AND TRY_CAST(trim(limit_raw) AS DECIMAL(38,0))
+        |          BETWEEN -2147483648 AND 2147483647 AS parseable,
+        |      CASE WHEN limit_raw IS NOT NULL
+        |          AND trim(limit_raw) <> ''
+        |          AND regexp_matches(trim(limit_raw), '^[+-]?[0-9]+$')
+        |          AND TRY_CAST(trim(limit_raw) AS DECIMAL(38,0))
+        |            BETWEEN -2147483648 AND 2147483647
+        |        THEN CAST(trim(limit_raw) AS BIGINT) END AS parsed
+        |    FROM chatbot_calls) c)
+        |ORDER BY call_id""".stripMargin,
+      O.values("chatbot_calls", T.chatbotCallRows),
+      O.values("chatbot_tools", T.chatbotAllowlistRows)),
 
     // EC writable-provider mirror over the shared scenario literals.
-    "q_ec_container_provider" -> {
-      val pipes = T.ecProviderPipelineRows.map { case (i, h, u) =>
-        s"(CAST($i AS BIGINT), $h, CAST($u AS BIGINT))" }.mkString(",\n  ")
-      val excl = T.ecProviderExcludeRows.map { case (s, p) =>
-        s"('$s', CAST($p AS BIGINT))" }.mkString(",\n  ")
-      val reqs = T.ecProviderRequestRows.map {
-        case (i, m, f, v, n, cf, s) =>
-          s"(CAST($i AS BIGINT), CAST($m AS BIGINT), CAST($f AS BIGINT), " +
-            s"CAST($v AS BIGINT), CAST($n AS BIGINT), $cf, '$s')"
-      }.mkString(",\n  ")
-      O.withCtes(
-        """SELECT req_id, CAST(max0 AS BIGINT) AS max_pipelines, outcome,
-          |  CAST(CASE WHEN outcome = 'SELECTED' THEN selected
-          |    ELSE 0 END AS BIGINT) AS chosen_pipeline,
-          |  CAST(CASE WHEN outcome = 'NEW_ALLOC_PREMAX' THEN 0
-          |    WHEN outcome = 'SELECTED' THEN coalesce(closed_before, 0)
-          |    ELSE closed_all END AS BIGINT) AS n_closed,
-          |  CAST(CASE WHEN outcome = 'NEW_ALLOC_PREMAX' THEN 0
-          |    WHEN outcome = 'SELECTED' THEN coalesce(skipped_before, 0)
-          |    ELSE skipped_all END AS BIGINT) AS n_skipped,
-          |  CAST(CASE WHEN outcome IN ('NEW_ALLOC_FINAL', 'FAIL_CREATE',
-          |      'FAIL_LIMIT') THEN fmax ELSE max0 END AS BIGINT)
-          |    AS final_max
-          |FROM (
-          |  SELECT *,
-          |    CASE WHEN pre_gate AND NOT create_fails
-          |        THEN 'NEW_ALLOC_PREMAX'
-          |      WHEN selected IS NOT NULL THEN 'SELECTED'
-          |      WHEN open_after < fmax THEN
-          |        CASE WHEN create_fails THEN 'FAIL_CREATE'
-          |          ELSE 'NEW_ALLOC_FINAL' END
-          |      ELSE 'FAIL_LIMIT' END AS outcome
-          |  FROM (
-          |    SELECT r.*, w.selected, w.closed_all, w.skipped_all,
-          |      p.closed_before, p.skipped_before,
-          |      greatest((factor_bp * healthy_volumes) // 50000,
-          |        min_pipelines) AS max0,
-          |      (SELECT count(*) FROM ecp_pipes) <
-          |        greatest((factor_bp * healthy_volumes) // 50000,
-          |          min_pipelines) AS pre_gate,
-          |      (SELECT count(*) FROM ecp_pipes) - w.closed_all
-          |        AS open_after,
-          |      CASE WHEN (SELECT count(*) FROM ecp_pipes) - w.closed_all
-          |          >= greatest((factor_bp * healthy_volumes) // 50000,
-          |            min_pipelines)
-          |          AND node_count >
-          |            greatest((factor_bp * healthy_volumes) // 50000,
-          |              min_pipelines)
-          |        THEN node_count
-          |        ELSE greatest((factor_bp * healthy_volumes) // 50000,
-          |          min_pipelines) END AS fmax
-          |    FROM ecp_reqs r
-          |    JOIN (
-          |      SELECT req_id,
-          |        min(CASE WHEN rung = 'OK' THEN pipeline_id END)
-          |          AS selected,
-          |        sum(CASE WHEN rung = 'CLOSE' THEN 1 ELSE 0 END)
-          |          AS closed_all,
-          |        sum(CASE WHEN rung = 'SKIP' THEN 1 ELSE 0 END)
-          |          AS skipped_all
-          |      FROM cls GROUP BY 1) w ON w.req_id = r.req_id
-          |    LEFT JOIN (
-          |      SELECT c.req_id,
-          |        sum(CASE WHEN c.rung = 'CLOSE'
-          |          AND c.pipeline_id < w2.selected THEN 1 ELSE 0 END)
-          |          AS closed_before,
-          |        sum(CASE WHEN c.rung = 'SKIP'
-          |          AND c.pipeline_id < w2.selected THEN 1 ELSE 0 END)
-          |          AS skipped_before
-          |      FROM cls c JOIN (
-          |        SELECT req_id,
-          |          min(CASE WHEN rung = 'OK' THEN pipeline_id END)
-          |            AS selected
-          |        FROM cls GROUP BY 1) w2 ON w2.req_id = c.req_id
-          |      WHERE w2.selected IS NOT NULL
-          |      GROUP BY 1) p ON p.req_id = r.req_id))
-          |ORDER BY req_id""".stripMargin,
-        s"""ecp_pipes(pipeline_id, has_container, used_bytes) AS (VALUES
-           |  $pipes)""".stripMargin,
-        s"""ecp_excl(set_id, pipeline_id) AS (VALUES
-           |  $excl)""".stripMargin,
-        s"""ecp_reqs(req_id, min_pipelines, factor_bp, healthy_volumes,
-           |  node_count, create_fails, set_id) AS (VALUES
-           |  $reqs)""".stripMargin,
-        """cls AS (
-          |  SELECT r.req_id, p.pipeline_id,
-          |    CASE WHEN NOT p.has_container
-          |        OR p.used_bytes + 100000 > 1000000 THEN 'CLOSE'
-          |      WHEN EXISTS (SELECT 1 FROM ecp_excl e
-          |        WHERE e.set_id = r.set_id
-          |          AND e.pipeline_id = p.pipeline_id) THEN 'SKIP'
-          |      ELSE 'OK' END AS rung
-          |  FROM ecp_reqs r, ecp_pipes p)""".stripMargin)
-    },
+    "q_ec_container_provider" -> O.withCtes(
+      """SELECT req_id, CAST(max0 AS BIGINT) AS max_pipelines, outcome,
+        |  CAST(CASE WHEN outcome = 'SELECTED' THEN selected
+        |    ELSE 0 END AS BIGINT) AS chosen_pipeline,
+        |  CAST(CASE WHEN outcome = 'NEW_ALLOC_PREMAX' THEN 0
+        |    WHEN outcome = 'SELECTED' THEN coalesce(closed_before, 0)
+        |    ELSE closed_all END AS BIGINT) AS n_closed,
+        |  CAST(CASE WHEN outcome = 'NEW_ALLOC_PREMAX' THEN 0
+        |    WHEN outcome = 'SELECTED' THEN coalesce(skipped_before, 0)
+        |    ELSE skipped_all END AS BIGINT) AS n_skipped,
+        |  CAST(CASE WHEN outcome IN ('NEW_ALLOC_FINAL', 'FAIL_CREATE',
+        |      'FAIL_LIMIT') THEN fmax ELSE max0 END AS BIGINT)
+        |    AS final_max
+        |FROM (
+        |  SELECT *,
+        |    CASE WHEN pre_gate AND NOT create_fails
+        |        THEN 'NEW_ALLOC_PREMAX'
+        |      WHEN selected IS NOT NULL THEN 'SELECTED'
+        |      WHEN open_after < fmax THEN
+        |        CASE WHEN create_fails THEN 'FAIL_CREATE'
+        |          ELSE 'NEW_ALLOC_FINAL' END
+        |      ELSE 'FAIL_LIMIT' END AS outcome
+        |  FROM (
+        |    SELECT r.*, w.selected, w.closed_all, w.skipped_all,
+        |      p.closed_before, p.skipped_before,
+        |      greatest((factor_bp * healthy_volumes) // 50000,
+        |        min_pipelines) AS max0,
+        |      (SELECT count(*) FROM ecp_pipes) <
+        |        greatest((factor_bp * healthy_volumes) // 50000,
+        |          min_pipelines) AS pre_gate,
+        |      (SELECT count(*) FROM ecp_pipes) - w.closed_all
+        |        AS open_after,
+        |      CASE WHEN (SELECT count(*) FROM ecp_pipes) - w.closed_all
+        |          >= greatest((factor_bp * healthy_volumes) // 50000,
+        |            min_pipelines)
+        |          AND node_count >
+        |            greatest((factor_bp * healthy_volumes) // 50000,
+        |              min_pipelines)
+        |        THEN node_count
+        |        ELSE greatest((factor_bp * healthy_volumes) // 50000,
+        |          min_pipelines) END AS fmax
+        |    FROM ecp_reqs r
+        |    JOIN (
+        |      SELECT req_id,
+        |        min(CASE WHEN rung = 'OK' THEN pipeline_id END)
+        |          AS selected,
+        |        sum(CASE WHEN rung = 'CLOSE' THEN 1 ELSE 0 END)
+        |          AS closed_all,
+        |        sum(CASE WHEN rung = 'SKIP' THEN 1 ELSE 0 END)
+        |          AS skipped_all
+        |      FROM cls GROUP BY 1) w ON w.req_id = r.req_id
+        |    LEFT JOIN (
+        |      SELECT c.req_id,
+        |        sum(CASE WHEN c.rung = 'CLOSE'
+        |          AND c.pipeline_id < w2.selected THEN 1 ELSE 0 END)
+        |          AS closed_before,
+        |        sum(CASE WHEN c.rung = 'SKIP'
+        |          AND c.pipeline_id < w2.selected THEN 1 ELSE 0 END)
+        |          AS skipped_before
+        |      FROM cls c JOIN (
+        |        SELECT req_id,
+        |          min(CASE WHEN rung = 'OK' THEN pipeline_id END)
+        |            AS selected
+        |        FROM cls GROUP BY 1) w2 ON w2.req_id = c.req_id
+        |      WHERE w2.selected IS NOT NULL
+        |      GROUP BY 1) p ON p.req_id = r.req_id))
+        |ORDER BY req_id""".stripMargin,
+      O.values("ecp_pipes", T.ecProviderPipelineRows),
+      O.values("ecp_excl", T.ecProviderExcludeRows),
+      O.values("ecp_reqs", T.ecProviderRequestRows),
+      """cls AS (
+        |  SELECT r.req_id, p.pipeline_id,
+        |    CASE WHEN NOT p.has_container
+        |        OR p.used_bytes + 100000 > 1000000 THEN 'CLOSE'
+        |      WHEN EXISTS (SELECT 1 FROM ecp_excl e
+        |        WHERE e.set_id = r.set_id
+        |          AND e.pipeline_id = p.pipeline_id) THEN 'SKIP'
+        |      ELSE 'OK' END AS rung
+        |  FROM ecp_reqs r, ecp_pipes p)""".stripMargin),
 
     // Pipeline-creator selection table over the shared scenario literals.
-    "q_pipeline_creator" -> {
-      val vals = T.pipelineCreatorScenarioRows.map {
-        case (i, t, a, c, l, s, cs) =>
-          s"(CAST($i AS BIGINT), '$t', $a, $c, $l, $s, $cs)"
-      }.mkString(",\n  ")
-      O.withCtes(
-        """SELECT sc_id,
-          |  CASE WHEN default_type = 'EC' THEN
-          |      CASE WHEN create_ratis_three_for_ec THEN 'RATIS/THREE'
-          |        ELSE '' END
-          |    WHEN default_type = 'RATIS' THEN
-          |      CASE WHEN auto_factor_one THEN 'RATIS/ONE,RATIS/THREE'
-          |        ELSE 'RATIS/THREE' END
-          |    WHEN default_type = 'STAND_ALONE' THEN 'STANDALONE/ONE'
-          |    ELSE '' END AS configs,
-          |  leader_ready AND (NOT in_safemode OR create_in_safemode)
-          |    AS runs
-          |FROM pc_scenarios
-          |ORDER BY sc_id""".stripMargin,
-        s"""pc_scenarios(sc_id, default_type, auto_factor_one,
-           |  create_ratis_three_for_ec, leader_ready, in_safemode,
-           |  create_in_safemode) AS (VALUES
-           |  $vals)""".stripMargin)
-    },
+    "q_pipeline_creator" -> O.withCtes(
+      """SELECT sc_id,
+        |  CASE WHEN default_type = 'EC' THEN
+        |      CASE WHEN create_ratis_three_for_ec THEN 'RATIS/THREE'
+        |        ELSE '' END
+        |    WHEN default_type = 'RATIS' THEN
+        |      CASE WHEN auto_factor_one THEN 'RATIS/ONE,RATIS/THREE'
+        |        ELSE 'RATIS/THREE' END
+        |    WHEN default_type = 'STAND_ALONE' THEN 'STANDALONE/ONE'
+        |    ELSE '' END AS configs,
+        |  leader_ready AND (NOT in_safemode OR create_in_safemode)
+        |    AS runs
+        |FROM pc_scenarios
+        |ORDER BY sc_id""".stripMargin,
+      O.values("pc_scenarios", T.pipelineCreatorScenarioRows)),
 
     // CLOSE_CONTAINER ladder over the shared event literals.
-    "q_close_container_event" -> {
-      val vals = T.closeContainerEventRows.map {
-        case (i, l, st, t, pe, np, nr, q) =>
-          s"(CAST($i AS BIGINT), $l, '$st', '$t', $pe, " +
-            s"CAST($np AS BIGINT), CAST($nr AS BIGINT), $q)"
-      }.mkString(",\n  ")
-      O.withCtes(
-        """SELECT event_id, action, finalized,
-          |  CAST(CASE WHEN action IN ('SENT', 'SENT_FORCE') THEN
-          |      CASE WHEN pipeline_exists THEN n_pipeline_nodes
-          |        ELSE n_replica_nodes END
-          |    ELSE 0 END AS BIGINT) AS n_targets
-          |FROM (
-          |  SELECT *,
-          |    CASE WHEN NOT is_leader THEN 'SKIP_NOT_LEADER'
-          |      WHEN eff_state <> 'CLOSING' THEN 'NOOP'
-          |      WHEN already_queued THEN 'SKIP_QUEUED'
-          |      WHEN rep_type <> 'RATIS' THEN 'SENT_FORCE'
-          |      ELSE 'SENT' END AS action
-          |  FROM (
-          |    SELECT *,
-          |      is_leader AND state = 'OPEN' AS finalized,
-          |      CASE WHEN is_leader AND state = 'OPEN' THEN 'CLOSING'
-          |        ELSE state END AS eff_state
-          |    FROM cce))
-          |ORDER BY event_id""".stripMargin,
-        s"""cce(event_id, is_leader, state, rep_type, pipeline_exists,
-           |  n_pipeline_nodes, n_replica_nodes, already_queued) AS (VALUES
-           |  $vals)""".stripMargin)
-    },
+    "q_close_container_event" -> O.withCtes(
+      """SELECT event_id, action, finalized,
+        |  CAST(CASE WHEN action IN ('SENT', 'SENT_FORCE') THEN
+        |      CASE WHEN pipeline_exists THEN n_pipeline_nodes
+        |        ELSE n_replica_nodes END
+        |    ELSE 0 END AS BIGINT) AS n_targets
+        |FROM (
+        |  SELECT *,
+        |    CASE WHEN NOT is_leader THEN 'SKIP_NOT_LEADER'
+        |      WHEN eff_state <> 'CLOSING' THEN 'NOOP'
+        |      WHEN already_queued THEN 'SKIP_QUEUED'
+        |      WHEN rep_type <> 'RATIS' THEN 'SENT_FORCE'
+        |      ELSE 'SENT' END AS action
+        |  FROM (
+        |    SELECT *,
+        |      is_leader AND state = 'OPEN' AS finalized,
+        |      CASE WHEN is_leader AND state = 'OPEN' THEN 'CLOSING'
+        |        ELSE state END AS eff_state
+        |    FROM cce))
+        |ORDER BY event_id""".stripMargin,
+      O.values("cce", T.closeContainerEventRows)),
 
     // Dead-node ladder over the shared event literals.
-    "q_dead_node_handler" -> {
-      val vals = T.deadNodeEventRows.map {
-        case (i, he, m, np, nr, nc, ht, it) =>
-          s"(CAST($i AS BIGINT), '$he', $m, CAST($np AS BIGINT), " +
-            s"CAST($nr AS BIGINT), CAST($nc AS BIGINT), '$ht', $it)"
-      }.mkString(",\n  ")
-      O.withCtes(
-        """SELECT node_id,
-          |  CASE WHEN health_at_event <> 'DEAD' THEN 'SKIP_NOT_DEAD'
-          |    ELSE 'HANDLED' END AS action,
-          |  CAST(CASE WHEN health_at_event = 'DEAD' THEN n_pipelines
-          |    ELSE 0 END AS BIGINT) AS pipelines_destroyed,
-          |  CAST(CASE WHEN health_at_event = 'DEAD' AND NOT in_maintenance
-          |    THEN n_replicas ELSE 0 END AS BIGINT) AS replicas_removed,
-          |  (health_at_event = 'DEAD' AND NOT in_maintenance)
-          |    AS rm_notified,
-          |  (health_at_event = 'DEAD' AND NOT in_maintenance)
-          |    AS dn_txns_purged,
-          |  CAST(CASE WHEN health_at_event = 'DEAD' THEN n_commands
-          |    ELSE 0 END AS BIGINT) AS commands_cleared,
-          |  (health_at_event = 'DEAD' AND health_at_topology = 'DEAD'
-          |    AND in_topology) AS topology_removed
-          |FROM dne
-          |ORDER BY node_id""".stripMargin,
-        s"""dne(node_id, health_at_event, in_maintenance, n_pipelines,
-           |  n_replicas, n_commands, health_at_topology, in_topology)
-           |  AS (VALUES
-           |  $vals)""".stripMargin)
-    },
+    "q_dead_node_handler" -> O.withCtes(
+      """SELECT node_id,
+        |  CASE WHEN health_at_event <> 'DEAD' THEN 'SKIP_NOT_DEAD'
+        |    ELSE 'HANDLED' END AS action,
+        |  CAST(CASE WHEN health_at_event = 'DEAD' THEN n_pipelines
+        |    ELSE 0 END AS BIGINT) AS pipelines_destroyed,
+        |  CAST(CASE WHEN health_at_event = 'DEAD' AND NOT in_maintenance
+        |    THEN n_replicas ELSE 0 END AS BIGINT) AS replicas_removed,
+        |  (health_at_event = 'DEAD' AND NOT in_maintenance)
+        |    AS rm_notified,
+        |  (health_at_event = 'DEAD' AND NOT in_maintenance)
+        |    AS dn_txns_purged,
+        |  CAST(CASE WHEN health_at_event = 'DEAD' THEN n_commands
+        |    ELSE 0 END AS BIGINT) AS commands_cleared,
+        |  (health_at_event = 'DEAD' AND health_at_topology = 'DEAD'
+        |    AND in_topology) AS topology_removed
+        |FROM dne
+        |ORDER BY node_id""".stripMargin,
+      O.values("dne", T.deadNodeEventRows)),
 
     // DN close-command ladder over the shared literals.
-    "q_dn_close_command" -> {
-      val vals = T.dnCloseCommandRows.map { case (i, p, st, ch, f) =>
-        s"(CAST($i AS BIGINT), $p, '$st', $ch, $f)" }.mkString(",\n  ")
-      O.withCtes(
-        """SELECT cmd_id,
-          |  CASE WHEN NOT container_present THEN 'MISSING'
-          |    WHEN state IN ('OPEN', 'CLOSING') THEN
-          |      CASE WHEN pipeline_in_channel THEN 'CLOSE_VIA_RATIS'
-          |        WHEN force THEN 'CLOSED_DIRECT'
-          |        ELSE 'QUASI_CLOSED' END
-          |    WHEN state = 'QUASI_CLOSED' THEN
-          |      CASE WHEN force THEN 'CLOSED_DIRECT' ELSE 'NOOP' END
-          |    WHEN state = 'CLOSED' THEN 'NOOP'
-          |    ELSE 'NOOP_BAD_STATE' END AS action,
-          |  (container_present AND state = 'OPEN') AS marked_closing
-          |FROM dcc
-          |ORDER BY cmd_id""".stripMargin,
-        s"""dcc(cmd_id, container_present, state, pipeline_in_channel,
-           |  force) AS (VALUES
-           |  $vals)""".stripMargin)
-    },
+    "q_dn_close_command" -> O.withCtes(
+      """SELECT cmd_id,
+        |  CASE WHEN NOT container_present THEN 'MISSING'
+        |    WHEN state IN ('OPEN', 'CLOSING') THEN
+        |      CASE WHEN pipeline_in_channel THEN 'CLOSE_VIA_RATIS'
+        |        WHEN force THEN 'CLOSED_DIRECT'
+        |        ELSE 'QUASI_CLOSED' END
+        |    WHEN state = 'QUASI_CLOSED' THEN
+        |      CASE WHEN force THEN 'CLOSED_DIRECT' ELSE 'NOOP' END
+        |    WHEN state = 'CLOSED' THEN 'NOOP'
+        |    ELSE 'NOOP_BAD_STATE' END AS action,
+        |  (container_present AND state = 'OPEN') AS marked_closing
+        |FROM dcc
+        |ORDER BY cmd_id""".stripMargin,
+      O.values("dcc", T.dnCloseCommandRows)),
 
     // EC degraded-read decision over the shared block literals.
-    "q_ec_degraded_read" -> {
-      val vals = T.ecReadBlockRows.map { case (i, d, p, c, l, a) =>
-        s"(CAST($i AS BIGINT), CAST($d AS BIGINT), CAST($p AS BIGINT), " +
-          s"CAST($c AS BIGINT), CAST($l AS BIGINT), '$a')"
-      }.mkString(",\n  ")
-      O.withCtes(
-        """SELECT block_id, expected_data, available_data,
-          |  CASE WHEN available_data < expected_data
-          |    THEN 'RECONSTRUCTION' ELSE 'NORMAL' END AS reader,
-          |  CAST(CASE WHEN available_data < expected_data
-          |    THEN expected_data - available_data ELSE 0 END AS BIGINT)
-          |    AS n_missing,
-          |  n_parity_avail,
-          |  CASE WHEN available_data >= expected_data THEN 'OK'
-          |    WHEN expected_data - available_data <= n_parity_avail
-          |      THEN 'OK'
-          |    ELSE 'INSUFFICIENT' END AS verdict
-          |FROM (
-          |  SELECT block_id,
-          |    least((block_len + chunk_size - 1) // chunk_size, ec_data)
-          |      AS expected_data,
-          |    CAST(len(list_distinct(list_filter(
-          |      list_transform(string_split(avail, ','),
-          |        x -> CAST(x AS BIGINT)),
-          |      x -> x >= 1 AND x <= least(
-          |        (block_len + chunk_size - 1) // chunk_size, ec_data))))
-          |      AS BIGINT) AS available_data,
-          |    CAST(len(list_distinct(list_filter(
-          |      list_transform(string_split(avail, ','),
-          |        x -> CAST(x AS BIGINT)),
-          |      x -> x > ec_data AND x <= ec_data + ec_parity)))
-          |      AS BIGINT) AS n_parity_avail
-          |  FROM ecr)
-          |ORDER BY block_id""".stripMargin,
-        s"""ecr(block_id, ec_data, ec_parity, chunk_size, block_len,
-           |  avail) AS (VALUES
-           |  $vals)""".stripMargin)
-    },
+    "q_ec_degraded_read" -> O.withCtes(
+      """SELECT block_id, expected_data, available_data,
+        |  CASE WHEN available_data < expected_data
+        |    THEN 'RECONSTRUCTION' ELSE 'NORMAL' END AS reader,
+        |  CAST(CASE WHEN available_data < expected_data
+        |    THEN expected_data - available_data ELSE 0 END AS BIGINT)
+        |    AS n_missing,
+        |  n_parity_avail,
+        |  CASE WHEN available_data >= expected_data THEN 'OK'
+        |    WHEN expected_data - available_data <= n_parity_avail
+        |      THEN 'OK'
+        |    ELSE 'INSUFFICIENT' END AS verdict
+        |FROM (
+        |  SELECT block_id,
+        |    least((block_len + chunk_size - 1) // chunk_size, ec_data)
+        |      AS expected_data,
+        |    CAST(len(list_distinct(list_filter(
+        |      list_transform(string_split(avail, ','),
+        |        x -> CAST(x AS BIGINT)),
+        |      x -> x >= 1 AND x <= least(
+        |        (block_len + chunk_size - 1) // chunk_size, ec_data))))
+        |      AS BIGINT) AS available_data,
+        |    CAST(len(list_distinct(list_filter(
+        |      list_transform(string_split(avail, ','),
+        |        x -> CAST(x AS BIGINT)),
+        |      x -> x > ec_data AND x <= ec_data + ec_parity)))
+        |      AS BIGINT) AS n_parity_avail
+        |  FROM ecr)
+        |ORDER BY block_id""".stripMargin,
+      O.values("ecr", T.ecReadBlockRows)),
 
     // URL canonicalization + keep-min dedup; the synthesis CTE mirrors
     // Tables.docUrls bit-for-bit.
@@ -10154,40 +9049,9 @@ object SparkEntry {
         |  LEFT JOIN ej_tracked t ON t.job_id = r.arg
         |  WHERE r.op = 'CANCEL')
         |ORDER BY req_id""".stripMargin,
-      """ej_tracked(job_idx, job_id, state, status, download_count)
-        |  AS (VALUES
-        |  (1, 'job1', 'MISSING', 'COMPLETED', 1),
-        |  (2, 'job2', 'UNDER_REPLICATED', 'RUNNING', 0),
-        |  (3, 'job3', 'OVER_REPLICATED', 'QUEUED', 0),
-        |  (4, 'job4', 'MIS_REPLICATED', 'FAILED', 0),
-        |  (5, 'job5', 'EMPTY_MISSING', 'COMPLETED', 2))""".stripMargin,
-      """ej_reqs(req_id, op, arg) AS (VALUES
-        |  (1, 'SUBMIT', 'ALL_REPLICAS_BAD'),
-        |  (2, 'SUBMIT', 'MISSING'),
-        |  (3, 'SUBMIT', 'UNDER_REPLICATED'),
-        |  (4, 'SUBMIT', 'MIS_REPLICATED'),
-        |  (5, 'SUBMIT', 'NEGATIVE_SIZE'),
-        |  (6, 'SUBMIT', 'ALL_REPLICAS_BAD'),
-        |  (7, 'SUBMIT', 'NEGATIVE_SIZE'),
-        |  (8, 'SUBMIT', 'BAD_STATE'),
-        |  (9, 'SUBMIT', 'REPLICA_MISMATCH'),
-        |  (10, 'STATUS', 'job3'),
-        |  (11, 'STATUS', 'job2'),
-        |  (12, 'STATUS', 'job4'),
-        |  (13, 'STATUS', 'job9'),
-        |  (14, 'DOWNLOAD', 'job1'),
-        |  (15, 'DOWNLOAD', 'job5'),
-        |  (16, 'DOWNLOAD', 'job2'),
-        |  (17, 'DOWNLOAD', 'job8'),
-        |  (18, 'CANCEL', 'job3'),
-        |  (19, 'CANCEL', 'job2'),
-        |  (20, 'CANCEL', 'job1'),
-        |  (21, 'CANCEL', 'job4'),
-        |  (22, 'CANCEL', 'job7'))""".stripMargin,
-      """ej_valid(vstate) AS (VALUES ('MISSING'), ('EMPTY_MISSING'),
-        |  ('UNDER_REPLICATED'), ('OVER_REPLICATED'), ('MIS_REPLICATED'),
-        |  ('ALL_REPLICAS_BAD'), ('NEGATIVE_SIZE'), ('REPLICA_MISMATCH'))"""
-        .stripMargin,
+      O.values("ej_tracked", T.exportJobTrackedRows),
+      O.values("ej_reqs", T.exportJobRequestRows),
+      O.values("ej_valid", T.exportJobValidStateRows),
       """ej_qpos AS (
         |  SELECT job_id, row_number() OVER (ORDER BY job_idx) AS qpos
         |  FROM ej_tracked WHERE status = 'QUEUED')""".stripMargin,
@@ -10338,13 +9202,11 @@ object SparkEntry {
          |ORDER BY req_id, metric, entity""".stripMargin,
       O.objects, O.objectsMixed, O.deletedDirs, O.replicas,
       O.containersScm,
+      O.values("pd_rows", T.pendingDeletionRequestRows),
       """pd_reqs AS (
-        |  SELECT req_id, component, lower(trim(component)) AS comp, lim
-        |  FROM (VALUES
-        |    (1, '', -1), (2, 'xyz', -1), (3, ' DN ', 2), (4, 'dn', 0),
-        |    (5, 'dn', -1), (6, 'scm', -1), (7, 'om', -1), (8, 'OM ', 5),
-        |    (9, ' ', -1))
-        |    t(req_id, component, lim))""".stripMargin,
+        |  SELECT req_id, component, lower(trim(component)) AS comp,
+        |    "limit" AS lim
+        |  FROM pd_rows)""".stripMargin,
       s"""pd_txns_live AS (
          |  SELECT t.txn_id, t.data_size, t.container_id,
          |    (t.data_size - 1) // ${graft.core.Tables.LocChunkBytes} + 1
@@ -10435,38 +9297,32 @@ object SparkEntry {
       O.objects, O.containersScm, O.containersOm, O.replicas),
 
     // ACL parent-chain routing over the shared scenario literals.
-    "q_acl_parent_chain" -> {
-      val vals = T.aclChainScenarioRows.map { case (i, r, a, o, n) =>
-        s"(CAST($i AS BIGINT), '$r', '$a', $o, $n)" }.mkString(",\n  ")
-      O.withCtes(
-        """SELECT sc_id,
-          |  CAST(CASE WHEN single THEN 1 ELSE 2 END AS BIGINT)
-          |    AS n_checks,
-          |  CASE WHEN single THEN res_type ELSE 'VOLUME' END AS first_res,
-          |  CASE WHEN single THEN acl_type
-          |    WHEN native_enabled AND res_type = 'BUCKET' THEN pna
-          |    ELSE 'READ' END AS first_right,
-          |  'volume' AS first_owner_ctx,
-          |  CASE WHEN single THEN '' ELSE acl_type END AS second_right,
-          |  CASE WHEN single THEN '' ELSE 'bucket' END
-          |    AS second_owner_ctx,
-          |  pna AS parent_native_acl
-          |FROM (
-          |  SELECT *,
-          |    res_type = 'VOLUME' OR is_vol_owner AS single,
-          |    CASE WHEN res_type = 'VOLUME' THEN 'NONE'
-          |      WHEN acl_type = 'CREATE' THEN 'WRITE'
-          |      WHEN res_type = 'BUCKET' THEN 'READ'
-          |      WHEN acl_type = 'WRITE' THEN 'WRITE'
-          |      WHEN acl_type IN ('DELETE', 'LIST', 'READ_ACL',
-          |        'WRITE_ACL') THEN 'READ'
-          |      ELSE acl_type END AS pna
-          |  FROM acs)
-          |ORDER BY sc_id""".stripMargin,
-        s"""acs(sc_id, res_type, acl_type, is_vol_owner, native_enabled)
-           |  AS (VALUES
-           |  $vals)""".stripMargin)
-    },
+    "q_acl_parent_chain" -> O.withCtes(
+      """SELECT sc_id,
+        |  CAST(CASE WHEN single THEN 1 ELSE 2 END AS BIGINT)
+        |    AS n_checks,
+        |  CASE WHEN single THEN res_type ELSE 'VOLUME' END AS first_res,
+        |  CASE WHEN single THEN acl_type
+        |    WHEN native_enabled AND res_type = 'BUCKET' THEN pna
+        |    ELSE 'READ' END AS first_right,
+        |  'volume' AS first_owner_ctx,
+        |  CASE WHEN single THEN '' ELSE acl_type END AS second_right,
+        |  CASE WHEN single THEN '' ELSE 'bucket' END
+        |    AS second_owner_ctx,
+        |  pna AS parent_native_acl
+        |FROM (
+        |  SELECT *,
+        |    res_type = 'VOLUME' OR is_vol_owner AS single,
+        |    CASE WHEN res_type = 'VOLUME' THEN 'NONE'
+        |      WHEN acl_type = 'CREATE' THEN 'WRITE'
+        |      WHEN res_type = 'BUCKET' THEN 'READ'
+        |      WHEN acl_type = 'WRITE' THEN 'WRITE'
+        |      WHEN acl_type IN ('DELETE', 'LIST', 'READ_ACL',
+        |        'WRITE_ACL') THEN 'READ'
+        |      ELSE acl_type END AS pna
+        |  FROM acs)
+        |ORDER BY sc_id""".stripMargin,
+      O.values("acs", T.aclChainScenarioRows)),
 
     // snapshot s1 = seq 1 = the create flood only: per-key max-size fold
     // with NONE of the churn (no doubling, no .mv keys, no deletes)
@@ -10626,84 +9482,45 @@ object SparkEntry {
         |  FROM documents)
         |ORDER BY doc_id""".stripMargin,
 
-    // balancer-admin mirror: the same VALUES batch + rung CASE
-    "q_balancer_admin" ->
+    // balancer-admin mirror: the same request batch + rung CASE
+    "q_balancer_admin" -> O.withCtes(
       """SELECT CAST(req_id AS BIGINT) AS req_id,
         |  CASE
-        |    WHEN thr IS NOT NULL AND (thr < 0.0 OR thr >= 100.0)
+        |    WHEN threshold IS NOT NULL
+        |        AND (threshold < 0.0 OR threshold >= 100.0)
         |      THEN 'THRESHOLD_RANGE'
         |    WHEN move_gb IS NOT NULL AND move_gb <= 0
         |      THEN 'MOVE_SIZE_NOT_POSITIVE'
         |    WHEN dn_pct IS NOT NULL AND (dn_pct <= 0 OR dn_pct > 100)
         |      THEN 'DN_PERCENT_RANGE'
-        |    WHEN iter IS NOT NULL AND (iter < -1 OR iter = 0)
+        |    WHEN iterations IS NOT NULL
+        |        AND (iterations < -1 OR iterations = 0)
         |      THEN 'ITERATIONS_INVALID'
-        |    WHEN ent_gb IS NOT NULL AND ent_gb <= 0
+        |    WHEN entering_gb IS NOT NULL AND entering_gb <= 0
         |      THEN 'ENTERING_NOT_POSITIVE'
-        |    WHEN lv_gb IS NOT NULL AND lv_gb <= 0
+        |    WHEN leaving_gb IS NOT NULL AND leaving_gb <= 0
         |      THEN 'LEAVING_NOT_POSITIVE'
-        |    WHEN intv IS NOT NULL AND intv <= 0
+        |    WHEN interval_min IS NOT NULL AND interval_min <= 0
         |      THEN 'INTERVAL_NOT_POSITIVE'
-        |    WHEN mv_to IS NOT NULL AND mv_to <= 0
+        |    WHEN move_to IS NOT NULL AND move_to <= 0
         |      THEN 'MOVE_TIMEOUT_NOT_POSITIVE'
-        |    WHEN rp_to IS NOT NULL AND rp_to <= 0
+        |    WHEN repl_to IS NOT NULL AND repl_to <= 0
         |      THEN 'REPL_TIMEOUT_NOT_POSITIVE'
         |    WHEN NOT leader THEN 'NOT_LEADER_READY'
         |    WHEN safemode THEN 'IN_SAFE_MODE'
         |    WHEN running THEN 'ALREADY_RUNNING'
-        |    WHEN coalesce(ent_gb, 26) <= 5
+        |    WHEN coalesce(entering_gb, 26) <= 5
         |      THEN 'ENTERING_LE_CONTAINER_SIZE'
-        |    WHEN coalesce(lv_gb, 26) <= 5
+        |    WHEN coalesce(leaving_gb, 26) <= 5
         |      THEN 'LEAVING_LE_CONTAINER_SIZE'
-        |    WHEN coalesce(ent_gb, 26) > coalesce(move_gb, 500)
+        |    WHEN coalesce(entering_gb, 26) > coalesce(move_gb, 500)
         |      THEN 'ENTERING_GT_MAX_MOVE'
-        |    WHEN coalesce(lv_gb, 26) > coalesce(move_gb, 500)
+        |    WHEN coalesce(leaving_gb, 26) > coalesce(move_gb, 500)
         |      THEN 'LEAVING_GT_MAX_MOVE'
         |    ELSE 'STARTED' END AS verdict
-        |FROM (VALUES
-        |  (1, 10.0, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL,
-        |    true, false, false),
-        |  (2, 100.0, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL,
-        |    true, false, false),
-        |  (3, -0.1, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL,
-        |    true, false, false),
-        |  (4, NULL, 0, NULL, NULL, NULL, NULL, NULL, NULL, NULL,
-        |    true, false, false),
-        |  (5, NULL, NULL, 101, NULL, NULL, NULL, NULL, NULL, NULL,
-        |    true, false, false),
-        |  (6, NULL, NULL, NULL, 0, NULL, NULL, NULL, NULL, NULL,
-        |    true, false, false),
-        |  (7, NULL, NULL, NULL, -1, NULL, NULL, NULL, NULL, NULL,
-        |    true, false, false),
-        |  (8, NULL, NULL, NULL, NULL, 0, NULL, NULL, NULL, NULL,
-        |    true, false, false),
-        |  (9, NULL, NULL, NULL, NULL, NULL, -3, NULL, NULL, NULL,
-        |    true, false, false),
-        |  (10, NULL, NULL, NULL, NULL, NULL, NULL, 0, NULL, NULL,
-        |    true, false, false),
-        |  (11, NULL, NULL, NULL, NULL, NULL, NULL, NULL, -1, NULL,
-        |    true, false, false),
-        |  (12, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, 0,
-        |    true, false, false),
-        |  (13, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL,
-        |    false, false, false),
-        |  (14, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL,
-        |    true, true, false),
-        |  (15, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL,
-        |    true, false, true),
-        |  (16, NULL, NULL, NULL, NULL, 5, NULL, NULL, NULL, NULL,
-        |    true, false, false),
-        |  (17, NULL, NULL, NULL, NULL, NULL, 4, NULL, NULL, NULL,
-        |    true, false, false),
-        |  (18, NULL, 20, NULL, NULL, 30, NULL, NULL, NULL, NULL,
-        |    true, false, false),
-        |  (19, NULL, 20, NULL, NULL, 10, 25, NULL, NULL, NULL,
-        |    true, false, false),
-        |  (20, 15.0, 600, 50, 3, 40, 40, 60, 30, 30,
-        |    true, false, false))
-        |  t(req_id, thr, move_gb, dn_pct, iter, ent_gb, lv_gb, intv,
-        |    mv_to, rp_to, leader, safemode, running)
+        |FROM bal_reqs
         |ORDER BY req_id""".stripMargin,
+      O.values("bal_reqs", T.balancerRequestRows)),
 
     // task-status mirror: the event-log head (puts + version%7 deletes,
     // seq-dense 0-based) minus per-task lags
@@ -10717,113 +9534,90 @@ object SparkEntry {
         |    AS last_task_run_status,
         |  CAST(CASE WHEN t.task_idx % 3 = 0 THEN 1 ELSE 0 END AS INT)
         |    AS is_current_task_running
-        |FROM (VALUES
-        |  ('FileSizeCountTask', 0), ('OmTableInsightTask', 1),
-        |  ('NSSummaryTask', 2), ('ContainerKeyMapperTask', 3),
-        |  ('ContainerHealthTask', 4), ('PipelineSyncTask', 5),
-        |  ('OmDeltaRequest', 6)) t(task_name, task_idx)
+        |FROM recon_tasks t
         |CROSS JOIN (
         |  SELECT count(*) +
         |    sum(CASE WHEN version % 7 = 0 THEN 1 ELSE 0 END)
         |    AS head_seq
         |  FROM objects) h
         |ORDER BY t.task_name""".stripMargin,
-      O.objects),
+      O.objects, O.values("recon_tasks", T.reconTaskRows)),
 
     // auth-dispatch mirror: the same chain over the SHARED rows
-    "q_auth_dispatch" -> {
-      def qlit(v: String) =
-        if (v == null) "NULL" else "'" + v.replace("'", "''") + "'"
-      val vals = T.authDispatchRows.map { case (i, h, q) =>
-        s"($i, ${qlit(h)}, $q)" }.mkString(",\n  ")
-      O.withCtes(
-        """SELECT CAST(req_id AS BIGINT) AS req_id, claimed_by,
-          |  CASE WHEN claimed_by IN ('V4_HEADER', 'V4_QUERY')
-          |    THEN 'DELEGATED'
-          |  WHEN claimed_by = 'NONE' THEN 'ANONYMOUS'
-          |  WHEN len(string_split(rtrim(auth_header, ' '), ' ')) <> 2
-          |    THEN 'MALFORMED'
-          |  WHEN len(frag) <> 2 THEN 'MALFORMED'
-          |  WHEN trim(frag[1]) = '' OR trim(frag[2]) = ''
-          |    THEN 'MALFORMED'
-          |  ELSE 'OK' END AS verdict,
-          |  CASE WHEN claimed_by = 'V2'
-          |      AND len(string_split(rtrim(auth_header, ' '), ' ')) = 2
-          |      AND len(frag) = 2 AND trim(frag[1]) <> ''
-          |      AND trim(frag[2]) <> ''
-          |    THEN frag[1] ELSE '' END AS access_id,
-          |  CASE WHEN claimed_by = 'V2'
-          |      AND len(string_split(rtrim(auth_header, ' '), ' ')) = 2
-          |      AND len(frag) = 2 AND trim(frag[1]) <> ''
-          |      AND trim(frag[2]) <> ''
-          |    THEN frag[2] ELSE '' END AS signature
-          |FROM (
-          |  SELECT *,
-          |    string_split(rtrim(substring(auth_header, 5), ':'), ':')
-          |      AS frag,
-          |    CASE
-          |    WHEN auth_header IS NOT NULL
-          |      AND starts_with(auth_header, 'AWS4') THEN 'V4_HEADER'
-          |    WHEN has_query_sig THEN 'V4_QUERY'
-          |    WHEN auth_header IS NOT NULL
-          |      AND starts_with(auth_header, 'AWS ') THEN 'V2'
-          |    ELSE 'NONE' END AS claimed_by
-          |  FROM auth_req)
-          |ORDER BY req_id""".stripMargin,
-        s"auth_req(req_id, auth_header, has_query_sig) AS (VALUES\n  $vals)")
-    },
+    "q_auth_dispatch" -> O.withCtes(
+      """SELECT CAST(req_id AS BIGINT) AS req_id, claimed_by,
+        |  CASE WHEN claimed_by IN ('V4_HEADER', 'V4_QUERY')
+        |    THEN 'DELEGATED'
+        |  WHEN claimed_by = 'NONE' THEN 'ANONYMOUS'
+        |  WHEN len(string_split(rtrim(auth_header, ' '), ' ')) <> 2
+        |    THEN 'MALFORMED'
+        |  WHEN len(frag) <> 2 THEN 'MALFORMED'
+        |  WHEN trim(frag[1]) = '' OR trim(frag[2]) = ''
+        |    THEN 'MALFORMED'
+        |  ELSE 'OK' END AS verdict,
+        |  CASE WHEN claimed_by = 'V2'
+        |      AND len(string_split(rtrim(auth_header, ' '), ' ')) = 2
+        |      AND len(frag) = 2 AND trim(frag[1]) <> ''
+        |      AND trim(frag[2]) <> ''
+        |    THEN frag[1] ELSE '' END AS access_id,
+        |  CASE WHEN claimed_by = 'V2'
+        |      AND len(string_split(rtrim(auth_header, ' '), ' ')) = 2
+        |      AND len(frag) = 2 AND trim(frag[1]) <> ''
+        |      AND trim(frag[2]) <> ''
+        |    THEN frag[2] ELSE '' END AS signature
+        |FROM (
+        |  SELECT *,
+        |    string_split(rtrim(substring(auth_header, 5), ':'), ':')
+        |      AS frag,
+        |    CASE
+        |    WHEN auth_header IS NOT NULL
+        |      AND starts_with(auth_header, 'AWS4') THEN 'V4_HEADER'
+        |    WHEN has_query_sig THEN 'V4_QUERY'
+        |    WHEN auth_header IS NOT NULL
+        |      AND starts_with(auth_header, 'AWS ') THEN 'V2'
+        |    ELSE 'NONE' END AS claimed_by
+        |  FROM auth_req)
+        |ORDER BY req_id""".stripMargin,
+      O.values("auth_req", T.authDispatchRows)),
 
     // range-header mirror: the same decision table over the SHARED rows
-    "q_range_header" -> {
-      val vals = T.rangeHeaderRows.map { case (i, h) =>
-        s"($i, '${h.replace("'", "''")}')" }.mkString(",\n  ")
-      O.withCtes(
-        """SELECT CAST(req_id AS BIGINT) AS req_id, range_header,
-          |  CAST(CASE WHEN NOT m THEN 0
-          |    WHEN nostart THEN
-          |      CASE WHEN e0 < 100 THEN 100 - e0 ELSE 0 END
-          |    WHEN s0 >= 100 THEN
-          |      CASE WHEN e0 >= 100 THEN s0 ELSE 0 END
-          |    ELSE s0 END AS BIGINT) AS "start",
-          |  CAST(CASE WHEN NOT m THEN 99
-          |    WHEN nostart THEN 99
-          |    WHEN s0 >= 100 THEN
-          |      CASE WHEN e0 >= 100 THEN e0 ELSE 99 END
-          |    WHEN e0 >= 100 THEN 99
-          |    ELSE e0 END AS BIGINT) AS "end",
-          |  (NOT m OR (NOT nostart AND s0 >= 100)) AS read_full,
-          |  (m AND NOT nostart AND s0 >= 100 AND e0 >= 100)
-          |    AS invalid_range
-          |FROM (
-          |  SELECT *,
-          |    regexp_matches(range_header, '^bytes=[0-9]*-[0-9]*$')
-          |      AS m,
-          |    regexp_extract(range_header,
-          |      '^bytes=([0-9]*)-([0-9]*)$', 1) = '' AS nostart,
-          |    CASE WHEN regexp_extract(range_header,
-          |        '^bytes=([0-9]*)-([0-9]*)$', 1) = '' THEN 0
-          |      ELSE CAST(regexp_extract(range_header,
-          |        '^bytes=([0-9]*)-([0-9]*)$', 1) AS BIGINT) END AS s0,
-          |    CASE WHEN regexp_extract(range_header,
-          |        '^bytes=([0-9]*)-([0-9]*)$', 2) = '' THEN 99
-          |      ELSE CAST(regexp_extract(range_header,
-          |        '^bytes=([0-9]*)-([0-9]*)$', 2) AS BIGINT) END AS e0
-          |  FROM range_req)
-          |ORDER BY req_id""".stripMargin,
-        s"range_req(req_id, range_header) AS (VALUES\n  $vals)")
-    },
+    "q_range_header" -> O.withCtes(
+      """SELECT CAST(req_id AS BIGINT) AS req_id, range_header,
+        |  CAST(CASE WHEN NOT m THEN 0
+        |    WHEN nostart THEN
+        |      CASE WHEN e0 < 100 THEN 100 - e0 ELSE 0 END
+        |    WHEN s0 >= 100 THEN
+        |      CASE WHEN e0 >= 100 THEN s0 ELSE 0 END
+        |    ELSE s0 END AS BIGINT) AS "start",
+        |  CAST(CASE WHEN NOT m THEN 99
+        |    WHEN nostart THEN 99
+        |    WHEN s0 >= 100 THEN
+        |      CASE WHEN e0 >= 100 THEN e0 ELSE 99 END
+        |    WHEN e0 >= 100 THEN 99
+        |    ELSE e0 END AS BIGINT) AS "end",
+        |  (NOT m OR (NOT nostart AND s0 >= 100)) AS read_full,
+        |  (m AND NOT nostart AND s0 >= 100 AND e0 >= 100)
+        |    AS invalid_range
+        |FROM (
+        |  SELECT *,
+        |    regexp_matches(range_header, '^bytes=[0-9]*-[0-9]*$')
+        |      AS m,
+        |    regexp_extract(range_header,
+        |      '^bytes=([0-9]*)-([0-9]*)$', 1) = '' AS nostart,
+        |    CASE WHEN regexp_extract(range_header,
+        |        '^bytes=([0-9]*)-([0-9]*)$', 1) = '' THEN 0
+        |      ELSE CAST(regexp_extract(range_header,
+        |        '^bytes=([0-9]*)-([0-9]*)$', 1) AS BIGINT) END AS s0,
+        |    CASE WHEN regexp_extract(range_header,
+        |        '^bytes=([0-9]*)-([0-9]*)$', 2) = '' THEN 99
+        |      ELSE CAST(regexp_extract(range_header,
+        |        '^bytes=([0-9]*)-([0-9]*)$', 2) AS BIGINT) END AS e0
+        |  FROM range_req)
+        |ORDER BY req_id""".stripMargin,
+      O.values("range_req", T.rangeHeaderRows)),
 
     // string-to-sign mirror: the same construction over the SHARED rows
     "q_string_to_sign" -> {
-      def qlit(v: Any): String = v match {
-        case null => "NULL"
-        case b: Boolean => if (b) "true" else "false"
-        case s: String => "'" + s.replace("'", "''") + "'"
-        case x => x.toString
-      }
-      val vals = T.stringToSignRows.map { r =>
-        "(" + r.productIterator.map(qlit).mkString(", ") + ")"
-      }.mkString(",\n  ")
       val enc = (x: String) =>
         s"replace(replace(replace(replace($x, '+', '%2B'), ' ', " +
           s"'%20'), '*', '%2A'), '/', '%2F')"
@@ -10903,173 +9697,157 @@ object SparkEntry {
            |            p -> p.k <> '') AS qp
            |        FROM sts_req))))
            |ORDER BY req_id""".stripMargin,
-        s"""sts_req(req_id, method, uri, signed_headers, headers_str,
-           |  query_str, algorithm, dt, scope, sign_payload)
-           |  AS (VALUES
-           |  $vals)""".stripMargin)
+        O.values("sts_req", T.stringToSignRows))
     },
 
     // presigned mirror: the same ladder over the SHARED row literals
-    "q_presigned_parse" -> {
-      def qlit(v: String) =
-        if (v == null) "NULL" else "'" + v.replace("'", "''") + "'"
-      val vals = T.presignedRows.map { case (i, a, d, e, c, sh, sg) =>
-        s"($i, ${qlit(a)}, ${qlit(d)}, ${qlit(e)}, ${qlit(c)}, " +
-          s"${qlit(sh)}, ${qlit(sg)})" }.mkString(",\n  ")
-      O.withCtes(
-        """SELECT CAST(req_id AS BIGINT) AS req_id, verdict,
-          |  CAST(CASE WHEN verdict = 'NOT_PRESIGNED' THEN 0
-          |    WHEN verdict IN ('EXPIRES_OUT_OF_RANGE', 'URL_EXPIRED')
-          |      THEN 403
-          |    WHEN verdict = 'OK' THEN 200 ELSE 400 END AS BIGINT)
-          |    AS http,
-          |  CASE WHEN verdict = 'OK' THEN trim(access_id) ELSE '' END
-          |    AS access_id,
-          |  CASE WHEN verdict = 'OK' THEN trim(cred_date) || '/' ||
-          |    trim(region) || '/' || trim(service) || '/' ||
-          |    trim(aws_req) ELSE '' END AS cred_scope
-          |FROM (
-          |  SELECT *,
-          |    CASE
-          |    WHEN signature IS NULL THEN 'NOT_PRESIGNED'
-          |    WHEN algorithm IS NULL THEN 'NO_ALGORITHM'
-          |    WHEN algorithm = '' OR algorithm <> 'AWS4-HMAC-SHA256'
-          |      THEN 'BAD_ALGORITHM'
-          |    WHEN amz_date IS NULL OR amz_date = ''
-          |      OR expires IS NULL OR expires = ''
-          |      THEN 'MISSING_DATE_OR_EXPIRES'
-          |    WHEN expl < 1 OR expl > 604800
-          |      THEN 'EXPIRES_OUT_OF_RANGE'
-          |    WHEN pts IS NULL THEN 'BAD_AMZ_DATE'
-          |    WHEN epoch(pts) + expl < 1684929600 THEN 'URL_EXPIRED'
-          |    WHEN len(cred) NOT IN (5, 6)
-          |      THEN 'BAD_CREDENTIAL_FORMAT'
-          |    WHEN trim(access_id) = '' THEN 'EMPTY_ACCESS_ID'
-          |    WHEN trim(region) = '' THEN 'EMPTY_REGION'
-          |    WHEN trim(aws_req) <> 'aws4_request'
-          |      THEN 'BAD_AWS_REQUEST'
-          |    WHEN trim(service) = '' THEN 'EMPTY_SERVICE'
-          |    WHEN trim(cred_date) = '' THEN 'EMPTY_CRED_DATE'
-          |    WHEN NOT regexp_matches(trim(cred_date), '^[0-9]{8}$')
-          |      OR CAST(try_strptime(trim(cred_date), '%Y%m%d')
-          |        AS DATE) IS NULL THEN 'BAD_CRED_DATE'
-          |    WHEN signed_headers IS NULL OR signed_headers = ''
-          |      THEN 'NO_SIGNED_HEADERS'
-          |    WHEN signature = '' THEN 'EMPTY_SIGNATURE'
-          |    WHEN NOT regexp_matches(signature,
-          |      '^([0-9a-fA-F]{2})*$') THEN 'NON_HEX_SIGNATURE'
-          |    ELSE 'OK' END AS verdict
-          |  FROM (
-          |    SELECT *,
-          |      CASE WHEN len(cred) = 6 THEN cred[1] || '/' || cred[2]
-          |        ELSE cred[1] END AS access_id,
-          |      CASE WHEN len(cred) = 6 THEN cred[3] ELSE cred[2] END
-          |        AS cred_date,
-          |      CASE WHEN len(cred) = 6 THEN cred[4] ELSE cred[3] END
-          |        AS region,
-          |      CASE WHEN len(cred) = 6 THEN cred[5] ELSE cred[4] END
-          |        AS service,
-          |      CASE WHEN len(cred) = 6 THEN cred[6] ELSE cred[5] END
-          |        AS aws_req
-          |    FROM (
-          |      SELECT *,
-          |        string_split(replace(replace(credential, '%2F',
-          |          '/'), '%40', '@'), '/') AS cred,
-          |        try_strptime(amz_date, '%Y%m%dT%H%M%SZ') AS pts,
-          |        TRY_CAST(expires AS BIGINT) AS expl
-          |      FROM ps_req)))
-          |ORDER BY req_id""".stripMargin,
-        s"""ps_req(req_id, algorithm, amz_date, expires, credential,
-           |  signed_headers, signature) AS (VALUES
-           |  $vals)""".stripMargin)
-    },
+    "q_presigned_parse" -> O.withCtes(
+      """SELECT CAST(req_id AS BIGINT) AS req_id, verdict,
+        |  CAST(CASE WHEN verdict = 'NOT_PRESIGNED' THEN 0
+        |    WHEN verdict IN ('EXPIRES_OUT_OF_RANGE', 'URL_EXPIRED')
+        |      THEN 403
+        |    WHEN verdict = 'OK' THEN 200 ELSE 400 END AS BIGINT)
+        |    AS http,
+        |  CASE WHEN verdict = 'OK' THEN trim(access_id) ELSE '' END
+        |    AS access_id,
+        |  CASE WHEN verdict = 'OK' THEN trim(cred_date) || '/' ||
+        |    trim(region) || '/' || trim(service) || '/' ||
+        |    trim(aws_req) ELSE '' END AS cred_scope
+        |FROM (
+        |  SELECT *,
+        |    CASE
+        |    WHEN signature IS NULL THEN 'NOT_PRESIGNED'
+        |    WHEN algorithm IS NULL THEN 'NO_ALGORITHM'
+        |    WHEN algorithm = '' OR algorithm <> 'AWS4-HMAC-SHA256'
+        |      THEN 'BAD_ALGORITHM'
+        |    WHEN amz_date IS NULL OR amz_date = ''
+        |      OR expires IS NULL OR expires = ''
+        |      THEN 'MISSING_DATE_OR_EXPIRES'
+        |    WHEN expl < 1 OR expl > 604800
+        |      THEN 'EXPIRES_OUT_OF_RANGE'
+        |    WHEN pts IS NULL THEN 'BAD_AMZ_DATE'
+        |    WHEN epoch(pts) + expl < 1684929600 THEN 'URL_EXPIRED'
+        |    WHEN len(cred) NOT IN (5, 6)
+        |      THEN 'BAD_CREDENTIAL_FORMAT'
+        |    WHEN trim(access_id) = '' THEN 'EMPTY_ACCESS_ID'
+        |    WHEN trim(region) = '' THEN 'EMPTY_REGION'
+        |    WHEN trim(aws_req) <> 'aws4_request'
+        |      THEN 'BAD_AWS_REQUEST'
+        |    WHEN trim(service) = '' THEN 'EMPTY_SERVICE'
+        |    WHEN trim(cred_date) = '' THEN 'EMPTY_CRED_DATE'
+        |    WHEN NOT regexp_matches(trim(cred_date), '^[0-9]{8}$')
+        |      OR CAST(try_strptime(trim(cred_date), '%Y%m%d')
+        |        AS DATE) IS NULL THEN 'BAD_CRED_DATE'
+        |    WHEN signed_headers IS NULL OR signed_headers = ''
+        |      THEN 'NO_SIGNED_HEADERS'
+        |    WHEN signature = '' THEN 'EMPTY_SIGNATURE'
+        |    WHEN NOT regexp_matches(signature,
+        |      '^([0-9a-fA-F]{2})*$') THEN 'NON_HEX_SIGNATURE'
+        |    ELSE 'OK' END AS verdict
+        |  FROM (
+        |    SELECT *,
+        |      CASE WHEN len(cred) = 6 THEN cred[1] || '/' || cred[2]
+        |        ELSE cred[1] END AS access_id,
+        |      CASE WHEN len(cred) = 6 THEN cred[3] ELSE cred[2] END
+        |        AS cred_date,
+        |      CASE WHEN len(cred) = 6 THEN cred[4] ELSE cred[3] END
+        |        AS region,
+        |      CASE WHEN len(cred) = 6 THEN cred[5] ELSE cred[4] END
+        |        AS service,
+        |      CASE WHEN len(cred) = 6 THEN cred[6] ELSE cred[5] END
+        |        AS aws_req
+        |    FROM (
+        |      SELECT *,
+        |        string_split(replace(replace(credential, '%2F',
+        |          '/'), '%40', '@'), '/') AS cred,
+        |        try_strptime(amz_date, '%Y%m%dT%H%M%SZ') AS pts,
+        |        TRY_CAST(expires AS BIGINT) AS expl
+        |      FROM ps_req)))
+        |ORDER BY req_id""".stripMargin,
+      O.values("ps_req", T.presignedRows)),
 
     // V4-header mirror: the same ladder over the SHARED row literals
-    "q_sigv4_header_parse" -> {
-      val vals = T.sigv4HeaderRows.map { case (i, h) =>
-        s"($i, '${h.replace("'", "''")}')" }.mkString(",\n  ")
-      O.withCtes(
-        """SELECT CAST(req_id AS BIGINT) AS req_id, verdict,
-          |  CASE WHEN verdict = 'OK' THEN trim(access_id)
-          |    ELSE '' END AS access_id,
-          |  CASE WHEN verdict = 'OK' THEN trim(cred_date) || '/' ||
-          |    trim(region) || '/' || trim(service) || '/' ||
-          |    trim(aws_req) ELSE '' END AS cred_scope,
-          |  CASE WHEN verdict = 'OK' THEN sh_body ELSE '' END
-          |    AS signed_headers,
-          |  CASE WHEN verdict = 'OK' THEN sig_body ELSE '' END
-          |    AS signature
-          |FROM (
-          |  SELECT *,
-          |    CASE
-          |    WHEN auth_header IS NULL
-          |      OR NOT starts_with(auth_header, 'AWS4') THEN 'NOT_V4'
-          |    WHEN sep = 0 THEN 'NO_SEPARATOR'
-          |    WHEN len(parts) <> 3 THEN 'BAD_PART_COUNT'
-          |    WHEN algo <> 'AWS4-HMAC-SHA256' THEN 'BAD_ALGORITHM'
-          |    WHEN NOT starts_with(parts[1], 'Credential=')
-          |      THEN 'NO_CREDENTIAL'
-          |    WHEN len(cred) NOT IN (5, 6)
-          |      THEN 'BAD_CREDENTIAL_FORMAT'
-          |    WHEN trim(access_id) = '' THEN 'EMPTY_ACCESS_ID'
-          |    WHEN trim(region) = '' THEN 'EMPTY_REGION'
-          |    WHEN trim(aws_req) <> 'aws4_request'
-          |      THEN 'BAD_AWS_REQUEST'
-          |    WHEN trim(service) = '' THEN 'EMPTY_SERVICE'
-          |    WHEN trim(cred_date) = '' THEN 'EMPTY_DATE'
-          |    WHEN NOT regexp_matches(trim(cred_date), '^[0-9]{8}$')
-          |      OR CAST(try_strptime(trim(cred_date), '%Y%m%d')
-          |        AS DATE) IS NULL THEN 'BAD_DATE_FORMAT'
-          |    WHEN CAST(try_strptime(trim(cred_date), '%Y%m%d')
-          |        AS DATE) < DATE '2023-05-24' - 1
-          |      OR CAST(try_strptime(trim(cred_date), '%Y%m%d')
-          |        AS DATE) > DATE '2023-05-24' + 1
-          |      THEN 'DATE_OUT_OF_RANGE'
-          |    WHEN NOT starts_with(parts[2], 'SignedHeaders=')
-          |      OR sh_count = 0 THEN 'NO_SIGNED_HEADERS'
-          |    WHEN NOT starts_with(parts[3], 'Signature=')
-          |      THEN 'NO_SIGNATURE'
-          |    WHEN sig_body = '' THEN 'EMPTY_SIGNATURE'
-          |    WHEN NOT regexp_matches(sig_body,
-          |      '^([0-9a-fA-F]{2})*$') THEN 'NON_HEX_SIGNATURE'
-          |    ELSE 'OK' END AS verdict
-          |  FROM (
-          |    SELECT *,
-          |      len(cred) AS credn,
-          |      CASE WHEN len(cred) = 6 THEN cred[1] || '/' || cred[2]
-          |        ELSE cred[1] END AS access_id,
-          |      CASE WHEN len(cred) = 6 THEN cred[3] ELSE cred[2] END
-          |        AS cred_date,
-          |      CASE WHEN len(cred) = 6 THEN cred[4] ELSE cred[3] END
-          |        AS region,
-          |      CASE WHEN len(cred) = 6 THEN cred[5] ELSE cred[4] END
-          |        AS service,
-          |      CASE WHEN len(cred) = 6 THEN cred[6] ELSE cred[5] END
-          |        AS aws_req,
-          |      len(list_filter(string_split(substring(parts[2],
-          |        length('SignedHeaders=') + 1), ';'),
-          |        x -> trim(x) <> '')) AS sh_count,
-          |      substring(parts[2], length('SignedHeaders=') + 1)
-          |        AS sh_body,
-          |      substring(parts[3], length('Signature=') + 1)
-          |        AS sig_body
-          |    FROM (
-          |      SELECT req_id, auth_header,
-          |        instr(auth_header, ' ') AS sep,
-          |        CASE WHEN instr(auth_header, ' ') > 0
-          |          THEN substring(auth_header, 1,
-          |            instr(auth_header, ' ') - 1)
-          |          ELSE '' END AS algo,
-          |        regexp_split_to_array(trim(substring(auth_header,
-          |          instr(auth_header, ' ') + 1)), ', *') AS parts,
-          |        string_split(substring(
-          |          regexp_split_to_array(trim(substring(auth_header,
-          |            instr(auth_header, ' ') + 1)), ', *')[1],
-          |          length('Credential=') + 1), '/') AS cred
-          |      FROM v4_req)))
-          |ORDER BY req_id""".stripMargin,
-        s"v4_req(req_id, auth_header) AS (VALUES\n  $vals)")
-    },
+    "q_sigv4_header_parse" -> O.withCtes(
+      """SELECT CAST(req_id AS BIGINT) AS req_id, verdict,
+        |  CASE WHEN verdict = 'OK' THEN trim(access_id)
+        |    ELSE '' END AS access_id,
+        |  CASE WHEN verdict = 'OK' THEN trim(cred_date) || '/' ||
+        |    trim(region) || '/' || trim(service) || '/' ||
+        |    trim(aws_req) ELSE '' END AS cred_scope,
+        |  CASE WHEN verdict = 'OK' THEN sh_body ELSE '' END
+        |    AS signed_headers,
+        |  CASE WHEN verdict = 'OK' THEN sig_body ELSE '' END
+        |    AS signature
+        |FROM (
+        |  SELECT *,
+        |    CASE
+        |    WHEN auth_header IS NULL
+        |      OR NOT starts_with(auth_header, 'AWS4') THEN 'NOT_V4'
+        |    WHEN sep = 0 THEN 'NO_SEPARATOR'
+        |    WHEN len(parts) <> 3 THEN 'BAD_PART_COUNT'
+        |    WHEN algo <> 'AWS4-HMAC-SHA256' THEN 'BAD_ALGORITHM'
+        |    WHEN NOT starts_with(parts[1], 'Credential=')
+        |      THEN 'NO_CREDENTIAL'
+        |    WHEN len(cred) NOT IN (5, 6)
+        |      THEN 'BAD_CREDENTIAL_FORMAT'
+        |    WHEN trim(access_id) = '' THEN 'EMPTY_ACCESS_ID'
+        |    WHEN trim(region) = '' THEN 'EMPTY_REGION'
+        |    WHEN trim(aws_req) <> 'aws4_request'
+        |      THEN 'BAD_AWS_REQUEST'
+        |    WHEN trim(service) = '' THEN 'EMPTY_SERVICE'
+        |    WHEN trim(cred_date) = '' THEN 'EMPTY_DATE'
+        |    WHEN NOT regexp_matches(trim(cred_date), '^[0-9]{8}$')
+        |      OR CAST(try_strptime(trim(cred_date), '%Y%m%d')
+        |        AS DATE) IS NULL THEN 'BAD_DATE_FORMAT'
+        |    WHEN CAST(try_strptime(trim(cred_date), '%Y%m%d')
+        |        AS DATE) < DATE '2023-05-24' - 1
+        |      OR CAST(try_strptime(trim(cred_date), '%Y%m%d')
+        |        AS DATE) > DATE '2023-05-24' + 1
+        |      THEN 'DATE_OUT_OF_RANGE'
+        |    WHEN NOT starts_with(parts[2], 'SignedHeaders=')
+        |      OR sh_count = 0 THEN 'NO_SIGNED_HEADERS'
+        |    WHEN NOT starts_with(parts[3], 'Signature=')
+        |      THEN 'NO_SIGNATURE'
+        |    WHEN sig_body = '' THEN 'EMPTY_SIGNATURE'
+        |    WHEN NOT regexp_matches(sig_body,
+        |      '^([0-9a-fA-F]{2})*$') THEN 'NON_HEX_SIGNATURE'
+        |    ELSE 'OK' END AS verdict
+        |  FROM (
+        |    SELECT *,
+        |      len(cred) AS credn,
+        |      CASE WHEN len(cred) = 6 THEN cred[1] || '/' || cred[2]
+        |        ELSE cred[1] END AS access_id,
+        |      CASE WHEN len(cred) = 6 THEN cred[3] ELSE cred[2] END
+        |        AS cred_date,
+        |      CASE WHEN len(cred) = 6 THEN cred[4] ELSE cred[3] END
+        |        AS region,
+        |      CASE WHEN len(cred) = 6 THEN cred[5] ELSE cred[4] END
+        |        AS service,
+        |      CASE WHEN len(cred) = 6 THEN cred[6] ELSE cred[5] END
+        |        AS aws_req,
+        |      len(list_filter(string_split(substring(parts[2],
+        |        length('SignedHeaders=') + 1), ';'),
+        |        x -> trim(x) <> '')) AS sh_count,
+        |      substring(parts[2], length('SignedHeaders=') + 1)
+        |        AS sh_body,
+        |      substring(parts[3], length('Signature=') + 1)
+        |        AS sig_body
+        |    FROM (
+        |      SELECT req_id, auth_header,
+        |        instr(auth_header, ' ') AS sep,
+        |        CASE WHEN instr(auth_header, ' ') > 0
+        |          THEN substring(auth_header, 1,
+        |            instr(auth_header, ' ') - 1)
+        |          ELSE '' END AS algo,
+        |        regexp_split_to_array(trim(substring(auth_header,
+        |          instr(auth_header, ' ') + 1)), ', *') AS parts,
+        |        string_split(substring(
+        |          regexp_split_to_array(trim(substring(auth_header,
+        |            instr(auth_header, ' ') + 1)), ', *')[1],
+        |          length('Credential=') + 1), '/') AS cred
+        |      FROM v4_req)))
+        |ORDER BY req_id""".stripMargin,
+      O.values("v4_req", T.sigv4HeaderRows)),
 
     // SCM dispatch mirror: the same packed-state fold replayed with
     // nested list_reduce
@@ -11145,27 +9923,11 @@ object SparkEntry {
            |      (s, e) -> ${step("s", "e")}) AS pre
            |  FROM sbd_walk, generate_series(1, 12) g(j))
            |ORDER BY txn_id""".stripMargin,
-        """sbd_txns(txn_id, container_id, blocks) AS (VALUES
-          |  (1, 'c7', 10), (2, 'c2', 9), (3, 'c3', 5), (4, 'c4', 5),
-          |  (5, 'c5', 5), (6, 'c6', 5), (7, 'c1', 30), (8, 'c9', 4),
-          |  (9, 'c2', 25), (10, 'c8', 10), (11, 'c7', 6),
-          |  (12, 'c10', 8))""".stripMargin,
-        """sbd_containers(container_id, cstate, health_ok) AS (VALUES
-          |  ('c1', 'CLOSED', true), ('c2', 'CLOSED', true),
-          |  ('c3', 'DELETED', true), ('c4', 'OPEN', true),
-          |  ('c5', 'CLOSED', true), ('c6', 'CLOSED', false),
-          |  ('c7', 'CLOSED', true), ('c8', 'CLOSED', true),
-          |  ('c10', 'CLOSED', true))""".stripMargin,
-        """sbd_replicas(container_id, dn) AS (VALUES
-          |  ('c1', 'd1'), ('c1', 'd2'), ('c2', 'd1'), ('c2', 'd2'),
-          |  ('c3', 'd1'), ('c4', 'd2'), ('c4', 'd3'), ('c5', 'd3'),
-          |  ('c5', 'd9'), ('c6', 'd3'), ('c6', 'd4'), ('c7', 'd3'),
-          |  ('c7', 'd4'), ('c8', 'd1'), ('c8', 'd2'),
-          |  ('c10', 'd4'))""".stripMargin,
-        """sbd_included(dn) AS (VALUES ('d1'), ('d2'), ('d3'),
-          |  ('d4'))""".stripMargin,
-        """sbd_dups(dn, txn_id) AS (VALUES ('d2', 9), ('d3', 11),
-          |  ('d4', 11))""".stripMargin,
+        O.values("sbd_txns", T.sbdTxnRows),
+        O.values("sbd_containers", T.sbdContainerRows),
+        O.values("sbd_replicas", T.sbdReplicaRows),
+        O.values("sbd_included", T.sbdIncludedRows),
+        O.values("sbd_dups", T.sbdDupRows),
         """sbd_evs AS (
           |  SELECT t.txn_id,
           |    CASE WHEN t.txn_id <= 2 THEN 1 ELSE 0 END AS rot,
@@ -11240,33 +10002,7 @@ object SparkEntry {
         |          AND min_replicated_index < bcsid))))) e
         |  ON e.container_id = c.container_id
         |ORDER BY c.container_id""".stripMargin,
-      """dn_del_containers(container_id, ctype, cstate, pending_blocks,
-        |  origin_pipeline, pipeline_parseable, ratis_group_exists,
-        |  min_replicated_index, bcsid) AS (VALUES
-        |  (1, 'KeyValueContainer', 'CLOSED', 40, 'p1', true, true,
-        |    100, 50),
-        |  (2, 'KeyValueContainer', 'CLOSED', 100, 'p2', true, true,
-        |    10, 50),
-        |  (3, 'KeyValueContainer', 'OPEN', 30, 'p3', true, true,
-        |    100, 50),
-        |  (4, 'KeyValueContainer', 'QUASI_CLOSED', 60, '', true, false,
-        |    0, 0),
-        |  (5, 'KeyValueContainer', 'CLOSED', 0, 'p5', true, true,
-        |    100, 50),
-        |  (6, 'OtherContainer', 'CLOSED', 20, 'p6', true, true,
-        |    100, 50),
-        |  (7, 'KeyValueContainer', 'CLOSED', 25, 'not-a-uuid', false,
-        |    true, 100, 50),
-        |  (8, 'KeyValueContainer', 'CLOSED', 50, 'p8', true, false,
-        |    0, 50),
-        |  (9, 'KeyValueContainer', 'CLOSED', 50, 'p9', true, true,
-        |    80, 80),
-        |  (10, 'KeyValueContainer', 'QUASI_CLOSED', 15, 'p10', true,
-        |    true, 90, 20),
-        |  (11, 'KeyValueContainer', 'CLOSED', 60, '', true, false,
-        |    0, 0),
-        |  (12, 'KeyValueContainer', 'CLOSED', 10, '', true, false,
-        |    0, 0))""".stripMargin),
+      O.values("dn_del_containers", T.dnDeleteContainerRows)),
 
     // round-robin volume-choice mirror: the same packed-state fold
     // replayed with list_reduce
@@ -11308,16 +10044,10 @@ object SparkEntry {
            |    FROM (SELECT list(op ORDER BY seq) AS sevs FROM rr_ops),
            |      generate_series(1, 17) g(j)))
            |ORDER BY seq""".stripMargin,
-        """rr_ops(seq, op) AS (VALUES
-          |  (1, 'ADD:v0:1000'), (2, 'ADD:v1:500'), (3, 'ADD:v2:800'),
-          |  (4, 'ALLOC:300'), (5, 'ALLOC:400'), (6, 'REMOVE:v0'),
-          |  (7, 'ALLOC:100'), (8, 'ALLOC:700'), (9, 'ALLOC:200'),
-          |  (10, 'ALLOC:100'), (11, 'REMOVE:v1'), (12, 'ALLOC:10'),
-          |  (13, 'REMOVE:v2'), (14, 'ALLOC:10'), (15, 'ADD:v3:100'),
-          |  (16, 'ALLOC:60'), (17, 'ALLOC:60'))""".stripMargin)
+        O.values("rr_ops", T.dnVolumeOpRows))
     },
 
-    // block-allocation mirror: the same walk over the VALUES catalog
+    // block-allocation mirror: the same walk over the fixture catalog
     "q_scm_block_allocate" -> O.withCtes(
       """SELECT r.req_id,
         |  CASE WHEN w.picked IS NOT NULL THEN 'ALLOCATED'
@@ -11363,49 +10093,12 @@ object SparkEntry {
         |    WHERE picked IS NOT NULL)
         |  WHERE rn = 1) w ON w.req_id = r.req_id
         |ORDER BY r.req_id""".stripMargin,
-      """alloc_req(req_id, size, owner, rep_config, excl_dn,
-        |  excl_pipeline, excl_container) AS (VALUES
-        |  (1, 10, 'o1', 'RATIS/THREE', '', '', 0),
-        |  (2, 10, 'o1', 'RATIS/THREE', '', '', 103),
-        |  (3, 20, 'o1', 'RATIS/THREE', '', 'pl-a', 0),
-        |  (4, 10, 'o1', 'RATIS/THREE', 'dnX', '', 0),
-        |  (5, 10, 'o2', 'RATIS/ONE', '', '', 0),
-        |  (6, 10, 'o3', 'EC/rs-3-2-1024k', '', 'pl-h', 0),
-        |  (7, 10, 'o4', 'RATIS/THREE', '', '', 0),
-        |  (8, 10, 'o3', 'EC/rs-3-2-1024k', '', '', 0),
-        |  (9, 10, 'o5', 'RATIS/ONE', '', 'pl-d', 0))""".stripMargin,
-      """alloc_pipe(pipeline_id, rep_config, pstate, healthy) AS (VALUES
-        |  ('pl-a', 'RATIS/THREE', 'OPEN', true),
-        |  ('pl-b', 'RATIS/THREE', 'OPEN', false),
-        |  ('pl-c', 'RATIS/THREE', 'OPEN', true),
-        |  ('pl-d', 'RATIS/ONE', 'OPEN', true),
-        |  ('pl-e', 'EC/rs-3-2-1024k', 'OPEN', true),
-        |  ('pl-f', 'RATIS/THREE', 'ALLOCATED', true),
-        |  ('pl-h', 'EC/rs-3-2-1024k', 'OPEN', true),
-        |  ('pl-i', 'RATIS/ONE', 'OPEN', true))""".stripMargin,
-      """alloc_mem(pipeline_id, dn) AS (VALUES
-        |  ('pl-a', 'dnA'), ('pl-a', 'dnB'), ('pl-a', 'dnX'),
-        |  ('pl-b', 'dnC'), ('pl-b', 'dnD'), ('pl-b', 'dnX'),
-        |  ('pl-c', 'dnC'), ('pl-c', 'dnD'), ('pl-c', 'dnX'),
-        |  ('pl-d', 'dnC'),
-        |  ('pl-e', 'dnE'), ('pl-e', 'dnC'), ('pl-e', 'dnD'),
-        |  ('pl-f', 'dnA'), ('pl-f', 'dnB'), ('pl-f', 'dnC'),
-        |  ('pl-h', 'dnC'), ('pl-h', 'dnD'),
-        |  ('pl-i', 'dnF'))""".stripMargin,
-      """alloc_dn(dn, healthy_volumes, pipeline_limit, has_space)
-        |  AS (VALUES
-        |  ('dnA', 3, 3, true), ('dnB', 2, 2, true),
-        |  ('dnC', 4, 2, true), ('dnD', 4, 2, true),
-        |  ('dnE', 2, 2, false), ('dnX', 3, 3, true),
-        |  ('dnF', 1, 0, true))""".stripMargin,
-      """alloc_cont(container_id, pipeline_id, owner, used) AS (VALUES
-        |  (101, 'pl-a', 'o1', 100), (102, 'pl-a', 'o1', 990),
-        |  (103, 'pl-a', 'o1', 400),
-        |  (120, 'pl-a', 'o4', 995), (121, 'pl-a', 'o4', 998),
-        |  (130, 'pl-e', 'o3', 995), (131, 'pl-e', 'o3', 996),
-        |  (140, 'pl-a', 'o9', 10))""".stripMargin,
-      """alloc_lastused(owner, pipeline_id, last_used) AS (VALUES
-        |  ('o1', 'pl-a', 102))""".stripMargin,
+      O.values("alloc_req", T.allocRequestRows),
+      O.values("alloc_pipe", T.allocPipelineRows),
+      O.values("alloc_mem", T.allocPipelineMemberRows),
+      O.values("alloc_dn", T.allocDatanodeRows),
+      O.values("alloc_cont", T.allocContainerRows),
+      O.values("alloc_lastused", T.allocCursorRows),
       """alloc_cand AS (
         |  SELECT * FROM (
         |    SELECT *,
@@ -11468,7 +10161,7 @@ object SparkEntry {
         |  LEFT JOIN alloc_lastused a ON a.owner = c.owner
         |    AND a.pipeline_id = c.pipeline_id)""".stripMargin),
 
-    // datanode-remove mirror: the same ladder over the VALUES catalog
+    // datanode-remove mirror: the same ladder over the fixture catalog
     "q_datanode_remove" -> O.withCtes(
       """SELECT req_seq, uuid,
         |  CASE WHEN occ > 1 AND base_verdict = 'REMOVED'
@@ -11507,27 +10200,12 @@ object SparkEntry {
         |    WHERE ps.pstate = 'OPEN' GROUP BY pr.uuid) op
         |    ON op.uuid = r.uuid)
         |ORDER BY req_seq""".stripMargin,
-      """rdn_requests(req_seq, uuid) AS (VALUES
-        |  (1, 'dnr-unknown'), (2, 'dnrH'), (3, 'dnrS'), (4, 'dnrD1'),
-        |  (5, 'dnrD2'), (6, 'dnrD3'), (7, 'dnrD4'), (8, 'dnrD3'),
-        |  (9, 'dnrD1'))""".stripMargin,
-      """rdn_nodes(uuid, health) AS (VALUES
-        |  ('dnrH', 'HEALTHY'), ('dnrS', 'STALE'), ('dnrD1', 'DEAD'),
-        |  ('dnrD2', 'DEAD'), ('dnrD3', 'DEAD'), ('dnrD4', 'DEAD'))""".stripMargin,
-      """rdn_container_refs(uuid, container_id) AS (VALUES
-        |  ('dnrD1', 101), ('dnrD1', 102), ('dnrD1', 103),
-        |  ('dnrD2', 101), ('dnrD2', 104),
-        |  ('dnrD3', 101), ('dnrD3', 105))""".stripMargin,
-      """rdn_container_states(container_id, cstate) AS (VALUES
-        |  (101, 'CLOSED'), (102, 'OPEN'), (104, 'QUASI_CLOSED'),
-        |  (106, 'OPEN'))""".stripMargin,
-      """rdn_pipeline_refs(uuid, pipeline_id) AS (VALUES
-        |  ('dnrD1', 'pr-open'), ('dnrD2', 'pr-open'),
-        |  ('dnrD2', 'pr-closed'), ('dnrD3', 'pr-closed'),
-        |  ('dnrD3', 'pr-gone'))""".stripMargin,
-      """rdn_pipeline_states(pipeline_id, pstate) AS (VALUES
-        |  ('pr-open', 'OPEN'), ('pr-closed', 'CLOSED'),
-        |  ('pr-dormant', 'DORMANT'))""".stripMargin),
+      O.values("rdn_requests", T.removeDnRequestRows),
+      O.values("rdn_nodes", T.removeDnNodeRows),
+      O.values("rdn_container_refs", T.removeDnContainerRefRows),
+      O.values("rdn_container_states", T.removeDnContainerStateRows),
+      O.values("rdn_pipeline_refs", T.removeDnPipelineRefRows),
+      O.values("rdn_pipeline_states", T.removeDnPipelineStateRows)),
 
     // container-import mirror: the same classes over the volume dim
     "q_container_import" -> O.withCtes(
@@ -11734,7 +10412,7 @@ object SparkEntry {
         |  GROUP BY 1)""".stripMargin),
 
     // snapdiff-jobs mirror: the same literal dims + dispatch CASE
-    "q_snapdiff_jobs" ->
+    "q_snapdiff_jobs" -> O.withCtes(
       """SELECT CAST(r.req_id AS BIGINT) AS req_id, r.op, r.from_snap,
         |  r.to_snap,
         |  CASE
@@ -11752,27 +10430,15 @@ object SparkEntry {
         |  CAST(CASE WHEN r.op = 'DIFF' AND f.snap IS NOT NULL
         |      AND t.snap IS NOT NULL AND j.status = 'IN_PROGRESS'
         |    THEN j.pct ELSE 0 END AS INT) AS pct
-        |FROM (VALUES
-        |  (1, 'DIFF', 's1', 's2'), (2, 'DIFF', 's1', 's3'),
-        |  (3, 'DIFF', 's2', 's3'), (4, 'DIFF', 's1', 's4'),
-        |  (5, 'DIFF', 's2', 's4'), (6, 'DIFF', 's3', 's4'),
-        |  (7, 'DIFF', 's4', 's5'), (8, 'DIFF', 's1', 's9'),
-        |  (11, 'CANCEL', 's1', 's2'), (12, 'CANCEL', 's1', 's3'),
-        |  (13, 'CANCEL', 's2', 's3'), (14, 'CANCEL', 's1', 's4'),
-        |  (15, 'CANCEL', 's2', 's4'), (16, 'CANCEL', 's3', 's4'),
-        |  (17, 'CANCEL', 's4', 's5'), (18, 'CANCEL', 's9', 's2'))
-        |  r(req_id, op, from_snap, to_snap)
-        |LEFT JOIN (VALUES ('s1'), ('s2'), ('s3'), ('s4'), ('s5'))
-        |  f(snap) ON f.snap = r.from_snap
-        |LEFT JOIN (VALUES ('s1'), ('s2'), ('s3'), ('s4'), ('s5'))
-        |  t(snap) ON t.snap = r.to_snap
-        |LEFT JOIN (VALUES
-        |  ('s1', 's2', 'IN_PROGRESS', 37), ('s1', 's3', 'DONE', 100),
-        |  ('s2', 's3', 'FAILED', 0), ('s1', 's4', 'CANCELLED', 0),
-        |  ('s2', 's4', 'REJECTED', 0), ('s3', 's4', 'QUEUED', 0))
-        |  j(from_snap, to_snap, status, pct)
+        |FROM sdj_reqs r
+        |LEFT JOIN sdj_snaps f ON f.snap = r.from_snap
+        |LEFT JOIN sdj_snaps t ON t.snap = r.to_snap
+        |LEFT JOIN sdj_jobs j
         |  ON j.from_snap = r.from_snap AND j.to_snap = r.to_snap
         |ORDER BY req_id""".stripMargin,
+      O.values("sdj_reqs", T.snapshotDiffRequestRows),
+      O.values("sdj_snaps", T.snapshotDiffSnapRows),
+      O.values("sdj_jobs", T.snapshotDiffJobRows)),
 
     // replication-supervisor mirror: the same burst, admission window,
     // run rungs

@@ -94,6 +94,7 @@ object OracleCte {
     * bucket_count includes the planted bucket41) plus the planted
     * zero-object volume vol21. Must be listed AFTER bucketsCatalog. */
   val volumesCatalog: String =
+    values("planted_volumes", Tables.plantedVolumeRows) + ",\n" +
     """volumes_catalog AS (
       |  SELECT volume, CAST(SUM(used_bytes) AS BIGINT) AS used_bytes,
       |    CAST(SUM(used_namespace) AS BIGINT) AS used_namespace,
@@ -101,19 +102,16 @@ object OracleCte {
       |    CAST(1000000000000 AS BIGINT) AS quota_bytes,
       |    'admin' || substr(volume, 4, 10) AS owner
       |  FROM buckets_catalog GROUP BY volume
-      |  UNION ALL
-      |  SELECT 'vol21', CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-      |    CAST(0 AS BIGINT), CAST(1000000000000 AS BIGINT), 'admin21'
+      |  UNION ALL SELECT * FROM planted_volumes
       |)""".stripMargin
 
   /** Mirror of Tables.bucketsCatalog: bucket-table dual of
     * [[volumesCatalog]] with the planted zero-object vol2/bucket41. */
   val bucketsCatalog: String =
+    values("planted_buckets", Tables.plantedBucketRows) + ",\n" +
     """buckets_catalog AS (
       |  SELECT * FROM buckets
-      |  UNION ALL
-      |  SELECT 'vol2', 'bucket41', CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-      |    CAST(4200000000 AS BIGINT), CAST(1000000 AS BIGINT), 'FSO'
+      |  UNION ALL SELECT * FROM planted_buckets
       |)""".stripMargin
 
   val containersScm: String =
@@ -721,6 +719,7 @@ object OracleCte {
 
   /** Mirror of Tables.ofsRequests. */
   val ofsRequests: String =
+    values("ofs_root", Tables.ofsRootRows) + ",\n" +
     """ofs_requests AS (
       |  SELECT DISTINCT path, username FROM (
       |    SELECT CASE cls
@@ -737,12 +736,13 @@ object OracleCte {
       |      SELECT volume, bucket, key, owner,
       |        (object_id // 103) % 6 AS cls
       |      FROM objects WHERE object_id % 103 = 0)
-      |    UNION ALL SELECT '/', 'root')
+      |    UNION ALL SELECT * FROM ofs_root)
       |)""".stripMargin
 
   /** Mirror of Tables.aclOps — the 13-row op template joined onto the
     * sampled keys. */
   val aclOpsCte: String =
+    values("acl_op_template", Tables.aclOpTemplateRows) + ",\n" +
     """acl_ops AS (
       |  SELECT o.volume, o.bucket, o.key, t.seq, t.op, t.ptype, t.pname,
       |    'ACCESS' AS scope, t.bits
@@ -750,27 +750,13 @@ object OracleCte {
       |    SELECT DISTINCT volume, bucket, key,
       |      (object_id // 101) % 5 AS variant
       |    FROM objects WHERE object_id % 101 = 0) o
-      |  JOIN (VALUES
-      |    (0, 1, 'ADD', 'USER', 'alice', 3),
-      |    (0, 2, 'REMOVE', 'USER', 'alice', 2),
-      |    (1, 1, 'ADD', 'USER', 'alice', 3),
-      |    (1, 2, 'SET', 'USER', 'bob', 1),
-      |    (2, 1, 'ADD', 'USER', 'alice', 1),
-      |    (2, 2, 'ADD', 'USER', 'alice', 6),
-      |    (2, 3, 'REMOVE', 'USER', 'alice', 4),
-      |    (3, 1, 'REMOVE', 'USER', 'ghost', 7),
-      |    (3, 2, 'ADD', 'GROUP', 'devs', 9),
-      |    (4, 1, 'SET', 'USER', 'alice', 7),
-      |    (4, 1, 'SET', 'GROUP', 'ops', 3),
-      |    (4, 2, 'ADD', 'USER', 'alice', 8),
-      |    (4, 3, 'REMOVE', 'USER', 'alice', 1))
-      |    t(variant, seq, op, ptype, pname, bits)
-      |    ON o.variant = t.variant
+      |  JOIN acl_op_template t ON o.variant = t.variant
       |)""".stripMargin
 
   /** Mirror of Tables.sstCatalog — the SST universe of the compaction-DAG
     * differ (three-level history + static terminal-branch rows). */
   val sstCatalog: String =
+    values("sst_static", Tables.sstStaticRows) + ",\n" +
     """sst_catalog AS (
       |  SELECT 'f' || i AS file, 3*i AS created_gen,
       |    CASE WHEN i < 1000 THEN 2000 + 10*(i // 4) END AS consumed_gen,
@@ -788,18 +774,12 @@ object OracleCte {
       |    lpad(CAST(16*j AS VARCHAR), 6, '0'),
       |    lpad(CAST(16*j+15 AS VARCHAR), 6, '0')
       |  FROM range(50) t(j)
-      |  UNION ALL
-      |  SELECT * FROM (VALUES
-      |    ('s-same', 200, NULL, '000700', '000700'),
-      |    ('s-old-out', 5000, NULL, '000700', '000700'),
-      |    ('s-tip', 5000, NULL, '000700', '000700'),
-      |    ('s-old-in', 100, 5000, 'zz-out', 'zz-out'),
-      |    ('s-mid', 4000, 5000, '000700', '000700'),
-      |    ('s-ancient', 50, 100, 'zz-out', 'zz-out'))
+      |  UNION ALL SELECT * FROM sst_static
       |)""".stripMargin
 
   /** Mirror of Tables.sstEdges (compaction log, output → input). */
   val sstEdges: String =
+    values("sst_static_edges", Tables.sstStaticEdgeRows) + ",\n" +
     """sst_edges AS (
       |  SELECT 'l1-' || k AS output_file, 'f' || (4*k + m) AS input_file,
       |    2000 + 10*k AS seq
@@ -807,14 +787,9 @@ object OracleCte {
       |  UNION ALL
       |  SELECT 'l2-' || j, 'l1-' || (4*j + m), 3000 + 40*j
       |  FROM range(50) t(j), range(4) u(m)
-      |  UNION ALL
-      |  SELECT * FROM (VALUES
-      |    ('s-old-out', 's-old-in', 5000),
-      |    ('s-old-in', 's-ancient', 100),
-      |    ('s-tip', 's-mid', 5000))
+      |  UNION ALL SELECT * FROM sst_static_edges
       |)""".stripMargin
 
-  /** Compose a query over a chain of CTEs (dependencies first). */
   /** DuckDB twin of ClusterHealth.rrStep (round-robin volume choice):
     * the packed-state step over "nextIdx#vol:av:com|..." states,
     * parametrized over the state/event variable names. DuckDB's
@@ -868,6 +843,124 @@ object OracleCte {
        |  y -> y IS NOT NULL))""".stripMargin
   }
 
+  /** Mirror of [[Tables.bucketTagRequests]] as `bt_reqs`: one request
+    * per catalog bucket plus the rendered probe rows. */
+  val bucketTagRequests: String =
+    values("bt_probes", Tables.bucketTagProbeRows) + ",\n" +
+    """bt_reqs AS (
+      |  SELECT CAST(substr(volume, 4, 10) AS BIGINT) * 100 +
+      |      CAST(substr(bucket, 7, 10) AS BIGINT) AS req_id,
+      |    (CAST(substr(volume, 4, 10) AS BIGINT) +
+      |      CAST(substr(bucket, 7, 10) AS BIGINT)) % 6 AS cls,
+      |    volume, bucket
+      |  FROM buckets
+      |  UNION ALL SELECT * FROM bt_probes)""".stripMargin
+
+  /** Per-(key, version) write groups of the commit-log synthesis: the
+    * max size per group plus the churn-scope flag (orderkey band
+    * `(object_id // 10) % 10 = 0`) the snapshot plane keys off. */
+  val writeGroups: String =
+    """wgrp AS (
+      |  SELECT volume, bucket, key, object_id, version,
+      |    (object_id // 10) % 10 = 0 AS churn, max(data_size) AS mx
+      |  FROM objects GROUP BY 1, 2, 3, 4, 5, 6
+      |)""".stripMargin
+
+  /** Every directory path the FSO namespace implies: each proper
+    * '/'-prefix of every key, per bucket. */
+  val fsoDirs: String =
+    """fso_dirs AS (
+      |  SELECT DISTINCT volume, bucket,
+      |    array_to_string(ws[1:d], '/') AS path
+      |  FROM (
+      |    SELECT volume, bucket, string_split(key, '/') AS ws,
+      |      unnest(generate_series(1,
+      |        len(string_split(key, '/')) - 1)) AS d
+      |    FROM objects))""".stripMargin
+
+  /** Mirror of [[Tables.tenantAccessCatalog]] as `t_access_cat`: one
+    * access id per (volume, owner), clerk0 the tenant admin, plus the
+    * rendered [[Tables.tenantAccessProbeRows]]. */
+  val tenantAccessCat: String =
+    values("t_access_probe", Tables.tenantAccessProbeRows) + ",\n" +
+    """t_access_cat AS (
+      |  SELECT 'tenant' || substr(volume, 4, 10) AS tenant_id,
+      |    owner AS user_principal,
+      |    'tenant' || substr(volume, 4, 10) || '$' || owner AS access_id,
+      |    owner = 'clerk0' AS is_admin
+      |  FROM (SELECT DISTINCT volume, owner FROM objects)
+      |  UNION ALL SELECT * FROM t_access_probe)""".stripMargin
+
+  /** Link resolution of the static [[Tables.bucketLinks]] catalog,
+    * derived by hand from the chase semantics (a constant the oracle
+    * defines, not a rendering of engine output): direct and 2-hop links
+    * land on vol0/bucket0, the dangling link keeps its missing target, a
+    * 2-cycle resolves to itself. */
+  val linkres: String =
+    """linkres(volume, bucket, rv0, rb0, status) AS (VALUES
+      |  ('vol1', 'link-a', 'vol0', 'bucket0', 'OK'),
+      |  ('vol2', 'link-b', 'vol0', 'bucket0', 'OK'),
+      |  ('vol3', 'link-broken', 'vol0', 'no-such-bucket', 'DANGLING'),
+      |  ('vol0', 'link-cycle1', 'vol0', 'link-cycle1', 'CYCLE'),
+      |  ('vol0', 'link-cycle2', 'vol0', 'link-cycle2', 'CYCLE'))"""
+      .stripMargin
+
+  /** The OM snapshot-name rule as a DuckDB predicate, TRUE when `c` is
+    * NOT a valid name: 3-63 chars of [a-z0-9.-], no '..', '-.' or '.-',
+    * not digits-and-dots only, no leading or trailing '.' or '-'. */
+  def invalidSnapshotName(c: String): String =
+    s"""NOT (length($c) BETWEEN 3 AND 63
+       |      AND regexp_matches($c, '^[a-z0-9.-]+$$')
+       |      AND instr($c, '..') = 0
+       |      AND instr($c, '-.') = 0
+       |      AND instr($c, '.-') = 0
+       |      AND NOT regexp_matches($c, '^[0-9.]+$$')
+       |      AND substr($c, 1, 1) NOT IN ('.', '-')
+       |      AND substr($c, length($c), 1)
+       |        NOT IN ('.', '-'))""".stripMargin
+
+  /** Mirror of [[Tables.snapshotCatalogExt]] (or, with `live`,
+    * [[Tables.snapshotCatalogLive]]) as CTE `name`: the chain catalog
+    * marked SNAPSHOT_ACTIVE plus the status-carrying extra rows, all
+    * rendered from the Tables fixtures. */
+  def snapshotCatalog(name: String, live: Boolean): String = {
+    val extra = Tables.snapshotGoneRows +:
+      (if (live) Seq(Tables.snapshotLiveRows) else Nil)
+    val parts = values(s"${name}_chain", Tables.snapshotCatalogRows) +:
+      extra.zipWithIndex.map { case (f, i) => values(s"${name}_x$i", f) }
+    val union = extra.indices
+      .map(i => s"\n  UNION ALL SELECT * FROM ${name}_x$i").mkString
+    (parts :+ s"$name AS (\n  SELECT *, 'SNAPSHOT_ACTIVE' AS status " +
+      s"FROM ${name}_chain$union)").mkString(",\n")
+  }
+
+  /** `name(cols) AS (VALUES …)` over a [[Fixture]]'s rows — the oracle's
+    * copy of a literal table, rendered from its one declaration in
+    * [[Tables]]. Column names are double-quoted (a fixture may name a
+    * column `exists`); Long → `CAST(… AS BIGINT)` (Spark's LongType),
+    * Double → `CAST(… AS DOUBLE)`, Int bare, Boolean `true`/`false`,
+    * String quoted with `'` doubled, null and None → `NULL`. */
+  def values(name: String, f: Fixture[_]): String = {
+    def lit(v: Any): String = v match {
+      case null | None => "NULL"
+      case Some(x) => lit(x)
+      case s: String => "'" + s.replace("'", "''") + "'"
+      case b: Boolean => b.toString
+      case l: Long => s"CAST($l AS BIGINT)"
+      case i: Int => i.toString
+      case d: Double => s"CAST($d AS DOUBLE)"
+      case x => throw new IllegalArgumentException(
+        s"$name: no DuckDB literal for ${x.getClass.getName}")
+    }
+    val rows = f.rows.map {
+      case p: Product => p.productIterator.map(lit).mkString("(", ", ", ")")
+      case v => s"(${lit(v)})"
+    }
+    val cols = f.cols.map(c => "\"" + c + "\"").mkString(", ")
+    s"$name($cols) AS (VALUES\n  " + rows.mkString(",\n  ") + ")"
+  }
+
+  /** Compose a query over a chain of CTEs (dependencies first). */
   def withCtes(sql: String, ctes: String*): String =
     "WITH " + ctes.mkString(",\n") + "\n" + sql
 

@@ -154,16 +154,16 @@ object Tables {
    * catalog covers every resolution class: a direct link, a 2-hop chain,
    * a dangling target, and a 2-cycle.
    */
-  def bucketLinks(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("vol1", "link-a", "vol0", "bucket0"),
-      ("vol2", "link-b", "vol1", "link-a"),
-      ("vol3", "link-broken", "vol0", "no-such-bucket"),
-      ("vol0", "link-cycle1", "vol0", "link-cycle2"),
-      ("vol0", "link-cycle2", "vol0", "link-cycle1"))
-      .toDF("volume", "bucket", "source_volume", "source_bucket")
-  }
+  val bucketLinkRows = Fixture(
+    "volume", "bucket", "source_volume", "source_bucket")(
+    ("vol1", "link-a", "vol0", "bucket0"),
+    ("vol2", "link-b", "vol1", "link-a"),
+    ("vol3", "link-broken", "vol0", "no-such-bucket"),
+    ("vol0", "link-cycle1", "vol0", "link-cycle2"),
+    ("vol0", "link-cycle2", "vol0", "link-cycle1"))
+
+  def bucketLinks(spark: SparkSession, dir: String): DataFrame =
+    bucketLinkRows.df(spark)
 
   /** volumes (ref OmVolumeArgs.java:50-71). */
   def volumes(spark: SparkSession, dir: String): DataFrame =
@@ -192,7 +192,6 @@ object Tables {
    * FSO layout).
    */
   def volumesCatalog(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     // derived from bucketsCatalog (not the usage dim) so vol2's
     // bucket_count includes the planted zero-object bucket41 — the
     // reference walking bucketTable would count it
@@ -205,20 +204,22 @@ object Tables {
       .withColumn("quota_bytes", lit(1000000000000L))
       .withColumn("owner",
         concat(lit("admin"), substring(col("volume"), 4, 10)))
-      .unionByName(
-        Seq(("vol21", 0L, 0L, 0L, 1000000000000L, "admin21"))
-          .toDF("volume", "used_bytes", "used_namespace", "bucket_count",
-            "quota_bytes", "owner"))
+      .unionByName(plantedVolumeRows.df(spark))
   }
 
+  /** The planted zero-object volume of [[volumesCatalog]]. */
+  val plantedVolumeRows = Fixture("volume", "used_bytes", "used_namespace",
+    "bucket_count", "quota_bytes", "owner")(
+    ("vol21", 0L, 0L, 0L, 1000000000000L, "admin21"))
+
   /** Bucket-table dual of [[volumesCatalog]] — see its scaladoc. */
-  def bucketsCatalog(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    buckets(spark, dir).unionByName(
-      Seq(("vol2", "bucket41", 0L, 0L, 4200000000L, 1000000L, "FSO"))
-        .toDF("volume", "bucket", "used_bytes", "used_namespace",
-          "quota_bytes", "quota_namespace", "layout"))
-  }
+  def bucketsCatalog(spark: SparkSession, dir: String): DataFrame =
+    buckets(spark, dir).unionByName(plantedBucketRows.df(spark))
+
+  /** The planted zero-object bucket of [[bucketsCatalog]]. */
+  val plantedBucketRows = Fixture("volume", "bucket", "used_bytes",
+    "used_namespace", "quota_bytes", "quota_namespace", "layout")(
+    ("vol2", "bucket41", 0L, 0L, 4200000000L, 1000000L, "FSO"))
 
   /** containers_scm: ids 0..999 (ref ContainerEndpoint.java:792-796). */
   def containersScm(spark: SparkSession, dir: String): DataFrame =
@@ -310,7 +311,8 @@ object Tables {
     * reader transition, parity shortfall, both EC widths. Sizes in MiB
     * units (chunk 1048576). */
   val ecReadBlockRows
-  : Seq[(Long, Int, Int, Long, Long, String)] = Seq(
+  : Fixture[(Long, Int, Int, Long, Long, String)] = Fixture(
+    "block_id", "ec_data", "ec_parity", "chunk_size", "block_len", "avail")(
     (1L, 3, 2, 1048576L, 3145728L, "1,2,3"),
     (2L, 3, 2, 1048576L, 3145728L, "1,2,4"),
     (3L, 3, 2, 1048576L, 3145728L, "1,4,5"),
@@ -321,15 +323,13 @@ object Tables {
     (8L, 6, 3, 1048576L, 6291456L, "1,2,3,7,8,9"),
     (9L, 6, 3, 1048576L, 6291456L, "1,2,7,8"))
 
-  def ecReadBlocks(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    ecReadBlockRows.toDF("block_id", "ec_data", "ec_parity", "chunk_size",
-      "block_len", "avail")
-  }
+  def ecReadBlocks(spark: SparkSession, dir: String): DataFrame =
+    ecReadBlockRows.df(spark)
 
   /** dn_close_commands: every rung of the DN close-command ladder. */
   val dnCloseCommandRows
-  : Seq[(Long, Boolean, String, Boolean, Boolean)] = Seq(
+  : Fixture[(Long, Boolean, String, Boolean, Boolean)] = Fixture(
+    "cmd_id", "container_present", "state", "pipeline_in_channel", "force")(
     (1L, false, "OPEN", true, false),
     (2L, true, "OPEN", true, false),
     (3L, true, "CLOSING", false, true),
@@ -341,18 +341,16 @@ object Tables {
     (9L, true, "OPEN", false, false),
     (10L, true, "INVALID", true, false))
 
-  def dnCloseCommands(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    dnCloseCommandRows.toDF("cmd_id", "container_present", "state",
-      "pipeline_in_channel", "force")
-  }
+  def dnCloseCommands(spark: SparkSession, dir: String): DataFrame =
+    dnCloseCommandRows.df(spark)
 
   /** acl_chain_scenarios: (resource, op, ownership, authorizer)
     * combinations for the multi-level ACL routing — volume ops, the
     * volume-owner bypass, native-vs-ranger bucket parents, and the full
     * key/prefix parent mapping. */
   val aclChainScenarioRows
-  : Seq[(Long, String, String, Boolean, Boolean)] = Seq(
+  : Fixture[(Long, String, String, Boolean, Boolean)] = Fixture(
+    "sc_id", "res_type", "acl_type", "is_vol_owner", "native_enabled")(
     (1L, "VOLUME", "READ", false, true),
     (2L, "BUCKET", "CREATE", true, true),
     (3L, "BUCKET", "CREATE", false, true),
@@ -368,16 +366,16 @@ object Tables {
     (13L, "PREFIX", "CREATE", false, true),
     (14L, "KEY", "READ", true, true))
 
-  def aclChainScenarios(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    aclChainScenarioRows.toDF("sc_id", "res_type", "acl_type",
-      "is_vol_owner", "native_enabled")
-  }
+  def aclChainScenarios(spark: SparkSession, dir: String): DataFrame =
+    aclChainScenarioRows.df(spark)
 
   /** dead_node_events: resurrection races (at event, mid-handling),
     * maintenance suppression, and the unconditional clears. */
   val deadNodeEventRows
-  : Seq[(Long, String, Boolean, Long, Long, Long, String, Boolean)] = Seq(
+  : Fixture[(Long, String, Boolean, Long, Long, Long, String,
+    Boolean)] = Fixture(
+    "node_id", "health_at_event", "in_maintenance", "n_pipelines",
+    "n_replicas", "n_commands", "health_at_topology", "in_topology")(
     (1L, "HEALTHY", false, 2L, 10L, 3L, "HEALTHY", true),
     (2L, "DEAD", false, 2L, 10L, 3L, "DEAD", true),
     (3L, "DEAD", true, 1L, 7L, 2L, "DEAD", true),
@@ -385,20 +383,18 @@ object Tables {
     (5L, "DEAD", false, 3L, 5L, 1L, "DEAD", false),
     (6L, "STALE", false, 2L, 6L, 2L, "DEAD", true))
 
-  def deadNodeEvents(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    deadNodeEventRows.toDF("node_id", "health_at_event", "in_maintenance",
-      "n_pipelines", "n_replicas", "n_commands", "health_at_topology",
-      "in_topology")
-  }
+  def deadNodeEvents(spark: SparkSession, dir: String): DataFrame =
+    deadNodeEventRows.df(spark)
 
   /** close_container_events: every rung of the CLOSE_CONTAINER ladder —
     * non-leader, OPEN→FINALIZE, CLOSING direct, non-RATIS force, gone
     * pipeline falling back to replica targets, queued skip, and the
     * no-op states. */
   val closeContainerEventRows
-  : Seq[(Long, Boolean, String, String, Boolean, Long, Long, Boolean)] =
-    Seq(
+  : Fixture[(Long, Boolean, String, String, Boolean, Long, Long, Boolean)] =
+    Fixture(
+      "event_id", "is_leader", "state", "rep_type", "pipeline_exists",
+      "n_pipeline_nodes", "n_replica_nodes", "already_queued")(
       (1L, false, "OPEN", "RATIS", true, 3L, 3L, false),
       (2L, true, "OPEN", "RATIS", true, 3L, 2L, false),
       (3L, true, "CLOSING", "RATIS", true, 3L, 3L, false),
@@ -410,17 +406,16 @@ object Tables {
       (9L, true, "QUASI_CLOSED", "RATIS", true, 3L, 3L, false),
       (10L, true, "OPEN", "EC", true, 5L, 5L, false))
 
-  def closeContainerEvents(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    closeContainerEventRows.toDF("event_id", "is_leader", "state",
-      "rep_type", "pipeline_exists", "n_pipeline_nodes", "n_replica_nodes",
-      "already_queued")
-  }
+  def closeContainerEvents(spark: SparkSession, dir: String): DataFrame =
+    closeContainerEventRows.df(spark)
 
   /** pipeline_creator_scenarios: (default_type, flags) combinations for
     * the background creator's selection table and run gate. */
   val pipelineCreatorScenarioRows
-  : Seq[(Long, String, Boolean, Boolean, Boolean, Boolean, Boolean)] = Seq(
+  : Fixture[(Long, String, Boolean, Boolean, Boolean, Boolean,
+    Boolean)] = Fixture(
+    "sc_id", "default_type", "auto_factor_one", "create_ratis_three_for_ec",
+    "leader_ready", "in_safemode", "create_in_safemode")(
     (1L, "RATIS", false, false, true, false, false),
     (2L, "RATIS", true, false, true, false, false),
     (3L, "EC", false, true, true, false, false),
@@ -432,35 +427,28 @@ object Tables {
     (9L, "RATIS", false, false, true, true, true))
 
   def pipelineCreatorScenarios(spark: SparkSession,
-                               dir: String): DataFrame = {
-    import spark.implicits._
-    pipelineCreatorScenarioRows.toDF("sc_id", "default_type",
-      "auto_factor_one", "create_ratis_three_for_ec", "leader_ready",
-      "in_safemode", "create_in_safemode")
-  }
+                               dir: String): DataFrame =
+    pipelineCreatorScenarioRows.df(spark)
 
   /** ec_provider_pipelines: the OPEN rs-3-2 pipelines the EC writable
     * provider walks — a fresh one, a full one, a container-less one, a
     * roomy one, an EXACT-boundary one (used+block == containerSize still
     * fits), and a one-byte-over one. */
-  val ecProviderPipelineRows: Seq[(Long, Boolean, Long)] = Seq(
+  val ecProviderPipelineRows: Fixture[(Long, Boolean, Long)] = Fixture(
+    "pipeline_id", "has_container", "used_bytes")(
     (1L, true, 100000L), (2L, true, 950000L), (3L, false, 0L),
     (4L, true, 200000L), (5L, true, 900000L), (6L, true, 999999L))
 
-  def ecProviderPipelines(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    ecProviderPipelineRows.toDF("pipeline_id", "has_container",
-      "used_bytes")
-  }
+  def ecProviderPipelines(spark: SparkSession, dir: String): DataFrame =
+    ecProviderPipelineRows.df(spark)
 
   /** ec_provider_excludes: per-scenario exclude sets (set B empty). */
-  val ecProviderExcludeRows: Seq[(String, Long)] = Seq(
+  val ecProviderExcludeRows: Fixture[(String, Long)] = Fixture(
+    "set_id", "pipeline_id")(
     ("A", 1L), ("A", 4L), ("C", 1L), ("C", 4L), ("C", 5L))
 
-  def ecProviderExcludes(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    ecProviderExcludeRows.toDF("set_id", "pipeline_id")
-  }
+  def ecProviderExcludes(spark: SparkSession, dir: String): DataFrame =
+    ecProviderExcludeRows.df(spark)
 
   /** ec_provider_requests: allocation scenarios — pre-gate mint, pre-gate
     * failure falling to the walk, skip/close walks, the final-attempt
@@ -468,7 +456,9 @@ object Tables {
     * count), the final-attempt create failure, and the volume-factor
     * limit formula. */
   val ecProviderRequestRows
-  : Seq[(Long, Long, Long, Long, Long, Boolean, String)] = Seq(
+  : Fixture[(Long, Long, Long, Long, Long, Boolean, String)] = Fixture(
+    "req_id", "min_pipelines", "factor_bp", "healthy_volumes", "node_count",
+    "create_fails", "set_id")(
     (1L, 10L, 0L, 0L, 10L, false, "B"),
     (2L, 10L, 0L, 0L, 10L, true, "B"),
     (3L, 2L, 0L, 0L, 10L, false, "A"),
@@ -478,15 +468,12 @@ object Tables {
     (7L, 2L, 20000L, 25L, 10L, false, "B"),
     (8L, 6L, 0L, 0L, 10L, false, "B"))
 
-  def ecProviderRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    ecProviderRequestRows.toDF("req_id", "min_pipelines", "factor_bp",
-      "healthy_volumes", "node_count", "create_fails", "set_id")
-  }
+  def ecProviderRequests(spark: SparkSession, dir: String): DataFrame =
+    ecProviderRequestRows.df(spark)
 
   /** chatbot_allowlist: the EXACT Recon routes the chatbot may call
     * (ReconApiAllowlist.java:32-62). */
-  val chatbotAllowlistRows: Seq[String] = Seq(
+  val chatbotAllowlistRows: Fixture[String] = Fixture("tool")(
     "api_v1_clusterState", "api_v1_datanodes", "api_v1_pipelines",
     "api_v1_containers", "api_v1_containers_missing",
     "api_v1_containers_unhealthy", "api_v1_containers_unhealthy_state",
@@ -502,17 +489,16 @@ object Tables {
     "api_v1_namespace_summary", "api_v1_namespace_usage",
     "api_v1_namespace_quota", "api_v1_namespace_dist")
 
-  def chatbotAllowlist(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    chatbotAllowlistRows.toDF("tool")
-  }
+  def chatbotAllowlist(spark: SparkSession, dir: String): DataFrame =
+    chatbotAllowlistRows.df(spark)
 
   /** chatbot_calls: LLM tool-call fixtures probing every guard rung —
     * the keys2-vs-keys exact-match probe, each bucket-scope refusal,
     * the limit parse artifacts (blank/garbage/overflow → default, but a
     * PARSEABLE ≤0 throws), clamp and trim, and the empty-tool fallback. */
   val chatbotCallRows
-  : Seq[(Long, String, String, String, Boolean)] = Seq(
+  : Fixture[(Long, String, String, String, Boolean)] = Fixture(
+    "call_id", "tool_name", "start_prefix", "limit_raw", "has_prev_key")(
     (1L, "api_v1_datanodes", null, null, false),
     (2L, "api_v1_keys2", null, null, false),
     (3L, "api_v1_keys_listKeys", "/vol1/bucket1", "50", false),
@@ -533,29 +519,26 @@ object Tables {
     (18L, "api_v1_keys_listKeys", null, "10", false),
     (19L, "api_v1_containers", null, "+25", false))
 
-  def chatbotCalls(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    chatbotCallRows.toDF("call_id", "tool_name", "start_prefix",
-      "limit_raw", "has_prev_key")
-  }
+  def chatbotCalls(spark: SparkSession, dir: String): DataFrame =
+    chatbotCallRows.df(spark)
 
   /** gdpr_keys: metadata-map fixtures for the GDPR delete scrub — the
     * case-insensitive "true" parse, the parseBoolean("yes")=false
     * artifact, absent flags, and a custom entry that must survive the
     * scrub. */
-  val gdprKeyRows: Seq[(String, String, Boolean, Boolean, String, Boolean)] =
-    Seq(
-      ("k1", "true", true, true, "a", true),
-      ("k2", "TRUE", true, false, "", true),
-      ("k3", "false", true, true, "b", true),
-      ("k4", null, false, false, "c", false),
-      ("k5", "yes", true, false, "", true),
-      ("k6", "true", false, false, "", false))
+  val gdprKeyRows
+  : Fixture[(String, String, Boolean, Boolean, String, Boolean)] = Fixture(
+    "key_id", "gdpr_flag_raw", "has_secret", "has_algorithm", "extra_meta",
+    "has_enc_info")(
+    ("k1", "true", true, true, "a", true),
+    ("k2", "TRUE", true, false, "", true),
+    ("k3", "false", true, true, "b", true),
+    ("k4", null, false, false, "c", false),
+    ("k5", "yes", true, false, "", true),
+    ("k6", "true", false, false, "", false))
 
   def gdprKeys(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val flat = gdprKeyRows.toDF("key_id", "gdpr_flag_raw", "has_secret",
-      "has_algorithm", "extra_meta", "has_enc_info")
+    val flat = gdprKeyRows.df(spark)
     val empty = typedLit(Map.empty[String, String])
     flat.withColumn("metadata", map_concat(
         when(col("gdpr_flag_raw").isNotNull,
@@ -571,7 +554,8 @@ object Tables {
 
   /** layout_features: the HDDS layout-feature catalog
     * (HDDSLayoutFeature.java:28-45) — consecutive layout versions 0..10. */
-  val layoutFeatureRows: Seq[(String, Long)] = Seq(
+  val layoutFeatureRows: Fixture[(String, Long)] = Fixture(
+    "feature", "version")(
     ("INITIAL_VERSION", 0L), ("DATANODE_SCHEMA_V2", 1L), ("SCM_HA", 2L),
     ("ERASURE_CODED_STORAGE_SUPPORT", 3L), ("DATANODE_SCHEMA_V3", 4L),
     ("RATIS_DATASTREAM_PORT_IN_DATANODEDETAILS", 5L),
@@ -580,16 +564,15 @@ object Tables {
     ("WITNESSED_CONTAINER_DB_PROTO_VALUE", 9L),
     ("STORAGE_SPACE_DISTRIBUTION", 10L))
 
-  def layoutFeatures(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    layoutFeatureRows.toDF("feature", "version")
-  }
+  def layoutFeatures(spark: SparkSession, dir: String): DataFrame =
+    layoutFeatureRows.df(spark)
 
   /** finalization_components: per-component upgrade state probing every
     * checkpoint combination, both inconsistent-state refusals, the
     * MLV-ahead startup guard, and the zero-pending walk. */
   val finalizationComponentRows
-  : Seq[(Long, String, Long, Long, Boolean, String)] = Seq(
+  : Fixture[(Long, String, Long, Long, Boolean, String)] = Fixture(
+    "comp_id", "kind", "mlv", "slv", "has_mark", "upgrade_state")(
     (1L, "OM", 3L, 10L, false, "FINALIZATION_REQUIRED"),
     (2L, "SCM", 5L, 10L, true, "FINALIZATION_IN_PROGRESS"),
     (3L, "SCM", 10L, 10L, true, "FINALIZATION_IN_PROGRESS"),
@@ -601,11 +584,8 @@ object Tables {
     (9L, "DN", 10L, 10L, true, "ALREADY_FINALIZED"),
     (10L, "OM", 0L, 0L, false, "ALREADY_FINALIZED"))
 
-  def finalizationComponents(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    finalizationComponentRows.toDF("comp_id", "kind", "mlv", "slv",
-      "has_mark", "upgrade_state")
-  }
+  def finalizationComponents(spark: SparkSession, dir: String): DataFrame =
+    finalizationComponentRows.df(spark)
 
   /** capacity_volumes: the DN volume pool the capacity choosing policy
     * filters and compares — an OK pair with distinct ratios, a soft-band
@@ -614,7 +594,10 @@ object Tables {
     * committed-overrun volume (free clamps to 0), and vol7 whose free
     * ratio EXACTLY ties vol2 (200000/10⁶ == 400000/2·10⁶ — the
     * first-pick-wins tie probe). Request size is 100000. */
-  val capacityVolumeRows: Seq[(Long, Long, Long, Long, Long, Long)] = Seq(
+  val capacityVolumeRows
+  : Fixture[(Long, Long, Long, Long, Long, Long)] = Fixture(
+    "vol_id", "capacity", "remaining", "committed", "hard_spare",
+    "reported_spare")(
     (1L, 1000000L, 600000L, 100000L, 20000L, 40000L),
     (2L, 1000000L, 300000L, 100000L, 20000L, 40000L),
     (3L, 1000000L, 160000L, 20000L, 20000L, 40000L),
@@ -623,18 +606,16 @@ object Tables {
     (6L, 500000L, 400000L, 450000L, 0L, 0L),
     (7L, 2000000L, 500000L, 100000L, 50000L, 80000L))
 
-  def capacityVolumes(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    capacityVolumeRows.toDF("vol_id", "capacity", "remaining", "committed",
-      "hard_spare", "reported_spare")
-  }
+  def capacityVolumes(spark: SparkSession, dir: String): DataFrame =
+    capacityVolumeRows.df(spark)
 
   /** capacity_pipe_nodes: pipeline→member scmUsed/capacity stats for the
     * capacity-pipeline comparator — p1/p2 share their two heaviest nodes
     * exactly and split at round 3; p3 is p1's two-node prefix (stack
     * exhaustion); p4's head node has p1's head WEIGHT (0.8) at half the
     * raw bytes (the raw-used tiebreak probe). */
-  val capacityPipeNodeRows: Seq[(String, String, Long, Long)] = Seq(
+  val capacityPipeNodeRows: Fixture[(String, String, Long, Long)] = Fixture(
+    "pipeline_id", "node", "used", "capacity")(
     ("p1", "n01", 800000L, 1000000L), ("p1", "n02", 500000L, 1000000L),
     ("p1", "n03", 200000L, 1000000L),
     ("p2", "n04", 800000L, 1000000L), ("p2", "n05", 500000L, 1000000L),
@@ -643,10 +624,8 @@ object Tables {
     ("p4", "n09", 400000L, 500000L), ("p4", "n10", 500000L, 1000000L),
     ("p4", "n11", 200000L, 1000000L))
 
-  def capacityPipeNodes(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    capacityPipeNodeRows.toDF("pipeline_id", "node", "used", "capacity")
-  }
+  def capacityPipeNodes(spark: SparkSession, dir: String): DataFrame =
+    capacityPipeNodeRows.df(spark)
 
   /** safemode_ec_containers: the typed SCM container catalog the EC-aware
     * safemode rules track — RATIS and EC (both rs-3-2 and rs-6-3 widths;
@@ -963,19 +942,19 @@ object Tables {
     * is 50), 2 aws:-prefix, 3 duplicate, 4 exactly 50 tags (boundary
     * pass), 5 empty key — plus an unknown-bucket probe and an
     * unknown-bucket-with-51-tags probe (gateway error wins). */
-  def bucketTagRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  def bucketTagRequests(spark: SparkSession, dir: String): DataFrame =
     buckets(spark, dir).select(
       (expr("CAST(substr(volume, 4, 10) AS BIGINT)") * 100 +
         expr("CAST(substr(bucket, 7, 10) AS BIGINT)")).as("req_id"),
       ((expr("CAST(substr(volume, 4, 10) AS BIGINT)") +
         expr("CAST(substr(bucket, 7, 10) AS BIGINT)")) % 6).as("cls"),
       col("volume"), col("bucket"))
-      .unionByName(Seq(
-        (9001L, 0L, "vol0", "no-such-bucket"),
-        (9002L, 1L, "vol9", "bucket0"))
-        .toDF("req_id", "cls", "volume", "bucket"))
-  }
+      .unionByName(bucketTagProbeRows.df(spark))
+
+  /** The unknown-bucket probes of [[bucketTagRequests]]. */
+  val bucketTagProbeRows = Fixture("req_id", "cls", "volume", "bucket")(
+    (9001L, 0L, "vol0", "no-such-bucket"),
+    (9002L, 1L, "vol9", "bucket0"))
 
   /** bucket_tag_entries: ordered tag list per bucket-tagging request. */
   def bucketTagEntries(spark: SparkSession, dir: String): DataFrame =
@@ -997,98 +976,97 @@ object Tables {
     * and two synthetic rows: an access id under a tenant MISSING from the
     * state table (the delete-order quirk) and an orphan access id with no
     * tenant at all (the revoke TENANT_NOT_FOUND branch). */
-  def tenantAccessCatalog(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  val tenantAccessProbeRows = Fixture(
+    "tenant_id", "user_principal", "access_id", "is_admin")(
+    ("no-such-but-hasids", "ghost", "no-such-but-hasids$ghost", false),
+    (null, "ghost2", "orphan$ghost2", false))
+
+  def tenantAccessCatalog(spark: SparkSession, dir: String): DataFrame =
     tenantAccessIds(spark, dir)
       .withColumn("is_admin", col("user_principal") === "clerk0")
-      .unionByName(Seq(
-        ("no-such-but-hasids", "ghost", "no-such-but-hasids$ghost", false),
-        (null, "ghost2", "orphan$ghost2", false))
-        .toDF("tenant_id", "user_principal", "access_id", "is_admin"))
-  }
+      .unionByName(tenantAccessProbeRows.df(spark))
 
   /** tenant_state plus one registered-but-empty tenant (no access ids,
     * no usage) — the DELETED branch of the delete ladder. */
-  def tenantStateExt(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    tenantState(spark, dir).unionByName(
-      Seq(("tenant-empty", "vol-empty", 0L, 0L))
-        .toDF("tenant_id", "volume", "bucket_count", "used_bytes"))
-  }
+  val emptyTenantRows = Fixture(
+    "tenant_id", "volume", "bucket_count", "used_bytes")(
+    ("tenant-empty", "vol-empty", 0L, 0L))
+
+  def tenantStateExt(spark: SparkSession, dir: String): DataFrame =
+    tenantState(spark, dir).unionByName(emptyTenantRows.df(spark))
 
   /** ranger_policies: the Ranger-side ozone-tenant policy catalog, with
     * deliberate drift — tenant2's and tenant-empty's bucket policies
     * missing (CREATE), one stale policy for a gone tenant (DELETE). */
-  def rangerPolicies(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      "tenant0-VolumeAccess", "tenant0-BucketAccess",
-      "tenant1-VolumeAccess", "tenant1-BucketAccess",
-      "tenant2-VolumeAccess",
-      "tenant3-VolumeAccess", "tenant3-BucketAccess",
-      "tenant-empty-VolumeAccess",
-      "tenant-gone-VolumeAccess")
-      .toDF("policy_name")
-  }
+  val rangerPolicyRows = Fixture("policy_name")(
+    "tenant0-VolumeAccess", "tenant0-BucketAccess",
+    "tenant1-VolumeAccess", "tenant1-BucketAccess",
+    "tenant2-VolumeAccess",
+    "tenant3-VolumeAccess", "tenant3-BucketAccess",
+    "tenant-empty-VolumeAccess",
+    "tenant-gone-VolumeAccess")
+
+  def rangerPolicies(spark: SparkSession, dir: String): DataFrame =
+    rangerPolicyRows.df(spark)
 
   /** ranger_roles: the Ranger-side role → member map, with drift —
     * tenant1's user role misses clerk3, tenant1's admin role carries an
     * intruder, tenant2's roles are absent entirely, one stale role. */
-  def rangerRoles(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  val rangerRoleRows = {
     val t0u = (0 to 6).map(i => ("tenant0-UserRole", s"clerk$i"))
     val t1u = (0 to 6).filter(_ != 3).map(i => ("tenant1-UserRole", s"clerk$i"))
     val t3u = (0 to 6).map(i => ("tenant3-UserRole", s"clerk$i"))
-    (t0u ++ Seq(("tenant0-AdminRole", "clerk0")) ++
-      t1u ++ Seq(("tenant1-AdminRole", "clerk0"),
-        ("tenant1-AdminRole", "intruder")) ++
-      t3u ++ Seq(("tenant3-AdminRole", "clerk0"),
-        ("tenant-gone-UserRole", "ghost")))
-      .toDF("role_name", "user_principal")
+    Fixture("role_name", "user_principal")(
+      t0u ++ Seq(("tenant0-AdminRole", "clerk0")) ++
+        t1u ++ Seq(("tenant1-AdminRole", "clerk0"),
+          ("tenant1-AdminRole", "intruder")) ++
+        t3u ++ Seq(("tenant3-AdminRole", "clerk0"),
+          ("tenant-gone-UserRole", "ghost")): _*)
   }
+
+  def rangerRoles(spark: SparkSession, dir: String): DataFrame =
+    rangerRoleRows.df(spark)
 
   /** tenant_create_requests: every OMTenantCreateRequest branch — the
     * '$' delimiter check, tenant-exists, volume-name rules, volume-exists
     * (with the force override), plus branch-order probes. */
-  def tenantCreateRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "tenant-new", "tenant-new", false),
-      (2L, "bad$tenant", "bad$tenant", false),
-      (3L, "tenant0", "tenant0", false),
-      (4L, "tenant-v", "vol1", false),
-      (5L, "tenant-bad-vol", "BAD..Vol", false),
-      (6L, "tenant0", "BAD..Vol", false),
-      (7L, "bad$x", "vol1", false),
-      (8L, "tenant-f", "vol1", true))
-      .toDF("req_id", "tenant_id", "volume", "force_when_volume_exists")
-  }
+  val tenantCreateRequestRows = Fixture(
+    "req_id", "tenant_id", "volume", "force_when_volume_exists")(
+    (1L, "tenant-new", "tenant-new", false),
+    (2L, "bad$tenant", "bad$tenant", false),
+    (3L, "tenant0", "tenant0", false),
+    (4L, "tenant-v", "vol1", false),
+    (5L, "tenant-bad-vol", "BAD..Vol", false),
+    (6L, "tenant0", "BAD..Vol", false),
+    (7L, "bad$x", "vol1", false),
+    (8L, "tenant-f", "vol1", true))
+
+  def tenantCreateRequests(spark: SparkSession, dir: String): DataFrame =
+    tenantCreateRequestRows.df(spark)
 
   /** tenant_delete_requests: not-empty (checked BEFORE existence — the
     * reference's preExecute order, a truthful quirk), not-found, empty →
     * deleted. 'tenant-empty' exists only in the extended state probe the
     * operator unions in. */
-  def tenantDeleteRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "tenant0"),
-      (2L, "no-such-tenant"),
-      (3L, "tenant-empty"),
-      (4L, "no-such-but-hasids"))
-      .toDF("req_id", "tenant_id")
-  }
+  val tenantDeleteRequestRows = Fixture("req_id", "tenant_id")(
+    (1L, "tenant0"),
+    (2L, "no-such-tenant"),
+    (3L, "tenant-empty"),
+    (4L, "no-such-but-hasids"))
+
+  def tenantDeleteRequests(spark: SparkSession, dir: String): DataFrame =
+    tenantDeleteRequestRows.df(spark)
 
   /** tenant_revoke_requests: REVOKED / PERMISSION_DENIED (tenant admin) /
     * ACCESS_ID_NOT_FOUND / TENANT_NOT_FOUND (orphan id). */
-  def tenantRevokeRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "tenant0$clerk1"),
-      (2L, "tenant0$clerk0"),
-      (3L, "nope$user"),
-      (4L, "orphan$ghost2"))
-      .toDF("req_id", "access_id")
-  }
+  val tenantRevokeRequestRows = Fixture("req_id", "access_id")(
+    (1L, "tenant0$clerk1"),
+    (2L, "tenant0$clerk0"),
+    (3L, "nope$user"),
+    (4L, "orphan$ghost2"))
+
+  def tenantRevokeRequests(spark: SparkSession, dir: String): DataFrame =
+    tenantRevokeRequestRows.df(spark)
 
   /** fso_rename_requests: an FSO RenameKey batch sampled from the key
     * catalog (object_id % 131 == 0, canonicalized like [[tagRequests]]).
@@ -1147,14 +1125,14 @@ object Tables {
   /** volumes_ref: the volume catalog reduced to the delete-ladder probes
     * (bucket occupancy + tenant reference count; vol3 models the
     * tenant-referenced volume) plus one bare volume with no buckets. */
-  def volumesRef(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  val bareVolumeRefRows = Fixture("volume", "bucket_count", "ref_count")(
+    ("vol-bare", 0L, 0L))
+
+  def volumesRef(spark: SparkSession, dir: String): DataFrame =
     volumes(spark, dir)
       .select(col("volume"), col("bucket_count"),
         when(col("volume") === "vol3", 1L).otherwise(0L).as("ref_count"))
-      .unionByName(Seq(("vol-bare", 0L, 0L))
-        .toDF("volume", "bucket_count", "ref_count"))
-  }
+      .unionByName(bareVolumeRefRows.df(spark))
 
   /** volume_quota_probe: per-volume facts the SetVolumeQuota ladder
     * needs — bucket count, byte-quota sum over quota-carrying buckets,
@@ -1162,8 +1140,12 @@ object Tables {
     * bucketless, one fully-quota'd with a known sum (the
     * quota-below-bucket-sum branch is unreachable on the real catalog
     * because every volume holds the quota-less bucket5). */
-  def volumeQuotaProbe(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  val syntheticQuotaProbeRows = Fixture(
+    "volume", "bucket_count", "bucket_quota_sum", "has_unset_bucket")(
+    ("vol-bare", 0L, 0L, false),
+    ("vol-capped", 2L, 800000000000L, false))
+
+  def volumeQuotaProbe(spark: SparkSession, dir: String): DataFrame =
     buckets(spark, dir)
       .groupBy("volume")
       .agg(count(lit(1)).as("bucket_count"),
@@ -1171,86 +1153,86 @@ object Tables {
           .otherwise(0L)).as("bucket_quota_sum"),
         max(when(col("quota_bytes") === -1L, true).otherwise(false))
           .as("has_unset_bucket"))
-      .unionByName(Seq(
-        ("vol-bare", 0L, 0L, false),
-        ("vol-capped", 2L, 800000000000L, false))
-        .toDF("volume", "bucket_count", "bucket_quota_sum",
-          "has_unset_bucket"))
-  }
+      .unionByName(syntheticQuotaProbeRows.df(spark))
 
   /** volume_set_quota_requests: -2 = field absent, -1 = QUOTA_RESET. */
-  def volumeSetQuotaRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "vol0", 500000000000L, -2L),
-      (2L, "vol0", -2L, 5L),
-      (3L, "vol0", -2L, 100L),
-      (4L, "vol0", -1L, -2L),
-      (5L, "vol0", 0L, -2L),
-      (6L, "no-such-vol", 10L, 10L),
-      (7L, "vol-bare", 500L, -2L),
-      (8L, "vol-bare", -2L, 0L),
-      (9L, "vol0", -5L, -2L),
-      (10L, "vol-capped", 500000000000L, -2L),
-      (11L, "vol-capped", 900000000000L, -2L),
-      (12L, "vol-capped", -2L, 1L))
-      .toDF("req_id", "volume", "new_quota_bytes", "new_quota_ns")
-  }
+  val volumeSetQuotaRequestRows = Fixture(
+    "req_id", "volume", "new_quota_bytes", "new_quota_ns")(
+    (1L, "vol0", 500000000000L, -2L),
+    (2L, "vol0", -2L, 5L),
+    (3L, "vol0", -2L, 100L),
+    (4L, "vol0", -1L, -2L),
+    (5L, "vol0", 0L, -2L),
+    (6L, "no-such-vol", 10L, 10L),
+    (7L, "vol-bare", 500L, -2L),
+    (8L, "vol-bare", -2L, 0L),
+    (9L, "vol0", -5L, -2L),
+    (10L, "vol-capped", 500000000000L, -2L),
+    (11L, "vol-capped", 900000000000L, -2L),
+    (12L, "vol-capped", -2L, 1L))
+
+  def volumeSetQuotaRequests(spark: SparkSession, dir: String): DataFrame =
+    volumeSetQuotaRequestRows.df(spark)
 
   /** volume_set_owner_requests: noop (same owner), transfer to a fresh
     * user, unknown volume (beats the noop-owner probe), transfer to a
     * user at the volume cap (cap shrunk to 1 in the declared query so the
     * branch is live on a 4-volume catalog; reference default 1024). */
-  def volumeSetOwnerRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "vol0", "admin0"),
-      (2L, "vol0", "fresh-user"),
-      (3L, "no-such-vol", "fresh-user"),
-      (4L, "vol1", "admin2"),
-      (5L, "no-such-vol", "admin0"))
-      .toDF("req_id", "volume", "new_owner")
-  }
+  val volumeSetOwnerRequestRows = Fixture("req_id", "volume", "new_owner")(
+    (1L, "vol0", "admin0"),
+    (2L, "vol0", "fresh-user"),
+    (3L, "no-such-vol", "fresh-user"),
+    (4L, "vol1", "admin2"),
+    (5L, "no-such-vol", "admin0"))
+
+  def volumeSetOwnerRequests(spark: SparkSession, dir: String): DataFrame =
+    volumeSetOwnerRequestRows.df(spark)
 
   /** volume_delete_requests: NOT_EMPTY / IS_REFERENCED (checked before
     * emptiness — vol3 is also non-empty, probing the order) / NOT_FOUND /
     * DELETED (the bare volume). */
-  def volumeDeleteRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq((1L, "vol0"), (2L, "vol3"), (3L, "no-such-vol"), (4L, "vol-bare"))
-      .toDF("req_id", "volume")
-  }
+  val volumeDeleteRequestRows = Fixture("req_id", "volume")(
+    (1L, "vol0"), (2L, "vol3"), (3L, "no-such-vol"), (4L, "vol-bare"))
+
+  def volumeDeleteRequests(spark: SparkSession, dir: String): DataFrame =
+    volumeDeleteRequestRows.df(spark)
 
   /** bucket_catalog_ext: real buckets ∪ link buckets ∪ three synthetic
     * empty buckets (plain / with an in-flight MPU / with a snapshot) —
     * the existence probe for DeleteBucket. */
-  def bucketCatalogExt(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  val emptyBucketRows = Fixture("volume", "bucket")(
+    ("vol0", "empty-b"), ("vol0", "empty-mpu"), ("vol0", "empty-snap"))
+
+  def bucketCatalogExt(spark: SparkSession, dir: String): DataFrame =
     buckets(spark, dir).select("volume", "bucket")
       .unionByName(bucketLinks(spark, dir).select("volume", "bucket"))
-      .unionByName(Seq(
-        ("vol0", "empty-b"), ("vol0", "empty-mpu"), ("vol0", "empty-snap"))
-        .toDF("volume", "bucket"))
-  }
+      .unionByName(emptyBucketRows.df(spark))
+
+  /** The synthetic empty buckets that an in-flight MPU (resp. a
+    * snapshot) blocks from deletion. */
+  val mpuBlockedBucketRows = Fixture("volume", "bucket")(
+    ("vol0", "empty-mpu"))
+
+  val snapshotBlockedBucketRows = Fixture("volume", "bucket")(
+    ("vol0", "empty-snap"))
 
   /** bucket_delete_requests: keys-occupied (beats MPU and snapshot
     * checks), missing, plain-empty, MPU-blocked, snapshot-blocked, and
     * two link buckets (a link's OWN key space is empty, so deleting the
     * link succeeds even though its source holds keys — reference
     * isBucketEmpty walks the link's prefix, not the source's). */
-  def bucketDeleteRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "vol0", "bucket0"),
-      (2L, "vol2", "bucket5"),
-      (3L, "vol0", "no-such"),
-      (4L, "vol0", "empty-b"),
-      (5L, "vol0", "empty-mpu"),
-      (6L, "vol0", "empty-snap"),
-      (7L, "vol1", "link-a"),
-      (8L, "vol2", "link-b"))
-      .toDF("req_id", "volume", "bucket")
-  }
+  val bucketDeleteRequestRows = Fixture("req_id", "volume", "bucket")(
+    (1L, "vol0", "bucket0"),
+    (2L, "vol2", "bucket5"),
+    (3L, "vol0", "no-such"),
+    (4L, "vol0", "empty-b"),
+    (5L, "vol0", "empty-mpu"),
+    (6L, "vol0", "empty-snap"),
+    (7L, "vol1", "link-a"),
+    (8L, "vol2", "link-b"))
+
+  def bucketDeleteRequests(spark: SparkSession, dir: String): DataFrame =
+    bucketDeleteRequestRows.df(spark)
 
   /** set_times_requests: an OMKeySetTimesRequest batch (object_id % 127,
     * canonicalized). cls: 0 set to a fixed epoch, 1 mtime=-1 (keep), 2
@@ -1364,65 +1346,64 @@ object Tables {
     * entry (APPLIED — the entry exists through another principal),
     * remove on a never-created prefix, and the trailing-slash
     * validation. Seqs are globally unique; stored entries are seq 0. */
-  def prefixAclWriteOps(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "vol0", "bucket0", "warehouse/", "REMOVE", "auditor2", 2L),
-      (2L, "vol0", "bucket0", "warehouse/", "REMOVE", "auditor2", 1L),
-      (3L, "vol0", "bucket0", "warehouse/", "ADD", "alice", 3L),
-      (4L, "vol0", "bucket0", "warehouse/", "REMOVE", "alice", 1L),
-      (5L, "vol0", "bucket0", "staging/", "REMOVE", "bob", 1L),
-      (6L, "vol0", "bucket0", "staging/", "ADD", "bob", 7L),
-      (7L, "vol0", "bucket0", "staging/", "SET", "carol", 1L),
-      (8L, "vol0", "bucket0", "staging/", "REMOVE", "bob", 4L),
-      (9L, "vol0", "bucket1", "no-slash", "ADD", "dave", 1L),
-      (10L, "vol0", "bucket1", "warehouse/A/", "REMOVE", "auditor2", 1L))
-      .toDF("seq", "volume", "bucket", "prefix", "op", "pname", "bits")
-  }
+  val prefixAclWriteOpRows = Fixture(
+    "seq", "volume", "bucket", "prefix", "op", "pname", "bits")(
+    (1L, "vol0", "bucket0", "warehouse/", "REMOVE", "auditor2", 2L),
+    (2L, "vol0", "bucket0", "warehouse/", "REMOVE", "auditor2", 1L),
+    (3L, "vol0", "bucket0", "warehouse/", "ADD", "alice", 3L),
+    (4L, "vol0", "bucket0", "warehouse/", "REMOVE", "alice", 1L),
+    (5L, "vol0", "bucket0", "staging/", "REMOVE", "bob", 1L),
+    (6L, "vol0", "bucket0", "staging/", "ADD", "bob", 7L),
+    (7L, "vol0", "bucket0", "staging/", "SET", "carol", 1L),
+    (8L, "vol0", "bucket0", "staging/", "REMOVE", "bob", 4L),
+    (9L, "vol0", "bucket1", "no-slash", "ADD", "dave", 1L),
+    (10L, "vol0", "bucket1", "warehouse/A/", "REMOVE", "auditor2", 1L))
+
+  def prefixAclWriteOps(spark: SparkSession, dir: String): DataFrame =
+    prefixAclWriteOpRows.df(spark)
 
   /** put_bucket_acl_requests: s3gateway PutBucketAcl branches — body
     * grants, multi-user header grants, missing bucket (checked BEFORE
     * grant parsing — probed by req 9's malformed grants), expected-owner
     * precondition mismatch + match, malformed `k=v` part, unsupported
     * grantee type, and the first-failing-grant order probe. */
-  def putBucketAclRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "vol0", "bucket0", ""),
-      (2L, "vol0", "bucket1", ""),
-      (3L, "vol0", "no-such", ""),
-      (4L, "vol1", "bucket3", "admin0"),
-      (5L, "vol1", "bucket3", "admin1"),
-      (6L, "vol2", "bucket5", ""),
-      (7L, "vol2", "bucket4", ""),
-      (8L, "vol3", "bucket7", ""),
-      (9L, "vol0", "no-such", ""))
-      .toDF("req_id", "volume", "bucket", "expected_owner")
-  }
+  val putBucketAclRequestRows = Fixture(
+    "req_id", "volume", "bucket", "expected_owner")(
+    (1L, "vol0", "bucket0", ""),
+    (2L, "vol0", "bucket1", ""),
+    (3L, "vol0", "no-such", ""),
+    (4L, "vol1", "bucket3", "admin0"),
+    (5L, "vol1", "bucket3", "admin1"),
+    (6L, "vol2", "bucket5", ""),
+    (7L, "vol2", "bucket4", ""),
+    (8L, "vol3", "bucket7", ""),
+    (9L, "vol0", "no-such", ""))
+
+  def putBucketAclRequests(spark: SparkSession, dir: String): DataFrame =
+    putBucketAclRequestRows.df(spark)
 
   /** put_bucket_acl_grants: the ordered grant list per request (header
     * order / body list order). Every S3 permission class appears so the
     * full bucket AND volume translation tables are exercised. */
-  def putBucketAclGrants(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, 1, "id", "clerk1", "FULL_CONTROL", false),
-      (1L, 2, "id", "clerk2", "READ", false),
-      (2L, 1, "id", "u1", "READ", false),
-      (2L, 2, "id", "u2", "WRITE", false),
-      (2L, 3, "id", "u1", "WRITE_ACP", false),
-      (2L, 4, "id", "u3", "READ_ACP", false),
-      (4L, 1, "id", "aud1", "WRITE", false),
-      (5L, 1, "id", "aud1", "WRITE", false),
-      (6L, 1, "id", "x", "READ", true),
-      (7L, 1, "emailAddress", "y", "READ", false),
-      (8L, 1, "id", "ok", "READ", false),
-      (8L, 2, "id", "bad", "READ", true),
-      (8L, 3, "emailAddress", "z", "READ", false),
-      (9L, 1, "id", "w", "READ", true))
-      .toDF("req_id", "pos", "grantee_type", "grantee", "s3_perm",
-        "malformed")
-  }
+  val putBucketAclGrantRows = Fixture(
+    "req_id", "pos", "grantee_type", "grantee", "s3_perm", "malformed")(
+    (1L, 1, "id", "clerk1", "FULL_CONTROL", false),
+    (1L, 2, "id", "clerk2", "READ", false),
+    (2L, 1, "id", "u1", "READ", false),
+    (2L, 2, "id", "u2", "WRITE", false),
+    (2L, 3, "id", "u1", "WRITE_ACP", false),
+    (2L, 4, "id", "u3", "READ_ACP", false),
+    (4L, 1, "id", "aud1", "WRITE", false),
+    (5L, 1, "id", "aud1", "WRITE", false),
+    (6L, 1, "id", "x", "READ", true),
+    (7L, 1, "emailAddress", "y", "READ", false),
+    (8L, 1, "id", "ok", "READ", false),
+    (8L, 2, "id", "bad", "READ", true),
+    (8L, 3, "emailAddress", "z", "READ", false),
+    (9L, 1, "id", "w", "READ", true))
+
+  def putBucketAclGrants(spark: SparkSession, dir: String): DataFrame =
+    putBucketAclGrantRows.df(spark)
 
   /** bucket_acl_catalog: per-bucket Ozone ACL rows for the GetBucketAcl
     * reverse mapping — the owner holds ALL, a world GROUP row must be
@@ -1560,17 +1541,16 @@ object Tables {
     * subtree under an existing dir, a brand-new top chain, two requests
     * sharing a new subtree (minted once), a fully-existing parent chain
     * (nothing to mint) and a root-level file (no parents). */
-  def mkdirRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("vol0", "bucket0", "warehouse/A/newdir/sub/file.dat"),
-      ("vol0", "bucket0", "warehouse/NEWTOP/x/y/file.dat"),
-      ("vol0", "bucket0", "warehouse/NEWTOP/x/z/file.dat"),
-      ("vol0", "bucket0", "warehouse/A/file2.dat"),
-      ("vol0", "bucket0", "rootfile.dat"),
-      ("vol1", "bucket3", "warehouse/N/fresh/leaf.dat"))
-      .toDF("volume", "bucket", "key")
-  }
+  val mkdirRequestRows = Fixture("volume", "bucket", "key")(
+    ("vol0", "bucket0", "warehouse/A/newdir/sub/file.dat"),
+    ("vol0", "bucket0", "warehouse/NEWTOP/x/y/file.dat"),
+    ("vol0", "bucket0", "warehouse/NEWTOP/x/z/file.dat"),
+    ("vol0", "bucket0", "warehouse/A/file2.dat"),
+    ("vol0", "bucket0", "rootfile.dat"),
+    ("vol1", "bucket3", "warehouse/N/fresh/leaf.dat"))
+
+  def mkdirRequests(spark: SparkSession, dir: String): DataFrame =
+    mkdirRequestRows.df(spark)
 
   /** volumes + a namespace quota (bucket-count budget): vol3 admits
     * exactly 2 more buckets, others unlimited — so the CreateBucket
@@ -1587,40 +1567,44 @@ object Tables {
     * unknown volume, byte-quota QUOTA_ERROR/QUOTA_EXCEEDED near-miss pair,
     * sequential namespace admission on vol3) plus branch-order probes
     * (name beats unknown volume, link args beat unknown volume). */
-  def bucketCreateRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "vol0", "newb-a", false, false, false, 5000000L),
-      (2L, "vol0", "newb-a", false, false, false, 5000000L),
-      (3L, "vol0", "bucket3", false, false, false, 5000000L),
-      (4L, "vol9", "newb-b", false, false, false, 5000000L),
-      (5L, "vol1", "newb-c", true, false, false, 0L),
-      (6L, "vol1", "newb-d", true, true, true, 0L),
-      (7L, "vol1", "newb-e", true, true, false, 0L),
-      (8L, "vol1", "newb-f", false, false, false, 0L),
-      (9L, "vol2", "newb-g", false, false, false, 999000000000L),
-      (10L, "vol2", "newb-h", false, false, false, 990000000000L),
-      (11L, "vol3", "newb-i", false, false, false, 1000000L),
-      (12L, "vol3", "newb-j", false, false, false, 1000000L),
-      (13L, "vol3", "newb-k", false, false, false, 1000000L),
-      (14L, "vol9", "bucket3", false, false, false, 5000000L),
-      (15L, "vol9", "newb-l", false, true, false, 0L),
-      (16L, "vol0", "Newb-Bad", false, false, false, 5000000L),
-      (17L, "vol0", "ab", false, false, false, 5000000L),
-      (18L, "vol0", "bad..name", false, false, false, 5000000L),
-      (19L, "vol0", "192.168.1.1", false, false, false, 5000000L),
-      (20L, "vol9", "-badstart", false, false, false, 5000000L))
-      .toDF("req_id", "volume", "bucket", "has_source_volume",
-        "has_source_bucket", "has_encryption", "quota_bytes")
-  }
+  val bucketCreateRequestRows = Fixture(
+    "req_id", "volume", "bucket", "has_source_volume", "has_source_bucket",
+    "has_encryption", "quota_bytes")(
+    (1L, "vol0", "newb-a", false, false, false, 5000000L),
+    (2L, "vol0", "newb-a", false, false, false, 5000000L),
+    (3L, "vol0", "bucket3", false, false, false, 5000000L),
+    (4L, "vol9", "newb-b", false, false, false, 5000000L),
+    (5L, "vol1", "newb-c", true, false, false, 0L),
+    (6L, "vol1", "newb-d", true, true, true, 0L),
+    (7L, "vol1", "newb-e", true, true, false, 0L),
+    (8L, "vol1", "newb-f", false, false, false, 0L),
+    (9L, "vol2", "newb-g", false, false, false, 999000000000L),
+    (10L, "vol2", "newb-h", false, false, false, 990000000000L),
+    (11L, "vol3", "newb-i", false, false, false, 1000000L),
+    (12L, "vol3", "newb-j", false, false, false, 1000000L),
+    (13L, "vol3", "newb-k", false, false, false, 1000000L),
+    (14L, "vol9", "bucket3", false, false, false, 5000000L),
+    (15L, "vol9", "newb-l", false, true, false, 0L),
+    (16L, "vol0", "Newb-Bad", false, false, false, 5000000L),
+    (17L, "vol0", "ab", false, false, false, 5000000L),
+    (18L, "vol0", "bad..name", false, false, false, 5000000L),
+    (19L, "vol0", "192.168.1.1", false, false, false, 5000000L),
+    (20L, "vol9", "-badstart", false, false, false, 5000000L))
+
+  def bucketCreateRequests(spark: SparkSession, dir: String): DataFrame =
+    bucketCreateRequestRows.df(spark)
 
   /** set_quota_requests: a SetBucketProperty quota batch — one request
     * per catalog bucket, class by bucket index (valid raise / clear-while-
     * volume-set / below byte usage / volume-budget blowout / below ns
     * usage), plus a link-bucket and an unknown-bucket probe. -2 = field
     * absent, -1 = QUOTA_RESET. */
+  val setQuotaProbeRows = Fixture(
+    "volume", "bucket", "new_quota_bytes", "new_quota_ns")(
+    ("vol1", "link-a", 5000000L, -2L),
+    ("vol0", "no-such-bucket", 5000000L, -2L))
+
   def setQuotaRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val derived = buckets(spark, dir)
       .withColumn("bucket_idx",
         substring(col("bucket"), 7, 10).cast("long"))
@@ -1634,44 +1618,41 @@ object Tables {
         when(col("bucket_idx") % 5 === 4,
           greatest(expr("used_namespace DIV 2"), lit(1L)))
           .otherwise(lit(-2L)).as("new_quota_ns"))
-    derived.unionByName(Seq(
-      ("vol1", "link-a", 5000000L, -2L),
-      ("vol0", "no-such-bucket", 5000000L, -2L))
-      .toDF("volume", "bucket", "new_quota_bytes", "new_quota_ns"))
+    derived.unionByName(setQuotaProbeRows.df(spark))
   }
 
   /** snapshot_catalog: the live snapshot chain (CommitLog.snapshotChain
     * fold) anchored on the commit-log bucket — the existence probe for
     * snapshot-admin requests. */
-  def snapshotCatalog(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    (graft.operators.CommitLog.snapshotChain
+  val snapshotCatalogRows = Fixture("volume", "bucket", "name")(
+    graft.operators.CommitLog.snapshotChain
       .map { case (n, _) => ("vol0", "bucket0", n) } :+
-      (("vol2", "bucket5", "snap-golden")))
-      .toDF("volume", "bucket", "name")
-  }
+      (("vol2", "bucket5", "snap-golden")): _*)
+
+  def snapshotCatalog(spark: SparkSession, dir: String): DataFrame =
+    snapshotCatalogRows.df(spark)
 
   /** snapshot_create_requests: every OMSnapshotCreateRequest branch —
     * fresh name, duplicate, create THROUGH a link (landing on the source
     * bucket, incl. a link+duplicate combo), dangling link, link loop,
     * invalid name, non-owner principal, admin override, unknown bucket. */
-  def snapshotCreateRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "vol0", "bucket0", "snap-new", "admin0"),
-      (2L, "vol0", "bucket0", "s1", "admin0"),
-      (3L, "vol1", "link-a", "snap-via-link", "admin0"),
-      (4L, "vol1", "link-a", "s2", "admin0"),
-      (5L, "vol3", "link-broken", "x-snap", "admin0"),
-      (6L, "vol0", "link-cycle1", "y-snap", "admin0"),
-      (7L, "vol0", "bucket0", "Bad..Name", "admin0"),
-      (8L, "vol0", "bucket0", "snap-two", "clerk1"),
-      (9L, "vol2", "bucket5", "snap-three", "admin2"),
-      (10L, "vol2", "nobucket", "snap-four", "admin2"),
-      (11L, "vol0", "bucket0", "snap-five", "om-admin"),
-      (12L, "vol2", "bucket5", "snap-golden", "admin2"))
-      .toDF("req_id", "volume", "bucket", "snapshot_name", "principal")
-  }
+  val snapshotCreateRequestRows = Fixture(
+    "req_id", "volume", "bucket", "snapshot_name", "principal")(
+    (1L, "vol0", "bucket0", "snap-new", "admin0"),
+    (2L, "vol0", "bucket0", "s1", "admin0"),
+    (3L, "vol1", "link-a", "snap-via-link", "admin0"),
+    (4L, "vol1", "link-a", "s2", "admin0"),
+    (5L, "vol3", "link-broken", "x-snap", "admin0"),
+    (6L, "vol0", "link-cycle1", "y-snap", "admin0"),
+    (7L, "vol0", "bucket0", "Bad..Name", "admin0"),
+    (8L, "vol0", "bucket0", "snap-two", "clerk1"),
+    (9L, "vol2", "bucket5", "snap-three", "admin2"),
+    (10L, "vol2", "nobucket", "snap-four", "admin2"),
+    (11L, "vol0", "bucket0", "snap-five", "om-admin"),
+    (12L, "vol2", "bucket5", "snap-golden", "admin2"))
+
+  def snapshotCreateRequests(spark: SparkSession, dir: String): DataFrame =
+    snapshotCreateRequestRows.df(spark)
 
   /** snapshot_catalog_ext: the rename ladder's existence probe — the live
     * chain with SNAPSHOT_ACTIVE status plus one SNAPSHOT_DELETED entry
@@ -1679,13 +1660,13 @@ object Tables {
     * OMSnapshotRenameRequest.java:190-200; the entry still OCCUPIES its
     * name for the new-name collision check — deleted snapshots stay in
     * snapshotInfoTable until purged). */
-  def snapshotCatalogExt(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  val snapshotGoneRows = Fixture("volume", "bucket", "name", "status")(
+    ("vol0", "bucket0", "snap-gone", "SNAPSHOT_DELETED"))
+
+  def snapshotCatalogExt(spark: SparkSession, dir: String): DataFrame =
     snapshotCatalog(spark, dir)
       .withColumn("status", lit("SNAPSHOT_ACTIVE"))
-      .unionByName(Seq(("vol0", "bucket0", "snap-gone", "SNAPSHOT_DELETED"))
-        .toDF("volume", "bucket", "name", "status"))
-  }
+      .unionByName(snapshotGoneRows.df(spark))
 
   /** snapshot_rename_requests: every OMSnapshotRenameRequest branch —
     * plain rename, invalid NEW name (the only one preExecute validates),
@@ -1694,28 +1675,27 @@ object Tables {
     * old-missing+new-exists precedence probe and the self-rename), old
     * missing, old SNAPSHOT_DELETED, non-owner principal, admin override,
     * dangling link, link loop, unknown bucket. */
-  def snapshotRenameRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "vol0", "bucket0", "s1", "s1-renamed", "admin0"),
-      (2L, "vol0", "bucket0", "s1", "Bad..Name", "admin0"),
-      (3L, "vol1", "link-a", "s2", "s2-new", "admin0"),
-      // collision probes use names that CLEAR the strict new-name rung
-      // (3-63 chars — the legacy chain names s1/s2 would fail it first):
-      // snap-gone is SNAPSHOT_DELETED yet still occupies its name
-      (4L, "vol0", "bucket0", "s1", "snap-gone", "admin0"),
-      (5L, "vol0", "bucket0", "nope", "fresh-name", "admin0"),
-      (6L, "vol0", "bucket0", "snap-gone", "revived", "admin0"),
-      (7L, "vol0", "bucket0", "s1", "s1-x", "clerk1"),
-      (8L, "vol2", "bucket5", "snap-golden", "snap-aurum", "om-admin"),
-      (9L, "vol3", "link-broken", "s1", "s1-y", "admin0"),
-      (10L, "vol0", "link-cycle1", "s1", "s1-z", "admin0"),
-      (11L, "vol2", "nobucket", "s1", "s1-w", "admin2"),
-      (12L, "vol2", "bucket5", "snap-golden", "snap-golden", "admin2"),
-      (13L, "vol2", "bucket5", "ghost", "snap-golden", "admin2"))
-      .toDF("req_id", "volume", "bucket", "old_name", "new_name",
-        "principal")
-  }
+  val snapshotRenameRequestRows = Fixture(
+    "req_id", "volume", "bucket", "old_name", "new_name", "principal")(
+    (1L, "vol0", "bucket0", "s1", "s1-renamed", "admin0"),
+    (2L, "vol0", "bucket0", "s1", "Bad..Name", "admin0"),
+    (3L, "vol1", "link-a", "s2", "s2-new", "admin0"),
+    // collision probes use names that CLEAR the strict new-name rung
+    // (3-63 chars — the legacy chain names s1/s2 would fail it first):
+    // snap-gone is SNAPSHOT_DELETED yet still occupies its name
+    (4L, "vol0", "bucket0", "s1", "snap-gone", "admin0"),
+    (5L, "vol0", "bucket0", "nope", "fresh-name", "admin0"),
+    (6L, "vol0", "bucket0", "snap-gone", "revived", "admin0"),
+    (7L, "vol0", "bucket0", "s1", "s1-x", "clerk1"),
+    (8L, "vol2", "bucket5", "snap-golden", "snap-aurum", "om-admin"),
+    (9L, "vol3", "link-broken", "s1", "s1-y", "admin0"),
+    (10L, "vol0", "link-cycle1", "s1", "s1-z", "admin0"),
+    (11L, "vol2", "nobucket", "s1", "s1-w", "admin2"),
+    (12L, "vol2", "bucket5", "snap-golden", "snap-golden", "admin2"),
+    (13L, "vol2", "bucket5", "ghost", "snap-golden", "admin2"))
+
+  def snapshotRenameRequests(spark: SparkSession, dir: String): DataFrame =
+    snapshotRenameRequestRows.df(spark)
 
   /** allocate_block_requests: an OMAllocateBlockRequest batch, derived
     * from the key population like [[keyCommitRequests]] (object_id % 97
@@ -1760,17 +1740,17 @@ object Tables {
     * assigned to a DIFFERENT tenant than requested (INVALID_TENANT_ID),
     * plain + delegated assignment, and the inferred-tenant path (empty
     * tenant_id → resolved from the accessId). */
-  def assignAdminRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "tenant1", "tenant1$clerk1", true),
-      (2L, "", "tenant2$clerk2", false),
-      (3L, "", "ghost$nobody", false),
-      (4L, "tenant1", "tenant1$missing", true),
-      (5L, "tenant2", "tenant1$clerk1", false),
-      (6L, "tenant3", "tenant3$clerk3", false))
-      .toDF("req_id", "tenant_id", "access_id", "delegated")
-  }
+  val assignAdminRequestRows = Fixture(
+    "req_id", "tenant_id", "access_id", "delegated")(
+    (1L, "tenant1", "tenant1$clerk1", true),
+    (2L, "", "tenant2$clerk2", false),
+    (3L, "", "ghost$nobody", false),
+    (4L, "tenant1", "tenant1$missing", true),
+    (5L, "tenant2", "tenant1$clerk1", false),
+    (6L, "tenant3", "tenant3$clerk3", false))
+
+  def assignAdminRequests(spark: SparkSession, dir: String): DataFrame =
+    assignAdminRequestRows.df(spark)
 
   /** container_report_events: the SCM report stream — seq 1 a full
     * report per node (the current replica map), seq 2 ICR deletes
@@ -1809,64 +1789,61 @@ object Tables {
   /** snapshot_chain_global: the snapshot catalog with a GLOBAL creation
     * order (chain index) — both chains (global, per-bucket path) derive
     * from it; the purge ladder splices entries out of both. */
-  def snapshotChainGlobal(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "s1", "vol0", "bucket0"),
-      (2L, "s2", "vol0", "bucket0"),
-      (3L, "snap-gone", "vol0", "bucket0"),
-      (4L, "snap-golden", "vol2", "bucket5"),
-      (5L, "snap-live", "vol0", "bucket0"))
-      .toDF("global_idx", "name", "volume", "bucket")
-  }
+  val snapshotChainGlobalRows = Fixture(
+    "global_idx", "name", "volume", "bucket")(
+    (1L, "s1", "vol0", "bucket0"),
+    (2L, "s2", "vol0", "bucket0"),
+    (3L, "snap-gone", "vol0", "bucket0"),
+    (4L, "snap-golden", "vol2", "bucket5"),
+    (5L, "snap-live", "vol0", "bucket0"))
+
+  def snapshotChainGlobal(spark: SparkSession, dir: String): DataFrame =
+    snapshotChainGlobalRows.df(spark)
 
   /** lifecycle_events: SCM container lifecycle streams — the CLOSE
     * happy path, the quasi-close path with the CLOSE-at-QUASI_CLOSED
     * invalid nuance, replayed idempotent events, and invalid events
     * ignored mid-stream (the stream continues from the unchanged
     * state). Seqs are dense per container. */
-  def containerLifecycleEvents(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, 1L, "FINALIZE"), (1L, 2L, "CLOSE"), (1L, 3L, "DELETE"),
-      (1L, 4L, "CLEANUP"), (1L, 5L, "CLEANUP"),
-      (2L, 1L, "FINALIZE"), (2L, 2L, "QUASI_CLOSE"), (2L, 3L, "CLOSE"),
-      (2L, 4L, "FORCE_CLOSE"), (2L, 5L, "DELETE"), (2L, 6L, "CLEANUP"),
-      (3L, 1L, "CLOSE"), (3L, 2L, "FINALIZE"), (3L, 3L, "FINALIZE"),
-      (3L, 4L, "QUASI_CLOSE"), (3L, 5L, "DELETE"), (3L, 6L, "CLEANUP"),
-      (4L, 1L, "DELETE"), (4L, 2L, "CLEANUP"), (4L, 3L, "FINALIZE"),
-      (5L, 1L, "FINALIZE"), (5L, 2L, "CLOSE"), (5L, 3L, "QUASI_CLOSE"),
-      (5L, 4L, "FORCE_CLOSE"))
-      .toDF("container_id", "seq", "event")
-  }
+  val containerLifecycleEventRows = Fixture("container_id", "seq", "event")(
+    (1L, 1L, "FINALIZE"), (1L, 2L, "CLOSE"), (1L, 3L, "DELETE"),
+    (1L, 4L, "CLEANUP"), (1L, 5L, "CLEANUP"),
+    (2L, 1L, "FINALIZE"), (2L, 2L, "QUASI_CLOSE"), (2L, 3L, "CLOSE"),
+    (2L, 4L, "FORCE_CLOSE"), (2L, 5L, "DELETE"), (2L, 6L, "CLEANUP"),
+    (3L, 1L, "CLOSE"), (3L, 2L, "FINALIZE"), (3L, 3L, "FINALIZE"),
+    (3L, 4L, "QUASI_CLOSE"), (3L, 5L, "DELETE"), (3L, 6L, "CLEANUP"),
+    (4L, 1L, "DELETE"), (4L, 2L, "CLEANUP"), (4L, 3L, "FINALIZE"),
+    (5L, 1L, "FINALIZE"), (5L, 2L, "CLOSE"), (5L, 3L, "QUASI_CLOSE"),
+    (5L, 4L, "FORCE_CLOSE"))
+
+  def containerLifecycleEvents(spark: SparkSession, dir: String): DataFrame =
+    containerLifecycleEventRows.df(spark)
 
   /** dn_containers: one datanode-local container per lifecycle state,
     * with the on-disk BCSID the dispatch ladder fences against. */
-  def dnContainers(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "OPEN", 10L), (2L, "CLOSED", 50L), (3L, "UNHEALTHY", 5L),
-      (4L, "INVALID", 0L), (5L, "CLOSING", 7L), (6L, "RECOVERING", 0L),
-      (7L, "QUASI_CLOSED", 20L), (8L, "OPEN", 0L))
-      .toDF("container_id", "cstate", "initial_bcsid")
-  }
+  val dnContainerRows = Fixture("container_id", "cstate", "initial_bcsid")(
+    (1L, "OPEN", 10L), (2L, "CLOSED", 50L), (3L, "UNHEALTHY", 5L),
+    (4L, "INVALID", 0L), (5L, "CLOSING", 7L), (6L, "RECOVERING", 0L),
+    (7L, "QUASI_CLOSED", 20L), (8L, "OPEN", 0L))
+
+  def dnContainers(spark: SparkSession, dir: String): DataFrame =
+    dnContainerRows.df(spark)
 
   /** pending_deleted_dirs: the deleted-dir table the purge walk drains —
     * a fully-purged dir, an empty skip, a retained dir shedding only
     * reclaimable files, a budget-truncated dir, and dirs past the spent
     * budget. */
-  def pendingDeletedDirs(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, 2L, 3L, 2L, true),
-      (2L, 0L, 0L, 0L, false),
-      (3L, 1L, 5L, 2L, false),
-      (4L, 3L, 4L, 4L, true),
-      (5L, 0L, 1L, 1L, true),
-      (6L, 2L, 0L, 0L, false))
-      .toDF("dir_id", "n_subdirs", "n_subfiles", "n_reclaimable_files",
-        "purge_dir")
-  }
+  val pendingDeletedDirRows = Fixture(
+    "dir_id", "n_subdirs", "n_subfiles", "n_reclaimable_files", "purge_dir")(
+    (1L, 2L, 3L, 2L, true),
+    (2L, 0L, 0L, 0L, false),
+    (3L, 1L, 5L, 2L, false),
+    (4L, 3L, 4L, 4L, true),
+    (5L, 0L, 1L, 1L, true),
+    (6L, 2L, 0L, 0L, false))
+
+  def pendingDeletedDirs(spark: SparkSession, dir: String): DataFrame =
+    pendingDeletedDirRows.df(spark)
 
   /** sigv4_headers: Authorization-header parse fixtures — every rung of
     * AuthorizationV4HeaderParser (NOT_V4 fall-through, separator/part
@@ -1876,15 +1853,11 @@ object Tables {
     * injected now=2023-05-24, signed-header and hex-signature rules
     * incl. the odd-length refusal) plus three OK rows (Kerberos, base,
     * both date boundaries). */
-  def sigv4Headers(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    sigv4HeaderRows.toDF("req_id", "auth_header")
-  }
+  def sigv4Headers(spark: SparkSession, dir: String): DataFrame =
+    sigv4HeaderRows.df(spark)
 
-  /** Shared row literals — the oracle CTE is generated from the SAME
-    * Seq so the two sides cannot drift. */
-  val sigv4HeaderRows: Seq[(Long, String)] =
-    Seq(
+  val sigv4HeaderRows: Fixture[(Long, String)] =
+    Fixture("req_id", "auth_header")(
       (1L, ""),
       (2L, "Basic dXNlcg=="),
       (3L, "AWS4-HMAC-SHA256"),
@@ -1943,7 +1916,8 @@ object Tables {
     * the V2 rungs incl. Java's trailing-separator drop ('AWS ak:' is
     * an ARITY failure, not blank-signature), anonymous fall-through.
     * NULL = no Authorization header. */
-  val authDispatchRows: Seq[(Long, String, Boolean)] = Seq(
+  val authDispatchRows: Fixture[(Long, String, Boolean)] = Fixture(
+    "req_id", "auth_header", "has_query_sig")(
     (1L, "AWS4-HMAC-SHA256 Credential=x, SignedHeaders=h, Signature=ab",
       false),
     (2L, null, true),
@@ -1960,26 +1934,23 @@ object Tables {
     (12L, null, false),
     (13L, "AWS  ak:sig", false))
 
-  def authDispatchRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    authDispatchRows.toDF("req_id", "auth_header", "has_query_sig")
-  }
+  def authDispatchRequests(spark: SparkSession, dir: String): DataFrame =
+    authDispatchRows.df(spark)
 
   /** range_headers: the S3 Range-header parse fixtures against a
     * 100-byte object — bounded/suffix/open ranges, clamping, the
     * 416 invalid combination with RAW offsets, the `bytes=-` and
     * start>end artifacts, syntax fall-through to full reads. */
-  val rangeHeaderRows: Seq[(Long, String)] = Seq(
+  val rangeHeaderRows: Fixture[(Long, String)] = Fixture(
+    "req_id", "range_header")(
     (1L, "bytes=0-49"), (2L, "bytes=10-"), (3L, "bytes=-30"),
     (4L, "bytes=-150"), (5L, "bytes=-"), (6L, "bytes=150-"),
     (7L, "bytes=150-200"), (8L, "bytes=150-80"), (9L, "bytes=0-150"),
     (10L, "bytes=5-2"), (11L, "garbage"), (12L, "bytes=0-5,10-20"),
     (13L, "bytes=99-99"), (14L, "bytes=100-100"))
 
-  def rangeHeaders(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    rangeHeaderRows.toDF("req_id", "range_header")
-  }
+  def rangeHeaders(spark: SparkSession, dir: String): DataFrame =
+    rangeHeaderRows.df(spark)
 
   /** string_to_sign requests: raw request parts (method, uri, signed
     * list, packed header/query maps, auth metadata) for the canonical-
@@ -1987,7 +1958,7 @@ object Tables {
     * X-Amz-Signature exclusion, blank-uri rule, segment encoding,
     * query sorting+encoding) and every refusal rung. NULL datetime =
     * absent header. */
-  val stringToSignRows: Seq[(Long, String, String, String, String,
+  val stringToSignRows: Fixture[(Long, String, String, String, String,
     String, String, String, String, Boolean)] = {
     val h = "host=s3g.internal|x-amz-date=20230524T110000Z|" +
       "x-amz-content-sha256=UNSIGNED-PAYLOAD"
@@ -1995,7 +1966,9 @@ object Tables {
     val a = "AWS4-HMAC-SHA256"
     val dt = "20230524T110000Z"
     val sc = "20230524/us-east-1/s3/aws4_request"
-    Seq(
+    Fixture(
+      "req_id", "method", "uri", "signed_headers", "headers_str", "query_str",
+      "algorithm", "dt", "scope", "sign_payload")(
       (1L, "GET", "/bucket/key", "host;x-amz-content-sha256;x-amz-date",
         h, "", a, dt, sc, true),
       (2L, "GET", "/bucket", "host;x-amz-date", h2,
@@ -2020,12 +1993,8 @@ object Tables {
         "prefix=a b|X-Amz-Signature=abcd|delimiter=/", a, dt, sc, true))
   }
 
-  def stringToSignRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    stringToSignRows.toDF("req_id", "method", "uri", "signed_headers",
-      "headers_str", "query_str", "algorithm", "dt", "scope",
-      "sign_payload")
-  }
+  def stringToSignRequests(spark: SparkSession, dir: String): DataFrame =
+    stringToSignRows.df(spark)
 
   /** presigned_requests: X-Amz-* query parameters for the presigned-URL
     * parse ladder — the signature-presence gate, algorithm rungs,
@@ -2034,12 +2003,14 @@ object Tables {
     * url-decoded credential ladder, signed-header and signature rungs,
     * boundary OKs (max expires, expiry == now). NULL = parameter
     * absent, '' = present-but-empty — the reference distinguishes. */
-  val presignedRows: Seq[(Long, String, String, String, String, String,
+  val presignedRows: Fixture[(Long, String, String, String, String, String,
     String)] = {
     val okc = "AKIA%2F20230524%2Fus-east-1%2Fs3%2Faws4_request"
     val a = "AWS4-HMAC-SHA256"
     val d = "20230524T110000Z"
-    Seq(
+    Fixture(
+      "req_id", "algorithm", "amz_date", "expires", "credential",
+      "signed_headers", "signature")(
       (1L, a, d, "7200", okc, "host", null),
       (2L, null, d, "7200", okc, "host", "ab12"),
       (3L, "AWS4-HMAC-SHA999", d, "7200", okc, "host", "ab12"),
@@ -2070,11 +2041,8 @@ object Tables {
         "host", "ab12"))
   }
 
-  def presignedRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    presignedRows.toDF("req_id", "algorithm", "amz_date", "expires",
-      "credential", "signed_headers", "signature")
-  }
+  def presignedRequests(spark: SparkSession, dir: String): DataFrame =
+    presignedRows.df(spark)
 
   /** sbd_txns + catalog: the SCM deleted-block dispatch round —
     * cleanup (deleted + missing containers), OPEN skip, inadequate
@@ -2082,53 +2050,51 @@ object Tables {
     * that fill the per-dn caps and the global budget, an all-duplicate
     * no-op, the circular-resume order (lastProcessed=2 walks 3..12
     * then 1, 2) and a NOT_REACHED tail. */
-  def sbdTxns(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "c7", 10L), (2L, "c2", 9L), (3L, "c3", 5L), (4L, "c4", 5L),
-      (5L, "c5", 5L), (6L, "c6", 5L), (7L, "c1", 30L), (8L, "c9", 4L),
-      (9L, "c2", 25L), (10L, "c8", 10L), (11L, "c7", 6L),
-      (12L, "c10", 8L))
-      .toDF("txn_id", "container_id", "blocks")
-  }
+  val sbdTxnRows = Fixture("txn_id", "container_id", "blocks")(
+    (1L, "c7", 10L), (2L, "c2", 9L), (3L, "c3", 5L), (4L, "c4", 5L),
+    (5L, "c5", 5L), (6L, "c6", 5L), (7L, "c1", 30L), (8L, "c9", 4L),
+    (9L, "c2", 25L), (10L, "c8", 10L), (11L, "c7", 6L),
+    (12L, "c10", 8L))
+
+  def sbdTxns(spark: SparkSession, dir: String): DataFrame =
+    sbdTxnRows.df(spark)
 
   /** Container states for the dispatch round; c9 is deliberately
     * ABSENT (ContainerNotFoundException → txn cleanup). */
-  def sbdContainers(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("c1", "CLOSED", true), ("c2", "CLOSED", true),
-      ("c3", "DELETED", true), ("c4", "OPEN", true),
-      ("c5", "CLOSED", true), ("c6", "CLOSED", false),
-      ("c7", "CLOSED", true), ("c8", "CLOSED", true),
-      ("c10", "CLOSED", true))
-      .toDF("container_id", "cstate", "health_ok")
-  }
+  val sbdContainerRows = Fixture("container_id", "cstate", "health_ok")(
+    ("c1", "CLOSED", true), ("c2", "CLOSED", true),
+    ("c3", "DELETED", true), ("c4", "OPEN", true),
+    ("c5", "CLOSED", true), ("c6", "CLOSED", false),
+    ("c7", "CLOSED", true), ("c8", "CLOSED", true),
+    ("c10", "CLOSED", true))
+
+  def sbdContainers(spark: SparkSession, dir: String): DataFrame =
+    sbdContainerRows.df(spark)
 
   /** Replica map; d9 is not in the included set (pins c5). */
-  def sbdReplicas(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("c1", "d1"), ("c1", "d2"), ("c2", "d1"), ("c2", "d2"),
-      ("c3", "d1"), ("c4", "d2"), ("c4", "d3"), ("c5", "d3"),
-      ("c5", "d9"), ("c6", "d3"), ("c6", "d4"), ("c7", "d3"),
-      ("c7", "d4"), ("c8", "d1"), ("c8", "d2"), ("c10", "d4"))
-      .toDF("container_id", "dn")
-  }
+  val sbdReplicaRows = Fixture("container_id", "dn")(
+    ("c1", "d1"), ("c1", "d2"), ("c2", "d1"), ("c2", "d2"),
+    ("c3", "d1"), ("c4", "d2"), ("c4", "d3"), ("c5", "d3"),
+    ("c5", "d9"), ("c6", "d3"), ("c6", "d4"), ("c7", "d3"),
+    ("c7", "d4"), ("c8", "d1"), ("c8", "d2"), ("c10", "d4"))
+
+  def sbdReplicas(spark: SparkSession, dir: String): DataFrame =
+    sbdReplicaRows.df(spark)
 
   /** Healthy + in-service datanodes under the command limit
     * (getDatanodesWithinCommandLimit). */
-  def sbdIncluded(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq("d1", "d2", "d3", "d4").toDF("dn")
-  }
+  val sbdIncludedRows = Fixture("dn")("d1", "d2", "d3", "d4")
+
+  def sbdIncluded(spark: SparkSession, dir: String): DataFrame =
+    sbdIncludedRows.df(spark)
 
   /** (dn, txn) pairs already holding the command (the status manager's
     * duplication probe). */
-  def sbdDups(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(("d2", 9L), ("d3", 11L), ("d4", 11L)).toDF("dn", "txn_id")
-  }
+  val sbdDupRows = Fixture("dn", "txn_id")(
+    ("d2", 9L), ("d3", 11L), ("d4", 11L))
+
+  def sbdDups(spark: SparkSession, dir: String): DataFrame =
+    sbdDupRows.df(spark)
 
   /** dn_delete_containers: the DN block-deleting candidate set — every
     * eligibility rung (no pending, wrong type, wrong state, unparseable
@@ -2136,44 +2102,43 @@ object Tables {
     * containers via the empty-pipeline, gone-Ratis-group and
     * fully-replicated paths; pendings sized so the TopN fill truncates
     * mid-container. */
-  def dnDeleteContainers(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "KeyValueContainer", "CLOSED", 40L, "p1", true, true, 100L, 50L),
-      (2L, "KeyValueContainer", "CLOSED", 100L, "p2", true, true, 10L, 50L),
-      (3L, "KeyValueContainer", "OPEN", 30L, "p3", true, true, 100L, 50L),
-      (4L, "KeyValueContainer", "QUASI_CLOSED", 60L, "", true, false, 0L, 0L),
-      (5L, "KeyValueContainer", "CLOSED", 0L, "p5", true, true, 100L, 50L),
-      (6L, "OtherContainer", "CLOSED", 20L, "p6", true, true, 100L, 50L),
-      (7L, "KeyValueContainer", "CLOSED", 25L, "not-a-uuid", false, true,
-        100L, 50L),
-      (8L, "KeyValueContainer", "CLOSED", 50L, "p8", true, false, 0L, 50L),
-      (9L, "KeyValueContainer", "CLOSED", 50L, "p9", true, true, 80L, 80L),
-      (10L, "KeyValueContainer", "QUASI_CLOSED", 15L, "p10", true, true,
-        90L, 20L),
-      (11L, "KeyValueContainer", "CLOSED", 60L, "", true, false, 0L, 0L),
-      (12L, "KeyValueContainer", "CLOSED", 10L, "", true, false, 0L, 0L))
-      .toDF("container_id", "ctype", "cstate", "pending_blocks",
-        "origin_pipeline", "pipeline_parseable", "ratis_group_exists",
-        "min_replicated_index", "bcsid")
-  }
+  val dnDeleteContainerRows = Fixture(
+    "container_id", "ctype", "cstate", "pending_blocks", "origin_pipeline",
+    "pipeline_parseable", "ratis_group_exists", "min_replicated_index",
+    "bcsid")(
+    (1L, "KeyValueContainer", "CLOSED", 40L, "p1", true, true, 100L, 50L),
+    (2L, "KeyValueContainer", "CLOSED", 100L, "p2", true, true, 10L, 50L),
+    (3L, "KeyValueContainer", "OPEN", 30L, "p3", true, true, 100L, 50L),
+    (4L, "KeyValueContainer", "QUASI_CLOSED", 60L, "", true, false, 0L, 0L),
+    (5L, "KeyValueContainer", "CLOSED", 0L, "p5", true, true, 100L, 50L),
+    (6L, "OtherContainer", "CLOSED", 20L, "p6", true, true, 100L, 50L),
+    (7L, "KeyValueContainer", "CLOSED", 25L, "not-a-uuid", false, true,
+      100L, 50L),
+    (8L, "KeyValueContainer", "CLOSED", 50L, "p8", true, false, 0L, 50L),
+    (9L, "KeyValueContainer", "CLOSED", 50L, "p9", true, true, 80L, 80L),
+    (10L, "KeyValueContainer", "QUASI_CLOSED", 15L, "p10", true, true,
+      90L, 20L),
+    (11L, "KeyValueContainer", "CLOSED", 60L, "", true, false, 0L, 0L),
+    (12L, "KeyValueContainer", "CLOSED", 10L, "", true, false, 0L, 0L))
+
+  def dnDeleteContainers(spark: SparkSession, dir: String): DataFrame =
+    dnDeleteContainerRows.df(spark)
 
   /** dn_volume_ops: the round-robin volume-choice op stream — three
     * registrations, rotating allocations, a removal that strands the
     * cursor out of bounds (restart-at-0 guard), full-circle
     * out-of-space misses that leave the cursor parked, drain to an
     * empty list (NO_VOLUMES), late re-registration. */
-  def dnVolumeOps(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "ADD:v0:1000"), (2L, "ADD:v1:500"), (3L, "ADD:v2:800"),
-      (4L, "ALLOC:300"), (5L, "ALLOC:400"), (6L, "REMOVE:v0"),
-      (7L, "ALLOC:100"), (8L, "ALLOC:700"), (9L, "ALLOC:200"),
-      (10L, "ALLOC:100"), (11L, "REMOVE:v1"), (12L, "ALLOC:10"),
-      (13L, "REMOVE:v2"), (14L, "ALLOC:10"), (15L, "ADD:v3:100"),
-      (16L, "ALLOC:60"), (17L, "ALLOC:60"))
-      .toDF("seq", "op")
-  }
+  val dnVolumeOpRows = Fixture("seq", "op")(
+    (1L, "ADD:v0:1000"), (2L, "ADD:v1:500"), (3L, "ADD:v2:800"),
+    (4L, "ALLOC:300"), (5L, "ALLOC:400"), (6L, "REMOVE:v0"),
+    (7L, "ALLOC:100"), (8L, "ALLOC:700"), (9L, "ALLOC:200"),
+    (10L, "ALLOC:100"), (11L, "REMOVE:v1"), (12L, "ALLOC:10"),
+    (13L, "REMOVE:v2"), (14L, "ALLOC:10"), (15L, "ADD:v3:100"),
+    (16L, "ALLOC:60"), (17L, "ALLOC:60"))
+
+  def dnVolumeOps(spark: SparkSession, dir: String): DataFrame =
+    dnVolumeOpRows.df(spark)
 
   /** alloc_requests: SCM block-allocation requests (BlockManagerImpl →
     * WritableRatisContainerProvider) — cursor tail hit, exclusion-forced
@@ -2182,89 +2147,88 @@ object Tables {
     * RATIS/ONE pipeline minting, a space-blocked EC CREATE_PIPELINE, a
     * miss-path post-mint, the removed-pipeline loop, and the limit-0
     * miss-path-mint artifact. '' = no exclusion. */
-  def allocRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, 10L, "o1", "RATIS/THREE", "", "", 0L),
-      (2L, 10L, "o1", "RATIS/THREE", "", "", 103L),
-      (3L, 20L, "o1", "RATIS/THREE", "", "pl-a", 0L),
-      (4L, 10L, "o1", "RATIS/THREE", "dnX", "", 0L),
-      (5L, 10L, "o2", "RATIS/ONE", "", "", 0L),
-      (6L, 10L, "o3", "EC/rs-3-2-1024k", "", "pl-h", 0L),
-      (7L, 10L, "o4", "RATIS/THREE", "", "", 0L),
-      (8L, 10L, "o3", "EC/rs-3-2-1024k", "", "", 0L),
-      (9L, 10L, "o5", "RATIS/ONE", "", "pl-d", 0L))
-      .toDF("req_id", "size", "owner", "rep_config", "excl_dn",
-        "excl_pipeline", "excl_container")
-  }
+  val allocRequestRows = Fixture(
+    "req_id", "size", "owner", "rep_config", "excl_dn", "excl_pipeline",
+    "excl_container")(
+    (1L, 10L, "o1", "RATIS/THREE", "", "", 0L),
+    (2L, 10L, "o1", "RATIS/THREE", "", "", 103L),
+    (3L, 20L, "o1", "RATIS/THREE", "", "pl-a", 0L),
+    (4L, 10L, "o1", "RATIS/THREE", "dnX", "", 0L),
+    (5L, 10L, "o2", "RATIS/ONE", "", "", 0L),
+    (6L, 10L, "o3", "EC/rs-3-2-1024k", "", "pl-h", 0L),
+    (7L, 10L, "o4", "RATIS/THREE", "", "", 0L),
+    (8L, 10L, "o3", "EC/rs-3-2-1024k", "", "", 0L),
+    (9L, 10L, "o5", "RATIS/ONE", "", "pl-d", 0L))
+
+  def allocRequests(spark: SparkSession, dir: String): DataFrame =
+    allocRequestRows.df(spark)
 
   /** The SCM pipeline catalog for the allocation walk; pl-f is
     * ALLOCATED (never a write candidate), pl-b is the unhealthy
     * fallback. */
-  def allocPipelines(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("pl-a", "RATIS/THREE", "OPEN", true),
-      ("pl-b", "RATIS/THREE", "OPEN", false),
-      ("pl-c", "RATIS/THREE", "OPEN", true),
-      ("pl-d", "RATIS/ONE", "OPEN", true),
-      ("pl-e", "EC/rs-3-2-1024k", "OPEN", true),
-      ("pl-f", "RATIS/THREE", "ALLOCATED", true),
-      ("pl-h", "EC/rs-3-2-1024k", "OPEN", true),
-      ("pl-i", "RATIS/ONE", "OPEN", true))
-      .toDF("pipeline_id", "rep_config", "pstate", "healthy")
-  }
+  val allocPipelineRows = Fixture(
+    "pipeline_id", "rep_config", "pstate", "healthy")(
+    ("pl-a", "RATIS/THREE", "OPEN", true),
+    ("pl-b", "RATIS/THREE", "OPEN", false),
+    ("pl-c", "RATIS/THREE", "OPEN", true),
+    ("pl-d", "RATIS/ONE", "OPEN", true),
+    ("pl-e", "EC/rs-3-2-1024k", "OPEN", true),
+    ("pl-f", "RATIS/THREE", "ALLOCATED", true),
+    ("pl-h", "EC/rs-3-2-1024k", "OPEN", true),
+    ("pl-i", "RATIS/ONE", "OPEN", true))
+
+  def allocPipelines(spark: SparkSession, dir: String): DataFrame =
+    allocPipelineRows.df(spark)
 
   /** Pipeline membership; dnX rides every RATIS/THREE pipeline so one
     * dn exclusion can wipe the whole candidate set. */
-  def allocPipelineMembers(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("pl-a", "dnA"), ("pl-a", "dnB"), ("pl-a", "dnX"),
-      ("pl-b", "dnC"), ("pl-b", "dnD"), ("pl-b", "dnX"),
-      ("pl-c", "dnC"), ("pl-c", "dnD"), ("pl-c", "dnX"),
-      ("pl-d", "dnC"),
-      ("pl-e", "dnE"), ("pl-e", "dnC"), ("pl-e", "dnD"),
-      ("pl-f", "dnA"), ("pl-f", "dnB"), ("pl-f", "dnC"),
-      ("pl-h", "dnC"), ("pl-h", "dnD"),
-      ("pl-i", "dnF"))
-      .toDF("pipeline_id", "dn")
-  }
+  val allocPipelineMemberRows = Fixture("pipeline_id", "dn")(
+    ("pl-a", "dnA"), ("pl-a", "dnB"), ("pl-a", "dnX"),
+    ("pl-b", "dnC"), ("pl-b", "dnD"), ("pl-b", "dnX"),
+    ("pl-c", "dnC"), ("pl-c", "dnD"), ("pl-c", "dnX"),
+    ("pl-d", "dnC"),
+    ("pl-e", "dnE"), ("pl-e", "dnC"), ("pl-e", "dnD"),
+    ("pl-f", "dnA"), ("pl-f", "dnB"), ("pl-f", "dnC"),
+    ("pl-h", "dnC"), ("pl-h", "dnD"),
+    ("pl-i", "dnF"))
+
+  def allocPipelineMembers(spark: SparkSession, dir: String): DataFrame =
+    allocPipelineMemberRows.df(spark)
 
   /** Per-dn volume/pipeline-limit/space dims feeding openContainerLimit
     * (SCMNodeManager.java:1661-1676) and the mint space gate
     * (checkSpaceAndRecordAllocation). dnF's pipeline_limit 0 zeroes its
     * pipeline's limit; dnE blocks minting. */
-  def allocDatanodes(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("dnA", 3L, 3L, true), ("dnB", 2L, 2L, true),
-      ("dnC", 4L, 2L, true), ("dnD", 4L, 2L, true),
-      ("dnE", 2L, 2L, false), ("dnX", 3L, 3L, true),
-      ("dnF", 1L, 0L, true))
-      .toDF("dn", "healthy_volumes", "pipeline_limit", "has_space")
-  }
+  val allocDatanodeRows = Fixture(
+    "dn", "healthy_volumes", "pipeline_limit", "has_space")(
+    ("dnA", 3L, 3L, true), ("dnB", 2L, 2L, true),
+    ("dnC", 4L, 2L, true), ("dnD", 4L, 2L, true),
+    ("dnE", 2L, 2L, false), ("dnX", 3L, 3L, true),
+    ("dnF", 1L, 0L, true))
+
+  def allocDatanodes(spark: SparkSession, dir: String): DataFrame =
+    allocDatanodeRows.df(spark)
 
   /** Open containers per (pipeline, owner) with used bytes against the
     * 1000-unit container size; 140 belongs to another owner (the owner
     * filter drops it). */
-  def allocContainers(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (101L, "pl-a", "o1", 100L), (102L, "pl-a", "o1", 990L),
-      (103L, "pl-a", "o1", 400L),
-      (120L, "pl-a", "o4", 995L), (121L, "pl-a", "o4", 998L),
-      (130L, "pl-e", "o3", 995L), (131L, "pl-e", "o3", 996L),
-      (140L, "pl-a", "o9", 10L))
-      .toDF("container_id", "pipeline_id", "owner", "used")
-  }
+  val allocContainerRows = Fixture(
+    "container_id", "pipeline_id", "owner", "used")(
+    (101L, "pl-a", "o1", 100L), (102L, "pl-a", "o1", 990L),
+    (103L, "pl-a", "o1", 400L),
+    (120L, "pl-a", "o4", 995L), (121L, "pl-a", "o4", 998L),
+    (130L, "pl-e", "o3", 995L), (131L, "pl-e", "o3", 996L),
+    (140L, "pl-a", "o9", 10L))
+
+  def allocContainers(spark: SparkSession, dir: String): DataFrame =
+    allocContainerRows.df(spark)
 
   /** The lastUsedMap cursor (ContainerStateManagerImpl.java:501-503). */
-  def allocCursors(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(("o1", "pl-a", 102L))
-      .toDF("owner", "pipeline_id", "last_used")
-  }
+  val allocCursorRows = Fixture("owner", "pipeline_id", "last_used")(
+    ("o1", "pl-a", 102L))
+
+  def allocCursors(spark: SparkSession, dir: String): DataFrame =
+    allocCursorRows.df(spark)
 
   /** snap_delete_chain: the global snapshot chain the deleting service
     * walks newest→oldest — ACTIVE skips, an un-flushed skip, two
@@ -2272,22 +2236,22 @@ object Tables {
     * an empty purge-listed snapshot, a budget-truncating move to AOS,
     * and tail positions past the spent budgets. Ref
     * SnapshotDeletingService.java:127-233. */
-  def snapDeleteChain(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (10L, "s10", "p2", 4L, "SNAPSHOT_ACTIVE", true, 0L, 0L, 0L),
-      (9L, "s9", "p1", 4L, "SNAPSHOT_ACTIVE", true, 0L, 0L, 0L),
-      (8L, "s8", "p1", 3L, "SNAPSHOT_DELETED", false, 2L, 0L, 0L),
-      (7L, "s7", "p2", 3L, "SNAPSHOT_DELETED", true, 3L, 2L, 1L),
-      (6L, "s6", "p4", 1L, "SNAPSHOT_DELETED", true, 0L, 0L, 0L),
-      (5L, "s5", "p1", 2L, "SNAPSHOT_DELETED", true, 4L, 0L, 0L),
-      (4L, "s4", "p2", 2L, "SNAPSHOT_DELETED", true, 2L, 0L, 0L),
-      (3L, "s3", "p3", 1L, "SNAPSHOT_DELETED", true, 10L, 5L, 3L),
-      (2L, "s2", "p2", 1L, "SNAPSHOT_DELETED", true, 1L, 0L, 0L),
-      (1L, "s1", "p1", 1L, "SNAPSHOT_DELETED", true, 1L, 0L, 0L))
-      .toDF("global_seq", "snap", "path_id", "path_seq", "status",
-        "flushed", "n_deleted_keys", "n_deleted_dirs", "n_renames")
-  }
+  val snapDeleteChainRows = Fixture(
+    "global_seq", "snap", "path_id", "path_seq", "status", "flushed",
+    "n_deleted_keys", "n_deleted_dirs", "n_renames")(
+    (10L, "s10", "p2", 4L, "SNAPSHOT_ACTIVE", true, 0L, 0L, 0L),
+    (9L, "s9", "p1", 4L, "SNAPSHOT_ACTIVE", true, 0L, 0L, 0L),
+    (8L, "s8", "p1", 3L, "SNAPSHOT_DELETED", false, 2L, 0L, 0L),
+    (7L, "s7", "p2", 3L, "SNAPSHOT_DELETED", true, 3L, 2L, 1L),
+    (6L, "s6", "p4", 1L, "SNAPSHOT_DELETED", true, 0L, 0L, 0L),
+    (5L, "s5", "p1", 2L, "SNAPSHOT_DELETED", true, 4L, 0L, 0L),
+    (4L, "s4", "p2", 2L, "SNAPSHOT_DELETED", true, 2L, 0L, 0L),
+    (3L, "s3", "p3", 1L, "SNAPSHOT_DELETED", true, 10L, 5L, 3L),
+    (2L, "s2", "p2", 1L, "SNAPSHOT_DELETED", true, 1L, 0L, 0L),
+    (1L, "s1", "p1", 1L, "SNAPSHOT_DELETED", true, 1L, 0L, 0L))
+
+  def snapDeleteChain(spark: SparkSession, dir: String): DataFrame =
+    snapDeleteChainRows.df(spark)
 
   /** remove_dn_requests: the Recon `/datanodes/remove` request list —
     * an unknown uuid, non-DEAD refusals (HEALTHY and STALE), a DEAD node
@@ -2296,149 +2260,146 @@ object Tables {
     * at all), then re-requests of a removed node (NOT_FOUND — the loop
     * mutates the node manager as it walks) and of a failed one (still
     * failed). Ref NodeEndpoint.java:204-236. */
-  def removeDnRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "dnr-unknown"), (2L, "dnrH"), (3L, "dnrS"), (4L, "dnrD1"),
-      (5L, "dnrD2"), (6L, "dnrD3"), (7L, "dnrD4"), (8L, "dnrD3"),
-      (9L, "dnrD1"))
-      .toDF("req_seq", "uuid")
-  }
+  val removeDnRequestRows = Fixture("req_seq", "uuid")(
+    (1L, "dnr-unknown"), (2L, "dnrH"), (3L, "dnrS"), (4L, "dnrD1"),
+    (5L, "dnrD2"), (6L, "dnrD3"), (7L, "dnrD4"), (8L, "dnrD3"),
+    (9L, "dnrD1"))
+
+  def removeDnRequests(spark: SparkSession, dir: String): DataFrame =
+    removeDnRequestRows.df(spark)
 
   /** The node-manager health view the remove ladder probes
     * (NodeStatus.isDead — server-scm/.../NodeStatus.java:235). */
-  def removeDnNodes(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(("dnrH", "HEALTHY"), ("dnrS", "STALE"), ("dnrD1", "DEAD"),
-      ("dnrD2", "DEAD"), ("dnrD3", "DEAD"), ("dnrD4", "DEAD"))
-      .toDF("uuid", "health")
-  }
+  val removeDnNodeRows = Fixture("uuid", "health")(
+    ("dnrH", "HEALTHY"), ("dnrS", "STALE"), ("dnrD1", "DEAD"),
+    ("dnrD2", "DEAD"), ("dnrD3", "DEAD"), ("dnrD4", "DEAD"))
+
+  def removeDnNodes(spark: SparkSession, dir: String): DataFrame =
+    removeDnNodeRows.df(spark)
 
   /** nodeManager.getContainers refs; ids 103/105 are NOT in the Recon
     * container manager (skipped, NodeEndpoint.java:306-320). */
-  def removeDnContainerRefs(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(("dnrD1", 101L), ("dnrD1", 102L), ("dnrD1", 103L),
-      ("dnrD2", 101L), ("dnrD2", 104L),
-      ("dnrD3", 101L), ("dnrD3", 105L))
-      .toDF("uuid", "container_id")
-  }
+  val removeDnContainerRefRows = Fixture("uuid", "container_id")(
+    ("dnrD1", 101L), ("dnrD1", 102L), ("dnrD1", 103L),
+    ("dnrD2", 101L), ("dnrD2", 104L),
+    ("dnrD3", 101L), ("dnrD3", 105L))
+
+  def removeDnContainerRefs(spark: SparkSession, dir: String): DataFrame =
+    removeDnContainerRefRows.df(spark)
 
   /** The Recon container manager's lifecycle states (only OPEN pins a
     * removal; 106 is unreferenced). */
-  def removeDnContainerStates(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq((101L, "CLOSED"), (102L, "OPEN"), (104L, "QUASI_CLOSED"),
-      (106L, "OPEN"))
-      .toDF("container_id", "cstate")
-  }
+  val removeDnContainerStateRows = Fixture("container_id", "cstate")(
+    (101L, "CLOSED"), (102L, "OPEN"), (104L, "QUASI_CLOSED"),
+    (106L, "OPEN"))
+
+  def removeDnContainerStates(spark: SparkSession, dir: String): DataFrame =
+    removeDnContainerStateRows.df(spark)
 
   /** nodeManager.getPipelines refs; "pr-gone" is NOT in the pipeline
     * manager (skipped, NodeEndpoint.java:292-305). */
-  def removeDnPipelineRefs(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(("dnrD1", "pr-open"), ("dnrD2", "pr-open"), ("dnrD2", "pr-closed"),
-      ("dnrD3", "pr-closed"), ("dnrD3", "pr-gone"))
-      .toDF("uuid", "pipeline_id")
-  }
+  val removeDnPipelineRefRows = Fixture("uuid", "pipeline_id")(
+    ("dnrD1", "pr-open"), ("dnrD2", "pr-open"), ("dnrD2", "pr-closed"),
+    ("dnrD3", "pr-closed"), ("dnrD3", "pr-gone"))
+
+  def removeDnPipelineRefs(spark: SparkSession, dir: String): DataFrame =
+    removeDnPipelineRefRows.df(spark)
 
   /** Pipeline-manager states (Pipeline.isOpen ⇔ OPEN,
     * common/.../Pipeline.java:319-321). */
-  def removeDnPipelineStates(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(("pr-open", "OPEN"), ("pr-closed", "CLOSED"),
-      ("pr-dormant", "DORMANT"))
-      .toDF("pipeline_id", "pstate")
-  }
+  val removeDnPipelineStateRows = Fixture("pipeline_id", "pstate")(
+    ("pr-open", "OPEN"), ("pr-closed", "CLOSED"),
+    ("pr-dormant", "DORMANT"))
+
+  def removeDnPipelineStates(spark: SparkSession, dir: String): DataFrame =
+    removeDnPipelineStateRows.df(spark)
 
   /** recovering_containers: the DN recovering map for the stale-scrub —
     * one within deadline, one expired and marked, one expired but
     * re-registered with an extended deadline before the task ran, one
     * expired and vanished from the container set. exec_deadline_ms is
     * the value the TASK re-reads (-1 = entry gone). */
-  def recoveringContainers(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, 2000000L, -1L, true),
-      (2L, 500000L, -1L, true),
-      (3L, 400000L, 3000000L, true),
-      (4L, 300000L, -1L, false))
-      .toDF("container_id", "deadline_ms", "exec_deadline_ms", "exists")
-  }
+  val recoveringContainerRows = Fixture(
+    "container_id", "deadline_ms", "exec_deadline_ms", "exists")(
+    (1L, 2000000L, -1L, true),
+    (2L, 500000L, -1L, true),
+    (3L, 400000L, 3000000L, true),
+    (4L, 300000L, -1L, false))
+
+  def recoveringContainers(spark: SparkSession, dir: String): DataFrame =
+    recoveringContainerRows.df(spark)
 
   /** snapdiff_cleanup_jobs: the diff-job table state the cleanup walks —
     * prior-run purged jobs awaiting report deletion, age-expired and
     * terminal-status jobs (incl. a stale IN_PROGRESS past the window),
     * live DONE/QUEUED jobs, and jobs past the per-task purge cap. */
-  def snapdiffCleanupJobs(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("j01", "DONE", 800000000L, false, 120L),
-      ("j02", "FAILED", 1000L, false, 30L),
-      ("j03", "DONE", 5000L, false, 500L),
-      ("j04", "IN_PROGRESS", 700000000L, false, 0L),
-      ("j05", "REJECTED", 2000L, false, 0L),
-      ("j06", "CANCELLED", 1000L, false, 10L),
-      ("j07", "QUEUED", 3000L, false, 0L),
-      ("j08", "DONE", 900000000L, false, 60L),
-      ("j20", "DONE", 950000000L, true, 200L),
-      ("j21", "FAILED", 10000L, true, 40L))
-      .toDF("job_key", "status", "age_ms", "in_purged_table",
-        "report_entries")
-  }
+  val snapdiffCleanupJobRows = Fixture(
+    "job_key", "status", "age_ms", "in_purged_table", "report_entries")(
+    ("j01", "DONE", 800000000L, false, 120L),
+    ("j02", "FAILED", 1000L, false, 30L),
+    ("j03", "DONE", 5000L, false, 500L),
+    ("j04", "IN_PROGRESS", 700000000L, false, 0L),
+    ("j05", "REJECTED", 2000L, false, 0L),
+    ("j06", "CANCELLED", 1000L, false, 10L),
+    ("j07", "QUEUED", 3000L, false, 0L),
+    ("j08", "DONE", 900000000L, false, 60L),
+    ("j20", "DONE", 950000000L, true, 200L),
+    ("j21", "FAILED", 10000L, true, 40L))
+
+  def snapdiffCleanupJobs(spark: SparkSession, dir: String): DataFrame =
+    snapdiffCleanupJobRows.df(spark)
 
   /** dn_volumes: one DN's disk set for the disk balancer — an
     * over-threshold source, an under-threshold destination, a within-
     * band volume, and a zero-capacity (failed probe) volume the
     * calculations must exclude. */
-  def dnVolumes(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("v1", 1000000L, 150000L, 50000L, 10000L),
-      ("v2", 1000000L, 700000L, 0L, 10000L),
-      ("v3", 1000000L, 500000L, 20000L, 10000L),
-      ("v9", 0L, 0L, 0L, 0L))
-      .toDF("volume_id", "capacity", "available", "committed", "spared")
-  }
+  val dnVolumeRows = Fixture(
+    "volume_id", "capacity", "available", "committed", "spared")(
+    ("v1", 1000000L, 150000L, 50000L, 10000L),
+    ("v2", 1000000L, 700000L, 0L, 10000L),
+    ("v3", 1000000L, 500000L, 20000L, 10000L),
+    ("v9", 0L, 0L, 0L, 0L))
+
+  def dnVolumes(spark: SparkSession, dir: String): DataFrame =
+    dnVolumeRows.df(spark)
 
   /** dn_balancer_containers: the source volume's container list, one
     * row per chooseContainer rung (dropped-from-set, in-progress, empty,
     * non-movable state, too big for dest, would exceed the upper
     * threshold, the chosen survivor, a post-choice container) plus one
     * on another volume that must not be scanned at all. */
-  def dnBalancerContainers(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "v1", 100000L, "CLOSED", false, false),
-      (2L, "v1", 100000L, "CLOSED", true, true),
-      (3L, "v1", 0L, "CLOSED", true, false),
-      (4L, "v1", 100000L, "OPEN", true, false),
-      (5L, "v1", 800000L, "CLOSED", true, false),
-      (6L, "v1", 400000L, "QUASI_CLOSED", true, false),
-      (7L, "v1", 120000L, "CLOSED", true, false),
-      (8L, "v1", 50000L, "CLOSED", true, false),
-      (9L, "v2", 60000L, "CLOSED", true, false))
-      .toDF("container_id", "volume_id", "bytes_used", "state",
-        "in_set", "in_progress")
-  }
+  val dnBalancerContainerRows = Fixture(
+    "container_id", "volume_id", "bytes_used", "state", "in_set",
+    "in_progress")(
+    (1L, "v1", 100000L, "CLOSED", false, false),
+    (2L, "v1", 100000L, "CLOSED", true, true),
+    (3L, "v1", 0L, "CLOSED", true, false),
+    (4L, "v1", 100000L, "OPEN", true, false),
+    (5L, "v1", 800000L, "CLOSED", true, false),
+    (6L, "v1", 400000L, "QUASI_CLOSED", true, false),
+    (7L, "v1", 120000L, "CLOSED", true, false),
+    (8L, "v1", 50000L, "CLOSED", true, false),
+    (9L, "v2", 60000L, "CLOSED", true, false))
+
+  def dnBalancerContainers(spark: SparkSession, dir: String): DataFrame =
+    dnBalancerContainerRows.df(spark)
 
   /** defrag_chain: the global snapshot chain the defrag service walks —
     * a first-in-path defrag (full), an already-defragged entry with
     * stale versions (cleanup), one without (no cleanup), an incremental
     * defrag consuming the second budget slot, and entries past the
     * budget on two paths (never visited). */
-  def defragChain(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "d1", "vol0", "bucket0", true, 0L),
-      (2L, "d2", "vol0", "bucket0", false, 2L),
-      (3L, "d3", "vol2", "bucket5", false, 0L),
-      (4L, "d4", "vol0", "bucket0", true, 1L),
-      (5L, "d5", "vol2", "bucket5", true, 0L),
-      (6L, "d6", "vol1", "bucket3", false, 0L))
-      .toDF("global_idx", "name", "volume", "bucket", "needs_defrag",
-        "version")
-  }
+  val defragChainRows = Fixture(
+    "global_idx", "name", "volume", "bucket", "needs_defrag", "version")(
+    (1L, "d1", "vol0", "bucket0", true, 0L),
+    (2L, "d2", "vol0", "bucket0", false, 2L),
+    (3L, "d3", "vol2", "bucket5", false, 0L),
+    (4L, "d4", "vol0", "bucket0", true, 1L),
+    (5L, "d5", "vol2", "bucket5", true, 0L),
+    (6L, "d6", "vol1", "bucket3", false, 0L))
+
+  def defragChain(spark: SparkSession, dir: String): DataFrame =
+    defragChainRows.df(spark)
 
   /** meta_scan_containers: one row per metadata-scan rung of
     * ContainerScanHelper/KeyValueContainerCheck — gate skips (failed
@@ -2446,28 +2407,27 @@ object Tables {
     * non-fatal chunks-dir rung, deleted-during-scan, transient FD
     * exhaustion, and the already-unhealthy re-mark. last_scan_ago_ms
     * -1 = never scanned. */
-  def metaScanContainers(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      // id, vol_failed, last_ago, dir, meta, file,   chkErr, chunks, deleted, transient, alreadyUnh
-      (1L, false, -1L, true, true, "OK", 0L, true, false, false, false),
-      (2L, true, -1L, true, true, "OK", 0L, true, false, false, false),
-      (3L, false, 60000L, true, true, "OK", 0L, true, false, false, false),
-      (4L, false, 3600000L, true, true, "OK", 0L, true, false, false, false),
-      (5L, false, -1L, false, true, "OK", 0L, true, false, false, false),
-      (6L, false, -1L, true, false, "OK", 0L, true, false, false, false),
-      (7L, false, -1L, true, true, "MISSING", 0L, true, false, false, false),
-      (8L, false, -1L, true, true, "CORRUPT", 0L, true, false, false, false),
-      (9L, false, -1L, true, true, "OK", 2L, true, false, false, false),
-      (10L, false, -1L, true, true, "OK", 0L, false, false, false, false),
-      (11L, false, -1L, false, true, "OK", 0L, true, true, false, false),
-      (12L, false, -1L, true, true, "OK", 1L, false, false, true, false),
-      (13L, false, -1L, true, true, "CORRUPT", 0L, true, false, false, true))
-      .toDF("container_id", "volume_failed", "last_scan_ago_ms",
-        "dir_exists", "meta_dir_exists", "file_status",
-        "file_check_errors", "chunks_dir_exists", "deleted_during_scan",
-        "transient_fd_errors", "already_unhealthy")
-  }
+  val metaScanContainerRows = Fixture(
+    "container_id", "volume_failed", "last_scan_ago_ms", "dir_exists",
+    "meta_dir_exists", "file_status", "file_check_errors",
+    "chunks_dir_exists", "deleted_during_scan", "transient_fd_errors",
+    "already_unhealthy")(
+    (1L, false, -1L, true, true, "OK", 0L, true, false, false, false),
+    (2L, true, -1L, true, true, "OK", 0L, true, false, false, false),
+    (3L, false, 60000L, true, true, "OK", 0L, true, false, false, false),
+    (4L, false, 3600000L, true, true, "OK", 0L, true, false, false, false),
+    (5L, false, -1L, false, true, "OK", 0L, true, false, false, false),
+    (6L, false, -1L, true, false, "OK", 0L, true, false, false, false),
+    (7L, false, -1L, true, true, "MISSING", 0L, true, false, false, false),
+    (8L, false, -1L, true, true, "CORRUPT", 0L, true, false, false, false),
+    (9L, false, -1L, true, true, "OK", 2L, true, false, false, false),
+    (10L, false, -1L, true, true, "OK", 0L, false, false, false, false),
+    (11L, false, -1L, false, true, "OK", 0L, true, true, false, false),
+    (12L, false, -1L, true, true, "OK", 1L, false, false, true, false),
+    (13L, false, -1L, true, true, "CORRUPT", 0L, true, false, false, true))
+
+  def metaScanContainers(spark: SparkSession, dir: String): DataFrame =
+    metaScanContainerRows.df(spark)
 
   /** dn_ops: the DN dispatch stream — an applied put, its Ratis replay,
     * a stale put, reads at/above/below the running BCSID, a missing
@@ -2475,29 +2435,28 @@ object Tables {
     * writable CLOSING/RECOVERING containers, a read on a CLOSED
     * container (legal), a non-Ratis bcsId-0 put (fence skipped), and
     * the unsupported DeleteBlock. */
-  def dnOps(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, 1L, "PUT_BLOCK", 11L, true, 0L),
-      (2L, 1L, "PUT_BLOCK", 11L, true, 0L),
-      (3L, 1L, "PUT_BLOCK", 9L, true, 0L),
-      (4L, 1L, "GET_BLOCK", 11L, true, 11L),
-      (5L, 1L, "GET_BLOCK", 12L, true, 11L),
-      (6L, 1L, "GET_BLOCK", 5L, false, 0L),
-      (7L, 1L, "GET_BLOCK", 8L, true, 6L),
-      (8L, 2L, "WRITE_CHUNK", 0L, true, 0L),
-      (9L, 2L, "GET_BLOCK", 30L, true, 30L),
-      (10L, 3L, "PUT_BLOCK", 6L, true, 0L),
-      (11L, 4L, "WRITE_CHUNK", 0L, true, 0L),
-      (12L, 5L, "WRITE_CHUNK", 0L, true, 0L),
-      (13L, 6L, "PUT_BLOCK", 1L, true, 0L),
-      (14L, 7L, "PUT_BLOCK", 21L, true, 0L),
-      (15L, 1L, "DELETE_BLOCK", 0L, true, 0L),
-      (16L, 8L, "PUT_BLOCK", 0L, true, 0L),
-      (17L, 2L, "GET_BLOCK", 60L, true, 60L))
-      .toDF("seq", "container_id", "op", "bcsid", "block_exists",
-        "stored_bcsid")
-  }
+  val dnOpRows = Fixture(
+    "seq", "container_id", "op", "bcsid", "block_exists", "stored_bcsid")(
+    (1L, 1L, "PUT_BLOCK", 11L, true, 0L),
+    (2L, 1L, "PUT_BLOCK", 11L, true, 0L),
+    (3L, 1L, "PUT_BLOCK", 9L, true, 0L),
+    (4L, 1L, "GET_BLOCK", 11L, true, 11L),
+    (5L, 1L, "GET_BLOCK", 12L, true, 11L),
+    (6L, 1L, "GET_BLOCK", 5L, false, 0L),
+    (7L, 1L, "GET_BLOCK", 8L, true, 6L),
+    (8L, 2L, "WRITE_CHUNK", 0L, true, 0L),
+    (9L, 2L, "GET_BLOCK", 30L, true, 30L),
+    (10L, 3L, "PUT_BLOCK", 6L, true, 0L),
+    (11L, 4L, "WRITE_CHUNK", 0L, true, 0L),
+    (12L, 5L, "WRITE_CHUNK", 0L, true, 0L),
+    (13L, 6L, "PUT_BLOCK", 1L, true, 0L),
+    (14L, 7L, "PUT_BLOCK", 21L, true, 0L),
+    (15L, 1L, "DELETE_BLOCK", 0L, true, 0L),
+    (16L, 8L, "PUT_BLOCK", 0L, true, 0L),
+    (17L, 2L, "GET_BLOCK", 60L, true, 60L))
+
+  def dnOps(spark: SparkSession, dir: String): DataFrame =
+    dnOpRows.df(spark)
 
   /** node_health_events: the SCM heartbeat plane NodeStateManager folds —
     * per-node REGISTER (carries the registration layout version; a
@@ -2512,8 +2471,7 @@ object Tables {
     * node reporting an OLDER layout from HEALTHY; dn7/dn8 the double-fire
     * checks (layout event + timeout at the SAME tick, from HEALTHY and
     * HEALTHY_READONLY); dn9 registers mid-stream (no rows before). */
-  def nodeHealthEvents(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  val nodeHealthEventRows = {
     val reg = Seq(
       ("dn1", 0L, 3L), ("dn2", 0L, 3L), ("dn3", 0L, 3L),
       ("dn4", 0L, 3L), ("dn5", 0L, 2L), ("dn6", 0L, 3L),
@@ -2540,52 +2498,55 @@ object Tables {
         1100000L -> 3L, 1250000L -> 3L, 1405000L -> 3L, 1555000L -> 3L,
         1705000L -> 3L, 1905000L -> 3L)))
       .flatMap { case (u, ts) => ts.map { case (t, m) => (u, t, "HB", m) } }
-    (reg ++ hb).toDF("uuid", "ts_ms", "kind", "mlv")
+    Fixture("uuid", "ts_ms", "kind", "mlv")(reg ++ hb: _*)
   }
+
+  def nodeHealthEvents(spark: SparkSession, dir: String): DataFrame =
+    nodeHealthEventRows.df(spark)
 
   /** node_health_checks: the global checkNodesHealth tick schedule. One
     * deliberate 540 s gap (c6→c7) ≥ min(stale, dead) interval trips the
     * shouldSkipCheck JVM-pause guard — c7 must transition NOTHING. */
-  def nodeHealthChecks(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(60000L, 240000L, 420000L, 600000L, 780000L, 960000L,
-      1500000L, 1560000L, 1740000L, 1920000L).toDF("check_ms")
-  }
+  val nodeHealthCheckRows = Fixture("check_ms")(
+    60000L, 240000L, 420000L, 600000L, 780000L, 960000L,
+    1500000L, 1560000L, 1740000L, 1920000L)
+
+  def nodeHealthChecks(spark: SparkSession, dir: String): DataFrame =
+    nodeHealthCheckRows.df(spark)
 
   /** s3_context_requests: GetS3VolumeContext probes — an auth-less old
     * gateway, a plain unassigned accessId, a tenant-assigned id, the
     * removed-tenant inconsistency (no-such-but-hasids$ghost is in the
     * access catalog but its tenant has no state row), a second tenant's
     * id, and the null-tenant orphan catalog row. */
-  def s3ContextRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, false, "", "alice"),
-      (2L, true, "hdfs", ""),
-      (3L, true, "tenant1$clerk1", ""),
-      (4L, true, "no-such-but-hasids$ghost", ""),
-      (5L, true, "tenant0$clerk3", ""),
-      (6L, true, "orphan$ghost2", ""))
-      .toDF("req_id", "has_auth", "access_id", "remote_user")
-  }
+  val s3ContextRequestRows = Fixture(
+    "req_id", "has_auth", "access_id", "remote_user")(
+    (1L, false, "", "alice"),
+    (2L, true, "hdfs", ""),
+    (3L, true, "tenant1$clerk1", ""),
+    (4L, true, "no-such-but-hasids$ghost", ""),
+    (5L, true, "tenant0$clerk3", ""),
+    (6L, true, "orphan$ghost2", ""))
+
+  def s3ContextRequests(spark: SparkSession, dir: String): DataFrame =
+    s3ContextRequestRows.df(spark)
 
   /** trash_entries: per-trash-root listings for the emptier cycle — a
     * root with Current + an expired checkpoint + a fresh one + a
     * collision-suffixed old one + an unparseable stray; a root with no
     * Current (nothing to rename); a root with only Current. NOW is
     * 2025-08-14 12:00:00 UTC; the deletion interval 30 days. */
-  def trashEntries(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("/vol0/bucket0/.Trash/clerk1", "Current"),
-      ("/vol0/bucket0/.Trash/clerk1", "240101120000"),
-      ("/vol0/bucket0/.Trash/clerk1", "250801120000"),
-      ("/vol0/bucket0/.Trash/clerk1", "240615063000-1"),
-      ("/vol0/bucket0/.Trash/clerk1", "stray-dir"),
-      ("/vol1/bucket3/.Trash/clerk2", "250601000000"),
-      ("/vol2/bucket5/.Trash/clerk3", "Current"))
-      .toDF("trash_root", "name")
-  }
+  val trashEntryRows = Fixture("trash_root", "name")(
+    ("/vol0/bucket0/.Trash/clerk1", "Current"),
+    ("/vol0/bucket0/.Trash/clerk1", "240101120000"),
+    ("/vol0/bucket0/.Trash/clerk1", "250801120000"),
+    ("/vol0/bucket0/.Trash/clerk1", "240615063000-1"),
+    ("/vol0/bucket0/.Trash/clerk1", "stray-dir"),
+    ("/vol1/bucket3/.Trash/clerk2", "250601000000"),
+    ("/vol2/bucket5/.Trash/clerk3", "Current"))
+
+  def trashEntries(spark: SparkSession, dir: String): DataFrame =
+    trashEntryRows.df(spark)
 
   /** conditional_write_requests: the S3 conditional PUT/DELETE batch —
     * header parse errors (blank If-None-Match / If-Match, both together,
@@ -2594,34 +2555,33 @@ object Tables {
     * candidates, and the DELETE If-Match family. The target is the
     * corpus's min key in vol0/bucket0 (sf-portable); its ETag is the
     * md5-of-key mint the objects table uses. */
+  val conditionalWriteRequestRows = Fixture(
+    "req_id", "op", "has_inm", "inm_value", "has_im", "im_kind", "ghost")(
+    (1L, "PUT", true, "", false, "", false),
+    (2L, "PUT", false, "", true, " ", false),
+    (3L, "PUT", true, "*", true, "ETAG", false),
+    (4L, "PUT", true, "abc", false, "", false),
+    (5L, "PUT", true, "*", false, "", false),
+    (6L, "PUT", true, "*", false, "", true),
+    (7L, "PUT", false, "", true, "QETAG", false),
+    (8L, "PUT", false, "", true, "LIST", false),
+    (9L, "PUT", false, "", true, "*", false),
+    (10L, "PUT", false, "", true, "zzz", false),
+    (11L, "PUT", false, "", true, "ETAG", true),
+    (12L, "PUT", false, "", false, "", false),
+    (13L, "DELETE", false, "", true, "ETAG", false),
+    (14L, "DELETE", false, "", true, "zzz", false),
+    (15L, "DELETE", false, "", true, " ", false),
+    (16L, "DELETE", false, "", false, "", false),
+    (17L, "DELETE", true, "*", false, "", false),
+    (18L, "DELETE", true, " ", false, "", false))
+
   def conditionalWriteRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val target = objects(spark, dir)
       .filter(col("volume") === "vol0" && col("bucket") === "bucket0")
       .agg(min("key").as("t_key"))
       .withColumn("t_etag", md5(col("t_key")))
-    val rows = Seq(
-      (1L, "PUT", true, "", false, "", false),
-      (2L, "PUT", false, "", true, " ", false),
-      (3L, "PUT", true, "*", true, "ETAG", false),
-      (4L, "PUT", true, "abc", false, "", false),
-      (5L, "PUT", true, "*", false, "", false),
-      (6L, "PUT", true, "*", false, "", true),
-      (7L, "PUT", false, "", true, "QETAG", false),
-      (8L, "PUT", false, "", true, "LIST", false),
-      (9L, "PUT", false, "", true, "*", false),
-      (10L, "PUT", false, "", true, "zzz", false),
-      (11L, "PUT", false, "", true, "ETAG", true),
-      (12L, "PUT", false, "", false, "", false),
-      (13L, "DELETE", false, "", true, "ETAG", false),
-      (14L, "DELETE", false, "", true, "zzz", false),
-      (15L, "DELETE", false, "", true, " ", false),
-      (16L, "DELETE", false, "", false, "", false),
-      (17L, "DELETE", true, "*", false, "", false),
-      (18L, "DELETE", true, " ", false, "", false))
-      .toDF("req_id", "op", "has_inm", "inm_value", "has_im", "im_kind",
-        "ghost")
-    rows.crossJoin(broadcast(target))
+    conditionalWriteRequestRows.df(spark).crossJoin(broadcast(target))
       .withColumn("volume", lit("vol0"))
       .withColumn("bucket", lit("bucket0"))
       .withColumn("key",
@@ -2642,15 +2602,14 @@ object Tables {
     * version just written), a mid-sync bump absorbed on the second
     * attempt, and a hot Ranger that outruns MAX_ATTEMPT. v0..v2 are the
     * Ranger versions observed before each check. */
-  def rangerSyncRuns(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, 5L, 5L, 5L, 5L),
-      (2L, 4L, 5L, 5L, 5L),
-      (3L, 4L, 5L, 6L, 6L),
-      (4L, 4L, 5L, 6L, 7L))
-      .toDF("run_id", "db_version", "v0", "v1", "v2")
-  }
+  val rangerSyncRunRows = Fixture("run_id", "db_version", "v0", "v1", "v2")(
+    (1L, 5L, 5L, 5L, 5L),
+    (2L, 4L, 5L, 5L, 5L),
+    (3L, 4L, 5L, 6L, 6L),
+    (4L, 4L, 5L, 6L, 7L))
+
+  def rangerSyncRuns(spark: SparkSession, dir: String): DataFrame =
+    rangerSyncRunRows.df(spark)
 
   /** lifecycle_service_ops: the KeyLifecycleService control stream —
     * SAVE (scan-state cursor upserts) and STATUS (suspend/resume) ops.
@@ -2659,21 +2618,21 @@ object Tables {
     * saves/toggles, cursor replacement on a re-saved bucket, an
     * idempotent resume, and a SAVE while suspended (not fenced). The
     * S3_LIFECYCLE_SUPPORT feature finalizes at seq 5. */
-  def lifecycleServiceOps(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "STATUS", "om-admin", "", true),
-      (2L, "SAVE", "clerk1", "/vol0/bucket0", false),
-      (3L, "SAVE", "om-admin", "/vol0/bucket0", false),
-      (4L, "STATUS", "clerk2", "", true),
-      (6L, "STATUS", "clerk2", "", true),
-      (7L, "STATUS", "om-admin", "", true),
-      (8L, "SAVE", "om-admin", "/vol0/bucket0", false),
-      (9L, "SAVE", "om-admin", "/vol1/bucket3", false),
-      (10L, "STATUS", "om-admin", "", false),
-      (11L, "STATUS", "om-admin", "", false))
-      .toDF("seq", "op_type", "caller", "bucket_key", "suspend")
-  }
+  val lifecycleServiceOpRows = Fixture(
+    "seq", "op_type", "caller", "bucket_key", "suspend")(
+    (1L, "STATUS", "om-admin", "", true),
+    (2L, "SAVE", "clerk1", "/vol0/bucket0", false),
+    (3L, "SAVE", "om-admin", "/vol0/bucket0", false),
+    (4L, "STATUS", "clerk2", "", true),
+    (6L, "STATUS", "clerk2", "", true),
+    (7L, "STATUS", "om-admin", "", true),
+    (8L, "SAVE", "om-admin", "/vol0/bucket0", false),
+    (9L, "SAVE", "om-admin", "/vol1/bucket3", false),
+    (10L, "STATUS", "om-admin", "", false),
+    (11L, "STATUS", "om-admin", "", false))
+
+  def lifecycleServiceOps(spark: SparkSession, dir: String): DataFrame =
+    lifecycleServiceOpRows.df(spark)
 
   /** key_purge_requests: OMKeyPurgeRequest branches — AOS purges with a
     * matching / mismatched expectedPreviousSnapshotID (latest-global
@@ -2683,22 +2642,22 @@ object Tables {
     * precedes and survives the old-format skip), an empty purge list,
     * and an old-format request whose stale expected value must be
     * IGNORED (has_expected=false). */
-  def keyPurgeRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "", true, "snap-live", 3L, 1L),
-      (2L, "", true, "s2", 2L, 0L),
-      (3L, "snap-live", true, "snap-gone", 1L, 0L),
-      (4L, "snap-live", true, "s2", 4L, 0L),
-      (5L, "ghost", true, "", 1L, 0L),
-      (6L, "", true, "snap-live", 0L, 0L),
-      (7L, "snap-golden", true, "", 2L, 1L),
-      (8L, "s1", true, "snap-live", 1L, 0L),
-      (9L, "", false, "", 2L, 0L),
-      (10L, "ghost", false, "", 1L, 0L))
-      .toDF("req_id", "from_snapshot", "has_expected", "expected_prev",
-        "n_deleted", "n_renamed")
-  }
+  val keyPurgeRequestRows = Fixture(
+    "req_id", "from_snapshot", "has_expected", "expected_prev", "n_deleted",
+    "n_renamed")(
+    (1L, "", true, "snap-live", 3L, 1L),
+    (2L, "", true, "s2", 2L, 0L),
+    (3L, "snap-live", true, "snap-gone", 1L, 0L),
+    (4L, "snap-live", true, "s2", 4L, 0L),
+    (5L, "ghost", true, "", 1L, 0L),
+    (6L, "", true, "snap-live", 0L, 0L),
+    (7L, "snap-golden", true, "", 2L, 1L),
+    (8L, "s1", true, "snap-live", 1L, 0L),
+    (9L, "", false, "", 2L, 0L),
+    (10L, "ghost", false, "", 1L, 0L))
+
+  def keyPurgeRequests(spark: SparkSession, dir: String): DataFrame =
+    keyPurgeRequestRows.df(spark)
 
   /** key_purge_bucket_sizes: the BucketPurgeKeysSize refund entries of
     * [[keyPurgeRequests]] — a live bucket with the captured objectID
@@ -2707,20 +2666,20 @@ object Tables {
     * (one bucket updated, bytes summed), and a refund on a request the
     * ladder refuses (masked to zero). Bucket oid mint: vol_idx*100 +
     * bucket_idx + 10, mirrored in the oracle. */
-  def keyPurgeBucketSizes(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "vol0", "bucket0", 10L, 1000L, 3L),
-      (1L, "vol0", "no-such", 77L, 500L, 1L),
-      (1L, "vol0", "bucket1", 99L, 200L, 1L),
-      (2L, "vol0", "bucket0", 10L, 900L, 2L),
-      (3L, "vol0", "bucket0", 10L, 400L, 1L),
-      (7L, "vol2", "bucket5", 215L, 300L, 2L),
-      (7L, "vol2", "bucket5", 215L, 250L, 1L),
-      (9L, "vol1", "bucket3", 113L, 700L, 2L))
-      .toDF("req_id", "volume", "bucket", "bucket_id", "purged_bytes",
-        "purged_namespace")
-  }
+  val keyPurgeBucketSizeRows = Fixture(
+    "req_id", "volume", "bucket", "bucket_id", "purged_bytes",
+    "purged_namespace")(
+    (1L, "vol0", "bucket0", 10L, 1000L, 3L),
+    (1L, "vol0", "no-such", 77L, 500L, 1L),
+    (1L, "vol0", "bucket1", 99L, 200L, 1L),
+    (2L, "vol0", "bucket0", 10L, 900L, 2L),
+    (3L, "vol0", "bucket0", 10L, 400L, 1L),
+    (7L, "vol2", "bucket5", 215L, 300L, 2L),
+    (7L, "vol2", "bucket5", 215L, 250L, 1L),
+    (9L, "vol1", "bucket3", 113L, 700L, 2L))
+
+  def keyPurgeBucketSizes(spark: SparkSession, dir: String): DataFrame =
+    keyPurgeBucketSizeRows.df(spark)
 
   /** dir_purge_requests: OMDirectoriesPurgeRequestWithFSO branches — the
     * FSO dual of [[keyPurgeRequests]] over the same snapshot chain: AOS
@@ -2730,19 +2689,19 @@ object Tables {
     * expected field, an old-format request whose stale expected value is
     * ignored, and req 8: an EMPTY purge list that still applies — the
     * dir ladder has no KEY_DELETION_ERROR rung (divergence from keys). */
-  def dirPurgeRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "", true, "snap-live"),
-      (2L, "", true, "s2"),
-      (3L, "snap-live", true, "snap-gone"),
-      (4L, "snap-live", true, "s1"),
-      (5L, "ghost", true, ""),
-      (6L, "s1", false, "stale-ignored"),
-      (7L, "ghost", false, ""),
-      (8L, "s2", true, "s1"))
-      .toDF("req_id", "from_snapshot", "has_expected", "expected_prev")
-  }
+  val dirPurgeRequestRows = Fixture(
+    "req_id", "from_snapshot", "has_expected", "expected_prev")(
+    (1L, "", true, "snap-live"),
+    (2L, "", true, "s2"),
+    (3L, "snap-live", true, "snap-gone"),
+    (4L, "snap-live", true, "s1"),
+    (5L, "ghost", true, ""),
+    (6L, "s1", false, "stale-ignored"),
+    (7L, "ghost", false, ""),
+    (8L, "s2", true, "s1"))
+
+  def dirPurgeRequests(spark: SparkSession, dir: String): DataFrame =
+    dirPurgeRequestRows.df(spark)
 
   /** dir_purge_entries: the PurgePathRequest rows of
     * [[dirPurgeRequests]] — kind ∈ SUB_DIR (markDeletedSubDirs),
@@ -2754,86 +2713,83 @@ object Tables {
     * a DEAD bucket (gate-independent), a deleted dir on a mismatched
     * bucket (no snapshot-ns purge), and entries under refused requests
     * (masked to zero). */
-  def dirPurgeEntries(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, 1L, "SUB_DIR", "vol0", "bucket0", 10L, 501L, 0L, false, false),
-      (1L, 1L, "SUB_DIR", "vol0", "bucket0", 10L, 502L, 0L, false, false),
-      (1L, 1L, "SUB_FILE", "vol0", "bucket0", 10L, 601L, 1000L, false,
-        false),
-      (1L, 1L, "SUB_FILE", "vol0", "bucket0", 10L, 602L, 500L, true, true),
-      (1L, 2L, "SUB_FILE", "vol0", "bucket0", 10L, 602L, 500L, true, true),
-      (1L, 2L, "SUB_FILE", "vol0", "no-such", 77L, 603L, 800L, true,
-        false),
-      (1L, 2L, "SUB_FILE", "vol0", "bucket1", 99L, 604L, 900L, false,
-        false),
-      (1L, 2L, "DELETED_DIR", "vol0", "bucket0", 10L, 502L, 0L, false,
-        false),
-      (1L, 2L, "DELETED_DIR", "vol0", "bucket1", 99L, 510L, 0L, false,
-        false),
-      (2L, 1L, "SUB_FILE", "vol0", "bucket0", 10L, 611L, 700L, false,
-        false),
-      (2L, 1L, "DELETED_DIR", "vol0", "bucket0", 10L, 520L, 0L, false,
-        false),
-      (3L, 1L, "SUB_DIR", "vol0", "bucket0", 10L, 530L, 0L, false, false),
-      (3L, 1L, "SUB_FILE", "vol1", "bucket3", 113L, 620L, 400L, false,
-        false),
-      (4L, 1L, "SUB_DIR", "vol0", "bucket0", 10L, 540L, 0L, false, false),
-      (5L, 1L, "DELETED_DIR", "vol0", "bucket0", 10L, 550L, 0L, false,
-        false),
-      (6L, 1L, "SUB_FILE", "vol0", "no-such", 77L, 630L, 900L, true, true),
-      (6L, 1L, "DELETED_DIR", "vol2", "bucket5", 215L, 560L, 0L, false,
-        false))
-      .toDF("req_id", "path_id", "kind", "volume", "bucket", "bucket_id",
-        "object_id", "size_bytes", "hsync", "open_exists")
-  }
+  val dirPurgeEntryRows = Fixture(
+    "req_id", "path_id", "kind", "volume", "bucket", "bucket_id", "object_id",
+    "size_bytes", "hsync", "open_exists")(
+    (1L, 1L, "SUB_DIR", "vol0", "bucket0", 10L, 501L, 0L, false, false),
+    (1L, 1L, "SUB_DIR", "vol0", "bucket0", 10L, 502L, 0L, false, false),
+    (1L, 1L, "SUB_FILE", "vol0", "bucket0", 10L, 601L, 1000L, false,
+      false),
+    (1L, 1L, "SUB_FILE", "vol0", "bucket0", 10L, 602L, 500L, true, true),
+    (1L, 2L, "SUB_FILE", "vol0", "bucket0", 10L, 602L, 500L, true, true),
+    (1L, 2L, "SUB_FILE", "vol0", "no-such", 77L, 603L, 800L, true,
+      false),
+    (1L, 2L, "SUB_FILE", "vol0", "bucket1", 99L, 604L, 900L, false,
+      false),
+    (1L, 2L, "DELETED_DIR", "vol0", "bucket0", 10L, 502L, 0L, false,
+      false),
+    (1L, 2L, "DELETED_DIR", "vol0", "bucket1", 99L, 510L, 0L, false,
+      false),
+    (2L, 1L, "SUB_FILE", "vol0", "bucket0", 10L, 611L, 700L, false,
+      false),
+    (2L, 1L, "DELETED_DIR", "vol0", "bucket0", 10L, 520L, 0L, false,
+      false),
+    (3L, 1L, "SUB_DIR", "vol0", "bucket0", 10L, 530L, 0L, false, false),
+    (3L, 1L, "SUB_FILE", "vol1", "bucket3", 113L, 620L, 400L, false,
+      false),
+    (4L, 1L, "SUB_DIR", "vol0", "bucket0", 10L, 540L, 0L, false, false),
+    (5L, 1L, "DELETED_DIR", "vol0", "bucket0", 10L, 550L, 0L, false,
+      false),
+    (6L, 1L, "SUB_FILE", "vol0", "no-such", 77L, 630L, 900L, true, true),
+    (6L, 1L, "DELETED_DIR", "vol2", "bucket5", 215L, 560L, 0L, false,
+      false))
+
+  def dirPurgeEntries(spark: SparkSession, dir: String): DataFrame =
+    dirPurgeEntryRows.df(spark)
 
   /** revoke_admin_requests: OMTenantRevokeAdminRequest branches — the
     * assign mirror: a real admin revoked (was_admin=true), a non-admin
     * revoked (idempotent, was_admin=false), tenant inferred through the
     * accessId, unassigned-accessId inference, missing accessId, wrong
     * tenant, unknown explicit tenant. */
-  def revokeAdminRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "tenant0", "tenant0$clerk0"),
-      (2L, "tenant1", "tenant1$clerk1"),
-      (3L, "", "tenant2$clerk2"),
-      (4L, "", "ghost$nobody"),
-      (5L, "tenant1", "tenant1$missing"),
-      (6L, "tenant2", "tenant1$clerk1"),
-      (7L, "tenant9", "tenant9$clerk9"))
-      .toDF("req_id", "tenant_id", "access_id")
-  }
+  val revokeAdminRequestRows = Fixture("req_id", "tenant_id", "access_id")(
+    (1L, "tenant0", "tenant0$clerk0"),
+    (2L, "tenant1", "tenant1$clerk1"),
+    (3L, "", "tenant2$clerk2"),
+    (4L, "", "ghost$nobody"),
+    (5L, "tenant1", "tenant1$missing"),
+    (6L, "tenant2", "tenant1$clerk1"),
+    (7L, "tenant9", "tenant9$clerk9"))
+
+  def revokeAdminRequests(spark: SparkSession, dir: String): DataFrame =
+    revokeAdminRequestRows.df(spark)
 
   /** revoke_secret_requests: S3RevokeSecretRequest branches — owner
     * revokes, non-owner refused (the permission gate runs in preExecute,
     * BEFORE the store probe — probed by an unauthorized revoke of a
     * missing secret), S3-admin override, and revokes of accessIds with
     * no stored secret (plain Kerberos id and an unknown tenant id). */
-  def revokeSecretRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "tenant1$clerk1", "clerk1"),
-      (2L, "tenant1$clerk1", "clerk2"),
-      (3L, "tenant2$clerk2", "om-admin"),
-      (4L, "hdfs", "hdfs"),
-      (5L, "hdfs", "yarn"),
-      (6L, "ghost$nobody", "om-admin"))
-      .toDF("req_id", "access_id", "caller")
-  }
+  val revokeSecretRequestRows = Fixture("req_id", "access_id", "caller")(
+    (1L, "tenant1$clerk1", "clerk1"),
+    (2L, "tenant1$clerk1", "clerk2"),
+    (3L, "tenant2$clerk2", "om-admin"),
+    (4L, "hdfs", "hdfs"),
+    (5L, "hdfs", "yarn"),
+    (6L, "ghost$nobody", "om-admin"))
+
+  def revokeSecretRequests(spark: SparkSession, dir: String): DataFrame =
+    revokeSecretRequestRows.df(spark)
 
   /** snapshot_catalog_live: [[snapshotCatalogExt]] plus one ACTIVE
     * snapshot with a STRICT-VALID name on vol0/bucket0 (the legacy chain
     * names s1/s2 fail OmUtils.validateSnapshotName, so the delete
     * ladder's link-resolved / permission / happy-path rungs need a
     * deletable target there). */
-  def snapshotCatalogLive(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    snapshotCatalogExt(spark, dir).unionByName(
-      Seq(("vol0", "bucket0", "snap-live", "SNAPSHOT_ACTIVE"))
-        .toDF("volume", "bucket", "name", "status"))
-  }
+  val snapshotLiveRows = Fixture("volume", "bucket", "name", "status")(
+    ("vol0", "bucket0", "snap-live", "SNAPSHOT_ACTIVE"))
+
+  def snapshotCatalogLive(spark: SparkSession, dir: String): DataFrame =
+    snapshotCatalogExt(spark, dir).unionByName(snapshotLiveRows.df(spark))
 
   /** snapshot_delete_requests: every OMSnapshotDeleteRequest branch —
     * happy delete, name validation on the LEGACY chain name (truthful
@@ -2841,51 +2797,49 @@ object Tables {
     * already-deleted pending reclamation, plain missing, delete THROUGH
     * a link (lands on the source bucket), dangling link, link loop,
     * non-owner principal, unknown bucket, invalid name. */
-  def snapshotDeleteRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "vol2", "bucket5", "snap-golden", "admin2"),
-      (2L, "vol0", "bucket0", "s1", "admin0"),
-      (3L, "vol0", "bucket0", "snap-gone", "admin0"),
-      (4L, "vol0", "bucket0", "snap-nope", "admin0"),
-      (5L, "vol1", "link-a", "snap-live", "admin0"),
-      (6L, "vol3", "link-broken", "snap-live", "admin0"),
-      (7L, "vol0", "link-cycle1", "snap-live", "admin0"),
-      (8L, "vol0", "bucket0", "snap-live", "clerk1"),
-      (9L, "vol2", "nobucket", "snap-live", "admin2"),
-      (10L, "vol0", "bucket0", "Bad..Name", "admin0"),
-      (11L, "vol0", "bucket0", "snap-live", "om-admin"))
-      .toDF("req_id", "volume", "bucket", "snapshot_name", "principal")
-  }
+  val snapshotDeleteRequestRows = Fixture(
+    "req_id", "volume", "bucket", "snapshot_name", "principal")(
+    (1L, "vol2", "bucket5", "snap-golden", "admin2"),
+    (2L, "vol0", "bucket0", "s1", "admin0"),
+    (3L, "vol0", "bucket0", "snap-gone", "admin0"),
+    (4L, "vol0", "bucket0", "snap-nope", "admin0"),
+    (5L, "vol1", "link-a", "snap-live", "admin0"),
+    (6L, "vol3", "link-broken", "snap-live", "admin0"),
+    (7L, "vol0", "link-cycle1", "snap-live", "admin0"),
+    (8L, "vol0", "bucket0", "snap-live", "clerk1"),
+    (9L, "vol2", "nobucket", "snap-live", "admin2"),
+    (10L, "vol0", "bucket0", "Bad..Name", "admin0"),
+    (11L, "vol0", "bucket0", "snap-live", "om-admin"))
+
+  def snapshotDeleteRequests(spark: SparkSession, dir: String): DataFrame =
+    snapshotDeleteRequestRows.df(spark)
 
   /** set_secret_requests: OMSetSecretRequest batch — the accessId probe
     * runs FIRST (ACCESS_ID_NOT_FOUND before any secret validation), then
     * empty secret, then the 8-char minimum (OzoneConsts
     * .S3_SECRET_KEY_MIN_LENGTH), then SET. */
-  def setSecretRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "tenant1$clerk1", "a-perfectly-long-secret"),
-      (2L, "ghost$nobody", "another-long-secret"),
-      (3L, "tenant2$clerk2", ""),
-      (4L, "tenant3$clerk3", "short"),
-      (5L, "ghost$nobody", "short"),
-      (6L, "tenant2$clerk2", "exactly8"))
-      .toDF("req_id", "access_id", "secret")
-  }
+  val setSecretRequestRows = Fixture("req_id", "access_id", "secret")(
+    (1L, "tenant1$clerk1", "a-perfectly-long-secret"),
+    (2L, "ghost$nobody", "another-long-secret"),
+    (3L, "tenant2$clerk2", ""),
+    (4L, "tenant3$clerk3", "short"),
+    (5L, "ghost$nobody", "short"),
+    (6L, "tenant2$clerk2", "exactly8"))
+
+  def setSecretRequests(spark: SparkSession, dir: String): DataFrame =
+    setSecretRequestRows.df(spark)
 
   /** fso_bucket_ids: the FSO (volume, bucket) → (volumeId, bucketId)
     * mapping the deleted-dir table keys are built from
     * (OmMetadataManagerImpl.getBucketKeyPrefixFSO — dir db keys are
     * `/volId/bucketId/...`, unlike the name-keyed deleted/renamed
     * tables). */
-  def fsoBucketIds(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("vol0", "bucket0", 101L, 201L),
-      ("vol2", "bucket5", 102L, 205L))
-      .toDF("volume", "bucket", "vol_id", "bucket_id")
-  }
+  val fsoBucketIdRows = Fixture("volume", "bucket", "vol_id", "bucket_id")(
+    ("vol0", "bucket0", 101L, 201L),
+    ("vol2", "bucket5", 102L, 205L))
+
+  def fsoBucketIds(spark: SparkSession, dir: String): DataFrame =
+    fsoBucketIdRows.df(spark)
 
   /** move_table_keys_requests: OMSnapshotMoveTableKeysRequest batch —
     * the snapshot-GC move of buffered deleted/renamed/deleted-dir
@@ -2897,24 +2851,24 @@ object Tables {
     * and in-list duplicates per table, and preExecute-validation-beats-
     * the-apply-stage ordering (a bad entry on a request whose next
     * snapshot is also not active). */
-  def moveTableKeysRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "vol0", "bucket0", "s1"),
-      (2L, "vol0", "bucket0", "s2"),
-      (3L, "vol0", "bucket0", "snap-gone"),
-      (4L, "vol0", "bucket0", "snap-live"),
-      (5L, "vol2", "bucket5", "snap-golden"),
-      (6L, "vol0", "bucket0", "ghost"),
-      (7L, "vol0", "bucket0", "s1"),
-      (8L, "vol0", "bucket0", "s1"),
-      (9L, "vol0", "bucket0", "s1"),
-      (10L, "vol0", "bucket0", "s1"),
-      (11L, "vol0", "bucket0", "s1"),
-      (12L, "vol0", "bucket0", "s2"),
-      (13L, "vol0", "bucket0", "s1"))
-      .toDF("req_id", "volume", "bucket", "from_name")
-  }
+  val moveTableKeysRequestRows = Fixture(
+    "req_id", "volume", "bucket", "from_name")(
+    (1L, "vol0", "bucket0", "s1"),
+    (2L, "vol0", "bucket0", "s2"),
+    (3L, "vol0", "bucket0", "snap-gone"),
+    (4L, "vol0", "bucket0", "snap-live"),
+    (5L, "vol2", "bucket5", "snap-golden"),
+    (6L, "vol0", "bucket0", "ghost"),
+    (7L, "vol0", "bucket0", "s1"),
+    (8L, "vol0", "bucket0", "s1"),
+    (9L, "vol0", "bucket0", "s1"),
+    (10L, "vol0", "bucket0", "s1"),
+    (11L, "vol0", "bucket0", "s1"),
+    (12L, "vol0", "bucket0", "s2"),
+    (13L, "vol0", "bucket0", "s1"))
+
+  def moveTableKeysRequests(spark: SparkSession, dir: String): DataFrame =
+    moveTableKeysRequestRows.df(spark)
 
   /** move_table_keys_entries: the per-request table-key lists, one row
     * per entry. tbl ∈ DELETED | RENAMED | DELETED_DIR, walked in that
@@ -2924,43 +2878,43 @@ object Tables {
     * KeyValue (value-less pairs are silently dropped). Filtered-out
     * rows deliberately carry bad prefixes / duplicate keys to probe
     * that dropped entries are never validated. */
-  def moveTableKeysEntries(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "DELETED", 1, "/vol0/bucket0/a", 2, false),
-      (1L, "DELETED", 2, "/vol0/bucket0/b", 1, false),
-      (1L, "RENAMED", 1, "/vol0/bucket0/r1", 0, true),
-      (1L, "DELETED_DIR", 1, "/101/201/d1", 1, false),
-      (2L, "DELETED", 1, "/vol0/bucket0/c", 1, false),
-      (3L, "DELETED", 1, "/vol0/bucket0/x", 0, false),
-      (3L, "DELETED", 2, "/vol0/bucket0/y", 3, false),
-      (3L, "RENAMED", 1, "/vol0/bucket0/r2", 0, false),
-      (3L, "RENAMED", 2, "/vol0/bucket0/r3", 0, true),
-      (3L, "DELETED_DIR", 1, "/101/201/d2", 2, false),
-      (3L, "DELETED_DIR", 2, "/101/201/d3", 1, false),
-      (4L, "DELETED", 1, "/vol0/bucket0/z", 1, false),
-      (6L, "DELETED", 1, "/wrong/prefix/k", 1, false),
-      (7L, "DELETED", 1, "/vol0/bucket0/ok", 1, false),
-      (7L, "DELETED", 2, "/vol9/bucketX/bad", 1, false),
-      (8L, "DELETED", 1, "/vol0/bucket0/k1", 1, false),
-      (8L, "DELETED", 2, "/vol0/bucket0/k2", 1, false),
-      (8L, "DELETED", 3, "/vol0/bucket0/k1", 1, false),
-      (9L, "DELETED", 1, "/vol0/bucket0/k3", 1, false),
-      (9L, "RENAMED", 1, "/volX/bucket0/r4", 0, true),
-      (9L, "DELETED_DIR", 1, "/101/201/d4", 1, false),
-      (9L, "DELETED_DIR", 2, "/101/201/d4", 1, false),
-      (10L, "RENAMED", 1, "/bad/prefix/r5", 0, false),
-      (10L, "DELETED_DIR", 1, "/999/999/dd", 2, false),
-      (10L, "DELETED_DIR", 2, "/101/201/d5", 1, false),
-      (10L, "DELETED_DIR", 3, "/101/201/d5", 1, false),
-      (11L, "DELETED", 1, "/vol0/bucket0/k1", 1, false),
-      (11L, "DELETED", 2, "/vol0/bucket0/k1", 0, false),
-      (11L, "DELETED", 3, "/vol0/bucket0/k2", 1, false),
-      (12L, "DELETED", 1, "/oops/bucket0/q", 1, false),
-      (13L, "RENAMED", 1, "/vol0/bucket0/r6", 0, true),
-      (13L, "RENAMED", 2, "/vol0/bucket0/r6", 0, true))
-      .toDF("req_id", "tbl", "pos", "db_key", "n_infos", "has_value")
-  }
+  val moveTableKeysEntryRows = Fixture(
+    "req_id", "tbl", "pos", "db_key", "n_infos", "has_value")(
+    (1L, "DELETED", 1, "/vol0/bucket0/a", 2, false),
+    (1L, "DELETED", 2, "/vol0/bucket0/b", 1, false),
+    (1L, "RENAMED", 1, "/vol0/bucket0/r1", 0, true),
+    (1L, "DELETED_DIR", 1, "/101/201/d1", 1, false),
+    (2L, "DELETED", 1, "/vol0/bucket0/c", 1, false),
+    (3L, "DELETED", 1, "/vol0/bucket0/x", 0, false),
+    (3L, "DELETED", 2, "/vol0/bucket0/y", 3, false),
+    (3L, "RENAMED", 1, "/vol0/bucket0/r2", 0, false),
+    (3L, "RENAMED", 2, "/vol0/bucket0/r3", 0, true),
+    (3L, "DELETED_DIR", 1, "/101/201/d2", 2, false),
+    (3L, "DELETED_DIR", 2, "/101/201/d3", 1, false),
+    (4L, "DELETED", 1, "/vol0/bucket0/z", 1, false),
+    (6L, "DELETED", 1, "/wrong/prefix/k", 1, false),
+    (7L, "DELETED", 1, "/vol0/bucket0/ok", 1, false),
+    (7L, "DELETED", 2, "/vol9/bucketX/bad", 1, false),
+    (8L, "DELETED", 1, "/vol0/bucket0/k1", 1, false),
+    (8L, "DELETED", 2, "/vol0/bucket0/k2", 1, false),
+    (8L, "DELETED", 3, "/vol0/bucket0/k1", 1, false),
+    (9L, "DELETED", 1, "/vol0/bucket0/k3", 1, false),
+    (9L, "RENAMED", 1, "/volX/bucket0/r4", 0, true),
+    (9L, "DELETED_DIR", 1, "/101/201/d4", 1, false),
+    (9L, "DELETED_DIR", 2, "/101/201/d4", 1, false),
+    (10L, "RENAMED", 1, "/bad/prefix/r5", 0, false),
+    (10L, "DELETED_DIR", 1, "/999/999/dd", 2, false),
+    (10L, "DELETED_DIR", 2, "/101/201/d5", 1, false),
+    (10L, "DELETED_DIR", 3, "/101/201/d5", 1, false),
+    (11L, "DELETED", 1, "/vol0/bucket0/k1", 1, false),
+    (11L, "DELETED", 2, "/vol0/bucket0/k1", 0, false),
+    (11L, "DELETED", 3, "/vol0/bucket0/k2", 1, false),
+    (12L, "DELETED", 1, "/oops/bucket0/q", 1, false),
+    (13L, "RENAMED", 1, "/vol0/bucket0/r6", 0, true),
+    (13L, "RENAMED", 2, "/vol0/bucket0/r6", 0, true))
+
+  def moveTableKeysEntries(spark: SparkSession, dir: String): DataFrame =
+    moveTableKeysEntryRows.df(spark)
 
   /** move_deleted_keys_requests: the LEGACY
     * OMSnapshotMoveDeletedKeysRequest probe set — mid-chain move,
@@ -2968,55 +2922,54 @@ object Tables {
     * fence), chain-end → AOS, missing from-snapshot, empty lists, and
     * a DELETED from-snapshot that still proceeds (existence-only
     * probe). */
-  def moveDeletedKeysRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "vol0", "bucket0", "s1"),
-      (2L, "vol0", "bucket0", "s2"),
-      (3L, "vol0", "bucket0", "snap-live"),
-      (4L, "vol0", "bucket0", "ghost"),
-      (5L, "vol2", "bucket5", "snap-golden"),
-      (6L, "vol0", "bucket0", "snap-gone"))
-      .toDF("req_id", "volume", "bucket", "from_name")
-  }
+  val moveDeletedKeysRequestRows = Fixture(
+    "req_id", "volume", "bucket", "from_name")(
+    (1L, "vol0", "bucket0", "s1"),
+    (2L, "vol0", "bucket0", "s2"),
+    (3L, "vol0", "bucket0", "snap-live"),
+    (4L, "vol0", "bucket0", "ghost"),
+    (5L, "vol2", "bucket5", "snap-golden"),
+    (6L, "vol0", "bucket0", "snap-gone"))
+
+  def moveDeletedKeysRequests(spark: SparkSession, dir: String): DataFrame =
+    moveDeletedKeysRequestRows.df(spark)
 
   /** move_deleted_keys_entries: the legacy request's four verbatim
     * lists — tbl ∈ NEXT_DB | RECLAIM | RENAMED | MOVED_DIR. Rows that
     * the MODERN ladder would reject or silently drop (bad prefixes,
     * duplicates) are planted here to prove the legacy ladder moves
     * them untouched. */
-  def moveDeletedKeysEntries(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "NEXT_DB", 1L, "/vol0/bucket0/a"),
-      (1L, "NEXT_DB", 2L, "/vol0/bucket0/a"), // duplicate: moved twice
-      (1L, "NEXT_DB", 3L, "/wrong/prefix/zzz"), // bad prefix: moved
-      (1L, "RECLAIM", 1L, "/vol0/bucket0/rc1"),
-      (1L, "RENAMED", 1L, "/vol9/bucketX/r0"), // bad prefix: moved
-      (1L, "MOVED_DIR", 1L, "/999/999/djunk"),
-      (2L, "NEXT_DB", 1L, "/vol0/bucket0/b"),
-      (3L, "RECLAIM", 1L, "/vol0/bucket0/rc2"),
-      (3L, "MOVED_DIR", 1L, "/101/201/d9"),
-      (4L, "NEXT_DB", 1L, "/vol0/bucket0/never"), // masked: req 4 missing
-      (6L, "RENAMED", 1L, "/vol0/bucket0/r7"))
-      .toDF("req_id", "tbl", "pos", "db_key")
-  }
+  val moveDeletedKeysEntryRows = Fixture("req_id", "tbl", "pos", "db_key")(
+    (1L, "NEXT_DB", 1L, "/vol0/bucket0/a"),
+    (1L, "NEXT_DB", 2L, "/vol0/bucket0/a"), // duplicate: moved twice
+    (1L, "NEXT_DB", 3L, "/wrong/prefix/zzz"), // bad prefix: moved
+    (1L, "RECLAIM", 1L, "/vol0/bucket0/rc1"),
+    (1L, "RENAMED", 1L, "/vol9/bucketX/r0"), // bad prefix: moved
+    (1L, "MOVED_DIR", 1L, "/999/999/djunk"),
+    (2L, "NEXT_DB", 1L, "/vol0/bucket0/b"),
+    (3L, "RECLAIM", 1L, "/vol0/bucket0/rc2"),
+    (3L, "MOVED_DIR", 1L, "/101/201/d9"),
+    (4L, "NEXT_DB", 1L, "/vol0/bucket0/never"), // masked: req 4 missing
+    (6L, "RENAMED", 1L, "/vol0/bucket0/r7"))
+
+  def moveDeletedKeysEntries(spark: SparkSession, dir: String): DataFrame =
+    moveDeletedKeysEntryRows.df(spark)
 
   /** bucket_set_owner_requests: OMBucketSetOwnerRequest branches —
     * missing bucket, same-owner no-op (success=false, not an error), and
     * plain transfers. Bucket owner is modeled as the volume owner
     * (buckets carry no separate owner in this catalog, as in the
     * snapshot-create ladder). */
-  def bucketSetOwnerRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "vol0", "bucket0", "clerk9"),
-      (2L, "vol0", "bucket0", "admin0"),
-      (3L, "vol0", "no-such", "clerk1"),
-      (4L, "vol2", "bucket5", "admin2"),
-      (5L, "vol1", "bucket3", "bob"))
-      .toDF("req_id", "volume", "bucket", "new_owner")
-  }
+  val bucketSetOwnerRequestRows = Fixture(
+    "req_id", "volume", "bucket", "new_owner")(
+    (1L, "vol0", "bucket0", "clerk9"),
+    (2L, "vol0", "bucket0", "admin0"),
+    (3L, "vol0", "no-such", "clerk1"),
+    (4L, "vol2", "bucket5", "admin2"),
+    (5L, "vol1", "bucket3", "bob"))
+
+  def bucketSetOwnerRequests(spark: SparkSession, dir: String): DataFrame =
+    bucketSetOwnerRequestRows.df(spark)
 
   /** snapshot_set_property_requests: OMSnapshotSetPropertyRequest
     * branches — plain update, missing snapshot, IN-BATCH duplicate key
@@ -3024,59 +2977,57 @@ object Tables {
     * MISSING key), and the truthful quirk that a SNAPSHOT_DELETED entry
     * still accepts property updates (the reference never checks status
     * here). */
+  val snapshotSetPropertyRequestRows = Fixture(
+    "req_id", "volume", "bucket", "name", "property")(
+    (1L, "vol0", "bucket0", "s1", "deep_cleaned_deleted_dir"),
+    (2L, "vol0", "bucket0", "ghost", "exclusive_size"),
+    (3L, "vol0", "bucket0", "s2", "exclusive_size"),
+    (4L, "vol0", "bucket0", "s1", "exclusive_size"),
+    (5L, "vol2", "bucket5", "snap-golden", "deep_cleaned_deleted_dir"),
+    (6L, "vol0", "bucket0", "snap-gone", "exclusive_size"),
+    (7L, "vol0", "bucket0", "ghost", "deep_cleaned_deleted_dir"))
+
   def snapshotSetPropertyRequests(spark: SparkSession,
-                                  dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "vol0", "bucket0", "s1", "deep_cleaned_deleted_dir"),
-      (2L, "vol0", "bucket0", "ghost", "exclusive_size"),
-      (3L, "vol0", "bucket0", "s2", "exclusive_size"),
-      (4L, "vol0", "bucket0", "s1", "exclusive_size"),
-      (5L, "vol2", "bucket5", "snap-golden", "deep_cleaned_deleted_dir"),
-      (6L, "vol0", "bucket0", "snap-gone", "exclusive_size"),
-      (7L, "vol0", "bucket0", "ghost", "deep_cleaned_deleted_dir"))
-      .toDF("req_id", "volume", "bucket", "name", "property")
-  }
+                                  dir: String): DataFrame =
+    snapshotSetPropertyRequestRows.df(spark)
 
   /** lc_delete_requests: OMLifecycleConfigurationDeleteRequest branches —
     * delete where a config exists, no-config bucket, delete THROUGH a
     * link (the config lives on the source bucket), non-owner, unknown
     * bucket, link loop, dangling link, admin override. */
-  def lcDeleteRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "vol0", "bucket0", "admin0"),
-      (2L, "vol0", "bucket2", "admin0"),
-      (3L, "vol1", "link-a", "admin0"),
-      (4L, "vol0", "bucket1", "clerk1"),
-      (5L, "vol0", "no-such", "admin0"),
-      (6L, "vol0", "link-cycle1", "admin0"),
-      (7L, "vol3", "link-broken", "admin0"),
-      (8L, "vol0", "bucket1", "om-admin"))
-      .toDF("req_id", "volume", "bucket", "principal")
-  }
+  val lcDeleteRequestRows = Fixture("req_id", "volume", "bucket", "principal")(
+    (1L, "vol0", "bucket0", "admin0"),
+    (2L, "vol0", "bucket2", "admin0"),
+    (3L, "vol1", "link-a", "admin0"),
+    (4L, "vol0", "bucket1", "clerk1"),
+    (5L, "vol0", "no-such", "admin0"),
+    (6L, "vol0", "link-cycle1", "admin0"),
+    (7L, "vol3", "link-broken", "admin0"),
+    (8L, "vol0", "bucket1", "om-admin"))
+
+  def lcDeleteRequests(spark: SparkSession, dir: String): DataFrame =
+    lcDeleteRequestRows.df(spark)
 
   /** CreateVolume request batch — every OMVolumeCreateRequest branch:
     * invalid names (uppercase/short/IPv4), a POSIX underscore name that is
     * LEGAL for volumes (strict=false), catalog + in-batch collisions, and
     * per-owner cap sequencing on admin1/admin3 (each owns 1; the declared
     * query caps at 2). */
-  def volumeCreateRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "newvol-a", "admin0"),
-      (2L, "newvol-a", "admin5"),
-      (3L, "vol2", "admin0"),
-      (4L, "Bad_Vol", "admin1"),
-      (5L, "newvol_b", "admin1"),
-      (6L, "newvol-c", "admin1"),
-      (7L, "ab", "admin2"),
-      (8L, "10.0.0.1", "admin2"),
-      (9L, "newvol-d", "ghostuser"),
-      (10L, "newvol-e", "admin3"),
-      (11L, "newvol-f", "admin3"))
-      .toDF("req_id", "volume", "owner")
-  }
+  val volumeCreateRequestRows = Fixture("req_id", "volume", "owner")(
+    (1L, "newvol-a", "admin0"),
+    (2L, "newvol-a", "admin5"),
+    (3L, "vol2", "admin0"),
+    (4L, "Bad_Vol", "admin1"),
+    (5L, "newvol_b", "admin1"),
+    (6L, "newvol-c", "admin1"),
+    (7L, "ab", "admin2"),
+    (8L, "10.0.0.1", "admin2"),
+    (9L, "newvol-d", "ghostuser"),
+    (10L, "newvol-e", "admin3"),
+    (11L, "newvol-f", "admin3"))
+
+  def volumeCreateRequests(spark: SparkSession, dir: String): DataFrame =
+    volumeCreateRequestRows.df(spark)
 
   /** AssignUserAccessId request batch — the static catalog covers every
     * decision branch of OMTenantAssignUserAccessIdRequest (oversized
@@ -3084,20 +3035,19 @@ object Tables {
     * accessId, principal already in the tenant, clean assignment) plus
     * the branch-order probes (delimiter beats unknown tenant, unknown
     * tenant beats duplicate accessId). */
-  def assignRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("tenant1", "newuser", "a" * 100),
-      ("tenant1", "bad$user", "tenant1$badu"),
-      ("ten$ant1", "user1", "x1"),
-      ("tenant9", "user2", "tenant9$user2"),
-      ("tenant9", "bad$u", "y1"),
-      ("tenant9", "clerk1", "tenant1$clerk1"),
-      ("tenant1", "freshuser", "tenant1$clerk1"),
-      ("tenant2", "clerk3", "tenant2$clerk3x"),
-      ("tenant3", "alice", "tenant3$alice"))
-      .toDF("tenant_id", "user_principal", "access_id")
-  }
+  val assignRequestRows = Fixture("tenant_id", "user_principal", "access_id")(
+    ("tenant1", "newuser", "a" * 100),
+    ("tenant1", "bad$user", "tenant1$badu"),
+    ("ten$ant1", "user1", "x1"),
+    ("tenant9", "user2", "tenant9$user2"),
+    ("tenant9", "bad$u", "y1"),
+    ("tenant9", "clerk1", "tenant1$clerk1"),
+    ("tenant1", "freshuser", "tenant1$clerk1"),
+    ("tenant2", "clerk3", "tenant2$clerk3x"),
+    ("tenant3", "alice", "tenant3$alice"))
+
+  def assignRequests(spark: SparkSession, dir: String): DataFrame =
+    assignRequestRows.df(spark)
 
   // ---- auth catalog (ref OMDBDefinition.java:149-191: userTable,
   // s3SecretTable, dTokenTable, prefixTable) ----
@@ -3271,37 +3221,37 @@ object Tables {
     * rides in the request (the store only gates existence) — including
     * the precedence probe: an expired UNKNOWN token reports TOKEN_EXPIRED
     * because maxDate is checked before the store lookup. */
-  def renewTokenRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  val renewTokenRequestRows = {
     val now = 799286400000L // the dtoken plane's "now" (1995-05-01)
-    Seq(
+    Fixture("req_id", "token_owner", "renewer", "max_expiry_ms", "caller")(
       (1L, "clerk1", "om", now + 7776000000L, "om"),
       (2L, "clerk1", "om", now - 1L, "om"),
       (3L, "ghost", "om", now + 7776000000L, "om"),
       (4L, "clerk2", "", now + 7776000000L, "om"),
       (5L, "clerk3", "om", now + 7776000000L, "hive"),
       (6L, "ghost2", "om", now - 1L, "om"))
-      .toDF("req_id", "token_owner", "renewer", "max_expiry_ms", "caller")
+  }
+
+  def renewTokenRequests(spark: SparkSession, dir: String): DataFrame =
+    renewTokenRequestRows.df(spark)
       .withColumn("token_id",
         md5(concat(lit("token"), col("token_owner"))))
-  }
 
   /** cancel_token_requests: cancelToken branches — owner cancels, renewer
     * cancels, a third party refused, unknown token (the access check runs
     * BEFORE the store probe), and a presented identifier with no owner. */
-  def cancelTokenRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "clerk1", "clerk1", "om", "clerk1"),
-      (2L, "clerk2", "clerk2", "om", "om"),
-      (3L, "clerk3", "clerk3", "om", "hive"),
-      (4L, "ghost", "ghost", "om", "ghost"),
-      (5L, "clerk5", "", "om", "om"))
-      .toDF("req_id", "token_owner", "presented_owner", "renewer",
-        "caller")
+  val cancelTokenRequestRows = Fixture(
+    "req_id", "token_owner", "presented_owner", "renewer", "caller")(
+    (1L, "clerk1", "clerk1", "om", "clerk1"),
+    (2L, "clerk2", "clerk2", "om", "om"),
+    (3L, "clerk3", "clerk3", "om", "hive"),
+    (4L, "ghost", "ghost", "om", "ghost"),
+    (5L, "clerk5", "", "om", "om"))
+
+  def cancelTokenRequests(spark: SparkSession, dir: String): DataFrame =
+    cancelTokenRequestRows.df(spark)
       .withColumn("token_id",
         md5(concat(lit("token"), col("token_owner"))))
-  }
 
   /** The Iceberg rewrite fixture's source prefix (the table's current
     * Ozone location) — shared by all iceberg_* fixtures. */
@@ -3354,61 +3304,58 @@ object Tables {
     * before/inside/after the fence, non-admin prepare AND cancel refused
     * (the gate state unmoved), re-prepare while prepared, admin writes
     * fenced like any other, idempotent cancel with the gate off. */
-  def prepareOps(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "WRITE", "clerk1"),
-      (2L, "PREPARE", "clerk1"),
-      (3L, "WRITE", "clerk1"),
-      (4L, "PREPARE", "om-admin"),
-      (5L, "WRITE", "clerk1"),
-      (6L, "PREPARE", "om-admin"),
-      (7L, "CANCEL_PREPARE", "clerk1"),
-      (8L, "WRITE", "om-admin"),
-      (9L, "CANCEL_PREPARE", "om-admin"),
-      (10L, "WRITE", "clerk1"),
-      (11L, "CANCEL_PREPARE", "om-admin"))
-      .toDF("seq", "op_type", "caller")
-  }
+  val prepareOpRows = Fixture("seq", "op_type", "caller")(
+    (1L, "WRITE", "clerk1"),
+    (2L, "PREPARE", "clerk1"),
+    (3L, "WRITE", "clerk1"),
+    (4L, "PREPARE", "om-admin"),
+    (5L, "WRITE", "clerk1"),
+    (6L, "PREPARE", "om-admin"),
+    (7L, "CANCEL_PREPARE", "clerk1"),
+    (8L, "WRITE", "om-admin"),
+    (9L, "CANCEL_PREPARE", "om-admin"),
+    (10L, "WRITE", "clerk1"),
+    (11L, "CANCEL_PREPARE", "om-admin"))
+
+  def prepareOps(spark: SparkSession, dir: String): DataFrame =
+    prepareOpRows.df(spark)
 
   /** om_layout_features: the public OMLayoutFeature catalog slice the
     * upgrade-gate fixture references (OMLayoutFeature.java:28-49). */
-  def omLayoutFeatures(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("INITIAL_VERSION", 0L),
-      ("ERASURE_CODED_STORAGE_SUPPORT", 1L),
-      ("BUCKET_LAYOUT_SUPPORT", 2L),
-      ("MULTITENANCY_SCHEMA", 3L),
-      ("HSYNC", 4L),
-      ("FILESYSTEM_SNAPSHOT", 5L),
-      ("QUOTA", 6L),
-      ("HBASE_SUPPORT", 7L),
-      ("DELEGATION_TOKEN_SYMMETRIC_SIGN", 8L),
-      ("SNAPSHOT_DEFRAG", 9L),
-      ("S3_LIFECYCLE_SUPPORT", 10L),
-      ("MPU_PARTS_TABLE_SPLIT", 11L))
-      .toDF("feature", "version")
-  }
+  val omLayoutFeatureRows = Fixture("feature", "version")(
+    ("INITIAL_VERSION", 0L),
+    ("ERASURE_CODED_STORAGE_SUPPORT", 1L),
+    ("BUCKET_LAYOUT_SUPPORT", 2L),
+    ("MULTITENANCY_SCHEMA", 3L),
+    ("HSYNC", 4L),
+    ("FILESYSTEM_SNAPSHOT", 5L),
+    ("QUOTA", 6L),
+    ("HBASE_SUPPORT", 7L),
+    ("DELEGATION_TOKEN_SYMMETRIC_SIGN", 8L),
+    ("SNAPSHOT_DEFRAG", 9L),
+    ("S3_LIFECYCLE_SUPPORT", 10L),
+    ("MPU_PARTS_TABLE_SPLIT", 11L))
+
+  def omLayoutFeatures(spark: SparkSession, dir: String): DataFrame =
+    omLayoutFeatureRows.df(spark)
 
   /** upgrade_ops: an op log across a finalization — feature-gated
     * requests before/after, a non-admin finalize (moves nothing), the
     * finalize, and the idempotent re-finalize. */
-  def upgradeOps(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "REQUEST", "HSYNC", "clerk1"),
-      (2L, "REQUEST", "FILESYSTEM_SNAPSHOT", "clerk1"),
-      (3L, "REQUEST", "S3_LIFECYCLE_SUPPORT", "clerk1"),
-      (4L, "FINALIZE", "", "clerk1"),
-      (5L, "REQUEST", "FILESYSTEM_SNAPSHOT", "clerk1"),
-      (6L, "FINALIZE", "", "om-admin"),
-      (7L, "REQUEST", "FILESYSTEM_SNAPSHOT", "clerk1"),
-      (8L, "REQUEST", "MPU_PARTS_TABLE_SPLIT", "clerk1"),
-      (9L, "FINALIZE", "", "om-admin"),
-      (10L, "REQUEST", "ERASURE_CODED_STORAGE_SUPPORT", "clerk1"))
-      .toDF("seq", "op_type", "feature", "caller")
-  }
+  val upgradeOpRows = Fixture("seq", "op_type", "feature", "caller")(
+    (1L, "REQUEST", "HSYNC", "clerk1"),
+    (2L, "REQUEST", "FILESYSTEM_SNAPSHOT", "clerk1"),
+    (3L, "REQUEST", "S3_LIFECYCLE_SUPPORT", "clerk1"),
+    (4L, "FINALIZE", "", "clerk1"),
+    (5L, "REQUEST", "FILESYSTEM_SNAPSHOT", "clerk1"),
+    (6L, "FINALIZE", "", "om-admin"),
+    (7L, "REQUEST", "FILESYSTEM_SNAPSHOT", "clerk1"),
+    (8L, "REQUEST", "MPU_PARTS_TABLE_SPLIT", "clerk1"),
+    (9L, "FINALIZE", "", "om-admin"),
+    (10L, "REQUEST", "ERASURE_CODED_STORAGE_SUPPORT", "clerk1"))
+
+  def upgradeOps(spark: SparkSession, dir: String): DataFrame =
+    upgradeOpRows.df(spark)
 
   /** get_token_requests: GetDelegationToken mint branches — kerberos
     * mint, TOKEN-authenticated caller refused (a DT can't mint another),
@@ -3416,20 +3363,20 @@ object Tables {
     * off, secret manager down (success with an empty response), a
     * CERTIFICATE proxy caller carrying realUser, and the
     * auth-gate-beats-manager-probe ordering probe. */
-  def getTokenRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "clerk1", "KERBEROS", "om", "", true, true),
-      (2L, "clerk2", "TOKEN", "om", "", true, true),
-      (3L, "clerk3", "SIMPLE", "om", "", true, true),
-      (4L, "clerk4", "KERBEROS", "om", "", true, false),
-      (5L, "clerk5", "SIMPLE", "om", "", false, true),
-      (6L, "svc-hive", "CERTIFICATE", "om", "oozie", true, true),
-      (7L, "clerk7", "KERBEROS_SSL", "", "", true, true),
-      (8L, "clerk8", "TOKEN", "om", "", true, false))
-      .toDF("req_id", "caller", "auth_method", "renewer", "real_user",
-        "security_on", "mgr_running")
-  }
+  val getTokenRequestRows = Fixture(
+    "req_id", "caller", "auth_method", "renewer", "real_user", "security_on",
+    "mgr_running")(
+    (1L, "clerk1", "KERBEROS", "om", "", true, true),
+    (2L, "clerk2", "TOKEN", "om", "", true, true),
+    (3L, "clerk3", "SIMPLE", "om", "", true, true),
+    (4L, "clerk4", "KERBEROS", "om", "", true, false),
+    (5L, "clerk5", "SIMPLE", "om", "", false, true),
+    (6L, "svc-hive", "CERTIFICATE", "om", "oozie", true, true),
+    (7L, "clerk7", "KERBEROS_SSL", "", "", true, true),
+    (8L, "clerk8", "TOKEN", "om", "", true, false))
+
+  def getTokenRequests(spark: SparkSession, dir: String): DataFrame =
+    getTokenRequestRows.df(spark)
 
   /** prefix_acls (ref OMDBDefinition.java:186-191 prefixTable): per bucket,
     * `warehouse/` grants auditor2 write-only while `warehouse/A/` grants
@@ -3457,23 +3404,24 @@ object Tables {
    * (READ=1 WRITE=2 CREATE=4 LIST=8). The template is a 13-row dimension
    * broadcast onto the sampled keys.
    */
+  val aclOpTemplateRows = Fixture(
+    "variant", "seq", "op", "ptype", "pname", "bits")(
+    (0L, 1L, "ADD", "USER", "alice", 3L),
+    (0L, 2L, "REMOVE", "USER", "alice", 2L),
+    (1L, 1L, "ADD", "USER", "alice", 3L),
+    (1L, 2L, "SET", "USER", "bob", 1L),
+    (2L, 1L, "ADD", "USER", "alice", 1L),
+    (2L, 2L, "ADD", "USER", "alice", 6L),
+    (2L, 3L, "REMOVE", "USER", "alice", 4L),
+    (3L, 1L, "REMOVE", "USER", "ghost", 7L),
+    (3L, 2L, "ADD", "GROUP", "devs", 9L),
+    (4L, 1L, "SET", "USER", "alice", 7L),
+    (4L, 1L, "SET", "GROUP", "ops", 3L),
+    (4L, 2L, "ADD", "USER", "alice", 8L),
+    (4L, 3L, "REMOVE", "USER", "alice", 1L))
+
   def aclOps(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val template = Seq(
-      (0L, 1L, "ADD", "USER", "alice", 3L),
-      (0L, 2L, "REMOVE", "USER", "alice", 2L),
-      (1L, 1L, "ADD", "USER", "alice", 3L),
-      (1L, 2L, "SET", "USER", "bob", 1L),
-      (2L, 1L, "ADD", "USER", "alice", 1L),
-      (2L, 2L, "ADD", "USER", "alice", 6L),
-      (2L, 3L, "REMOVE", "USER", "alice", 4L),
-      (3L, 1L, "REMOVE", "USER", "ghost", 7L),
-      (3L, 2L, "ADD", "GROUP", "devs", 9L),
-      (4L, 1L, "SET", "USER", "alice", 7L),
-      (4L, 1L, "SET", "GROUP", "ops", 3L),
-      (4L, 2L, "ADD", "USER", "alice", 8L),
-      (4L, 3L, "REMOVE", "USER", "alice", 1L))
-      .toDF("variant", "seq", "op", "ptype", "pname", "bits")
+    val template = aclOpTemplateRows.df(spark)
       .withColumn("scope", lit("ACCESS"))
     objects(spark, dir)
       .filter(col("object_id") % 101 === 0)
@@ -3565,7 +3513,6 @@ object Tables {
     * bucket, full key, messy consecutive slashes, the /tmp mount, and a
     * trailing-slash directory path; plus the root itself. */
   def ofsRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     objects(spark, dir)
       .filter(col("object_id") % 103 === 0)
       .select(col("volume"), col("bucket"), col("key"), col("owner"),
@@ -3584,9 +3531,12 @@ object Tables {
             expr("array_join(slice(split(key, '/'), 1, 3), '/')"),
             lit("/"))).as("path"),
         col("owner").as("username"))
-      .unionByName(Seq(("/", "root")).toDF("path", "username"))
+      .unionByName(ofsRootRows.df(spark))
       .distinct()
   }
+
+  /** The filesystem root request of [[ofsRequests]]. */
+  val ofsRootRows = Fixture("path", "username")(("/", "root"))
 
   // ---- cluster-health plane (SCM/Recon datanode + pipeline catalog) ----
 
@@ -3752,11 +3702,12 @@ object Tables {
 
   /** mpu_live_buckets: the bucket-table slice the expired-abort apply
     * probes — bucket3 is deliberately absent on every volume. */
-  def mpuLiveBuckets(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  val mpuLiveBucketRows = Fixture("volume", "bucket")(
     (for (v <- 0 to 3; b <- Seq(0, 1, 2, 4))
-      yield (s"vol$v", s"bucket$b")).toDF("volume", "bucket")
-  }
+      yield (s"vol$v", s"bucket$b")): _*)
+
+  def mpuLiveBuckets(spark: SparkSession, dir: String): DataFrame =
+    mpuLiveBucketRows.df(spark)
 
   /** mpu_open_parts: one openKeyTable entry per in-flight (upload, part) —
     * what a CommitPart resolves by clientID. Derived WITHOUT the %6
@@ -3783,31 +3734,30 @@ object Tables {
   /** mpu_complete_store: the multipartInfoTable slice the Complete
     * ladder probes — four in-flight uploads; up-B deliberately has NO
     * stored parts, up-D's key collides with a directory. */
-  def mpuCompleteStore(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("vol0", "bucket0", "mpu/a.bin", "up-A"),
-      ("vol0", "bucket0", "mpu/b.bin", "up-B"),
-      ("vol0", "bucket0", "mpu/c.bin", "up-C"),
-      ("vol0", "bucket0", "dircol/d.bin", "up-D"))
-      .toDF("volume", "bucket", "key", "upload_id")
-  }
+  val mpuCompleteStoreRows = Fixture("volume", "bucket", "key", "upload_id")(
+    ("vol0", "bucket0", "mpu/a.bin", "up-A"),
+    ("vol0", "bucket0", "mpu/b.bin", "up-B"),
+    ("vol0", "bucket0", "mpu/c.bin", "up-C"),
+    ("vol0", "bucket0", "dircol/d.bin", "up-D"))
+
+  def mpuCompleteStore(spark: SparkSession, dir: String): DataFrame =
+    mpuCompleteStoreRows.df(spark)
 
   /** mpu_complete_store_parts: committed parts per upload. up-A part 1
     * sits EXACTLY on the 5 MiB floor (boundary passes), part 3 is a
     * small LAST part; up-C part 1 is undersized (the ENTITY_TOO_SMALL
     * probe when referenced as a non-last part). */
-  def mpuCompleteStoreParts(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("up-A", 1, "eA1", 5242880L),
-      ("up-A", 2, "eA2", 6291456L),
-      ("up-A", 3, "eA3", 1024L),
-      ("up-C", 1, "eC1", 1024L),
-      ("up-C", 2, "eC2", 6291456L),
-      ("up-D", 1, "eD1", 6291456L))
-      .toDF("upload_id", "part_number", "etag", "size")
-  }
+  val mpuCompleteStorePartRows = Fixture(
+    "upload_id", "part_number", "etag", "size")(
+    ("up-A", 1, "eA1", 5242880L),
+    ("up-A", 2, "eA2", 6291456L),
+    ("up-A", 3, "eA3", 1024L),
+    ("up-C", 1, "eC1", 1024L),
+    ("up-C", 2, "eC2", 6291456L),
+    ("up-D", 1, "eD1", 6291456L))
+
+  def mpuCompleteStoreParts(spark: SparkSession, dir: String): DataFrame =
+    mpuCompleteStorePartRows.df(spark)
 
   /** mpu_complete_requests: every S3MultipartUploadCompleteRequest
     * branch — happy multi-part, unknown upload, empty part list, upload
@@ -3816,65 +3766,65 @@ object Tables {
     * missing bucket, order-beats-etag, etag-beats-size, subset
     * completion, and single-part completion of an upload whose OTHER
     * stored part is undersized. */
-  def mpuCompleteRequestsC(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "vol0", "bucket0", "mpu/a.bin", "up-A"),
-      (2L, "vol0", "bucket0", "mpu/x.bin", "up-X"),
-      (3L, "vol0", "bucket0", "mpu/a.bin", "up-A"),
-      (4L, "vol0", "bucket0", "mpu/b.bin", "up-B"),
-      (5L, "vol0", "bucket0", "mpu/a.bin", "up-A"),
-      (6L, "vol0", "bucket0", "mpu/a.bin", "up-A"),
-      (7L, "vol0", "bucket0", "mpu/a.bin", "up-A"),
-      (8L, "vol0", "bucket0", "mpu/c.bin", "up-C"),
-      (9L, "vol0", "bucket0", "dircol/d.bin", "up-ghost"),
-      (10L, "vol0", "no-such", "mpu/a.bin", "up-A"),
-      (11L, "vol0", "bucket0", "mpu/a.bin", "up-A"),
-      (12L, "vol0", "bucket0", "mpu/c.bin", "up-C"),
-      (13L, "vol0", "bucket0", "mpu/a.bin", "up-A"),
-      (14L, "vol0", "bucket0", "mpu/c.bin", "up-C"))
-      .toDF("req_id", "volume", "bucket", "key", "upload_id")
-  }
+  val mpuCompleteRequestsCRows = Fixture(
+    "req_id", "volume", "bucket", "key", "upload_id")(
+    (1L, "vol0", "bucket0", "mpu/a.bin", "up-A"),
+    (2L, "vol0", "bucket0", "mpu/x.bin", "up-X"),
+    (3L, "vol0", "bucket0", "mpu/a.bin", "up-A"),
+    (4L, "vol0", "bucket0", "mpu/b.bin", "up-B"),
+    (5L, "vol0", "bucket0", "mpu/a.bin", "up-A"),
+    (6L, "vol0", "bucket0", "mpu/a.bin", "up-A"),
+    (7L, "vol0", "bucket0", "mpu/a.bin", "up-A"),
+    (8L, "vol0", "bucket0", "mpu/c.bin", "up-C"),
+    (9L, "vol0", "bucket0", "dircol/d.bin", "up-ghost"),
+    (10L, "vol0", "no-such", "mpu/a.bin", "up-A"),
+    (11L, "vol0", "bucket0", "mpu/a.bin", "up-A"),
+    (12L, "vol0", "bucket0", "mpu/c.bin", "up-C"),
+    (13L, "vol0", "bucket0", "mpu/a.bin", "up-A"),
+    (14L, "vol0", "bucket0", "mpu/c.bin", "up-C"))
+
+  def mpuCompleteRequestsC(spark: SparkSession, dir: String): DataFrame =
+    mpuCompleteRequestsCRows.df(spark)
 
   /** mpu_complete_req_parts: the client part lists, one row per entry
     * in list order. */
-  def mpuCompleteReqParts(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, 1, 1, "eA1"), (1L, 2, 2, "eA2"), (1L, 3, 3, "eA3"),
-      (2L, 1, 1, "eX1"),
-      (4L, 1, 1, "eB1"),
-      (5L, 1, 1, "eA1"), (5L, 2, 3, "eA3"), (5L, 3, 2, "eA2"),
-      (6L, 1, 1, "eA1"), (6L, 2, 2, "WRONG"), (6L, 3, 3, "eA3"),
-      (7L, 1, 1, "eA1"), (7L, 2, 4, "eA4"),
-      (8L, 1, 1, "eC1"), (8L, 2, 2, "eC2"),
-      (9L, 1, 1, "eD1"),
-      (10L, 1, 1, "eA1"),
-      (11L, 1, 2, "WRONG"), (11L, 2, 1, "eA1"),
-      (12L, 1, 1, "WRONG"), (12L, 2, 2, "eC2"),
-      (13L, 1, 2, "eA2"), (13L, 2, 3, "eA3"),
-      (14L, 1, 2, "eC2"))
-      .toDF("req_id", "pos", "part_number", "etag")
-  }
+  val mpuCompleteReqPartRows = Fixture("req_id", "pos", "part_number", "etag")(
+    (1L, 1, 1, "eA1"), (1L, 2, 2, "eA2"), (1L, 3, 3, "eA3"),
+    (2L, 1, 1, "eX1"),
+    (4L, 1, 1, "eB1"),
+    (5L, 1, 1, "eA1"), (5L, 2, 3, "eA3"), (5L, 3, 2, "eA2"),
+    (6L, 1, 1, "eA1"), (6L, 2, 2, "WRONG"), (6L, 3, 3, "eA3"),
+    (7L, 1, 1, "eA1"), (7L, 2, 4, "eA4"),
+    (8L, 1, 1, "eC1"), (8L, 2, 2, "eC2"),
+    (9L, 1, 1, "eD1"),
+    (10L, 1, 1, "eA1"),
+    (11L, 1, 2, "WRONG"), (11L, 2, 1, "eA1"),
+    (12L, 1, 1, "WRONG"), (12L, 2, 2, "eC2"),
+    (13L, 1, 2, "eA2"), (13L, 2, 3, "eA3"),
+    (14L, 1, 2, "eC2"))
+
+  def mpuCompleteReqParts(spark: SparkSession, dir: String): DataFrame =
+    mpuCompleteReqPartRows.df(spark)
 
   /** mpu_complete_dirs: the directory that collides with up-D's key —
     * the checkDirectoryAlreadyExists probe. */
-  def mpuCompleteDirs(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(("vol0", "bucket0", "dircol/d.bin")).toDF("volume", "bucket", "dir")
-  }
+  val mpuCompleteDirRows = Fixture("volume", "bucket", "dir")(
+    ("vol0", "bucket0", "dircol/d.bin"))
+
+  def mpuCompleteDirs(spark: SparkSession, dir: String): DataFrame =
+    mpuCompleteDirRows.df(spark)
 
   /** copy_part_sources: the source-object catalog the UploadPartCopy
     * ladder reads (all on vol0): one key carrying a space (the
     * url-decode probe), one sized for range boundary probes. */
-  def copyPartSources(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("srcb", "data/one.dat", 1000L, 1700000000000L, "s-e1"),
-      ("srcb", "sp ace.dat", 500L, 1690000000000L, "s-e2"),
-      ("srcb", "big.dat", 10000L, 1699999999999L, "s-e3"))
-      .toDF("bucket", "key", "size", "mtime_ms", "etag")
-  }
+  val copyPartSourceRows = Fixture(
+    "bucket", "key", "size", "mtime_ms", "etag")(
+    ("srcb", "data/one.dat", 1000L, 1700000000000L, "s-e1"),
+    ("srcb", "sp ace.dat", 500L, 1690000000000L, "s-e2"),
+    ("srcb", "big.dat", 10000L, 1699999999999L, "s-e3"))
+
+  def copyPartSources(spark: SparkSession, dir: String): DataFrame =
+    copyPartSourceRows.df(spark)
 
   /** copy_part_requests: every UploadPartCopy branch — full and ranged
     * copies, slash-less header, leading-slash and url-encoded sources,
@@ -3883,45 +3833,44 @@ object Tables {
     * rung), unknown target upload (probed AFTER source validation), and
     * target-bucket-first ordering. ifmod/ifunmod = -1 means the header
     * is absent. */
-  def copyPartRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "vol0", "bucket0", "mpu/a.bin", "up-A", 1,
-        "srcb/data/one.dat", "", -1L, -1L),
-      (2L, "vol0", "bucket0", "mpu/a.bin", "up-A", 2,
-        "srcb/data/one.dat", "bytes=0-99", -1L, -1L),
-      (3L, "vol0", "bucket0", "mpu/a.bin", "up-A", 3,
-        "nobucketnoslash", "", -1L, -1L),
-      (4L, "vol0", "bucket0", "mpu/a.bin", "up-A", 4,
-        "/srcb/data/one.dat", "", -1L, -1L),
-      (5L, "vol0", "bucket0", "mpu/a.bin", "up-A", 5,
-        "/srcb/sp%20ace.dat", "", -1L, -1L),
-      (6L, "vol0", "bucket0", "mpu/a.bin", "up-A", 6,
-        "ghostb/data/one.dat", "", -1L, -1L),
-      (7L, "vol0", "bucket0", "mpu/a.bin", "up-A", 7,
-        "srcb/ghost.dat", "", -1L, -1L),
-      (8L, "vol0", "bucket0", "mpu/a.bin", "up-A", 8,
-        "srcb/data/one.dat", "bytes=5-", -1L, -1L),
-      (9L, "vol0", "bucket0", "mpu/a.bin", "up-A", 9,
-        "srcb/data/one.dat", "bytes=50-40", -1L, -1L),
-      (10L, "vol0", "bucket0", "mpu/a.bin", "up-A", 10,
-        "srcb/data/one.dat", "bytes=0-1000", -1L, -1L),
-      (11L, "vol0", "bucket0", "mpu/a.bin", "up-A", 11,
-        "srcb/sp%20ace.dat", "", 1695000000000L, -1L),
-      (12L, "vol0", "bucket0", "mpu/a.bin", "up-A", 12,
-        "srcb/sp%20ace.dat", "", -1L, 1680000000000L),
-      (13L, "vol0", "bucket0", "mpu/a.bin", "up-A", 13,
-        "srcb/data/one.dat", "", 1800000000000L, -1L),
-      (14L, "vol0", "bucket0", "mpu/a.bin", "up-ghost", 14,
-        "srcb/data/one.dat", "", -1L, -1L),
-      (15L, "vol0", "no-such", "mpu/a.bin", "up-A", 15,
-        "noslash", "", -1L, -1L),
-      (16L, "vol0", "bucket0", "mpu/a.bin", "up-A", 16,
-        "srcb/big.dat", "bytes=9000-9999", -1L, -1L))
-      .toDF("req_id", "volume", "bucket", "key", "upload_id",
-        "part_number", "copy_header", "range_header", "ifmod_ms",
-        "ifunmod_ms")
-  }
+  val copyPartRequestRows = Fixture(
+    "req_id", "volume", "bucket", "key", "upload_id", "part_number",
+    "copy_header", "range_header", "ifmod_ms", "ifunmod_ms")(
+    (1L, "vol0", "bucket0", "mpu/a.bin", "up-A", 1,
+      "srcb/data/one.dat", "", -1L, -1L),
+    (2L, "vol0", "bucket0", "mpu/a.bin", "up-A", 2,
+      "srcb/data/one.dat", "bytes=0-99", -1L, -1L),
+    (3L, "vol0", "bucket0", "mpu/a.bin", "up-A", 3,
+      "nobucketnoslash", "", -1L, -1L),
+    (4L, "vol0", "bucket0", "mpu/a.bin", "up-A", 4,
+      "/srcb/data/one.dat", "", -1L, -1L),
+    (5L, "vol0", "bucket0", "mpu/a.bin", "up-A", 5,
+      "/srcb/sp%20ace.dat", "", -1L, -1L),
+    (6L, "vol0", "bucket0", "mpu/a.bin", "up-A", 6,
+      "ghostb/data/one.dat", "", -1L, -1L),
+    (7L, "vol0", "bucket0", "mpu/a.bin", "up-A", 7,
+      "srcb/ghost.dat", "", -1L, -1L),
+    (8L, "vol0", "bucket0", "mpu/a.bin", "up-A", 8,
+      "srcb/data/one.dat", "bytes=5-", -1L, -1L),
+    (9L, "vol0", "bucket0", "mpu/a.bin", "up-A", 9,
+      "srcb/data/one.dat", "bytes=50-40", -1L, -1L),
+    (10L, "vol0", "bucket0", "mpu/a.bin", "up-A", 10,
+      "srcb/data/one.dat", "bytes=0-1000", -1L, -1L),
+    (11L, "vol0", "bucket0", "mpu/a.bin", "up-A", 11,
+      "srcb/sp%20ace.dat", "", 1695000000000L, -1L),
+    (12L, "vol0", "bucket0", "mpu/a.bin", "up-A", 12,
+      "srcb/sp%20ace.dat", "", -1L, 1680000000000L),
+    (13L, "vol0", "bucket0", "mpu/a.bin", "up-A", 13,
+      "srcb/data/one.dat", "", 1800000000000L, -1L),
+    (14L, "vol0", "bucket0", "mpu/a.bin", "up-ghost", 14,
+      "srcb/data/one.dat", "", -1L, -1L),
+    (15L, "vol0", "no-such", "mpu/a.bin", "up-A", 15,
+      "noslash", "", -1L, -1L),
+    (16L, "vol0", "bucket0", "mpu/a.bin", "up-A", 16,
+      "srcb/big.dat", "bytes=9000-9999", -1L, -1L))
+
+  def copyPartRequests(spark: SparkSession, dir: String): DataFrame =
+    copyPartRequestRows.df(spark)
 
   /** mpu_commit_requests: a CommitPart batch over the open-part set —
     * cls picks the probe: 0 commit (replaced iff the part is already in
@@ -4059,7 +4008,6 @@ object Tables {
    * consumed_gen. Key ranges are zero-padded ids so lex order == numeric.
    */
   def sstCatalog(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     def k6(c: org.apache.spark.sql.Column) = format_string("%06d", c)
     val l0 = spark.range(1200).toDF("i").select(
       concat(lit("f"), col("i")).as("file"),
@@ -4081,16 +4029,18 @@ object Tables {
       lit(null).cast("long").as("consumed_gen"),
       k6(col("j") * 16).as("start_key"),
       k6(col("j") * 16 + 15).as("end_key"))
-    val statics = Seq(
-      ("s-same", 200L, None, "000700", "000700"),
-      ("s-old-out", 5000L, None, "000700", "000700"),
-      ("s-tip", 5000L, None, "000700", "000700"),
-      ("s-old-in", 100L, Some(5000L), "zz-out", "zz-out"),
-      ("s-mid", 4000L, Some(5000L), "000700", "000700"),
-      ("s-ancient", 50L, Some(100L), "zz-out", "zz-out"))
-      .toDF("file", "created_gen", "consumed_gen", "start_key", "end_key")
-    l0.unionByName(l1).unionByName(l2).unionByName(statics)
+    l0.unionByName(l1).unionByName(l2).unionByName(sstStaticRows.df(spark))
   }
+
+  /** The static terminal-branch files of [[sstCatalog]]. */
+  val sstStaticRows = Fixture(
+    "file", "created_gen", "consumed_gen", "start_key", "end_key")(
+    ("s-same", 200L, None, "000700", "000700"),
+    ("s-old-out", 5000L, None, "000700", "000700"),
+    ("s-tip", 5000L, None, "000700", "000700"),
+    ("s-old-in", 100L, Some(5000L), "zz-out", "zz-out"),
+    ("s-mid", 4000L, Some(5000L), "000700", "000700"),
+    ("s-ancient", 50L, Some(100L), "zz-out", "zz-out"))
 
   /** Live SST map of the snapshot taken at generation `gen`. */
   def sstLive(spark: SparkSession, dir: String, gen: Long): DataFrame =
@@ -4104,7 +4054,6 @@ object Tables {
     * to one row per (output, input) pair (CompactionDag edge direction:
     * output → input). */
   def sstEdges(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val l1 = spark.range(250).toDF("k")
       .crossJoin(spark.range(4).toDF("m"))
       .select(
@@ -4117,13 +4066,14 @@ object Tables {
         concat(lit("l2-"), col("j")).as("output_file"),
         concat(lit("l1-"), col("j") * 4 + col("m")).as("input_file"),
         (lit(3000) + col("j") * 40).as("seq"))
-    val statics = Seq(
-      ("s-old-out", "s-old-in", 5000L),
-      ("s-old-in", "s-ancient", 100L),
-      ("s-tip", "s-mid", 5000L))
-      .toDF("output_file", "input_file", "seq")
-    l1.unionByName(l2).unionByName(statics)
+    l1.unionByName(l2).unionByName(sstStaticEdgeRows.df(spark))
   }
+
+  /** The static terminal-branch edges of [[sstEdges]]. */
+  val sstStaticEdgeRows = Fixture("output_file", "input_file", "seq")(
+    ("s-old-out", "s-old-in", 5000L),
+    ("s-old-in", "s-ancient", 100L),
+    ("s-tip", "s-mid", 5000L))
 
   /**
    * sst_namespace_files: the live SST file map of a DB whose keyTable holds
@@ -4218,9 +4168,8 @@ object Tables {
   /** lc_set_requests: a PutBucketLifecycleConfiguration batch — name
     * probes, existence probes, and one request per config-/rule-level
     * branch of the validation ladder (rules live in [[lcRuleEntries]]). */
-  def lcSetRequests(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    ((1L to 20L).map(i => (i, "vol0",
+  val lcSetRequestRows = Fixture("req_id", "volume", "bucket")(
+    (1L to 20L).map(i => (i, "vol0",
       if (i == 5 || i == 10) "bucket1" else "bucket0")) ++ Seq(
       (21L, "vol0", "no-such-bucket"),
       (22L, "vol0", "BAD..Name"),
@@ -4233,17 +4182,17 @@ object Tables {
       (29L, "vol0", "bucket0"),
       (30L, "vol0", "bucket0"),
       (31L, "vol0", "bucket1"),
-      (32L, "vol0", "bucket1")))
-      .toDF("req_id", "volume", "bucket")
-  }
+      (32L, "vol0", "bucket1")): _*)
+
+  def lcSetRequests(spark: SparkSession, dir: String): DataFrame =
+    lcSetRequestRows.df(spark)
 
   /** lc_rule_entries: the ordered rule list per lifecycle-set request.
     * Tuple = (req_id, rule_pos, rule_id, prefix, filter_prefix,
     * filter_tag_key, filter_tag_value, filter_has_and, n_actions,
     * n_expirations, exp_days, exp_date_ms). Req 19 carries 1001 generated
     * rules (the LC_MAX_RULES=1000 cap); req 20 has none (NO_RULES). */
-  def lcRuleEntries(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  val lcRuleEntryRows = {
     val S = Option.apply[String] _
     val L = Option.apply[Long] _
     val n = Option.empty[String]
@@ -4292,10 +4241,13 @@ object Tables {
       (32L, 1, "r32", n, S("warehouse/B"), n, n, false, 1, 1, L(30L), nl)) ++
       (1 to 1001).map(i => (19L, i, "r" + i, S("warehouse/"), n, n, n,
         false, 1, 1, L(30L), nl))
-    rows.toDF("req_id", "rule_pos", "rule_id", "prefix", "filter_prefix",
+    Fixture("req_id", "rule_pos", "rule_id", "prefix", "filter_prefix",
       "filter_tag_key", "filter_tag_value", "filter_has_and", "n_actions",
-      "n_expirations", "exp_days", "exp_date_ms")
+      "n_expirations", "exp_days", "exp_date_ms")(rows: _*)
   }
+
+  def lcRuleEntries(spark: SparkSession, dir: String): DataFrame =
+    lcRuleEntryRows.df(spark)
 
   /**
    * media_assets: multimodal rows synthesized from documents — an opaque
@@ -4317,4 +4269,209 @@ object Tables {
       (lit(16) + col("doc_id") % 48).cast("int").as("height"),
       col("source"))
   }
+
+  // ---- literal inputs of operators and declared queries ----
+
+  /** decommission_requests: the DatanodeAdminMonitor request batches of
+    * [[graft.operators.ClusterHealth.decommissionAdmin]]. */
+  val decommissionRequestRows = Fixture("batch_id", "op", "force", "host")(
+    (1L, "DECOMMISSION", false, "host1.rack1"),
+    (1L, "DECOMMISSION", false, "host2.rack2"),
+    (1L, "DECOMMISSION", false, "host5.rack0"),
+    (1L, "DECOMMISSION", false, "ghost.example"),
+    (1L, "DECOMMISSION", false, "host3.rack3"),
+    (2L, "DECOMMISSION", false, "host0.rack0"),
+    (2L, "DECOMMISSION", false, "host1.rack1"),
+    (2L, "DECOMMISSION", false, "host4.rack4"),
+    (2L, "DECOMMISSION", false, "host7.rack2"),
+    (2L, "DECOMMISSION", false, "host9.rack4"),
+    (2L, "DECOMMISSION", false, "host12.rack2"),
+    (2L, "DECOMMISSION", false, "host15.rack0"),
+    (3L, "MAINTENANCE", false, "host4.rack4"),
+    (3L, "MAINTENANCE", false, "host11.rack1"),
+    (3L, "MAINTENANCE", false, "host6.rack1"),
+    (4L, "MAINTENANCE", false, "host0.rack0"),
+    (4L, "MAINTENANCE", false, "host1.rack1"),
+    (4L, "MAINTENANCE", false, "host4.rack4"),
+    (4L, "MAINTENANCE", false, "host7.rack2"),
+    (4L, "MAINTENANCE", false, "host9.rack4"),
+    (4L, "MAINTENANCE", false, "host12.rack2"),
+    (4L, "MAINTENANCE", false, "host15.rack0"),
+    (5L, "MAINTENANCE", true, "host16.rack1"),
+    (5L, "MAINTENANCE", true, "host2.rack2"),
+    (5L, "MAINTENANCE", true, "host18.rack3"),
+    (6L, "RECOMMISSION", false, "host2.rack2"),
+    (6L, "RECOMMISSION", false, "host0.rack0"),
+    (6L, "RECOMMISSION", false, "nosuch.host"))
+
+  /** export_job_tracker: the Recon export-job tracker snapshot —
+    * insertion order, id, state, status, downloads so far. job3 is the
+    * only QUEUED job → queue size 1, position 1. */
+  val exportJobTrackedRows = Fixture(
+    "job_idx", "job_id", "state", "status", "download_count")(
+    (1L, "job1", "MISSING", "COMPLETED", 1L),
+    (2L, "job2", "UNDER_REPLICATED", "RUNNING", 0L),
+    (3L, "job3", "OVER_REPLICATED", "QUEUED", 0L),
+    (4L, "job4", "MIS_REPLICATED", "FAILED", 0L),
+    (5L, "job5", "EMPTY_MISSING", "COMPLETED", 2L))
+
+  /** export_job_requests: the submit/status/download/cancel batch of
+    * [[graft.operators.ReconJobs.exportJobLadder]]. */
+  val exportJobRequestRows = Fixture("req_id", "op", "arg")(
+    (1L, "SUBMIT", "ALL_REPLICAS_BAD"),
+    (2L, "SUBMIT", "MISSING"),
+    (3L, "SUBMIT", "UNDER_REPLICATED"),
+    (4L, "SUBMIT", "MIS_REPLICATED"),
+    (5L, "SUBMIT", "NEGATIVE_SIZE"),
+    (6L, "SUBMIT", "ALL_REPLICAS_BAD"),
+    (7L, "SUBMIT", "NEGATIVE_SIZE"),
+    (8L, "SUBMIT", "BAD_STATE"),
+    (9L, "SUBMIT", "REPLICA_MISMATCH"),
+    (10L, "STATUS", "job3"),
+    (11L, "STATUS", "job2"),
+    (12L, "STATUS", "job4"),
+    (13L, "STATUS", "job9"),
+    (14L, "DOWNLOAD", "job1"),
+    (15L, "DOWNLOAD", "job5"),
+    (16L, "DOWNLOAD", "job2"),
+    (17L, "DOWNLOAD", "job8"),
+    (18L, "CANCEL", "job3"),
+    (19L, "CANCEL", "job2"),
+    (20L, "CANCEL", "job1"),
+    (21L, "CANCEL", "job4"),
+    (22L, "CANCEL", "job7"))
+
+  /** The container states an export job may be submitted for. */
+  val exportJobValidStateRows = Fixture("vstate")(
+    "MISSING", "EMPTY_MISSING", "UNDER_REPLICATED", "OVER_REPLICATED",
+    "MIS_REPLICATED", "ALL_REPLICAS_BAD", "NEGATIVE_SIZE",
+    "REPLICA_MISMATCH")
+
+  /** balancer_requests: the StartContainerBalancer request batch of
+    * [[graft.operators.ClusterHealth.balancerAdmin]] — one request per
+    * validation rung, then the leader/safemode/running gates and the size
+    * cross-checks. */
+  val balancerRequestRows = Fixture(
+    "req_id", "threshold", "move_gb", "dn_pct", "iterations", "entering_gb",
+    "leaving_gb", "interval_min", "move_to", "repl_to", "leader", "safemode",
+    "running")(
+    (1L, Some(10.0), None, None, None, None, None, None, None, None,
+      true, false, false),
+    (2L, Some(100.0), None, None, None, None, None, None, None, None,
+      true, false, false),
+    (3L, Some(-0.1), None, None, None, None, None, None, None, None,
+      true, false, false),
+    (4L, None, Some(0L), None, None, None, None, None, None, None,
+      true, false, false),
+    (5L, None, None, Some(101), None, None, None, None, None, None,
+      true, false, false),
+    (6L, None, None, None, Some(0), None, None, None, None, None,
+      true, false, false),
+    (7L, None, None, None, Some(-1), None, None, None, None, None,
+      true, false, false),
+    (8L, None, None, None, None, Some(0L), None, None, None, None,
+      true, false, false),
+    (9L, None, None, None, None, None, Some(-3L), None, None, None,
+      true, false, false),
+    (10L, None, None, None, None, None, None, Some(0), None, None,
+      true, false, false),
+    (11L, None, None, None, None, None, None, None, Some(-1), None,
+      true, false, false),
+    (12L, None, None, None, None, None, None, None, None, Some(0),
+      true, false, false),
+    (13L, None, None, None, None, None, None, None, None, None,
+      false, false, false),
+    (14L, None, None, None, None, None, None, None, None, None,
+      true, true, false),
+    (15L, None, None, None, None, None, None, None, None, None,
+      true, false, true),
+    (16L, None, None, None, None, Some(5L), None, None, None, None,
+      true, false, false),
+    (17L, None, None, None, None, None, Some(4L), None, None, None,
+      true, false, false),
+    (18L, None, Some(20L), None, None, Some(30L), None, None, None,
+      None, true, false, false),
+    (19L, None, Some(20L), None, None, Some(10L), Some(25L), None,
+      None, None, true, false, false),
+    (20L, Some(15.0), Some(600L), Some(50), Some(3), Some(40L),
+      Some(40L), Some(60), Some(30), Some(30), true, false, false))
+
+  /** recon_tasks: the Recon task registry (name, lag rank) that
+    * [[graft.operators.ClusterHealth.reconTaskStatus]] reports on. */
+  val reconTaskRows = Fixture("task_name", "task_idx")(
+    ("FileSizeCountTask", 0), ("OmTableInsightTask", 1),
+    ("NSSummaryTask", 2), ("ContainerKeyMapperTask", 3),
+    ("ContainerHealthTask", 4), ("PipelineSyncTask", 5),
+    ("OmDeltaRequest", 6))
+
+  /** snapshot_diff fixture of [[graft.operators.Joins.snapshotDiffJobs]]:
+    * the known snapshots, a job table covering every status, and one
+    * DIFF and one CANCEL request per pair (unknown snapshots and
+    * job-less known pairs included). */
+  val snapshotDiffSnapRows = Fixture("snap")("s1", "s2", "s3", "s4", "s5")
+
+  val snapshotDiffJobRows = Fixture("from_snap", "to_snap", "status", "pct")(
+    ("s1", "s2", "IN_PROGRESS", 37),
+    ("s1", "s3", "DONE", 100),
+    ("s2", "s3", "FAILED", 0),
+    ("s1", "s4", "CANCELLED", 0),
+    ("s2", "s4", "REJECTED", 0),
+    ("s3", "s4", "QUEUED", 0))
+
+  val snapshotDiffRequestRows = Fixture(
+    "req_id", "op", "from_snap", "to_snap")(
+    (1L, "DIFF", "s1", "s2"), (2L, "DIFF", "s1", "s3"),
+    (3L, "DIFF", "s2", "s3"), (4L, "DIFF", "s1", "s4"),
+    (5L, "DIFF", "s2", "s4"), (6L, "DIFF", "s3", "s4"),
+    (7L, "DIFF", "s4", "s5"), (8L, "DIFF", "s1", "s9"),
+    (11L, "CANCEL", "s1", "s2"), (12L, "CANCEL", "s1", "s3"),
+    (13L, "CANCEL", "s2", "s3"), (14L, "CANCEL", "s1", "s4"),
+    (15L, "CANCEL", "s2", "s4"), (16L, "CANCEL", "s3", "s4"),
+    (17L, "CANCEL", "s4", "s5"), (18L, "CANCEL", "s9", "s2"))
+
+  /** om_list_requests: the listKeys batch
+    * [[graft.operators.Listing.omListMetrics]] replays for the
+    * OMPerformanceMetrics gauges. */
+  val omListRequestRows = Fixture(
+    "req_id", "volume", "bucket", "prefix", "max_keys")(
+    (1L, "vol0", "bucket0", "warehouse/A/", 5L),
+    (2L, "vol0", "bucket0", "warehouse/", 100000L),
+    (3L, "vol1", "bucket3", "warehouse/N/", 50L),
+    (4L, "vol2", "bucket5", "warehouse/R", 10L),
+    (5L, "vol0", "bucket0", "nonexistent/", 10L))
+
+  /** snapdiff_source_jobs: one job per delta-source gate of
+    * [[graft.operators.CompactionDag.snapdiffSourceSelect]] plus the
+    * differ-failure fallback. */
+  val snapdiffSourceJobRows = Fixture(
+    "job_id", "req_force_full", "req_disable_native", "cfg_force_full",
+    "cfg_disable_native", "native_loaded", "dag_ok")(
+    (1L, false, false, false, false, true, true),
+    (2L, true, false, false, false, true, true),
+    (3L, false, false, true, false, true, true),
+    (4L, false, false, false, false, false, true),
+    (5L, false, true, false, false, true, true),
+    (6L, false, false, false, false, true, false),
+    (7L, false, false, false, true, true, false),
+    (8L, true, false, false, false, false, true))
+
+  /** acl_probe_principals: the principals q_acl_probe checks. auditor2
+    * is a NON-owner principal — only the name+type+rights match through
+    * the acls array can grant it (an owner shortcut would miss it). */
+  val aclProbePrincipalRows = Fixture("principal")(
+    "clerk1", "clerk3", "auditor2")
+
+  /** pending_deletion_requests: the Recon pending-deletion endpoint calls
+    * [[graft.operators.ReconJobs.pendingDeletionDispatch]] answers
+    * (limit -1 = absent). */
+  val pendingDeletionRequestRows = Fixture("req_id", "component", "limit")(
+    (1L, "", -1L), // null component
+    (2L, "xyz", -1L),
+    (3L, " DN ", 2L),
+    (4L, "dn", 0L),
+    (5L, "dn", -1L), // null limit → whole list
+    (6L, "scm", -1L),
+    (7L, "om", -1L),
+    (8L, "OM ", 5L), // limit ignored off the dn route
+    (9L, " ", -1L)) // whitespace-only: non-empty RAW, invalid after trim
 }

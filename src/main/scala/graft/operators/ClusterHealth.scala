@@ -3348,37 +3348,7 @@ object ClusterHealth {
                         replicas: DataFrame,
                         ecShards: DataFrame): DataFrame = {
     val spark = datanodes.sparkSession
-    import spark.implicits._
-    val reqs = Seq(
-      (1L, "DECOMMISSION", false, "host1.rack1"),
-      (1L, "DECOMMISSION", false, "host2.rack2"),
-      (1L, "DECOMMISSION", false, "host5.rack0"),
-      (1L, "DECOMMISSION", false, "ghost.example"),
-      (1L, "DECOMMISSION", false, "host3.rack3"),
-      (2L, "DECOMMISSION", false, "host0.rack0"),
-      (2L, "DECOMMISSION", false, "host1.rack1"),
-      (2L, "DECOMMISSION", false, "host4.rack4"),
-      (2L, "DECOMMISSION", false, "host7.rack2"),
-      (2L, "DECOMMISSION", false, "host9.rack4"),
-      (2L, "DECOMMISSION", false, "host12.rack2"),
-      (2L, "DECOMMISSION", false, "host15.rack0"),
-      (3L, "MAINTENANCE", false, "host4.rack4"),
-      (3L, "MAINTENANCE", false, "host11.rack1"),
-      (3L, "MAINTENANCE", false, "host6.rack1"),
-      (4L, "MAINTENANCE", false, "host0.rack0"),
-      (4L, "MAINTENANCE", false, "host1.rack1"),
-      (4L, "MAINTENANCE", false, "host4.rack4"),
-      (4L, "MAINTENANCE", false, "host7.rack2"),
-      (4L, "MAINTENANCE", false, "host9.rack4"),
-      (4L, "MAINTENANCE", false, "host12.rack2"),
-      (4L, "MAINTENANCE", false, "host15.rack0"),
-      (5L, "MAINTENANCE", true, "host16.rack1"),
-      (5L, "MAINTENANCE", true, "host2.rack2"),
-      (5L, "MAINTENANCE", true, "host18.rack3"),
-      (6L, "RECOMMISSION", false, "host2.rack2"),
-      (6L, "RECOMMISSION", false, "host0.rack0"),
-      (6L, "RECOMMISSION", false, "nosuch.host"))
-      .toDF("batch_id", "op", "force", "host")
+    val reqs = graft.core.Tables.decommissionRequestRows.df(spark)
     val dn = datanodes.select(col("hostname").as("host"),
       col("uuid").as("datanode"), col("op_state"), col("state"))
     val resolved = reqs.join(broadcast(dn), Seq("host"), "left")
@@ -3464,53 +3434,7 @@ object ClusterHealth {
    */
   def balancerAdmin(datanodes: DataFrame): DataFrame = {
     val spark = datanodes.sparkSession
-    import spark.implicits._
-    val reqs = Seq(
-      // req, thr, moveGb, dnPct, iter, entGb, leaveGb, intv, mvTo, rpTo,
-      // leader, safemode, running
-      (1L, Some(10.0), None, None, None, None, None, None, None, None,
-        true, false, false),
-      (2L, Some(100.0), None, None, None, None, None, None, None, None,
-        true, false, false),
-      (3L, Some(-0.1), None, None, None, None, None, None, None, None,
-        true, false, false),
-      (4L, None, Some(0L), None, None, None, None, None, None, None,
-        true, false, false),
-      (5L, None, None, Some(101), None, None, None, None, None, None,
-        true, false, false),
-      (6L, None, None, None, Some(0), None, None, None, None, None,
-        true, false, false),
-      (7L, None, None, None, Some(-1), None, None, None, None, None,
-        true, false, false),
-      (8L, None, None, None, None, Some(0L), None, None, None, None,
-        true, false, false),
-      (9L, None, None, None, None, None, Some(-3L), None, None, None,
-        true, false, false),
-      (10L, None, None, None, None, None, None, Some(0), None, None,
-        true, false, false),
-      (11L, None, None, None, None, None, None, None, Some(-1), None,
-        true, false, false),
-      (12L, None, None, None, None, None, None, None, None, Some(0),
-        true, false, false),
-      (13L, None, None, None, None, None, None, None, None, None,
-        false, false, false),
-      (14L, None, None, None, None, None, None, None, None, None,
-        true, true, false),
-      (15L, None, None, None, None, None, None, None, None, None,
-        true, false, true),
-      (16L, None, None, None, None, Some(5L), None, None, None, None,
-        true, false, false),
-      (17L, None, None, None, None, None, Some(4L), None, None, None,
-        true, false, false),
-      (18L, None, Some(20L), None, None, Some(30L), None, None, None,
-        None, true, false, false),
-      (19L, None, Some(20L), None, None, Some(10L), Some(25L), None,
-        None, None, true, false, false),
-      (20L, Some(15.0), Some(600L), Some(50), Some(3), Some(40L),
-        Some(40L), Some(60), Some(30), Some(30), true, false, false))
-      .toDF("req_id", "threshold", "move_gb", "dn_pct", "iterations",
-        "entering_gb", "leaving_gb", "interval_min", "move_to",
-        "repl_to", "leader", "safemode", "running")
+    val reqs = graft.core.Tables.balancerRequestRows.df(spark)
     val containerGb = 5L
     val eff = reqs
       .withColumn("e_move", coalesce(col("move_gb"), lit(500L)))
@@ -3940,12 +3864,7 @@ object ClusterHealth {
    */
   def reconTaskStatus(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
-    import spark.implicits._
-    val tasks = Seq(
-      ("FileSizeCountTask", 0), ("OmTableInsightTask", 1),
-      ("NSSummaryTask", 2), ("ContainerKeyMapperTask", 3),
-      ("ContainerHealthTask", 4), ("PipelineSyncTask", 5),
-      ("OmDeltaRequest", 6)).toDF("task_name", "task_idx")
+    val tasks = graft.core.Tables.reconTaskRows.df(spark)
     val head = events.agg(max("seq").as("head_seq"))
     tasks.crossJoin(broadcast(head))
       .withColumn("last_updated_seq_number",

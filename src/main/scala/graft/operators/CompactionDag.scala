@@ -205,21 +205,8 @@ object CompactionDag {
                            edges: DataFrame, destGen: Long,
                            lo: String, hi: String): DataFrame = {
     val spark = srcLive.sparkSession
-    import spark.implicits._
-    // (job_id, req_force_full, req_disable_native, cfg_force_full,
-    //  cfg_disable_native, native_loaded, dag_ok) — every gate of
-    // :1020-1021 plus the differ-failure fallback path, each exercised
-    val jobs = Seq(
-      (1L, false, false, false, false, true, true),
-      (2L, true, false, false, false, true, true),
-      (3L, false, false, true, false, true, true),
-      (4L, false, false, false, false, false, true),
-      (5L, false, true, false, false, true, true),
-      (6L, false, false, false, false, true, false),
-      (7L, false, false, false, true, true, false),
-      (8L, true, false, false, false, false, true)
-    ).toDF("job_id", "req_force_full", "req_disable_native",
-      "cfg_force_full", "cfg_disable_native", "native_loaded", "dag_ok")
+    // every gate of :1020-1021 plus the differ-failure fallback path
+    val jobs = graft.core.Tables.snapdiffSourceJobRows.df(spark)
     val dagN = sstDiff(srcLive, destLive, edges, destGen, lo, hi)
       .filter(col("cls") === "DIFFERENT")
       .agg(count(lit(1)).as("dag_n"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Tables
 
 /**
  * Join / diff / set-operation family (apache/ozone Recon + snapshot diff):
@@ -296,30 +297,13 @@ object Joins {
    *
    * Fixture: a literal job table covering every status plus unknown
    * snapshots and job-less known pairs, probed by one DIFF and one
-   * CANCEL request each.
+   * CANCEL request each (the rows live in [[graft.core.Tables]]).
    */
   def snapshotDiffJobs(spark: org.apache.spark.sql.SparkSession)
       : DataFrame = {
-    import spark.implicits._
-    val snaps = Seq("s1", "s2", "s3", "s4", "s5").toDF("snap")
-    val jobs = Seq(
-      ("s1", "s2", "IN_PROGRESS", 37),
-      ("s1", "s3", "DONE", 100),
-      ("s2", "s3", "FAILED", 0),
-      ("s1", "s4", "CANCELLED", 0),
-      ("s2", "s4", "REJECTED", 0),
-      ("s3", "s4", "QUEUED", 0))
-      .toDF("from_snap", "to_snap", "status", "pct")
-    val reqs = Seq(
-      (1L, "DIFF", "s1", "s2"), (2L, "DIFF", "s1", "s3"),
-      (3L, "DIFF", "s2", "s3"), (4L, "DIFF", "s1", "s4"),
-      (5L, "DIFF", "s2", "s4"), (6L, "DIFF", "s3", "s4"),
-      (7L, "DIFF", "s4", "s5"), (8L, "DIFF", "s1", "s9"),
-      (11L, "CANCEL", "s1", "s2"), (12L, "CANCEL", "s1", "s3"),
-      (13L, "CANCEL", "s2", "s3"), (14L, "CANCEL", "s1", "s4"),
-      (15L, "CANCEL", "s2", "s4"), (16L, "CANCEL", "s3", "s4"),
-      (17L, "CANCEL", "s4", "s5"), (18L, "CANCEL", "s9", "s2"))
-      .toDF("req_id", "op", "from_snap", "to_snap")
+    val snaps = Tables.snapshotDiffSnapRows.df(spark)
+    val jobs = Tables.snapshotDiffJobRows.df(spark)
+    val reqs = Tables.snapshotDiffRequestRows.df(spark)
     reqs
       .join(broadcast(snaps.select(col("snap").as("from_snap"),
         lit(1).as("from_ok"))), Seq("from_snap"), "left")

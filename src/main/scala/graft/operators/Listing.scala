@@ -413,14 +413,7 @@ object Listing {
    */
   def omListMetrics(objects: DataFrame): DataFrame = {
     val spark = objects.sparkSession
-    import spark.implicits._
-    val reqs = Seq(
-      (1L, "vol0", "bucket0", "warehouse/A/", 5L),
-      (2L, "vol0", "bucket0", "warehouse/", 100000L),
-      (3L, "vol1", "bucket3", "warehouse/N/", 50L),
-      (4L, "vol2", "bucket5", "warehouse/R", 10L),
-      (5L, "vol0", "bucket0", "nonexistent/", 10L)
-    ).toDF("req_id", "volume", "bucket", "prefix", "max_keys")
+    val reqs = graft.core.Tables.omListRequestRows.df(spark)
     val matches = objects.select("volume", "bucket", "key")
       .join(broadcast(reqs), Seq("volume", "bucket"))
       .filter(col("key").startsWith(col("prefix")))

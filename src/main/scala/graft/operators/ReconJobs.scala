@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.core.Tables
 
 /**
  * Recon unhealthy-containers CSV export job manager — the async export
@@ -48,56 +49,11 @@ import org.apache.spark.sql.expressions.Window
  * rows).
  */
 object ReconJobs {
-  private val ValidStates = Seq("MISSING", "EMPTY_MISSING",
-    "UNDER_REPLICATED", "OVER_REPLICATED", "MIS_REPLICATED",
-    "ALL_REPLICAS_BAD", "NEGATIVE_SIZE", "REPLICA_MISMATCH")
-
-  /** Tracker snapshot: insertion order, id, state, status, downloads so
-    * far. job3 is the only QUEUED job → queue size 1, position 1. */
-  private def trackedJobs(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "job1", "MISSING", "COMPLETED", 1L),
-      (2L, "job2", "UNDER_REPLICATED", "RUNNING", 0L),
-      (3L, "job3", "OVER_REPLICATED", "QUEUED", 0L),
-      (4L, "job4", "MIS_REPLICATED", "FAILED", 0L),
-      (5L, "job5", "EMPTY_MISSING", "COMPLETED", 2L))
-      .toDF("job_idx", "job_id", "state", "status", "download_count")
-  }
-
-  private def requests(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1L, "SUBMIT", "ALL_REPLICAS_BAD"),
-      (2L, "SUBMIT", "MISSING"),
-      (3L, "SUBMIT", "UNDER_REPLICATED"),
-      (4L, "SUBMIT", "MIS_REPLICATED"),
-      (5L, "SUBMIT", "NEGATIVE_SIZE"),
-      (6L, "SUBMIT", "ALL_REPLICAS_BAD"),
-      (7L, "SUBMIT", "NEGATIVE_SIZE"),
-      (8L, "SUBMIT", "BAD_STATE"),
-      (9L, "SUBMIT", "REPLICA_MISMATCH"),
-      (10L, "STATUS", "job3"),
-      (11L, "STATUS", "job2"),
-      (12L, "STATUS", "job4"),
-      (13L, "STATUS", "job9"),
-      (14L, "DOWNLOAD", "job1"),
-      (15L, "DOWNLOAD", "job5"),
-      (16L, "DOWNLOAD", "job2"),
-      (17L, "DOWNLOAD", "job8"),
-      (18L, "CANCEL", "job3"),
-      (19L, "CANCEL", "job2"),
-      (20L, "CANCEL", "job1"),
-      (21L, "CANCEL", "job4"),
-      (22L, "CANCEL", "job7"))
-      .toDF("req_id", "op", "arg")
-  }
-
   def exportJobLadder(spark: SparkSession,
                       maxQueueSize: Int = 3,
                       maxDownloads: Int = 2): DataFrame =
-    exportJobLadderOver(trackedJobs(spark), requests(spark),
-      maxQueueSize, maxDownloads)
+    exportJobLadderOver(Tables.exportJobTrackedRows.df(spark),
+      Tables.exportJobRequestRows.df(spark), maxQueueSize, maxDownloads)
 
   /** Ladder body over caller-supplied tracker snapshot + request batch —
     * the property census drives this with randomized fixtures. */
@@ -105,8 +61,7 @@ object ReconJobs {
                           maxQueueSize: Int,
                           maxDownloads: Int): DataFrame = {
     val spark = tracked.sparkSession
-    import spark.implicits._
-    val valid = ValidStates.toDF("vstate")
+    val valid = Tables.exportJobValidStateRows.df(spark)
 
     // snapshot facts: QUEUED-only queue size + per-QUEUED-job position
     val q0 = tracked.filter(col("status") === "QUEUED").count()
@@ -302,18 +257,7 @@ object ReconJobs {
     * class scaladoc for the route semantics. */
   def pendingDeletionDispatch(rollups: DataFrame): DataFrame = {
     val spark = rollups.sparkSession
-    import spark.implicits._
-    val reqs = Seq(
-      (1L, "", -1L), // null component
-      (2L, "xyz", -1L),
-      (3L, " DN ", 2L),
-      (4L, "dn", 0L),
-      (5L, "dn", -1L), // null limit → whole list
-      (6L, "scm", -1L),
-      (7L, "om", -1L),
-      (8L, "OM ", 5L), // limit ignored off the dn route
-      (9L, " ", -1L)) // whitespace-only: non-empty RAW, invalid after trim
-      .toDF("req_id", "component", "limit")
+    val reqs = Tables.pendingDeletionRequestRows.df(spark)
       .withColumn("comp", lower(trim(col("component"))))
     val dnPending = rollups.filter(col("kind") === "dn")
       .select(col("entity").as("dn"), col("value").as("pending_blocks"))

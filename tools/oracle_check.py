@@ -151,5 +151,16 @@ for name in names:
 
 with open(f"{OUT}/oracle_check_results.json", "w") as f:
     json.dump(results, f, indent=1, sort_keys=True)
+
+# Informational only (never part of the verdict or the exit code): which
+# checked queries' HASHES.json entries differ from the committed sf0.01
+# snapshot, so a byte-identity claim needs no hand diff.
+snapshot = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..",
+                        "HASHES_local.json")
+if os.path.exists(snapshot):
+    ref = json.load(open(snapshot))
+    differ = [n for n in names if scala_hashes.get(n) != ref.get(n)]
+    print(f"\nHASHES_local.json: {len(differ)} differ / {len(names)} compared"
+          + (": " + ", ".join(differ) if differ else ""))
 print(f"\n{ok} ok, {fail} failed / {len(names)} checked")
 sys.exit(1 if fail else 0)
