@@ -493,7 +493,7 @@ object Bench {
       // every caller, asserted not assumed (review r15): a larger
       // SPARK_GRAFT_SF_DIR whose 1× log exceeded 10M events would
       // otherwise silently measure no-op merges
-      val maxSeq1 = spark.read.parquet(cdcLog)
+      val maxSeq1 = graft.core.TempDirs.read(spark, cdcLog)
         .agg(org.apache.spark.sql.functions.coalesce(
           org.apache.spark.sql.functions.max("seq"),
           org.apache.spark.sql.functions.lit(0L))).head().getLong(0)

@@ -21,7 +21,7 @@ object SparkEntry {
       "vol1", "bucket3", "warehouse/N/", "", 100)
 
   // MinHash bands feed BOTH the LSH-pair query and the Jaccard verifier —
-  // materialize them once per source as parquet and re-read per session
+  // materialize them once per source as parquet, resolved once per session
   // (the at-scale pattern: candidate signatures are a materialized
   // artifact, not recomputed per consumer). Every `*Cached` artifact here
   // goes through the one artifact memo, keyed by kind + source dir.

@@ -105,7 +105,7 @@ object Tables {
    * the O(page) "seek" the reference gets from RocksDB.
    */
   def objectsSorted(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(TempDirs.artifact("wh", dir)(
+    TempDirs.read(spark, TempDirs.artifact("wh", dir)(
       writeKeySorted(objectsView(spark, dir), _)))
 
   private def writeKeySorted(namespace: DataFrame, out: String): Unit =
@@ -802,7 +802,7 @@ object Tables {
 
   // The FSO tables are PERSISTED entities in the reference (directoryTable/
   // fileTable); derive them once per (JVM, source) through the artifact
-  // memo ([[TempDirs.parquet]]) and RE-READ per session, like
+  // memo ([[TempDirs.parquet]]), resolved once per session, like
   // objectsSorted.
   def directoriesFso(spark: SparkSession, dir: String): DataFrame =
     TempDirs.parquet(spark, "dirs", dir)(directoriesFsoBuild(objects(spark, dir)))
@@ -855,7 +855,7 @@ object Tables {
     * .nsSummarySorted]]'s shuffle-free fold requires. Written once per
     * (JVM, source dir); ingest cost, not query cost. */
   def objectsMixedSorted(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(TempDirs.artifact("whmx", dir)(
+    TempDirs.read(spark, TempDirs.artifact("whmx", dir)(
       writeKeySorted(objectsMixed(spark, dir), _)))
 
   def directoriesFsoDeep(spark: SparkSession, dir: String): DataFrame =

@@ -1,6 +1,10 @@
 package graft.core
 
+import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.sources.BaseRelation
 
 /**
  * Temp-dir factory and artifact memo for the per-JVM derived warehouses
@@ -12,9 +16,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * The memo is the one owner of every materialized artifact, the engine's
  * analog of the OM metadata store owning its derived tables: an artifact
  * is built ONCE per JVM per (kind, source) into a fresh `graft_<kind>_`
- * dir, and only its PATH is kept, so every session — including one
- * created after an earlier session was stopped — re-reads it from disk
- * and nothing stays pinned in the block cache.
+ * dir, and only its PATH is kept. Every session — including one created
+ * after an earlier session was stopped — resolves its relation once per
+ * session ([[read]]); data is still scanned from disk, and nothing is
+ * pinned in the block cache.
  */
 object TempDirs {
   private val created = new java.util.concurrent.ConcurrentLinkedQueue[String]
@@ -33,33 +38,59 @@ object TempDirs {
     p
   }
 
-  // One lock per key: first touches of the SAME key wait for one build,
-  // different keys build concurrently, and a build may nest others (the
+  // One lock per key: first touches of the SAME key wait for one `make`,
+  // different keys run concurrently, and a `make` may nest others (the
   // replayed views build their CDC log; index artifacts read memoized
-  // tables). A failed build leaves the path unset, so the next caller —
-  // with its own, live session — retries.
-  private final class Slot { var path: String = _ }
-  private val slots =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Slot]
+  // tables). `make` runs outside `computeIfAbsent`, and a failed one
+  // leaves the value unset, so the next caller — with its own, live
+  // session — retries.
+  private final class Slot[V <: AnyRef] { var value: V = _ }
 
-  /** The artifact dir for (kind, source): on first touch in this JVM,
-    * `build` fills a fresh `graft_<kind>_` dir; later calls return it. */
-  def artifact(kind: String, source: String)(build: String => Unit): String = {
-    val slot = slots.computeIfAbsent((kind, source), _ => new Slot)
+  private def once[K, V <: AnyRef](slots: ConcurrentHashMap[K, Slot[V]],
+                                   key: K)(make: => V): V = {
+    val slot = slots.computeIfAbsent(key, _ => new Slot[V])
     slot.synchronized {
-      if (slot.path == null) {
-        val out = create(s"graft_${kind}_")
-        build(out)
-        slot.path = out
-      }
-      slot.path
+      if (slot.value == null) slot.value = make
+      slot.value
     }
   }
 
+  private val artifacts = new ConcurrentHashMap[(String, String), Slot[String]]
+
+  /** The artifact dir for (kind, source): on first touch in this JVM,
+    * `build` fills a fresh `graft_<kind>_` dir; later calls return it. */
+  def artifact(kind: String, source: String)(build: String => Unit): String =
+    once(artifacts, (kind, source)) {
+      val out = create(s"graft_${kind}_")
+      build(out)
+      out
+    }
+
+  private val relations =
+    new ConcurrentHashMap[(SparkSession, String), Slot[BaseRelation]]
+
+  /** A parquet artifact under `path` as a table of `spark`. The first call
+    * per (session, path) lists the files and infers the schema (a Spark
+    * job); every call returns a fresh relation node over that resolved
+    * relation, with fresh exprIds, so self-joins and plans are as with
+    * `spark.read.parquet`. Only for dirs [[artifact]] owns: they never
+    * change once built. A stopped session's entries are dropped. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    relations.keySet.removeIf(_._1.sparkContext.isStopped)
+    val rel = once(relations, (spark, path)) {
+      spark.read.parquet(path).queryExecution.analyzed
+        .collectFirst { case l: LogicalRelation => l.relation }.get
+    }
+    spark.baseRelationToDataFrame(rel)
+  }
+
+  /** Sessions holding resolved relations (for the memo's lifetime spec). */
+  private[graft] def sessionsHeld: Set[SparkSession] =
+    relations.keySet.asScala.map(_._1).toSet
+
   /** [[artifact]] for a single parquet table: `build` is written once per
-    * (kind, source) and re-read in the caller's session. */
+    * (kind, source) and [[read]] in the caller's session. */
   def parquet(spark: SparkSession, kind: String, source: String)
              (build: => DataFrame): DataFrame =
-    spark.read.parquet(
-      artifact(kind, source)(build.write.mode("overwrite").parquet(_)))
+    read(spark, artifact(kind, source)(build.write.mode("overwrite").parquet(_)))
 }

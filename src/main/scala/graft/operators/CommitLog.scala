@@ -777,8 +777,8 @@ object CommitLog {
    * Materialize the commit log (seq-range-sorted parquet, so a delta slice
    * is a row-group-pruned scan) and each live snapshot's folded checkpoint
    * state ONCE per (JVM, source dir) — the engine's dual of the reference's
-   * RocksDB checkpoints. Stores only paths; every session re-reads from
-   * disk. Returns the warehouse dir.
+   * RocksDB checkpoints. Stores only paths; every session resolves each
+   * table once ([[graft.core.TempDirs.read]]). Returns the warehouse dir.
    */
   def snapshotWarehouse(spark: SparkSession, objects: DataFrame,
                         dir: String): String =
@@ -840,7 +840,7 @@ object CommitLog {
                                 dir: String): DataFrame = {
     val wh = snapshotWarehouse(spark, objects, dir)
     snapshotChain.map { case (name, seq) =>
-      spark.read.parquet(s"$wh/state_$name").agg(
+      graft.core.TempDirs.read(spark, s"$wh/state_$name").agg(
           count(lit(1)).as("num_keys"),
           sum("data_size").cast("long").as("total_bytes"))
         .select(lit(name).as("name"), lit(seq).as("seq"),
@@ -856,8 +856,8 @@ object CommitLog {
     val wh = snapshotWarehouse(spark, objects, dir)
     val chain = snapshotChain.toMap
     snapshotDiffDelta(
-      spark.read.parquet(s"$wh/log"),
-      spark.read.parquet(s"$wh/state_$from"),
+      graft.core.TempDirs.read(spark, s"$wh/log"),
+      graft.core.TempDirs.read(spark, s"$wh/state_$from"),
       chain(from), chain(to))
   }
 
@@ -880,7 +880,7 @@ object CommitLog {
     val prefix = rest.drop(name.length).stripPrefix("/")
     require(snapshotChain.exists(_._1 == name), s"no such snapshot: $name")
     val wh = snapshotWarehouse(spark, objects, dir)
-    spark.read.parquet(s"$wh/state_$name")
+    graft.core.TempDirs.read(spark, s"$wh/state_$name")
       .filter(col("volume") === volume && col("bucket") === bucket &&
         col("key").startsWith(prefix))
       .select("key", "object_id", "data_size")
@@ -919,7 +919,7 @@ object CommitLog {
       else if (dirPath.endsWith("/")) dirPath else dirPath + "/"
     val p = prefix.length
     val wh = snapshotWarehouse(spark, objects, dir)
-    spark.read.parquet(s"$wh/state_$name")
+    graft.core.TempDirs.read(spark, s"$wh/state_$name")
       .filter(col("volume") === volume && col("bucket") === bucket &&
         col("key").startsWith(prefix))
       .withColumn("rest", expr(s"substring(key, ${p + 1})"))

@@ -60,8 +60,10 @@ object Links {
     * collected link catalog (each hop is a catalog get in the reference;
     * the catalog is a sliver of the bucket table, control-plane-sized —
     * for catalog-scale resolution use [[resolveBucketLinks]]), plus ONE
-    * point existence probe on the terminal bucket. */
-  def resolveOne(links: DataFrame, buckets: DataFrame, volume: String,
+    * point existence probe on the terminal bucket. `buckets` is taken by
+    * name: only a link chain that terminates builds the probe, so a
+    * non-link request touches only the link catalog. */
+  def resolveOne(links: DataFrame, buckets: => DataFrame, volume: String,
                  bucket: String,
                  maxHops: Int = 8): Either[String, (String, String)] = {
     val chain = links
@@ -85,7 +87,7 @@ object Links {
     * the terminal bucket — reference semantics where a link listing equals
     * its source's listing and a broken link yields no entries
     * (OmMetadataManagerImpl.java:1089-1093). */
-  def listKeysVia(objects: DataFrame, links: DataFrame, buckets: DataFrame,
+  def listKeysVia(objects: DataFrame, links: DataFrame, buckets: => DataFrame,
                   volume: String, bucket: String, prefix: String,
                   startKey: String, maxKeys: Int): DataFrame =
     resolveOne(links, buckets, volume, bucket) match {

@@ -118,8 +118,8 @@ object Reclaim {
   def snapshotReclaim(spark: SparkSession, objects: DataFrame,
                       dir: String): DataFrame = {
     val wh = CommitLog.snapshotWarehouse(spark, objects, dir)
-    val s1 = spark.read.parquet(s"$wh/state_s1")
-    val s2 = spark.read.parquet(s"$wh/state_s2")
+    val s1 = graft.core.TempDirs.read(spark, s"$wh/state_s1")
+    val s2 = graft.core.TempDirs.read(spark, s"$wh/state_s2")
     val snapDeleted = CommitLog.synthesizeLog(objects)
       .filter(col("op") === "DELETE")
       .select("volume", "bucket", "key", "object_id", "data_size")
@@ -244,8 +244,8 @@ object Reclaim {
         .select(lit(owner).as("owner"), col("volume"), col("bucket"),
           col("object_id"), col("orig_key"),
           col("__present").isNull.as("reclaimable"))
-    decide("s2", spark.read.parquet(s"$wh/state_s1"))
-      .unionByName(decide("AOS", spark.read.parquet(s"$wh/state_s2")))
+    decide("s2", graft.core.TempDirs.read(spark, s"$wh/state_s1"))
+      .unionByName(decide("AOS", graft.core.TempDirs.read(spark, s"$wh/state_s2")))
       .orderBy("owner", "volume", "bucket", "orig_key", "object_id")
   }
 

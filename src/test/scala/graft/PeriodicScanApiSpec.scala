@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.streaming.PeriodicScan
 
@@ -79,6 +80,23 @@ class PeriodicScanApiSpec extends SparkSpecBase {
     assert(Api.listStatus(spark, sf, "vol3", "link-broken", "warehouse").count() === 0)
     assert(Api.resolveBucketLinks(spark, sf)
       .filter(col("status") =!= "OK").count() === 3)
+  }
+
+  test("API facade: after one warm call, key RPCs on a non-link bucket " +
+    "start no Spark job while constructing") {
+    val k = Api.listKeys(spark, sf, "vol0", "bucket0", "warehouse/", "", 5)
+      .select("key").as[String].head()
+    val rpcs = Seq[(String, String) => DataFrame](
+      Api.lookupKey(spark, sf, _, _, k),
+      Api.getKeyInfo(spark, sf, _, _, k),
+      Api.listKeys(spark, sf, _, _, "warehouse/", "", 5))
+    for (rpc <- rpcs) {
+      val warm = rows(rpc("vol0", "bucket0"))
+      val (df, jobs) = jobsStarted(spark)(_ => rpc("vol0", "bucket0"))
+      assert(jobs === 0)
+      assert(rows(df) === warm && warm.nonEmpty)
+      assert(rows(rpc("vol1", "link-a")) === warm)
+    }
   }
 
   test("API facade: auth catalog lookups") {

@@ -4,11 +4,15 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.functions.col
 import graft.core.{Tables, TempDirs}
 import graft.streaming.ChangeStream
 
 /** The artifact memo: every derived warehouse is built once per JVM per
-  * (kind, source) and re-read, by path, in whichever session asks. */
+  * (kind, source), and its relation is resolved once per session that
+  * reads it. */
 class TempDirsSpec extends SparkSpecBase {
 
   // a fresh source per test: the memo is JVM-wide, so tests never share
@@ -24,7 +28,7 @@ class TempDirsSpec extends SparkSpecBase {
     "stopped and recreated session") {
     val src = source("session")
     val builds = new AtomicInteger
-    def read(s: org.apache.spark.sql.SparkSession) =
+    def read(s: SparkSession) =
       TempDirs.parquet(s, "spec", src) {
         builds.incrementAndGet(); s.range(5).toDF("id")
       }
@@ -96,5 +100,78 @@ class TempDirsSpec extends SparkSpecBase {
     }
     assert(readText(TempDirs.artifact("retry", src)(writeText(_, "ok"))) ===
       "ok")
+  }
+
+  // ---- TempDirs.read: one resolved relation per (session, path) ----------
+
+  private def ids(s: SparkSession, tag: String, n: Int): String =
+    TempDirs.artifact("read", source(tag))(
+      s.range(n).toDF("id").write.mode("overwrite").parquet(_))
+
+  private def relationOf(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation }.get
+
+  test("a second read of an artifact in one session starts no Spark job") {
+    val s = SparkSpecBase.spark
+    val path = ids(s, "jobs", 7)
+    val (first, firstJobs) = jobsStarted(s)(_ => TempDirs.read(s, path))
+    assert(firstJobs >= 1) // the listing + schema inference the memo saves
+    val (second, secondJobs) = jobsStarted(s)(_ => TempDirs.read(s, path))
+    assert(secondJobs === 0)
+    assert(rows(second.orderBy("id")) === rows(first.orderBy("id")))
+    assert(rows(second.orderBy("id")) === (0L until 7L).map(Seq(_)))
+  }
+
+  test("two reads of one artifact self-join: each has fresh exprIds") {
+    val s = SparkSpecBase.spark
+    val path = ids(s, "selfjoin", 6)
+    val a = TempDirs.read(s, path)
+    val b = TempDirs.read(s, path).filter(col("id") % 2 === 0)
+    val joined = a.join(b, a("id") === b("id")).select(a("id"), b("id"))
+    assert(rows(joined.orderBy(a("id"))) ===
+      Seq(0L, 2L, 4L).map(i => Seq(i, i)))
+  }
+
+  test("a stopped session's relations are dropped; a recreated session " +
+    "resolves afresh") {
+    val path = ids(SparkSpecBase.spark, "lifetime", 4)
+    val first = SparkSpecBase.spark
+    val before = TempDirs.read(first, path)
+    assert(TempDirs.sessionsHeld.contains(first))
+    first.stop()
+    val second = SparkSpecBase.spark
+    assert(second ne first)
+    val after = TempDirs.read(second, path)
+    assert(!TempDirs.sessionsHeld.contains(first))
+    assert(TempDirs.sessionsHeld.contains(second))
+    assert(relationOf(after) ne relationOf(before))
+    assert(rows(after.orderBy("id")) === (0L until 4L).map(Seq(_)))
+  }
+
+  test("four threads that first-touch one path resolve it once") {
+    val s = SparkSpecBase.spark
+    // one resolution's job count, on a same-shape artifact
+    val solo = ids(s, "solo", 8)
+    val (_, once) = jobsStarted(s)(_ => TempDirs.read(s, solo))
+    val path = ids(s, "readrace", 8)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    try {
+      val (dfs, jobs) = jobsStarted(s) { group =>
+        val reads = (1 to 4).map(_ => Future {
+          s.sparkContext.setJobGroup(group, group)
+          start.await()
+          try TempDirs.read(s, path) finally s.sparkContext.clearJobGroup()
+        })
+        start.countDown()
+        Await.result(Future.sequence(reads), 60.seconds)
+      }
+      assert(jobs === once)
+      val rels = dfs.map(relationOf)
+      assert(rels.forall(_ eq rels.head))
+      dfs.foreach(df => assert(df.count() === 8))
+    } finally pool.shutdown()
   }
 }
