@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Tables => T}
 import graft.operators._
@@ -90,15 +90,16 @@ object Api {
     }
   }
 
+  /** FSO listStatus over the stored directory path index — no per-request
+    * path resolution. A broken link's empty listing starts no Spark job. */
   def listStatusFso(s: SparkSession, d: String, volume: String, bucket: String,
                     dir: String): DataFrame =
     resolved(s, d, volume, bucket) match {
       case Some((v, b)) =>
         Hierarchy.listStatusFso(T.directoriesFso(s, d), T.filesFso(s, d),
-          v, b, dir)
-      case None =>
-        Hierarchy.listStatusFso(T.directoriesFso(s, d), T.filesFso(s, d),
-          volume, bucket, dir).limit(0)
+          v, b, dir, resolvedDirs = Some(T.directoryPathsFso(s, d)))
+      case None => s.createDataFrame(
+        java.util.List.of[Row](), Hierarchy.ListStatusSchema)
     }
 
   def getAcl(s: SparkSession, d: String, volume: String, bucket: String,

@@ -333,6 +333,7 @@ object Bench {
     graft.core.Tables.objectsSorted(spark, sfDir).count()
     graft.core.Tables.objectsMixedSorted(spark, sfDir).count()
     graft.core.Tables.directoriesFso(spark, sfDir).count()
+    graft.core.Tables.directoryPathsFso(spark, sfDir).count()
     graft.core.Tables.dirPaths(spark, sfDir).count()
     graft.core.Tables.filesFso(spark, sfDir).count()
     graft.core.Tables.directoriesFsoDeep(spark, sfDir).count()

@@ -1038,13 +1038,16 @@ object SparkEntry {
         .orderBy("run_id", "global_idx")
     }),
     // ---- FSO parent-pointer hierarchy (SURVEY §2.3 row FSO-resolve) ----
-    // namespace depth is a config (keys here are 4 segments ⇒ 3 dir levels)
+    // namespace depth is a config (keys here are 4 segments ⇒ 3 dir levels).
+    // q_fso_resolve and q_fso_list_status_deep run the resolve ladder (its
+    // oracle coverage); the listings read the stored path index.
     "q_fso_resolve" -> ((s, d) =>
       Hierarchy.resolveFiles(T.directoriesFso(s, d), T.filesFso(s, d),
         maxDepth = 4)),
     "q_fso_list_status" -> ((s, d) =>
       Hierarchy.listStatusFso(T.directoriesFso(s, d), T.filesFso(s, d),
-        "vol2", "bucket5", "warehouse/R")),
+        "vol2", "bucket5", "warehouse/R",
+        resolvedDirs = Some(T.directoryPathsFso(s, d)))),
     // 5-segment namespace: each child dir's rollup must traverse TWO dir
     // levels to reach its files — direct-children-only counting returns 0.
     "q_fso_list_status_deep" -> ((s, d) =>
@@ -1063,7 +1066,8 @@ object SparkEntry {
         col("parent_id") === pid).count()
       Hierarchy.listStatusFsoWalk(dirs, T.filesFso(s, d),
         "vol2", "bucket5", "warehouse/R",
-        pageSize = math.max(50, (n / 5 + 1).toInt))
+        pageSize = math.max(50, (n / 5 + 1).toInt),
+        resolvedDirs = Some(T.directoryPathsFso(s, d)))
     }),
     // ---- incremental CDC-maintained views (SURVEY §2.9) ----
     // the CDC source is the MIXED-depth namespace so the streamed NSSummary

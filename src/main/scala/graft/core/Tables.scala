@@ -866,13 +866,35 @@ object Tables {
     TempDirs.parquet(spark, "filesDeep", dir)(
       filesFsoBuild(objectsDeep(spark, dir)))
 
+  /** The path index of [[directoriesFso]]: (volume, bucket, dir_id, path),
+    * each directory's full path — what the resolve ladder
+    * ([[graft.operators.Hierarchy.resolveDirs]]) rebuilds from parent
+    * pointers, derived here from the same rows as the directory table
+    * ([[fsoDirRows]]), never by the ladder. Sorted by (volume, bucket,
+    * path), so parquet row-group statistics let a bucket slice and a `path`
+    * prefix skip the other row groups. Built once per (JVM, source) like
+    * the table it indexes; FSO listings read it instead of resolving paths
+    * per request. */
+  def directoryPathsFso(spark: SparkSession, dir: String): DataFrame =
+    TempDirs.parquet(spark, "dirindex", dir)(
+      fsoDirRows(objects(spark, dir))
+        .select("volume", "bucket", "dir_id", "path")
+        .orderBy("volume", "bucket", "path"))
+
   /** directories(volume, bucket, dir_id, parent_id, name): every ancestor
     * prefix of every key, one row per distinct dir. Ids are md5-derived
-    * from the full path (Hierarchy.pathId); a root child's parent_id = 0.
-    * The prefix depth is DERIVED from the namespace's own max key depth at
-    * build time (one tiny agg, paid once per memoized build) — keys deeper
-    * than any hardcoded bound can never silently lose their parent dirs. */
-  private def directoriesFsoBuild(o: DataFrame): DataFrame = {
+    * from the full path (Hierarchy.pathId); a root child's parent_id = 0. */
+  private def directoriesFsoBuild(o: DataFrame): DataFrame =
+    fsoDirRows(o).select(col("volume"), col("bucket"), col("dir_id"),
+      col("parent_id"), lastSeg(col("path")).as("name"))
+
+  /** Every directory of `o` with its full path: (volume, bucket, path,
+    * dir_id, parent_id) — the one derivation behind the directory table
+    * and its path index. The prefix depth is DERIVED from the namespace's
+    * own max key depth at build time (one tiny agg, paid once per memoized
+    * build) — keys deeper than any hardcoded bound can never silently lose
+    * their parent dirs. */
+  private def fsoDirRows(o: DataFrame): DataFrame = {
     // coalesce guards the empty-input case (max over zero rows is null);
     // the depth value is then irrelevant — zero key rows explode to zero
     // directory rows for any bound
@@ -900,8 +922,7 @@ object Tables {
         when(col("parent_path") === "", lit(0L))
           .otherwise(graft.operators.Hierarchy.pathId(
             col("volume"), col("bucket"), col("parent_path"))))
-      .select(col("volume"), col("bucket"), col("dir_id"), col("parent_id"),
-        lastSeg(col("path")).as("name"))
+      .select("volume", "bucket", "path", "dir_id", "parent_id")
   }
 
   /** files keyed by parent dir id (fileTable rows: parentId + fileName). */

@@ -53,7 +53,11 @@ object Hierarchy {
    * Construction is EAGER (ADVICE r15): the completeness check is an
    * action, and the ladder is pinned before it so the check and every
    * caller share ONE evaluation — building this frame launches Spark
-   * jobs at construction time, so don't build it speculatively.
+   * jobs at construction time, so don't build it speculatively. Each
+   * extension round releases the previous round's pin once its own is
+   * filled, so a call leaves ONE pin, whatever its round count. Listings
+   * over the stored FSO tables read their path index
+   * ([[graft.core.Tables.directoryPathsFso]]) instead.
    */
   def resolveDirs(dirs: DataFrame, maxDepth: Int = 8): DataFrame = {
     val parents = dirs.select(
@@ -74,6 +78,7 @@ object Hierarchy {
     var hops = 0
     var batch = math.max(1, maxDepth - 1)
     var unresolved = true
+    var pinned: Option[DataFrame] = None
     while (unresolved && hops < MaxResolveDepth) {
       for (_ <- 1 to batch) hop()
       hops += batch
@@ -84,11 +89,14 @@ object Hierarchy {
       // The pinned blocks are dir-table-sized (orders of magnitude below
       // the file table). They are NOT freed by the ContextCleaner:
       // CacheManager holds a persisted Dataset strongly until someone
-      // unpersists it, and nothing here does, so every resolve pass keeps
-      // its pins for the session's life.
+      // unpersists it. The returned frame's pin stays for the session's
+      // life; a superseded round's pin is released here once the next
+      // round, which read it, is filled.
       cur = cur.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       cur.count() // full fill: isEmpty alone short-circuits the cache
+      pinned.foreach(_.unpersist(blocking = false))
+      pinned = Some(cur)
       unresolved = !cur.filter(col("parent_id") =!= 0).isEmpty
       batch = 8
     }
@@ -119,6 +127,11 @@ object Hierarchy {
       .select("volume", "bucket", "parent_id", "name", "object_id", "data_size")
       .orderBy("volume", "bucket", "name", "object_id", "data_size")
 
+  /** Row shape of an FSO listStatus reply. */
+  val ListStatusSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType.fromDDL(
+      "child STRING, is_dir BOOLEAN, num_files BIGINT, total_size BIGINT")
+
   /**
    * FSO listStatus: immediate children of `parentPath`, where each child
    * directory's rollup covers its WHOLE subtree (recursive, matching the
@@ -129,6 +142,10 @@ object Hierarchy {
    * as [[resolveDirs]] — never driver recursion): every file joins to its
    * parent dir's path once, and the child is the first path segment under
    * `parentPath` — one co-partitioned join + one aggregation.
+   *
+   * `resolvedDirs` (volume, bucket, dir_id, path) replaces the ladder with
+   * stored paths, e.g. [[graft.core.Tables.directoryPathsFso]]; it may
+   * span other buckets — only (volume, bucket)'s rows are read.
    */
   def listStatusFso(dirs: DataFrame, files: DataFrame,
                     volume: String, bucket: String, parentPath: String,
@@ -137,9 +154,10 @@ object Hierarchy {
                     numEntries: Option[Int] = None,
                     resolvedDirs: Option[DataFrame] = None): DataFrame = {
     val pid = if (parentPath.isEmpty) 0L else pathIdOf(volume, bucket, parentPath)
-    val rd = resolvedDirs.getOrElse(resolveDirs(
-      dirs.filter(col("volume") === volume && col("bucket") === bucket),
-      maxDepth))
+    def inBucket(df: DataFrame) =
+      df.filter(col("volume") === volume && col("bucket") === bucket)
+    val rd = resolvedDirs.map(inBucket)
+      .getOrElse(resolveDirs(inBucket(dirs), maxDepth))
     val prefix = if (parentPath.isEmpty) "" else parentPath + "/"
     // child segment directly under parentPath, for any path inside the subtree
     def childOf(path: Column): Column =
@@ -152,8 +170,7 @@ object Hierarchy {
       .select(col("dir_id"), childOf(col("path")).as("child"))
       .filter(col("child") > startChild)
     // every file in the subtree, attributed to its child-of-parentPath
-    val subFiles = files
-      .filter(col("volume") === volume && col("bucket") === bucket)
+    val subFiles = inBucket(files)
       .join(subDirs.select(col("dir_id").as("parent_id"), col("child")),
         Seq("parent_id"))
       .groupBy("child")
@@ -164,9 +181,8 @@ object Hierarchy {
         coalesce(col("num_files"), lit(0L)).as("num_files"),
         coalesce(col("total_size"), lit(0L)).as("total_size"))
       .withColumn("is_dir", lit(true))
-    val childFiles = files
-      .filter(col("volume") === volume && col("bucket") === bucket &&
-        col("parent_id") === pid && col("name") > startChild)
+    val childFiles = inBucket(files)
+      .filter(col("parent_id") === pid && col("name") > startChild)
       .groupBy(col("name").as("child"))
       .agg(count(lit(1)).as("num_files"), sum("data_size").as("total_size"))
       .withColumn("is_dir", lit(false))
@@ -177,14 +193,6 @@ object Hierarchy {
     numEntries.map(n => out.limit(n + 1)).getOrElse(out)
   }
 
-  /**
-   * Paged FSO listStatus walk (the client pagination loop): independent
-   * pages chained by `child > lastChild` keyset tokens; concatenation must
-   * equal the unpaged listing. The resolved-dir paths are computed ONCE and
-   * shared across pages (they are an index artifact, the dual of the
-   * reference's persisted directoryTable the iterator seeks into) — each
-   * page then costs one join + agg over the REMAINING subtree only.
-   */
   /**
    * Missing-parent materialization for a CreateFile/CreateDirectory batch
    * — the reference's OMDirectoryCreateRequest walks a request's path from
@@ -388,10 +396,18 @@ object Hierarchy {
       .orderBy("req_id")
   }
 
+  /**
+   * Paged FSO listStatus walk (the client pagination loop): independent
+   * pages chained by `child > lastChild` keyset tokens; concatenation must
+   * equal the unpaged listing. `resolvedDirs` is passed to
+   * [[listStatusFso]] (the stored path index, the dual of the reference's
+   * persisted directoryTable the iterator seeks into).
+   */
   def listStatusFsoWalk(dirs: DataFrame, files: DataFrame,
                         volume: String, bucket: String, parentPath: String,
                         pageSize: Int, maxDepth: Int = 8,
-                        maxPages: Int = 100000): DataFrame = {
+                        maxPages: Int = 100000,
+                        resolvedDirs: Option[DataFrame] = None): DataFrame = {
     val spark = dirs.sparkSession
     // The walk reads the WHOLE listing page by page, so the subtree rollup
     // is materialized once (child-level rows = output-sized, tiny next to
@@ -401,7 +417,7 @@ object Hierarchy {
     // shape for single-page API calls, where computing the full listing
     // would waste the whole point of resuming.
     val full = listStatusFso(dirs, files, volume, bucket, parentPath,
-      maxDepth).localCheckpoint()
+      maxDepth, resolvedDirs = resolvedDirs).localCheckpoint()
     val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
     var start = ""
     var pages = 0
@@ -415,9 +431,7 @@ object Hierarchy {
       pages += 1
     }
     spark.createDataFrame(
-        spark.sparkContext.parallelize(buf.toSeq, 1),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "child STRING, is_dir BOOLEAN, num_files BIGINT, total_size BIGINT"))
+        spark.sparkContext.parallelize(buf.toSeq, 1), ListStatusSchema)
       .orderBy("child")
   }
 }

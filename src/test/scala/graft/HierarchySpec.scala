@@ -40,8 +40,11 @@ class HierarchySpec extends SparkSpecBase {
       val parent = if (i == 1) 0L else id((1 to i - 1).map(n => s"d$n").mkString("/"))
       ("v", "b", id(p), parent, s"d$i")
     }.toDF("volume", "bucket", "dir_id", "parent_id", "name")
-    val r = Hierarchy.resolveDirs(chain, maxDepth = 2)
-      .select("dir_id", "path").as[(Long, String)].collect().toMap
+    val before = cachedEntries(spark)
+    val resolved = Hierarchy.resolveDirs(chain, maxDepth = 2)
+    // every round pins its ladder; each superseded round's pin is released
+    assert(cachedEntries(spark) === before + 1)
+    val r = resolved.select("dir_id", "path").as[(Long, String)].collect().toMap
     val want = (1 to 6).map { i =>
       val p = (1 to i).map(n => s"d$n").mkString("/"); id(p) -> p
     }.toMap
@@ -80,6 +83,27 @@ class HierarchySpec extends SparkSpecBase {
     val page = rows(Hierarchy.listStatusFso(dirs, files, "v", "b", "",
       startChild = "a", numEntries = Some(1)))
     assert(page === Seq(Seq("c", true, 1L, 30L), Seq("f4", false, 1L, 40L)))
+  }
+
+  test("listStatusFso over a stored path index spanning two buckets equals " +
+    "the ladder: no phantom child from the other bucket") {
+    // bucket b2 shares b's prefix `a` and adds a/x — a dir b does not have
+    def id2(p: String) = Hierarchy.pathIdOf("v", "b2", p)
+    val both = dirs.unionByName(Seq(
+      ("v", "b2", id2("a"), 0L, "a"),
+      ("v", "b2", id2("a/x"), id2("a"), "x"),
+      ("v", "b2", id2("z"), 0L, "z"))
+      .toDF("volume", "bucket", "dir_id", "parent_id", "name"))
+    val index = Seq(("v", "b", id("a"), "a"), ("v", "b", id("a/b"), "a/b"),
+      ("v", "b", id("c"), "c"), ("v", "b2", id2("a"), "a"),
+      ("v", "b2", id2("a/x"), "a/x"), ("v", "b2", id2("z"), "z"))
+      .toDF("volume", "bucket", "dir_id", "path")
+    for (parent <- Seq("", "a")) {
+      val ladder = rows(Hierarchy.listStatusFso(both, files, "v", "b", parent))
+      val indexed = rows(Hierarchy.listStatusFso(both, files, "v", "b", parent,
+        resolvedDirs = Some(index)))
+      assert(indexed === ladder && ladder.nonEmpty, s"parent=$parent")
+    }
   }
 
   test("FSO and OBS listStatus agree on a 3-level tree (deep fixture)") {

@@ -86,16 +86,50 @@ class PeriodicScanApiSpec extends SparkSpecBase {
     "start no Spark job while constructing") {
     val k = Api.listKeys(spark, sf, "vol0", "bucket0", "warehouse/", "", 5)
       .select("key").as[String].head()
-    val rpcs = Seq[(String, String) => DataFrame](
-      Api.lookupKey(spark, sf, _, _, k),
-      Api.getKeyInfo(spark, sf, _, _, k),
-      Api.listKeys(spark, sf, _, _, "warehouse/", "", 5))
-    for (rpc <- rpcs) {
+    val rpcs = Seq[(String, (String, String) => DataFrame)](
+      "lookupKey" -> (Api.lookupKey(spark, sf, _, _, k)),
+      "getKeyInfo" -> (Api.getKeyInfo(spark, sf, _, _, k)),
+      "getAcl" -> (Api.getAcl(spark, sf, _, _, k)),
+      "listKeys" -> (Api.listKeys(spark, sf, _, _, "warehouse/", "", 5)),
+      "listObjectsV2" -> (Api.listObjectsV2(spark, sf, _, _, "warehouse/", "", 10)),
+      "listStatus" -> (Api.listStatus(spark, sf, _, _, "warehouse")),
+      "listStatusFso" -> (Api.listStatusFso(spark, sf, _, _, "warehouse")))
+    for ((kind, rpc) <- rpcs) {
       val warm = rows(rpc("vol0", "bucket0"))
+      val pins = cachedEntries(spark)
       val (df, jobs) = jobsStarted(spark)(_ => rpc("vol0", "bucket0"))
-      assert(jobs === 0)
-      assert(rows(df) === warm && warm.nonEmpty)
-      assert(rows(rpc("vol1", "link-a")) === warm)
+      assert(jobs === 0, kind)
+      assert(rows(df) === warm && warm.nonEmpty, kind)
+      assert(rows(rpc("vol1", "link-a")) === warm, kind)
+      if (kind == "listStatusFso") assert(cachedEntries(spark) === pins)
+    }
+  }
+
+  test("API facade: the FSO listing's stored path index holds the paths " +
+    "the resolve ladder rebuilds") {
+    val index = graft.core.Tables.directoryPathsFso(spark, sf)
+      .select("volume", "bucket", "dir_id", "path")
+    val ladder = graft.operators.Hierarchy.resolveDirs(
+      graft.core.Tables.directoriesFso(spark, sf))
+    assert(index.count() > 0)
+    assert(index.exceptAll(ladder).isEmpty && ladder.exceptAll(index).isEmpty)
+  }
+
+  test("API facade: FSO listStatus through a broken link lists nothing " +
+    "and starts no job of its own") {
+    val links = graft.core.Tables.bucketLinks(spark, sf)
+    val buckets = graft.core.Tables.buckets(spark, sf)
+    for (link <- Seq("link-broken", "link-cycle1")) {
+      val vol = if (link == "link-broken") "vol3" else "vol0"
+      // resolving the link may probe the bucket table (a dangling link's
+      // target); the listing itself must add nothing to that
+      val (status, resolveJobs) = jobsStarted(spark)(_ =>
+        graft.operators.Links.resolveOne(links, buckets, vol, link))
+      assert(status.isLeft, link)
+      val (out, jobs) = jobsStarted(spark)(_ =>
+        rows(Api.listStatusFso(spark, sf, vol, link, "warehouse")))
+      assert(out.isEmpty, link)
+      assert(jobs === resolveJobs, link)
     }
   }
 

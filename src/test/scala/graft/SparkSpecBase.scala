@@ -28,6 +28,13 @@ abstract class SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
 
+  /** Persisted Datasets the session's CacheManager holds. Its counter is
+    * `private[sql]` to Scala callers, public in bytecode. */
+  def cachedEntries(s: SparkSession): Int = {
+    val cm = s.sharedState.cacheManager
+    cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
+  }
+
   /** Runs `body` in a fresh job group and counts the Spark jobs started in
     * it. The calling thread has joined the group; `body` gets its id so
     * other threads can join with `setJobGroup`. A fence job after `body`
