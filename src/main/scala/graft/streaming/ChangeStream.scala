@@ -17,66 +17,65 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
  *     bounded micro-batches (`maxFilesPerTrigger` + Trigger.AvailableNow) —
  *     the dual of Recon's event-buffer drain;
  *   - each micro-batch folds to ±delta rows (PUT = +1/+size, DELETE =
- *     -1/-size) and MERGEs into a parquet state table partitioned by
- *     (volume, bucket): only partitions PRESENT IN THE DELTA are read,
- *     re-aggregated, and rewritten; untouched partitions keep their
- *     existing files (a manifest maps each partition to its current leaf
- *     dir, and an atomic pointer flip publishes the new manifest). Deltas
- *     are commutative integers, so replay order within a batch is
- *     irrelevant and cross-batch out-of-order (a DELETE draining before
- *     its PUT) nets out correctly;
+ *     -1/-size), one row per view key, and APPENDS them to the view as one
+ *     run: a view's state is one base dir plus at most [[MaxRuns]] runs, an
+ *     LSM shape (the reference keeps NSSummary in RocksDB, an LSM store).
+ *     Readers fold base ∪ runs by summing per key. Deltas are commutative
+ *     integers, so replay order within a batch is irrelevant and
+ *     cross-batch out-of-order (a DELETE draining before its PUT) nets out
+ *     correctly;
  *   - exactly-once: Structured Streaming checkpoints the source offsets;
- *     the state swap additionally records the last applied batchId and
- *     skips re-application on recovery (idempotent MERGE) — the analog of
- *     the reference's last-applied-seq# guard;
- *   - reprocess: [[reprocessFileSize]] rebuilds the view from a full
- *     snapshot in one batch aggregate (FileSizeCountTaskHelper.java:80-160)
- *     and the stream resumes from its checkpoint.
+ *     the manifest name additionally records the last applied batchId and
+ *     a recovery replay of an applied batch is skipped — the analog of the
+ *     reference's last-applied-seq# guard;
+ *   - reprocess: [[bootstrapViews]] rebuilds every view from the whole log
+ *     in one batch aggregate per view (FileSizeCountTaskHelper.java:80-160)
+ *     and maintenance resumes with deltas.
  *
- * Scale: state merge cost is O(|touched partitions| + |delta|) per batch —
- * the partitioned dual of the reference's touched-keys-only flush
- * (FileSizeCountTaskHelper.java:257-299 upsert batch). A batch touching a
- * few thousand keys in 3 buckets rewrites 3 partitions, never the
- * billion-row global state; the log itself is never re-read.
+ * Scale: a micro-batch costs O(|delta|) writes — one small file per view,
+ * whatever namespaces it touches (the reference's flush writes only the
+ * touched keys too, FileSizeCountTaskHelper.java:257-299). Every
+ * ([[MaxRuns]]+1)-th publish instead folds base ∪ runs ∪ delta into a new
+ * base, O(state); amortised that is O(state)/[[MaxRuns]] per batch. A read
+ * folds at most [[MaxRuns]] runs into the base; the log itself is never
+ * re-read.
  */
 object ChangeStream {
 
   // ---- state table I/O ----------------------------------------------------
   //
-  // Layout per state dir:
-  //   v<batchId>/__pk=<hex(volumebucket)>/part-*.parquet   data, partitioned
-  //   manifest-v<batchId>                                        pk -> leaf dir, one per line
-  //   current                                                    path of the live manifest
-  // A micro-batch writes ONLY the partitions present in its delta into a new
-  // v<batchId> dir, then publishes a manifest that maps touched partitions to
-  // the new leaves and keeps every untouched partition pointing at its old
-  // files. The `current` pointer flip is the single atomic commit; its target
-  // name encodes the applied batchId, so there is no crash window in which
-  // the state is flipped but the watermark isn't. Superseded version dirs
-  // (referenced by neither the live nor the previous manifest) are deleted
-  // after the flip — disk stays O(|state| + |last delta|), not O(batches).
-  //
-  // The partition key is hex-encoded so leaf dir names are filesystem-safe
-  // without Hive escaping; data files keep the real volume/bucket columns.
+  // Layout per state dir; every stored name is relative to the state dir,
+  // so a copied state dir reads the same:
+  //   v<batchId>/part-*.parquet   a base (whole folded state) or a ±delta run
+  //   manifest-v<batchId>         the base's dir name, then one run dir a line
+  //   current                     name of the live manifest
+  // A micro-batch writes its folded delta into a new v<batchId> dir and
+  // publishes a manifest listing the old base and runs plus the new run;
+  // no existing file is rewritten. The `current` pointer flip is the single
+  // atomic commit; its target name encodes the applied batchId, so there is
+  // no crash window in which the state is flipped but the watermark isn't.
+  // Dirs listed by neither the live nor the previous manifest are deleted
+  // after the flip — disk stays O(|state| + MaxRuns·|delta|), not
+  // O(batches).
 
-  /** Hex partition key for (volume, bucket) — each component hex-encoded
-    * SEPARATELY and joined with a non-hex '-', so no (volume, bucket) pair
-    * can ever collide into another's physical partition (and the leaf name
-    * needs no unprintable separator bytes). Spark `hex` emits uppercase,
-    * matching [[pkOf]]. */
-  private def pkCol: org.apache.spark.sql.Column =
-    concat_ws("-", hex(encode(col("volume"), "UTF-8")),
-      hex(encode(col("bucket"), "UTF-8")))
+  /** Runs a view holds before the next publish folds base ∪ runs ∪ delta
+    * into a new base. 8 keeps a view read at ≤ 9 paths, under Spark's
+    * 32-path parallel-listing threshold
+    * (spark.sql.sources.parallelPartitionDiscovery.threshold), so no read
+    * starts a listing job, and bounds the read fold to 8 delta-sized runs
+    * over the base. */
+  val MaxRuns = 8
 
-  /** Driver-side twin of [[pkCol]]. */
-  private[graft] def pkOf(volume: String, bucket: String): String = {
-    def h(x: String) = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      .map(b => f"${b & 0xff}%02X").mkString
-    h(volume) + "-" + h(bucket)
+  /** A view's live state: the base dir and its ±delta runs, oldest first,
+    * each named relative to the state dir (empty before the first
+    * publish). */
+  private[graft] final case class Manifest(base: Option[String],
+                                           runs: Seq[String]) {
+    def paths: Seq[String] = base.toSeq ++ runs
   }
 
   /** Last applied batchId, parsed from the `current` pointer's target name
-    * (`.../manifest-v<N>` or legacy `.../v<N>`). */
+    * (`manifest-v<N>` or a legacy `.../v<N>` dir). */
   private def lastBatch(dir: String): Long = {
     val cur = Paths.get(dir, "current")
     if (!Files.exists(cur)) -1L
@@ -84,23 +83,21 @@ object ChangeStream {
       .stripPrefix("manifest-").stripPrefix("v").toLong
   }
 
-  /** The live manifest: partition key -> leaf dir path (empty before the
-    * first publish). A pre-manifest pointer targeting a version DIRECTORY
-    * (legacy single-dir layout) reads as one whole-state partition. */
-  private[graft] def readManifest(dir: String): Map[String, String] = {
+  /** The live manifest. A pointer that targets a version DIRECTORY (the
+    * legacy single-dir layout) reads as a manifest whose base is that dir. */
+  private[graft] def readManifest(dir: String): Manifest = {
     val cur = Paths.get(dir, "current")
-    if (!Files.exists(cur)) Map.empty
-    else {
-      val mf = Paths.get(Files.readString(cur).trim)
-      if (!Files.exists(mf)) Map.empty
-      else if (Files.isDirectory(mf)) Map("LEGACY" -> mf.toString)
-      else {
+    val mf =
+      if (Files.exists(cur)) Some(Paths.get(dir).resolve(Files.readString(cur).trim))
+      else None
+    mf.filter(Files.exists(_)) match {
+      case None => Manifest(None, Nil)
+      case Some(p) if Files.isDirectory(p) =>
+        Manifest(Some(p.getFileName.toString), Nil)
+      case Some(p) =>
         import scala.jdk.CollectionConverters._
-        Files.readAllLines(mf).asScala.iterator
-          .filter(_.nonEmpty)
-          .map { line => val Array(pk, path) = line.split('\t'); pk -> path }
-          .toMap
-      }
+        val lines = Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty)
+        Manifest(lines.headOption, lines.drop(1))
     }
   }
 
@@ -109,82 +106,60 @@ object ChangeStream {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType.fromDDL(schema))
 
-  /** Read the full logical state (all partitions listed in the manifest). */
-  private def readState(spark: SparkSession, dir: String, schema: String): DataFrame = {
-    val paths = readManifest(dir).values.toSeq.sorted
-    if (paths.isEmpty) emptyDf(spark, schema)
+  /** Every row the manifest lists, unfolded: a key may repeat across the
+    * base and the runs. */
+  private def readPaths(spark: SparkSession, dir: String, v: View,
+                        m: Manifest): DataFrame =
+    if (m.paths.isEmpty) emptyDf(spark, v.schema)
     else spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(schema))
-      .parquet(paths: _*)
+      .schema(org.apache.spark.sql.types.StructType.fromDDL(v.schema))
+      .parquet(m.paths.map(p => s"$dir/$p"): _*)
+
+  /** Sum the ±delta columns per view key (keeping zero/negative rows — a
+    * transient out-of-order DELETE nets to 0 later). */
+  private def fold(rows: DataFrame, v: View): DataFrame =
+    rows.groupBy(v.keys.map(col): _*)
+      .agg(sum(v.sums.head).as(v.sums.head), v.sums.tail.map(c => sum(c).as(c)): _*)
+
+  /** A view's state, one row per key: the base alone when the manifest
+    * lists no runs, else base ∪ runs folded. The fold range-partitions on
+    * the view key, so the ORDER BY each view reader ends with reuses that
+    * exchange instead of planning its own. */
+  private def readView(spark: SparkSession, workDir: String, v: View): DataFrame = {
+    val dir = s"$workDir/${v.dir}"
+    val m = readManifest(dir)
+    val rows = readPaths(spark, dir, v, m)
+    if (m.runs.isEmpty) rows
+    else fold(rows.repartitionByRange(v.keys.map(col): _*), v)
   }
 
-  /** Read ONLY the given partitions of the state (partition pruning by
-    * manifest lookup — never touches untouched partitions' files). */
-  private def readStatePartitions(spark: SparkSession, dir: String,
-                                  schema: String, pks: Seq[String]): DataFrame = {
-    val manifest = readManifest(dir)
-    val paths = pks.flatMap(manifest.get).sorted
-    if (paths.isEmpty) emptyDf(spark, schema)
-    else spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(schema))
-      .parquet(paths: _*)
-  }
-
-  /** Publish `next` (carrying a `__pk` column; ONLY touched partitions) as
-    * the state for `batchId`: write partitioned by __pk into a version dir,
-    * write a manifest remapping touched partitions to the new leaves, flip
-    * the `current` pointer, then drop version dirs and manifests referenced
-    * by neither the new nor the previous manifest (the previous one is kept
-    * for crash recovery). A legacy whole-state entry is dropped from the
-    * new manifest (the caller migrated its rows into `next`) but its dir
-    * survives one more publish via keepDirs, like any previous manifest. */
-  private def publishPartitioned(next: DataFrame, dir: String,
-                                 touched: Seq[String], batchId: Long): Unit = {
-    val vdir = s"$dir/v$batchId"
-    // co-locate each partition's rows in one task so every __pk leaf gets
-    // ONE file instead of numShufflePartitions × numPk small files; size
-    // the exchange to the touched-partition count — a steady-state batch
-    // touching 2 namespaces runs a 2-task write, not a 32-task one
-    next.repartition(math.max(1, touched.size), col("__pk"))
-      .write.mode("overwrite").partitionBy("__pk").parquet(vdir)
-    val prev = readManifest(dir)
-    // only remap pks that actually produced a leaf — an over-approximated
-    // touched hint (pk with neither old state nor delta rows for this
-    // view) must not leave a manifest entry pointing at a missing dir
-    val updated = (prev - "LEGACY") ++ touched
-      .filter(pk => Files.exists(Paths.get(vdir, s"__pk=$pk")))
-      .map(pk => pk -> s"$vdir/__pk=$pk")
-    Files.createDirectories(Paths.get(dir))
-    val mf = Paths.get(dir, s"manifest-v$batchId")
-    Files.writeString(mf,
-      updated.toSeq.sorted.map { case (pk, p) => s"$pk\t$p" }.mkString("\n"))
+  /** Publish `delta` (the folded ±delta of view `v` for `batchId`) over
+    * the state `prev`: into an empty state it is the base; else it becomes
+    * one more run, unless the view already holds [[MaxRuns]] runs — then
+    * base ∪ runs ∪ delta fold into a new base. Writes the manifest, flips
+    * the `current` pointer, then drops dirs and manifests listed by
+    * neither the new nor the previous manifest (the previous one is kept
+    * for crash recovery). */
+  private def publish(spark: SparkSession, dir: String, v: View,
+                      delta: DataFrame, batchId: Long, prev: Manifest): Unit = {
+    val name = s"v$batchId"
+    val (out, next) =
+      if (prev.base.isEmpty) (delta, Manifest(Some(name), Nil))
+      else if (prev.runs.size < MaxRuns)
+        // one file: a run is one micro-batch's delta, bounded by the trigger
+        (delta.coalesce(1), prev.copy(runs = prev.runs :+ name))
+      else (fold(readPaths(spark, dir, v, prev).unionByName(delta), v),
+        Manifest(Some(name), Nil))
+    out.write.mode("overwrite").parquet(s"$dir/$name")
+    val mf = s"manifest-v$batchId"
+    Files.writeString(Paths.get(dir, mf), next.paths.mkString("\n"))
     val tmp = Paths.get(dir, "current.tmp")
-    Files.writeString(tmp, mf.toString)
+    Files.writeString(tmp, mf)
     Files.move(tmp, Paths.get(dir, "current"),
       StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-    retain(dir, keepDirs = (prev.values ++ updated.values)
-      .map(versionDirName).toSet)
+    retain(dir, keepDirs = (prev.paths ++ next.paths).toSet)
   }
 
-  /** Version-dir name a manifest path pins: a `__pk=` leaf pins its parent
-    * version dir; a legacy whole-state path IS the version dir (taking its
-    * parent would wrongly pin — and then delete — the state root's name). */
-  private def versionDirName(p: String): String = {
-    val path = Paths.get(p)
-    if (path.getFileName.toString.startsWith("__pk="))
-      path.getParent.getFileName.toString
-    else path.getFileName.toString
-  }
-
-  /** Delete v* dirs not in keepDirs and all but the two most recent
-    * manifest-v* files (current + previous, for crash recovery).
-    *
-    * Read-snapshot window: a DataFrame planned from a manifest stays
-    * readable for the NEXT publish (its dirs are in keepDirs via the
-    * previous manifest) but not beyond — a lazy reader held across TWO
-    * further publishes can hit FileNotFound on its superseded dirs.
-    * Long-lived readers should re-plan from the current manifest (the
-    * view accessors below do this on every call). */
   private def listDir(p: java.nio.file.Path): Array[java.nio.file.Path] = {
     val s = Files.list(p)
     try s.toArray(new java.util.function.IntFunction[Array[java.nio.file.Path]] {
@@ -192,10 +167,17 @@ object ChangeStream {
     }) finally s.close()
   }
 
+  /** Delete v* dirs not in keepDirs and all but the two most recent
+    * manifest-v* files (current + previous, for crash recovery).
+    *
+    * Read-snapshot window: a DataFrame planned from a manifest reads dirs
+    * that stay live until the publish AFTER the compaction that folds them
+    * away — at least one further publish, at most [[MaxRuns]] + 1. A lazy
+    * reader held longer can hit FileNotFound; long-lived readers should
+    * re-plan from the current manifest (the view accessors below do this
+    * on every call). */
   private def retain(dir: String, keepDirs: Set[String]): Unit = {
-    val root = Paths.get(dir)
-    if (!Files.exists(root)) return
-    val children = listDir(root)
+    val children = listDir(Paths.get(dir))
     val manifests = children.map(_.getFileName.toString)
       .filter(_.startsWith("manifest-v"))
       .sortBy(n => n.stripPrefix("manifest-v").toLong)
@@ -232,59 +214,6 @@ object ChangeStream {
       .agg(sum(col("sgn")).as("file_count"),
         sum(col("sgn") * col("data_size")).as("total_size"))
 
-  /**
-   * MERGE deltas into a (volume, bucket)-partitioned state: read ONLY the
-   * state partitions present in the delta, union + re-aggregate on the view
-   * key (keeping zero/negative rows — transient out-of-order nets to 0),
-   * and publish a manifest in which untouched partitions keep their old
-   * files untouched. The touched-partition list is a driver-side collect,
-   * bounded by the number of distinct (volume, bucket) namespaces in one
-   * micro-batch — thousands at most, never row-scale.
-   */
-  private def mergePartitioned(spark: SparkSession, stateDir: String,
-                               deltas: DataFrame, batchId: Long,
-                               schema: String, groupCols: Seq[String],
-                               sumCols: Seq[String],
-                               touchedPks: Seq[String],
-                               pk: org.apache.spark.sql.Column = pkCol): Unit = {
-    if (batchId <= lastBatch(stateDir)) return // recovery replay: already applied
-    // touchedPks comes from the caller's ONE batch-level distinct — the
-    // whole merge is then a single Spark job per view. The set may
-    // over-approximate (a pk whose rows fold to no delta rows for THIS
-    // view): publish drops pks that produced no leaf, and the extra state
-    // read/rewrite of such a pk is correct, just unnecessary.
-    if (touchedPks.isEmpty) return
-    val d = deltas.withColumn("__pk", pk)
-    val manifest = readManifest(stateDir)
-    // A pre-partitioned (legacy single-dir) state cannot be merged
-    // partition-wise: its rows live in one undivided dir the touched-pk
-    // read would miss. MIGRATE on first merge: fold the WHOLE legacy
-    // state in (persisted — the pk collect and the publish write each
-    // scan it), remap every partition to new leaves, and let publish drop
-    // the LEGACY entry (the old dir survives one publish for crash
-    // recovery, then retention collects it).
-    val legacyWhole =
-      if (manifest.contains("LEGACY"))
-        Some(readState(spark, stateDir, schema).withColumn("__pk", pk).persist())
-      else None
-    try {
-      val (old, touched) = legacyWhole match {
-        case Some(whole) =>
-          val allPks = (whole.select("__pk").distinct()
-            .collect().map(_.getString(0)) ++ touchedPks).distinct.toSeq
-          (whole, allPks)
-        case None =>
-          (readStatePartitions(spark, stateDir, schema, touchedPks)
-            .withColumn("__pk", pk), touchedPks)
-      }
-      val next = old.unionByName(d)
-        .groupBy("__pk", groupCols: _*)
-        .agg(sum(sumCols.head).as(sumCols.head),
-          sumCols.tail.map(c => sum(c).as(c)): _*)
-      publishPartitioned(next, stateDir, touched, batchId)
-    } finally { legacyWhole.foreach(_.unpersist()); () }
-  }
-
   /** NSSummary ±delta fold: each event contributes to EVERY ancestor dir
     * of its key (depth from the key, never a config; the streamed dual of
     * NSSummaryTaskDbEventHandler.propagateSizeUpwards:426-459 — upward
@@ -314,10 +243,26 @@ object ChangeStream {
         sum(col("sgn") * col("data_size")).as("total_bytes"))
 
 
-  // The three per-view merges are independent (separate state dirs, separate
-  // manifests) — submit them as CONCURRENT Spark jobs so a micro-batch pays
-  // ~max(view merge cost) instead of the sum; each view's merge is itself a
-  // touched-partitions-only rewrite.
+  /** One maintained view: its state dir under the work dir, its schema,
+    * the key it folds on, the summed ±delta columns, and the ±delta fold
+    * of an event batch. */
+  private final case class View(dir: String, schema: String,
+                                keys: Seq[String], sums: Seq[String],
+                                deltas: DataFrame => DataFrame)
+
+  private val FileSizeState = View("state_filesize", FileSizeSchema,
+    Seq("volume", "bucket", "size_bin"), Seq("file_count", "total_size"),
+    fileSizeDeltas)
+  private val CountsState = View("state_counts", CountsSchema,
+    Seq("entity"), Seq("cnt", "total_bytes"), countsDeltas)
+  private val NsSummaryState = View("state_nssummary", NsSummarySchema,
+    Seq("volume", "bucket", "dir"), Seq("num_files", "size_of_files"),
+    nsSummaryDeltas)
+  private val Views = Seq(FileSizeState, CountsState, NsSummaryState)
+
+  // The three per-view publishes are independent (separate state dirs,
+  // separate manifests) — submit them as CONCURRENT Spark jobs so a
+  // micro-batch pays ~max(view publish cost) instead of the sum.
   // EAGER val, not lazy: a lazy val initializes under the enclosing
   // object's monitor, so any caller holding that monitor while blocked in
   // awaitTermination would deadlock the stream thread's first merge.
@@ -327,42 +272,27 @@ object ChangeStream {
         (r: Runnable) => { val t = new Thread(r, "graft-view-merge")
           t.setDaemon(true); t }))
 
-  /** Merge one event micro-batch into all three maintained views; `batchIdOf`
-    * supplies each view's batchId (the stream passes the micro-batch id to
-    * all; out-of-band callers advance each view's own watermark). */
-  private def mergeAllViews(spark: SparkSession, workDir: String,
-                            b: DataFrame, batchIdOf: String => Long): Unit = {
+  /** Run `f` once per view, concurrently, and wait for all of them. */
+  private def eachView(f: View => Unit): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: scala.concurrent.ExecutionContext = mergePool
-    // ONE batch-level distinct feeds every view's touched set (the counts
-    // view keys everything to the constant "00" partition) — each view's
-    // merge then runs as a single Spark job instead of collect + write
-    val batchPks = b.select(pkCol.as("__pk")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    if (batchPks.isEmpty) return
-    val jobs = Seq(
-      Future {
-        val fs = s"$workDir/state_filesize"
-        mergePartitioned(spark, fs, fileSizeDeltas(b), batchIdOf(fs),
-          FileSizeSchema, Seq("volume", "bucket", "size_bin"),
-          Seq("file_count", "total_size"), touchedPks = batchPks)
-      },
-      Future {
-        val ct = s"$workDir/state_counts"
-        mergePartitioned(spark, ct, countsDeltas(b), batchIdOf(ct),
-          CountsSchema, Seq("entity"), Seq("cnt", "total_bytes"),
-          touchedPks = Seq("00"), pk = lit("00"))
-      },
-      Future {
-        val ns = s"$workDir/state_nssummary"
-        mergePartitioned(spark, ns, nsSummaryDeltas(b), batchIdOf(ns),
-          NsSummarySchema, Seq("volume", "bucket", "dir"),
-          Seq("num_files", "size_of_files"), touchedPks = batchPks)
-      })
-    Await.result(Future.sequence(jobs), Duration.Inf)
+    Await.result(Future.sequence(Views.map(v => Future(f(v)))), Duration.Inf)
     ()
   }
+
+  /** Publish one event micro-batch into all three maintained views;
+    * `batchIdOf` supplies each view's batchId (the stream passes the
+    * micro-batch id to all; out-of-band callers advance each view's own
+    * watermark). A view that already applied its batchId is skipped. */
+  private def mergeAllViews(spark: SparkSession, workDir: String,
+                            b: DataFrame, batchIdOf: String => Long): Unit =
+    eachView { v =>
+      val dir = s"$workDir/${v.dir}"
+      val id = batchIdOf(dir)
+      if (id > lastBatch(dir)) // else a recovery replay: already applied
+        publish(spark, dir, v, v.deltas(b), id, readManifest(dir))
+    }
 
   /**
    * Apply ONE delta micro-batch to the three maintained views OUTSIDE the
@@ -418,16 +348,16 @@ object ChangeStream {
   /** Read the maintained file-size view (positive bins only — fully-deleted
     * bins net to 0 and are not part of the logical view). */
   def fileSizeView(spark: SparkSession, workDir: String): DataFrame =
-    readState(spark, s"$workDir/state_filesize", FileSizeSchema)
+    readView(spark, workDir, FileSizeState)
       .filter(col("file_count") > 0)
       .orderBy("volume", "bucket", "size_bin")
 
   def countsView(spark: SparkSession, workDir: String): DataFrame =
-    readState(spark, s"$workDir/state_counts", CountsSchema)
+    readView(spark, workDir, CountsState)
       .orderBy("entity")
 
   def nsSummaryView(spark: SparkSession, workDir: String): DataFrame =
-    readState(spark, s"$workDir/state_nssummary", NsSummarySchema)
+    readView(spark, workDir, NsSummaryState)
       .filter(col("num_files") > 0)
       .orderBy("volume", "bucket", "dir")
 
@@ -479,25 +409,24 @@ object ChangeStream {
    * Bootstrap the three maintained views straight from the FULL log with
    * one batch aggregation per view, run concurrently — the
    * checkpoint-loss recovery path. A replay() drain pays per-micro-batch
-   * fixed costs (stream scaffold, per-batch state read/rewrite) × the
-   * whole history; the delta folds are linear, so folding the entire log
-   * once produces bit-identical state (including zero-net rows — the
-   * merge keeps them too) at one job per view. This is the availability
+   * fixed costs (stream scaffold, one run write per view, a compaction
+   * every MaxRuns+1 batches) × the whole history; the delta folds are
+   * linear, so folding the entire log once yields the same views
+   * (including zero-net rows — the read fold keeps them too) at one job
+   * per view. This is the availability
    * answer at scale: after losing a checkpoint, rebuild state in
    * O(one aggregation of the log), then stream deltas from the head —
    * the reference's Recon does exactly this (ReconOmTask reprocess()
    * full rebuild vs process() incremental).
    *
-   * States publish at batchId 0; steady-state maintenance continues via
+   * Each view's old state dir is deleted and its fold published as one
+   * base dir at batchId 0; steady-state maintenance continues via
    * [[applyDeltaBatch]] (each view advances its own watermark). No
    * streaming checkpoint is created — a stream taking over the dir
    * starts fresh from its own offsets.
    */
   def bootstrapViews(spark: SparkSession, logDir: String,
                      workDir: String): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = mergePool
     // NO persist of the log: each view's fold is one pass over the
     // columnar files it needs (a cache materialization of the whole
     // history would cost more than the three column-pruned re-scans and
@@ -505,21 +434,11 @@ object ChangeStream {
     val log = spark.read
       .schema(org.apache.spark.sql.types.StructType.fromDDL(ChangeLog.Schema))
       .parquet(logDir)
-    val batchPks = log.select(pkCol.as("__pk")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    if (batchPks.isEmpty) return
-    val jobs = Seq(
-      Future { publishPartitioned(
-        fileSizeDeltas(log).withColumn("__pk", pkCol),
-        s"$workDir/state_filesize", batchPks, 0L) },
-      Future { publishPartitioned(
-        countsDeltas(log).withColumn("__pk", lit("00")),
-        s"$workDir/state_counts", Seq("00"), 0L) },
-      Future { publishPartitioned(
-        nsSummaryDeltas(log).withColumn("__pk", pkCol),
-        s"$workDir/state_nssummary", batchPks, 0L) })
-    Await.result(Future.sequence(jobs), Duration.Inf)
-    ()
+    eachView { v =>
+      val dir = s"$workDir/${v.dir}"
+      deleteRecursively(Paths.get(dir)) // else retention keeps its later manifests
+      publish(spark, dir, v, v.deltas(log), 0L, Manifest(None, Nil))
+    }
   }
 
   /** The synthesized CDC log for a source dir, written ONCE per JVM — in

@@ -52,56 +52,127 @@ class StreamingSpec extends SparkSpecBase {
     assert(rows(ChangeStream.fileSizeView(spark, work)) === first)
   }
 
-  test("a micro-batch rewrites ONLY the state partitions its delta touches") {
+  /** Every parquet file under a state dir's `rel` dir, with its bytes. */
+  private def dirFiles(stateDir: String, rel: String): Seq[(String, Seq[Byte])] = {
     import java.nio.file.{Files, Paths}
+    val s = Files.list(Paths.get(stateDir, rel))
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.toSeq.filter(_.getFileName.toString.endsWith(".parquet"))
+        .sortBy(_.toString)
+        .map(p => p.toString -> Files.readAllBytes(p).toSeq)
+    } finally s.close()
+  }
+
+  private val stateDirs = Seq("state_filesize", "state_counts", "state_nssummary")
+
+  test("a micro-batch appends one run per view and rewrites no listed file") {
     val objects = Tables.objects(spark, sf)
-    val work = Files.createTempDirectory("graft_test_stream3_").toString
+    val work = java.nio.file.Files.createTempDirectory("graft_test_stream3_").toString
     ChangeLog.write(objects, s"$work/log", numFiles = 4)
     ChangeStream.replay(spark, s"$work/log", work, filesPerBatch = 4)
 
-    val stateDir = s"$work/state_filesize"
-    val before = ChangeStream.readManifest(stateDir)
-    assert(before.size > 1, "fixture must span several (volume,bucket) partitions")
-    // bytes of every current state file, keyed by partition
-    def partFiles(leaf: String): Seq[(String, Array[Byte])] = {
-      val d = Paths.get(leaf)
-      val s = Files.list(d)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.toSeq.filter(_.getFileName.toString.endsWith(".parquet"))
-          .sortBy(_.toString)
-          .map(p => p.toString -> Files.readAllBytes(p))
-      } finally s.close()
-    }
-    val beforeBytes = before.map { case (pk, leaf) => pk -> partFiles(leaf) }
+    val before = stateDirs.map(d => d -> ChangeStream.readManifest(s"$work/$d")).toMap
+    val beforeBytes = before.map { case (d, m) =>
+      d -> m.paths.map(p => p -> dirFiles(s"$work/$d", p)) }
+    assert(before.values.forall(m => m.base.nonEmpty && m.runs.isEmpty))
 
-    // a second delta touching exactly one (volume, bucket)
-    val one = objects.limit(1).select("volume", "bucket").head
-    val (tv, tb) = (one.getString(0), one.getString(1))
-    val touchedPk = ChangeStream.pkOf(tv, tb)
-    val extra = objects.filter(col("volume") === tv && col("bucket") === tb)
-      .orderBy("key", "version", "data_size").limit(10)
-    // new log file after the checkpointed ones: the resumed stream drains
-    // only this file as one fresh micro-batch
+    // a second delta: a new log file after the checkpointed ones, which
+    // the resumed stream drains as one fresh micro-batch
+    val extra = objects.orderBy("key", "version", "data_size").limit(10)
     graft.streaming.ChangeLog.events(extra)
       .withColumn("seq", col("seq") + 1000000L)
       .coalesce(1).write.mode("append").parquet(s"$work/log")
     ChangeStream.replay(spark, s"$work/log", work, filesPerBatch = 4)
 
-    val after = ChangeStream.readManifest(stateDir)
-    assert(after(touchedPk) !== before(touchedPk),
-      "touched partition must move to a new version dir")
-    (before - touchedPk).foreach { case (pk, leaf) =>
-      assert(after(pk) === leaf, s"untouched partition $pk must keep its path")
-      assert(beforeBytes(pk).map { case (p, b) => p -> b.toSeq } ===
-        partFiles(leaf).map { case (p, b) => p -> b.toSeq },
-        s"untouched partition $pk files must be byte-identical")
+    stateDirs.foreach { d =>
+      val after = ChangeStream.readManifest(s"$work/$d")
+      assert(after.base === before(d).base, s"$d keeps its base")
+      assert(after.runs.size === before(d).runs.size + 1,
+        s"$d gains exactly one run")
+      beforeBytes(d).foreach { case (p, files) =>
+        assert(dirFiles(s"$work/$d", p) === files,
+          s"$d/$p files must be byte-identical")
+      }
     }
-    // and the merged view is still exactly the batch recompute of net + extra
+    // and the folded view is still exactly the batch recompute of net + extra
     val net = objects.filter(col("version") % 7 =!= 0)
       .unionByName(extra.filter(col("version") % 7 =!= 0))
     assert(rows(ChangeStream.fileSizeView(spark, work)) ===
       rows(ChangeStream.reprocessFileSize(net)))
+  }
+
+  test("MaxRuns+1 deltas compact each view into one base; superseded runs go one publish later") {
+    import java.nio.file.{Files, Paths}
+    val objects = Tables.objects(spark, sf)
+    val work = Files.createTempDirectory("graft_test_compact_").toString
+    ChangeLog.write(objects, s"$work/log", numFiles = 2)
+    ChangeStream.bootstrapViews(spark, s"$work/log", work)
+    val base = objects.orderBy("volume", "bucket", "key", "version", "data_size")
+      .limit(30)
+    // delta i: copies of `base` under new key names, so every delta adds
+    // keys the state has not seen
+    def delta(i: Int) = base.withColumn("key", concat(col("key"), lit(s".d$i")))
+    def applyDelta(i: Int): Unit = ChangeStream.applyDeltaBatch(spark, work,
+      ChangeLog.events(delta(i)).withColumn("seq", col("seq") + 1000000L * i))
+    val K = ChangeStream.MaxRuns
+    (1 to K).foreach(applyDelta)
+    val full = stateDirs.map(d => d -> ChangeStream.readManifest(s"$work/$d")).toMap
+    assert(full.values.forall(_.runs.size === K))
+
+    applyDelta(K + 1)
+    stateDirs.foreach { d =>
+      val m = ChangeStream.readManifest(s"$work/$d")
+      assert(m.base === Some(s"v${K + 1}") && m.runs.isEmpty,
+        s"$d: the (K+1)-th delta folds base and runs into a new base")
+      // the previous manifest's dirs survive this publish …
+      full(d).paths.foreach(p => assert(Files.exists(Paths.get(work, d, p))))
+    }
+    applyDelta(K + 2)
+    stateDirs.foreach { d =>
+      // … and are gone after the next one
+      full(d).paths.foreach(p => assert(!Files.exists(Paths.get(work, d, p)),
+        s"$d/$p must be deleted one publish after it was superseded"))
+      assert(ChangeStream.readManifest(s"$work/$d") ===
+        ChangeStream.Manifest(Some(s"v${K + 1}"), Seq(s"v${K + 2}")))
+    }
+
+    val net = (1 to K + 2).map(delta).foldLeft(objects)(_.unionByName(_))
+      .filter(col("version") % 7 =!= 0)
+    def sortedRows(df: org.apache.spark.sql.DataFrame) =
+      rows(df).map(_.map(String.valueOf)).sortBy(_.mkString("\u0001"))
+    assert(rows(ChangeStream.fileSizeView(spark, work)) ===
+      rows(ChangeStream.reprocessFileSize(net)))
+    val Seq(Seq(_, cnt, bytes)) = rows(ChangeStream.countsView(spark, work))
+    assert(cnt === net.count())
+    assert(bytes === net.agg(sum("data_size")).head.getLong(0))
+    assert(sortedRows(ChangeStream.nsSummaryView(spark, work)) ===
+      sortedRows(graft.operators.Aggregates.nsSummary(net)
+        .select("volume", "bucket", "dir", "num_files", "size_of_files")))
+
+    // a re-bootstrap over this used dir replaces its state with the log's
+    ChangeStream.bootstrapViews(spark, s"$work/log", work)
+    stateDirs.foreach(d => assert(ChangeStream.readManifest(s"$work/$d") ===
+      ChangeStream.Manifest(Some("v0"), Nil)))
+    assert(rows(ChangeStream.fileSizeView(spark, work)) === rows(
+      ChangeStream.reprocessFileSize(objects.filter(col("version") % 7 =!= 0))))
+  }
+
+  test("a copied state dir reads the same (manifests name dirs relative to it)") {
+    val objects = Tables.objects(spark, sf)
+    val work = java.nio.file.Files.createTempDirectory("graft_test_copy_").toString
+    ChangeLog.write(objects, s"$work/log", numFiles = 2)
+    ChangeStream.bootstrapViews(spark, s"$work/log", work)
+    ChangeStream.applyDeltaBatch(spark, work, ChangeLog.events(
+      objects.orderBy("key", "version", "data_size").limit(20))
+      .withColumn("seq", col("seq") + 1000000L))
+    val views = Seq[(org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame](
+      ChangeStream.fileSizeView, ChangeStream.countsView,
+      ChangeStream.nsSummaryView)
+    val expect = views.map(v => rows(v(spark, work)))
+    val copy = Bench.cloneDir(work)
+    ChangeStream.deleteRecursively(java.nio.file.Paths.get(work))
+    assert(views.map(v => rows(v(spark, copy))) === expect)
   }
 
   test("applyDeltaBatch merges exactly like a streamed micro-batch") {
@@ -162,7 +233,8 @@ class StreamingSpec extends SparkSpecBase {
     // `current` pointing at the dir itself
     ChangeStream.reprocessFileSize(net).write.parquet(s"$stateDir/v0")
     Files.writeString(Paths.get(stateDir, "current"), s"$stateDir/v0")
-    assert(ChangeStream.readManifest(stateDir).contains("LEGACY"))
+    assert(ChangeStream.readManifest(stateDir) ===
+      ChangeStream.Manifest(Some("v0"), Nil))
 
     val extra = objects.orderBy("key", "version", "data_size").limit(20)
     val batch = ChangeLog.events(extra).withColumn("seq", col("seq") + 999999L)
@@ -172,10 +244,10 @@ class StreamingSpec extends SparkSpecBase {
     val expect = rows(ChangeStream.reprocessFileSize(
       net.unionByName(extra.filter(col("version") % 7 =!= 0))))
     assert(rows(ChangeStream.fileSizeView(spark, work)) === expect)
-    // migrated: partitioned manifest, no LEGACY entry; the legacy dir
-    // itself survives this publish as the crash-recovery snapshot
+    // the legacy dir is the new manifest's base, and it survives this
+    // publish
     val mf = ChangeStream.readManifest(stateDir)
-    assert(!mf.contains("LEGACY") && mf.size > 1)
+    assert(mf.base === Some("v0") && mf.runs.size === 1)
     assert(Files.exists(Paths.get(stateDir, "v0")))
   }
 
@@ -431,6 +503,31 @@ class StreamingSpec extends SparkSpecBase {
     ChangeStream.applyDeltaBatch(spark, viaBatch, delta)
     assert(sortedRows(ChangeStream.fileSizeView(spark, viaBatch)) ===
       sortedRows(ChangeStream.fileSizeView(spark, viaReplay)))
+    assert(sortedRows(ChangeStream.nsSummaryView(spark, viaBatch)) ===
+      sortedRows(ChangeStream.nsSummaryView(spark, viaReplay)))
+  }
+
+  test("bootstrapViews state == a replay() drain that compacts mid-way") {
+    val objects = Tables.objects(spark, sf)
+    val logSrc = java.nio.file.Files
+      .createTempDirectory("graft_test_boot_c_").toString
+    // one file per micro-batch: batch 0 is the base, batches 1..MaxRuns
+    // append runs, batch MaxRuns+1 compacts, the rest append again
+    ChangeLog.write(objects, s"$logSrc/log", numFiles = ChangeStream.MaxRuns + 3)
+    val viaReplay = s"$logSrc/replay"
+    ChangeStream.replay(spark, s"$logSrc/log", viaReplay, filesPerBatch = 1)
+    stateDirs.foreach { d =>
+      val m = ChangeStream.readManifest(s"$viaReplay/$d")
+      assert(m.base.exists(_ != "v0"), s"$d must have compacted during the drain")
+    }
+    val viaBatch = s"$logSrc/batch"
+    ChangeStream.bootstrapViews(spark, s"$logSrc/log", viaBatch)
+    def sortedRows(df: org.apache.spark.sql.DataFrame) =
+      rows(df).map(_.map(String.valueOf)).sortBy(_.mkString("\u0001"))
+    assert(sortedRows(ChangeStream.fileSizeView(spark, viaBatch)) ===
+      sortedRows(ChangeStream.fileSizeView(spark, viaReplay)))
+    assert(sortedRows(ChangeStream.countsView(spark, viaBatch)) ===
+      sortedRows(ChangeStream.countsView(spark, viaReplay)))
     assert(sortedRows(ChangeStream.nsSummaryView(spark, viaBatch)) ===
       sortedRows(ChangeStream.nsSummaryView(spark, viaReplay)))
   }
