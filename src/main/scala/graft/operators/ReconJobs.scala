@@ -281,9 +281,12 @@ object ReconJobs {
       .select(col("req_id"), col("verdict"), lit("").as("entity"),
         lit("").as("metric"), lit(0L).as("value"))
     val dnReqs = reqs.filter(col("comp") === "dn" && col("limit") =!= 0)
-    val dnList = dnReqs.crossJoin(
-        dnPending.withColumn("rk", row_number().over(
-          Window.orderBy(col("pending_blocks").desc, col("dn")))))
+    // rank after the cross join, per request: each request pairs with the
+    // whole datanode list, so its ranks are the global ones, and the window
+    // spreads over requests instead of one unpartitioned task
+    val dnList = dnReqs.crossJoin(dnPending)
+      .withColumn("rk", row_number().over(Window.partitionBy("req_id")
+        .orderBy(col("pending_blocks").desc, col("dn"))))
       .filter(col("limit") < 0 || col("rk") <= col("limit"))
       .select(col("req_id"), lit("DN_OK").as("verdict"),
         col("dn").as("entity"), lit("pending_blocks").as("metric"),

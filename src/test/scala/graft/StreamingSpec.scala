@@ -531,4 +531,25 @@ class StreamingSpec extends SparkSpecBase {
     assert(sortedRows(ChangeStream.nsSummaryView(spark, viaBatch)) ===
       sortedRows(ChangeStream.nsSummaryView(spark, viaReplay)))
   }
+
+  test("a second Recon cycle compiles no generated code (the codegen cache " +
+    "holds the view reads' and rollups' classes)") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val work = java.nio.file.Files.createTempDirectory("graft_test_codegen_").toString
+    ChangeStream.bootstrapViews(spark,
+      ChangeStream.cdcLogDir(spark, Tables.objectsMixed(spark, sf), sf), work)
+    val views = Seq[(org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame](
+      ChangeStream.fileSizeView, ChangeStream.countsView,
+      ChangeStream.nsSummaryView)
+    val rollups = Seq("q_ns_summary", "q_filesize_histogram",
+      "q_global_counts", "q_du_topn", "q_quota_usage", "q_pending_deletion")
+    def cycle(): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      views.foreach(v => v(spark, work).collect())
+      rollups.foreach(q => SparkEntry.queries(q)(spark, sf).collect())
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    val cold = cycle()
+    assert(cycle() === 0L, s"warm cycle recompiled (the cold one compiled $cold)")
+  }
 }
