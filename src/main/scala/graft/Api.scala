@@ -23,10 +23,13 @@ object Api {
 
   // -- key lookups + listings ----------------------------------------------
   // Every key op first chases bucket links to the terminal real bucket
-  // (identity for non-links) — OmMetadataManagerImpl.java:1089-1093.
+  // (identity for non-links) — OmMetadataManagerImpl.java:1089-1093. The
+  // chase runs on the driver over the link fixture's rows and the bucket
+  // catalog's collected key set, so an RPC plans and runs only its
+  // namespace query.
   private def resolved(s: SparkSession, d: String, volume: String,
                        bucket: String): Option[(String, String)] =
-    Links.resolveOne(T.bucketLinks(s, d), T.buckets(s, d),
+    Links.resolveOne(T.bucketLinkRows.rows, T.bucketKeys(s, d),
       volume, bucket).toOption
 
   def lookupKey(s: SparkSession, d: String, volume: String, bucket: String,
@@ -52,8 +55,8 @@ object Api {
 
   def listKeys(s: SparkSession, d: String, volume: String, bucket: String,
                prefix: String, startKey: String, maxKeys: Int): DataFrame =
-    Links.listKeysVia(T.objectsSorted(s, d), T.bucketLinks(s, d),
-      T.buckets(s, d), volume, bucket, prefix, startKey, maxKeys)
+    Links.listKeysVia(T.objectsSorted(s, d), T.bucketLinkRows.rows,
+      T.bucketKeys(s, d), volume, bucket, prefix, startKey, maxKeys)
 
   /** The link-resolution catalog (status per link: OK/DANGLING/CYCLE). */
   def resolveBucketLinks(s: SparkSession, d: String): DataFrame =

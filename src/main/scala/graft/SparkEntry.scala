@@ -244,8 +244,8 @@ object SparkEntry {
     // listing THROUGH the 2-hop chain link-b -> link-a -> (vol0, bucket0)
     // must equal listing the source bucket directly
     "q_link_list" -> ((s, d) =>
-      Links.listKeysVia(T.objectsSorted(s, d), T.bucketLinks(s, d),
-        T.buckets(s, d), "vol2", "link-b", "warehouse/N/", "", 100)),
+      Links.listKeysVia(T.objectsSorted(s, d), T.bucketLinkRows.rows,
+        T.bucketKeys(s, d), "vol2", "link-b", "warehouse/N/", "", 100)),
     "q_list_mpus" -> ((s, d) =>
       Lifecycle.listMultipartUploads(T.multipartInfo(s, d), "vol2", "bucket0",
         "warehouse/mpu/1")),
@@ -1783,7 +1783,7 @@ object SparkEntry {
 
     // The link catalog is a 5-row static fixture, so its resolution has a
     // closed literal form derived by hand from the chase semantics
-    // (direct OK@1, chain OK@2, dangling@1, 2-cycle CYCLE@maxHops+1).
+    // (direct OK@1, chain OK@2, dangling@1, 2-cycle CYCLE@Links.MaxHops+1).
     "q_link_resolve" ->
       """SELECT volume, bucket, resolved_volume, resolved_bucket,
         |  CAST(hops AS BIGINT) AS hops, status

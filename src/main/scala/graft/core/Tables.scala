@@ -128,6 +128,15 @@ object Tables {
   def buckets(spark: SparkSession, dir: String): DataFrame =
     TempDirs.parquet(spark, "buckets", dir) { bucketsUncached(spark, dir) }
 
+  /** The (volume, bucket) pairs of [[buckets]] on the driver, collected
+    * once per JVM: the set a per-request link chase checks its terminal
+    * against. */
+  def bucketKeys(spark: SparkSession, dir: String): Set[(String, String)] =
+    TempDirs.collect("buckets", dir) {
+      buckets(spark, dir).select("volume", "bucket").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSet
+    }
+
   private def bucketsUncached(spark: SparkSession, dir: String): DataFrame = {
     objects(spark, dir)
       .groupBy("volume", "bucket")

@@ -66,6 +66,15 @@ object TempDirs {
       out
     }
 
+  private val collected = new ConcurrentHashMap[(String, String), Slot[AnyRef]]
+
+  /** A driver-side value `make` derives from the artifact of (kind,
+    * source), e.g. a control-plane catalog as a Scala set: made on first
+    * touch in this JVM, then returned as is, like the artifact it comes
+    * from, which never changes once built. */
+  def collect[V <: AnyRef](kind: String, source: String)(make: => V): V =
+    once(collected, (kind, source))(make).asInstanceOf[V]
+
   private val relations =
     new ConcurrentHashMap[(SparkSession, String), Slot[BaseRelation]]
 

@@ -5,8 +5,11 @@ import org.apache.spark.metrics.source.CodegenMetrics
 /** Dev harness: time a subset of SparkEntry queries without a full bench
   * run. Usage: runMain graft.tools.TimeQueries <sfDir> <query>[,<query>...]
   * [reps]. Prints per-rep seconds so warm-vs-cold costs are visible, each
-  * followed by the rep's Janino compile count (`/Nc`): a warm rep that
-  * still compiles has generated code that misses Spark's codegen cache.
+  * followed by the part of them spent building the DataFrame (`(cS)`:
+  * construct, including any job an operator runs eagerly) and by the
+  * rep's Janino compile count (`/Nc`): a warm rep that still compiles has
+  * generated code that misses Spark's codegen cache. Example:
+  * `0.41s(c0.02)/0c`.
   * Each rep produces every output column (a `noop` write), not a
   * `count()` that lets Catalyst prune the columns and what feeds them. */
 object TimeQueries {
@@ -22,11 +25,13 @@ object TimeQueries {
       val runs = (1 to reps).map { _ =>
         val c0 = compiles
         val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        ((System.nanoTime() - t0) / 1e9, compiles - c0)
+        val df = fn(spark, sfDir)
+        val built = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
+        ((System.nanoTime() - t0) / 1e9, (built - t0) / 1e9, compiles - c0)
       }
-      println(f"[time] $n%-28s " +
-        runs.map { case (t, c) => f"$t%.2fs/${c}c" }.mkString(" "))
+      println(f"[time] $n%-28s " + runs.map { case (t, construct, c) =>
+        f"$t%.2fs(c$construct%.2f)/${c}c" }.mkString(" "))
     }
     spark.stop()
   }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.{Fixture, OracleCte, Tables}
+import org.apache.spark.sql.catalyst.ScalaReflection
 
 /** Literal fixtures are declared once in Tables: Spark builds them with
   * `Fixture.df`, the DuckDB oracle renders the same rows with
@@ -57,4 +58,29 @@ class FixtureOracleSpec extends SparkSpecBase {
       assert(n === f.rows.size.toLong, name)
     }
   }
+
+  test("each fixture's DataFrame equals the encoder-built toDF: schema " +
+    "(types, nullability) and rows") {
+    fixtures.foreach { case (name, f) =>
+      val (df, viaEncoder) = (f.df(spark), toDF(f))
+      assert(df.schema === viaEncoder.schema, name)
+      assert(rows(df) === rows(viaEncoder), name)
+    }
+  }
+
+  test("two DataFrames of one fixture self-join: each has fresh exprIds") {
+    val f = Tables.bucketLinkRows
+    val a = f.df(spark)
+    val b = f.df(spark).filter(org.apache.spark.sql.functions.col("bucket")
+      .startsWith("link-cycle"))
+    val joined = a.join(b, a("volume") === b("source_volume") &&
+      a("bucket") === b("source_bucket")).select(a("bucket"), b("bucket"))
+    assert(rows(joined.orderBy(a("bucket"))) ===
+      Seq(Seq("link-cycle1", "link-cycle2"), Seq("link-cycle2", "link-cycle1")))
+  }
+
+  /** `rows.toDF(cols)` the way `spark.implicits._` builds it. */
+  private def toDF[A](f: Fixture[A]): org.apache.spark.sql.DataFrame =
+    spark.createDataset(f.rows)(ScalaReflection.encoderFor(f.tag))
+      .toDF(f.cols: _*)
 }

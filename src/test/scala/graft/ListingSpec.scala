@@ -160,21 +160,23 @@ class ListingSpec extends SparkSpecBase {
 
   test("link buckets: chain resolves to its source, broken links flag and list empty") {
     val sf = "/root/testdata/sf0.001"
-    val links = graft.core.Tables.bucketLinks(spark, sf)
-    val buckets = graft.core.Tables.buckets(spark, sf)
+    val links = graft.core.Tables.bucketLinkRows.rows
+    val keys = graft.core.Tables.bucketKeys(spark, sf)
     val sorted = graft.core.Tables.objectsSorted(spark, sf)
     // listing THROUGH the 2-hop chain == listing the terminal source bucket
     val viaLink = rows(graft.operators.Links.listKeysVia(
-      sorted, links, buckets, "vol2", "link-b", "warehouse/N/", "", 50))
+      sorted, links, keys, "vol2", "link-b", "warehouse/N/", "", 50))
     val direct = rows(Listing.listKeys(
       sorted, "vol0", "bucket0", "warehouse/N/", "", 50))
     assert(viaLink === direct && viaLink.nonEmpty)
     // dangling + cyclic links list EMPTY (and carry a status in the catalog)
     assert(rows(graft.operators.Links.listKeysVia(
-      sorted, links, buckets, "vol3", "link-broken", "", "", 50)).isEmpty)
+      sorted, links, keys, "vol3", "link-broken", "", "", 50)).isEmpty)
     assert(rows(graft.operators.Links.listKeysVia(
-      sorted, links, buckets, "vol0", "link-cycle1", "", "", 50)).isEmpty)
-    val status = graft.operators.Links.resolveBucketLinks(links, buckets)
+      sorted, links, keys, "vol0", "link-cycle1", "", "", 50)).isEmpty)
+    val status = graft.operators.Links.resolveBucketLinks(
+      graft.core.Tables.bucketLinks(spark, sf),
+      graft.core.Tables.buckets(spark, sf))
       .select("bucket", "status").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(status("link-a") === "OK" && status("link-b") === "OK")

@@ -82,8 +82,8 @@ class PeriodicScanApiSpec extends SparkSpecBase {
       .filter(col("status") =!= "OK").count() === 3)
   }
 
-  test("API facade: after one warm call, key RPCs on a non-link bucket " +
-    "start no Spark job while constructing") {
+  test("API facade: after one warm call, key RPCs on a plain or link " +
+    "bucket start no Spark job while constructing") {
     val k = Api.listKeys(spark, sf, "vol0", "bucket0", "warehouse/", "", 5)
       .select("key").as[String].head()
     val rpcs = Seq[(String, (String, String) => DataFrame)](
@@ -94,14 +94,24 @@ class PeriodicScanApiSpec extends SparkSpecBase {
       "listObjectsV2" -> (Api.listObjectsV2(spark, sf, _, _, "warehouse/", "", 10)),
       "listStatus" -> (Api.listStatus(spark, sf, _, _, "warehouse")),
       "listStatusFso" -> (Api.listStatusFso(spark, sf, _, _, "warehouse")))
+    // the plain bucket, a direct link and a 2-hop chain to it, then a
+    // dangling and a cyclic link, which list nothing
+    val buckets = Seq("vol0" -> "bucket0", "vol1" -> "link-a",
+      "vol2" -> "link-b", "vol3" -> "link-broken", "vol0" -> "link-cycle1")
+    val broken = Set("link-broken", "link-cycle1")
     for ((kind, rpc) <- rpcs) {
-      val warm = rows(rpc("vol0", "bucket0"))
-      val pins = cachedEntries(spark)
-      val (df, jobs) = jobsStarted(spark)(_ => rpc("vol0", "bucket0"))
-      assert(jobs === 0, kind)
-      assert(rows(df) === warm && warm.nonEmpty, kind)
-      assert(rows(rpc("vol1", "link-a")) === warm, kind)
-      if (kind == "listStatusFso") assert(cachedEntries(spark) === pins)
+      val direct = rows(rpc("vol0", "bucket0"))
+      assert(direct.nonEmpty, kind)
+      for ((vol, bkt) <- buckets) {
+        val warm = rows(rpc(vol, bkt))
+        val pins = cachedEntries(spark)
+        val (df, jobs) = jobsStarted(spark)(_ => rpc(vol, bkt))
+        assert(jobs === 0, s"$kind $vol/$bkt")
+        assert(rows(df) === warm, s"$kind $vol/$bkt")
+        assert(warm === (if (broken(bkt)) Seq.empty else direct),
+          s"$kind $vol/$bkt")
+        if (kind == "listStatusFso") assert(cachedEntries(spark) === pins)
+      }
     }
   }
 
@@ -117,19 +127,50 @@ class PeriodicScanApiSpec extends SparkSpecBase {
 
   test("API facade: FSO listStatus through a broken link lists nothing " +
     "and starts no job of its own") {
-    val links = graft.core.Tables.bucketLinks(spark, sf)
-    val buckets = graft.core.Tables.buckets(spark, sf)
+    val links = graft.core.Tables.bucketLinkRows.rows
+    val keys = graft.core.Tables.bucketKeys(spark, sf)
     for (link <- Seq("link-broken", "link-cycle1")) {
       val vol = if (link == "link-broken") "vol3" else "vol0"
-      // resolving the link may probe the bucket table (a dangling link's
-      // target); the listing itself must add nothing to that
       val (status, resolveJobs) = jobsStarted(spark)(_ =>
-        graft.operators.Links.resolveOne(links, buckets, vol, link))
+        graft.operators.Links.resolveOne(links, keys, vol, link))
       assert(status.isLeft, link)
+      assert(resolveJobs === 0, link)
       val (out, jobs) = jobsStarted(spark)(_ =>
         rows(Api.listStatusFso(spark, sf, vol, link, "warehouse")))
       assert(out.isEmpty, link)
-      assert(jobs === resolveJobs, link)
+      assert(jobs === 0, link)
+    }
+  }
+
+  test("API facade: the per-request driver link chase agrees with the " +
+    "catalog query, up to the hop bound") {
+    import graft.operators.Links
+    // a straight chain of n links ending at a real bucket
+    def chain(name: String, n: Int) = (1 to n).map { i =>
+      val (sv, sb) = if (i < n) ("deep", s"$name${i + 1}") else ("vol0", "bucket0")
+      ("deep", s"$name$i", sv, sb)
+    }
+    val links = graft.core.Tables.bucketLinkRows.rows ++
+      chain("max", Links.MaxHops) ++ chain("over", Links.MaxHops + 1)
+    val catalog = Links.resolveBucketLinks(
+        links.toDF("volume", "bucket", "source_volume", "source_bucket"),
+        graft.core.Tables.buckets(spark, sf))
+      .select("volume", "bucket", "resolved_volume", "resolved_bucket", "status")
+      .collect().map(r => (r.getString(0), r.getString(1)) ->
+        (r.getString(2), r.getString(3), r.getString(4))).toMap
+    assert(catalog(("deep", "max1"))._3 === "OK")
+    assert(catalog(("deep", "over1"))._3 === "CYCLE")
+    val keys = graft.core.Tables.bucketKeys(spark, sf)
+    val plain = ("vol0", "bucket3")
+    val missing = ("vol9", "no-such-bucket")
+    assert(keys.contains(plain) && !keys.contains(missing))
+    for ((v, b) <- links.map(l => (l._1, l._2)) :+ plain :+ missing) {
+      val expected = catalog.get((v, b)) match {
+        case Some((rv, rb, "OK")) => Right((rv, rb))
+        case Some((_, _, status)) => Left(status)
+        case None => Right((v, b)) // not a link: resolves to itself
+      }
+      assert(Links.resolveOne(links, keys, v, b) === expected, s"$v/$b")
     }
   }
 
