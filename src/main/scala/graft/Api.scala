@@ -23,10 +23,11 @@ object Api {
 
   // -- key lookups + listings ----------------------------------------------
   // Every key op first chases bucket links to the terminal real bucket
-  // (identity for non-links) — OmMetadataManagerImpl.java:1089-1093. The
-  // chase runs on the driver over the link fixture's rows and the bucket
-  // catalog's collected key set, so an RPC plans and runs only its
-  // namespace query.
+  // (identity for an existing non-link) — OmMetadataManagerImpl.java:
+  // 1089-1093. The chase runs on the driver over the link fixture's rows
+  // and the bucket catalog's collected key set, so an RPC plans and runs
+  // only its namespace query; a missing bucket or broken link gets the
+  // empty frame.
   private def resolved(s: SparkSession, d: String, volume: String,
                        bucket: String): Option[(String, String)] =
     Links.resolveOne(T.bucketLinkRows.rows, T.bucketKeys(s, d),
@@ -38,7 +39,7 @@ object Api {
     resolved(s, d, volume, bucket) match {
       case Some((v, b)) => base.filter(col("volume") === v &&
         col("bucket") === b && col("key") === key)
-      case None => base.limit(0) // broken link: no key, flagged in catalog
+      case None => base.limit(0) // missing bucket or broken link: no key
     }
   }
 

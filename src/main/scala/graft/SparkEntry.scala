@@ -116,52 +116,6 @@ object SparkEntry {
     TempDirs.parquet(s, "ngsets", d)(
       Dedup.ngramSets(corpusDocs(s, d), ngramDictCached(s, d)))
 
-  /** Build every once-per-source index/verification artifact — the
-    * engine's "index ingest", run at the same point the key-sorted
-    * warehouse is built (Bench warmup / first deployment), so per-query
-    * timings measure steady-state probes rather than one-time builds. */
-  def prebuildArtifacts(s: SparkSession, d: String): Unit = {
-    minhashBandsCached(s, d).count()
-    verifiedPairsCached(s, d).count()
-    ivfCentroidsCached(s, d).count()
-    pqCodebooksCached(s, d).count()
-    embedPairsCached(s, d).count()
-    // stored-state fixtures whose derivation is ingest cost: the tag
-    // store (a full put-ladder run) and the synthesized CDC log head —
-    // without prewarm their build lands on whichever query runs first
-    taggedKeysCached(s, d).count()
-    changeLogCached(s, d).count()
-    // the health-check chain fold is a container-dim fixture consumed by
-    // two queries (chain + report) — its one-off derivation is ingest cost
-    healthChainCached(s, d).count()
-    // request fixtures + the memoized dims the ladders probe: each is a
-    // one-off (JVM, dir) build — un-prewarmed, the first consumer query in
-    // a bench sweep gets charged the build (the r11 sweep published 3-6 s
-    // readings for 0.1-0.8 s queries this way; VERDICT r11 #1)
-    tagRequestsCached(s, d).count()
-    tagEntriesCached(s, d).count()
-    keysDeleteRequestsCached(s, d).count()
-    mpuInitiateRequestsCached(s, d).count()
-    T.buckets(s, d).count()
-    T.tenantAccessIds(s, d).count()
-    T.mpuOpenParts(s, d).count()
-    // the nested key-table attributes are stored value fields (OmKeyInfo)
-    T.objectsNested(s, d).count()
-    // Recon's maintained pending-deletion rollup store
-    pendingRollupsCached(s, d).count()
-    // the duplicate-cluster assignment over the persisted pairs
-    docClustersCached(s, d).count()
-    // the stored-dictionary verification index (incremental ingest path)
-    ngramDictCached(s, d).count()
-    ngramSetsCached(s, d).count()
-    // raw `orders` is the one base table no memoized artifact reads —
-    // without a warmup scan its first-touch parquet footer + page-cache
-    // cost lands on whichever audit/heatmap query runs first in a bench
-    // session (r9 charged it to q_heatmap: 2.72× the r1 recording on an
-    // unchanged plan)
-    T.auditAccess(s, d).count()
-  }
-
   // The synthesized CDC log is an ingest-time artifact (the real system
   // RECEIVES it); materialized once so consumers pay a scan, not the
   // synthesis.
@@ -265,18 +219,11 @@ object SparkEntry {
       CommitLog.keysDeleteBatchDecisions(keysDeleteRequestsCached(s, d),
         T.objects(s, d), T.buckets(s, d))),
     // FSO DeleteKey ladder: bucket → path resolve → dir emptiness. The
-    // dir-path set derives in one ancestor explode (no iterative resolve:
-    // the probe needs paths, not ids)
+    // dir probe reads the stored directory path index (no iterative
+    // resolve: the probe needs paths, not ids)
     "q_delete_key" -> ((s, d) =>
       CommitLog.keyDeleteDecisions(T.deleteKeyRequests(s, d),
-        T.objects(s, d), T.buckets(s, d),
-        T.objects(s, d)
-          .withColumn("pdir", Aggregates.parentDirOf("key"))
-          .filter(col("pdir") =!= "")
-          .select(col("volume"), col("bucket"),
-            org.apache.spark.sql.functions.explode(
-              Aggregates.dirAndAncestors("pdir")).as("path"))
-          .distinct())),
+        T.objects(s, d), T.buckets(s, d), T.directoryPathsFso(s, d))),
     // ---- aggregation family (SURVEY §2.4) ----
     "q_filesize_histogram" -> ((s, d) =>
       Aggregates.fileSizeHistogram(T.objects(s, d))),
@@ -428,8 +375,7 @@ object SparkEntry {
         Dedup.simhash(T.documents(s, d)).localCheckpoint())),
     // the one-row degeneracy VERDICT the ingest gates on (raw pigeonhole
     // pairs vs surviving sig pairs, integer x1000 ratio — the fallback
-    // trigger for narrower chunk keys); bench re-publishes it for the
-    // 100x corpus as sf10_simhash_degeneracy_*
+    // trigger for narrower chunk keys)
     // localCheckpoint: the degeneracy plan references the signature
     // frame ~5 times (chunk stats, counts, intra, pigeonhole join) —
     // same pinning rule as simhashPairs; scale callers pass a stored
@@ -974,24 +920,24 @@ object SparkEntry {
         T.openKeys(s, d), T.multipartParts(s, d), T.deletedDirs(s, d))),
     // CreateDirectory ladder: root guard, file-in-path guards (self and
     // ancestor), idempotent DIR_EXISTS, minted-parents count.
-    // the ancestor set IS the memoized dir warehouse (strict key
+    // the ancestor set IS the stored directory path index (strict key
     // prefixes, distinct) — read it instead of re-exploding the namespace
     "q_fso_mkdir" -> ((s, d) =>
       Hierarchy.mkdirDecisions(T.fsoMkdirRequests(s, d), T.objects(s, d),
         T.buckets(s, d),
-        T.dirPaths(s, d))),
+        T.directoryPathsFso(s, d))),
     // CreateFile ladder: overwrite/recursive flags, file-in-path guards,
     // immediate-parent requirement, minted parents on recursive create.
     "q_create_file" -> ((s, d) =>
       Hierarchy.createFileDecisions(T.createFileRequests(s, d),
         T.objects(s, d), T.buckets(s, d),
-        T.dirPaths(s, d))),
+        T.directoryPathsFso(s, d))),
     // FSO rename ladder: hsync guard, own-subtree guard, into-dir moves
     // with dst/basename collision, dst-parent existence.
     "q_fso_rename" -> ((s, d) =>
       CommitLog.fsoRenameDecisions(T.fsoRenameRequests(s, d),
         T.objects(s, d), T.buckets(s, d),
-        T.dirPaths(s, d))),
+        T.directoryPathsFso(s, d))),
     "q_multi_delete" -> ((s, d) =>
       S3Ops.multiDelete(T.objects(s, d), T.deleteRequests(s, d),
         T.volumes(s, d))),

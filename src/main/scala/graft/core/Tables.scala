@@ -40,8 +40,7 @@ object Tables {
    * column pruning + (volume,bucket) directory pruning + key-range
    * row-group stats), exactly like the sf1/sf10 probes. The synthesis
    * VIEW behind it is [[objectsView]] — fixture creation (ingest), used
-   * only to build the warehouse and by Bench's ingest metric so that
-   * metric keeps measuring synthesize+sort+write.
+   * only to build the warehouse.
    */
   def objects(spark: SparkSession, dir: String): DataFrame =
     // re-select the view's canonical column ORDER: the partitioned read
@@ -245,13 +244,7 @@ object Tables {
     * params, param order, fragments. doc_id DIV 7 groups collide after
     * canonicalization exactly when the differing raw parts all fold. */
   def docUrls(spark: SparkSession, dir: String): DataFrame =
-    docUrlsFrom(documents(spark, dir))
-
-  /** The URL synthesis over ANY documents-shaped input (pure doc_id
-    * arithmetic — shared by the catalog table and the 10×/100× scale
-    * probes, which need the funnel's URL stage over a cloned corpus). */
-  def docUrlsFrom(docs: DataFrame): DataFrame =
-    docs.select(
+    documents(spark, dir).select(
       col("doc_id"),
       concat(
         when(col("doc_id") % 2 === 0, lit("HTTPS")).otherwise(lit("https")),
@@ -272,49 +265,6 @@ object Tables {
           .otherwise(lit("")),
         when(col("doc_id") % 11 === 0, lit("#sec")).otherwise(lit("")))
         .as("url"))
-
-  /** Near-dup scaled document corpus for the scale probes: every doc
-    * cloned `mult`× with a per-clone token suffix, so clones are
-    * NEAR-dups of the original (high shingle overlap — the realistic
-    * LSH load), not byte-identical copies. ONE definition shared by
-    * Bench's 10×/100× blocks and any standalone scale probe, so the
-    * probes can never quietly measure different corpora. */
-  def docsScaled(docs: DataFrame, mult: Int): DataFrame =
-    docs.crossJoin(docs.sparkSession.range(mult).toDF("rep"))
-      .withColumn("doc_id", col("doc_id") * mult + col("rep"))
-      .withColumn("text", concat(col("text"), lit(" rep"),
-        col("rep").cast("string")))
-      .drop("rep")
-
-  /** 10× namespace scale-up (one definition for the bench probes and
-    * every A/B diagnostic tool, so a tool can never silently scale a
-    * DIFFERENT population than the bench it attributes). The orderkey
-    * path segment gains the replica digit, so the DIRECTORY population
-    * scales 10× too, not just files-per-dir. object_id maps the replica
-    * digit ABOVE the two low digits — (id DIV 100)·1000 + rep·100 +
-    * id%100, injective (id%100 and rep recover id DIV 100) — so the
-    * commit log's churn predicate ((object_id DIV 10) % 10 == 0, the
-    * TENS digit) sees the same per-replica distribution as the 1× id
-    * population, and applying the map twice (100×) still preserves it.
-    * A naive id·10+rep shifted the linenumber (1..7, never 0) into the
-    * tens digit and silently EMPTIED the log's churn branches at scale
-    * (caught by the r13 bench rows gate). */
-  def namespaceScaled10(df: DataFrame): DataFrame =
-    df.crossJoin(df.sparkSession.range(10).toDF("rep"))
-      .withColumn("key", expr(
-        """concat(element_at(split(key, '/'), 1), '/',
-                  element_at(split(key, '/'), 2), '/',
-                  element_at(split(key, '/'), 3) || rep, '/',
-                  element_at(split(key, '/'), 4))"""))
-      .withColumn("object_id", expr(
-        "(object_id DIV 100) * 1000 + rep * 100 + object_id % 100"))
-      .drop("rep")
-
-  /** Scaled embedding corpus (vec_id re-minted, vectors unchanged). */
-  def embScaled(emb: DataFrame, mult: Int): DataFrame =
-    emb.crossJoin(emb.sparkSession.range(mult).toDF("rep"))
-      .withColumn("vec_id", col("vec_id") * mult + col("rep"))
-      .drop("rep")
 
   /** ec_read_blocks: degraded-read scenarios — full/short blocks, every
     * reader transition, parity shortfall, both EC widths. Sizes in MiB
@@ -776,9 +726,8 @@ object Tables {
   def objectsNested(spark: SparkSession, dir: String): DataFrame =
     TempDirs.parquet(spark, "nested", dir)(nestedFrom(objects(spark, dir)))
 
-  /** The nested-column synthesis over ANY objects-shaped input (shared by
-    * the catalog table and the 10× scale probe). */
-  def nestedFrom(objects: DataFrame): DataFrame =
+  /** The nested-column synthesis over an objects-shaped input. */
+  private def nestedFrom(objects: DataFrame): DataFrame =
     objects
       .withColumn("tags",
         map(lit("flag"), col("tag_flag"), lit("owner"), col("owner")))
@@ -815,21 +764,6 @@ object Tables {
   // objectsSorted.
   def directoriesFso(spark: SparkSession, dir: String): DataFrame =
     TempDirs.parquet(spark, "dirs", dir)(directoriesFsoBuild(objects(spark, dir)))
-
-  /** The distinct (volume, bucket, path) ancestor set of the namespace —
-    * the FULL-PATH view of the dir warehouse that the mkdir/create-file/
-    * rename ladders probe. Memoized once per source dir: the explode +
-    * distinct over the whole namespace is ingest cost, not per-query
-    * cost (it IS the directoryTable a real OM maintains incrementally). */
-  def dirPaths(spark: SparkSession, dir: String): DataFrame =
-    TempDirs.parquet(spark, "dirpaths", dir)(
-      objects(spark, dir)
-        .withColumn("pdir", graft.operators.Aggregates.parentDirOf("key"))
-        .filter(col("pdir") =!= "")
-        .select(col("volume"), col("bucket"),
-          explode(graft.operators.Aggregates.dirAndAncestors("pdir"))
-            .as("path"))
-        .distinct())
 
   def filesFso(spark: SparkSession, dir: String): DataFrame =
     TempDirs.parquet(spark, "files", dir)(filesFsoBuild(objects(spark, dir)))

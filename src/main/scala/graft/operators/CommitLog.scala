@@ -130,11 +130,10 @@ object CommitLog {
     * window dual's exact tie order) instead of the row_number window. The
     * two plans resolve winners through disjoint execution paths
     * (WindowGroupLimit sort-prune vs max_by aggregate buffers), so
-    * canon-equality against [[appliedState]] at the 10×/100× bench scales
-    * is evidence the ANSWER survives scale-up, not just the cost — an
-    * overflow / partition-boundary / tie-ambiguity class bug would have
-    * to hit both plans identically to pass. Spec-gated at fixture scale
-    * (CommitLogSpec); the bench invariant gate runs it per scale probe. */
+    * canon-equality against [[appliedState]] is evidence of the ANSWER,
+    * not just the cost — an overflow / partition-boundary /
+    * tie-ambiguity class bug would have to hit both plans identically to
+    * pass. Spec-gated at fixture scale (CommitLogSpec). */
   def appliedStateAggDual(objects: DataFrame): DataFrame = {
     val log = synthesizeLog(objects)
     log.filter(col("seq") <= Snapshots.last._2)

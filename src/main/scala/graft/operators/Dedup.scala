@@ -254,22 +254,13 @@ object Dedup {
     * share one output contract, so consumers cannot tell which ran.
     * PRECONDITION: `sh` must be pinned (a stored signature table, or
     * localCheckpoint'd) — the verdict and the chosen join each evaluate
-    * it several times. */
-  /** The auto-switch predicate alone — shared with the bench's
-    * `sf10_simhash_plan` reporting key (VERDICT r15 #7) so a silent
-    * trigger change cannot leave the published plan label stale: the
-    * paired keys pigeonhole only up to hamming 4 (two of six chunks
-    * must survive), so a wider-radius caller keeps the single-chunk
-    * plan whatever the ratio says. */
-  def simhashPairedPlanSelected(ratioX1000: Long, maxHamming: Int = 3,
-                                triggerRatioX1000: Long = 10000L): Boolean =
-    ratioX1000 >= triggerRatioX1000 && maxHamming <= 4
-
+    * it several times. The paired keys pigeonhole only up to hamming 4
+    * (two of six chunks must survive), so a wider-radius caller keeps
+    * the single-chunk plan whatever the ratio says. */
   def simhashPairsAuto(sh: DataFrame, maxHamming: Int = 3,
                        triggerRatioX1000: Long = 10000L): DataFrame = {
     val ratio = simhashDegeneracy(sh, maxHamming).head().getLong(3)
-    val paired = simhashPairedPlanSelected(ratio, maxHamming,
-      triggerRatioX1000)
+    val paired = ratio >= triggerRatioX1000 && maxHamming <= 4
     System.err.println("[dedup] simhash pigeonhole plan: " +
       (if (paired) "chunk-pair 6x10 (degenerate single-chunk buckets)"
        else "single-chunk 4x15") +
@@ -377,8 +368,7 @@ object Dedup {
     * clique corpus because whole perturbed-clone families collapse to
     * single signatures — yet each surviving sig pair carries ~12 doc
     * pairs, so candidate work per OUTPUT pair is 6.7×, under trigger);
-    * both yields publish so either view is checkable. Published
-    * per-corpus by the bench as sf10_simhash_degeneracy_*. */
+    * both yields publish so either view is checkable. */
   def simhashDegeneracy(sh: DataFrame, maxHamming: Int = 3): DataFrame = {
     val raw = simhashChunkStats(sh)
       .agg(coalesce(sum(expr("n_sigs * (n_sigs - 1) DIV 2")), lit(0L))
@@ -732,8 +722,7 @@ object Dedup {
    * End-to-end dedup funnel: URL-level exact dedup first (the cheap
    * zero-shuffle pre-pass), then banded-LSH near-dup keep-one — each doc
    * attributed to the FIRST stage that drops it (the dedup dual of the
-   * curation funnel). One definition shared by the declared query and the
-   * 100× scale probe so the two can never measure different plans.
+   * curation funnel).
    */
   def dedupFunnel(docUrls: DataFrame, clusters: DataFrame,
                   quality: DataFrame): DataFrame = {

@@ -146,10 +146,9 @@ object Joins {
   /** Verification dual of [[snapshotDiff]]: the same CREATE / DELETE /
     * RENAME / MODIFY classification derived from two ANTI-joins + one
     * INNER join instead of one full-outer join — disjoint join plans and
-    * null paths, so canon-equality against [[snapshotDiff]] at the
-    * 10×/100× bench scales guards the diff's ANSWER, not just its cost.
-    * Spec-gated at fixture scale (CommitLogSpec); the bench invariant
-    * gate runs it per scale probe. */
+    * null paths, so canon-equality against [[snapshotDiff]] guards the
+    * diff's ANSWER, not just its cost. Spec-gated at fixture scale
+    * (CommitLogSpec). */
   def snapshotDiffDual(v1: DataFrame, v2: DataFrame): DataFrame = {
     val a = v1.select(
       col("object_id"),

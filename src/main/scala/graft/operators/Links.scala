@@ -58,21 +58,21 @@ object Links {
   }
 
   /** One bucket's terminal resolution: Right((volume, bucket)) — identity
-    * for a name that is not a link — or Left(status) for a broken chain.
-    * This is the PER-REQUEST path, so it runs on the driver and starts no
-    * Spark plan or job: the chase follows `links` (volume, bucket,
-    * source_volume, source_bucket) rows — each hop is a catalog get in
-    * the reference, and the link catalog is control-plane-sized — and a
-    * terminal is checked against `buckets`, the (volume, bucket) set of
-    * the bucket catalog. `buckets` is taken by name: only a link chain
-    * that ends reads it. Same statuses and hop bound as
+    * for an existing bucket that is not a link — or Left(status):
+    * BUCKET_NOT_FOUND for a name that is neither a link nor a bucket (the
+    * reference fails it in resolveBucketLink), DANGLING/CYCLE for a broken
+    * chain. This is the PER-REQUEST path, so it runs on the driver and
+    * starts no Spark plan or job: the chase follows `links` (volume,
+    * bucket, source_volume, source_bucket) rows — each hop is a catalog
+    * get in the reference, and the link catalog is control-plane-sized —
+    * and a name is checked against `buckets`, the (volume, bucket) set of
+    * the bucket catalog. Same DANGLING/CYCLE statuses and hop bound as
     * [[resolveBucketLinks]], the catalog-scale query. */
   def resolveOne(links: Seq[(String, String, String, String)],
-                 buckets: => Set[(String, String)], volume: String,
+                 buckets: Set[(String, String)], volume: String,
                  bucket: String): Either[String, (String, String)] = {
     val chain = links.map { case (v, b, sv, sb) => (v, b) -> (sv, sb) }.toMap
-    if (!chain.contains((volume, bucket))) Right((volume, bucket))
-    else {
+    if (chain.contains((volume, bucket))) {
       var cur = (volume, bucket)
       var hops = 0
       while (chain.contains(cur) && hops < MaxHops) { cur = chain(cur); hops += 1 }
@@ -80,6 +80,8 @@ object Links {
       else if (!buckets.contains(cur)) Left("DANGLING")
       else Right(cur)
     }
+    else if (buckets.contains((volume, bucket))) Right((volume, bucket))
+    else Left("BUCKET_NOT_FOUND")
   }
 
   /** listKeys THROUGH a (possibly linked) bucket: resolve first, then list
@@ -88,13 +90,13 @@ object Links {
     * (OmMetadataManagerImpl.java:1089-1093). */
   def listKeysVia(objects: DataFrame,
                   links: Seq[(String, String, String, String)],
-                  buckets: => Set[(String, String)], volume: String,
+                  buckets: Set[(String, String)], volume: String,
                   bucket: String, prefix: String, startKey: String,
                   maxKeys: Int): DataFrame =
     resolveOne(links, buckets, volume, bucket) match {
       case Right((v, b)) =>
         Listing.listKeys(objects, v, b, prefix, startKey, maxKeys)
-      case Left(_) => // DANGLING/CYCLE: empty page, flagged in the catalog
+      case Left(_) => // missing bucket or broken link: empty page
         Listing.listKeys(objects, volume, bucket, prefix, startKey, maxKeys)
           .limit(0)
     }

@@ -389,7 +389,7 @@ object TextAnalysis {
     // cores, n_sources is a domain enum)
     synchronized {
       // the previous frame may belong to an already-stopped session
-      // (Bench runs probe + base sessions in one JVM) — dropping a dead
+      // (a JVM may run several sessions in turn) — dropping a dead
       // session's entry is a no-op, not an error
       lastRanked.filter(!_.sparkSession.sparkContext.isStopped)
         .foreach(df => scala.util.Try(df.unpersist(false)))

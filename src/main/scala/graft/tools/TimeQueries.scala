@@ -2,38 +2,50 @@ package graft.tools
 
 import org.apache.spark.metrics.source.CodegenMetrics
 
-/** Dev harness: time a subset of SparkEntry queries without a full bench
-  * run. Usage: runMain graft.tools.TimeQueries <sfDir> <query>[,<query>...]
-  * [reps]. Prints per-rep seconds so warm-vs-cold costs are visible, each
+/** The timing harness: time SparkEntry queries to their full output.
+  * Usage: runMain graft.tools.TimeQueries <sfDir> (all | <query>[,<query>...])
+  * [reps]. `all` sweeps every declared query in `SparkEntry.queries` order
+  * (the fixed order Verify writes HASHES.json in). An unknown name fails
+  * the run before any timing, and a query that throws fails it at once:
+  * a broken query is never reported as a fast one.
+  * Prints per-rep seconds so warm-vs-cold costs are visible, each
   * followed by the part of them spent building the DataFrame (`(cS)`:
   * construct, including any job an operator runs eagerly) and by the
   * rep's Janino compile count (`/Nc`): a warm rep that still compiles has
   * generated code that misses Spark's codegen cache. Example:
   * `0.41s(c0.02)/0c`.
   * Each rep produces every output column (a `noop` write), not a
-  * `count()` that lets Catalyst prune the columns and what feeds them. */
+  * `count()` that lets Catalyst prune the columns and what feeds them.
+  * `SPARK_GRAFT_CPUS` sets the local thread count (default: every
+  * processor of the machine). */
 object TimeQueries {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val names = args(1).split(",").toSeq
+    val declared = graft.SparkEntry.queries
+    val names =
+      if (args(1) == "all") declared.keys.toSeq else args(1).split(",").toSeq
+    val unknown = names.filterNot(declared.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = graft.core.GraftSession.local(cpus)
-    graft.SparkEntry.entry(spark).count() // session/codegen warmup
-    names.foreach { n =>
-      val fn = graft.SparkEntry.queries(n)
-      val runs = (1 to reps).map { _ =>
-        val c0 = compiles
-        val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        val built = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        ((System.nanoTime() - t0) / 1e9, (built - t0) / 1e9, compiles - c0)
+    try {
+      graft.SparkEntry.entry(spark).count() // session/codegen warmup
+      names.foreach { n =>
+        val fn = declared(n)
+        val runs = (1 to reps).map { _ =>
+          val c0 = compiles
+          val t0 = System.nanoTime()
+          val df = fn(spark, sfDir)
+          val built = System.nanoTime()
+          df.write.format("noop").mode("overwrite").save()
+          ((System.nanoTime() - t0) / 1e9, (built - t0) / 1e9, compiles - c0)
+        }
+        println(f"[time] $n%-28s " + runs.map { case (t, construct, c) =>
+          f"$t%.2fs(c$construct%.2f)/${c}c" }.mkString(" "))
       }
-      println(f"[time] $n%-28s " + runs.map { case (t, construct, c) =>
-        f"$t%.2fs(c$construct%.2f)/${c}c" }.mkString(" "))
-    }
-    spark.stop()
+    } finally spark.stop()
   }
 
   /** Janino compiles so far in this JVM (whole-stage and expression code). */

@@ -77,4 +77,15 @@ class AggregatesFoldSpec extends SparkSpecBase {
     val got = canon(Aggregates.nsSummarySorted(df))
     assert(got === Seq(Seq("v", "b", "a", 2L, 3L, 9L)))
   }
+
+  test("q_ns_summary conserves keys: top-level num_files == keys with " +
+    "at least 2 segments") {
+    val topLevelFiles = SparkEntry.queries("q_ns_summary")(spark, sf)
+      .filter(!col("dir").contains("/"))
+      .agg(coalesce(sum("num_files"), lit(0L))).head().getLong(0)
+    val multiSegmentKeys = graft.core.Tables.objectsMixedSorted(spark, sf)
+      .filter(size(split(col("key"), "/")) >= 2).count()
+    assert(multiSegmentKeys > 0)
+    assert(topLevelFiles === multiSegmentKeys)
+  }
 }

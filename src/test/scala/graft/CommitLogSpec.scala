@@ -412,4 +412,15 @@ class CommitLogSpec extends SparkSpecBase {
         ".snapshot/ghost/warehouse/N")
     }
   }
+
+  test("q_snapshot_diff conserves cardinality: CREATE - DELETE == " +
+    "|v2| - |v1|") {
+    val byType = SparkEntry.queries("q_snapshot_diff")(spark, sf)
+      .groupBy("diff_type").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val Seq(creates, deletes) = Seq("CREATE", "DELETE").map(byType.getOrElse(_, 0L))
+    assert(creates > 0 && deletes > 0)
+    assert(creates - deletes ===
+      Tables.snapshotV2(spark, sf).count() - Tables.snapshotV1(spark, sf).count())
+  }
 }

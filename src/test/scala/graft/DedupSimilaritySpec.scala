@@ -6,6 +6,7 @@ import graft.operators.{Dedup, Similarity}
 /** Dedup + similarity invariants on tiny hand-built corpora. */
 class DedupSimilaritySpec extends SparkSpecBase {
   import spark.implicits._
+  private val sf = "/root/testdata/sf0.001"
 
   private def docs(rows: (Long, String)*): org.apache.spark.sql.DataFrame =
     rows.toDF("doc_id", "text")
@@ -685,5 +686,24 @@ class DedupSimilaritySpec extends SparkSpecBase {
       .groupBy(_.getAs[String]("source"))
       .view.mapValues(_.map(_.getAs[Long]("rank_in_source")).sorted.toSeq)
     ranks.foreach { case (_, rs) => assert(rs === (1L to rs.length)) }
+  }
+
+  test("q_dedup_keep conserves the corpus: one decision per document, " +
+    "exactly one KEEP per cluster") {
+    val docIds = graft.core.Tables.documents(spark, sf).select("doc_id")
+    val keep = SparkEntry.queries("q_dedup_keep")(spark, sf)
+    assert(keep.select("doc_id").exceptAll(docIds).isEmpty &&
+      docIds.exceptAll(keep.select("doc_id")).isEmpty)
+    val keepsPerCluster = keep.groupBy("cluster_id")
+      .agg(sum(when(col("decision") === "KEEP", 1L).otherwise(0L)).as("k"))
+    assert(keepsPerCluster.count() > 0)
+    assert(keepsPerCluster.filter(col("k") =!= 1L).isEmpty)
+  }
+
+  test("q_dedup_funnel conserves the corpus: one verdict per document") {
+    val docIds = graft.core.Tables.documents(spark, sf).select("doc_id")
+    val funnel = SparkEntry.queries("q_dedup_funnel")(spark, sf)
+      .select("doc_id")
+    assert(funnel.exceptAll(docIds).isEmpty && docIds.exceptAll(funnel).isEmpty)
   }
 }

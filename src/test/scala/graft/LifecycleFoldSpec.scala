@@ -108,4 +108,15 @@ class LifecycleFoldSpec extends SparkSpecBase {
     // are RETAINED, so retained rows include non-hsync entries
     assert(rows.exists(r => r._3 == "RETAIN" && !r._2))
   }
+
+  test("q_latest_version: one winner per distinct (volume, bucket, " +
+    "3-segment key)") {
+    val winners = SparkEntry.queries("q_latest_version")(spark, sf).count()
+    val logicalKeys = graft.core.Tables.objectsSorted(spark, sf)
+      .select(col("volume"), col("bucket"),
+        expr("concat_ws('/', slice(split(key, '/'), 1, 3))"))
+      .distinct().count()
+    assert(logicalKeys > 0)
+    assert(winners === logicalKeys)
+  }
 }

@@ -168,7 +168,8 @@ class PeriodicScanApiSpec extends SparkSpecBase {
       val expected = catalog.get((v, b)) match {
         case Some((rv, rb, "OK")) => Right((rv, rb))
         case Some((_, _, status)) => Left(status)
-        case None => Right((v, b)) // not a link: resolves to itself
+        case None if keys.contains((v, b)) => Right((v, b)) // a bucket: itself
+        case None => Left("BUCKET_NOT_FOUND") // neither link nor bucket
       }
       assert(Links.resolveOne(links, keys, v, b) === expected, s"$v/$b")
     }

@@ -10,6 +10,19 @@ class StreamingSpec extends SparkSpecBase {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** A byte copy of the tree at `src` in a fresh temp dir. */
+  private def cloneDir(src: String): String = {
+    import java.nio.file._
+    val dst = Paths.get(graft.core.TempDirs.create("graft_test_clone_"))
+    val s = Files.walk(Paths.get(src))
+    try s.forEach { p =>
+      val t = dst.resolve(Paths.get(src).relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t)
+      else { Files.createDirectories(t.getParent); Files.copy(p, t) }
+    } finally s.close()
+    dst.toString
+  }
+
   test("CDC log replays to exactly the batch-reprocessed net state " +
     "(mixed 4/6-segment namespace — data-driven ancestor depth)") {
     val objects = Tables.objectsMixed(spark, sf)
@@ -170,7 +183,7 @@ class StreamingSpec extends SparkSpecBase {
       ChangeStream.fileSizeView, ChangeStream.countsView,
       ChangeStream.nsSummaryView)
     val expect = views.map(v => rows(v(spark, work)))
-    val copy = Bench.cloneDir(work)
+    val copy = cloneDir(work)
     ChangeStream.deleteRecursively(java.nio.file.Paths.get(work))
     assert(views.map(v => rows(v(spark, copy))) === expect)
   }
