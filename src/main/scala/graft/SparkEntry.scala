@@ -46,29 +46,13 @@ object SparkEntry {
         T.containersScm(s, d), T.containersOm(s, d),
         T.pipelineMembers(s, d)))
 
-  // Corpus-derived REQUEST fixtures that ladders reference several times
-  // per plan (probe + decision + rollup subtrees): materialized once per
-  // (JVM, dir) — in a real deployment the request batch is an INPUT, so
-  // deriving it once is the honest cost shape (each re-read was a full
-  // corpus scan + agg inside every reuse of the subtree).
-  private def tagRequestsCached(s: SparkSession, d: String): DataFrame =
-    TempDirs.parquet(s, "tagreq", d)(T.tagRequests(s, d))
-  private def tagEntriesCached(s: SparkSession, d: String): DataFrame =
-    TempDirs.parquet(s, "tagent", d)(T.tagEntries(s, d))
-  private def keysDeleteRequestsCached(s: SparkSession,
-                                       d: String): DataFrame =
-    TempDirs.parquet(s, "kdreq", d)(T.keysDeleteRequests(s, d))
-  private def mpuInitiateRequestsCached(s: SparkSession,
-                                        d: String): DataFrame =
-    TempDirs.parquet(s, "mireq", d)(T.mpuInitiateRequests(s, d))
-
   // The stored object-tag state = the put ladder's APPLIED outcomes —
   // a derived table exactly like the snapshot warehouse; the delete
   // ladder probes it rather than re-running the whole put plan inline.
   private def taggedKeysCached(s: SparkSession, d: String): DataFrame =
     TempDirs.parquet(s, "tagged", d)(
-      S3Ops.putObjectTagging(tagRequestsCached(s, d),
-        tagEntriesCached(s, d), T.buckets(s, d), T.objects(s, d))
+      S3Ops.putObjectTagging(T.tagRequests(s, d),
+        T.tagEntries(s, d), T.buckets(s, d), T.objects(s, d))
         .filter(col("decision") === "APPLIED")
         .select("volume", "bucket", "key"))
 
@@ -216,7 +200,7 @@ object SparkEntry {
     // missing-bucket fail the whole batch, per-key KEY_NOT_FOUND /
     // UPDATE_ID_NOT_MATCH / ACCESS_DENIED, PARTIAL_DELETE rollup.
     "q_delete_keys_batch" -> ((s, d) =>
-      CommitLog.keysDeleteBatchDecisions(keysDeleteRequestsCached(s, d),
+      CommitLog.keysDeleteBatchDecisions(T.keysDeleteRequests(s, d),
         T.objects(s, d), T.buckets(s, d))),
     // FSO DeleteKey ladder: bucket → path resolve → dir emptiness. The
     // dir probe reads the stored directory path index (no iterative
@@ -703,8 +687,8 @@ object SparkEntry {
     // list order) ahead of the OM bucket/key probes — branch order per
     // EndpointBase.validateAndGetTagging + S3PutObjectTaggingRequest.
     "q_put_object_tagging" -> ((s, d) =>
-      S3Ops.putObjectTagging(tagRequestsCached(s, d),
-        tagEntriesCached(s, d), T.buckets(s, d), T.objects(s, d))),
+      S3Ops.putObjectTagging(T.tagRequests(s, d),
+        T.tagEntries(s, d), T.buckets(s, d), T.objects(s, d))),
     "q_put_bucket_tagging" -> ((s, d) =>
       S3Ops.putBucketTagging(T.bucketTagRequests(s, d),
         T.bucketTagEntries(s, d), T.buckets(s, d))),
@@ -722,7 +706,7 @@ object SparkEntry {
     // clear is unconditional (untagged target = AWS 204 success);
     // had_tags probes the PUT ladder's APPLIED outcomes.
     "q_delete_object_tagging" -> ((s, d) =>
-      S3Ops.deleteObjectTagging(tagRequestsCached(s, d).drop("cls"),
+      S3Ops.deleteObjectTagging(T.tagRequests(s, d).drop("cls"),
         T.buckets(s, d), T.objects(s, d), taggedKeysCached(s, d))),
     "q_delete_bucket_tagging" -> ((s, d) =>
       S3Ops.deleteBucketTagging(T.bucketTagRequests(s, d).drop("cls"),
@@ -750,7 +734,7 @@ object SparkEntry {
     // guard (the key itself existing is FINE — AWS parity), replication
     // preference request > bucket default > server default.
     "q_mpu_initiate" -> ((s, d) =>
-      Lifecycle.mpuInitiateDecisions(mpuInitiateRequestsCached(s, d),
+      Lifecycle.mpuInitiateDecisions(T.mpuInitiateRequests(s, d),
         T.buckets(s, d), T.bucketLinks(s, d), T.objects(s, d))),
     // CommitPart / AbortMultipartUpload write ladders — completes the MPU
     // protocol surface (initiate→commit→complete/abort→list).

@@ -1032,6 +1032,29 @@ object Tables {
   def tenantRevokeRequests(spark: SparkSession, dir: String): DataFrame =
     tenantRevokeRequestRows.df(spark)
 
+  /** The sampled head of a data-derived request batch: keys with
+    * object_id % n == 0, one request per id (lineitem carries duplicate
+    * (orderkey, linenumber) pairs, so object_id is NOT unique) by the
+    * smallest (bucket, key) pair ('|' never appears in either), split
+    * back into bucket0/key0. cls = (req_id DIV 10n) % k, the SECOND digit
+    * of probe = req_id DIV n (the last digit is a linenumber 1..7 and
+    * never reaches 0/8/9). `extra` columns ride along as per-id mins. */
+  private def sampledRequests(spark: SparkSession, dir: String, n: Int,
+                              k: Int, extra: String*): DataFrame =
+    objects(spark, dir)
+      .filter(col("object_id") % n === 0)
+      .groupBy(col("object_id").as("req_id"))
+      .agg(min(col("volume")).as("volume"),
+        min(concat(col("bucket"), lit("|"), col("key"))).as("bk") +:
+          extra.map(c => min(col(c)).as(c)): _*)
+      .select(Seq(col("req_id"),
+        (expr(s"req_id DIV ${10 * n}") % k).as("cls"),
+        expr(s"req_id DIV $n").as("probe"),
+        col("volume"),
+        substring_index(col("bk"), "|", 1).as("bucket0"),
+        substring_index(col("bk"), "|", -1).as("key0")) ++
+        extra.map(col): _*)
+
   /** fso_rename_requests: an FSO RenameKey batch sampled from the key
     * catalog (object_id % 131 == 0, canonicalized like [[tagRequests]]).
     * cls = second digit of probe picks the path shape:
@@ -1051,40 +1074,30 @@ object Tables {
     * empty source (INVALID_KEY_NAME — checked before everything).
     * Case-6 (dst an existing file elsewhere) has no deterministic
     * data-derived path and is covered by the micro spec. */
-  def fsoRenameRequests(spark: SparkSession, dir: String): DataFrame = {
-    val base = objects(spark, dir)
-      .filter(col("object_id") % 131 === 0)
-      .groupBy(col("object_id").as("req_id"))
-      .agg(min(col("volume")).as("volume"),
-        min(concat(col("bucket"), lit("|"), col("key"))).as("bk"))
-      .select(col("req_id"),
-        (expr("req_id DIV 1310") % 8).as("cls"),
-        expr("req_id DIV 131").as("probe"),
-        col("volume"),
-        substring_index(col("bk"), "|", 1).as("bucket0"),
-        substring_index(col("bk"), "|", -1).as("key0"))
-      .withColumn("pdir",
-        graft.operators.Aggregates.parentDirOf("key0"))
-      .withColumn("base", element_at(split(col("key0"), "/"), -1))
-    base.select(col("req_id"),
-      col("volume"),
-      when(col("probe") % 13 === 3, lit("no-such-bucket"))
-        .otherwise(col("bucket0")).as("bucket"),
-      when(col("probe") % 17 === 5, lit(""))
-        .when(col("cls") === 1, concat(col("key0"), lit(".ghost")))
-        .when(col("cls").isin(2, 3, 7), col("pdir"))
-        .otherwise(col("key0")).as("src_key"),
-      when(col("cls") === 0, concat(col("key0"), lit(".r0")))
-        .when(col("cls") === 1, concat(col("key0"), lit(".r1")))
-        .when(col("cls") === 2, concat(col("pdir"), lit("-moved")))
-        .when(col("cls") === 3, concat(col("pdir"), lit("/x/sub")))
-        .when(col("cls") === 4, col("key0"))
-        .when(col("cls") === 5 && col("probe") % 2 === 0,
-          lit("warehouse"))
-        .when(col("cls") === 5, col("pdir"))
-        .when(col("cls") === 6, concat(lit("nowhere/x/"), col("base")))
-        .otherwise(col("pdir")).as("to_key"))
-  }
+  def fsoRenameRequests(spark: SparkSession, dir: String): DataFrame =
+    TempDirs.parquet(spark, "fsorenreq", dir)(
+      sampledRequests(spark, dir, 131, 8)
+        .withColumn("pdir",
+          graft.operators.Aggregates.parentDirOf("key0"))
+        .withColumn("base", element_at(split(col("key0"), "/"), -1))
+        .select(col("req_id"),
+          col("volume"),
+          when(col("probe") % 13 === 3, lit("no-such-bucket"))
+            .otherwise(col("bucket0")).as("bucket"),
+          when(col("probe") % 17 === 5, lit(""))
+            .when(col("cls") === 1, concat(col("key0"), lit(".ghost")))
+            .when(col("cls").isin(2, 3, 7), col("pdir"))
+            .otherwise(col("key0")).as("src_key"),
+          when(col("cls") === 0, concat(col("key0"), lit(".r0")))
+            .when(col("cls") === 1, concat(col("key0"), lit(".r1")))
+            .when(col("cls") === 2, concat(col("pdir"), lit("-moved")))
+            .when(col("cls") === 3, concat(col("pdir"), lit("/x/sub")))
+            .when(col("cls") === 4, col("key0"))
+            .when(col("cls") === 5 && col("probe") % 2 === 0,
+              lit("warehouse"))
+            .when(col("cls") === 5, col("pdir"))
+            .when(col("cls") === 6, concat(lit("nowhere/x/"), col("base")))
+            .otherwise(col("pdir")).as("to_key")))
 
   /** volumes_ref: the volume catalog reduced to the delete-ladder probes
     * (bucket occupancy + tenant reference count; vol3 models the
@@ -1203,26 +1216,17 @@ object Tables {
     * mtime=-5 (invalid — rejected in preExecute BEFORE any lookup), 3
     * ghost key; probe%13==3 missing bucket. */
   def setTimesRequests(spark: SparkSession, dir: String): DataFrame =
-    objects(spark, dir)
-      .filter(col("object_id") % 127 === 0)
-      .groupBy(col("object_id").as("req_id"))
-      .agg(min(col("volume")).as("volume"),
-        min(concat(col("bucket"), lit("|"), col("key"))).as("bk"))
-      .select(col("req_id"),
-        (expr("req_id DIV 1270") % 4).as("cls"),
-        expr("req_id DIV 127").as("probe"),
-        col("volume"),
-        substring_index(col("bk"), "|", 1).as("bucket0"),
-        substring_index(col("bk"), "|", -1).as("key0"))
-      .select(col("req_id"), col("volume"),
-        when(col("probe") % 13 === 3, lit("no-such-bucket"))
-          .otherwise(col("bucket0")).as("bucket"),
-        when(col("cls") === 3, concat(col("key0"), lit(".ghost")))
-          .otherwise(col("key0")).as("key"),
-        when(col("cls") === 0, lit(800000000000L))
-          .when(col("cls") === 1, lit(-1L))
-          .when(col("cls") === 2, lit(-5L))
-          .otherwise(lit(800000000000L)).as("mtime"))
+    TempDirs.parquet(spark, "settimesreq", dir)(
+      sampledRequests(spark, dir, 127, 4)
+        .select(col("req_id"), col("volume"),
+          when(col("probe") % 13 === 3, lit("no-such-bucket"))
+            .otherwise(col("bucket0")).as("bucket"),
+          when(col("cls") === 3, concat(col("key0"), lit(".ghost")))
+            .otherwise(col("key0")).as("key"),
+          when(col("cls") === 0, lit(800000000000L))
+            .when(col("cls") === 1, lit(-1L))
+            .when(col("cls") === 2, lit(-5L))
+            .otherwise(lit(800000000000L)).as("mtime")))
 
   /** create_file_requests: an OMFileCreateRequest batch (object_id % 139,
     * canonicalized). cls: 0 fresh name (CREATED), 1 existing file without
@@ -1232,29 +1236,20 @@ object Tables {
     * 6 deep new path recursive (CREATED + minted parents);
     * probe%13==3 missing bucket. */
   def createFileRequests(spark: SparkSession, dir: String): DataFrame =
-    objects(spark, dir)
-      .filter(col("object_id") % 139 === 0)
-      .groupBy(col("object_id").as("req_id"))
-      .agg(min(col("volume")).as("volume"),
-        min(concat(col("bucket"), lit("|"), col("key"))).as("bk"))
-      .select(col("req_id"),
-        (expr("req_id DIV 1390") % 7).as("cls"),
-        expr("req_id DIV 139").as("probe"),
-        col("volume"),
-        substring_index(col("bk"), "|", 1).as("bucket0"),
-        substring_index(col("bk"), "|", -1).as("key0"))
-      .withColumn("pdir", graft.operators.Aggregates.parentDirOf("key0"))
-      .select(col("req_id"), col("volume"),
-        when(col("probe") % 13 === 3, lit("no-such-bucket"))
-          .otherwise(col("bucket0")).as("bucket"),
-        when(col("cls") === 0, concat(col("pdir"), lit("/fresh.dat")))
-          .when(col("cls").isin(1, 2), col("key0"))
-          .when(col("cls") === 3, col("pdir"))
-          .when(col("cls") === 4, concat(col("key0"), lit("/sub.dat")))
-          .otherwise(concat(col("pdir"), lit("/nd1/nd2/leaf.dat")))
-          .as("path"),
-        (col("cls") === 2).as("overwrite"),
-        (col("cls") === 6).as("recursive"))
+    TempDirs.parquet(spark, "createfilereq", dir)(
+      sampledRequests(spark, dir, 139, 7)
+        .withColumn("pdir", graft.operators.Aggregates.parentDirOf("key0"))
+        .select(col("req_id"), col("volume"),
+          when(col("probe") % 13 === 3, lit("no-such-bucket"))
+            .otherwise(col("bucket0")).as("bucket"),
+          when(col("cls") === 0, concat(col("pdir"), lit("/fresh.dat")))
+            .when(col("cls").isin(1, 2), col("key0"))
+            .when(col("cls") === 3, col("pdir"))
+            .when(col("cls") === 4, concat(col("key0"), lit("/sub.dat")))
+            .otherwise(concat(col("pdir"), lit("/nd1/nd2/leaf.dat")))
+            .as("path"),
+          (col("cls") === 2).as("overwrite"),
+          (col("cls") === 6).as("recursive")))
 
   /** key_commit_requests: an OMKeyCommitRequest batch (object_id % 89
     * == 0, canonicalized). cls = second digit of probe: 0/4/5 plain
@@ -1264,35 +1259,24 @@ object Tables {
     * marker, %9==1 lease-recovery marker, %2==0 committed-key-has-hsync
     * -writer. probe%13==3 rewrites the bucket to a missing one. */
   def keyCommitRequests(spark: SparkSession, dir: String): DataFrame =
-    objects(spark, dir)
-      .filter(col("object_id") % 89 === 0)
-      .groupBy(col("object_id").as("req_id"))
-      .agg(min(col("volume")).as("volume"),
-        min(concat(col("bucket"), lit("|"), col("key"))).as("bk"),
-        min(col("data_size")).as("data_size"))
-      .select(col("req_id"),
-        (expr("req_id DIV 890") % 6).as("cls"),
-        expr("req_id DIV 89").as("probe"),
-        col("volume"),
-        substring_index(col("bk"), "|", 1).as("bucket0"),
-        substring_index(col("bk"), "|", -1).as("key"),
-        col("data_size"))
-      .select(col("req_id"), col("volume"),
-        when(col("probe") % 13 === 3, lit("no-such-bucket"))
-          .otherwise(col("bucket0")).as("bucket"),
-        col("key"),
-        (col("cls") === 2).as("is_recovery"),
-        when(col("cls") === 1, col("req_id") * 7 % 100000 + 999983L)
-          .otherwise(col("req_id") * 7 % 100000).as("client_id"),
-        // the open-table resolution outcome (a mismatched clientID finds
-        // no entry) — pre-joined here; the probe shape itself is the
-        // broadcast pattern proven in mpuCommitPart
-        (col("cls") =!= 1).as("open_exists"),
-        when(col("cls") === 3, lit(1000000000000L))
-          .otherwise(col("data_size")).as("commit_size"),
-        (col("req_id") % 9 === 0).as("open_deleted_hsync"),
-        (col("req_id") % 9 === 1).as("open_lease_recovery"),
-        (col("req_id") % 2 === 0).as("committed_has_hsync_writer"))
+    TempDirs.parquet(spark, "keycommitreq", dir)(
+      sampledRequests(spark, dir, 89, 6, "data_size")
+        .select(col("req_id"), col("volume"),
+          when(col("probe") % 13 === 3, lit("no-such-bucket"))
+            .otherwise(col("bucket0")).as("bucket"),
+          col("key0").as("key"),
+          (col("cls") === 2).as("is_recovery"),
+          when(col("cls") === 1, col("req_id") * 7 % 100000 + 999983L)
+            .otherwise(col("req_id") * 7 % 100000).as("client_id"),
+          // the open-table resolution outcome (a mismatched clientID finds
+          // no entry) — pre-joined here; the probe shape itself is the
+          // broadcast pattern proven in mpuCommitPart
+          (col("cls") =!= 1).as("open_exists"),
+          when(col("cls") === 3, lit(1000000000000L))
+            .otherwise(col("data_size")).as("commit_size"),
+          (col("req_id") % 9 === 0).as("open_deleted_hsync"),
+          (col("req_id") % 9 === 1).as("open_lease_recovery"),
+          (col("req_id") % 2 === 0).as("committed_has_hsync_writer")))
 
   /** prefix_acls with numeric right-bits (r=1, w=2, x=4) — the stored
     * prefixTable state the write fold starts from. */
@@ -1405,7 +1389,7 @@ object Tables {
     *   even volumes send their admin (all ACLs pass), odd volumes send
     *   clerk1 (non-clerk1-owned keys → ACCESS_DENIED). */
   def keysDeleteRequests(spark: SparkSession, dir: String): DataFrame =
-    objects(spark, dir)
+    TempDirs.parquet(spark, "kdreq", dir)(objects(spark, dir)
       .filter(col("object_id") % 107 === 0)
       .groupBy(col("volume"), col("bucket"), col("key"))
       .agg(max("version").as("__uid"), min(col("object_id")).as("__oid"))
@@ -1429,7 +1413,7 @@ object Tables {
           concat(lit("admin"), substring(col("volume"), 4, 10)))
           .otherwise(lit("clerk1")))
       .select("req_id", "volume", "bucket", "key",
-        "presented_update_id", "caller", "ids_mismatch")
+        "presented_update_id", "caller", "ids_mismatch"))
 
   /** mpu_initiate_requests: an S3InitiateMultipartUploadRequest batch,
     * data-derived like [[keyCommitRequests]] (object_id % 103 == 0,
@@ -1441,29 +1425,22 @@ object Tables {
     *   3 missing bucket, 4 through link-a (lands on vol0/bucket0),
     *   5 dangling link, 6 link loop. */
   def mpuInitiateRequests(spark: SparkSession, dir: String): DataFrame =
-    objects(spark, dir)
-      .filter(col("object_id") % 103 === 0)
-      .groupBy(col("object_id").as("req_id"))
-      .agg(min(col("volume")).as("volume0"),
-        min(concat(col("bucket"), lit("|"), col("key"))).as("bk"))
-      .select(col("req_id"), (expr("req_id DIV 1030") % 7).as("cls"),
-        col("volume0"),
-        substring_index(col("bk"), "|", 1).as("bucket0"),
-        substring_index(col("bk"), "|", -1).as("key0"))
-      .select(col("req_id"),
-        when(col("cls") === 4, lit("vol1"))
-          .when(col("cls") === 5, lit("vol3"))
-          .when(col("cls") === 6, lit("vol0"))
-          .otherwise(col("volume0")).as("volume"),
-        when(col("cls") === 3, lit("no-such-bucket"))
-          .when(col("cls") === 4, lit("link-a"))
-          .when(col("cls") === 5, lit("link-broken"))
-          .when(col("cls") === 6, lit("link-cycle1"))
-          .otherwise(col("bucket0")).as("bucket"),
-        when(col("cls") === 2, concat(col("key0"), lit("/part.0")))
-          .otherwise(col("key0")).as("key"),
-        when(col("cls") === 1, lit("EC/rs-3-2-1024k"))
-          .otherwise(lit("")).as("requested_repl"))
+    TempDirs.parquet(spark, "mireq", dir)(
+      sampledRequests(spark, dir, 103, 7)
+        .select(col("req_id"),
+          when(col("cls") === 4, lit("vol1"))
+            .when(col("cls") === 5, lit("vol3"))
+            .when(col("cls") === 6, lit("vol0"))
+            .otherwise(col("volume")).as("volume"),
+          when(col("cls") === 3, lit("no-such-bucket"))
+            .when(col("cls") === 4, lit("link-a"))
+            .when(col("cls") === 5, lit("link-broken"))
+            .when(col("cls") === 6, lit("link-cycle1"))
+            .otherwise(col("bucket0")).as("bucket"),
+          when(col("cls") === 2, concat(col("key0"), lit("/part.0")))
+            .otherwise(col("key0")).as("key"),
+          when(col("cls") === 1, lit("EC/rs-3-2-1024k"))
+            .otherwise(lit("")).as("requested_repl")))
 
   /** fso_mkdir_requests: an OMDirectoryCreateRequest batch, data-derived
     * like [[fsoRenameRequests]] (object_id % 151 == 0). cls = second
@@ -1477,29 +1454,20 @@ object Tables {
     * probes: probe%13==3 missing bucket; probe%17==5 empty path
     * (CANNOT_CREATE_DIRECTORY_AT_ROOT). */
   def fsoMkdirRequests(spark: SparkSession, dir: String): DataFrame =
-    objects(spark, dir)
-      .filter(col("object_id") % 151 === 0)
-      .groupBy(col("object_id").as("req_id"))
-      .agg(min(col("volume")).as("volume"),
-        min(concat(col("bucket"), lit("|"), col("key"))).as("bk"))
-      .select(col("req_id"),
-        (expr("req_id DIV 1510") % 6).as("cls"),
-        expr("req_id DIV 151").as("probe"),
-        col("volume"),
-        substring_index(col("bk"), "|", 1).as("bucket0"),
-        substring_index(col("bk"), "|", -1).as("key0"))
-      .withColumn("pdir", graft.operators.Aggregates.parentDirOf("key0"))
-      .select(col("req_id"), col("volume"),
-        when(col("probe") % 13 === 3, lit("no-such-bucket"))
-          .otherwise(col("bucket0")).as("bucket"),
-        when(col("probe") % 17 === 5, lit(""))
-          .when(col("cls") === 0, concat(col("pdir"), lit("/newdir")))
-          .when(col("cls") === 1, concat(col("pdir"), lit("/n1/n2/n3")))
-          .when(col("cls") === 2, col("pdir"))
-          .when(col("cls") === 3, col("key0"))
-          .when(col("cls") === 4, concat(col("key0"), lit("/sub/x")))
-          .otherwise(concat(lit("newtop/d"),
-            (col("probe") % 5).cast("string"), lit("/x"))).as("path"))
+    TempDirs.parquet(spark, "mkdirreq", dir)(
+      sampledRequests(spark, dir, 151, 6)
+        .withColumn("pdir", graft.operators.Aggregates.parentDirOf("key0"))
+        .select(col("req_id"), col("volume"),
+          when(col("probe") % 13 === 3, lit("no-such-bucket"))
+            .otherwise(col("bucket0")).as("bucket"),
+          when(col("probe") % 17 === 5, lit(""))
+            .when(col("cls") === 0, concat(col("pdir"), lit("/newdir")))
+            .when(col("cls") === 1, concat(col("pdir"), lit("/n1/n2/n3")))
+            .when(col("cls") === 2, col("pdir"))
+            .when(col("cls") === 3, col("key0"))
+            .when(col("cls") === 4, concat(col("key0"), lit("/sub/x")))
+            .otherwise(concat(lit("newtop/d"),
+              (col("probe") % 5).cast("string"), lit("/x"))).as("path")))
 
   /** CreateFile request batch for the missing-parent walk — covers a new
     * subtree under an existing dir, a brand-new top chain, two requests
@@ -1674,29 +1642,19 @@ object Tables {
     * blocks already allocated; replication_type rides along for the
     * QuotaUtil.getReplicatedSize math. */
   def allocateBlockRequests(spark: SparkSession, dir: String): DataFrame =
-    objects(spark, dir)
-      .filter(col("object_id") % 97 === 0)
-      .groupBy(col("object_id").as("req_id"))
-      .agg(min(col("volume")).as("volume"),
-        min(concat(col("bucket"), lit("|"), col("key"))).as("bk"),
-        min(col("replication_type")).as("replication_type"))
-      .select(col("req_id"),
-        (expr("req_id DIV 970") % 6).as("cls"),
-        expr("req_id DIV 97").as("probe"),
-        col("volume"), col("replication_type"),
-        substring_index(col("bk"), "|", 1).as("bucket0"),
-        substring_index(col("bk"), "|", -1).as("key"))
-      .select(col("req_id"), col("volume"),
-        when(col("probe") % 13 === 3, lit("no-such-bucket"))
-          .otherwise(col("bucket0")).as("bucket"),
-        col("key"), col("replication_type"),
-        when(col("cls") === 2, col("req_id") * 7 % 100000 + 999983L)
-          .otherwise(col("req_id") * 7 % 100000).as("client_id"),
-        (col("cls") =!= 2).as("open_exists"),
-        (col("cls") === 3).as("open_lease_recovery"),
-        (col("cls") === 4).as("open_deleted_hsync"),
-        when(col("cls") === 5, lit(4000L))
-          .otherwise(col("probe") % 4).as("had_blocks"))
+    TempDirs.parquet(spark, "allocreq", dir)(
+      sampledRequests(spark, dir, 97, 6, "replication_type")
+        .select(col("req_id"), col("volume"),
+          when(col("probe") % 13 === 3, lit("no-such-bucket"))
+            .otherwise(col("bucket0")).as("bucket"),
+          col("key0").as("key"), col("replication_type"),
+          when(col("cls") === 2, col("req_id") * 7 % 100000 + 999983L)
+            .otherwise(col("req_id") * 7 % 100000).as("client_id"),
+          (col("cls") =!= 2).as("open_exists"),
+          (col("cls") === 3).as("open_lease_recovery"),
+          (col("cls") === 4).as("open_deleted_hsync"),
+          when(col("cls") === 5, lit(4000L))
+            .otherwise(col("probe") % 4).as("had_blocks")))
 
   /** assign_admin_requests: OMTenantAssignAdminRequest batch — accessId
     * unassigned anywhere (TENANT_NOT_FOUND on tenant inference), accessId
@@ -2540,26 +2498,27 @@ object Tables {
     (17L, "DELETE", true, "*", false, "", false),
     (18L, "DELETE", true, " ", false, "", false))
 
-  def conditionalWriteRequests(spark: SparkSession, dir: String): DataFrame = {
-    val target = objects(spark, dir)
-      .filter(col("volume") === "vol0" && col("bucket") === "bucket0")
-      .agg(min("key").as("t_key"))
-      .withColumn("t_etag", md5(col("t_key")))
-    conditionalWriteRequestRows.df(spark).crossJoin(broadcast(target))
-      .withColumn("volume", lit("vol0"))
-      .withColumn("bucket", lit("bucket0"))
-      .withColumn("key",
-        when(col("ghost"), lit("no/such/key")).otherwise(col("t_key")))
-      .withColumn("im_value",
-        when(col("im_kind") === "ETAG", col("t_etag"))
-          .when(col("im_kind") === "QETAG",
-            concat(lit("\""), col("t_etag"), lit("\"")))
-          .when(col("im_kind") === "LIST",
-            concat(lit("aaa, \""), col("t_etag"), lit("\"")))
-          .otherwise(col("im_kind")))
-      .select("req_id", "op", "volume", "bucket", "key", "has_inm",
-        "inm_value", "has_im", "im_value")
-  }
+  def conditionalWriteRequests(spark: SparkSession, dir: String): DataFrame =
+    TempDirs.parquet(spark, "condreq", dir) {
+      val target = objects(spark, dir)
+        .filter(col("volume") === "vol0" && col("bucket") === "bucket0")
+        .agg(min("key").as("t_key"))
+        .withColumn("t_etag", md5(col("t_key")))
+      conditionalWriteRequestRows.df(spark).crossJoin(broadcast(target))
+        .withColumn("volume", lit("vol0"))
+        .withColumn("bucket", lit("bucket0"))
+        .withColumn("key",
+          when(col("ghost"), lit("no/such/key")).otherwise(col("t_key")))
+        .withColumn("im_value",
+          when(col("im_kind") === "ETAG", col("t_etag"))
+            .when(col("im_kind") === "QETAG",
+              concat(lit("\""), col("t_etag"), lit("\"")))
+            .when(col("im_kind") === "LIST",
+              concat(lit("aaa, \""), col("t_etag"), lit("\"")))
+            .otherwise(col("im_kind")))
+        .select("req_id", "op", "volume", "bucket", "key", "has_inm",
+          "inm_value", "has_im", "im_value")
+    }
 
   /** ranger_sync_runs: OMRangerBGSyncService version-fence runs — the
     * in-sync no-op, the common one-attempt sync (the recheck sees the
@@ -3435,7 +3394,7 @@ object Tables {
     * same order always exists), empty target name, and
     * dest-exists+src-missing combined. */
   def renameRequests(spark: SparkSession, dir: String): DataFrame =
-    objects(spark, dir)
+    TempDirs.parquet(spark, "renamereq", dir)(objects(spark, dir)
       .filter(col("object_id") % 109 === 0)
       .select(col("volume"), col("bucket"), col("key"),
         expr("(object_id DIV 109) % 5").as("cls"),
@@ -3452,14 +3411,14 @@ object Tables {
           // between combined-failure and plain src-missing)
           .when(col("cls") === 2, col("key"))
           .otherwise(col("sib")).as("to_key"))
-      .distinct()
+      .distinct())
 
   /** delete_key_requests: a DeleteKey batch per ~1/113 sampled key, one of
     * four classes (ref OMKeyDeleteRequestWithFSO): the key itself (a file
     * delete), a ghost sibling (KEY_NOT_FOUND), the key's PARENT directory
     * (a non-empty FSO dir), and an unknown bucket. */
   def deleteKeyRequests(spark: SparkSession, dir: String): DataFrame =
-    objects(spark, dir)
+    TempDirs.parquet(spark, "delkeyreq", dir)(objects(spark, dir)
       .filter(col("object_id") % 113 === 0)
       .select(col("volume"), col("bucket"), col("key"),
         expr("(object_id DIV 113) % 4").as("cls"))
@@ -3470,14 +3429,14 @@ object Tables {
           .when(col("cls") === 2, expr("substring(key, 1, length(key) - " +
             "length(element_at(split(key, '/'), -1)) - 1)"))
           .otherwise(col("key")).as("key"))
-      .distinct()
+      .distinct())
 
   /** ofs_requests: a rooted-path resolution batch (ref OFSPath.java) —
     * per ~1/103 sampled key, one of six path shapes: volume-only,
     * bucket, full key, messy consecutive slashes, the /tmp mount, and a
     * trailing-slash directory path; plus the root itself. */
-  def ofsRequests(spark: SparkSession, dir: String): DataFrame = {
-    objects(spark, dir)
+  def ofsRequests(spark: SparkSession, dir: String): DataFrame =
+    TempDirs.parquet(spark, "ofsreq", dir)(objects(spark, dir)
       .filter(col("object_id") % 103 === 0)
       .select(col("volume"), col("bucket"), col("key"), col("owner"),
         expr("(object_id DIV 103) % 6").as("cls"))
@@ -3496,8 +3455,7 @@ object Tables {
             lit("/"))).as("path"),
         col("owner").as("username"))
       .unionByName(ofsRootRows.df(spark))
-      .distinct()
-  }
+      .distinct())
 
   /** The filesystem root request of [[ofsRequests]]. */
   val ofsRootRows = Fixture("path", "username")(("/", "root"))
@@ -3925,7 +3883,7 @@ object Tables {
    * key population; class cycles with the sample index.
    */
   def copyRequests(spark: SparkSession, dir: String): DataFrame =
-    objects(spark, dir)
+    TempDirs.parquet(spark, "copyreq", dir)(objects(spark, dir)
       .filter(col("version") === 1 && col("object_id") % 101 === 0)
       .withColumn("cls", expr("(object_id DIV 101) % 4"))
       .select(
@@ -3937,13 +3895,13 @@ object Tables {
           .otherwise(col("key")).as("dst_key"),
         when(col("cls") === 3, lit("REDUCED_REDUNDANCY"))
           .cast("string").as("storage_class"))
-      .distinct()
+      .distinct())
 
   /** delete_requests: a MultiDelete batch — existing keys, missing keys
     * (idempotent-delete branch), and requests carrying a wrong
     * expected-bucket-owner (AccessDenied branch). */
   def deleteRequests(spark: SparkSession, dir: String): DataFrame =
-    objects(spark, dir)
+    TempDirs.parquet(spark, "delreq", dir)(objects(spark, dir)
       .filter(col("version") === 1 && col("object_id") % 97 === 0)
       .withColumn("cls", expr("(object_id DIV 97) % 3"))
       .select(
@@ -3953,7 +3911,7 @@ object Tables {
         when(col("cls") === 2, lit("intruder"))
           .otherwise(concat(lit("admin"), substring(col("volume"), 4, 10)))
           .as("expected_owner"))
-      .distinct()
+      .distinct())
 
   /**
    * sst_catalog: the SST-file universe behind the compaction-DAG differ
@@ -4082,27 +4040,13 @@ object Tables {
    *     before any OM lookup, EndpointBase.validateAndGetTagging).
    */
   def tagRequests(spark: SparkSession, dir: String): DataFrame =
-    objects(spark, dir)
-      .filter(col("object_id") % 101 === 0)
-      // lineitem carries duplicate (orderkey, linenumber) pairs →
-      // object_id is NOT unique; canonicalize one request per id by the
-      // smallest (bucket, key) pair ('|' never appears in either)
-      .groupBy(col("object_id").as("req_id"))
-      .agg(min(col("volume")).as("volume"),
-        min(concat(col("bucket"), lit("|"), col("key"))).as("bk"))
-      // cls from the SECOND digit of probe: the last digit of object_id
-      // (and so of probe) is a linenumber 1..7 and never reaches 0/8/9
-      .select(col("req_id"),
-        (expr("req_id DIV 1010") % 10).as("cls"),
-        expr("req_id DIV 101").as("probe"),
-        col("volume"),
-        substring_index(col("bk"), "|", 1).as("bucket0"),
-        substring_index(col("bk"), "|", -1).as("key0"))
-      .select(col("req_id"), col("cls"), col("volume"),
-        when(col("probe") % 13 === 3, lit("no-such-bucket"))
-          .otherwise(col("bucket0")).as("bucket"),
-        when(col("probe") % 7 === 2, concat(col("key0"), lit(".nope")))
-          .otherwise(col("key0")).as("key"))
+    TempDirs.parquet(spark, "tagreq", dir)(
+      sampledRequests(spark, dir, 101, 10)
+        .select(col("req_id"), col("cls"), col("volume"),
+          when(col("probe") % 13 === 3, lit("no-such-bucket"))
+            .otherwise(col("bucket0")).as("bucket"),
+          when(col("probe") % 7 === 2, concat(col("key0"), lit(".nope")))
+            .otherwise(col("key0")).as("key")))
 
   /** tag_entries: the ordered tag list per request — one row per (req_id,
     * pos). Class map (cls from [[tagRequests]]): 0 valid; 1 empty key at

@@ -3226,26 +3226,14 @@ object ClusterHealth {
    * probe, MISSING from an empty CLOSING set, plain UNHEALTHY from the
    * only-UNHEALTHY recheck that reports without handling).
    *
+   * The body runs over a prebuilt [[containerHealthChain]]: SparkEntry
+   * stores the chain once (parquet, shared with q_health_check_chain), so
+   * the three increment projections scan it rather than re-deriving it.
+   *
    * Scale shape: one explode of ≤3 stat rows per container + one hash
    * agg over ~22 stat groups; the sample slice caps driver-bound data
    * at 100 ids per stat.
    */
-  def replicationReport(datanodes: DataFrame, containersScm: DataFrame,
-                        containersOm: DataFrame,
-                        pipelineMembers: DataFrame,
-                        sampleLimit: Int = 100): DataFrame =
-    // the chain's expression tree is deep (13 rungs of CASE over a
-    // dozen aggregates); persist it so the three increment projections
-    // below scan one InMemoryRelation instead of re-optimizing and
-    // re-executing the whole tree 3× (container-dim-sized)
-    replicationReportFromChain(
-      containerHealthChain(datanodes, containersScm,
-        containersOm, pipelineMembers).persist(),
-      sampleLimit)
-
-  /** Report body over a prebuilt chain — lets callers that already hold
-    * a materialized chain (SparkEntry memoizes it to parquet, shared
-    * with q_health_check_chain) skip the fixture re-derivation. */
   def replicationReportFromChain(chain: DataFrame,
                                  sampleLimit: Int = 100): DataFrame = {
     val spark = chain.sparkSession

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -227,25 +227,15 @@ object CommitLog {
    * catalog shape, so callers with genuinely empty dirs classify right.
    *
    * Scale shape: the protocol-sized request batch broadcasts into every
-   * probe — file/dir existence are broadcast semi-joins that prune the
-   * namespace scan to requested paths, the child count is one
-   * prefix-filtered scan grouped by the requested dir. The namespace
-   * never shuffles; every post-probe join is request-sized.
+   * probe — file/dir existence is one [[Hierarchy.pathProbe]], the child
+   * count is one prefix-filtered scan grouped by the requested dir. The
+   * namespace never shuffles; every post-probe join is request-sized.
    */
   def keyDeleteDecisions(requests: DataFrame, objects: DataFrame,
                          buckets: DataFrame, dirs: DataFrame): DataFrame = {
     val reqKeys = requests.select("volume", "bucket", "key").distinct()
     val bktProbe = buckets.select("volume", "bucket").distinct()
       .withColumn("bkt_exists", lit(true))
-    val fileProbe = objects
-      .join(broadcast(reqKeys), Seq("volume", "bucket", "key"), "left_semi")
-      .select("volume", "bucket", "key").distinct()
-      .withColumn("is_file", lit(true))
-    val dirProbe = dirs
-      .select(col("volume"), col("bucket"), col("path").as("key"))
-      .join(broadcast(reqKeys), Seq("volume", "bucket", "key"), "left_semi")
-      .distinct()
-      .withColumn("is_dir", lit(true))
     val children = objects
       .join(broadcast(reqKeys.withColumnRenamed("key", "dir")),
         Seq("volume", "bucket"))
@@ -254,8 +244,8 @@ object CommitLog {
       .agg(count(lit(1)).as("n_children"))
     requests
       .join(broadcast(bktProbe), Seq("volume", "bucket"), "left")
-      .join(broadcast(fileProbe), Seq("volume", "bucket", "key"), "left")
-      .join(broadcast(dirProbe), Seq("volume", "bucket", "key"), "left")
+      .join(broadcast(Hierarchy.pathProbe(reqKeys, objects, dirs)),
+        Seq("volume", "bucket", "key"), "left")
       .join(broadcast(children), Seq("volume", "bucket", "key"), "left")
       .withColumn("decision",
         when(col("bkt_exists").isNull, lit("BUCKET_NOT_FOUND"))
@@ -298,99 +288,62 @@ object CommitLog {
    * ≡ 0 (mod 3) — the rename probes the committed key's metadata
    * (OmKeyInfo.isHsync), so the flag derives from the winning version.
    *
-   * Scale shape: mirrors [[keyDeleteDecisions]] — the request batch
-   * broadcasts into file/dir existence semi-joins; the namespace never
-   * shuffles; everything after the probes is request-sized.
+   * Scale shape: each request's four paths (src, dst, dst's parent,
+   * dst/basename(src)) resolve through one [[Hierarchy.pathProbe]]; one
+   * request-sized groupBy folds the roles into flags. The namespace never
+   * shuffles.
    */
   def fsoRenameDecisions(requests: DataFrame, objects: DataFrame,
                          buckets: DataFrame, dirs: DataFrame): DataFrame = {
-    val srcKeys = requests.select(col("volume"), col("bucket"),
-      col("src_key").as("key")).distinct()
-    val dstKeys = requests.select(col("volume"), col("bucket"),
-      col("to_key").as("key")).distinct()
-    val newToKeys = requests.select(col("volume"), col("bucket"),
-      concat(col("to_key"), lit("/"),
-        element_at(split(col("src_key"), "/"), -1)).as("key")).distinct()
-    val parentKeys = requests.select(col("volume"), col("bucket"),
-      Aggregates.parentDirOf("to_key").as("key")).distinct()
-    val probeKeys = srcKeys.unionByName(dstKeys).unionByName(newToKeys)
-      .unionByName(parentKeys).distinct()
-    // one pass over the key table: latest version decides hsync
-    val fileProbe = objects
-      .join(broadcast(probeKeys), Seq("volume", "bucket", "key"),
-        "left_semi")
-      .groupBy("volume", "bucket", "key")
-      .agg(max(col("version")).as("__maxv"))
-      .select(col("volume"), col("bucket"), col("key"),
-        lit(true).as("is_file"), (col("__maxv") % 3 === 0).as("hsync"))
-    val dirProbe = dirs
-      .select(col("volume"), col("bucket"), col("path").as("key"))
-      .join(broadcast(probeKeys), Seq("volume", "bucket", "key"),
-        "left_semi")
-      .distinct()
-      .withColumn("is_dir", lit(true))
+    def role(name: String, key: Column) =
+      struct(lit(name).as("role"), key.as("key"))
+    val roles = requests
+      .withColumn("r", explode(array(
+        role("src", col("src_key")),
+        role("dst", col("to_key")),
+        role("dst_parent", Aggregates.parentDirOf("to_key")),
+        role("new_to", concat(col("to_key"), lit("/"),
+          element_at(split(col("src_key"), "/"), -1))))))
+      .select(col("req_id"), col("volume"), col("bucket"), col("src_key"),
+        col("to_key"), col("r.role").as("role"), col("r.key").as("key"))
     val bktProbe = buckets.select("volume", "bucket").distinct()
       .withColumn("bkt_exists", lit(true))
-
-    val srcFile = fileProbe.select(col("volume"), col("bucket"),
-      col("key").as("src_key"), col("is_file").as("src_is_file"),
-      col("hsync").as("src_hsync"))
-    val srcDir = dirProbe.select(col("volume"), col("bucket"),
-      col("key").as("src_key"), col("is_dir").as("src_is_dir"))
-    val dstFile = fileProbe.select(col("volume"), col("bucket"),
-      col("key").as("to_key"), col("is_file").as("dst_is_file"))
-    val dstDir = dirProbe.select(col("volume"), col("bucket"),
-      col("key").as("to_key"), col("is_dir").as("dst_is_dir"))
-    val parentProbe = dirProbe.select(col("volume"), col("bucket"),
-      col("key").as("dst_parent"), col("is_dir").as("parent_is_dir"))
-    val newToProbe = fileProbe
-      .select(col("volume"), col("bucket"), col("key"))
-      .unionByName(dirProbe.select(col("volume"), col("bucket"),
-        col("key")))
-      .distinct()
-      .select(col("volume"), col("bucket"), col("key").as("new_to"),
-        lit(true).as("newto_exists"))
-
-    requests
-      .withColumn("dst_parent", Aggregates.parentDirOf("to_key"))
-      .withColumn("new_to", concat(col("to_key"), lit("/"),
-        element_at(split(col("src_key"), "/"), -1)))
+    val exists = col("is_file") || col("is_dir")
+    roles
+      .join(broadcast(Hierarchy.pathProbe(roles, objects, dirs)),
+        Seq("volume", "bucket", "key"), "left")
+      .groupBy("req_id", "volume", "bucket", "src_key", "to_key")
+      .agg(Hierarchy.roleFlag("src", col("is_file")).as("src_is_file"),
+        Hierarchy.roleFlag("src", col("is_dir")).as("src_is_dir"),
+        // the hsync flag derives from the winning (latest) version
+        Hierarchy.roleFlag("src", col("latest_version") % 3 === 0)
+          .as("src_hsync"),
+        Hierarchy.roleFlag("dst", col("is_file")).as("dst_is_file"),
+        Hierarchy.roleFlag("dst", exists).as("dst_exists"),
+        Hierarchy.roleFlag("dst", col("is_dir")).as("dst_is_dir"),
+        Hierarchy.roleFlag("dst_parent", col("is_dir")).as("parent_is_dir"),
+        Hierarchy.roleFlag("new_to", exists).as("newto_exists"))
       .join(broadcast(bktProbe), Seq("volume", "bucket"), "left")
-      .join(broadcast(srcFile), Seq("volume", "bucket", "src_key"), "left")
-      .join(broadcast(srcDir), Seq("volume", "bucket", "src_key"), "left")
-      .join(broadcast(dstFile), Seq("volume", "bucket", "to_key"), "left")
-      .join(broadcast(dstDir), Seq("volume", "bucket", "to_key"), "left")
-      .join(broadcast(parentProbe), Seq("volume", "bucket", "dst_parent"),
-        "left")
-      .join(broadcast(newToProbe), Seq("volume", "bucket", "new_to"),
-        "left")
-      .withColumn("__dst_exists",
-        coalesce(col("dst_is_file"), lit(false)) ||
-          coalesce(col("dst_is_dir"), lit(false)))
       .withColumn("decision",
         when(col("src_key") === "", lit("INVALID_KEY_NAME"))
           .when(col("bkt_exists").isNull, lit("BUCKET_NOT_FOUND"))
-          .when(col("src_is_file").isNull && col("src_is_dir").isNull,
+          .when(!col("src_is_file") && !col("src_is_dir"),
             lit("KEY_NOT_FOUND"))
-          .when(coalesce(col("src_is_file"), lit(false)) &&
-            col("src_is_dir").isNull &&
-            coalesce(col("src_hsync"), lit(false)),
-            lit("RENAME_OPEN_FILE"))
-          .when(coalesce(col("src_is_dir"), lit(false)) &&
+          .when(col("src_is_file") && !col("src_is_dir") &&
+            col("src_hsync"), lit("RENAME_OPEN_FILE"))
+          .when(col("src_is_dir") &&
             col("to_key").startsWith(concat(col("src_key"), lit("/"))),
             lit("RENAME_ERROR_SUBDIR"))
-          .when(col("__dst_exists") && col("to_key") === col("src_key") &&
-            coalesce(col("dst_is_file"), lit(false)), lit("SELF_NOOP"))
-          .when(col("__dst_exists") && col("to_key") === col("src_key"),
+          .when(col("dst_exists") && col("to_key") === col("src_key") &&
+            col("dst_is_file"), lit("SELF_NOOP"))
+          .when(col("dst_exists") && col("to_key") === col("src_key"),
             lit("KEY_ALREADY_EXISTS"))
-          .when(coalesce(col("dst_is_dir"), lit(false)) &&
-            coalesce(col("newto_exists"), lit(false)),
+          .when(col("dst_is_dir") && col("newto_exists"),
             lit("KEY_ALREADY_EXISTS"))
-          .when(coalesce(col("dst_is_dir"), lit(false)),
-            lit("RENAMED_INTO_DIR"))
-          .when(col("__dst_exists"), lit("KEY_ALREADY_EXISTS"))
+          .when(col("dst_is_dir"), lit("RENAMED_INTO_DIR"))
+          .when(col("dst_exists"), lit("KEY_ALREADY_EXISTS"))
           .when(size(split(col("to_key"), "/")) > 1 &&
-            col("parent_is_dir").isNull, lit("RENAME_ERROR_PARENT"))
+            !col("parent_is_dir"), lit("RENAME_ERROR_PARENT"))
           .otherwise(lit("RENAMED")))
       .select("req_id", "volume", "bucket", "src_key", "to_key", "decision")
       .orderBy("req_id")

@@ -46,15 +46,6 @@ object CompactionDag {
     * past this the log is cyclic/corrupt — fail like the reference does. */
   val MaxWalkDepth = 32
 
-  /** Node generations: min compaction seq mentioning the file on either
-    * side (CompactionDag.java:66-74 computeIfAbsent at entry seq). One
-    * projection + one agg over the log, computed once and reused by every
-    * BFS level. */
-  def nodeGens(edges: DataFrame): DataFrame =
-    edges.select(col("output_file").as("file"), col("seq"))
-      .unionByName(edges.select(col("input_file").as("file"), col("seq")))
-      .groupBy("file").agg(min("seq").as("gen"))
-
   /** Key-range pruning of a snapshot file map (RocksDiffUtils.java:58-76):
     * keep SSTs whose [start_key, end_key] overlaps [lo, hi]. */
   def pruneByRange(files: DataFrame, lo: String, hi: String): DataFrame =

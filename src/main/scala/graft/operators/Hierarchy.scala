@@ -194,6 +194,43 @@ object Hierarchy {
   }
 
   /**
+   * One existence probe for a batch of (volume, bucket, key) paths — the
+   * shared lookup of the FSO write ladders: per path found, whether it is
+   * a file (a key of `objects`), a directory (a path of `dirs`), and the
+   * file's latest version (`objects` carries (volume, bucket, key,
+   * version)). A path that is neither has no row, so a left join leaves
+   * its flags null.
+   *
+   * Scale shape: the distinct probe keys broadcast into one semi-join per
+   * side, pruning each namespace scan to the requested paths; the union
+   * of the hits is request-sized.
+   */
+  def pathProbe(keys: DataFrame, objects: DataFrame,
+                dirs: DataFrame): DataFrame = {
+    val probeKeys =
+      broadcast(keys.select("volume", "bucket", "key").distinct())
+    val files = objects
+      .join(probeKeys, Seq("volume", "bucket", "key"), "left_semi")
+      .select(col("volume"), col("bucket"), col("key"),
+        lit(true).as("is_file"), lit(false).as("is_dir"), col("version"))
+    val dirHits = dirs
+      .select(col("volume"), col("bucket"), col("path").as("key"))
+      .join(probeKeys, Seq("volume", "bucket", "key"), "left_semi")
+      .select(col("volume"), col("bucket"), col("key"),
+        lit(false).as("is_file"), lit(true).as("is_dir"),
+        lit(null).cast("long").as("version"))
+    files.unionByName(dirHits)
+      .groupBy("volume", "bucket", "key")
+      .agg(max("is_file").as("is_file"), max("is_dir").as("is_dir"),
+        max("version").as("latest_version"))
+  }
+
+  /** Per-request flag over role-tagged probe rows: `c` on the row of
+    * `role`, false when that path was not found. */
+  def roleFlag(role: String, c: Column): Column =
+    coalesce(max(when(col("role") === role, c)), lit(false))
+
+  /**
    * Missing-parent materialization for a CreateFile/CreateDirectory batch
    * — the reference's OMDirectoryCreateRequest walks a request's path from
    * the bucket root and collects every ancestor absent from the directory
@@ -254,42 +291,26 @@ object Hierarchy {
    *      request materializes (the [[mkdirMissingParents]] walk per
    *      request).
    *
-   * Scale shape: the request batch's prefix explode is request-sized;
-   * file/dir existence are broadcast semi-probes into the namespace scan
-   * keyed by those prefixes. The namespace never shuffles.
+   * Scale shape: the request batch's prefix explode is request-sized and
+   * resolves through one [[pathProbe]]. The namespace never shuffles.
    */
   def mkdirDecisions(requests: DataFrame, objects: DataFrame,
                      buckets: DataFrame, dirs: DataFrame): DataFrame = {
     val prefixes = requests
       .filter(col("path") =!= "")
       .select(col("req_id"), col("volume"), col("bucket"), col("path"),
-        explode(Aggregates.dirAndAncestors("path")).as("pfx"))
-    val pfxKeys = prefixes.select(col("volume"), col("bucket"),
-      col("pfx").as("key")).distinct()
-    val fileProbe = objects
-      .join(broadcast(pfxKeys), Seq("volume", "bucket", "key"), "left_semi")
-      .select(col("volume"), col("bucket"), col("key").as("pfx"))
-      .distinct()
-      .withColumn("is_file", lit(true))
-    val dirProbe = dirs
-      .select(col("volume"), col("bucket"), col("path").as("pfx"))
-      .join(broadcast(pfxKeys.withColumnRenamed("key", "pfx")),
-        Seq("volume", "bucket", "pfx"), "left_semi")
-      .distinct()
-      .withColumn("is_dir", lit(true))
+        explode(Aggregates.dirAndAncestors("path")).as("key"))
+    val isFile = coalesce(col("is_file"), lit(false))
+    val isDir = coalesce(col("is_dir"), lit(false))
     val flags = prefixes
-      .join(broadcast(fileProbe), Seq("volume", "bucket", "pfx"), "left")
-      .join(broadcast(dirProbe), Seq("volume", "bucket", "pfx"), "left")
+      .join(broadcast(pathProbe(prefixes, objects, dirs)),
+        Seq("volume", "bucket", "key"), "left")
       .groupBy("req_id")
       .agg(
-        max(coalesce(col("is_file"), lit(false)) &&
-          col("pfx") === col("path")).as("self_file"),
-        max(coalesce(col("is_file"), lit(false)) &&
-          col("pfx") =!= col("path")).as("anc_file"),
-        max(coalesce(col("is_dir"), lit(false)) &&
-          col("pfx") === col("path")).as("self_dir"),
-        sum(when(col("is_dir").isNull, 1L).otherwise(0L))
-          .as("missing_prefixes"))
+        max(isFile && col("key") === col("path")).as("self_file"),
+        max(isFile && col("key") =!= col("path")).as("anc_file"),
+        max(isDir && col("key") === col("path")).as("self_dir"),
+        sum(when(isDir, 0L).otherwise(1L)).as("missing_prefixes"))
     val bktProbe = buckets.select("volume", "bucket").distinct()
       .withColumn("bkt_exists", lit(true))
     requests
@@ -327,72 +348,54 @@ object Hierarchy {
    *   4. OVERWRITTEN (path was a file, overwrite set) or CREATED, with
    *      dirs_minted = missing parent-chain prefixes the recursive create
    *      materializes.
+   *
+   * Scale shape: each request's paths (the path itself, its immediate
+   * parent, every higher ancestor) resolve through one [[pathProbe]];
+   * one request-sized groupBy folds the roles into flags.
    */
   def createFileDecisions(requests: DataFrame, objects: DataFrame,
                           buckets: DataFrame, dirs: DataFrame): DataFrame = {
     val withParent = requests
       .withColumn("parent", Aggregates.parentDirOf("path"))
-    val prefixes = withParent
+    val ancestors = withParent
       .filter(col("parent") =!= "")
-      .select(col("req_id"), col("volume"), col("bucket"), col("path"),
-        explode(Aggregates.dirAndAncestors("parent")).as("pfx"))
-    val pathKeys = withParent.select(col("volume"), col("bucket"),
-      col("path").as("key"))
-      .unionByName(prefixes.select(col("volume"), col("bucket"),
-        col("pfx").as("key")))
-      .distinct()
-    val fileProbe = objects
-      .join(broadcast(pathKeys), Seq("volume", "bucket", "key"),
-        "left_semi")
-      .select(col("volume"), col("bucket"), col("key")).distinct()
-      .withColumn("is_file", lit(true))
-    val dirProbe = dirs
-      .select(col("volume"), col("bucket"), col("path").as("key"))
-      .join(broadcast(pathKeys), Seq("volume", "bucket", "key"),
-        "left_semi")
-      .distinct()
-      .withColumn("is_dir", lit(true))
-    val parentFlags = prefixes
-      .join(broadcast(fileProbe.withColumnRenamed("key", "pfx")),
-        Seq("volume", "bucket", "pfx"), "left")
-      .join(broadcast(dirProbe.withColumnRenamed("key", "pfx")),
-        Seq("volume", "bucket", "pfx"), "left")
-      .groupBy("req_id")
-      .agg(
-        max(coalesce(col("is_file"), lit(false))).as("anc_file"),
-        sum(when(col("is_dir").isNull, 1L).otherwise(0L))
-          .as("missing_parents"))
-    val selfFile = fileProbe.select(col("volume"), col("bucket"),
-      col("key").as("path"), col("is_file").as("self_file"))
-    val selfDir = dirProbe.select(col("volume"), col("bucket"),
-      col("key").as("path"), col("is_dir").as("self_dir"))
-    val parentDirP = dirProbe.select(col("volume"), col("bucket"),
-      col("key").as("parent"), col("is_dir").as("parent_is_dir"))
+      .withColumn("key", explode(Aggregates.dirAndAncestors("parent")))
+      .withColumn("role", when(col("key") === col("parent"), lit("parent"))
+        .otherwise(lit("ancestor")))
+    val roles = withParent
+      .withColumn("key", col("path"))
+      .withColumn("role", lit("self"))
+      .unionByName(ancestors)
+    val inChain = col("role") =!= "self"
     val bktProbe = buckets.select("volume", "bucket").distinct()
       .withColumn("bkt_exists", lit(true))
-    withParent
+    roles
+      .join(broadcast(pathProbe(roles, objects, dirs)),
+        Seq("volume", "bucket", "key"), "left")
+      .groupBy("req_id", "volume", "bucket", "path", "parent", "overwrite",
+        "recursive")
+      .agg(roleFlag("self", col("is_file")).as("self_file"),
+        roleFlag("self", col("is_dir")).as("self_dir"),
+        roleFlag("parent", col("is_dir")).as("parent_is_dir"),
+        coalesce(max(when(inChain, col("is_file"))), lit(false))
+          .as("anc_file"),
+        sum(when(inChain && !coalesce(col("is_dir"), lit(false)), 1L)
+          .otherwise(0L)).as("missing_parents"))
       .join(broadcast(bktProbe), Seq("volume", "bucket"), "left")
-      .join(broadcast(selfFile), Seq("volume", "bucket", "path"), "left")
-      .join(broadcast(selfDir), Seq("volume", "bucket", "path"), "left")
-      .join(broadcast(parentDirP), Seq("volume", "bucket", "parent"),
-        "left")
-      .join(broadcast(parentFlags), Seq("req_id"), "left")
       .withColumn("decision",
         when(col("bkt_exists").isNull, lit("BUCKET_NOT_FOUND"))
-          .when(coalesce(col("self_dir"), lit(false)), lit("NOT_A_FILE"))
-          .when(coalesce(col("anc_file"), lit(false)), lit("NOT_A_FILE"))
-          .when(coalesce(col("self_file"), lit(false)) &&
-            !col("overwrite"), lit("FILE_ALREADY_EXISTS"))
+          .when(col("self_dir"), lit("NOT_A_FILE"))
+          .when(col("anc_file"), lit("NOT_A_FILE"))
+          .when(col("self_file") && !col("overwrite"),
+            lit("FILE_ALREADY_EXISTS"))
           .when(!col("recursive") && col("parent") =!= "" &&
-            col("parent_is_dir").isNull, lit("DIRECTORY_NOT_FOUND"))
-          .when(coalesce(col("self_file"), lit(false)),
-            lit("OVERWRITTEN"))
+            !col("parent_is_dir"), lit("DIRECTORY_NOT_FOUND"))
+          .when(col("self_file"), lit("OVERWRITTEN"))
           .otherwise(lit("CREATED")))
       .select(col("req_id"), col("volume"), col("bucket"), col("path"),
         col("decision"),
-        when(col("decision") === "CREATED",
-          coalesce(col("missing_parents"), lit(0L))).otherwise(lit(0L))
-          .as("dirs_minted"))
+        when(col("decision") === "CREATED", col("missing_parents"))
+          .otherwise(lit(0L)).as("dirs_minted"))
       .orderBy("req_id")
   }
 

@@ -27,17 +27,6 @@ object Nested {
       .select("volume", "bucket", "key", "data_size", "modification_time")
       .orderBy("volume", "bucket", "key", "data_size", "modification_time")
 
-  /** GetObjectTagging: one key's stored tag map exploded to (k, v) rows
-    * (S3Tagging.fromMap — the XML response shape). */
-  def tagsOf(objectsNested: DataFrame, volume: String, bucket: String,
-             key: String): DataFrame =
-    objectsNested
-      .filter(col("volume") === volume && col("bucket") === bucket &&
-        col("key") === key)
-      .select(col("key"), explode_outer(col("tags"))
-        .as(Seq("tag_key", "tag_value")))
-      .orderBy("tag_key")
-
   /**
    * Principal-accurate ACL probe: (key, principal) pairs where the
    * requesting principal holds READ through a USER acl entry matching its

@@ -7,7 +7,9 @@ package graft.tools
   * the initial join strategies) and, after one materializing run, the
   * AQE-final executed plan (shows the runtime join rewrites and
   * coalesced exchanges). Usage:
-  * runMain graft.tools.ExplainDump <sfDir> <outDir> <suffix> q1[,q2...] */
+  * runMain graft.tools.ExplainDump <sfDir> <outDir> <suffix> q1[,q2...]
+  * `SPARK_GRAFT_CPUS` sets the local thread count (default: every
+  * processor of the machine). */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -21,7 +23,8 @@ object ExplainDump {
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val spark = graft.core.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+      sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+        .getOrElse(Runtime.getRuntime.availableProcessors))
     for (name <- names; fn <- graft.SparkEntry.queries.get(name)) {
       val df = fn(spark, sfDir)
       val formatted = df.queryExecution.explainString(

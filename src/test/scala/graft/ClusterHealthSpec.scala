@@ -1108,9 +1108,9 @@ class ClusterHealthSpec extends SparkSpecBase {
   }
 
   test("replicationReport: pre-populated stats, capped visit-order samples") {
-    val rep = ClusterHealth.replicationReport(T.datanodes(spark, sf),
-      T.containersScm(spark, sf), T.containersOm(spark, sf),
-      T.pipelineMembers(spark, sf))
+    // the declared query: the report over the stored chain (planning it
+    // over the inline chain repeats a deep CASE tree three times)
+    val rep = SparkEntry.queries("q_replication_report")(spark, sf)
       .collect().map(r => r.getAs[String]("stat") ->
         (r.getAs[Long]("cnt"), r.getAs[String]("sample_ids"))).toMap
     assert(rep.size === 22, "every enum stat pre-populated")

@@ -197,9 +197,9 @@ class CommitLogSpec extends SparkSpecBase {
 
   test("keyDeleteDecisions: every ladder branch incl. the empty dir") {
     import spark.implicits._
-    val objects = Seq(("v1", "b1", "a/f1.dat", 1L),
-      ("v1", "b1", "a/sub/f2.dat", 2L))
-      .toDF("volume", "bucket", "key", "data_size")
+    val objects = Seq(("v1", "b1", "a/f1.dat", 1L, 1L),
+      ("v1", "b1", "a/sub/f2.dat", 2L, 1L))
+      .toDF("volume", "bucket", "key", "data_size", "version")
     // a real directory table can hold an EMPTY dir (mkdir with no files
     // yet) — the derived-catalog queries never see one, the ladder must
     val dirs = Seq(("v1", "b1", "a"), ("v1", "b1", "a/sub"),

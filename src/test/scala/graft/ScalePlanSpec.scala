@@ -1,28 +1,54 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+
 /**
- * Global physical-plan invariant over EVERY declared query: no
- * CartesianProduct anywhere. Every cross join in the engine is against a
- * broadcast singleton/aggregate (BroadcastNestedLoopJoin with a one-row
- * build side) — an unhinted CartesianProduct is the one operator that is
- * always a scale bug at 100 TB, so a regression anywhere in the declared
- * query surface (every SparkEntry.queries entry, whatever its current
- * count) fails here. Plan-only (no execution): the initial physical plan
- * already shows the join strategy.
+ * Global physical-plan invariants over EVERY declared query (every
+ * SparkEntry.queries entry, whatever its current count), from one
+ * planning pass at sf0.001. Plan-only (no execution): the initial
+ * physical plan already shows the join strategy and the plan's size.
+ *
+ *  - No CartesianProduct anywhere. Every cross join in the engine is
+ *    against a broadcast singleton/aggregate (BroadcastNestedLoopJoin with
+ *    a one-row build side) — an unhinted CartesianProduct is the one
+ *    operator that is always a scale bug at 100 TB.
+ *  - No plan over 1,000 physical nodes. A derived frame is inlined at
+ *    every reference, so a ladder that re-derives its request batch or its
+ *    probes per use grows its plan (and its key-table scans) with each
+ *    reference; stored inputs and one shared probe keep plans small.
  */
 class ScalePlanSpec extends SparkSpecBase {
   private val sf = "/root/testdata/sf0.001"
 
+  /** Each declared query's physical plan before execution, or the message
+    * its planning failed with. */
+  private lazy val plans: Seq[(String, Either[String, SparkPlan])] =
+    SparkEntry.queries.toSeq.map { case (name, fn) =>
+      name -> (try Right(fn(spark, sf).queryExecution.executedPlan)
+        catch { case e: Throwable => Left(e.getMessage) })
+    }
+
+  /** Physical nodes, counting the AQE wrapper's input plan and every
+    * node's subquery plans (DPP and scalar subqueries). */
+  private def nodes(p: SparkPlan): Int = p match {
+    case a: AdaptiveSparkPlanExec => 1 + nodes(a.inputPlan)
+    case _ => 1 + (p.children ++ p.subqueries).map(nodes).sum
+  }
+
   test("no declared query plans a CartesianProduct") {
-    val offenders = SparkEntry.queries.flatMap { case (name, fn) =>
-      val plan =
-        try fn(spark, sf).queryExecution.executedPlan.toString
-        catch { case e: Throwable => s"PLANNING FAILED: ${e.getMessage}" }
-      if (plan.contains("CartesianProduct") ||
-        plan.startsWith("PLANNING FAILED")) Some(name -> plan.take(120))
-      else None
+    val offenders = plans.collect {
+      case (name, Left(_)) => name
+      case (name, Right(p)) if p.toString.contains("CartesianProduct") => name
     }
     assert(offenders.isEmpty,
-      s"CartesianProduct / planning failure in: ${offenders.keys.toSeq.sorted}")
+      s"CartesianProduct / planning failure in: ${offenders.sorted}")
+  }
+
+  test("no declared query plans more than 1,000 physical nodes") {
+    val over = plans
+      .collect { case (name, Right(p)) => name -> nodes(p) }
+      .filter(_._2 > 1000)
+    assert(over.isEmpty, s"over the 1,000-node plan budget: ${over.sorted}")
   }
 }

@@ -248,8 +248,8 @@ class WriteLaddersSpec extends SparkSpecBase {
 
   test("mkdirDecisions: file-in-path beats dir-exists; minted counts") {
     import graft.operators.Hierarchy
-    val objs = Seq(("v", "b", "a/b/f.dat"))
-      .toDF("volume", "bucket", "key")
+    val objs = Seq(("v", "b", "a/b/f.dat", 1L))
+      .toDF("volume", "bucket", "key", "version")
     val dirs = Seq(("v", "b", "a"), ("v", "b", "a/b"))
       .toDF("volume", "bucket", "path")
     val bkts = Seq(("v", "b")).toDF("volume", "bucket")
@@ -270,6 +270,44 @@ class WriteLaddersSpec extends SparkSpecBase {
       3L -> (("DIR_EXISTS", "", 0L)),
       4L -> (("CREATED", "", 2L)),
       5L -> (("CANNOT_CREATE_DIRECTORY_AT_ROOT", "", 0L))))
+  }
+
+  // ---- create file -----------------------------------------------------
+
+  test("createFileDecisions: self, parent and ancestor probes; minted") {
+    import graft.operators.Hierarchy
+    val objs = Seq(("v", "b", "a/b/f.dat", 1L))
+      .toDF("volume", "bucket", "key", "version")
+    val dirs = Seq(("v", "b", "a"), ("v", "b", "a/b"))
+      .toDF("volume", "bucket", "path")
+    val bkts = Seq(("v", "b")).toDF("volume", "bucket")
+    val reqs = Seq(
+      (1L, "v", "b", "a/b/new.dat", false, false),     // parent exists
+      (2L, "v", "b", "a/b/f.dat", false, false),       // file, no overwrite
+      (3L, "v", "b", "a/b/f.dat", true, false),        // file, overwrite
+      (4L, "v", "b", "a/b", true, true),               // path is a dir
+      (5L, "v", "b", "a/b/f.dat/z.dat", false, false), // parent is a file
+      (6L, "v", "b", "a/b/f.dat/y/z.dat", true, true), // ancestor is a file
+      (7L, "v", "b", "a/x/y/leaf.dat", false, false),  // parent missing
+      (8L, "v", "b", "a/x/y/leaf.dat", false, true),   // mints a/x, a/x/y
+      (9L, "v", "b", "top.dat", false, false),         // root level
+      (10L, "v", "nob", "a/b/new.dat", false, true))   // missing bucket
+      .toDF("req_id", "volume", "bucket", "path", "overwrite", "recursive")
+    val got = Hierarchy.createFileDecisions(reqs, objs, bkts, dirs)
+      .select("req_id", "decision", "dirs_minted")
+      .as[(Long, String, Long)].collect()
+      .map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(got === Map(
+      1L -> (("CREATED", 0L)),
+      2L -> (("FILE_ALREADY_EXISTS", 0L)),
+      3L -> (("OVERWRITTEN", 0L)),
+      4L -> (("NOT_A_FILE", 0L)),
+      5L -> (("NOT_A_FILE", 0L)),
+      6L -> (("NOT_A_FILE", 0L)),
+      7L -> (("DIRECTORY_NOT_FOUND", 0L)),
+      8L -> (("CREATED", 2L)),
+      9L -> (("CREATED", 0L)),
+      10L -> (("BUCKET_NOT_FOUND", 0L))))
   }
 
   // ---- volume / bucket delete ------------------------------------------
