@@ -61,7 +61,7 @@ object Api {
 
   /** The link-resolution catalog (status per link: OK/DANGLING/CYCLE). */
   def resolveBucketLinks(s: SparkSession, d: String): DataFrame =
-    Links.resolveBucketLinks(T.bucketLinks(s, d), T.buckets(s, d))
+    Links.resolveBucketLinks(T.bucketLinkRows.rows, T.buckets(s, d))
 
   /** S3 ListObjectsV2 (delimiter grouping + CommonPrefixes), link-aware —
     * S3 bucket aliasing IS the link-bucket feature. */
@@ -100,8 +100,8 @@ object Api {
                     dir: String): DataFrame =
     resolved(s, d, volume, bucket) match {
       case Some((v, b)) =>
-        Hierarchy.listStatusFso(T.directoriesFso(s, d), T.filesFso(s, d),
-          v, b, dir, resolvedDirs = Some(T.directoryPathsFso(s, d)))
+        Hierarchy.listStatusFso(T.directoryPathsFso(s, d), T.filesFso(s, d),
+          v, b, dir)
       case None => s.createDataFrame(
         java.util.List.of[Row](), Hierarchy.ListStatusSchema)
     }

@@ -178,7 +178,7 @@ object SparkEntry {
         5)),
     // ---- link buckets (OmBucketInfo.isLink chase) + MPU listing ----
     "q_link_resolve" -> ((s, d) =>
-      Links.resolveBucketLinks(T.bucketLinks(s, d), T.buckets(s, d))),
+      Links.resolveBucketLinks(T.bucketLinkRows.rows, T.buckets(s, d))),
     // listing THROUGH the 2-hop chain link-b -> link-a -> (vol0, bucket0)
     // must equal listing the source bucket directly
     "q_link_list" -> ((s, d) =>
@@ -642,14 +642,14 @@ object SparkEntry {
     // bucket, owner/admin gate, chain collision
     "q_snapshot_create" -> ((s, d) =>
       CommitLog.snapshotCreateDecisions(T.snapshotCreateRequests(s, d),
-        T.buckets(s, d), T.bucketLinks(s, d), T.volumes(s, d),
+        T.buckets(s, d), T.bucketLinkRows.rows, T.volumes(s, d),
         T.snapshotCatalog(s, d))),
     // RenameSnapshot ladder: only the NEW name validated, link lands on
     // the source bucket, new-name collision BEFORE the old-name lookup
     // (deleted snapshots still occupy their name), non-ACTIVE old refused
     "q_snapshot_rename" -> ((s, d) =>
       CommitLog.snapshotRenameDecisions(T.snapshotRenameRequests(s, d),
-        T.buckets(s, d), T.bucketLinks(s, d), T.volumes(s, d),
+        T.buckets(s, d), T.bucketLinkRows.rows, T.volumes(s, d),
         T.snapshotCatalogExt(s, d))),
     // Snapshot space reclamation (ReclaimableKeyFilter semantics): decide
     // every buffered deleted key through the chain; exclusive-size rollup
@@ -725,7 +725,7 @@ object SparkEntry {
     // buckets the set ladder decided SET on), through links.
     "q_lifecycle_delete" -> ((s, d) =>
       Lifecycle.lifecycleDeleteDecisions(T.lcDeleteRequests(s, d),
-        T.buckets(s, d), T.bucketLinks(s, d), T.volumes(s, d),
+        T.buckets(s, d), T.bucketLinkRows.rows, T.volumes(s, d),
         Lifecycle.lifecycleSetDecisions(T.lcSetRequests(s, d),
           T.lcRuleEntries(s, d), T.buckets(s, d))
           .filter(col("decision") === "SET")
@@ -735,7 +735,7 @@ object SparkEntry {
     // preference request > bucket default > server default.
     "q_mpu_initiate" -> ((s, d) =>
       Lifecycle.mpuInitiateDecisions(T.mpuInitiateRequests(s, d),
-        T.buckets(s, d), T.bucketLinks(s, d), T.objects(s, d))),
+        T.buckets(s, d), T.bucketLinkRows.rows, T.objects(s, d))),
     // CommitPart / AbortMultipartUpload write ladders — completes the MPU
     // protocol surface (initiate→commit→complete/abort→list).
     "q_mpu_commit_part" -> ((s, d) =>
@@ -814,7 +814,7 @@ object SparkEntry {
     // non-active entries refused FILE_NOT_FOUND.
     "q_snapshot_delete" -> ((s, d) =>
       CommitLog.snapshotDeleteDecisions(T.snapshotDeleteRequests(s, d),
-        T.buckets(s, d), T.bucketLinks(s, d), T.volumes(s, d),
+        T.buckets(s, d), T.bucketLinkRows.rows, T.volumes(s, d),
         T.snapshotCatalogLive(s, d))),
     // SnapshotPurge chain relink: adjacent purges splice transitively
     // (survivor's prev = nearest non-purged ancestor in BOTH chains);
@@ -975,14 +975,17 @@ object SparkEntry {
       Hierarchy.resolveFiles(T.directoriesFso(s, d), T.filesFso(s, d),
         maxDepth = 4)),
     "q_fso_list_status" -> ((s, d) =>
-      Hierarchy.listStatusFso(T.directoriesFso(s, d), T.filesFso(s, d),
-        "vol2", "bucket5", "warehouse/R",
-        resolvedDirs = Some(T.directoryPathsFso(s, d)))),
+      Hierarchy.listStatusFso(T.directoryPathsFso(s, d), T.filesFso(s, d),
+        "vol2", "bucket5", "warehouse/R")),
     // 5-segment namespace: each child dir's rollup must traverse TWO dir
     // levels to reach its files — direct-children-only counting returns 0.
+    // The ladder resolves vol2/bucket5's dirs only, so it and its pin stay
+    // bucket-sized.
     "q_fso_list_status_deep" -> ((s, d) =>
-      Hierarchy.listStatusFso(T.directoriesFsoDeep(s, d), T.filesFsoDeep(s, d),
-        "vol2", "bucket5", "warehouse/R")),
+      Hierarchy.listStatusFso(
+        Hierarchy.resolveDirs(T.directoriesFsoDeep(s, d)
+          .filter(col("volume") === "vol2" && col("bucket") === "bucket5")),
+        T.filesFsoDeep(s, d), "vol2", "bucket5", "warehouse/R")),
     // the same listing via keyset pages (child > token), concatenated —
     // must hash-equal the unpaged q_fso_list_status oracle. Page size
     // adapts to the child count (one cheap count on the small dir table)
@@ -994,10 +997,9 @@ object SparkEntry {
       val n = dirs.filter(col("volume") === "vol2" &&
         col("bucket") === "bucket5" &&
         col("parent_id") === pid).count()
-      Hierarchy.listStatusFsoWalk(dirs, T.filesFso(s, d),
+      Hierarchy.listStatusFsoWalk(T.directoryPathsFso(s, d), T.filesFso(s, d),
         "vol2", "bucket5", "warehouse/R",
-        pageSize = math.max(50, (n / 5 + 1).toInt),
-        resolvedDirs = Some(T.directoryPathsFso(s, d)))
+        pageSize = math.max(50, (n / 5 + 1).toInt))
     }),
     // ---- incremental CDC-maintained views (SURVEY §2.9) ----
     // the CDC source is the MIXED-depth namespace so the streamed NSSummary

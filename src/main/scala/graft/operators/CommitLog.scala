@@ -367,15 +367,10 @@ object CommitLog {
    * control-plane catalogs broadcast into the request batch.
    */
   def snapshotCreateDecisions(requests: DataFrame, buckets: DataFrame,
-                              links: DataFrame, volumes: DataFrame,
+                              links: Seq[Links.LinkRow], volumes: DataFrame,
                               snapshots: DataFrame,
                               admins: Seq[String] = Seq("om-admin"))
       : DataFrame = {
-    val resolved = Links.resolveBucketLinks(links, buckets)
-      .select(col("volume"), col("bucket"),
-        col("resolved_volume").as("rv0"),
-        col("resolved_bucket").as("rb0"),
-        col("status").as("link_status"))
     val bktProbe = buckets.select("volume", "bucket").distinct()
       .withColumnRenamed("volume", "rv").withColumnRenamed("bucket", "rb")
       .withColumn("bkt_exists", lit(true))
@@ -384,14 +379,7 @@ object CommitLog {
     val snapProbe = snapshots.select(col("volume").as("rv"),
       col("bucket").as("rb"), col("name").as("snapshot_name"),
       lit(true).as("snap_exists"))
-    requests
-      .join(broadcast(resolved), Seq("volume", "bucket"), "left")
-      // a loop never resolves — report the REQUESTED pair, not whichever
-      // cycle member the bounded chase happened to stop on
-      .withColumn("rv", when(col("link_status") === "CYCLE", col("volume"))
-        .otherwise(coalesce(col("rv0"), col("volume"))))
-      .withColumn("rb", when(col("link_status") === "CYCLE", col("bucket"))
-        .otherwise(coalesce(col("rb0"), col("bucket"))))
+    Links.stageLinkTargets(requests, links, buckets)
       .join(broadcast(bktProbe), Seq("rv", "rb"), "left")
       .join(broadcast(ownerProbe), Seq("rv"), "left")
       .join(broadcast(snapProbe), Seq("rv", "rb", "snapshot_name"), "left")
@@ -430,15 +418,10 @@ object CommitLog {
    * dimension broadcast into the request-batch scan; no shuffle.
    */
   def snapshotRenameDecisions(requests: DataFrame, buckets: DataFrame,
-                              links: DataFrame, volumes: DataFrame,
+                              links: Seq[Links.LinkRow], volumes: DataFrame,
                               snapshotsExt: DataFrame,
                               admins: Seq[String] = Seq("om-admin"))
       : DataFrame = {
-    val resolved = Links.resolveBucketLinks(links, buckets)
-      .select(col("volume"), col("bucket"),
-        col("resolved_volume").as("rv0"),
-        col("resolved_bucket").as("rb0"),
-        col("status").as("link_status"))
     val bktProbe = buckets.select("volume", "bucket").distinct()
       .withColumnRenamed("volume", "rv").withColumnRenamed("bucket", "rb")
       .withColumn("bkt_exists", lit(true))
@@ -453,12 +436,7 @@ object CommitLog {
     val oldProbe = snapshotsExt.select(col("volume").as("rv"),
       col("bucket").as("rb"), col("name").as("old_name"),
       col("status").as("old_status"))
-    requests
-      .join(broadcast(resolved), Seq("volume", "bucket"), "left")
-      .withColumn("rv", when(col("link_status") === "CYCLE", col("volume"))
-        .otherwise(coalesce(col("rv0"), col("volume"))))
-      .withColumn("rb", when(col("link_status") === "CYCLE", col("bucket"))
-        .otherwise(coalesce(col("rb0"), col("bucket"))))
+    Links.stageLinkTargets(requests, links, buckets)
       .join(broadcast(bktProbe), Seq("rv", "rb"), "left")
       .join(broadcast(ownerProbe), Seq("rv"), "left")
       .join(broadcast(newProbe), Seq("rv", "rb", "new_name"), "left")
@@ -564,15 +542,10 @@ object CommitLog {
    * is a control-plane dimension broadcast into the request batch.
    */
   def snapshotDeleteDecisions(requests: DataFrame, buckets: DataFrame,
-                              links: DataFrame, volumes: DataFrame,
+                              links: Seq[Links.LinkRow], volumes: DataFrame,
                               snapshotsExt: DataFrame,
                               admins: Seq[String] = Seq("om-admin"))
       : DataFrame = {
-    val resolved = Links.resolveBucketLinks(links, buckets)
-      .select(col("volume"), col("bucket"),
-        col("resolved_volume").as("rv0"),
-        col("resolved_bucket").as("rb0"),
-        col("status").as("link_status"))
     val bktProbe = buckets.select("volume", "bucket").distinct()
       .withColumnRenamed("volume", "rv").withColumnRenamed("bucket", "rb")
       .withColumn("bkt_exists", lit(true))
@@ -581,12 +554,7 @@ object CommitLog {
     val snapProbe = snapshotsExt.select(col("volume").as("rv"),
       col("bucket").as("rb"), col("name").as("snapshot_name"),
       col("status").as("snap_status"))
-    requests
-      .join(broadcast(resolved), Seq("volume", "bucket"), "left")
-      .withColumn("rv", when(col("link_status") === "CYCLE", col("volume"))
-        .otherwise(coalesce(col("rv0"), col("volume"))))
-      .withColumn("rb", when(col("link_status") === "CYCLE", col("bucket"))
-        .otherwise(coalesce(col("rb0"), col("bucket"))))
+    Links.stageLinkTargets(requests, links, buckets)
       .join(broadcast(bktProbe), Seq("rv", "rb"), "left")
       .join(broadcast(ownerProbe), Seq("rv"), "left")
       .join(broadcast(snapProbe), Seq("rv", "rb", "snapshot_name"), "left")

@@ -138,26 +138,23 @@ object Hierarchy {
    * reference: KeyManagerImpl.java:1979-2100 returns the children and Recon
    * computes their sizes recursively — and matching what the OBS
    * [[Listing.listStatus]] prefix grouping counts). The subtree rollup goes
-   * through the resolved directory paths (the same k bounded parent-joins
-   * as [[resolveDirs]] — never driver recursion): every file joins to its
-   * parent dir's path once, and the child is the first path segment under
+   * through the resolved directory paths: every file joins to its parent
+   * dir's path once, and the child is the first path segment under
    * `parentPath` — one co-partitioned join + one aggregation.
    *
-   * `resolvedDirs` (volume, bucket, dir_id, path) replaces the ladder with
-   * stored paths, e.g. [[graft.core.Tables.directoryPathsFso]]; it may
-   * span other buckets — only (volume, bucket)'s rows are read.
+   * `resolvedDirs` (volume, bucket, dir_id, path) holds the directory
+   * paths: the stored path index
+   * ([[graft.core.Tables.directoryPathsFso]]) or a [[resolveDirs]] ladder.
+   * It may span other buckets — only (volume, bucket)'s rows are read.
    */
-  def listStatusFso(dirs: DataFrame, files: DataFrame,
+  def listStatusFso(resolvedDirs: DataFrame, files: DataFrame,
                     volume: String, bucket: String, parentPath: String,
-                    maxDepth: Int = 8,
                     startChild: String = "",
-                    numEntries: Option[Int] = None,
-                    resolvedDirs: Option[DataFrame] = None): DataFrame = {
+                    numEntries: Option[Int] = None): DataFrame = {
     val pid = if (parentPath.isEmpty) 0L else pathIdOf(volume, bucket, parentPath)
     def inBucket(df: DataFrame) =
       df.filter(col("volume") === volume && col("bucket") === bucket)
-    val rd = resolvedDirs.map(inBucket)
-      .getOrElse(resolveDirs(inBucket(dirs), maxDepth))
+    val rd = inBucket(resolvedDirs)
     val prefix = if (parentPath.isEmpty) "" else parentPath + "/"
     // child segment directly under parentPath, for any path inside the subtree
     def childOf(path: Column): Column =
@@ -403,15 +400,14 @@ object Hierarchy {
    * Paged FSO listStatus walk (the client pagination loop): independent
    * pages chained by `child > lastChild` keyset tokens; concatenation must
    * equal the unpaged listing. `resolvedDirs` is passed to
-   * [[listStatusFso]] (the stored path index, the dual of the reference's
-   * persisted directoryTable the iterator seeks into).
+   * [[listStatusFso]] (e.g. the stored path index, the dual of the
+   * reference's persisted directoryTable the iterator seeks into).
    */
-  def listStatusFsoWalk(dirs: DataFrame, files: DataFrame,
+  def listStatusFsoWalk(resolvedDirs: DataFrame, files: DataFrame,
                         volume: String, bucket: String, parentPath: String,
-                        pageSize: Int, maxDepth: Int = 8,
-                        maxPages: Int = 100000,
-                        resolvedDirs: Option[DataFrame] = None): DataFrame = {
-    val spark = dirs.sparkSession
+                        pageSize: Int,
+                        maxPages: Int = 100000): DataFrame = {
+    val spark = files.sparkSession
     // The walk reads the WHOLE listing page by page, so the subtree rollup
     // is materialized once (child-level rows = output-sized, tiny next to
     // the file table) and every page is a keyset slice `child > token` of
@@ -419,8 +415,8 @@ object Hierarchy {
     // per-page subtree PRUNING path (listStatusFso's startChild) stays the
     // shape for single-page API calls, where computing the full listing
     // would waste the whole point of resuming.
-    val full = listStatusFso(dirs, files, volume, bucket, parentPath,
-      maxDepth, resolvedDirs = resolvedDirs).localCheckpoint()
+    val full = listStatusFso(resolvedDirs, files, volume, bucket,
+      parentPath).localCheckpoint()
     val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
     var start = ""
     var pages = 0

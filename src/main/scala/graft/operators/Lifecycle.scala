@@ -757,14 +757,9 @@ object Lifecycle {
    * the namespace scan to them — the big side never shuffles.
    */
   def mpuInitiateDecisions(requests: DataFrame, buckets: DataFrame,
-                           links: DataFrame, objects: DataFrame,
+                           links: Seq[Links.LinkRow], objects: DataFrame,
                            serverDefaultRepl: String = "RATIS/THREE")
       : DataFrame = {
-    val resolved = Links.resolveBucketLinks(links, buckets)
-      .select(col("volume"), col("bucket"),
-        col("resolved_volume").as("rv0"),
-        col("resolved_bucket").as("rb0"),
-        col("status").as("link_status"))
     val bktProbe = buckets
       .withColumn("__bidx", substring(col("bucket"), 7, 10).cast("long"))
       .select(col("volume").as("rv"), col("bucket").as("rb"),
@@ -773,12 +768,7 @@ object Lifecycle {
           .when(col("__bidx") % 3 === 1, lit("EC/rs-3-2-1024k"))
           .otherwise(lit("")).as("__bucket_default"),
         lit(true).as("bkt_exists"))
-    val staged = requests
-      .join(broadcast(resolved), Seq("volume", "bucket"), "left")
-      .withColumn("rv", when(col("link_status") === "CYCLE", col("volume"))
-        .otherwise(coalesce(col("rv0"), col("volume"))))
-      .withColumn("rb", when(col("link_status") === "CYCLE", col("bucket"))
-        .otherwise(coalesce(col("rb0"), col("bucket"))))
+    val staged = Links.stageLinkTargets(requests, links, buckets)
     val anc = staged
       .withColumn("__parent", Aggregates.parentDirOf("key"))
       .filter(col("__parent") =!= "")
@@ -1207,15 +1197,10 @@ object Lifecycle {
    * catalog) broadcast into the protocol-sized batch.
    */
   def lifecycleDeleteDecisions(requests: DataFrame, buckets: DataFrame,
-                               links: DataFrame, volumes: DataFrame,
+                               links: Seq[Links.LinkRow], volumes: DataFrame,
                                lcConfigs: DataFrame,
                                admins: Seq[String] = Seq("om-admin"))
       : DataFrame = {
-    val resolved = Links.resolveBucketLinks(links, buckets)
-      .select(col("volume"), col("bucket"),
-        col("resolved_volume").as("rv0"),
-        col("resolved_bucket").as("rb0"),
-        col("status").as("link_status"))
     val bktProbe = buckets.select("volume", "bucket").distinct()
       .withColumnRenamed("volume", "rv").withColumnRenamed("bucket", "rb")
       .withColumn("bkt_exists", lit(true))
@@ -1224,12 +1209,7 @@ object Lifecycle {
     val cfgProbe = lcConfigs.select(col("volume").as("rv"),
       col("bucket").as("rb")).distinct()
       .withColumn("cfg_exists", lit(true))
-    requests
-      .join(broadcast(resolved), Seq("volume", "bucket"), "left")
-      .withColumn("rv", when(col("link_status") === "CYCLE", col("volume"))
-        .otherwise(coalesce(col("rv0"), col("volume"))))
-      .withColumn("rb", when(col("link_status") === "CYCLE", col("bucket"))
-        .otherwise(coalesce(col("rb0"), col("bucket"))))
+    Links.stageLinkTargets(requests, links, buckets)
       .join(broadcast(bktProbe), Seq("rv", "rb"), "left")
       .join(broadcast(ownerProbe), Seq("rv"), "left")
       .join(broadcast(cfgProbe), Seq("rv", "rb"), "left")

@@ -142,7 +142,7 @@ class CommitLogSpec extends SparkSpecBase {
     import graft.core.{Tables => T}
     val got = graft.operators.CommitLog.snapshotCreateDecisions(
       T.snapshotCreateRequests(spark, sfd), T.buckets(spark, sfd),
-      T.bucketLinks(spark, sfd), T.volumes(spark, sfd),
+      T.bucketLinkRows.rows, T.volumes(spark, sfd),
       T.snapshotCatalog(spark, sfd))
       .as[(Long, String, String, String, String)].collect()
       .map(r => r._1 -> ((r._3, r._4, r._5))).toMap
@@ -169,7 +169,7 @@ class CommitLogSpec extends SparkSpecBase {
     import graft.core.{Tables => T}
     val got = graft.operators.CommitLog.snapshotRenameDecisions(
       T.snapshotRenameRequests(spark, sfd), T.buckets(spark, sfd),
-      T.bucketLinks(spark, sfd), T.volumes(spark, sfd),
+      T.bucketLinkRows.rows, T.volumes(spark, sfd),
       T.snapshotCatalogExt(spark, sfd))
       .as[(Long, String, String, String, String, String)].collect()
       .map(r => r._1 -> ((r._4, r._5, r._6))).toMap

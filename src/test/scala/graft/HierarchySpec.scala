@@ -24,6 +24,9 @@ class HierarchySpec extends SparkSpecBase {
     .toDF("volume", "bucket", "parent_id", "name", "object_id", "data_size")
     .withColumn("modification_time", lit(0L))
 
+  // the listings' directory paths, resolved by the ladder
+  private lazy val dirPaths = Hierarchy.resolveDirs(dirs)
+
   test("resolveDirs rebuilds full paths from parent pointers") {
     val r = Hierarchy.resolveDirs(dirs, maxDepth = 4)
       .select("dir_id", "path").as[(Long, String)].collect().toMap
@@ -60,11 +63,11 @@ class HierarchySpec extends SparkSpecBase {
 
   test("listStatusFso lists immediate children with RECURSIVE subtree rollups") {
     // 'a' counts f1 AND a/b/f2 — the whole subtree, not just direct files
-    val root = rows(Hierarchy.listStatusFso(dirs, files, "v", "b", ""))
+    val root = rows(Hierarchy.listStatusFso(dirPaths, files, "v", "b", ""))
     assert(root === Seq(
       Seq("a", true, 2L, 30L), Seq("c", true, 1L, 30L),
       Seq("f4", false, 1L, 40L)))
-    val underA = rows(Hierarchy.listStatusFso(dirs, files, "v", "b", "a"))
+    val underA = rows(Hierarchy.listStatusFso(dirPaths, files, "v", "b", "a"))
     assert(underA === Seq(
       Seq("b", true, 1L, 20L), Seq("f1", false, 1L, 10L)))
   }
@@ -73,14 +76,14 @@ class HierarchySpec extends SparkSpecBase {
     // root children in order: a (dir), c (dir), f4 (file) — pageSize 1 puts
     // a page break exactly ON each dir boundary
     for (ps <- Seq(1, 2, 100)) {
-      val walked = rows(Hierarchy.listStatusFsoWalk(dirs, files, "v", "b", "",
-        pageSize = ps))
-      val full = rows(Hierarchy.listStatusFso(dirs, files, "v", "b", ""))
+      val walked = rows(Hierarchy.listStatusFsoWalk(dirPaths, files, "v",
+        "b", "", pageSize = ps))
+      val full = rows(Hierarchy.listStatusFso(dirPaths, files, "v", "b", ""))
       assert(walked === full, s"pageSize=$ps")
     }
     // a single mid-walk page: resumes STRICTLY after the token child and
     // still carries the full recursive rollup of the next dir
-    val page = rows(Hierarchy.listStatusFso(dirs, files, "v", "b", "",
+    val page = rows(Hierarchy.listStatusFso(dirPaths, files, "v", "b", "",
       startChild = "a", numEntries = Some(1)))
     assert(page === Seq(Seq("c", true, 1L, 30L), Seq("f4", false, 1L, 40L)))
   }
@@ -99,9 +102,11 @@ class HierarchySpec extends SparkSpecBase {
       ("v", "b2", id2("a/x"), "a/x"), ("v", "b2", id2("z"), "z"))
       .toDF("volume", "bucket", "dir_id", "path")
     for (parent <- Seq("", "a")) {
-      val ladder = rows(Hierarchy.listStatusFso(both, files, "v", "b", parent))
-      val indexed = rows(Hierarchy.listStatusFso(both, files, "v", "b", parent,
-        resolvedDirs = Some(index)))
+      val ladder = rows(Hierarchy.listStatusFso(
+        Hierarchy.resolveDirs(both.filter(col("bucket") === "b")), files,
+        "v", "b", parent))
+      val indexed = rows(Hierarchy.listStatusFso(index, files, "v", "b",
+        parent))
       assert(indexed === ladder && ladder.nonEmpty, s"parent=$parent")
     }
   }
@@ -109,7 +114,8 @@ class HierarchySpec extends SparkSpecBase {
   test("FSO and OBS listStatus agree on a 3-level tree (deep fixture)") {
     val sf = "/root/testdata/sf0.001"
     val fso = rows(Hierarchy.listStatusFso(
-      graft.core.Tables.directoriesFsoDeep(spark, sf),
+      Hierarchy.resolveDirs(graft.core.Tables.directoriesFsoDeep(spark, sf)
+        .filter(col("volume") === "vol2" && col("bucket") === "bucket5")),
       graft.core.Tables.filesFsoDeep(spark, sf),
       "vol2", "bucket5", "warehouse/R"))
     val obs = rows(graft.operators.Listing.listStatus(

@@ -174,8 +174,7 @@ class ListingSpec extends SparkSpecBase {
       sorted, links, keys, "vol3", "link-broken", "", "", 50)).isEmpty)
     assert(rows(graft.operators.Links.listKeysVia(
       sorted, links, keys, "vol0", "link-cycle1", "", "", 50)).isEmpty)
-    val status = graft.operators.Links.resolveBucketLinks(
-      graft.core.Tables.bucketLinks(spark, sf),
+    val status = graft.operators.Links.resolveBucketLinks(links,
       graft.core.Tables.buckets(spark, sf))
       .select("bucket", "status").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap

@@ -152,14 +152,22 @@ class PeriodicScanApiSpec extends SparkSpecBase {
     }
     val links = graft.core.Tables.bucketLinkRows.rows ++
       chain("max", Links.MaxHops) ++ chain("over", Links.MaxHops + 1)
-    val catalog = Links.resolveBucketLinks(
-        links.toDF("volume", "bucket", "source_volume", "source_bucket"),
-        graft.core.Tables.buckets(spark, sf))
+    val buckets = graft.core.Tables.buckets(spark, sf)
+    val catalog = Links.resolveBucketLinks(links, buckets)
       .select("volume", "bucket", "resolved_volume", "resolved_bucket", "status")
       .collect().map(r => (r.getString(0), r.getString(1)) ->
         (r.getString(2), r.getString(3), r.getString(4))).toMap
     assert(catalog(("deep", "max1"))._3 === "OK")
     assert(catalog(("deep", "over1"))._3 === "CYCLE")
+    // a ladder lands on the terminal of a chain within the bound, and on
+    // the requested pair of one past it (CYCLE)
+    val staged = Links.stageLinkTargets(
+        Seq(("deep", "max1"), ("deep", "over1")).toDF("volume", "bucket"),
+        links, buckets)
+      .select("bucket", "rv", "rb", "link_status")
+      .as[(String, String, String, String)].collect().toSet
+    assert(staged === Set(("max1", "vol0", "bucket0", "OK"),
+      ("over1", "deep", "over1", "CYCLE")))
     val keys = graft.core.Tables.bucketKeys(spark, sf)
     val plain = ("vol0", "bucket3")
     val missing = ("vol9", "no-such-bucket")

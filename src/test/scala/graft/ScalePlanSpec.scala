@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 
 /**
  * Global physical-plan invariants over EVERY declared query (every
@@ -13,10 +14,13 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
  *    against a broadcast singleton/aggregate (BroadcastNestedLoopJoin with
  *    a one-row build side) — an unhinted CartesianProduct is the one
  *    operator that is always a scale bug at 100 TB.
- *  - No plan over 1,000 physical nodes. A derived frame is inlined at
+ *  - No plan over 250 physical nodes. A derived frame is inlined at
  *    every reference, so a ladder that re-derives its request batch or its
  *    probes per use grows its plan (and its key-table scans) with each
  *    reference; stored inputs and one shared probe keep plans small.
+ *  - The link catalog's resolution is one join: the chase runs on the
+ *    driver, and one broadcast join checks the terminals against the
+ *    bucket catalog.
  */
 class ScalePlanSpec extends SparkSpecBase {
   private val sf = "/root/testdata/sf0.001"
@@ -29,11 +33,11 @@ class ScalePlanSpec extends SparkSpecBase {
         catch { case e: Throwable => Left(e.getMessage) })
     }
 
-  /** Physical nodes, counting the AQE wrapper's input plan and every
+  /** The physical nodes, counting the AQE wrapper's input plan and every
     * node's subquery plans (DPP and scalar subqueries). */
-  private def nodes(p: SparkPlan): Int = p match {
-    case a: AdaptiveSparkPlanExec => 1 + nodes(a.inputPlan)
-    case _ => 1 + (p.children ++ p.subqueries).map(nodes).sum
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => a +: nodes(a.inputPlan)
+    case _ => p +: (p.children ++ p.subqueries).flatMap(nodes)
   }
 
   test("no declared query plans a CartesianProduct") {
@@ -45,10 +49,16 @@ class ScalePlanSpec extends SparkSpecBase {
       s"CartesianProduct / planning failure in: ${offenders.sorted}")
   }
 
-  test("no declared query plans more than 1,000 physical nodes") {
+  test("no declared query plans more than 250 physical nodes") {
     val over = plans
-      .collect { case (name, Right(p)) => name -> nodes(p) }
-      .filter(_._2 > 1000)
-    assert(over.isEmpty, s"over the 1,000-node plan budget: ${over.sorted}")
+      .collect { case (name, Right(p)) => name -> nodes(p).size }
+      .filter(_._2 > 250)
+    assert(over.isEmpty, s"over the 250-node plan budget: ${over.sorted}")
+  }
+
+  test("the link catalog's resolution plans exactly one join") {
+    val plan = plans.toMap.apply("q_link_resolve")
+      .fold(e => fail(e), identity)
+    assert(nodes(plan).count(_.isInstanceOf[BaseJoinExec]) === 1)
   }
 }

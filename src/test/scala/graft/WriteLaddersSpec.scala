@@ -622,7 +622,7 @@ class WriteLaddersSpec extends SparkSpecBase {
       .filter(col("decision") === "SET").select("volume", "bucket")
     val got = Lifecycle.lifecycleDeleteDecisions(
       T.lcDeleteRequests(spark, sf), T.buckets(spark, sf),
-      T.bucketLinks(spark, sf), T.volumes(spark, sf), lcConfigs)
+      T.bucketLinkRows.rows, T.volumes(spark, sf), lcConfigs)
       .as[(Long, String, String, String)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     assert(got(1L)._3 === "DELETED")
@@ -712,9 +712,7 @@ class WriteLaddersSpec extends SparkSpecBase {
       .toDF("volume", "bucket", "layout")
     val objs = Seq(("v", "bucket1", "a/f.dat"), ("v", "bucket2", "a/f.dat"))
       .toDF("volume", "bucket", "key")
-    val links = Seq.empty[(String, String, String, String)]
-      .toDF("volume", "bucket", "source_volume", "source_bucket")
-    val got = Lifecycle.mpuInitiateDecisions(reqs, bkts, links, objs)
+    val got = Lifecycle.mpuInitiateDecisions(reqs, bkts, Seq.empty, objs)
       .select("req_id", "decision", "effective_replication")
       .as[(Long, String, String)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
@@ -854,7 +852,7 @@ class WriteLaddersSpec extends SparkSpecBase {
   test("snapshotDeleteDecisions: name gate, links, non-active refusals") {
     val got = graft.operators.CommitLog.snapshotDeleteDecisions(
       T.snapshotDeleteRequests(spark, sf), T.buckets(spark, sf),
-      T.bucketLinks(spark, sf), T.volumes(spark, sf),
+      T.bucketLinkRows.rows, T.volumes(spark, sf),
       T.snapshotCatalogLive(spark, sf))
       .as[(Long, String, String, String, String, String)].collect()
       .map(r => r._1 -> ((r._5, r._6))).toMap
