@@ -94,14 +94,17 @@ object Api {
     }
   }
 
-  /** FSO listStatus over the stored directory path index — no per-request
-    * path resolution. A broken link's empty listing starts no Spark job. */
+  /** FSO listStatus: a page of `dir`'s children after `startChild`, one
+    * bounded slice of the stored child summary (Tables.fsoChildren), with
+    * one look-ahead row past `numEntries` as listKeys has. A broken link's
+    * empty listing starts no Spark job. */
   def listStatusFso(s: SparkSession, d: String, volume: String, bucket: String,
-                    dir: String): DataFrame =
+                    dir: String, startChild: String = "",
+                    numEntries: Int = 1000): DataFrame =
     resolved(s, d, volume, bucket) match {
       case Some((v, b)) =>
-        Hierarchy.listStatusFso(T.directoryPathsFso(s, d), T.filesFso(s, d),
-          v, b, dir)
+        Hierarchy.listStatusFso(T.fsoChildren(s, d), v, b, dir, startChild,
+          Some(numEntries))
       case None => s.createDataFrame(
         java.util.List.of[Row](), Hierarchy.ListStatusSchema)
     }

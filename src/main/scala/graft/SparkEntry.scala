@@ -37,15 +37,6 @@ object SparkEntry {
         T.objectsMixed(s, d), T.deletedDirs(s, d), T.replicas(s, d),
         T.containersScm(s, d)))
 
-  // ReplicationManager health-check chain: a deterministic fold over the
-  // container dim — derived once per (JVM, dir), consumed by both the
-  // chain query and the report's increment projections.
-  private def healthChainCached(s: SparkSession, d: String): DataFrame =
-    TempDirs.parquet(s, "healthchain", d)(
-      ClusterHealth.containerHealthChain(T.datanodes(s, d),
-        T.containersScm(s, d), T.containersOm(s, d),
-        T.pipelineMembers(s, d)))
-
   // The stored object-tag state = the put ladder's APPLIED outcomes —
   // a derived table exactly like the snapshot warehouse; the delete
   // ladder probes it rather than re-running the whole put plan inline.
@@ -203,7 +194,7 @@ object SparkEntry {
       CommitLog.keysDeleteBatchDecisions(T.keysDeleteRequests(s, d),
         T.objects(s, d), T.buckets(s, d))),
     // FSO DeleteKey ladder: bucket → path resolve → dir emptiness. The
-    // dir probe reads the stored directory path index (no iterative
+    // dir probe reads the directory path index (no iterative
     // resolve: the probe needs paths, not ids)
     "q_delete_key" -> ((s, d) =>
       CommitLog.keyDeleteDecisions(T.deleteKeyRequests(s, d),
@@ -904,8 +895,9 @@ object SparkEntry {
         T.openKeys(s, d), T.multipartParts(s, d), T.deletedDirs(s, d))),
     // CreateDirectory ladder: root guard, file-in-path guards (self and
     // ancestor), idempotent DIR_EXISTS, minted-parents count.
-    // the ancestor set IS the stored directory path index (strict key
-    // prefixes, distinct) — read it instead of re-exploding the namespace
+    // the ancestor set IS the directory path index (strict key prefixes,
+    // distinct; the child summary's directory rows) — read it instead of
+    // re-exploding the namespace
     "q_fso_mkdir" -> ((s, d) =>
       Hierarchy.mkdirDecisions(T.fsoMkdirRequests(s, d), T.objects(s, d),
         T.buckets(s, d),
@@ -970,35 +962,33 @@ object SparkEntry {
     // ---- FSO parent-pointer hierarchy (SURVEY §2.3 row FSO-resolve) ----
     // namespace depth is a config (keys here are 4 segments ⇒ 3 dir levels).
     // q_fso_resolve and q_fso_list_status_deep run the resolve ladder (its
-    // oracle coverage); the listings read the stored path index.
+    // oracle coverage); the listings slice the stored child summary.
     "q_fso_resolve" -> ((s, d) =>
       Hierarchy.resolveFiles(T.directoriesFso(s, d), T.filesFso(s, d),
         maxDepth = 4)),
     "q_fso_list_status" -> ((s, d) =>
-      Hierarchy.listStatusFso(T.directoryPathsFso(s, d), T.filesFso(s, d),
+      Hierarchy.listStatusFso(T.fsoChildren(s, d),
         "vol2", "bucket5", "warehouse/R")),
     // 5-segment namespace: each child dir's rollup must traverse TWO dir
     // levels to reach its files — direct-children-only counting returns 0.
     // The ladder resolves vol2/bucket5's dirs only, so it and its pin stay
-    // bucket-sized.
+    // bucket-sized; the summary is built from the FSO tables.
     "q_fso_list_status_deep" -> ((s, d) =>
-      Hierarchy.listStatusFso(
-        Hierarchy.resolveDirs(T.directoriesFsoDeep(s, d)
-          .filter(col("volume") === "vol2" && col("bucket") === "bucket5")),
-        T.filesFsoDeep(s, d), "vol2", "bucket5", "warehouse/R")),
+      Hierarchy.listStatusFso(Hierarchy.childSummary(
+          Hierarchy.resolveDirs(T.directoriesFsoDeep(s, d)
+            .filter(col("volume") === "vol2" && col("bucket") === "bucket5")),
+          T.filesFsoDeep(s, d)),
+        "vol2", "bucket5", "warehouse/R")),
     // the same listing via keyset pages (child > token), concatenated —
     // must hash-equal the unpaged q_fso_list_status oracle. Page size
-    // adapts to the child count (one cheap count on the small dir table)
-    // so the walk spans ~5 pages at EVERY scale factor — exercising real
+    // adapts to the child count (one count of the summary's slice) so the
+    // walk spans ~5 pages at EVERY scale factor — exercising real
     // pagination at verify SF without page-count blowup at bench SF.
     "q_fso_list_pages" -> ((s, d) => {
-      val dirs = T.directoriesFso(s, d)
-      val pid = Hierarchy.pathIdOf("vol2", "bucket5", "warehouse/R")
-      val n = dirs.filter(col("volume") === "vol2" &&
-        col("bucket") === "bucket5" &&
-        col("parent_id") === pid).count()
-      Hierarchy.listStatusFsoWalk(T.directoryPathsFso(s, d), T.filesFso(s, d),
-        "vol2", "bucket5", "warehouse/R",
+      val children = T.fsoChildren(s, d)
+      val n = Hierarchy.listStatusFso(children, "vol2", "bucket5",
+        "warehouse/R").count()
+      Hierarchy.listStatusFsoWalk(children, "vol2", "bucket5", "warehouse/R",
         pageSize = math.max(50, (n / 5 + 1).toInt))
     }),
     // ---- incremental CDC-maintained views (SURVEY §2.9) ----
@@ -1144,11 +1134,11 @@ object SparkEntry {
     // parquet once per (JVM, dir) and shared with q_replication_report,
     // which re-derives its increments from the same rows (VERDICT r8 #2).
     "q_health_check_chain" -> ((s, d) =>
-      healthChainCached(s, d).orderBy("container_id")),
+      T.containerHealthChain(s, d).orderBy("container_id")),
     // ozone admin container report: per-state counts with 100-capped
     // id samples in chain-visit order, the side-rung reports included.
     "q_replication_report" -> ((s, d) =>
-      ClusterHealth.replicationReportFromChain(healthChainCached(s, d))),
+      ClusterHealth.replicationReportFromChain(T.containerHealthChain(s, d))),
     // ozone admin datanode decommission/maintenance/recommission:
     // host resolution, whole-batch capacity pre-checks, per-node rungs.
     "q_decommission_admin" -> ((s, d) =>

@@ -761,12 +761,30 @@ object Tables {
   // The FSO tables are PERSISTED entities in the reference (directoryTable/
   // fileTable); derive them once per (JVM, source) through the artifact
   // memo ([[TempDirs.parquet]]), resolved once per session, like
-  // objectsSorted.
+  // objectsSorted. The directory table is the child summary's directory
+  // rows, so the FSO namespace has one derivation from the keys.
   def directoriesFso(spark: SparkSession, dir: String): DataFrame =
-    TempDirs.parquet(spark, "dirs", dir)(directoriesFsoBuild(objects(spark, dir)))
+    TempDirs.parquet(spark, "dirs", dir)(directoriesFsoBuild(fsoChildren(spark, dir)))
 
   def filesFso(spark: SparkSession, dir: String): DataFrame =
     TempDirs.parquet(spark, "files", dir)(filesFsoBuild(objects(spark, dir)))
+
+  /** The FSO child summary ([[graft.operators.Hierarchy.keyChildSummary]]
+    * of the key table): Recon's pre-aggregated NSSummary in listing form
+    * (NSSummaryEndpoint → BucketEntityHandler), stored once per (JVM,
+    * source); every FSO listing is a slice of it. Sorted by (volume,
+    * bucket, parent_path, child), so parquet statistics let a listing skip
+    * every other directory's rows, and split by is_dir, so the directory
+    * rows ([[directoryPathsFso]]) read no file row. */
+  def fsoChildren(spark: SparkSession, dir: String): DataFrame =
+    TempDirs.read(spark, TempDirs.artifact("fsochildren", dir)(
+      graft.operators.Hierarchy.keyChildSummary(objects(spark, dir))
+        .repartitionByRange(col("volume"), col("bucket"), col("parent_path"))
+        // is_dir leads the in-file sort, so the split write keeps key order
+        .sortWithinPartitions("is_dir", "volume", "bucket", "parent_path", "child")
+        .write.partitionBy("is_dir").mode("overwrite").parquet(_)))
+      .withColumn("is_dir", col("is_dir").cast("boolean")) // a partition value reads as a string
+      .select("volume", "bucket", "parent_path", "child", "is_dir", "num_files", "total_size")
 
   /**
    * Deepened namespace (5-segment keys: the 4-segment key's basename
@@ -802,8 +820,8 @@ object Tables {
       writeKeySorted(objectsMixed(spark, dir), _)))
 
   def directoriesFsoDeep(spark: SparkSession, dir: String): DataFrame =
-    TempDirs.parquet(spark, "dirsDeep", dir)(
-      directoriesFsoBuild(objectsDeep(spark, dir)))
+    TempDirs.parquet(spark, "dirsDeep", dir)(directoriesFsoBuild(
+      graft.operators.Hierarchy.keyChildSummary(objectsDeep(spark, dir))))
 
   def filesFsoDeep(spark: SparkSession, dir: String): DataFrame =
     TempDirs.parquet(spark, "filesDeep", dir)(
@@ -812,68 +830,37 @@ object Tables {
   /** The path index of [[directoriesFso]]: (volume, bucket, dir_id, path),
     * each directory's full path — what the resolve ladder
     * ([[graft.operators.Hierarchy.resolveDirs]]) rebuilds from parent
-    * pointers, derived here from the same rows as the directory table
-    * ([[fsoDirRows]]), never by the ladder. Sorted by (volume, bucket,
-    * path), so parquet row-group statistics let a bucket slice and a `path`
-    * prefix skip the other row groups. Built once per (JVM, source) like
-    * the table it indexes; FSO listings read it instead of resolving paths
-    * per request. */
+    * pointers, here a projection of [[fsoChildren]]'s directory rows,
+    * never the ladder. Nothing of its own is stored. */
   def directoryPathsFso(spark: SparkSession, dir: String): DataFrame =
-    TempDirs.parquet(spark, "dirindex", dir)(
-      fsoDirRows(objects(spark, dir))
-        .select("volume", "bucket", "dir_id", "path")
-        .orderBy("volume", "bucket", "path"))
+    dirPathsOf(fsoChildren(spark, dir)).select("volume", "bucket", "dir_id", "path")
 
-  /** directories(volume, bucket, dir_id, parent_id, name): every ancestor
-    * prefix of every key, one row per distinct dir. Ids are md5-derived
-    * from the full path (Hierarchy.pathId); a root child's parent_id = 0. */
-  private def directoriesFsoBuild(o: DataFrame): DataFrame =
-    fsoDirRows(o).select(col("volume"), col("bucket"), col("dir_id"),
-      col("parent_id"), lastSeg(col("path")).as("name"))
-
-  /** Every directory of `o` with its full path: (volume, bucket, path,
-    * dir_id, parent_id) — the one derivation behind the directory table
-    * and its path index. The prefix depth is DERIVED from the namespace's
-    * own max key depth at build time (one tiny agg, paid once per memoized
-    * build) — keys deeper than any hardcoded bound can never silently lose
-    * their parent dirs. */
-  private def fsoDirRows(o: DataFrame): DataFrame = {
-    // coalesce guards the empty-input case (max over zero rows is null);
-    // the depth value is then irrelevant — zero key rows explode to zero
-    // directory rows for any bound
-    val maxDirDepth = math.max(1,
-      o.agg(coalesce(max(size(split(col("key"), "/"))), lit(2)))
-        .head.getInt(0) - 1)
-    // STRICT ancestor prefixes only (depth < number of segments): a file's
-    // own full path must never become a phantom directory row on
-    // namespaces whose keys aren't uniformly deep
-    val prefixes = (1 to maxDirDepth).map(d =>
-      when(size(split(col("key"), "/")) > d,
-        concat_ws("/", slice(split(col("key"), "/"), 1, d))))
-    val paths = o
-      .select(col("volume"), col("bucket"), explode(array(prefixes: _*)).as("path"))
-      .filter(col("path").isNotNull)
-      .distinct()
-    val parentPath = expr("CASE WHEN instr(path, '/') > 0 THEN " +
-      "substring(path, 1, length(path) - length(element_at(split(path, '/'), -1)) - 1) " +
-      "ELSE '' END")
-    paths
+  /** A child summary's directory rows with their full path and id
+    * (Hierarchy.pathId, md5-derived from the path). */
+  private def dirPathsOf(children: DataFrame): DataFrame =
+    children.filter(col("is_dir"))
+      .withColumn("path", when(col("parent_path") === "", col("child"))
+        .otherwise(concat(col("parent_path"), lit("/"), col("child"))))
       .withColumn("dir_id",
         graft.operators.Hierarchy.pathId(col("volume"), col("bucket"), col("path")))
-      .withColumn("parent_path", parentPath)
-      .withColumn("parent_id",
-        when(col("parent_path") === "", lit(0L))
-          .otherwise(graft.operators.Hierarchy.pathId(
-            col("volume"), col("bucket"), col("parent_path"))))
-      .select("volume", "bucket", "path", "dir_id", "parent_id")
-  }
 
-  /** files keyed by parent dir id (fileTable rows: parentId + fileName). */
-  private def filesFsoBuild(o: DataFrame): DataFrame = {
+  /** directories(volume, bucket, dir_id, parent_id, name) from a child
+    * summary: one row per distinct dir; a root child's parent_id = 0. */
+  private def directoriesFsoBuild(children: DataFrame): DataFrame =
+    dirPathsOf(children).select(col("volume"), col("bucket"), col("dir_id"),
+      when(col("parent_path") === "", lit(0L))
+        .otherwise(graft.operators.Hierarchy.pathId(
+          col("volume"), col("bucket"), col("parent_path"))).as("parent_id"),
+      col("child").as("name"))
+
+  /** files keyed by parent dir id (fileTable rows: parentId + fileName);
+    * a file at the bucket root has parent_id 0, like a root directory. */
+  private[graft] def filesFsoBuild(o: DataFrame): DataFrame = {
     val parentPath = graft.operators.Aggregates.parentDirOf("key")
     o.select(col("volume"), col("bucket"),
-        graft.operators.Hierarchy.pathId(col("volume"), col("bucket"), parentPath)
-          .as("parent_id"),
+        when(parentPath === "", lit(0L))
+          .otherwise(graft.operators.Hierarchy.pathId(
+            col("volume"), col("bucket"), parentPath)).as("parent_id"),
         lastSeg(col("key")).as("name"),
         col("object_id"), col("data_size"), col("modification_time"))
   }
@@ -3522,6 +3509,17 @@ object Tables {
         concat(lit("dn"),
           ((col("pipeline_idx") + col("k") * 7) % 20).cast("string"))
           .as("datanode"))
+
+  /** The ReplicationManager health-check chain
+    * ([[graft.operators.ClusterHealth.containerHealthChain]]) stored once
+    * per (JVM, source): a deterministic fold over the container dim, read
+    * by the chain query and by the replication report's three increment
+    * projections, which must scan it rather than re-plan the fold. */
+  def containerHealthChain(spark: SparkSession, dir: String): DataFrame =
+    TempDirs.parquet(spark, "healthchain", dir)(
+      graft.operators.ClusterHealth.containerHealthChain(datanodes(spark, dir),
+        containersScm(spark, dir), containersOm(spark, dir),
+        pipelineMembers(spark, dir)))
 
   /** deleted_dirs (ref OMDBDefinition.java:110,267-273
     * deletedDirectoryTable): directories deleted but not yet purged —

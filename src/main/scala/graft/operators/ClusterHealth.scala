@@ -3226,9 +3226,10 @@ object ClusterHealth {
    * probe, MISSING from an empty CLOSING set, plain UNHEALTHY from the
    * only-UNHEALTHY recheck that reports without handling).
    *
-   * The body runs over a prebuilt [[containerHealthChain]]: SparkEntry
-   * stores the chain once (parquet, shared with q_health_check_chain), so
-   * the three increment projections scan it rather than re-deriving it.
+   * `chain` must be the STORED [[graft.core.Tables.containerHealthChain]]:
+   * the three increment projections each read it, and over an unstored
+   * [[containerHealthChain]] frame Catalyst plans its 13-rung CASE tree
+   * three times and runs the driver out of heap while planning.
    *
    * Scale shape: one explode of ≤3 stat rows per container + one hash
    * agg over ~22 stat groups; the sample slice caps driver-bound data

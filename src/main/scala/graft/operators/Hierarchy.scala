@@ -16,7 +16,9 @@ import org.apache.spark.sql.functions._
  * caps path depth), so this is k co-partitioned shuffles, never driver-side
  * recursion or an unbounded iterative fixpoint; the directory table is
  * orders of magnitude smaller than the file table and broadcast-joins when
- * it fits.
+ * it fits. Listings never resolve: they slice a child summary (one row per
+ * (parent_path, child) with subtree rollups, Recon's NSSummary), stored
+ * once from the keys as [[graft.core.Tables.fsoChildren]].
  */
 object Hierarchy {
 
@@ -56,8 +58,8 @@ object Hierarchy {
    * jobs at construction time, so don't build it speculatively. Each
    * extension round releases the previous round's pin once its own is
    * filled, so a call leaves ONE pin, whatever its round count. Listings
-   * over the stored FSO tables read their path index
-   * ([[graft.core.Tables.directoryPathsFso]]) instead.
+   * over the stored FSO tables slice their child summary
+   * ([[graft.core.Tables.fsoChildren]]) instead.
    */
   def resolveDirs(dirs: DataFrame, maxDepth: Int = 8): DataFrame = {
     val parents = dirs.select(
@@ -119,74 +121,72 @@ object Hierarchy {
 
   /** Reachability / orphan scan (ref FSORepairTool.java:88-89): files whose
     * parent directory no longer exists — a LEFT ANTI join on the parent
-    * pointer (one co-partitioned shuffle; the dir side is the small one). */
+    * pointer (one co-partitioned shuffle; the dir side is the small one).
+    * A root file's parent (id 0) is the bucket itself, never an orphan. */
   def orphanFiles(dirs: DataFrame, files: DataFrame): DataFrame =
-    files.join(
+    files.filter(col("parent_id") =!= 0L).join(
         dirs.select(col("volume"), col("bucket"), col("dir_id").as("parent_id")),
         Seq("volume", "bucket", "parent_id"), "left_anti")
       .select("volume", "bucket", "parent_id", "name", "object_id", "data_size")
       .orderBy("volume", "bucket", "name", "object_id", "data_size")
+
+  /**
+   * Child summary of a key table (volume, bucket, key, data_size): one row
+   * per (volume, bucket, parent_path, child, is_dir) with num_files and
+   * total_size. Each key explodes to one (ancestor, next segment) pair per
+   * segment, the last one its file row, and one aggregation sums them: a
+   * directory's figures cover its WHOLE subtree (the reference's listing,
+   * KeyManagerImpl.java:1979-2100, with Recon's recursive sizes — what the
+   * OBS [[Listing.listStatus]] prefix grouping counts).
+   */
+  def keyChildSummary(keys: DataFrame): DataFrame =
+    summarize(keys.withColumn("files", lit(1L)).withColumn("leaf_dir", lit(false)))
+
+  /** [[keyChildSummary]] over the FSO tables: each file joins to its parent
+    * dir's path (`resolvedDirs` (volume, bucket, dir_id, path), e.g. a
+    * [[resolveDirs]] ladder; a root file has parent_id 0, an orphan no
+    * path), and each directory adds a zero-file entry, so an empty one is
+    * still listed. */
+  def childSummary(resolvedDirs: DataFrame, files: DataFrame): DataFrame = {
+    val dirs = resolvedDirs.select(col("volume"), col("bucket"),
+      col("dir_id").as("parent_id"), col("path").as("dir"))
+    summarize(files.join(dirs, Seq("volume", "bucket", "parent_id"), "left")
+      .filter(col("dir").isNotNull || col("parent_id") === 0L)
+      .select(col("volume"), col("bucket"), col("data_size"), lit(1L).as("files"),
+        lit(false).as("leaf_dir"), concat_ws("/", col("dir"), col("name")).as("key"))
+      .unionByName(dirs.select(col("volume"), col("bucket"), lit(0L).as("data_size"),
+        lit(0L).as("files"), lit(true).as("leaf_dir"), col("dir").as("key"))))
+  }
+
+  private def summarize(entries: DataFrame): DataFrame = {
+    val segs = col("segs")
+    entries.select(col("volume"), col("bucket"), col("data_size"), col("files"),
+        col("leaf_dir"), split(col("key"), "/").as("segs"))
+      .select(col("*"), posexplode(segs).as(Seq("i", "child")))
+      .groupBy(col("volume"), col("bucket"),
+        concat_ws("/", slice(segs, lit(1), col("i"))).as("parent_path"),
+        col("child"), (col("leaf_dir") || col("i") < size(segs) - 1).as("is_dir"))
+      .agg(sum("files").as("num_files"), sum("data_size").as("total_size"))
+  }
 
   /** Row shape of an FSO listStatus reply. */
   val ListStatusSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType.fromDDL(
       "child STRING, is_dir BOOLEAN, num_files BIGINT, total_size BIGINT")
 
-  /**
-   * FSO listStatus: immediate children of `parentPath`, where each child
-   * directory's rollup covers its WHOLE subtree (recursive, matching the
-   * reference: KeyManagerImpl.java:1979-2100 returns the children and Recon
-   * computes their sizes recursively — and matching what the OBS
-   * [[Listing.listStatus]] prefix grouping counts). The subtree rollup goes
-   * through the resolved directory paths: every file joins to its parent
-   * dir's path once, and the child is the first path segment under
-   * `parentPath` — one co-partitioned join + one aggregation.
-   *
-   * `resolvedDirs` (volume, bucket, dir_id, path) holds the directory
-   * paths: the stored path index
-   * ([[graft.core.Tables.directoryPathsFso]]) or a [[resolveDirs]] ladder.
-   * It may span other buckets — only (volume, bucket)'s rows are read.
-   */
-  def listStatusFso(resolvedDirs: DataFrame, files: DataFrame,
-                    volume: String, bucket: String, parentPath: String,
-                    startChild: String = "",
+  /** FSO listStatus: the immediate children of `parentPath`, a slice of a
+    * child summary (the stored [[graft.core.Tables.fsoChildren]] or a
+    * [[childSummary]]; other buckets' rows are skipped). `startChild` is
+    * EXCLUSIVE (the reference's startKey), and `numEntries` bounds the page
+    * to numEntries+1 rows so the caller derives truncation, like listKeys. */
+  def listStatusFso(children: DataFrame, volume: String, bucket: String,
+                    parentPath: String, startChild: String = "",
                     numEntries: Option[Int] = None): DataFrame = {
-    val pid = if (parentPath.isEmpty) 0L else pathIdOf(volume, bucket, parentPath)
-    def inBucket(df: DataFrame) =
-      df.filter(col("volume") === volume && col("bucket") === bucket)
-    val rd = inBucket(resolvedDirs)
-    val prefix = if (parentPath.isEmpty) "" else parentPath + "/"
-    // child segment directly under parentPath, for any path inside the subtree
-    def childOf(path: Column): Column =
-      element_at(split(substring(path, prefix.length + 1, Int.MaxValue), "/"), 1)
-    // keyset resume (startChild EXCLUSIVE, the reference's startKey —
-    // KeyManagerImpl.java:1979-2100): applied while SCOPING the subtree, so
-    // already-paged children's subtrees are pruned before any join/agg work
-    val subDirs = rd
-      .filter(col("path").startsWith(prefix) && col("path") =!= lit(parentPath))
-      .select(col("dir_id"), childOf(col("path")).as("child"))
-      .filter(col("child") > startChild)
-    // every file in the subtree, attributed to its child-of-parentPath
-    val subFiles = inBucket(files)
-      .join(subDirs.select(col("dir_id").as("parent_id"), col("child")),
-        Seq("parent_id"))
-      .groupBy("child")
-      .agg(count(lit(1)).as("num_files"), sum("data_size").as("total_size"))
-    val dirRollup = subDirs.select("child").distinct()
-      .join(subFiles, Seq("child"), "left")
-      .select(col("child"),
-        coalesce(col("num_files"), lit(0L)).as("num_files"),
-        coalesce(col("total_size"), lit(0L)).as("total_size"))
-      .withColumn("is_dir", lit(true))
-    val childFiles = inBucket(files)
-      .filter(col("parent_id") === pid && col("name") > startChild)
-      .groupBy(col("name").as("child"))
-      .agg(count(lit(1)).as("num_files"), sum("data_size").as("total_size"))
-      .withColumn("is_dir", lit(false))
-    val out = dirRollup.unionByName(childFiles)
+    val out = children
+      .filter(col("volume") === volume && col("bucket") === bucket &&
+        col("parent_path") === parentPath && col("child") > startChild)
       .select("child", "is_dir", "num_files", "total_size")
-      .orderBy("child")
-    // numEntries+1 rows so the caller derives truncation, like listKeys
+      .orderBy("child", "is_dir")
     numEntries.map(n => out.limit(n + 1)).getOrElse(out)
   }
 
@@ -399,31 +399,20 @@ object Hierarchy {
   /**
    * Paged FSO listStatus walk (the client pagination loop): independent
    * pages chained by `child > lastChild` keyset tokens; concatenation must
-   * equal the unpaged listing. `resolvedDirs` is passed to
-   * [[listStatusFso]] (e.g. the stored path index, the dual of the
-   * reference's persisted directoryTable the iterator seeks into).
+   * equal the unpaged listing. Each page is one bounded [[listStatusFso]]
+   * slice of the child summary.
    */
-  def listStatusFsoWalk(resolvedDirs: DataFrame, files: DataFrame,
-                        volume: String, bucket: String, parentPath: String,
-                        pageSize: Int,
+  def listStatusFsoWalk(children: DataFrame, volume: String, bucket: String,
+                        parentPath: String, pageSize: Int,
                         maxPages: Int = 100000): DataFrame = {
-    val spark = files.sparkSession
-    // The walk reads the WHOLE listing page by page, so the subtree rollup
-    // is materialized once (child-level rows = output-sized, tiny next to
-    // the file table) and every page is a keyset slice `child > token` of
-    // that snapshot — one join+agg total instead of one per page. The
-    // per-page subtree PRUNING path (listStatusFso's startChild) stays the
-    // shape for single-page API calls, where computing the full listing
-    // would waste the whole point of resuming.
-    val full = listStatusFso(resolvedDirs, files, volume, bucket,
-      parentPath).localCheckpoint()
+    val spark = children.sparkSession
     val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
     var start = ""
     var pages = 0
     var done = false
     while (!done && pages < maxPages) {
-      val pg = full.filter(col("child") > start).orderBy("child")
-        .limit(pageSize + 1).collect().toSeq
+      val pg = listStatusFso(children, volume, bucket, parentPath, start,
+        Some(pageSize)).collect().toSeq
       buf ++= pg.take(pageSize)
       done = pg.size <= pageSize
       if (!done) start = pg(pageSize - 1).getString(0)

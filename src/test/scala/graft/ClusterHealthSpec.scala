@@ -1063,9 +1063,7 @@ class ClusterHealthSpec extends SparkSpecBase {
   }
 
   test("containerHealthChain: first-true rung per container, all rungs") {
-    val got = ClusterHealth.containerHealthChain(T.datanodes(spark, sf),
-      T.containersScm(spark, sf), T.containersOm(spark, sf),
-      T.pipelineMembers(spark, sf))
+    val got = T.containerHealthChain(spark, sf)
       .collect().map(r => r.getAs[Long]("container_id") -> r).toMap
     def hd(c: Long) = (got(c).getAs[String]("handled_by"),
       got(c).getAs[String]("detail"))
@@ -1108,9 +1106,10 @@ class ClusterHealthSpec extends SparkSpecBase {
   }
 
   test("replicationReport: pre-populated stats, capped visit-order samples") {
-    // the declared query: the report over the stored chain (planning it
-    // over the inline chain repeats a deep CASE tree three times)
-    val rep = SparkEntry.queries("q_replication_report")(spark, sf)
+    // over the stored chain: planning the report over the inline chain
+    // repeats a deep CASE tree three times and runs out of heap
+    val rep = ClusterHealth.replicationReportFromChain(
+        T.containerHealthChain(spark, sf))
       .collect().map(r => r.getAs[String]("stat") ->
         (r.getAs[Long]("cnt"), r.getAs[String]("sample_ids"))).toMap
     assert(rep.size === 22, "every enum stat pre-populated")

@@ -24,8 +24,9 @@ class HierarchySpec extends SparkSpecBase {
     .toDF("volume", "bucket", "parent_id", "name", "object_id", "data_size")
     .withColumn("modification_time", lit(0L))
 
-  // the listings' directory paths, resolved by the ladder
+  // the listings' child summary, over the directory paths the ladder resolves
   private lazy val dirPaths = Hierarchy.resolveDirs(dirs)
+  private lazy val children = Hierarchy.childSummary(dirPaths, files)
 
   test("resolveDirs rebuilds full paths from parent pointers") {
     val r = Hierarchy.resolveDirs(dirs, maxDepth = 4)
@@ -63,11 +64,11 @@ class HierarchySpec extends SparkSpecBase {
 
   test("listStatusFso lists immediate children with RECURSIVE subtree rollups") {
     // 'a' counts f1 AND a/b/f2 — the whole subtree, not just direct files
-    val root = rows(Hierarchy.listStatusFso(dirPaths, files, "v", "b", ""))
+    val root = rows(Hierarchy.listStatusFso(children, "v", "b", ""))
     assert(root === Seq(
       Seq("a", true, 2L, 30L), Seq("c", true, 1L, 30L),
       Seq("f4", false, 1L, 40L)))
-    val underA = rows(Hierarchy.listStatusFso(dirPaths, files, "v", "b", "a"))
+    val underA = rows(Hierarchy.listStatusFso(children, "v", "b", "a"))
     assert(underA === Seq(
       Seq("b", true, 1L, 20L), Seq("f1", false, 1L, 10L)))
   }
@@ -76,14 +77,14 @@ class HierarchySpec extends SparkSpecBase {
     // root children in order: a (dir), c (dir), f4 (file) — pageSize 1 puts
     // a page break exactly ON each dir boundary
     for (ps <- Seq(1, 2, 100)) {
-      val walked = rows(Hierarchy.listStatusFsoWalk(dirPaths, files, "v",
+      val walked = rows(Hierarchy.listStatusFsoWalk(children, "v",
         "b", "", pageSize = ps))
-      val full = rows(Hierarchy.listStatusFso(dirPaths, files, "v", "b", ""))
+      val full = rows(Hierarchy.listStatusFso(children, "v", "b", ""))
       assert(walked === full, s"pageSize=$ps")
     }
     // a single mid-walk page: resumes STRICTLY after the token child and
     // still carries the full recursive rollup of the next dir
-    val page = rows(Hierarchy.listStatusFso(dirPaths, files, "v", "b", "",
+    val page = rows(Hierarchy.listStatusFso(children, "v", "b", "",
       startChild = "a", numEntries = Some(1)))
     assert(page === Seq(Seq("c", true, 1L, 30L), Seq("f4", false, 1L, 40L)))
   }
@@ -102,21 +103,40 @@ class HierarchySpec extends SparkSpecBase {
       ("v", "b2", id2("a/x"), "a/x"), ("v", "b2", id2("z"), "z"))
       .toDF("volume", "bucket", "dir_id", "path")
     for (parent <- Seq("", "a")) {
-      val ladder = rows(Hierarchy.listStatusFso(
-        Hierarchy.resolveDirs(both.filter(col("bucket") === "b")), files,
+      val ladder = rows(Hierarchy.listStatusFso(Hierarchy.childSummary(
+          Hierarchy.resolveDirs(both.filter(col("bucket") === "b")), files),
         "v", "b", parent))
-      val indexed = rows(Hierarchy.listStatusFso(index, files, "v", "b",
-        parent))
+      val indexed = rows(Hierarchy.listStatusFso(
+        Hierarchy.childSummary(index, files), "v", "b", parent))
       assert(indexed === ladder && ladder.nonEmpty, s"parent=$parent")
     }
   }
 
+  test("a file at the bucket root: parent_id 0, listed under the root, " +
+    "never an orphan") {
+    // the same tree as `dirs`/`files`, as keys of a key table
+    val keys = Seq(("a/f1", 10L), ("a/b/f2", 20L), ("c/f3", 30L), ("f4", 40L))
+      .map { case (k, size) => ("v", "b", k, size) }
+      .toDF("volume", "bucket", "key", "data_size")
+      .withColumn("object_id", lit(0L)).withColumn("modification_time", lit(0L))
+    val built = graft.core.Tables.filesFsoBuild(keys)
+    assert(built.filter(col("name") === "f4").select("parent_id").as[Long]
+      .collect().toSeq === Seq(0L))
+    assert(Hierarchy.orphanFiles(dirs, built).isEmpty)
+    // the key-derived summary and the FSO-table one list the same root
+    val fromKeys = rows(Hierarchy.listStatusFso(
+      Hierarchy.keyChildSummary(keys), "v", "b", ""))
+    assert(fromKeys === rows(Hierarchy.listStatusFso(
+      Hierarchy.childSummary(dirPaths, built), "v", "b", "")))
+    assert(fromKeys.last === Seq("f4", false, 1L, 40L))
+  }
+
   test("FSO and OBS listStatus agree on a 3-level tree (deep fixture)") {
     val sf = "/root/testdata/sf0.001"
-    val fso = rows(Hierarchy.listStatusFso(
-      Hierarchy.resolveDirs(graft.core.Tables.directoriesFsoDeep(spark, sf)
-        .filter(col("volume") === "vol2" && col("bucket") === "bucket5")),
-      graft.core.Tables.filesFsoDeep(spark, sf),
+    val fso = rows(Hierarchy.listStatusFso(Hierarchy.childSummary(
+        Hierarchy.resolveDirs(graft.core.Tables.directoriesFsoDeep(spark, sf)
+          .filter(col("volume") === "vol2" && col("bucket") === "bucket5")),
+        graft.core.Tables.filesFsoDeep(spark, sf)),
       "vol2", "bucket5", "warehouse/R"))
     val obs = rows(graft.operators.Listing.listStatus(
         graft.core.Tables.objectsDeep(spark, sf), "vol2", "bucket5", "warehouse/R")

@@ -115,14 +115,31 @@ class PeriodicScanApiSpec extends SparkSpecBase {
     }
   }
 
-  test("API facade: the FSO listing's stored path index holds the paths " +
-    "the resolve ladder rebuilds") {
-    val index = graft.core.Tables.directoryPathsFso(spark, sf)
-      .select("volume", "bucket", "dir_id", "path")
-    val ladder = graft.operators.Hierarchy.resolveDirs(
-      graft.core.Tables.directoriesFso(spark, sf))
+  test("API facade: the stored FSO child summary equals the FSO tables' " +
+    "rollup, and its path index the resolve ladder's paths") {
+    import graft.core.{Tables => T}
+    val ladder = graft.operators.Hierarchy.resolveDirs(T.directoriesFso(spark, sf))
+    val stored = T.fsoChildren(spark, sf)
+    val rollup = graft.operators.Hierarchy.childSummary(ladder, T.filesFso(spark, sf))
+    assert(stored.count() > 0)
+    assert(stored.exceptAll(rollup).isEmpty && rollup.exceptAll(stored).isEmpty)
+    val index = T.directoryPathsFso(spark, sf)
     assert(index.count() > 0)
     assert(index.exceptAll(ladder).isEmpty && ladder.exceptAll(index).isEmpty)
+  }
+
+  test("API facade: a warm FSO listStatus, leaf or two-level dir, plain or " +
+    "link bucket, runs one Spark job") {
+    val leaf = Api.listStatusFso(spark, sf, "vol0", "bucket0", "warehouse/R")
+      .filter(col("is_dir")).select("child").as[String].head()
+    for (dir <- Seq(s"warehouse/R/$leaf", "warehouse");
+         (vol, bkt) <- Seq("vol0" -> "bucket0", "vol1" -> "link-a")) {
+      val warm = rows(Api.listStatusFso(spark, sf, vol, bkt, dir))
+      val (out, jobs) = jobsStarted(spark)(_ =>
+        Api.listStatusFso(spark, sf, vol, bkt, dir).collect().toSeq.map(_.toSeq))
+      assert(warm.nonEmpty && out === warm, s"$vol/$bkt $dir")
+      assert(jobs === 1, s"$vol/$bkt $dir")
+    }
   }
 
   test("API facade: FSO listStatus through a broken link lists nothing " +
