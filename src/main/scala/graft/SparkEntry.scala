@@ -34,7 +34,7 @@ object SparkEntry {
   private def pendingRollupsCached(s: SparkSession, d: String): DataFrame =
     TempDirs.parquet(s, "pdroll", d)(
       ReconJobs.pendingDeletionRollups(T.objects(s, d),
-        T.objectsMixed(s, d), T.deletedDirs(s, d), T.replicas(s, d),
+        T.nsSummaryMixed(s, d), T.deletedDirs(s, d), T.replicas(s, d),
         T.containersScm(s, d)))
 
   // The stored object-tag state = the put ladder's APPLIED outcomes —
@@ -206,11 +206,9 @@ object SparkEntry {
       Aggregates.containerSizeHistogram(T.containersScm(s, d))),
     // mixed 4/6-segment namespace: the rollup must emit depth-4/5 ancestors
     // for the deepened keys — any hardcoded depth bound fails the hash.
-    // Runs the shuffle-free sorted fold over the key-sorted warehouse (the
-    // declarative Aggregates.nsSummary stays the unsorted-input dual,
-    // equivalence-spec'd in AggregatesSpec).
+    // The rollup is stored once (Tables.nsSummaryMixed); this reads it.
     "q_ns_summary" -> ((s, d) =>
-      Aggregates.nsSummarySorted(T.objectsMixedSorted(s, d))),
+      T.nsSummaryMixed(s, d).orderBy("volume", "bucket", "dir")),
     "q_du_topn" -> ((s, d) => Aggregates.duTopN(T.objects(s, d), "vol0", 10)),
     // table COUNTS walk the catalog views (a zero-object volume/bucket
     // is still a table row — GlobalStats counts rows); usage/quota
@@ -891,8 +889,8 @@ object SparkEntry {
     // key/dir (NSSummary-resolved) bytes + finalized bytes + key count.
     "q_storage_distribution" -> ((s, d) =>
       ClusterHealth.storageDistribution(T.datanodes(s, d), T.objects(s, d),
-        Aggregates.nsSummarySorted(T.objectsMixedSorted(s, d)),
-        T.openKeys(s, d), T.multipartParts(s, d), T.deletedDirs(s, d))),
+        T.nsSummaryMixed(s, d), T.openKeys(s, d), T.multipartParts(s, d),
+        T.deletedDirs(s, d))),
     // CreateDirectory ladder: root guard, file-in-path guards (self and
     // ancestor), idempotent DIR_EXISTS, minted-parents count.
     // the ancestor set IS the directory path index (strict key prefixes,
@@ -1039,11 +1037,9 @@ object SparkEntry {
         T.replicas(s, d))),
     "q_ec_recovery_plan" -> ((s, d) =>
       ClusterHealth.ecRecoveryPlan(T.ecShards(s, d), T.datanodes(s, d))),
-    // the backlog rides the shuffle-free NSSummary fold over the sorted
-    // warehouse (deletedDirsInsight stays the unsorted dual)
+    // the backlog is the stored NSSummary's deleted-dir rows
     "q_deleted_dirs" -> ((s, d) =>
-      ClusterHealth.deletedDirsInsightSorted(
-        Aggregates.nsSummarySorted(T.objectsMixedSorted(s, d)),
+      ClusterHealth.deletedDirsInsight(T.nsSummaryMixed(s, d),
         T.deletedDirs(s, d))),
     "q_block_deletion" -> ((s, d) =>
       ClusterHealth.blockDeletionBacklog(T.objectsSorted(s, d))),

@@ -14,29 +14,11 @@ final case class KeyRow(
   creation_time: Long, modification_time: Long, owner: String,
   tag_flag: String, container_id: Long, version: Long, etag: String)
 
-final case class BucketRow(
-  volume: String, bucket: String, used_bytes: Long, used_namespace: Long,
-  quota_bytes: Long, quota_namespace: Long, layout: String)
-
-final case class ContainerRow(
-  container_id: Long, state: String, replication_factor: Int,
-  used_bytes: Long)
-
 object Model {
 
   /** objects as a typed Dataset (codec-checked against the synthesis). */
   def objectsDS(spark: SparkSession, dir: String): Dataset[KeyRow] = {
     import spark.implicits._
     Tables.objects(spark, dir).as[KeyRow]
-  }
-
-  def bucketsDS(spark: SparkSession, dir: String): Dataset[BucketRow] = {
-    import spark.implicits._
-    Tables.buckets(spark, dir).as[BucketRow]
-  }
-
-  def containersDS(spark: SparkSession, dir: String): Dataset[ContainerRow] = {
-    import spark.implicits._
-    Tables.containersScm(spark, dir).as[ContainerRow]
   }
 }

@@ -76,168 +76,46 @@ object Aggregates {
       .orderBy("size_bin")
 
   /**
-   * NSSummary hierarchical rollup: per-directory (at every ancestor level)
-   * file count, total size, replicated size — batch equivalent of the
-   * reference's incremental upward propagation
-   * (NSSummaryTaskDbEventHandler.propagateSizeUpwards:426-459).
-   * Keys are `a/b/c/file` paths; each file contributes to ancestors
-   * `a`, `a/b`, `a/b/c` — depth comes from each key, never a config.
+   * The leaf→ancestor rollup behind NSSummary, batch and streamed: each
+   * key's `measures` sum onto its every ancestor directory — batch
+   * equivalent of the reference's incremental upward propagation
+   * (NSSummaryTaskDbEventHandler.propagateSizeUpwards:426-459). Keys are
+   * `a/b/c/file` paths; each contributes to `a`, `a/b`, `a/b/c` — depth
+   * comes from each key, never a config; 1-segment keys have no directory.
    *
-   * TWO-STAGE shape: files first aggregate to their immediate parent dir
-   * (one shuffle over |files| NARROW rows), then only the (far fewer)
-   * distinct leaf dirs explode their ancestor chains and re-aggregate.
-   * Exploding per FILE would shuffle |files| × avg-depth rows keyed by
-   * path strings — at 100 TB that explode is the dominant shuffle; per-dir
-   * it is ~|dirs| × depth, orders of magnitude smaller.
+   * TWO-STAGE shape: keys first aggregate to their immediate parent dir
+   * (one shuffle over |keys| NARROW rows), then only the (far fewer)
+   * distinct leaf dirs explode their ancestor chains and re-aggregate —
+   * exact for any sum, signed ones included. Exploding per KEY would
+   * shuffle |keys| × avg-depth rows keyed by path strings — at 100 TB that
+   * explode is the dominant shuffle; per-dir it is ~|dirs| × depth.
    */
-  def nsSummary(objects: DataFrame): DataFrame = {
-    objects
+  def ancestorRollup(keys: DataFrame, measures: (String, Column)*): DataFrame = {
+    val sums = measures.map { case (name, c) => sum(c).as(name) }
+    val resums = measures.map { case (name, _) => sum(name).as(name) }
+    keys
       // one split per key (parentDirOf+dirAndAncestors would re-split 3×)
       .withColumn("segs",
         expr("slice(split(key, '/'), 1, size(split(key, '/')) - 1)"))
-      .filter(size(col("segs")) >= 1) // 1-segment keys have no ancestor dirs
+      .filter(size(col("segs")) >= 1)
       .groupBy(col("volume"), col("bucket"),
         array_join(col("segs"), "/").as("leaf"))
-      .agg(
-        count(lit(1)).as("nf"),
-        sum("data_size").as("sz"),
-        sum("replicated_size").as("rs"))
+      .agg(sums.head, sums.tail: _*)
       .withColumn("dir", explode(dirAndAncestors("leaf")))
       .groupBy("volume", "bucket", "dir")
-      .agg(
-        sum("nf").as("num_files"),
-        sum("sz").as("size_of_files"),
-        sum("rs").as("replicated_size"))
+      .agg(resums.head, resums.tail: _*)
+  }
+
+  /** NSSummary: per-directory (at every ancestor level) file count, total
+    * size and replicated size. Stored once per source for the mixed
+    * namespace ([[graft.core.Tables.nsSummaryMixed]]); every endpoint that
+    * needs a directory's subtree totals reads that table. */
+  def nsSummary(objects: DataFrame): DataFrame =
+    ancestorRollup(objects,
+      "num_files" -> lit(1L),
+      "size_of_files" -> col("data_size"),
+      "replicated_size" -> col("replicated_size"))
       .orderBy("volume", "bucket", "dir")
-  }
-
-  /** One per-run-boundary-or-interior rollup row of [[nsSummarySorted]]'s
-    * fold; `boundary` rows may continue in another partition and re-combine
-    * in a tiny follow-up aggregate, non-boundary rows are final. */
-  case class NsFoldRow(volume: String, bucket: String, dir: String,
-                       nf: Long, sz: Long, rs: Long, boundary: Boolean)
-
-  /**
-   * NSSummary over KEY-SORTED input (the [[graft.core.Tables.objectsSorted]]
-   * warehouse layout: partitioned by (volume, bucket), sorted by `key`
-   * within each file) — the scale path. Because keys under a directory are
-   * exactly the keys with that prefix, they form a CONTIGUOUS range in key
-   * order; a single streaming stack fold per partition therefore computes
-   * every directory's (count, size, replicated) rollup with ZERO shuffles
-   * and ZERO hash maps — the Spark dual of the reference's sorted RocksDB
-   * walk (NSSummaryTaskDbEventHandler.java:128-459). Only directories whose
-   * range touches a partition/run boundary emit as partials (≤ 2×depth per
-   * run) and re-combine in an aggregate over that tiny remainder; interior
-   * directories — at 100 TB, virtually all of them — never leave their
-   * scan task. vs the declarative [[nsSummary]] (two shuffles + a hash
-   * aggregate keyed by millions of long path strings when leaf dirs are
-   * near-unique): ~10× at the 10× scale probe, and at cluster scale it
-   * turns the dominant shuffle into a map-only pass.
-   *
-   * Contract: rows of one (volume, bucket) must arrive key-sorted within
-   * each partition (the warehouse write guarantees it — see
-   * [[graft.core.Tables.objectsSorted]]). A key-order regression THROWS:
-   * unsorted input would let one directory masquerade as "interior" to two
-   * different runs and emit duplicate finals, so the fold fails loudly
-   * rather than returning plausible wrong sums. Use [[nsSummary]] for
-   * unsorted input. (volume,bucket) changes mid-partition are fine — the
-   * scan packs many small files into one partition; each file switch just
-   * closes the run with boundary-marked partials.
-   */
-  def nsSummarySorted(sortedObjects: DataFrame): DataFrame = {
-    val spark = sortedObjects.sparkSession
-    import spark.implicits._
-    val folded = sortedObjects
-      .select(col("volume").cast("string"), col("bucket").cast("string"),
-        col("key"), col("data_size"), col("replicated_size"))
-      .as[(String, String, String, Long, Long)]
-      .mapPartitions { rows =>
-        new Iterator[NsFoldRow] {
-          private val out = scala.collection.mutable.Queue.empty[NsFoldRow]
-          private var curV: String = null
-          private var curB: String = null
-          private var prevKey: String = null
-          private var firstRowOfRun = true
-          // parallel stacks: open dir chain of the current key
-          private val paths = scala.collection.mutable.ArrayBuffer.empty[String]
-          private val starts = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-          private val nfs = scala.collection.mutable.ArrayBuffer.empty[Long]
-          private val szs = scala.collection.mutable.ArrayBuffer.empty[Long]
-          private val rss = scala.collection.mutable.ArrayBuffer.empty[Long]
-
-          private def pop(atRunEnd: Boolean): Unit = {
-            val i = paths.length - 1
-            out.enqueue(NsFoldRow(curV, curB, paths(i), nfs(i), szs(i), rss(i),
-              boundary = starts(i) || atRunEnd))
-            if (i > 0) { // a dir's totals include its subdirs'
-              nfs(i - 1) += nfs(i); szs(i - 1) += szs(i); rss(i - 1) += rss(i)
-            }
-            paths.remove(i); starts.remove(i)
-            nfs.remove(i); szs.remove(i); rss.remove(i)
-          }
-
-          private def flushRun(): Unit = {
-            while (paths.nonEmpty) pop(atRunEnd = true)
-            prevKey = null; firstRowOfRun = true
-          }
-
-          private def process(v: String, b: String, key: String,
-                              ds: Long, rs: Long): Unit = {
-            if (v != curV || b != curB) { flushRun(); curV = v; curB = b }
-            else if (prevKey != null && key < prevKey)
-              throw new IllegalStateException(
-                s"nsSummarySorted requires key-sorted input: '$key' follows " +
-                  s"'$prevKey' in ($v, $b) — use nsSummary for unsorted input")
-            prevKey = key
-            val segs = key.split('/')
-            if (segs.length < 2) { firstRowOfRun = false; return }
-            // ancestor chain paths: segs(0), segs(0)/segs(1), ... (dirs only)
-            var keep = 0
-            var prefixEnd = 0
-            while (keep < paths.length && keep < segs.length - 1 && {
-              val p = if (keep == 0) segs(0).length
-                      else prefixEnd + 1 + segs(keep).length
-              val same = paths(keep).length == p &&
-                key.regionMatches(0, paths(keep), 0, p)
-              if (same) prefixEnd = p
-              same
-            }) keep += 1
-            while (paths.length > keep) pop(atRunEnd = false)
-            var d = keep
-            var path = if (keep == 0) "" else paths(keep - 1)
-            while (d < segs.length - 1) {
-              path = if (d == 0) segs(0) else path + "/" + segs(d)
-              paths += path; starts += firstRowOfRun
-              nfs += 0L; szs += 0L; rss += 0L
-              d += 1
-            }
-            val top = paths.length - 1
-            nfs(top) += 1L; szs(top) += ds; rss(top) += rs
-            firstRowOfRun = false
-          }
-
-          private def advance(): Unit = {
-            while (out.isEmpty && rows.hasNext) {
-              val r = rows.next()
-              process(r._1, r._2, r._3, r._4, r._5)
-            }
-            if (out.isEmpty && !rows.hasNext && paths.nonEmpty) flushRun()
-          }
-
-          def hasNext: Boolean = { if (out.isEmpty) advance(); out.nonEmpty }
-          def next(): NsFoldRow = { if (!hasNext) throw new NoSuchElementException; out.dequeue() }
-        }
-      }.toDF()
-    val finals = folded.filter(!col("boundary"))
-      .select(col("volume"), col("bucket"), col("dir"),
-        col("nf").as("num_files"), col("sz").as("size_of_files"),
-        col("rs").as("replicated_size"))
-    val combined = folded.filter(col("boundary"))
-      .groupBy("volume", "bucket", "dir")
-      .agg(sum("nf").as("num_files"), sum("sz").as("size_of_files"),
-        sum("rs").as("replicated_size"))
-    finals.unionByName(combined).orderBy("volume", "bucket", "dir")
-  }
 
   /** du top-N: largest level-2 directories — ref BucketEntityHandler.java:91-145
     * + ReconUtils.java:534-540 (top-k). */

@@ -2289,45 +2289,30 @@ object ClusterHealth {
 
   /** Deleted-directory purge backlog: each deleted dir with the file count
     * and bytes still pending purge in its subtree — the Recon OM-insight
-    * over deletedDirectoryTable. Same two-stage shape as
-    * [[Aggregates.nsSummary]] (a dir's subtree aggregate is its rollup
-    * row), but the broadcast join against the deleted set lands BETWEEN
-    * the ancestor explode and the final aggregate, so only ancestors that
-    * ARE deleted dirs reach the dir-level shuffle (deleted ≪ all dirs) —
-    * no full-namespace rollup materializes, no per-dir subtree scans.
-    * (An explode-first variant that skips the leaf pre-agg measured ~30%
-    * slower at sf0.1, and the pre-agg's files-per-dir reduction only grows
-    * at production scale.) */
-  def deletedDirsInsight(objects: DataFrame,
+    * over deletedDirectoryTable. A deleted dir's backlog IS its NSSummary
+    * row, so the stored rollup ([[graft.core.Tables.nsSummaryMixed]])
+    * meets the broadcast deleted-dir probe: no key scan, no shuffle before
+    * the final presentation sort. */
+  def deletedDirsInsight(nsRollup: DataFrame,
                          deletedDirs: DataFrame): DataFrame =
-    objects
-      .withColumn("leaf", Aggregates.parentDirOf("key"))
-      .filter(col("leaf") =!= "")
-      .groupBy("volume", "bucket", "leaf")
-      .agg(count(lit(1)).as("nf"), sum("data_size").as("sz"))
-      .withColumn("dir", explode(Aggregates.dirAndAncestors("leaf")))
-      .join(broadcast(deletedDirs), Seq("volume", "bucket", "dir"))
-      .groupBy("volume", "bucket", "dir", "deleted_ms")
-      .agg(sum("nf").as("pending_files"), sum("sz").as("pending_bytes"))
-      .select("volume", "bucket", "dir", "deleted_ms", "pending_files",
-        "pending_bytes")
-      .orderBy("volume", "bucket", "dir")
-
-  /** [[deletedDirsInsight]] over the key-sorted warehouse: a deleted dir's
-    * pending backlog IS its namespace-rollup row, so feed
-    * [[Aggregates.nsSummarySorted]]'s shuffle-free fold through the
-    * broadcast deleted-dir probe — no leaf re-aggregation, no re-derived
-    * scan, no shuffle at all before the final presentation sort. Same rows
-    * as the unsorted dual (equivalence holds because both compute full
-    * subtree rollups per dir). */
-  def deletedDirsInsightSorted(nsRollup: DataFrame,
-                               deletedDirs: DataFrame): DataFrame =
     nsRollup
       .join(broadcast(deletedDirs), Seq("volume", "bucket", "dir"))
       .select(col("volume"), col("bucket"), col("dir"), col("deleted_ms"),
         col("num_files").as("pending_files"),
         col("size_of_files").as("pending_bytes"))
       .orderBy("volume", "bucket", "dir")
+
+  /** Replicated bytes pending purge under deleted dirs, as one row
+    * (`pending_dir_bytes`): each deleted dir resolves through its
+    * NSSummary row, as the reference's fetchSizeForDeletedDirectory does,
+    * with one broadcast probe (nested deleted dirs double-count, as
+    * there). */
+  def pendingDirBytes(nsRollup: DataFrame, deletedDirs: DataFrame): DataFrame =
+    nsRollup
+      .join(broadcast(deletedDirs.select("volume", "bucket", "dir")),
+        Seq("volume", "bucket", "dir"))
+      .agg(coalesce(sum("replicated_size"), lit(0L))
+        .as("pending_dir_bytes"))
 
   /**
    * Recon ClusterStateEndpoint (`recon/.../api/ClusterStateEndpoint.java:
@@ -2395,17 +2380,15 @@ object ClusterHealth {
    *   - pending_key_bytes = replicated bytes buffered in the
    *     deletedTable (the [[Lifecycle.deletedKeysInsight]] population);
    *   - pending_dir_bytes = Σ over deletedDirTable entries of the dir's
-   *     SUBTREE replicated size — the reference resolves each deleted
-   *     dir through its NSSummary (fetchSizeForDeletedDirectory), so
-   *     this joins the [[Aggregates.nsSummary]] rollup to the
-   *     deleted-dir dim (nested deleted dirs double-count, as there);
+   *     SUBTREE replicated size, [[pendingDirBytes]] over the
+   *     NSSummary rollup `dirRollup`;
    *   - total_used_namespace = pendingDir + pendingKey + openKey +
    *     finalized, totalKeys = keyTable + fileTable counts.
    *
    * Scale shape: every input aggregates DOWN to a 1-row frame before the
    * final crossJoin of six singletons; the only data-plane shuffles are
-   * the per-table hash aggs and the nsSummary rollup (two-stage,
-   * per-dir explode), with the deleted-dir dim broadcast into it.
+   * the per-table hash aggs (the stored NSSummary rollup meets the
+   * broadcast deleted-dir dim without one).
    */
   def storageDistribution(datanodes: DataFrame, objects: DataFrame,
                           dirRollup: DataFrame, openKeys: DataFrame,
@@ -2430,17 +2413,8 @@ object ClusterHealth {
       coalesce(sum("replicated_size"), lit(0L)).as("open_key_bytes"))
     val mpu = multipartParts.agg(
       (coalesce(sum("size"), lit(0L)) * 3).as("open_mpu_bytes"))
-    // dirRollup is the NSSummary view (the caller passes the SORTED
-    // zero-shuffle fold, [[Aggregates.nsSummarySorted]], exactly what
-    // the reference's fetchSizeForDeletedDirectory reads); the deleted
-    // dirs resolve through it with one broadcast semi-probe
-    val pendingDir = dirRollup
-      .join(broadcast(deletedDirs.select("volume", "bucket", "dir")),
-        Seq("volume", "bucket", "dir"))
-      .agg(coalesce(sum("replicated_size"), lit(0L))
-        .as("pending_dir_bytes"))
     storage.crossJoin(keys).crossJoin(open).crossJoin(mpu)
-      .crossJoin(pendingDir)
+      .crossJoin(pendingDirBytes(dirRollup, deletedDirs))
       .withColumn("total_used_namespace",
         col("pending_dir_bytes") + col("pending_key_bytes") +
           col("open_key_bytes") + col("finalized_key_bytes"))
@@ -2634,7 +2608,6 @@ object ClusterHealth {
     val treatedUnhealthy = unhealthyFlag ||
       (col("replica_state") === "QUASI_CLOSED" &&
         col("container_state") === "CLOSED" && col("seq") =!= col("c_seq"))
-    val isLeaving = col("op_state") =!= "IN_SERVICE"
     val isMaint = col("op_state").isin("IN_MAINTENANCE",
       "ENTERING_MAINTENANCE")
     val isDecom = col("op_state").isin("DECOMMISSIONING", "DECOMMISSIONED")

@@ -287,8 +287,8 @@ object Lifecycle {
    * aggregate over ~2×partitions rows. This is the reference's own shape:
    * the cache-over-DB merge walks a SORTED iterator
    * (OmMetadataManagerImpl.java:1114-1162), it never hash-groups the
-   * table. Throws on key-order regressions like nsSummarySorted — an
-   * unsorted scan could split a run across two finals. min_by
+   * table. Throws on key-order regressions — an unsorted scan could
+   * split a run across two finals. min_by
    * [[latestVersionWins]] stays the unsorted dual.
    */
   def latestVersionWinsSorted(sortedObjects: DataFrame): DataFrame = {

@@ -176,9 +176,8 @@ object ReconJobs {
    * first order is the view the UI sorts to anyway).
    *
    * Scale shape: one pass over the DELETE branch of the log + broadcast
-   * dims for replicas/containers; the dir plane reuses the
-   * leaf-pre-agg → ancestor-explode → broadcast-deleted-probe shape of
-   * [[ClusterHealth.deletedDirsInsight]].
+   * dims for replicas/containers; the dir plane is a broadcast
+   * deleted-dir probe of the stored NSSummary rollup.
    */
   /**
    * The maintained rollup store behind the endpoint: Recon keeps these
@@ -191,11 +190,11 @@ object ReconJobs {
    *
    * Scale shape of the one-off build: the deleted-block txn fold is one
    * pass over the DELETE branch of the log with broadcast
-   * container/replica dims; the dir plane reuses the leaf-pre-agg →
-   * ancestor-explode → broadcast-deleted-probe shape of
-   * [[ClusterHealth.deletedDirsInsight]].
+   * container/replica dims; the dir plane reads the NSSummary rollup
+   * `nsRollup` through [[ClusterHealth.pendingDirBytes]], the probe
+   * /storageDistribution uses.
    */
-  def pendingDeletionRollups(objects: DataFrame, objectsMixed: DataFrame,
+  def pendingDeletionRollups(objects: DataFrame, nsRollup: DataFrame,
                              deletedDirs: DataFrame, replicas: DataFrame,
                              containersScm: DataFrame): DataFrame = {
     // deleted-block txn log + per-replica pending blocks
@@ -238,17 +237,10 @@ object ReconJobs {
       .agg(coalesce(sum("replicated_size"), lit(0L)).as("value"))
       .select(lit("om").as("kind"), lit("om").as("entity"),
         lit("pendingKeySize").as("metric"), col("value"))
-    val dirRow = objectsMixed
-      .withColumn("leaf", Aggregates.parentDirOf("key"))
-      .filter(col("leaf") =!= "")
-      .groupBy("volume", "bucket", "leaf")
-      .agg(sum("replicated_size").as("rsz"))
-      .withColumn("dir", explode(Aggregates.dirAndAncestors("leaf")))
-      .join(broadcast(deletedDirs.select("volume", "bucket", "dir")),
-        Seq("volume", "bucket", "dir"))
-      .agg(coalesce(sum("rsz"), lit(0L)).as("value"))
+    val dirRow = ClusterHealth.pendingDirBytes(nsRollup, deletedDirs)
       .select(lit("om").as("kind"), lit("om").as("entity"),
-        lit("pendingDirectorySize").as("metric"), col("value"))
+        lit("pendingDirectorySize").as("metric"),
+        col("pending_dir_bytes").as("value"))
     scmRows.unionByName(dnRows).unionByName(keyRow).unionByName(dirRow)
   }
 

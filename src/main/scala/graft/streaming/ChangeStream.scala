@@ -215,24 +215,16 @@ object ChangeStream {
         sum(col("sgn") * col("data_size")).as("total_size"))
 
   /** NSSummary ±delta fold: each event contributes to EVERY ancestor dir
-    * of its key (depth from the key, never a config; the streamed dual of
+    * of its key (the streamed dual of
     * NSSummaryTaskDbEventHandler.propagateSizeUpwards:426-459 — upward
-    * propagation becomes a generator, not driver recursion). Same
-    * two-stage shape as the batch rollup: ±deltas first collapse onto
-    * their immediate parent dir, then only the distinct leaf dirs explode
-    * their ancestor chains — signs are linear, so the staging is exact. */
-  def nsSummaryDeltas(batch: DataFrame): DataFrame =
-    batch
-      .withColumn("leaf", graft.operators.Aggregates.parentDirOf("key"))
-      .filter(col("leaf") =!= "")
-      .withColumn("sgn", when(col("op") === "PUT", 1L).otherwise(-1L))
-      .groupBy("volume", "bucket", "leaf")
-      .agg(sum(col("sgn")).as("nf"),
-        sum(col("sgn") * col("data_size")).as("sz"))
-      .withColumn("dir",
-        explode(graft.operators.Aggregates.dirAndAncestors("leaf")))
-      .groupBy("volume", "bucket", "dir")
-      .agg(sum("nf").as("num_files"), sum("sz").as("size_of_files"))
+    * propagation becomes a generator, not driver recursion), through the
+    * batch rollup's own [[graft.operators.Aggregates.ancestorRollup]] with
+    * signed measures: signs are linear, so its two-stage staging is exact. */
+  def nsSummaryDeltas(batch: DataFrame): DataFrame = {
+    val sgn = when(col("op") === "PUT", 1L).otherwise(-1L)
+    graft.operators.Aggregates.ancestorRollup(batch,
+      "num_files" -> sgn, "size_of_files" -> sgn * col("data_size"))
+  }
 
   /** Global entity counts delta fold (OmTableInsightTask shape). */
   def countsDeltas(batch: DataFrame): DataFrame =

@@ -301,10 +301,8 @@ class ClusterHealthSpec extends SparkSpecBase {
     // cartesian product over anything data-sized, no shuffle join
     val sd = ClusterHealth.storageDistribution(
       T.datanodes(spark, d), T.objects(spark, d),
-      graft.operators.Aggregates.nsSummarySorted(
-        T.objectsMixedSorted(spark, d)),
-      T.openKeys(spark, d), T.multipartParts(spark, d),
-      T.deletedDirs(spark, d))
+      T.nsSummaryMixed(spark, d), T.openKeys(spark, d),
+      T.multipartParts(spark, d), T.deletedDirs(spark, d))
     sd.collect()
     val sdPlan = sd.queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)
@@ -415,8 +413,7 @@ class ClusterHealthSpec extends SparkSpecBase {
 
   test("deleted-dir backlog equals a direct subtree scan per deleted dir") {
     val objects = T.objectsMixed(spark, sf)
-    val insight = ClusterHealth.deletedDirsInsight(objects,
-      T.deletedDirs(spark, sf))
+    val insight = SparkEntry.queries("q_deleted_dirs")(spark, sf)
     val got = insight.select("volume", "bucket", "dir", "pending_files",
       "pending_bytes").collect()
     assert(got.nonEmpty)
@@ -492,10 +489,8 @@ class ClusterHealthSpec extends SparkSpecBase {
     val T = graft.core.Tables
     val row = graft.operators.ClusterHealth.storageDistribution(
       T.datanodes(spark, d), T.objects(spark, d),
-      graft.operators.Aggregates.nsSummarySorted(
-        T.objectsMixedSorted(spark, d)),
-      T.openKeys(spark, d), T.multipartParts(spark, d),
-      T.deletedDirs(spark, d)).collect().head
+      T.nsSummaryMixed(spark, d), T.openKeys(spark, d),
+      T.multipartParts(spark, d), T.deletedDirs(spark, d)).collect().head
     def g(c: String): Long = row.getAs[Long](c)
     // the namespace identity the endpoint publishes
     assert(g("total_used_namespace") ===

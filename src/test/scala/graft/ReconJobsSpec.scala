@@ -167,7 +167,7 @@ class ReconJobsSpec extends SparkSpecBase {
     val T = graft.core.Tables
     val rows = ReconJobs.pendingDeletionDispatch(
         ReconJobs.pendingDeletionRollups(T.objects(spark, sf),
-          T.objectsMixed(spark, sf), T.deletedDirs(spark, sf),
+          T.nsSummaryMixed(spark, sf), T.deletedDirs(spark, sf),
           T.replicas(spark, sf), T.containersScm(spark, sf)))
       .collect()
     def of(rid: Long) = rows.filter(_.getAs[Long]("req_id") == rid)

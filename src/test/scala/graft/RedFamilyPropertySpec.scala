@@ -653,7 +653,7 @@ class RedFamilyPropertySpec extends SparkSpecBase {
     }.sum
     // ---- engine ----
     val got = graft.operators.ReconJobs.pendingDeletionRollups(
-        T.objects(spark, d), T.objectsMixed(spark, d),
+        T.objects(spark, d), T.nsSummaryMixed(spark, d),
         T.deletedDirs(spark, d), T.replicas(spark, d),
         T.containersScm(spark, d))
       .collect().map(r => (r.getAs[String]("kind"),
