@@ -30,7 +30,8 @@ object SparkEntry {
 
   // Recon's /pendingDeletion rollup store: the reference maintains these
   // in its own DB (GlobalStats/NSSummary/per-DN metric tables) and the
-  // endpoint only reads them — materialize once per (JVM, dir).
+  // endpoint only reads them — materialize every reply row once per
+  // (JVM, dir); the dispatch is one broadcast join of requests to it.
   private def pendingRollupsCached(s: SparkSession, d: String): DataFrame =
     TempDirs.parquet(s, "pdroll", d)(
       ReconJobs.pendingDeletionRollups(T.objects(s, d),

@@ -26,8 +26,8 @@ import org.apache.spark.sql.SparkSession
  * none; Metaspace after a run is unchanged (about 179 MB). The cache key is the
  * generated source, and by default a whole-stage class is named after its
  * codegen stage id, which AQE assigns in the order query stages get
- * planned. Two independent stages of one query (`q_pending_deletion`'s two
- * global sums) can swap ids between runs, so the same pipeline recompiled
+ * planned. Two independent stages of one query (say, two global sums) can
+ * swap ids between runs, so the same pipeline recompiled
  * under the other name; `useIdInClassName=false` names every such class
  * `GeneratedIterator` (the id stays in a comment of the source), and the
  * same pipeline hits whatever id it gets.

@@ -118,8 +118,7 @@ object ClusterHealth {
    */
   def blockDeletionBacklog(objects: DataFrame,
                            maxRetry: Int = 3): DataFrame =
-    CommitLog.synthesizeLog(objects)
-      .filter(col("op") === "DELETE")
+    CommitLog.deletedKeys(objects)
       .withColumn("blocks",
         expr(s"(data_size - 1) DIV ${graft.core.Tables.LocChunkBytes} + 1"))
       .withColumn("retry_count", col("object_id") % 5)
@@ -130,6 +129,20 @@ object ClusterHealth {
         sum(when(col("retry_count") > maxRetry, 1L).otherwise(0L))
           .as("expired_txns"))
       .orderBy("container_id")
+
+  /** SCM deletedBlocks transactions — the commit log's DELETE rows as
+    * the txn table (txID = the deleted key's object_id), KV-canonical:
+    * one row per txID, with its container and its block count (the
+    * deleted key's chunk layout, Tables.LocChunkBytes blocks). The one
+    * txn table: the pending-deletion page, the ack fold and the
+    * /pendingDeletion store read it. */
+  def deletedBlockTxns(objects: DataFrame): DataFrame =
+    CommitLog.deletedKeys(objects)
+      .groupBy(col("object_id").as("txn_id"))
+      .agg(max("data_size").as("data_size"))
+      .withColumn("container_id", expr("(txn_id DIV 10) % 1000"))
+      .withColumn("block_count",
+        expr(s"(data_size - 1) DIV ${graft.core.Tables.LocChunkBytes} + 1"))
 
   /**
    * Recon /blocks/deletePending page — BlocksEndPoint.getBlocksPendingDeletion
@@ -148,22 +161,10 @@ object ClusterHealth {
    * container-state tag is a broadcast of the SCM container catalog
    * projection.
    */
-  /** SCM deletedBlocks transactions — the commit log's DELETE branch as
-    * the txn table (txID = the deleted key's object_id), KV-canonical:
-    * one row per txID. Shared by the pending-deletion page and the ack
-    * fold. */
-  private def deletedBlockTxns(objects: DataFrame): DataFrame =
-    CommitLog.synthesizeLog(objects)
-      .filter(col("op") === "DELETE")
-      .groupBy(col("object_id").as("txn_id"))
-      .agg(max("data_size").as("data_size"))
-      .withColumn("container_id", expr("(txn_id DIV 10) % 1000"))
-
   def blocksPendingDeletionPage(objects: DataFrame, containersScm: DataFrame,
                                 prevTxn: Long, limit: Int): DataFrame = {
     val txns = deletedBlockTxns(objects)
-      .withColumn("local_id_count",
-        expr(s"(data_size - 1) DIV ${graft.core.Tables.LocChunkBytes} + 1"))
+      .withColumnRenamed("block_count", "local_id_count")
       .join(broadcast(containersScm.select("container_id", "state")),
         Seq("container_id"))
       .filter(col("txn_id") > prevTxn)
@@ -2378,7 +2379,8 @@ object ClusterHealth {
    *     key+file tables and the in-flight MPU parts (the fixture's MPUs
    *     are RATIS/THREE, so ×3);
    *   - pending_key_bytes = replicated bytes buffered in the
-   *     deletedTable (the [[Lifecycle.deletedKeysInsight]] population);
+   *     deletedTable (the [[CommitLog.isDeleted]] keys, the
+   *     [[Lifecycle.deletedKeysInsight]] population);
    *   - pending_dir_bytes = Σ over deletedDirTable entries of the dir's
    *     SUBTREE replicated size, [[pendingDirBytes]] over the
    *     NSSummary rollup `dirRollup`;
@@ -2401,8 +2403,7 @@ object ClusterHealth {
       sum("committed").as("total_committed"),
       sum(expr("capacity DIV 100 * 5")).as("total_reserved"),
       sum(expr("capacity DIV 200")).as("total_min_free"))
-    val delPred = (col("version") === 4 || col("version") === 5) &&
-      expr("(object_id DIV 10) % 10") === 0
+    val delPred = CommitLog.isDeleted
     val keys = objects.agg(
       coalesce(sum(when(delPred, col("replicated_size"))), lit(0L))
         .as("pending_key_bytes"),

@@ -34,6 +34,8 @@ object CommitLog {
    *   - v == 5:           DELETE @seq 3 + PUT key||'.mv' @seq 4 (rename)
    * Seq bands give the log its total order; duplicate fixture rows for the
    * same key tie-break deterministically inside the fold (size desc).
+   * Which keys the log deletes is declared once, by [[churned]] and
+   * [[isDeleted]]; its DELETE rows are [[deletedKeys]].
    */
   def synthesizeLog(objects: DataFrame): DataFrame = {
     // Four pushdown-filtered scans, NOT a per-row generator: an A/B of
@@ -46,7 +48,6 @@ object CommitLog {
     val base = objects.select(
       col("volume"), col("bucket"), col("key"), col("object_id"),
       col("container_id"), col("data_size"), col("version"))
-    val churned = expr("(object_id DIV 10) % 10") === 0
     val creates = base.select(lit(1L).as("seq"), lit("PUT").as("op"),
       col("volume"), col("bucket"), col("key"), col("object_id"),
       col("container_id"), col("data_size"))
@@ -55,18 +56,30 @@ object CommitLog {
       .select(lit(2L).as("seq"), lit("PUT").as("op"),
         col("volume"), col("bucket"), col("key"), col("object_id"),
         col("container_id"), (col("data_size") * 2).as("data_size"))
-    val deletes = base
-      .filter((col("version") === 4 || col("version") === 5) && churned)
-      .select(lit(3L).as("seq"), lit("DELETE").as("op"),
-        col("volume"), col("bucket"), col("key"), col("object_id"),
-        col("container_id"), col("data_size"))
     val renames = base.filter(col("version") === 5 && churned)
       .select(lit(4L).as("seq"), lit("PUT").as("op"),
         col("volume"), col("bucket"),
         concat(col("key"), lit(".mv")).as("key"), col("object_id"),
         col("container_id"), col("data_size"))
-    creates.unionByName(overwrites).unionByName(deletes).unionByName(renames)
+    creates.unionByName(overwrites).unionByName(deletedKeys(base))
+      .unionByName(renames)
   }
+
+  /** The churn scope: keys whose orderkey ends in 0, ~10% of the namespace. */
+  def churned: Column = expr("(object_id DIV 10) % 10") === 0
+
+  /** The keys the log deletes: churn-scope versions 4 (deleted) and 5
+    * (renamed away). Over the key table, with its replicated_size, this is
+    * the deletedTable population Recon sums. */
+  def isDeleted: Column =
+    (col("version") === 4 || col("version") === 5) && churned
+
+  /** The log's DELETE rows, one per deleted key row (seq 3). */
+  def deletedKeys(objects: DataFrame): DataFrame =
+    objects.filter(isDeleted)
+      .select(lit(3L).as("seq"), lit("DELETE").as("op"),
+        col("volume"), col("bucket"), col("key"), col("object_id"),
+        col("container_id"), col("data_size"))
 
   /**
    * Snapshot write ops (the CreateSnapshot / DeleteSnapshot requests of the
@@ -658,8 +671,7 @@ object CommitLog {
     * a key can accumulate SEVERAL deleted versions): every key with DELETE
     * events in the log, with version count + reclaimable bytes. */
   def trashList(objects: DataFrame): DataFrame =
-    synthesizeLog(objects)
-      .filter(col("op") === "DELETE")
+    deletedKeys(objects)
       .groupBy("volume", "bucket", "key")
       .agg(count(lit(1)).as("n_deleted"),
         sum("data_size").as("reclaim_bytes"))
@@ -670,9 +682,7 @@ object CommitLog {
     * blocks pending reclaim that a container scan must not drop. Broadcast
     * semi-join against the (small) live-container set. */
   def deletedButReferenced(objects: DataFrame, containersScm: DataFrame): DataFrame = {
-    val deleted = synthesizeLog(objects)
-      .filter(col("op") === "DELETE")
-      .select("volume", "bucket", "key", "object_id", "container_id", "data_size")
+    val deleted = deletedKeys(objects)
     val live = containersScm.filter(col("state") =!= "DELETED")
       .select("container_id")
     deleted.join(broadcast(live), Seq("container_id"), "left_semi")

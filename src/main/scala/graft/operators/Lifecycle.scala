@@ -685,17 +685,16 @@ object Lifecycle {
    * Recon deleted-keys insight (OMDBInsightEndpoint.getDeletedKeySummary
    * :356-378 — totalDeletedKeys counts every buffered deleted VERSION,
    * plus both size totals — grouped per bucket like the open-keys
-   * rollup): the deleted population is the commit log's DELETE branch
-   * (CommitLog.synthesizeLog: version 4|5 on churned ids), summed over
-   * unreplicated data_size and QuotaUtil-replicated size.
+   * rollup): the deleted population is the commit log's deleted keys
+   * ([[CommitLog.isDeleted]]), summed over unreplicated data_size and
+   * QuotaUtil-replicated size.
    *
-   * Scale shape: one pushdown-filtered scan (the DELETE branch predicate
+   * Scale shape: one pushdown-filtered scan (the deleted-key predicate
    * reaches parquet) + one map-side-combined hash agg per bucket.
    */
   def deletedKeysInsight(objects: DataFrame): DataFrame =
     objects
-      .filter((col("version") === 4 || col("version") === 5) &&
-        expr("(object_id DIV 10) % 10") === 0)
+      .filter(CommitLog.isDeleted)
       .groupBy("volume", "bucket")
       .agg(count(lit(1)).as("deleted_count"),
         sum("data_size").as("unreplicated_bytes"),

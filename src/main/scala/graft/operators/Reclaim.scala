@@ -97,8 +97,7 @@ object Reclaim {
    */
   def aosDeletedEntries(objects: DataFrame): DataFrame =
     objects
-      .filter(expr("(object_id DIV 10) % 10") === 0 &&
-        col("version").isin(1, 3, 4))
+      .filter(CommitLog.churned && col("version").isin(1, 3, 4))
       .groupBy("volume", "bucket", "key", "object_id", "version")
       .agg(max("data_size").as("__mx"))
       .select(col("volume"), col("bucket"), col("key"), col("object_id"),
@@ -120,8 +119,7 @@ object Reclaim {
     val wh = CommitLog.snapshotWarehouse(spark, objects, dir)
     val s1 = graft.core.TempDirs.read(spark, s"$wh/state_s1")
     val s2 = graft.core.TempDirs.read(spark, s"$wh/state_s2")
-    val snapDeleted = CommitLog.synthesizeLog(objects)
-      .filter(col("op") === "DELETE")
+    val snapDeleted = CommitLog.deletedKeys(objects)
       .select("volume", "bucket", "key", "object_id", "data_size")
     val inSnap = reclaimDecisions(snapDeleted, Some(s1), "s1", None)
       .select(lit("s2").as("owner"), col("*"))
@@ -232,7 +230,7 @@ object Reclaim {
                          dir: String): DataFrame = {
     val wh = CommitLog.snapshotWarehouse(spark, objects, dir)
     val entries = objects
-      .filter(expr("(object_id DIV 10) % 10") === 0 && col("version") === 5)
+      .filter(CommitLog.churned && col("version") === 5)
       .select(col("volume"), col("bucket"), col("object_id"),
         col("key").as("orig_key"))
       .distinct()

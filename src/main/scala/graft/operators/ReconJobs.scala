@@ -153,59 +153,31 @@ object ReconJobs {
   }
 
   /**
-   * Recon `/pendingDeletion` component dispatch —
-   * `recon/.../api/PendingDeletionEndpoint.java:57-121`: the component
-   * param is required (400 MISSING_COMPONENT), trim+lowercase
-   * normalized, and must be one of dn / scm / om (400
-   * INVALID_COMPONENT); the dn route additionally refuses a limit < 1
-   * (:84-87) and truncates its per-datanode list to `limit`
-   * (DataNodeMetricsService.getCollectedMetrics:311-322, limit absent →
-   * whole list) alongside the totalPendingDeletion rollup; the scm route
-   * reports the DeletedBlocksTransactionSummary triple (:98-112); the om
-   * route reports pendingDirectorySize / pendingKeySize / totalSize
-   * (ReconGlobalMetricsService.calculatePendingSizes:218-247 — both
-   * REPLICATED sizes; the -1 error legs are RPC-failure paths with no
-   * deterministic dual here, noted not modeled).
-   *
-   * Rollup synthesis rides the shared fixtures: the deleted-block txn
-   * log (the commit log's DELETE branch), the container replica map (a
-   * txn's blocks pend once per replica datanode), and the deleted-dir /
-   * deleted-key populations the insight queries already expose.
-   * The dn list orders by pending DESC then datanode (the reference
-   * returns collector order, which is not deterministic — the heaviest-
-   * first order is the view the UI sorts to anyway).
-   *
-   * Scale shape: one pass over the DELETE branch of the log + broadcast
-   * dims for replicas/containers; the dir plane is a broadcast
-   * deleted-dir probe of the stored NSSummary rollup.
-   */
-  /**
-   * The maintained rollup store behind the endpoint: Recon keeps these
-   * numbers in ITS OWN DB (GlobalStats / NSSummary / per-DN metric
+   * The maintained rollup store behind `/pendingDeletion`: Recon keeps
+   * these numbers in ITS OWN DB (GlobalStats / NSSummary / per-DN metric
    * tables maintained by background tasks) and the endpoint just reads
    * them — so the rollups materialize ONCE per (JVM, source) into a
-   * tiny (kind, entity, metric, value) table (≤ #datanodes + 5 rows;
-   * SparkEntry caches it to parquet with the other stored artifacts) and
-   * the dispatch below reads the store, never the corpus.
+   * tiny (kind, entity, metric, value, rk) table (#datanodes + 8 rows;
+   * SparkEntry stores it to parquet with the other stored artifacts)
+   * holding every row the endpoint can reply with, and the dispatch below
+   * reads the store, never the corpus. The parts:
+   *   - scm: the DeletedBlocksTransactionSummary triple over the live
+   *     (non-DELETED container) txns of [[ClusterHealth.deletedBlockTxns]];
+   *   - dn: each datanode's pending blocks (a txn's blocks pend once per
+   *     replica datanode); [[pendingDeletionStore]] adds the rest;
+   *   - om: pendingKeySize, the replicated bytes of the
+   *     [[CommitLog.isDeleted]] keys, and pendingDirectorySize,
+   *     [[ClusterHealth.pendingDirBytes]] over the NSSummary rollup
+   *     `nsRollup` (the probe /storageDistribution uses).
    *
-   * Scale shape of the one-off build: the deleted-block txn fold is one
-   * pass over the DELETE branch of the log with broadcast
-   * container/replica dims; the dir plane reads the NSSummary rollup
-   * `nsRollup` through [[ClusterHealth.pendingDirBytes]], the probe
-   * /storageDistribution uses.
+   * Scale shape of the one-off build: one pass over the deleted keys
+   * with broadcast container/replica dims, one filtered pass over the
+   * key table, and a broadcast deleted-dir probe of the stored rollup.
    */
   def pendingDeletionRollups(objects: DataFrame, nsRollup: DataFrame,
                              deletedDirs: DataFrame, replicas: DataFrame,
                              containersScm: DataFrame): DataFrame = {
-    // deleted-block txn log + per-replica pending blocks
-    val txns = CommitLog.synthesizeLog(objects)
-      .filter(col("op") === "DELETE")
-      .groupBy(col("object_id").as("txn_id"))
-      .agg(max("data_size").as("data_size"))
-      .withColumn("container_id", expr("(txn_id DIV 10) % 1000"))
-      .withColumn("block_count", expr(
-        s"(data_size - 1) DIV ${graft.core.Tables.LocChunkBytes} + 1"))
-    val txnsLive = txns
+    val txnsLive = ClusterHealth.deletedBlockTxns(objects)
       .join(broadcast(containersScm.select("container_id", "state")),
         Seq("container_id"))
       .filter(col("state") =!= "DELETED")
@@ -229,11 +201,7 @@ object ReconJobs {
       .select(lit("dn").as("kind"), col("dn").as("entity"),
         lit("pending_blocks").as("metric"),
         col("pending_blocks").as("value"))
-    // om sizes: replicated bytes of deleted keys + of files under
-    // deleted dirs
-    val keyRow = objects
-      .filter((col("version") === 4 || col("version") === 5) &&
-        expr("(object_id DIV 10) % 10") === 0)
+    val keyRow = objects.filter(CommitLog.isDeleted)
       .agg(coalesce(sum("replicated_size"), lit(0L)).as("value"))
       .select(lit("om").as("kind"), lit("om").as("entity"),
         lit("pendingKeySize").as("metric"), col("value"))
@@ -241,24 +209,61 @@ object ReconJobs {
       .select(lit("om").as("kind"), lit("om").as("entity"),
         lit("pendingDirectorySize").as("metric"),
         col("pending_dir_bytes").as("value"))
-    scmRows.unionByName(dnRows).unionByName(keyRow).unionByName(dirRow)
+    pendingDeletionStore(
+      scmRows.unionByName(dnRows).unionByName(keyRow).unionByName(dirRow))
   }
 
-  /** The endpoint dispatch over the materialized rollup store — see
-    * [[pendingDeletionRollups]] for the store's derivation and the
-    * class scaladoc for the route semantics. */
-  def pendingDeletionDispatch(rollups: DataFrame): DataFrame = {
-    val spark = rollups.sparkSession
-    val reqs = Tables.pendingDeletionRequestRows.df(spark)
-      .withColumn("comp", lower(trim(col("component"))))
-    val dnPending = rollups.filter(col("kind") === "dn")
-      .select(col("entity").as("dn"), col("value").as("pending_blocks"))
-    val scmRow = rollups.filter(col("kind") === "scm")
-      .select("metric", "value")
-    val omKinds = rollups.filter(col("kind") === "om")
-      .select("metric", "value")
+  /** The store's reply rows from its parts (kind, entity, metric, value):
+    * the parts, the dn `_summary` pair (total_pending_deletion,
+    * nodes_queried), the om totalSize (pendingDirectorySize +
+    * pendingKeySize), and `rk`, each dn pending_blocks row's rank in
+    * (pending_blocks DESC, dn) order — null on every other row. */
+  private[graft] def pendingDeletionStore(parts: DataFrame): DataFrame = {
+    val dn = parts.filter(col("kind") === "dn")
+    val dnSummary = dn
+      .agg(coalesce(sum("value"), lit(0L)).as("total"),
+        count(lit(1)).as("nodes"))
+      .selectExpr("'dn' AS kind", "'_summary' AS entity",
+        "stack(2, 'total_pending_deletion', total," +
+          " 'nodes_queried', nodes) AS (metric, value)")
+    val omTotal = parts.filter(col("kind") === "om")
+      .agg(sum("value").as("value"))
+      .select(lit("om").as("kind"), lit("om").as("entity"),
+        lit("totalSize").as("metric"), col("value"))
+    parts.filter(col("kind") =!= "dn").unionByName(dnSummary)
+      .unionByName(omTotal)
+      .withColumn("rk", lit(null).cast("int"))
+      .unionByName(dn.withColumn("rk", row_number().over(
+        Window.partitionBy("kind").orderBy(col("value").desc, col("entity")))))
+  }
 
-    val errRows = reqs
+  /**
+   * Recon `/pendingDeletion` component dispatch —
+   * `recon/.../api/PendingDeletionEndpoint.java:57-121`: the component
+   * param is required (400 MISSING_COMPONENT), trim+lowercase
+   * normalized, and must be one of dn / scm / om (400
+   * INVALID_COMPONENT); the dn route additionally refuses a limit < 1
+   * (:84-87) and truncates its per-datanode list to `limit`
+   * (DataNodeMetricsService.getCollectedMetrics:311-322, limit absent →
+   * whole list) alongside the totalPendingDeletion rollup; the scm route
+   * reports the DeletedBlocksTransactionSummary triple (:98-112); the om
+   * route reports pendingDirectorySize / pendingKeySize / totalSize
+   * (ReconGlobalMetricsService.calculatePendingSizes:218-247 — both
+   * REPLICATED sizes; the -1 error legs are RPC-failure paths with no
+   * deterministic dual here, noted not modeled).
+   * The dn list orders by pending DESC then datanode (the reference
+   * returns collector order, which is not deterministic — the heaviest-
+   * first order is the view the UI sorts to anyway).
+   *
+   * Scale shape: the store ([[pendingDeletionRollups]]) already holds
+   * every reply row, so the dispatch is the validation rungs plus one
+   * broadcast join of the requests to the store on their component: a
+   * refused request matches no store row and keeps its verdict row, a
+   * valid one gets its component's rows, dn rows cut at `rk <= limit`.
+   */
+  def pendingDeletionDispatch(store: DataFrame): DataFrame =
+    Tables.pendingDeletionRequestRows.df(store.sparkSession)
+      .withColumn("comp", lower(trim(col("component"))))
       .withColumn("verdict",
         // the required-param check fires on the RAW component BEFORE the
         // trim (PendingDeletionEndpoint.java:64-68) — a whitespace-only
@@ -269,47 +274,15 @@ object ReconJobs {
             lit("INVALID_COMPONENT"))
           .when(col("comp") === "dn" && col("limit") === 0,
             lit("LIMIT_TOO_SMALL")))
-      .filter(col("verdict").isNotNull)
-      .select(col("req_id"), col("verdict"), lit("").as("entity"),
-        lit("").as("metric"), lit(0L).as("value"))
-    val dnReqs = reqs.filter(col("comp") === "dn" && col("limit") =!= 0)
-    // rank after the cross join, per request: each request pairs with the
-    // whole datanode list, so its ranks are the global ones, and the window
-    // spreads over requests instead of one unpartitioned task
-    val dnList = dnReqs.crossJoin(dnPending)
-      .withColumn("rk", row_number().over(Window.partitionBy("req_id")
-        .orderBy(col("pending_blocks").desc, col("dn"))))
-      .filter(col("limit") < 0 || col("rk") <= col("limit"))
-      .select(col("req_id"), lit("DN_OK").as("verdict"),
-        col("dn").as("entity"), lit("pending_blocks").as("metric"),
-        col("pending_blocks").as("value"))
-    val dnTotal = dnReqs.crossJoin(broadcast(
-        dnPending.agg(coalesce(sum("pending_blocks"), lit(0L)).as("total"),
-          count(lit(1)).as("nodes_queried"))))
-      .select(col("req_id"), lit("DN_OK").as("verdict"),
-        lit("_summary").as("entity"), col("total"), col("nodes_queried"))
-      .selectExpr("req_id", "verdict", "entity",
-        "stack(2, 'total_pending_deletion', total," +
-          " 'nodes_queried', nodes_queried) AS (metric, value)")
-    val scmRows = reqs.filter(col("comp") === "scm")
-      .crossJoin(broadcast(scmRow))
-      .select(col("req_id"), lit("SCM_OK").as("verdict"),
-        lit("scm").as("entity"), col("metric"), col("value"))
-    val omBase = reqs.filter(col("comp") === "om")
-      .crossJoin(broadcast(omKinds))
-      .select(col("req_id"), lit("OM_OK").as("verdict"),
-        lit("om").as("entity"), col("metric"), col("value"))
-    val omTotal = reqs.filter(col("comp") === "om")
-      .crossJoin(broadcast(omKinds.agg(sum("value").as("value"))))
-      .select(col("req_id"), lit("OM_OK").as("verdict"),
-        lit("om").as("entity"), lit("totalSize").as("metric"),
-        col("value"))
-    errRows.unionByName(dnList)
-      .unionByName(dnTotal.select("req_id", "verdict", "entity",
-        "metric", "value"))
-      .unionByName(scmRows)
-      .unionByName(omBase)
-      .unionByName(omTotal)
+      .join(broadcast(store),
+        col("verdict").isNull && col("comp") === col("kind"), "left")
+      .filter(col("rk").isNull || col("limit") < 0 ||
+        col("rk") <= col("limit"))
+      .select(col("req_id"),
+        coalesce(col("verdict"), concat(upper(col("kind")), lit("_OK")))
+          .as("verdict"),
+        coalesce(col("entity"), lit("")).as("entity"),
+        coalesce(col("metric"), lit("")).as("metric"),
+        coalesce(col("value"), lit(0L)).as("value"))
       .orderBy("req_id", "metric", "entity")
-  }
 }

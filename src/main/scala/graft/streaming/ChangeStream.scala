@@ -75,25 +75,21 @@ object ChangeStream {
   }
 
   /** Last applied batchId, parsed from the `current` pointer's target name
-    * (`manifest-v<N>` or a legacy `.../v<N>` dir). */
+    * (`manifest-v<N>`). */
   private def lastBatch(dir: String): Long = {
     val cur = Paths.get(dir, "current")
     if (!Files.exists(cur)) -1L
-    else Files.readString(cur).trim.split('/').last
-      .stripPrefix("manifest-").stripPrefix("v").toLong
+    else Files.readString(cur).trim.stripPrefix("manifest-v").toLong
   }
 
-  /** The live manifest. A pointer that targets a version DIRECTORY (the
-    * legacy single-dir layout) reads as a manifest whose base is that dir. */
+  /** The live manifest (empty before the first publish). */
   private[graft] def readManifest(dir: String): Manifest = {
     val cur = Paths.get(dir, "current")
     val mf =
-      if (Files.exists(cur)) Some(Paths.get(dir).resolve(Files.readString(cur).trim))
+      if (Files.exists(cur)) Some(Paths.get(dir, Files.readString(cur).trim))
       else None
     mf.filter(Files.exists(_)) match {
       case None => Manifest(None, Nil)
-      case Some(p) if Files.isDirectory(p) =>
-        Manifest(Some(p.getFileName.toString), Nil)
       case Some(p) =>
         import scala.jdk.CollectionConverters._
         val lines = Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty)

@@ -162,14 +162,21 @@ class ReconJobsSpec extends SparkSpecBase {
 
   // ---- /pendingDeletion dispatch over the shared synth fixtures ----
 
-  test("pendingDeletion: validation rungs, dn limit, om size additivity") {
-    val sf = "/root/testdata/sf0.001"
+  private val pdSf = "/root/testdata/sf0.001"
+  private lazy val pdStore = {
     val T = graft.core.Tables
-    val rows = ReconJobs.pendingDeletionDispatch(
-        ReconJobs.pendingDeletionRollups(T.objects(spark, sf),
-          T.nsSummaryMixed(spark, sf), T.deletedDirs(spark, sf),
-          T.replicas(spark, sf), T.containersScm(spark, sf)))
-      .collect()
+    ReconJobs.pendingDeletionRollups(T.objects(spark, pdSf),
+      T.nsSummaryMixed(spark, pdSf), T.deletedDirs(spark, pdSf),
+      T.replicas(spark, pdSf), T.containersScm(spark, pdSf))
+  }
+  // (kind, entity, metric, value, rk), rk 0 where the store holds null
+  private lazy val pdStoreRows = pdStore
+    .select(col("kind"), col("entity"), col("metric"), col("value"),
+      coalesce(col("rk"), lit(0)).as("rk"))
+    .as[(String, String, String, Long, Int)].collect().toSeq
+
+  test("pendingDeletion: validation rungs, dn limit, om size additivity") {
+    val rows = ReconJobs.pendingDeletionDispatch(pdStore).collect()
     def of(rid: Long) = rows.filter(_.getAs[Long]("req_id") == rid)
     assert(of(1).map(_.getAs[String]("verdict")).toSeq ===
       Seq("MISSING_COMPONENT"))
@@ -186,13 +193,12 @@ class ReconJobsSpec extends SparkSpecBase {
       .find(_.getAs[String]("metric") == "total_pending_deletion").get
       .getAs[Long]("value")
     assert(r5list.map(_.getAs[Long]("value")).sum === r5total)
-    // the ' DN ' route normalizes and its page is a prefix of req5's list
+    assert(r5list.length === pdStoreRows.count(_._3 == "pending_blocks"))
+    // the ' DN ' route normalizes and its page is the store's top 2 ranks
     val r3names = r3.filter(_.getAs[String]("metric") == "pending_blocks")
-      .map(_.getAs[String]("entity")).toSeq
-    val r5sorted = r5list.sortBy(r =>
-      (-r.getAs[Long]("value"), r.getAs[String]("entity")))
-      .map(_.getAs[String]("entity")).toSeq
-    assert(r3names.toSet === r5sorted.take(2).toSet)
+      .map(_.getAs[String]("entity")).toSet
+    assert(r3names ===
+      pdStoreRows.filter(r => r._5 >= 1 && r._5 <= 2).map(_._2).toSet)
     // om: totalSize = pendingDirectorySize + pendingKeySize, both routes
     // (req7 plain, req8 'OM ' with the limit ignored) identical
     def om(rid: Long) = of(rid)
@@ -200,6 +206,51 @@ class ReconJobsSpec extends SparkSpecBase {
     assert(om(7)("totalSize") ===
       om(7)("pendingDirectorySize") + om(7)("pendingKeySize"))
     assert(om(7) === om(8))
+  }
+
+  test("pendingDeletion store: dn ranks run 1..n in (pending_blocks desc," +
+    " dn) order; _summary and totalSize are the sums of their parts") {
+    val dn = pdStoreRows.filter(_._3 == "pending_blocks")
+    assert(dn.nonEmpty && dn.forall(_._1 == "dn"))
+    assert(dn.sortBy(_._5).map(r => (r._2, r._4)) ===
+      dn.sortBy(r => (-r._4, r._2)).map(r => (r._2, r._4)))
+    assert(dn.map(_._5).sorted === (1 to dn.length))
+    assert(pdStoreRows.filterNot(_._3 == "pending_blocks").forall(_._5 == 0))
+    def v(kind: String, entity: String, metric: String) =
+      pdStoreRows.filter(r => (r._1, r._2, r._3) == (kind, entity, metric))
+        .map(_._4) match { case Seq(x) => x }
+    assert(v("dn", "_summary", "total_pending_deletion") === dn.map(_._4).sum)
+    assert(v("dn", "_summary", "nodes_queried") === dn.length.toLong)
+    assert(v("om", "om", "totalSize") ===
+      v("om", "om", "pendingKeySize") + v("om", "om", "pendingDirectorySize"))
+    assert(pdStoreRows.map(_._1).toSet === Set("dn", "scm", "om"))
+    assert(pdStoreRows.length === dn.length + 8)
+  }
+
+  test("a warm q_pending_deletion starts at most 4 Spark jobs") {
+    val q = SparkEntry.queries("q_pending_deletion")
+    val warm = rows(q(spark, pdSf))
+    val (out, jobs) = jobsStarted(spark)(_ => rows(q(spark, pdSf)))
+    assert(warm.nonEmpty && out === warm)
+    assert(jobs <= 4, s"$jobs jobs")
+  }
+
+  test("q_storage_distribution and q_pending_deletion's om route agree on" +
+    " the pending key and dir sizes") {
+    // the reference reads both from one calculatePendingSizes
+    val dist = SparkEntry.queries("q_storage_distribution")(spark, pdSf)
+      .select("pending_key_bytes", "pending_dir_bytes").as[(Long, Long)]
+      .collect().toSeq
+    val om = SparkEntry.queries("q_pending_deletion")(spark, pdSf)
+      .filter(col("verdict") === "OM_OK")
+      .select("req_id", "metric", "value").as[(Long, String, Long)]
+      .collect().groupBy(_._1).values
+      .map(_.map(r => r._2 -> r._3).toMap).toSeq
+    assert(om.nonEmpty)
+    om.foreach { m =>
+      assert(dist === Seq((m("pendingKeySize"), m("pendingDirectorySize"))))
+    }
+    assert(dist.head._1 > 0L && dist.head._2 > 0L)
   }
 
   test("reconVolumes/reconBuckets paging == the sequential iterator walks" +

@@ -665,7 +665,7 @@ class RedFamilyPropertySpec extends SparkSpecBase {
     dnExp.foreach { case (dn, v) =>
       assert(got(("dn", dn, "pending_blocks")) === v, dn)
     }
-    assert(got.keys.count(_._1 == "dn") === dnExp.size)
+    assert(got.keys.count(_._3 == "pending_blocks") === dnExp.size)
     assert(got(("om", "om", "pendingKeySize")) === keyExp)
     assert(got(("om", "om", "pendingDirectorySize")) === dirExp)
     assert(dnExp.nonEmpty && dirExp > 0L, "fixture must exercise both planes")
@@ -723,7 +723,8 @@ class RedFamilyPropertySpec extends SparkSpecBase {
     }
     // ---- engine ----
     val got = graft.operators.ReconJobs.pendingDeletionDispatch(
-        (dnRows ++ scm ++ om).toDF("kind", "entity", "metric", "value"))
+        graft.operators.ReconJobs.pendingDeletionStore(
+          (dnRows ++ scm ++ om).toDF("kind", "entity", "metric", "value")))
       .collect().map(r => (r.getAs[Long]("req_id"),
         r.getAs[String]("verdict"), r.getAs[String]("entity"),
         r.getAs[String]("metric"), r.getAs[Long]("value"))).toSet

@@ -236,34 +236,6 @@ class StreamingSpec extends SparkSpecBase {
     assert(ChangeStream.fileSizeView(spark, work).count() === 2)
   }
 
-  test("a legacy single-dir state is migrated losslessly on first merge") {
-    import java.nio.file.{Files, Paths}
-    val objects = Tables.objects(spark, sf)
-    val net = objects.filter(col("version") % 7 =!= 0)
-    val work = Files.createTempDirectory("graft_test_legacy_").toString
-    val stateDir = s"$work/state_filesize"
-    // hand-build the pre-manifest layout: whole state in ONE version dir,
-    // `current` pointing at the dir itself
-    ChangeStream.reprocessFileSize(net).write.parquet(s"$stateDir/v0")
-    Files.writeString(Paths.get(stateDir, "current"), s"$stateDir/v0")
-    assert(ChangeStream.readManifest(stateDir) ===
-      ChangeStream.Manifest(Some("v0"), Nil))
-
-    val extra = objects.orderBy("key", "version", "data_size").limit(20)
-    val batch = ChangeLog.events(extra).withColumn("seq", col("seq") + 999999L)
-    ChangeStream.applyDeltaBatch(spark, work, batch)
-
-    // every legacy row (touched-partition or not) must survive the merge
-    val expect = rows(ChangeStream.reprocessFileSize(
-      net.unionByName(extra.filter(col("version") % 7 =!= 0))))
-    assert(rows(ChangeStream.fileSizeView(spark, work)) === expect)
-    // the legacy dir is the new manifest's base, and it survives this
-    // publish
-    val mf = ChangeStream.readManifest(stateDir)
-    assert(mf.base === Some("v0") && mf.runs.size === 1)
-    assert(Files.exists(Paths.get(stateDir, "v0")))
-  }
-
   test("watermarked streaming hourly counts match the batch dual (closed windows)") {
     import org.apache.spark.sql.functions._
     val work = java.nio.file.Files.createTempDirectory("graft_hourly_").toString
